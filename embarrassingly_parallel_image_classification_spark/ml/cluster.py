@@ -457,7 +457,8 @@ def assign_longform_soft(
     co-occurs in one of the p probed cells instead of being silently
     unreachable by the cluster-scoped pair search. Work multiplies by
     ≤p² per cluster (measured 3.9× pairs at p=2 in
-    scripts/semdedup_probe.py, buying recall 0.995 → 1.0 at K=256
+    the SemDeDup probe (since deleted, see git history), buying
+    recall 0.995 → 1.0 at K=256
     while staying ~2× faster wall-clock than the coarse K=64 sweep);
     the distance aggregate is the same single (vec_id, cid) shuffle as
     ``assign_longform``, with a WindowGroupLimit top-p per vector
@@ -577,7 +578,8 @@ def _semantic_soft_oracle() -> str:
 )
 def q_dedup_semantic_soft(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup with SOFT ASSIGNMENT in the pair search — the
-    Voronoi-boundary mitigation measured in scripts/semdedup_probe.py
+    Voronoi-boundary mitigation measured by the SemDeDup probe (since
+    deleted, see git history)
     (recall 0.995 → 1.0 at K=256/p=2), now a registered query with a
     full chained-CTE oracle: training iterations stay HARD (identical
     centroids to q_dedup_semantic), but each vector probes its p=2

@@ -4,8 +4,9 @@ registry entry yet —
 
 (Eval-set decontamination lives in ml/text.py
 ``q_text_decontaminate`` — round 7 rewired its per-doc gram
-dedup map-side via array_distinct after scripts/decon_probe.py
-showed the explode-then-distinct spelling shuffling every
+dedup map-side via array_distinct after the decontamination probe
+(since deleted, see git history) showed the explode-then-distinct
+spelling shuffling every
 corpus gram; a short-lived duplicate query here was folded
 into it.)
 - ``q_quality_gopher``: the Gopher rule filter (Rae et al. 2021

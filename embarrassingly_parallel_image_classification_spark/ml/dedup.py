@@ -276,7 +276,8 @@ def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
     (GraphFrames does the same), not a collect() anti-pattern —
     per-round driver data is one scalar.
 
-    DECISION RULE (measured, scripts/scale_probe_dedup.py `cc`,
+    DECISION RULE (measured by the dedup scale probe `cc`, since
+    deleted, see git history;
     BASELINE.md round-5 table): min-label costs one cheap shuffle
     round per unit of component DIAMETER; star contraction costs a
     ~2× heavier round but O(log² n) of them regardless of diameter.

@@ -347,7 +347,8 @@ class PqIndex:
     lookups over the wide code columns — a whole-stage-codegen
     expression reading the table in place inside the join stage
     (see adc_expr for the three slower spellings this replaced,
-    measured at scripts/ann_probe.py). The top ``shortlist`` per
+    measured by the ANN probe, since deleted, see git history). The
+    top ``shortlist`` per
     query is then re-ranked with EXACT cosine on the raw vectors —
     the standard two-stage retrieve-then-rerank, so recall depends on
     shortlist size, not on quantization alone.
@@ -431,7 +432,8 @@ class PqIndex:
         codegen-supported, so the broadcast-joined tbl array is read in
         place inside the join's codegen stage and only three scalars
         leave it. Spellings measured at the 200k-vector/500-query probe
-        (scripts/ann_probe.py, IVFPQ search): posexplode×m + per-
+        (the ANN probe, since deleted, see git history; IVFPQ
+        search): posexplode×m + per-
         subcode broadcast join + groupBy = 33 s (the explode multiplies
         the candidate stream ×m AND shuffles the aggregate); zip_with/
         aggregate HOFs over a joined tbl = 41 s (HOFs fall out of

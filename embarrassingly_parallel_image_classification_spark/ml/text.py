@@ -764,7 +764,8 @@ def q_text_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     happens MAP-SIDE (array_distinct before the explode — a doc's
     grams all live in one array cell): the earlier explode-then-
     distinct spelling shuffled every corpus gram, which
-    scripts/decon_probe.py measured dominating BOTH join spellings
+    the decontamination probe (since deleted, see git history)
+    measured dominating BOTH join spellings
     (r7). Swap the broadcast for the Bloom build in plans/scale.py
     when the gram set outgrows the broadcast threshold."""
     d = t(spark, sf_dir, "documents")

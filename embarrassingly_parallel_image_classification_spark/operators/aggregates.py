@@ -1003,8 +1003,8 @@ def select_group_quantiles(
     pts: DataFrame, qs: tuple[int, ...]
 ) -> tuple[dict[str, tuple[int, int, int]], dict[str, int]]:
     """Bounds-collect → ceil-rank targets → _select_exact_ranks, the
-    setup shared by q_agg_group_median_select, q_feat_robust_scale and
-    scripts/select_probe.py (ONE copy of the rank convention, like the
+    setup shared by q_agg_group_median_select and q_feat_robust_scale
+    (ONE copy of the rank convention, like the
     boundary math below it). ``pts`` has columns (g, cents); ``qs``
     are percentiles. Returns (init, values): init[g] = (lo, hi, n),
     values[f"{g}:{q}"] = the exact value of rank ceil(q·n/100) in g."""

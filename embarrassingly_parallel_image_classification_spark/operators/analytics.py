@@ -863,22 +863,18 @@ def q_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     the retail/recommendation operator (Agrawal's association rules
     [PK], pair level). Items are the part key folded to 200 SKUs so
     pair supports clear the min-support floor at fixture scale. Plan:
-    distinct (order, item) → FREQUENT-ITEM pre-filter (the classic
-    two-scan Apriori, r12 verdict item 5: a pair's support is bounded
-    by each member's support, so items below the floor can never form
-    a surviving pair — both self-join sides are broadcast-semi-filtered
-    to frequent items BEFORE the pair fanout, shrinking the self-join
-    input and the pair aggregate at zero result change) → self-join ON
-    THE ORDER KEY (co-located; per-order pair fanout is bounded by
-    basket size², the Apriori candidate shape — never an item×item
-    cross), pair hash aggregate, then two broadcast joins against the
-    item-support frame and the 1-row order count. The min-support
-    floor is SCALE-AWARE — greatest(5, n_orders div 2100), evaluated
-    inside the plan off the broadcast 1-row count (r6 verdict item 3:
-    a fixed c_ab ≥ 20 was vacuously empty-vs-empty at sf0.01) — so the
-    same code prunes meaningfully at every SF. The final c_ab floor is
-    still applied: frequent-item pairs can individually clear the item
-    floor yet co-occur rarely."""
+    distinct (order, item) → self-join ON THE ORDER KEY (co-located;
+    per-order pair fanout is bounded by basket size², the Apriori
+    candidate shape — never an item×item cross), pair hash aggregate,
+    then two broadcast joins against the item-support frame and the
+    1-row order count. The min-support floor is SCALE-AWARE —
+    greatest(5, n_orders div 2100), evaluated inside the plan off the
+    broadcast 1-row count (r6 verdict item 3: a fixed c_ab ≥ 20 was
+    vacuously empty-vs-empty at sf0.01) — so the same code prunes
+    meaningfully at every SF. No frequent-item pre-filter: on the
+    uniform `% 200` fold every item's support is ≥37× the floor (sf0.01,
+    sf0.1), so a frequent-item semi-filter would prune nothing and
+    only adds a broadcast join per side."""
     # the distinct (order, item) frame feeds FOUR consumers (order
     # count, supports, both self-join sides) — materialize it once
     # (localCheckpoint, the tokenize-once rule) instead of re-scanning
@@ -891,19 +887,8 @@ def q_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n_ord = items.agg(F.countDistinct("l_orderkey").alias("n"))
     sup = items.groupBy("item").agg(F.count("*").alias("c"))
-    # Apriori frequent-item pre-filter: c_ab <= min(c_a, c_b), so items
-    # whose own support is below the floor cannot appear in any output
-    # pair — drop them from BOTH self-join sides map-side (broadcast
-    # semi-join against the item-support census, floor evaluated off
-    # the same broadcast 1-row order count as the final HAVING).
-    freq = (
-        sup.crossJoin(F.broadcast(n_ord))
-        .filter(F.col("c") >= F.greatest(F.lit(5), F.expr("n DIV 2100")))
-        .select("item")
-    )
-    items_f = items.join(F.broadcast(freq), "item", "semi")
-    a = items_f.select(F.col("l_orderkey").alias("ok"), F.col("item").alias("item_a"))
-    b = items_f.select(F.col("l_orderkey").alias("ok"), F.col("item").alias("item_b"))
+    a = items.select(F.col("l_orderkey").alias("ok"), F.col("item").alias("item_a"))
+    b = items.select(F.col("l_orderkey").alias("ok"), F.col("item").alias("item_b"))
     pairs = (
         a.join(b, "ok")
         .filter(F.col("item_a") < F.col("item_b"))
@@ -1609,8 +1594,9 @@ def q_alloc_fifo(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrival order, with BACKORDER semantics (demand queues until
     supply arrives, so the k-th supplied cent always meets the k-th
     demanded cent — the pairing is independent of how the two streams
-    interleave in time; scripts/fifo_probe.py checksums that pairing
-    against a sequential two-queue matcher): the inventory-costing /
+    interleave in time; the FIFO probe, since deleted (see git
+    history), checksummed that pairing against a sequential two-queue
+    matcher): the inventory-costing /
     tax-lot / queue-accounting primitive (FIFO cost basis) that naive
     implementations write as a per-user sequential loop. The distributed spelling uses the
     CUMULATIVE-INTERVAL identity: lot i occupies [A_{i-1}, A_i) of the

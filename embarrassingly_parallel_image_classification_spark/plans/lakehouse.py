@@ -1768,7 +1768,8 @@ def compact_mor(spark: SparkSession, path: str) -> int:
     compaction snapshot still see the DV view; vacuum later reclaims
     the replaced files.
 
-    When to run (measured, scripts/mor_probe.py → BASELINE.md): each
+    When to run (measured by the MoR probe, since deleted, see git
+    history; numbers in BASELINE.md): each
     delete file stacks one broadcast anti-join on every read — 2.0×
     read overhead at 1 file, 3.5× at 16 — while compaction amortizes
     after ~5–8 reads at any file count. Rule: compact at ≥4 delete
@@ -1780,7 +1781,8 @@ def compact_mor(spark: SparkSession, path: str) -> int:
     )
 
 
-COMPACT_DELETE_FILE_THRESHOLD = 4  # measured: scripts/mor_probe.py → BASELINE.md
+# measured by the MoR probe (since deleted, see git history) → BASELINE.md
+COMPACT_DELETE_FILE_THRESHOLD = 4
 
 
 def maybe_compact(

@@ -58,31 +58,12 @@ def register(name: str, oracle: Optional[str] = None, tags: tuple = ()):
 
 
 def specs() -> dict[str, QuerySpec]:
-    """Registered queries in DRIVER-CHECK order.
-
-    The driver verifies a prefix of this dict (round 1: exactly the first
-    50 of 103), so ordering is part of the contract: `_DRIVER_PRIORITY`
-    pins the front of the line to oracle-backed queries that most need
-    third-party verification (round-1 fixes + the families the round-1
-    driver window never reached). Everything else follows in registration
-    order, with rows-only (no-oracle) queries last — a rows-only check
-    must never consume a window slot ahead of an unchecked oracle query.
-    """
+    """Registered queries, oracle-backed first and rows-only (no-oracle)
+    last, each group in registration order: a rows-only check never
+    takes a slot ahead of an oracle-backed one in a driver that verifies
+    a prefix."""
     _ensure_loaded()
-    missing = [n for n in _DRIVER_PRIORITY if n not in _REGISTRY]
-    if missing:
-        raise ValueError(f"_DRIVER_PRIORITY names not registered: {missing}")
-    prio = {n: i for i, n in enumerate(_DRIVER_PRIORITY)}
-    names = list(_REGISTRY)
-
-    def key(item):
-        i, n = item
-        if n in prio:
-            return (0, prio[n], 0)
-        return (1 if _REGISTRY[n].oracle is not None else 2, i, 0)
-
-    ordered = sorted(enumerate(names), key=key)
-    return {n: _REGISTRY[n] for _, n in ordered}
+    return dict(sorted(_REGISTRY.items(), key=lambda kv: kv[1].oracle is None))
 
 
 def queries() -> dict[str, QueryFn]:
@@ -130,71 +111,6 @@ def _ensure_loaded() -> None:
     for mod in _QUERY_MODULES:
         import_module(f"{pkg}.{mod}")
 
-
-# Names pinned to the FRONT of specs()/queries() order, i.e. inside the
-# driver's verified prefix (50 slots observed in rounds 1-9).
-# ROUND-12 WINDOW (r11 verdict item 1; tuple from scripts/next_window.py,
-# generated ONCE at round-12 open): 50 of the 61 never-driver-verified
-# round-11-session-2 registrations, in registration order (11 overflow
-# and lead the round-13 rotation: q_text_kwic, q_text_phrase_search,
-# q_train_tree_depth2/3, q_train_perceptron, q_scan_text,
-# q_sql_execute_immediate/udf_lateral/exec_into/collation/lateral_alias).
-# No rotation/canary or rows-only slots this round — never-verified
-# oracle queries always fill the window first (next_window.py rule 1).
-_DRIVER_PRIORITY = (
-    "q_agg_kmv_distinct",
-    "q_timeseries_holt_winters",
-    "q_timeseries_decompose",
-    "q_timeseries_croston",
-    "q_stats_cochran_q",
-    "q_stats_jonckheere",
-    "q_stats_friedman",
-    "q_ts_ljung_box",
-    "q_stats_brown_forsythe",
-    "q_ts_granger",
-    "q_stats_dunn",
-    "q_stats_tukey",
-    "q_stats_games_howell",
-    "q_stats_mann_kendall",
-    "q_stats_jarque_bera",
-    "q_stats_cramer_von_mises",
-    "q_stats_mood_median",
-    "q_stats_ansari_bradley",
-    "q_stats_lepage",
-    "q_stats_cochran_armitage",
-    "q_stats_cmh",
-    "q_stats_page_trend",
-    "q_stats_seasonal_mk",
-    "q_stats_prop_ztest",
-    "q_stats_mh_odds",
-    "q_stats_kendall_w",
-    "q_stats_cohen_kappa",
-    "q_stats_cronbach_alpha",
-    "q_stats_brunner_munzel",
-    "q_stats_eta_squared",
-    "q_stats_partial_corr",
-    "q_stats_point_biserial",
-    "q_stats_durbin_watson",
-    "q_stats_turning_points",
-    "q_stats_mahalanobis",
-    "q_ab_power",
-    "q_agg_trimmed_mean",
-    "q_graph_clustering_coeff",
-    "q_graph_assortativity",
-    "q_graph_kcore",
-    "q_graph_reciprocity",
-    "q_fn_try_arithmetic",
-    "q_fn_luhn",
-    "q_eval_brier",
-    "q_knn_hamming_postdedup",
-    "q_knn_sq8",
-    "q_knn_self_join",
-    "q_text_winnowing",
-    "q_text_symspell",
-    "q_dedup_minhash_affine",
-)
-# (round-1-green families act as their own canaries right behind the
-# window: non-priority oracle-backed queries keep registration order.)
 
 _QUERY_MODULES = (
         "operators.projection",

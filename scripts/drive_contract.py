@@ -1,6 +1,9 @@
 """Simulate the driver: smoke entry() + oracle-compare every query at sf0.01."""
-import sys, time
-sys.path.insert(0, "/root/repo")
+import os, sys, time
+HERE = os.path.dirname(os.path.abspath(__file__))
+# Drop scripts/ from sys.path: scripts/profile.py would shadow the stdlib
+# `profile` module that pyspark loads through cProfile.
+sys.path[:] = [os.path.dirname(HERE)] + [p for p in sys.path if p != HERE]
 import duckdb, pandas as pd
 from pyspark.sql import SparkSession
 
@@ -17,7 +20,6 @@ if len(sys.argv) == 1:  # full run: include the smoke check
     print(f"SMOKE entry(): {len(rows)} rows in {time.time()-t0:.1f}s schema={df.columns}")
     for r in rows[:3]: print("  ", r)
 
-import os
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 con = duckdb.connect()
 for name in ("region","nation","customer","supplier","part","orders","lineitem","events","documents","embeddings"):

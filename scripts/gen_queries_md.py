@@ -11,7 +11,10 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+HERE = os.path.dirname(os.path.abspath(__file__))
+# Drop scripts/ from sys.path: scripts/profile.py would shadow the stdlib
+# `profile` module that pyspark loads through cProfile.
+sys.path[:] = [os.path.dirname(HERE)] + [p for p in sys.path if p != HERE]
 
 from embarrassingly_parallel_image_classification_spark import registry  # noqa: E402
 
@@ -33,9 +36,8 @@ def main() -> None:
         f"{len(specs)} registered queries, {n_oracle} oracle-backed "
         f"(exact dtype-sensitive DuckDB diff at sf0.01), "
         f"{len(specs) - n_oracle} rows-only with pytest self-oracles. "
-        f"Order below IS the driver-verification order (the driver "
-        f"checks a prefix; the first 45 are oracle-backed, the last 5 "
-        f"window slots are the rows-only rotation tail)."
+        f"Order below is the driver-verification order: oracle-backed "
+        f"queries first, then rows-only, each in registration order."
     )
     print()
     print("| # | query | check | tags | what it proves |")

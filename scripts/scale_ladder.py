@@ -52,7 +52,10 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+HERE = os.path.dirname(os.path.abspath(__file__))
+# Drop scripts/ from sys.path: scripts/profile.py would shadow the stdlib
+# `profile` module that pyspark loads through cProfile.
+sys.path[:] = [os.path.dirname(HERE)] + [p for p in sys.path if p != HERE]
 
 from pyspark.sql import functions as F
 

@@ -1,0 +1,83 @@
+"""The surviving scripts/ tooling: it compiles, and the one plan parser
+behind `scripts/profile.py plans` counts scans and flags pin joins."""
+
+from __future__ import annotations
+
+import glob
+import importlib.util
+import os
+import py_compile
+import subprocess
+import sys
+
+from pyspark.sql import functions as F
+
+from tests.conftest import SF_SMOKE
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _profile():
+    spec = importlib.util.spec_from_file_location(
+        "scripts_profile", os.path.join(ROOT, "scripts", "profile.py")
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def test_scripts_compile():
+    paths = glob.glob(os.path.join(ROOT, "scripts", "*.py"))
+    assert paths
+    for path in paths:
+        py_compile.compile(path, doraise=True)
+
+
+def test_plans_counts_one_scan_per_tpch_q5_table(spark):
+    from embarrassingly_parallel_image_classification_spark import registry
+
+    df = registry.queries()["q_tpch_q5"](spark, SF_SMOKE)
+    assert _profile().inspect(df)["tables"] == {
+        t: 1 for t in ("region", "nation", "customer", "supplier", "orders", "lineitem")
+    }
+
+
+def test_pin_flag_fires_on_merge_join_over_a_pin_only(spark):
+    inspect = _profile().inspect
+    pinned = spark.range(10).localCheckpoint(eager=True)
+    merged = pinned.join(spark.range(100).hint("merge"), "id")
+    assert inspect(merged)["pins"] == ["SortMergeJoin[pin:left]"]
+    broadcast = F.broadcast(pinned).join(spark.range(100), "id")
+    assert inspect(broadcast)["pins"] == []
+
+
+def test_compare_skips_zero_timings_and_sums_subsets_over_shared_members():
+    from bench import SUBSET22
+
+    prev = {q: 1.0 for q in SUBSET22}
+    now = {q: 2.0 for q in SUBSET22}
+    now[SUBSET22[0]] = 0.0  # rounds to zero: no ratio, no log(0)
+    del prev[SUBSET22[1]]  # a SUBSET22 member absent from one record
+    out = _profile().compare(prev, now)
+    assert out["geomean_now_over_prev"] == 2.0
+    assert out["not_ratioed"] == [SUBSET22[0]]
+    assert out["subset22_missing"] == [SUBSET22[1]]
+    assert out["subset22_prev"] == len(SUBSET22) - 1
+    assert out["subset22_now"] == 2.0 * (len(SUBSET22) - 2)
+
+
+def test_scripts_import_pyspark_beside_profile_py():
+    """Run as a script, scripts/profile.py would shadow the stdlib
+    `profile` that pyspark loads through cProfile, unless each script
+    drops scripts/ from sys.path before importing pyspark."""
+
+    def run(script, *args):
+        return subprocess.run(
+            [sys.executable, os.path.join(ROOT, "scripts", script), *args],
+            capture_output=True, text=True, check=True, cwd=ROOT,
+        ).stdout
+
+    with open(os.path.join(ROOT, "QUERIES.md")) as f:
+        assert run("gen_queries_md.py") == f.read()
+    bench = os.path.join(ROOT, "BENCH_full.json")
+    assert '"geomean_now_over_prev": 1.0' in run("profile.py", "compare", bench, bench)

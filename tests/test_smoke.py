@@ -75,83 +75,21 @@ def test_registry_contract(spark):
     assert all(n.startswith("q_") for n in qs)
 
 
-def test_registry_driver_window_ordering():
-    """The driver verifies a PREFIX of queries() (50 entries observed in
-    round 1), so ordering is part of the contract:
-      * every slot in the first 45 must be oracle-backed — a rows-only
-        query there wastes a full-verification slot; the LAST <=5 may
-        be the rows-only tail (r9 verdict item 2: the driver records
-        its weaker rows-only check for them);
-      * any rows-only query NOT in the tail must sort after every
-        oracle-backed one;
-      * queries fixed/changed this round and the rotation's
-        never-yet-verified picks must sit inside the window."""
+def test_registry_orders_oracle_before_rows_only():
+    """A driver that verifies a PREFIX of queries() must spend every slot
+    on an oracle-backed query before any rows-only one, so every
+    rows-only query sorts after every oracle-backed one."""
     from embarrassingly_parallel_image_classification_spark import registry
 
     specs = registry.specs()
     names = list(specs)
-    window = names[:50]
-    assert all(specs[n].oracle is not None for n in window[:45]), [
-        n for n in window[:45] if specs[n].oracle is None
-    ]
-    # rows-only entries inside the window must form a contiguous TAIL
-    # (never ahead of an oracle-backed slot they could have displaced)
-    ro_in_window = [i for i, n in enumerate(window) if specs[n].oracle is None]
-    if ro_in_window:
-        assert ro_in_window == list(range(50 - len(ro_in_window), 50))
-    # outside the priority tuple, rows-only still sorts last
-    from embarrassingly_parallel_image_classification_spark.registry import (
-        _DRIVER_PRIORITY as _PRIO,
-    )
-
-    non_prio = [n for n in names if n not in _PRIO]
     first_rows_only = min(
-        i for i, n in enumerate(non_prio) if specs[n].oracle is None
+        i for i, n in enumerate(names) if specs[n].oracle is None
     )
     last_oracle = max(
-        i for i, n in enumerate(non_prio) if specs[n].oracle is not None
+        i for i, n in enumerate(names) if specs[n].oracle is not None
     )
     assert first_rows_only > last_oracle
-    must_be_inside = {
-        # round-12 window (r11 verdict item 1): spot-check of the 50
-        # never-driver-verified session-2 registrations that fill the
-        # whole window (61 exist; 11 overflow to round 13; the full
-        # 50-name tuple is pinned in registry._DRIVER_PRIORITY; update
-        # these alongside each rotation). No rows-only tail this round:
-        # never-verified oracle queries always fill the window first.
-        "q_agg_kmv_distinct", "q_timeseries_holt_winters",
-        "q_timeseries_decompose", "q_timeseries_croston",
-        "q_stats_cochran_q", "q_stats_jonckheere", "q_stats_friedman",
-        "q_ts_ljung_box", "q_stats_brown_forsythe", "q_ts_granger",
-        "q_stats_dunn", "q_stats_tukey", "q_stats_games_howell",
-        "q_stats_mahalanobis", "q_ab_power", "q_agg_trimmed_mean",
-        "q_graph_kcore", "q_fn_try_arithmetic", "q_fn_luhn",
-        "q_eval_brier", "q_knn_hamming_postdedup", "q_knn_sq8",
-        "q_knn_self_join", "q_text_winnowing", "q_text_symspell",
-        "q_dedup_minhash_affine",
-    }
-    assert must_be_inside <= set(window), must_be_inside - set(window)
-    # rotation slots (stale-green re-proof) fill whatever window slots
-    # remain after the never-verified set
-    canaries = {
-        "q_tpch_q9", "q_stream_tumbling", "q_dedup_ngram_jaccard",
-        "q_window_firstlast", "q_join_asof", "q_text_chunking",
-        "q_agg_basic", "q_knn_exact",
-    }
-    # a canary may occupy a window slot ONLY when every non-canary
-    # priority entry (the never-verified rotation picks) already fits
-    # inside the window — the first-cut assertion here was a tautology
-    # that could never fail (review finding)
-    from embarrassingly_parallel_image_classification_spark.registry import (
-        _DRIVER_PRIORITY,
-    )
-
-    non_canary_priority = [n for n in _DRIVER_PRIORITY if n not in canaries]
-    if canaries & set(window):
-        assert set(non_canary_priority) <= set(window), (
-            "canaries crowd never-verified queries out of the window: "
-            f"{sorted(set(non_canary_priority) - set(window))}"
-        )
 
 
 def test_observation_metrics_match_independent_agg(spark):
