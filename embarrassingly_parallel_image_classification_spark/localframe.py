@@ -1,4 +1,4 @@
-"""JVM-literal construction of small driver-built DataFrames.
+"""Driver-built and pinned DataFrames: ``local_df`` and ``pin``.
 
 ``spark.createDataFrame(rows, schema)`` on a Python list builds a
 PYTHON-RDD-backed frame: the rows are pickled, parallelized over
@@ -23,6 +23,9 @@ floats, booleans, None, flat arrays). Row order is preserved.
 Large lists (> ``_INLINE_MAX`` rows) fall back to a single-slice
 pickled RDD: one Python round trip instead of ``defaultParallelism``,
 and no risk of a megabyte-scale expression tree.
+
+``pin`` is the one eager materialization in the engine; its docstring
+holds the caching, cost and broadcast rules every pinned frame obeys.
 """
 
 from __future__ import annotations
@@ -150,3 +153,43 @@ def local_df(
             )
         )
     return spark.range(0, 1, 1, 1).select(F.inline(F.array(*structs)))
+
+
+_JOB_DESCRIPTION = "spark.job.description"
+
+
+def pin(df: DataFrame, label: str) -> DataFrame:
+    """Materialize ``df`` now and return a frame that reads the result.
+
+    Every eager materialization in the engine goes through here; the
+    job it launches carries the Spark job description ``pin:<label>``
+    (the caller's description is restored afterwards, even when the
+    job fails). The job group is left alone, so the pin's job still
+    counts toward the query that launched it.
+
+    Caching rule: ``localCheckpoint(eager=True)``, never ``persist`` or
+    ``cache``. A persist inside a library function that returns a lazy
+    DataFrame can never be unpersisted, so cache-manager entries pile up
+    across calls (measured at a 6x slowdown in the dedup chains). The
+    checkpoint's blocks belong to its RDD, and the ContextCleaner frees
+    them once the plan is garbage collected.
+
+    Cost rule: a pin is one sequential driver job (~0.1-0.3 s at fixture
+    scale). It pays only when it removes expensive rederivation:
+    tokenize / explode / signature folds / posexplode over the fact, a
+    fact-wide shuffle, a multi-table join, or the re-execution of every
+    prior round in an iteration chain. Pins that only deduplicate narrow
+    columnar scans measured net-negative and are not taken.
+
+    Broadcast corollary: the pinned frame is RDD-backed with no size
+    statistics, so the planner assumes it is huge. A small side joined
+    against a pin, or a small frame derived from one, needs an explicit
+    ``F.broadcast`` or the join silently becomes sort-merge.
+    """
+    sc = df.sparkSession.sparkContext
+    outer = sc.getLocalProperty(_JOB_DESCRIPTION)
+    sc.setJobDescription(f"pin:{label}")
+    try:
+        return df.localCheckpoint(eager=True)
+    finally:
+        sc.setLocalProperty(_JOB_DESCRIPTION, outer)

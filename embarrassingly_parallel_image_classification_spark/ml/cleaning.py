@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..localframe import local_df
+from ..localframe import local_df, pin
 from ..registry import register
 from ..sources.tables import t
 
@@ -57,14 +57,14 @@ def substring_spans(d: DataFrame, k: int = _K) -> DataFrame:
     # q_dedup_exact / jaccard_pairs_at argument), so the df census and
     # the mark join move fixed-width longs, never ~40-byte gram
     # strings. (3) the gram frame feeds TWO consumers (census + mark
-    # join): pin it once (the house multi-pass rule).
+    # join): pin it once.
     dp = d.sparkSession.sparkContext.defaultParallelism
     toks = (
         d.select("doc_id", F.split("text", " ").alias("w"))
         .filter(F.size("w") >= k)
         .repartition(dp, "doc_id")
     )
-    grams = (
+    grams = pin(
         toks.select(
             "doc_id",
             F.explode(
@@ -75,8 +75,8 @@ def substring_spans(d: DataFrame, k: int = _K) -> DataFrame:
                 )
             ).alias("g"),
         )
-        .select("doc_id", F.col("g.pos").alias("pos"), F.col("g.gh").alias("gh"))
-        .localCheckpoint(eager=True)
+        .select("doc_id", F.col("g.pos").alias("pos"), F.col("g.gh").alias("gh")),
+        "substring_spans.grams",
     )
     dup = grams.groupBy("gh").agg(F.count("*").alias("c")).filter("c >= 2")
     marked = grams.join(dup.select("gh"), "gh").select("doc_id", "pos")
@@ -295,11 +295,11 @@ def q_text_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     uni = d.select(F.explode("w").alias("word"))
     # pinned unigram census (vocab-sized): both broadcast sides and the
     # corpus token total are its marginals — unpinned, u1/u2/n_tok each
-    # re-ran the corpus tokenize (r12 pin-cost rule)
-    ucnt = (
+    # re-ran the corpus tokenize
+    ucnt = pin(
         uni.groupBy("word")
-        .agg(F.count("*").alias("c"))
-        .localCheckpoint(eager=True)
+        .agg(F.count("*").alias("c")),
+        "q_text_collocations.ucnt",
     )
     n_tok = ucnt.agg(F.sum("c")).collect()[0][0]  # bounded scalar from the pin
     big = d.select(
@@ -655,14 +655,14 @@ def q_privacy_k_anon(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pinned L0 QI census (domain-bounded); the L1 generalization is
     # its region rollup through the broadcast dim — unpinned/unrolled,
     # L1 re-scanned the fact table (kendall rule)
-    l0 = (
+    l0 = pin(
         c.groupBy(
             "c_nationkey",
             "c_mktsegment",
             F.expr("CAST(FLOOR(c_acctbal / 1000) AS BIGINT)"),
         )
-        .agg(F.count("*").alias("n"))
-        .localCheckpoint(eager=True)
+        .agg(F.count("*").alias("n")),
+        "q_privacy_k_anon.l0",
     )
     l1 = (
         l0.join(F.broadcast(n), l0["c_nationkey"] == n["n_nationkey"])
@@ -914,10 +914,10 @@ def q_privacy_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     # x ~6 bands); the band domain, group sizes and global totals are
     # its exact marginals (kendall rule), so the fact table is scanned
     # ONCE instead of once per grouping pass.
-    cells = (
+    cells = pin(
         x.groupBy("c_nationkey", "c_mktsegment", "b")
-        .agg(F.count("*").cast("bigint").alias("c"))
-        .localCheckpoint(eager=True)
+        .agg(F.count("*").cast("bigint").alias("c")),
+        "q_privacy_t_closeness.cells",
     )
     dom = cells.groupBy("b").agg(F.sum("c").cast("bigint").alias("cb"))
     gtotal = dom.agg(

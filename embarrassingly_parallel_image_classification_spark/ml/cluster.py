@@ -43,7 +43,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.vectors import quantize_e6
-from ..localframe import local_df
+from ..localframe import local_df, pin
 from ..registry import register
 from ..sources.tables import t
 
@@ -293,6 +293,93 @@ def _semantic_oracle() -> str:
     )
 
 
+def _semantic_trained(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, list[tuple[int, list[int]]]]:
+    """(points, cents) shared by q_dedup_semantic and its soft sibling:
+    the planted corpus — (vec_id, raw, q) with a deterministic
+    0.99-scaled copy of every _SEM_PLANT_MOD-th vector — pinned because
+    the union feeds every Lloyd round once, and the _SEM_K centroids
+    after _ITERS HARD rounds from the K lowest vec_ids."""
+    emb = t(spark, sf_dir, "embeddings")
+    base = emb.select(
+        "vec_id", F.transform("embedding", quantize_e6).alias("raw")
+    )
+    # plant id offset derived from the data IN-PLAN (1-row broadcast
+    # scalar, the q_text_vocab_growth pattern) — literal offsets
+    # collide with real ids at scale; the scaled copy quantizes through
+    # the SAME shared contract (quantize_e6(x·0.99) — review finding:
+    # re-inlining the floor rule is exactly what the helper exists to
+    # prevent)
+    maxid = F.broadcast(emb.agg((F.max("vec_id") + 1).alias("plant0")))
+    planted = (
+        emb.filter(F.col("vec_id") % _SEM_PLANT_MOD == 0)
+        .crossJoin(maxid)
+        .select(
+            (F.col("vec_id") + F.col("plant0")).alias("vec_id"),
+            F.transform(
+                "embedding", lambda x: quantize_e6(x * F.lit(0.99))
+            ).alias("raw"),
+        )
+    )
+    points = pin(
+        base.unionByName(planted).select(
+            "vec_id",
+            "raw",
+            F.transform("raw", lambda x: x + F.lit(_OFFSET)).alias("q"),
+        ),
+        "semantic.points",
+    )
+    init_rows = points.orderBy("vec_id").limit(_SEM_K).collect()
+    cents = [(cid, list(r["q"])) for cid, r in enumerate(init_rows)]
+    for _ in range(_ITERS):
+        cents = _update(points, cents)
+    return points, cents
+
+
+def _dot(x: str, y: str) -> Column:
+    """Exact BIGINT dot product of two integer arrays."""
+    return F.aggregate(
+        F.zip_with(x, y, lambda a, b: a * b),
+        F.lit(0).cast("bigint"),
+        lambda acc, d: acc + d,
+    )
+
+
+def _near_pairs(member: DataFrame) -> DataFrame:
+    """(cid, vb) per within-cluster pair va < vb of ``member`` (cid,
+    vec_id, raw, nrm) whose cosine is >= tau, tested in integers:
+    dot > 0 and dot²·1e6 >= tau²e6·na·nb in DECIMAL(38,0)."""
+    a = member.select(
+        F.col("cid").alias("cid"),
+        F.col("vec_id").alias("va"),
+        F.col("raw").alias("ra"),
+        F.col("nrm").alias("na"),
+    )
+    b = member.select(
+        F.col("cid").alias("cid_b"),
+        F.col("vec_id").alias("vb"),
+        F.col("raw").alias("rb"),
+        F.col("nrm").alias("nb"),
+    )
+    return (
+        a.join(
+            b,
+            (F.col("cid") == F.col("cid_b")) & (F.col("va") < F.col("vb")),
+        )
+        .select("cid", "vb", _dot("ra", "rb").alias("dot"), "na", "nb")
+        .filter(
+            (F.col("dot") > 0)
+            & F.expr(
+                "CAST(dot AS DECIMAL(38,0)) * CAST(dot AS DECIMAL(38,0))"
+                f" * 1000000 >= {_SEM_TAU2_E6}"
+                " * CAST(na AS DECIMAL(38,0)) * CAST(nb AS DECIMAL(38,0))"
+            )
+        )
+        .select("cid", "vb")
+    )
+
+
 @register(
     "q_dedup_semantic",
     oracle=_semantic_oracle(),
@@ -319,91 +406,21 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     (cid,pos) shuffle per round). At 100 TB, K grows to ~√N·α so
     clusters stay bounded, and the within-cluster join is exactly the
     shape that stays tractable."""
-    emb = t(spark, sf_dir, "embeddings")
-    base = emb.select(
-        "vec_id", F.transform("embedding", quantize_e6).alias("raw")
-    )
-    # plant id offset derived from the data IN-PLAN (1-row broadcast
-    # scalar, the q_text_vocab_growth pattern) — literal offsets
-    # collide with real ids at scale; the scaled copy quantizes through
-    # the SAME shared contract (quantize_e6(x·0.99) — review finding:
-    # re-inlining the floor rule is exactly what the helper exists to
-    # prevent)
-    maxid = F.broadcast(emb.agg((F.max("vec_id") + 1).alias("plant0")))
-    planted = (
-        emb.filter(F.col("vec_id") % _SEM_PLANT_MOD == 0)
-        .crossJoin(maxid)
-        .select(
-            (F.col("vec_id") + F.col("plant0")).alias("vec_id"),
-            F.transform(
-                "embedding", lambda x: quantize_e6(x * F.lit(0.99))
-            ).alias("raw"),
-        )
-    )
-    corpus = base.unionByName(planted)
-    points = corpus.select(
-        "vec_id",
-        "raw",
-        F.transform("raw", lambda x: x + F.lit(_OFFSET)).alias("q"),
-    ).localCheckpoint(eager=True)  # the union feeds every round once
-    init_rows = points.orderBy("vec_id").limit(_SEM_K).collect()
-    cents = [(cid, list(r["q"])) for cid, r in enumerate(init_rows)]
-    for _ in range(_ITERS):
-        cents = _update(points, cents)
-    # member is a single MAP-SIDE select on the checkpointed points:
+    points, cents = _semantic_trained(spark, sf_dir)
+    # member is a single MAP-SIDE select on the pinned points:
     # cid from the literal-centroid argmin, raw carried through, norms
     # computed ONCE PER VECTOR (per-pair norm evaluation would run the
     # higher-order aggregate 2·Σ|c|² times instead of N — measured 3×
     # the whole query's cost; a vec_id re-join against the
-    # un-checkpointed corpus re-scanned the parquet — review finding)
+    # unpinned corpus re-scanned the parquet — review finding)
     member = points.select(
         _best(cents)["cid"].alias("cid"),
         "vec_id",
         "raw",
-        F.aggregate(
-            F.zip_with("raw", "raw", lambda x, y: x * y),
-            F.lit(0).cast("bigint"),
-            lambda acc, d: acc + d,
-        ).alias("nrm"),
-    )
-    a = member.select(
-        F.col("cid").alias("cid"),
-        F.col("vec_id").alias("va"),
-        F.col("raw").alias("ra"),
-        F.col("nrm").alias("na"),
-    )
-    b = member.select(
-        F.col("cid").alias("cid_b"),
-        F.col("vec_id").alias("vb"),
-        F.col("raw").alias("rb"),
-        F.col("nrm").alias("nb"),
+        _dot("raw", "raw").alias("nrm"),
     )
     pairs = (
-        a.join(
-            b,
-            (F.col("cid") == F.col("cid_b")) & (F.col("va") < F.col("vb")),
-        )
-        .select(
-            "cid",
-            "vb",
-            F.aggregate(
-                F.zip_with("ra", "rb", lambda x, y: x * y),
-                F.lit(0).cast("bigint"),
-                lambda acc, d: acc + d,
-            ).alias("dot"),
-            "na",
-            "nb",
-        )
-        .filter(
-            (F.col("dot") > 0)
-            & F.expr(
-                "CAST(dot AS DECIMAL(38,0)) * CAST(dot AS DECIMAL(38,0))"
-                f" * 1000000 >= {_SEM_TAU2_E6}"
-                " * CAST(na AS DECIMAL(38,0)) * CAST(nb AS DECIMAL(38,0))"
-            )
-        )
-        .select("cid", F.col("vb").alias("dupe"))
-        .distinct()
+        _near_pairs(member).select("cid", F.col("vb").alias("dupe")).distinct()
     )
     census = member.select("cid", "vec_id")
     return (
@@ -596,31 +613,7 @@ def q_dedup_semantic_soft(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≤p² (measured 3.9× at p=2) — still a cid equi-join, never a
     cross; the long-form top-2 assignment is ONE (vec_id, cid)
     distance shuffle + WindowGroupLimit (assign_longform_soft)."""
-    emb = t(spark, sf_dir, "embeddings")
-    base = emb.select(
-        "vec_id", F.transform("embedding", quantize_e6).alias("raw")
-    )
-    maxid = F.broadcast(emb.agg((F.max("vec_id") + 1).alias("plant0")))
-    planted = (
-        emb.filter(F.col("vec_id") % _SEM_PLANT_MOD == 0)
-        .crossJoin(maxid)
-        .select(
-            (F.col("vec_id") + F.col("plant0")).alias("vec_id"),
-            F.transform(
-                "embedding", lambda x: quantize_e6(x * F.lit(0.99))
-            ).alias("raw"),
-        )
-    )
-    corpus = base.unionByName(planted)
-    points = corpus.select(
-        "vec_id",
-        "raw",
-        F.transform("raw", lambda x: x + F.lit(_OFFSET)).alias("q"),
-    ).localCheckpoint(eager=True)
-    init_rows = points.orderBy("vec_id").limit(_SEM_K).collect()
-    cents = [(cid, list(r["q"])) for cid, r in enumerate(init_rows)]
-    for _ in range(_ITERS):
-        cents = _update(points, cents)  # training stays HARD
+    points, cents = _semantic_trained(spark, sf_dir)  # training stays HARD
     # soft final assignment: long form + top-2 per vector
     long = points.select("vec_id", F.posexplode("q").alias("pos", "x"))
     cents_df = local_df(
@@ -630,55 +623,9 @@ def q_dedup_semantic_soft(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     assign = assign_longform_soft(long, cents_df, p=2)
     member = assign.join(
-        points.select(
-            "vec_id",
-            "raw",
-            F.aggregate(
-                F.zip_with("raw", "raw", lambda x, y: x * y),
-                F.lit(0).cast("bigint"),
-                lambda acc, d: acc + d,
-            ).alias("nrm"),
-        ),
-        "vec_id",
+        points.select("vec_id", "raw", _dot("raw", "raw").alias("nrm")), "vec_id"
     )
-    a = member.select(
-        F.col("cid").alias("cid"),
-        F.col("vec_id").alias("va"),
-        F.col("raw").alias("ra"),
-        F.col("nrm").alias("na"),
-    )
-    b = member.select(
-        F.col("cid").alias("cid_b"),
-        F.col("vec_id").alias("vb"),
-        F.col("raw").alias("rb"),
-        F.col("nrm").alias("nb"),
-    )
-    dupes = (
-        a.join(
-            b,
-            (F.col("cid") == F.col("cid_b")) & (F.col("va") < F.col("vb")),
-        )
-        .select(
-            "vb",
-            F.aggregate(
-                F.zip_with("ra", "rb", lambda x, y: x * y),
-                F.lit(0).cast("bigint"),
-                lambda acc, d: acc + d,
-            ).alias("dot"),
-            "na",
-            "nb",
-        )
-        .filter(
-            (F.col("dot") > 0)
-            & F.expr(
-                "CAST(dot AS DECIMAL(38,0)) * CAST(dot AS DECIMAL(38,0))"
-                f" * 1000000 >= {_SEM_TAU2_E6}"
-                " * CAST(na AS DECIMAL(38,0)) * CAST(nb AS DECIMAL(38,0))"
-            )
-        )
-        .select(F.col("vb").alias("dupe"))
-        .distinct()
-    )
+    dupes = _near_pairs(member).select(F.col("vb").alias("dupe")).distinct()
     home = assign.filter(F.col("rank") == 1).select("cid", "vec_id")
     return (
         home.join(dupes, home["vec_id"] == dupes["dupe"], "left")

@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..localframe import local_df
+from ..localframe import local_df, pin
 from ..registry import register
 from ..sources.tables import t
 
@@ -135,10 +135,13 @@ def q_text_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = t(spark, sf_dir, "documents")
     # pinned (doc_id, dl) length frame: the corpus-stats collect and
     # the per-doc norm join both need it — unpinned, each re-paid the
-    # full-text split pass (r12 pin-cost rule: expensive rederivation)
-    dl = d.select(
-        "doc_id", F.size(F.split("text", " ")).alias("dl")
-    ).localCheckpoint(eager=True)
+    # full-text split pass
+    dl = pin(
+        d.select(
+            "doc_id", F.size(F.split("text", " ")).alias("dl")
+        ),
+        "q_text_bm25.dl",
+    )
     stats = dl.agg(
         F.count("*").alias("n_docs"), F.sum("dl").alias("total_len")
     ).collect()[0]
@@ -146,12 +149,12 @@ def q_text_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pinned query-term tf census (tiny: only matching tokens survive
     # the map-side isin); df is its marginal — unpinned, the df subtree
     # re-ran the corpus tokenize
-    tf = (
+    tf = pin(
         d.select("doc_id", F.explode(F.split("text", " ")).alias("word"))
         .filter(F.col("word").isin(*_BM25_QUERY))
         .groupBy("doc_id", "word")
-        .agg(F.count("*").alias("tf"))
-        .localCheckpoint(eager=True)
+        .agg(F.count("*").alias("tf")),
+        "q_text_bm25.tf",
     )
     df = tf.groupBy("word").agg(F.countDistinct("doc_id").alias("df"))
     idf = F.log(
@@ -384,19 +387,20 @@ def train_bpe(
     the merge table) and q_text_bpe_encode (which applies it): runs
     over the WORD FREQUENCY table, never the corpus; each iteration is
     an explode+aggregate over |vocab| rows weighted by freq plus a
-    1-row argmax collect; lineage truncated by localCheckpoint every 3
-    merges (the graph-loop pattern). Ties break on (count desc, left
+    1-row argmax collect; lineage truncated by a pin every 3 merges
+    (the graph-loop pattern). Ties break on (count desc, left
     asc, right asc) — total order, deterministic merge table."""
     d = t(spark, sf_dir, "documents")
-    wf = (
+    # one bounded vocab table; frees the scan
+    wf = pin(
         d.select(F.explode(F.split("text", " ")).alias("word"))
         .filter(F.length("word") >= 1)
         .groupBy("word")
         .agg(F.count("*").alias("freq"))
         .select(
             F.expr("array_append(split(word, ''), '</w>')").alias("seq"), "freq"
-        )
-        .localCheckpoint(eager=True)  # one bounded vocab table; frees the scan
+        ),
+        "train_bpe.wf",
     )
     merges: list[tuple[int, str, str, int]] = []
     for step in range(n_merges):
@@ -423,7 +427,7 @@ def train_bpe(
         merges.append((step, left, right, n))
         wf = wf.withColumn("seq", _merge_pair(F.col("seq"), left, right))
         if (step + 1) % 3 == 0:
-            wf = wf.localCheckpoint(eager=True)
+            wf = pin(wf, "train_bpe.merged")
     return merges
 
 
@@ -473,7 +477,7 @@ def q_text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     for i, (_, left, right, _) in enumerate(merges):
         vocab = vocab.withColumn("seq", _merge_pair(F.col("seq"), left, right))
         if (i + 1) % 3 == 0:
-            vocab = vocab.localCheckpoint(eager=True)
+            vocab = pin(vocab, "q_text_bpe_encode.merged")
     sizes = vocab.select("word", F.size("seq").cast("bigint").alias("n_tok"))
     return (
         words.join(F.broadcast(sizes), "word")
@@ -715,14 +719,14 @@ def q_text_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     # = Σ counts, and a word's first-occurrence bucket = its MIN bucket
     # (bucket is monotone in doc_id, so bucket(min doc) = min bucket).
     # Unpinned, nv and tk each re-ran the explode over the corpus.
-    c = (
+    c = pin(
         tok.crossJoin(nd)
         .groupBy(
             F.expr("CAST((doc_id * 10) DIV nd AS BIGINT)").alias("bucket"),
             "word",
         )
-        .agg(F.count("*").alias("cnt"))
-        .localCheckpoint(eager=True)
+        .agg(F.count("*").alias("cnt")),
+        "q_text_vocab_growth.c",
     )
     nv = (
         c.groupBy("word")
@@ -812,12 +816,12 @@ def train_unigram(
     from pyspark.sql.types import ArrayType, StringType
 
     d = t(spark, sf_dir, "documents")
-    wf = (
+    wf = pin(
         d.select(F.explode(F.split("text", " ")).alias("word"))
         .filter(F.length("word") >= 1)
         .groupBy("word")
-        .agg(F.count("*").cast("bigint").alias("freq"))
-        .localCheckpoint(eager=True)
+        .agg(F.count("*").cast("bigint").alias("freq")),
+        "train_unigram.wf",
     )
     # Seed inventory: every substring of length 1..UNI_MAXL of every
     # distinct word, weighted by word freq — map-side slice transform,

@@ -40,6 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..localframe import pin
 from ..registry import register
 from ..sources.tables import t
 from .text import STOPWORDS as _STOP
@@ -123,9 +124,12 @@ def q_quality_gopher(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the feature select) — materialize it instead of re-scanning and
     # re-splitting per consumer (review finding r7; the
     # q_market_basket rule)
-    toks = d.select(
-        "doc_id", F.split("text", " ").alias("w"), "n_chars"
-    ).localCheckpoint(eager=True)
+    toks = pin(
+        d.select(
+            "doc_id", F.split("text", " ").alias("w"), "n_chars"
+        ),
+        "q_quality_gopher.toks",
+    )
     dup = (
         toks.select("doc_id", F.explode(word_ngrams(2)).alias("gram"))
         .groupBy("doc_id", "gram")
@@ -287,9 +291,12 @@ def q_quality_linear_clf(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = t(spark, sf_dir, "documents")
     # tokenize ONCE: the token stream feeds the vocab/weight build AND
     # the scoring join (review finding r7; the q_market_basket rule)
-    toks = d.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("w")
-    ).localCheckpoint(eager=True)
+    toks = pin(
+        d.select(
+            "doc_id", F.explode(F.split("text", " ")).alias("w")
+        ),
+        "q_quality_linear_clf.toks",
+    )
     wt = (
         toks.select("w")
         .distinct()
@@ -377,7 +384,7 @@ def q_select_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-portable md5-prefix family (any system reproduces the
     bucketing from the token alone).
 
-    Plan: tokenize ONCE (localCheckpoint — the q_market_basket rule),
+    Plan: tokenize ONCE (pinned — the q_market_basket rule),
     two bucket-sized aggregates + one bounded 2-scalar collect build
     the 256-row log-ratio dictionary, which BROADCASTS back onto the
     token stream; the corpus shuffles once by doc_id and never by
@@ -386,7 +393,7 @@ def q_select_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     importance weights. Top-20 by (dsir_e6, doc_id) plans as
     TakeOrderedAndProject, no global sort."""
     d = t(spark, sf_dir, "documents")
-    tb = (
+    tb = pin(
         d.select("doc_id", "lang", F.explode(F.split("text", " ")).alias("w"))
         .select(
             "doc_id",
@@ -395,8 +402,8 @@ def q_select_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.conv(F.substring(F.md5("w"), 1, 8), 16, 10).cast("bigint")
                 % 256
             ).alias("b"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        "q_select_dsir.tb",
     )
     tot = tb.agg(
         F.sum(F.when(F.col("lang") == "en", 1).otherwise(0)).alias("tt"),

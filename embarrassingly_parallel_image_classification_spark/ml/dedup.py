@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine
-from ..localframe import local_df
+from ..localframe import local_df, pin
 from ..registry import register
 from ..sources.tables import t
 
@@ -160,22 +160,18 @@ def jaccard_pairs_at(d: DataFrame, tau: float, n: int = SHINGLE_N) -> DataFrame:
     # hashes equals Jaccard on strings barring 64-bit collisions
     # (negligible; same argument as q_dedup_exact's hash key). The
     # hashed frame feeds FOUR consumers (sizes, document frequency,
-    # prefix ranking, verify sets); round 12 pins it with an eager
-    # localCheckpoint — the house multi-pass pattern the containment
-    # query already uses (its blocks are RDD-owned and reclaimed by
-    # ContextCleaner, unlike a library persist(), whose leaked cache
-    # entries slowed a probe run 6×) — so the corpus is exploded and
-    # hashed ONCE, not once per consumer.
+    # prefix ranking, verify sets); round 12 pins it, so the corpus is
+    # exploded and hashed ONCE, not once per consumer.
     # tau as an exact decimal rational: Fraction("0.3") = 3/10, never
     # the float 0.2999… — the bounds below are integer-exact in num/den.
     from fractions import Fraction
 
     frac = Fraction(str(tau)).limit_denominator(10**9)
     num, den = frac.numerator, frac.denominator
-    s = (
+    s = pin(
         shingles(d, n)
-        .select("doc_id", F.xxhash64("shingle").alias("sh"))
-        .localCheckpoint(eager=True)
+        .select("doc_id", F.xxhash64("shingle").alias("sh")),
+        "jaccard_pairs_at.s",
     )
     sizes = s.groupBy("doc_id").agg(F.count("*").alias("sz"))
     df_rank = s.groupBy("sh").agg(F.count("*").alias("df"))
@@ -270,8 +266,8 @@ def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
     iteration, converging in O(component diameter) rounds (dup clusters
     are near-cliques: 2–3 rounds in practice). The label total is
     monotone non-increasing and integer, so equal consecutive totals ⇔
-    fixpoint. Lineage is truncated per round with localCheckpoint —
-    without it the iterated plan grows exponentially. The driver-side
+    fixpoint. Lineage is truncated per round with a pin — without it
+    the iterated plan grows exponentially. The driver-side
     loop itself is how iterative graph algorithms run on Spark
     (GraphFrames does the same), not a collect() anti-pattern —
     per-round driver data is one scalar.
@@ -291,7 +287,7 @@ def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
     both = edges.select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     ).unionByName(edges.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
-    both = both.localCheckpoint(eager=True)
+    both = pin(both, "connected_components.both")
     labels = both.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("lab")
     )
@@ -301,9 +297,10 @@ def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
         prop = both.join(labels, both.src == labels.node).select(
             F.col("dst").alias("node"), "lab"
         )
-        labels = (
-            labels.unionByName(prop).groupBy("node").agg(F.min("lab").alias("lab"))
-        ).localCheckpoint(eager=True)
+        labels = pin(
+            labels.unionByName(prop).groupBy("node").agg(F.min("lab").alias("lab")),
+            "connected_components.labels",
+        )
         total = labels.agg(F.sum("lab")).collect()[0][0]
         if total == prev_total:
             converged = True
@@ -344,8 +341,8 @@ def connected_components_star(edges: DataFrame, max_iter: int = 30) -> DataFrame
     Each half-round is one groupBy(node) + one join — the same shuffle
     cost per round as min-label, just ~diameter/log² fewer rounds. Edges
     are kept canonical (u < v) and distinct, so the state never exceeds
-    the current edge count; lineage is truncated per round with
-    localCheckpoint. Fixpoint ⇔ the canonical edge set is stable (it is
+    the current edge count; lineage is truncated per round with a pin.
+    Fixpoint ⇔ the canonical edge set is stable (it is
     then exactly the star set {(root, node)}), detected via a
     deterministic (count, sum-of-hashes) aggregate — one scalar row per
     round reaches the driver.
@@ -353,19 +350,19 @@ def connected_components_star(edges: DataFrame, max_iter: int = 30) -> DataFrame
     Equivalence with min-label CC is pinned in tests (fixture edges AND
     a 1000-node chain the min-label default round budget cannot solve).
     """
-    nodes = (
+    nodes = pin(
         edges.select(F.col("id_a").alias("node"))
         .unionByName(edges.select(F.col("id_b").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        "connected_components_star.nodes",
     )
-    e = (
+    e = pin(
         edges.select(
             F.least("id_a", "id_b").alias("u"), F.greatest("id_a", "id_b").alias("v")
         )
         .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        "connected_components_star.e",
     )
     prev_sig = None
     converged = False
@@ -394,11 +391,11 @@ def connected_components_star(edges: DataFrame, max_iter: int = 30) -> DataFrame
             .select(F.col("m"), F.col("u").alias("x"))
             .unionByName(mins2.select("m", F.col("v").alias("x")))
         )
-        e = (
+        e = pin(
             small.filter(F.col("m") != F.col("x"))
             .select(F.col("m").alias("u"), F.col("x").alias("v"))
-            .distinct()
-            .localCheckpoint(eager=True)
+            .distinct(),
+            "connected_components_star.round",
         )
         sig = e.agg(
             F.count("*").alias("n"), F.sum(F.xxhash64("u", "v")).alias("h")
@@ -1094,21 +1091,21 @@ def jaccard_cross_at(
     # ranking, verify sets): pin each hashed shingle frame once — the
     # jaccard_pairs_at rule, applied per corpus (round 12; the
     # unpinned plan re-exploded both corpora per consumer, 10 scans).
-    se = (
+    se = pin(
         shingles(existing, n)
         .select(
             F.col("doc_id").alias("id_exist"),
             F.xxhash64("shingle").alias("sh"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        "jaccard_cross_at.se",
     )
-    si = (
+    si = pin(
         shingles(incoming, n)
         .select(
             F.col("doc_id").alias("id_new"),
             F.xxhash64("shingle").alias("sh"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        "jaccard_cross_at.si",
     )
     sz_e = se.groupBy("id_exist").agg(F.count("*").alias("sz_e"))
     sz_i = si.groupBy("id_new").agg(F.count("*").alias("sz_i"))
@@ -1288,11 +1285,10 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = t(spark, sf_dir, "documents")
     tau_num, tau_den = 4, 5  # tau = 0.8
     # the shingle frame feeds FOUR consumers (df census, probe ranking,
-    # candidate join, set materialization) — materialize it once
-    # (localCheckpoint, not persist: the round-4 leak rule) instead of
+    # candidate join, set materialization) — pin it once instead of
     # re-exploding the corpus per consumer; measured 2.5 → 1.8 s warm
     # at sf0.1, and at scale this is the standard "tokenize once" stage
-    sh = shingles(d).localCheckpoint(eager=True)
+    sh = pin(shingles(d), "q_dedup_containment.sh")
     # one aggregate yields both the verify sets and the sizes (sz =
     # size of the distinct-shingle set — ONE definition, review
     # finding: two parallel count aggregates could silently diverge)
@@ -1581,8 +1577,7 @@ def q_text_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     never shuffle. (2) MULTI-CONSUMER PIPELINE — fph feeds four
     consumers (df guard, the pair join's two sides, per-doc counts);
     without pinning, Spark recomputes the whole gram pipeline per
-    consumer. localCheckpoint(eager=True) (the house multi-pass
-    pattern, aggregates.py:1051) computes it exactly once."""
+    consumer; the pin computes it exactly once."""
     docs = t(spark, sf_dir, "documents").select("doc_id", "text")
     docs_a = docs.unionAll(
         docs.select(
@@ -1624,7 +1619,9 @@ def q_text_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("pos")
         .rowsBetween(Window.currentRow, WINNOW_W - 1)
     )
-    fph = (
+    # four consumers below (df guard, pair join a/b, per-doc
+    # counts): pin the gram pipeline so it runs exactly once
+    fph = pin(
         keyed.select(
             "doc_id",
             "pos",
@@ -1636,10 +1633,8 @@ def q_text_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
             F.expr(f"m div {WINNOW_POSCAP}").alias("fp_hash"),
         )
-        .distinct()
-        # four consumers below (df guard, pair join a/b, per-doc
-        # counts): pin the gram pipeline so it runs exactly once
-        .localCheckpoint(eager=True)
+        .distinct(),
+        "q_text_winnowing.fph",
     )
     kept = (
         fph.groupBy("fp_hash")
@@ -1924,7 +1919,8 @@ def q_dedup_minhash_affine(spark: SparkSession, sf_dir: str) -> DataFrame:
     all-pairs — the K2 banding discipline); the verify joins shingles
     for CANDIDATE pairs only."""
     d = t(spark, sf_dir, "documents")
-    sh = shingles(d).localCheckpoint(eager=True)  # signature + verify + sizes
+    # signature + verify + sizes
+    sh = pin(shingles(d), "q_dedup_minhash_affine.sh")
     hv = sh.select(
         "doc_id",
         F.expr(

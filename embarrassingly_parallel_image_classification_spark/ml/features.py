@@ -33,7 +33,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..localframe import local_df
+from ..localframe import local_df, pin
 from ..registry import register
 from ..sources.tables import t
 
@@ -336,13 +336,13 @@ def q_feat_target_kfold(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # pinned 25-row (priority, fold) census: gt is its marginal —
     # unpinned, the gt subtree re-ran the md5-fold fact pass
-    gf = (
+    gf = pin(
         pts.groupBy("o_orderpriority", "fold")
         .agg(
             F.sum("cents").cast("bigint").alias("s_f"),
             F.count("*").cast("bigint").alias("n_f"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        "q_feat_target_kfold.gf",
     )
     gt = gf.groupBy("o_orderpriority").agg(
         F.sum("s_f").cast("bigint").alias("s_t"),
@@ -454,15 +454,15 @@ def q_pipeline_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     # counts, the out-of-fold sums, the totals and the global price
     # bounds are all exact integer marginals of it (kendall rule) —
     # unpinned, each of the four aggregates re-paid the fact scan.
-    g2 = (
+    g2 = pin(
         pts.groupBy("o_orderpriority", "fold")
         .agg(
             F.sum("cents").cast("bigint").alias("s_f"),
             F.count("*").cast("bigint").alias("n_f"),
             F.min("cents").cast("bigint").alias("mn"),
             F.max("cents").cast("bigint").alias("mx"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        "q_pipeline_features.g2",
     )
     counts = g2.groupBy("o_orderpriority").agg(F.sum("n_f").alias("cnt"))
     dict_w = Window.orderBy(F.col("cnt").desc(), F.col("o_orderpriority"))
@@ -555,18 +555,18 @@ def q_feat_robust_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     one fact scan, zero fact shuffles."""
     from ..operators.aggregates import select_group_quantiles
 
-    pts = t(spark, sf_dir, "lineitem").select(
-        "l_orderkey",
-        "l_linenumber",
-        F.col("l_returnflag").alias("g"),
-        F.expr("CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT)").alias(
-            "cents"
+    pts = pin(
+        t(spark, sf_dir, "lineitem").select(
+            "l_orderkey",
+            "l_linenumber",
+            F.col("l_returnflag").alias("g"),
+            F.expr("CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT)").alias(
+                "cents"
+            ),
         ),
-    ).localCheckpoint(eager=True)
-    # house caching rule (test_no_persist_in_library_source): quartile
-    # selection + the final scale share one materialization; the
-    # returned plan keeps the blocks alive exactly as long as the
-    # caller keeps the result, then ContextCleaner reclaims them
+        "q_feat_robust_scale.pts",
+    )
+    # quartile selection + the final scale share one materialization
     init, got = select_group_quantiles(
         pts.select("g", "cents"), (25, 50, 75)
     )
@@ -676,11 +676,10 @@ def q_feat_chi2_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pinned (word, label) presence census — vocab x 5 rows; its word
     # marginal feeds the complement columns, and unpinned the two
     # consumers each re-ran the tokenize + distinct over the corpus
-    # (r12 pin-cost rule: expensive rederivation)
-    aw = (
+    aw = pin(
         tok.groupBy("w", "lang")
-        .agg(F.count("*").cast("bigint").alias("a"))
-        .localCheckpoint(eager=True)
+        .agg(F.count("*").cast("bigint").alias("a")),
+        "q_feat_chi2_select.aw",
     )
     wd = aw.groupBy("w").agg(F.sum("a").cast("bigint").alias("wdocs"))
     cells = (

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType
 
+from ..localframe import pin
 from ..registry import register
 from ..sources.tables import t
 
@@ -1062,12 +1063,15 @@ def q_eval_brier(spark: SparkSession, sf_dir: str) -> DataFrame:
         "y",
         (F.col("hi") - F.col("lo")).alias("pden"),
     )
-    per_bin = b.groupBy("bin").agg(
-        F.first("pden").cast(D38).alias("pden"),
-        F.count("*").cast(D38).alias("n_b"),
-        F.sum("pnum").cast(D38).alias("s_b"),
-        F.sum("y").cast(D38).alias("y_b"),
-    ).localCheckpoint(eager=True)
+    per_bin = pin(
+        b.groupBy("bin").agg(
+            F.first("pden").cast(D38).alias("pden"),
+            F.count("*").cast(D38).alias("n_b"),
+            F.sum("pnum").cast(D38).alias("s_b"),
+            F.sum("y").cast(D38).alias("y_b"),
+        ),
+        "q_eval_brier.per_bin",
+    )
     # pinned (round 12): the 10-row bin census feeds tot and terms —
     # unpinned, each re-ran the fact scan + bin pass (4 scans in the
     # before-plan). Fact passes now: 1 for the (min,max) bounds + 1

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine, dot, l2_dist_sq, norm
-from ..localframe import local_df
+from ..localframe import local_df, pin
 from ..registry import register
 from ..sources.tables import t
 
@@ -391,11 +391,14 @@ class PqIndex:
         # per-column Arrow transfer into the ADC kernel is vectorized,
         # where stacking 25M tiny python lists measured ~25 s of pure
         # object-conversion overhead at the 200k probe
-        self.encoded = enc.select(
-            "vec_id",
-            F.array(*[F.col(f"__c{j}").cast("int") for j in range(m)]).alias("codes"),
-            *[F.col(f"__c{j}").cast("int").alias(f"c{j}") for j in range(m)],
-        ).localCheckpoint(eager=True)  # materialize; checkpoint, not persist
+        self.encoded = pin(
+            enc.select(
+                "vec_id",
+                F.array(*[F.col(f"__c{j}").cast("int") for j in range(m)]).alias("codes"),
+                *[F.col(f"__c{j}").cast("int").alias(f"c{j}") for j in range(m)],
+            ),
+            "PqIndex.encoded",
+        )
 
     def _query_tables(self, queries: DataFrame):
         """Per-query flat ADC table {qid: (m·ks,) float64} where
@@ -567,7 +570,7 @@ class IvfPqIndex:
         self.pq = pq if pq is not None else PqIndex(corpus, m=m, ks=ks, seed=seed)
         # build-phase join: attach each vector's cell to its codes once
         # (at scale this is the bucketed-by-cell write of the code table).
-        # REPIN parallelism before checkpointing: the code table is tiny
+        # REPIN parallelism before pinning: the code table is tiny
         # in bytes, so AQE coalesces the join's shuffle output (measured:
         # 2 partitions for 200k rows at the ann_probe scale) — but the
         # downstream cell join amplifies ×|queries probing each cell|,
@@ -575,11 +578,11 @@ class IvfPqIndex:
         # 12M-row partitions on 2 cores (search was 24 s vs IVF's 23 s
         # until this line; 6 s after). AQE sizes by pre-amplification
         # bytes — any amplifying consumer must re-spread its input.
-        self.coded = (
+        self.coded = pin(
             self.ivf.assigned.select("vec_id", "cell")
             .join(self.pq.encoded, "vec_id")
-            .repartition(corpus.sparkSession.sparkContext.defaultParallelism)
-            .localCheckpoint(eager=True)
+            .repartition(corpus.sparkSession.sparkContext.defaultParallelism),
+            "IvfPqIndex.coded",
         )
 
     def candidates(self, queries: DataFrame, nprobe: int = 4) -> DataFrame:
@@ -816,7 +819,7 @@ class IvfPqResidualIndex:
     broadcast like before.
 
     Build: one zip_with subtract against the broadcast centroid frame
-    (checkpointed once — the m per-subspace KMeans fits iterate over
+    (pinned once — the m per-subspace KMeans fits iterate over
     it), then PqIndex unchanged on the residual frame. Search: probed
     cells and per-(qid, cell) tables are computed driver-side from the
     tiny centroid/codebook arrays (queries small by contract — the
@@ -840,7 +843,8 @@ class IvfPqResidualIndex:
             int(r["cell"]): np.asarray(r["centroid"], dtype=np.float64)
             for r in self.ivf.cent_df.collect()  # tiny: n_clusters rows
         }
-        resid = (
+        # m KMeans fits iterate over it
+        resid = pin(
             corpus.select("vec_id", "embedding")
             .join(self.ivf.assigned.select("vec_id", "cell"), "vec_id")
             .join(F.broadcast(self.ivf.cent_df), "cell")
@@ -850,15 +854,15 @@ class IvfPqResidualIndex:
                 F.zip_with(
                     "embedding", "centroid", lambda a, b: a - b
                 ).alias("embedding"),
-            )
-            .localCheckpoint(eager=True)  # m KMeans fits iterate over it
+            ),
+            "IvfPqResidualIndex.resid",
         )
         self.pq = PqIndex(resid.select("vec_id", "embedding"), m=m, ks=ks, seed=seed)
-        self.coded = (
+        self.coded = pin(
             resid.select("vec_id", "cell")
             .join(self.pq.encoded, "vec_id")
-            .repartition(corpus.sparkSession.sparkContext.defaultParallelism)
-            .localCheckpoint(eager=True)
+            .repartition(corpus.sparkSession.sparkContext.defaultParallelism),
+            "IvfPqResidualIndex.coded",
         )
 
     def _residual_tables(self, queries: DataFrame, nprobe: int):
@@ -1226,16 +1230,7 @@ def q_knn_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pinned: the 8-byte bitmask index (what a binary tier materializes
     # in production) feeds both the query side and the corpus side —
     # unpinned, each re-paid the float scan and the 63-step sign fold
-    bits = emb.select(
-        "vec_id",
-        F.expr(
-            "aggregate(zip_with(slice(embedding, 1, 63), "
-            "CAST(sequence(0, 62) AS ARRAY<INT>), "
-            "(e, i) -> IF(CAST(e AS DOUBLE) > 0D, "
-            "shiftleft(CAST(1 AS BIGINT), i), CAST(0 AS BIGINT))), "
-            "CAST(0 AS BIGINT), (acc, x) -> acc + x)"
-        ).alias("sig"),
-    ).localCheckpoint(eager=True)
+    bits = pin(_sign_bits(emb), "q_knn_hamming.bits")
     q = bits.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("qid"), F.col("sig").alias("qsig")
     )
@@ -1363,16 +1358,7 @@ def q_knn_hamming_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = t(spark, sf_dir, "embeddings")
     # pinned bitmask index — shared by the query side and the corpus
     # side of the shortlist (see q_knn_hamming)
-    bits = emb.select(
-        "vec_id",
-        F.expr(
-            "aggregate(zip_with(slice(embedding, 1, 63), "
-            "CAST(sequence(0, 62) AS ARRAY<INT>), "
-            "(e, i) -> IF(CAST(e AS DOUBLE) > 0D, "
-            "shiftleft(CAST(1 AS BIGINT), i), CAST(0 AS BIGINT))), "
-            "CAST(0 AS BIGINT), (acc, x) -> acc + x)"
-        ).alias("sig"),
-    ).localCheckpoint(eager=True)
+    bits = pin(_sign_bits(emb), "q_knn_hamming_rerank.bits")
     q = bits.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("qid"), F.col("sig").alias("qsig")
     )
@@ -1451,8 +1437,8 @@ _DUP_OFFSET = 100_000
 
 def _sign_bits(emb: DataFrame) -> DataFrame:
     """(vec_id, sig): 1-bit sign quantization over the first 63 dims —
-    the q_knn_hamming signature (kept textually identical so the two
-    tiers stay cross-checkable)."""
+    the one signature every Hamming tier (q_knn_hamming, its rerank and
+    postdedup variants) uses."""
     return emb.select(
         "vec_id",
         F.expr(
@@ -1664,12 +1650,11 @@ def q_knn_hamming_postdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Both corpora feed THREE consumers each (cascade, shortlist
     # census, exact truth / dedup semi-join) — unpinned, the doubled
     # corpus union and the dedup semi-join re-ran per consumer (the
-    # round-12 before-plan held 63 parquet scans). Pin once each
-    # (localCheckpoint, the house multi-pass rule).
-    corpus_a = (
+    # round-12 before-plan held 63 parquet scans). Pin once each.
+    corpus_a = pin(
         emb.select("vec_id", "embedding")
-        .unionAll(clone)
-        .localCheckpoint(eager=True)
+        .unionAll(clone),
+        "q_knn_hamming_postdedup.corpus_a",
     )
     docs_a = docs.select("doc_id", "text").unionAll(
         docs.select(
@@ -1679,9 +1664,12 @@ def q_knn_hamming_postdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     survivors = docs_a.groupBy(F.md5("text").alias("h")).agg(
         F.min("doc_id").alias("vec_id")
     ).select("vec_id")
-    corpus_d = corpus_a.join(
-        F.broadcast(survivors), "vec_id", "semi"
-    ).localCheckpoint(eager=True)
+    corpus_d = pin(
+        corpus_a.join(
+            F.broadcast(survivors), "vec_id", "semi"
+        ),
+        "q_knn_hamming_postdedup.corpus_d",
+    )
     truth = knn_exact(
         corpus_d, emb.filter(F.col("vec_id") < N_QUERIES), TOP_K
     ).select(F.col("qid").alias("tq"), F.col("vec_id").alias("tv"))
@@ -1851,28 +1839,31 @@ def q_knn_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the query side and the dot-product corpus side both consume the
     # pinned codes, so the float corpus is posexploded once, not four
     # times.
-    rng = (
+    rng = pin(
         dims.groupBy("d")
-        .agg(F.min("v").alias("lo"), F.max("v").alias("hi"))
-        .localCheckpoint(eager=True)
+        .agg(F.min("v").alias("lo"), F.max("v").alias("hi")),
+        "q_knn_sq8.rng",
     )
-    codes = dims.join(F.broadcast(rng), "d").select(
-        "vec_id",
-        "d",
-        F.when(
-            F.col("hi") > F.col("lo"),
-            F.least(
-                F.lit(SQ8_LEVELS),
-                F.floor(
-                    (F.col("v") - F.col("lo"))
-                    * F.lit(float(SQ8_LEVELS))
-                    / (F.col("hi") - F.col("lo"))
+    codes = pin(
+        dims.join(F.broadcast(rng), "d").select(
+            "vec_id",
+            "d",
+            F.when(
+                F.col("hi") > F.col("lo"),
+                F.least(
+                    F.lit(SQ8_LEVELS),
+                    F.floor(
+                        (F.col("v") - F.col("lo"))
+                        * F.lit(float(SQ8_LEVELS))
+                        / (F.col("hi") - F.col("lo"))
+                    ),
                 ),
-            ),
-        )
-        .otherwise(0)
-        .alias("q"),
-    ).localCheckpoint(eager=True)
+            )
+            .otherwise(0)
+            .alias("q"),
+        ),
+        "q_knn_sq8.codes",
+    )
     qc = codes.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("qid"), "d", F.col("q").alias("qq")
     )

@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..localframe import local_df
+from ..localframe import local_df, pin
 from ..registry import register
 from ..sources.tables import t
 
@@ -141,20 +141,23 @@ def q_train_linreg_gd(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan per iteration: one map-side-combined aggregate to FIVE BIGINT
     scalars (treeAggregate shape [PK]); rows never shuffle, Python
     never touches them, driver state = 3 ints. The feature trio is
-    localCheckpoint()ed once and every iteration aggregates the
-    materialized columns (round 12 — previously re-derived per scan;
-    the pin-cost rule applies at T+1 = 8 consumers, and it is the
-    production shape the docstring always promised). BIGINT headroom:
+    pinned once and every iteration aggregates the materialized
+    columns (round 12 — previously re-derived per scan; T+1 = 8
+    consumers, and it is the production shape the docstring always
+    promised). BIGINT headroom:
     |resid| ≤ 5e10 e6-units × 1.5e7 rows (sf10) ≈ 2e18 < 2⁶³; past
     that the sums move to DECIMAL(38,0) exactly like q_dedup_semantic's
     128-bit cosine arithmetic."""
-    pts = t(spark, sf_dir, "orders").selectExpr(
-        "CAST(CAST(substring(o_orderpriority, 1, 1) AS BIGINT) - 3"
-        " AS BIGINT) AS x1",
-        "CAST(year(o_orderdate) - 1998 AS BIGINT) AS x2",
-        "CAST(CAST(ROUND(o_totalprice * 100, 0) AS BIGINT) DIV 1000"
-        " AS BIGINT) AS y",
-    ).localCheckpoint(eager=True)
+    pts = pin(
+        t(spark, sf_dir, "orders").selectExpr(
+            "CAST(CAST(substring(o_orderpriority, 1, 1) AS BIGINT) - 3"
+            " AS BIGINT) AS x1",
+            "CAST(year(o_orderdate) - 1998 AS BIGINT) AS x2",
+            "CAST(CAST(ROUND(o_totalprice * 100, 0) AS BIGINT) DIV 1000"
+            " AS BIGINT) AS y",
+        ),
+        "q_train_linreg_gd.pts",
+    )
     w = [0, 0, 0]
     log_rows = []
     for k in range(1, GD_ITERS + 1):
@@ -285,10 +288,10 @@ def q_train_naive_bayes(spark: SparkSession, sf_dir: str) -> DataFrame:
     # langs); the per-class totals, the vocabulary and its size are its
     # exact marginals (kendall rule), so training tokenizes the corpus
     # ONCE instead of once per aggregate.
-    cw = (
+    cw = pin(
         ttok.groupBy("lang", "word")
-        .agg(F.count("*").alias("c"))
-        .localCheckpoint(eager=True)
+        .agg(F.count("*").alias("c")),
+        "q_train_naive_bayes.cw",
     )
     tl = cw.groupBy("lang").agg(F.sum("c").alias("t"))
     vocab = cw.select("word").distinct()
@@ -313,8 +316,7 @@ def q_train_naive_bayes(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # doc-level class priors: two narrow (doc_id, lang) scans — cheap
-    # columnar reads at any scale, so no pin (the r12 pin-cost rule:
-    # pin only what saves EXPENSIVE rederivation, e.g. the tokenize
+    # columnar reads at any scale, so no pin (unlike the tokenize
     # census above)
     n_train = train.agg(F.count("*").alias("nt"))
     prior = (
@@ -915,10 +917,10 @@ def q_train_gbt_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pinned 1-row round-1 pick: its three consumers (the residual
     # projection, the round-1 model row, round 2's de-scaling) each
     # re-ran the round-1 census fact scan unpinned
-    p1 = (
+    p1 = pin(
         sc1.orderBy(F.col("score").desc(), "f", "v")
-        .limit(1)
-        .localCheckpoint(eager=True)
+        .limit(1),
+        "q_train_gbt_stumps.p1",
     )
 
     z2 = li.crossJoin(F.broadcast(p1.select(
@@ -1746,11 +1748,11 @@ def q_train_tree_depth3(spark: SparkSession, sf_dir: str) -> DataFrame:
     through the inner node-join, identically in both engines.
 
     The routed instance layout (base2) and the tiny split picks are
-    localCheckpointed between levels — the production histogram-GBM
+    pinned between levels — the production histogram-GBM
     contract: each level reads the PREVIOUS layout, never re-derives
     it, so the raw fact table is scanned exactly twice (root census +
     layout build) however deep the tree grows. At fixture scale this
-    is cost-NEUTRAL (checkpoint I/O ~ recompute savings, measured
+    is cost-NEUTRAL (pin I/O ~ recompute savings, measured
     3.1-3.9 s warm either way at sf0.1); at 100 TB the unpinned
     spelling re-derives the full routing chain once per output
     subtree and is catastrophic.
@@ -1777,10 +1779,10 @@ def q_train_tree_depth3(spark: SparkSession, sf_dir: str) -> DataFrame:
     splits0 = _stump_split_scores(two_features(li, ()), ())
     # the root pick (1 row) feeds the routing AND the output union —
     # pin it so the root census runs once
-    root = (
+    root = pin(
         splits0.orderBy("gini_e6", "feature", "threshold")
-        .limit(1)
-        .localCheckpoint(eager=True)
+        .limit(1),
+        "q_train_tree_depth3.root",
     )
     rootb = F.broadcast(
         root.select(
@@ -1793,7 +1795,7 @@ def q_train_tree_depth3(spark: SparkSession, sf_dir: str) -> DataFrame:
     # each level reads the previous layout, never re-derives it, so
     # the raw fact table is scanned exactly twice (root census +
     # layout build) regardless of depth
-    base2 = (
+    base2 = pin(
         li.crossJoin(rootb)
         .withColumn(
             "node",
@@ -1809,17 +1811,17 @@ def q_train_tree_depth3(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit("L"),
             ).otherwise(F.lit("R")),
         )
-        .select("qty", "disc", "y", "node")
-        .localCheckpoint(eager=True)
+        .select("qty", "disc", "y", "node"),
+        "q_train_tree_depth3.base2",
     )
     splits2 = _stump_split_scores(two_features(base2, ("node",)), ("node",))
     w2 = Window.partitionBy("node").orderBy("gini_e6", "feature", "threshold")
-    best2 = (
+    # <=2 rows, feeds level-3 routing AND the output union
+    best2 = pin(
         splits2.withColumn("rk", F.row_number().over(w2))
         .filter(F.col("rk") == 1)
-        .select("node", "feature", "threshold", "n_left", "n_right", "gini_e6")
-        # <=2 rows, feeds level-3 routing AND the output union
-        .localCheckpoint(eager=True)
+        .select("node", "feature", "threshold", "n_left", "n_right", "gini_e6"),
+        "q_train_tree_depth3.best2",
     )
     best2b = F.broadcast(
         best2.select(
@@ -1957,9 +1959,10 @@ def q_train_perceptron(spark: SparkSession, sf_dir: str) -> DataFrame:
     chained (70-row x 1-row) broadcast scalar crosses + a final
     audit cross — the whole training loop shuffles nothing larger
     than the census; the fact table is scanned exactly once. Both
-    engines pin the chain against re-expansion (localCheckpoint per
-    epoch / AS MATERIALIZED per CTE — the q_graph_kcore rule)."""
-    cells = (
+    engines pin the chain against re-expansion (a pin per epoch /
+    AS MATERIALIZED per CTE — the q_graph_kcore rule)."""
+    # consumed by every epoch + the final audit: pin once
+    cells = pin(
         t(spark, sf_dir, "orders")
         .groupBy(
             F.expr("CAST(SUBSTRING(o_orderpriority, 1, 1) AS BIGINT)").alias(
@@ -1972,14 +1975,15 @@ def q_train_perceptron(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(-1)
             .alias("y"),
         )
-        .agg(F.count("*").cast("bigint").alias("cnt"))
-        # consumed by every epoch + the final audit: pin once
-        .localCheckpoint(eager=True)
+        .agg(F.count("*").cast("bigint").alias("cnt")),
+        "q_train_perceptron.cells",
     )
     w = local_df(spark, [(0, 0, 0)], "wb BIGINT, w1 BIGINT, w2 BIGINT")
     margin = "y * (wb + w1 * x1 + w2 * x2)"
     for _ in range(_PERC_EPOCHS):
-        w = (
+        # each epoch's 1-row weights feed the next epoch AND (for
+        # the last) the final audit: pin (q_graph_kcore rule)
+        w = pin(
             cells.crossJoin(F.broadcast(w))
             .groupBy("wb", "w1", "w2")
             .agg(
@@ -2011,10 +2015,8 @@ def q_train_perceptron(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.col("w2") + F.coalesce(F.col("d2"), F.lit(0)))
                 .cast("bigint")
                 .alias("w2"),
-            )
-            # each epoch's 1-row weights feed the next epoch AND (for
-            # the last) the final audit: pin (q_graph_kcore rule)
-            .localCheckpoint(eager=True)
+            ),
+            "q_train_perceptron.w",
         )
     return (
         cells.crossJoin(F.broadcast(w))

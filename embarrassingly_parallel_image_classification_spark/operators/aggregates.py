@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..localframe import local_df
+from ..localframe import local_df, pin
 from ..registry import register
 from ..sources.tables import t
 
@@ -1060,21 +1060,18 @@ def q_agg_quantile_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     value census is ≤ 4096 grouped rows per quantile. A global sort
     exchanges the ENTIRE fact table; selection never moves a data row.
     Exactness (bit-equal to the sort-based oracle, ties included) is
-    what approx_percentile trades away. The projection is
-    localCheckpointed for the ~4 bounded passes (the house caching
-    rule); the result is driver-built, so the blocks are reclaimed by
-    ContextCleaner the moment the frame goes out of scope at return."""
-    pts = t(spark, sf_dir, "lineitem").select(
-        F.lit("_").alias("g"),
-        F.expr("CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT)").alias(
-            "cents"
+    what approx_percentile trades away. The projection is pinned for
+    the ~4 bounded passes; the result is driver-built, so nothing keeps
+    the pin's lineage alive past return."""
+    pts = pin(
+        t(spark, sf_dir, "lineitem").select(
+            F.lit("_").alias("g"),
+            F.expr("CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT)").alias(
+                "cents"
+            ),
         ),
-    ).localCheckpoint(eager=True)
-    # the house caching rule (test_no_persist_in_library_source):
-    # library code localCheckpoints — the ~4 bounded passes share one
-    # materialization, and ContextCleaner reclaims the blocks when the
-    # frame goes out of scope at return (the result is driver-built,
-    # so nothing keeps the lineage alive)
+        "q_agg_quantile_select.pts",
+    )
     stats = pts.agg(
         F.count("*").alias("n"), F.min("cents").alias("lo"),
         F.max("cents").alias("hi"),
@@ -1122,12 +1119,15 @@ def q_agg_group_median_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same exactness contract (bit-equal to the sort-based oracle, ties
     included), generalized to the grouped case where the sort plan's
     skew actually bites."""
-    pts = t(spark, sf_dir, "lineitem").select(
-        F.col("l_returnflag").alias("g"),
-        F.expr("CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT)").alias(
-            "cents"
+    pts = pin(
+        t(spark, sf_dir, "lineitem").select(
+            F.col("l_returnflag").alias("g"),
+            F.expr("CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT)").alias(
+                "cents"
+            ),
         ),
-    ).localCheckpoint(eager=True)  # house rule: see q_agg_quantile_select
+        "q_agg_group_median_select.pts",
+    )
     init, got = select_group_quantiles(pts, (50,))
     out = [
         (g, init[g][2], (init[g][2] * 50 + 99) // 100, got[f"{g}:50"])

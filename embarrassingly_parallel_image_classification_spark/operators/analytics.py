@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..localframe import pin
 from ..registry import register
 from ..sources.tables import t
 
@@ -609,10 +610,10 @@ def q_bitmap_audience(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exactly what audience engines materialize; bitmap_overlap consumes
     # it three times (sizes + both join sides) — unpinned, each consumer
     # re-paid the fact scan and the bit_or aggregation.
-    words = (
+    words = pin(
         ev.groupBy("event_type", "widx")
-        .agg(F.expr("bit_or(bit)").alias("word"))
-        .localCheckpoint(eager=True)
+        .agg(F.expr("bit_or(bit)").alias("word")),
+        "q_bitmap_audience.words",
     )
     return bitmap_overlap(words)
 
@@ -876,14 +877,13 @@ def q_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf0.1), so a frequent-item semi-filter would prune nothing and
     only adds a broadcast join per side."""
     # the distinct (order, item) frame feeds FOUR consumers (order
-    # count, supports, both self-join sides) — materialize it once
-    # (localCheckpoint, the tokenize-once rule) instead of re-scanning
-    # lineitem and re-running the distinct per consumer
-    items = (
+    # count, supports, both self-join sides) — pin it once instead of
+    # re-scanning lineitem and re-running the distinct per consumer
+    items = pin(
         t(spark, sf_dir, "lineitem")
         .select("l_orderkey", (F.col("l_partkey") % 200).alias("item"))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        "q_market_basket.items",
     )
     n_ord = items.agg(F.countDistinct("l_orderkey").alias("n"))
     sup = items.groupBy("item").agg(F.count("*").alias("c"))

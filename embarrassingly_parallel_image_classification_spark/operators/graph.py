@@ -16,9 +16,9 @@ identically in both engines.
 
 Scale notes: each iteration is one shuffle (groupBy dst) plus two
 broadcast joins (ranks and out-degrees are |V|-sized, tiny next to
-|E|). At 100 TB the edges DataFrame would be the persisted side and
-``ranks`` would be localCheckpoint()ed every few iterations to truncate
-the growing lazy plan; at fixture size the 10-deep lazy plan is cheap
+|E|). At 100 TB the edges DataFrame would be the pinned side and
+``ranks`` would be pinned every few iterations to truncate the growing
+lazy plan; at fixture size the 10-deep lazy plan is cheap
 and keeps the query a pure function of its inputs.
 """
 
@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..localframe import pin
 from ..registry import register
 from ..sources.tables import t
 
@@ -64,6 +65,32 @@ def _trade_base(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(s, F.col("s_suppkey") == F.col("l_suppkey"))
     )
 
+
+def _undirected_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The trade graph's distinct undirected edges (a, b), a < b, no
+    self-loops — shared by triangles, clustering coefficient and
+    assortativity, each of which reads it from two or more consumers.
+    Pinned, so the 4-table edge derivation runs once per query."""
+    return pin(
+        _trade_base(spark, sf_dir)
+        .filter(F.col("c_nationkey") != F.col("s_nationkey"))
+        .select(
+            F.least("c_nationkey", "s_nationkey").alias("a"),
+            F.greatest("c_nationkey", "s_nationkey").alias("b"),
+        )
+        .distinct(),
+        "undirected_edges",
+    )
+
+
+def _degrees(edges: DataFrame) -> DataFrame:
+    """(node, degree) of an undirected (a, b) edge list."""
+    return (
+        edges.select(F.col("a").alias("node"))
+        .unionAll(edges.select(F.col("b").alias("node")))
+        .groupBy("node")
+        .agg(F.count("*").cast("bigint").alias("degree"))
+    )
 
 
 def _pagerank_oracle() -> str:
@@ -106,28 +133,20 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     Catalyst in a single spark.sql call. A driver-side DataFrame loop
     re-analyzes a plan that grows with every iteration (quadratic
     Python→JVM analysis; measured 4.5–5 s warm at sf0.1 even with lazy
-    localCheckpoint lineage cuts), while the unrolled plan is analyzed
-    once: 1.9–2.5 s — the engine, not the driver, owns the dataflow.
-    The derived edge set is localCheckpoint()ed once so the 4-table
-    join runs once, not per-iteration (checkpoint, not persist — cache
-    entries from library persist() calls leak: nothing can unpersist
-    them), and coalesced to 1 partition because the
+    lineage cuts), while the unrolled plan is analyzed once:
+    1.9–2.5 s — the engine, not the driver, owns the dataflow.
+    The derived edge set is pinned once so the 4-table join runs once,
+    not per-iteration, and coalesced to 1 partition because the
     DISTINCT nation-pair graph is ≤|V|² rows; at real scale (edges ≫
     memory) keep natural partitioning and switch to the driver-loop +
     checkpoint-every-few-iterations pattern, which bounds plan depth
     when the iteration count is data-dependent rather than fixed."""
-    edges = (
+    edges = pin(
         _trade_base(spark, sf_dir)
         .select(F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst"))
         .distinct()
-        .coalesce(1)
-        # localCheckpoint, NOT persist: a persist() inside a library
-        # function that returns a lazy DataFrame can never be
-        # unpersisted, so cache-manager entries accumulate across calls
-        # (the exact leak class measured at 6× slowdown in ml/dedup.py
-        # 143–149). localCheckpoint blocks are owned by the RDD and
-        # reclaimed by the ContextCleaner once the plan is GC'd.
-        .localCheckpoint(eager=True)
+        .coalesce(1),
+        "q_graph_pagerank.edges",
     )
     nodes = t(spark, sf_dir, "nation").select(F.col("n_nationkey").alias("node"))
     # |V| is a bounded dim-table scalar (25 rows) — a driver-side count
@@ -238,30 +257,18 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     triangle enumeration. At scale the standard refinement — orient
     edges by degree so high-degree hubs never fan out — drops straight
     into this shape."""
-    e = (
-        _trade_base(spark, sf_dir)
-        .filter(F.col("c_nationkey") != F.col("s_nationkey"))
-        .select(
-            F.least("c_nationkey", "s_nationkey").alias("u"),
-            F.greatest("c_nationkey", "s_nationkey").alias("v"),
-        )
-        .distinct()
-        # localCheckpoint, not persist — see q_graph_pagerank: a persist
-        # here leaks a cache-manager entry per call.
-        .localCheckpoint(eager=True)
-    )
+    e = _undirected_edges(spark, sf_dir)
     n_edges = e.agg(F.count("*").alias("n_edges"))
     n_vertices = (
-        e.select(F.col("u").alias("x"))
-        .union(e.select(F.col("v").alias("x")))
+        e.select(F.col("a").alias("x"))
+        .union(e.select(F.col("b").alias("x")))
         .distinct()
         .agg(F.count("*").alias("n_vertices"))
     )
-    e1 = e.select(F.col("u").alias("a"), F.col("v").alias("b"))
-    e2 = e.select(F.col("u").alias("b2"), F.col("v").alias("c2"))
-    e3 = e.select(F.col("u").alias("a3"), F.col("v").alias("c3"))
+    e2 = e.select(F.col("a").alias("b2"), F.col("b").alias("c2"))
+    e3 = e.select(F.col("a").alias("a3"), F.col("b").alias("c3"))
     tri = (
-        e1.join(e2, F.col("b2") == F.col("b"))
+        e.join(e2, F.col("b2") == F.col("b"))
         .join(e3, (F.col("a3") == F.col("a")) & (F.col("c3") == F.col("c2")))
         .agg(F.count("*").alias("n_triangles"))
     )
@@ -343,14 +350,14 @@ def q_graph_shortest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     the previous distance frame exactly ONCE — see _sssp_round_sql for
     why single-reference is what keeps Spark's CTE-inlined unrolled
     plan linear rather than exponential in the round count. The
-    weighted edge list (plus self-loops) is localCheckpoint()ed once.
+    weighted edge list (plus self-loops) is pinned once.
     At 100 TB the relaxation join is edge-partitioned by src — the
     same shuffle key every round, like the pagerank contribution join
     — and the driver-loop + periodic-checkpoint spelling takes over
     when the round count is data-dependent (negative-cycle detection
     adds the standard n-th round check)."""
     nodes = t(spark, sf_dir, "nation").select(F.col("n_nationkey").alias("node"))
-    edges = (
+    edges = pin(
         _trade_base(spark, sf_dir)
         .groupBy(
             F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst")
@@ -363,8 +370,8 @@ def q_graph_shortest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(0).cast("bigint").alias("w"),
             )
         )
-        .coalesce(1)
-        .localCheckpoint(eager=True)
+        .coalesce(1),
+        "q_graph_shortest_path.edges",
     )
     ctes = [
         f"d0 AS (SELECT node, CAST(CASE WHEN node = 0 THEN 0 ELSE {_SSSP_INF} END AS BIGINT) AS dist FROM {{nodes}})"
@@ -476,7 +483,7 @@ def q_graph_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale THIS side broadcasts), one groupBy(node, label) count with
     map-side partials, one per-node argmax window partitioned by node
     (never global), one left join back. Labels-frame lineage is cut
-    per round at scale via the q_graph_pagerank localCheckpoint rule;
+    per round at scale by a pin, as in q_graph_pagerank;
     here the 3-round plan is unrolled whole so Catalyst sees one
     dataflow. Members emitted sorted + comma-joined (driver-sortable
     array convention)."""
@@ -504,15 +511,15 @@ def q_graph_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rn") <= _LPA_TOP)
         .select("src", "dst")
     )
-    edges = (
+    # pinned so the 4-table lane build runs once, not once per
+    # unrolled round
+    edges = pin(
         top.unionByName(
             top.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
         .distinct()
-        .coalesce(1)
-        # one checkpoint so the 4-table lane build runs once, not once
-        # per unrolled round (same rule as q_graph_pagerank)
-        .localCheckpoint(eager=True)
+        .coalesce(1),
+        "q_graph_label_prop.edges",
     )
     sql = (
         "WITH "
@@ -589,7 +596,7 @@ def q_graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the edge derivation is the shared 4-table broadcast-dim
     join (one pass over lineitem); the label frame is bounded by the
-    NATION DOMAIN (25 rows), localCheckpointed once. At real scale
+    NATION DOMAIN (25 rows), pinned once. At real scale
     (labels ≫ memory) the same relaxation runs as the driver-loop +
     periodic-checkpoint pattern with large-star/small-star halving —
     the round structure is identical, only the loop control moves.""".format(rounds=_CC_ROUNDS)
@@ -619,12 +626,12 @@ def q_graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     nodes = t(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("node")
     )
-    edges = (
+    edges = pin(
         base.union(base.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         .union(nodes.select(F.col("node").alias("src"), F.col("node").alias("dst")))
         .distinct()
-        .coalesce(1)
-        .localCheckpoint(eager=True)
+        .coalesce(1),
+        "q_graph_connected_components.edges",
     )
     labels = nodes.select("node", F.col("node").alias("lbl"))
     for _ in range(_CC_ROUNDS):
@@ -709,29 +716,14 @@ def q_graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     degrees are one tiny aggregate; the wedge join + closure join are
     hash equi-joins on oriented endpoints; per-node counts explode 3
     rows per triangle, never the fact table."""
-    base = _trade_base(spark, sf_dir)
-    und = (
-        base.filter(F.col("c_nationkey") != F.col("s_nationkey"))
-        .select(
-            F.least("c_nationkey", "s_nationkey").alias("a"),
-            F.greatest("c_nationkey", "s_nationkey").alias("b"),
-        )
-        .distinct()
-        # two consumers (degree census, orientation) — pay the
-        # 4-table edge derivation once (q_graph_triangles pattern)
-        .localCheckpoint(eager=True)
-    )
-    deg = (
-        und.select(F.col("a").alias("node"))
-        .unionAll(und.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").cast("bigint").alias("degree"))
-    )
+    und = _undirected_edges(spark, sf_dir)  # degree census + orientation
+    deg = _degrees(und)
     # degree orientation: direct each edge from lower (degree, id) to
     # higher (degree, id) — wedge fan-out bounded by O(sqrt(E))
     da = deg.select(F.col("node").alias("a"), F.col("degree").alias("dega"))
     db = deg.select(F.col("node").alias("b"), F.col("degree").alias("degb"))
-    oriented = (
+    # three consumers (both wedge legs + the closure side)
+    oriented = pin(
         und.join(F.broadcast(da), "a")
         .join(F.broadcast(db), "b")
         .select(
@@ -748,9 +740,8 @@ def q_graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .alias("e")
         )
-        .select("e.u", "e.v")
-        # three consumers (both wedge legs + the closure side)
-        .localCheckpoint(eager=True)
+        .select("e.u", "e.v"),
+        "q_graph_clustering_coeff.oriented",
     )
     w1 = oriented.select(F.col("u").alias("x"), F.col("v").alias("y"))
     w2 = oriented.select(F.col("u").alias("x"), F.col("v").alias("z"))
@@ -866,25 +857,8 @@ def q_graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     |V|-sized and BROADCAST onto the directed edge list twice — two
     map-side hash joins, one 1-row aggregate, no shuffle wider than
     the degree census itself."""
-    base = _trade_base(spark, sf_dir)
-    und = (
-        base.filter(F.col("c_nationkey") != F.col("s_nationkey"))
-        .select(
-            F.least("c_nationkey", "s_nationkey").alias("a"),
-            F.greatest("c_nationkey", "s_nationkey").alias("b"),
-        )
-        .distinct()
-        # two consumers (degree census, directed expansion): pay the
-        # 4-table edge derivation once (q_graph_clustering_coeff
-        # pattern)
-        .localCheckpoint(eager=True)
-    )
-    deg = (
-        und.select(F.col("a").alias("node"))
-        .unionAll(und.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").cast("bigint").alias("degree"))
-    )
+    und = _undirected_edges(spark, sf_dir)  # degree census + expansion
+    deg = _degrees(und)
     direct = und.select(F.col("a").alias("s"), F.col("b").alias("t")).unionAll(
         und.select(F.col("b").alias("s"), F.col("a").alias("t"))
     )
@@ -941,7 +915,7 @@ def _kcore_oracle() -> str:
     # twice — un-materialized, the 4-round unroll re-expands the
     # 4-table edge join exponentially and never finishes (measured:
     # blew the contract timeout; the Spark twin of this same hazard
-    # is the eager localCheckpoint per round)
+    # is the pin per round)
     parts = [
         f"""WITH pairs AS MATERIALIZED (
         SELECT c.c_nationkey AS src, s.s_nationkey AS dst,
@@ -1056,8 +1030,7 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     the edge list each round (two map-side hash semi-joins + one
     |V|-row degree census per round — no shuffle ever exceeds the
     node census); the 4-round unroll hands Catalyst ONE linear plan,
-    and a production run on a huge graph would localCheckpoint the
-    alive set per round exactly as q_graph_pagerank documents."""
+    with the alive set pinned per round."""
     base = _trade_base(spark, sf_dir)
     pairs = (
         base.filter(F.col("c_nationkey") != F.col("s_nationkey"))
@@ -1077,15 +1050,15 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rn") <= _KCORE_TOPM)
         .select("src", "dst")
     )
-    und = (
+    # consumed once per peeling round — pay the 4-table edge
+    # derivation once
+    und = pin(
         topm.select(
             F.least("src", "dst").alias("a"),
             F.greatest("src", "dst").alias("b"),
         )
-        .distinct()
-        # consumed once per peeling round — pay the 4-table edge
-        # derivation once (q_graph_clustering_coeff pattern)
-        .localCheckpoint(eager=True)
+        .distinct(),
+        "q_graph_kcore.und",
     )
     a0 = (
         und.select(F.col("a").alias("node"))
@@ -1094,17 +1067,12 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     alive = [a0]
     deg = None
-    for _ in range(_KCORE_ROUNDS):
+    for r in range(1, _KCORE_ROUNDS + 1):
         prev = alive[-1]
         ea = und.join(
             F.broadcast(prev.select(F.col("node").alias("a"))), "a"
         ).join(F.broadcast(prev.select(F.col("node").alias("b"))), "b")
-        deg = (
-            ea.select(F.col("a").alias("node"))
-            .unionAll(ea.select(F.col("b").alias("node")))
-            .groupBy("node")
-            .agg(F.count("*").cast("bigint").alias("degree"))
-        )
+        deg = _degrees(ea)
         # each alive set is consumed by the next round's two
         # semi-joins AND the final removed_round/conv/core_degree
         # consumers — without an eager pin the nested lazy plan
@@ -1112,9 +1080,10 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         # 4-round unroll blew past the contract timeout; 25-row pins
         # collapse it to one job per round)
         alive.append(
-            deg.filter(F.col("degree") >= _KCORE_K)
-            .select("node")
-            .localCheckpoint(eager=True)
+            pin(
+                deg.filter(F.col("degree") >= _KCORE_K).select("node"),
+                f"q_graph_kcore.alive{r}",
+            )
         )
     last, prior = alive[-1], alive[-2]
     conv = last.agg(F.count("*").alias("c_last")).crossJoin(
@@ -1195,16 +1164,16 @@ def q_graph_reciprocity(spark: SparkSession, sf_dir: str) -> DataFrame:
     census against its own projection — never the fact table; one
     1-row aggregate."""
     base = _trade_base(spark, sf_dir)
-    direct = (
+    # two consumers (probe side + reverse side): pay the 4-table
+    # edge derivation once
+    direct = pin(
         base.filter(F.col("c_nationkey") != F.col("s_nationkey"))
         .select(
             F.col("c_nationkey").alias("src"),
             F.col("s_nationkey").alias("dst"),
         )
-        .distinct()
-        # two consumers (probe side + reverse side): pay the 4-table
-        # edge derivation once (q_graph_clustering_coeff pattern)
-        .localCheckpoint(eager=True)
+        .distinct(),
+        "q_graph_reciprocity.direct",
     )
     rev = direct.select(
         F.col("dst").alias("src"), F.col("src").alias("dst"), F.lit(1).alias("has_rev")

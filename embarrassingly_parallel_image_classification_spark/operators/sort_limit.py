@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..localframe import pin
 from ..registry import register
 from ..sources.tables import t
 
@@ -264,10 +265,10 @@ def q_agg_equidepth(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = t(spark, sf_dir, "orders").select(
         F.expr("CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)").alias("cents"),
     ).withColumn("bkt", F.expr("cents DIV 100000"))
-    blocks = (
+    blocks = pin(
         c.groupBy("bkt")
-        .agg(F.count("*").alias("cnt"))
-        .localCheckpoint(eager=True)
+        .agg(F.count("*").alias("cnt")),
+        "q_agg_equidepth.blocks",
     )
     wb = Window.orderBy("bkt").rowsBetween(Window.unboundedPreceding, -1)
     cum = blocks.select(

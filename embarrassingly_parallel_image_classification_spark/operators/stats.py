@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..localframe import local_df
+from ..localframe import local_df, pin
 from ..registry import register
 from ..sources.tables import t
 
@@ -418,15 +418,14 @@ def q_ts_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # pinned: the capped last-W-per-user frame (≤ W rows/user) feeds
     # BOTH self-join sides — unpinned, each side re-paid the fact-wide
-    # rank window shuffle+sort (r12 pin-cost rule: expensive
-    # rederivation)
-    sel = (
+    # rank window shuffle+sort
+    sel = pin(
         e.select(
             "user_id", "event_id", "sec", "cents",
             F.row_number().over(wrn).alias("rn"),
         )
-        .filter(F.col("rn") <= THEIL_SEN_WINDOW)
-        .localCheckpoint(eager=True)
+        .filter(F.col("rn") <= THEIL_SEN_WINDOW),
+        "q_ts_theil_sen.sel",
     )
     a = sel.select(
         "user_id",
@@ -1057,9 +1056,12 @@ def q_stats_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
     # statistics are the SAME integer sums with each cell weighted by
     # its count c (Σ_rows rx·ry = Σ_cells c·rx·ry — exact BIGINT
     # regrouping, identical operand bits into the one float rho).
-    cells = x.groupBy("event_type", "v", "k").agg(
-        F.count("*").cast("bigint").alias("c")
-    ).localCheckpoint(eager=True)
+    cells = pin(
+        x.groupBy("event_type", "v", "k").agg(
+            F.count("*").cast("bigint").alias("c")
+        ),
+        "q_stats_spearman.cells",
+    )
 
     def midranks(col):
         c = cells.groupBy("event_type", col).agg(
@@ -1237,9 +1239,12 @@ def q_stats_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("v"),
         F.expr("CAST(from_json(props, 'k INT').k AS BIGINT)").alias("k"),
     )
-    cells = x.groupBy("g", "v", "k").agg(
-        F.count("*").cast("bigint").alias("c")
-    ).localCheckpoint(eager=True)
+    cells = pin(
+        x.groupBy("g", "v", "k").agg(
+            F.count("*").cast("bigint").alias("c")
+        ),
+        "q_stats_kendall.cells",
+    )
     # Every marginal below derives from the JOINT census, not from x
     # (round-12 optimization): the before-plan re-ran the fact scan +
     # JSON parse once per marginal (6 scans of events). Deriving from
@@ -1249,7 +1254,7 @@ def q_stats_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # reuse dedupes them (measured: all scans still ran). The eager
     # pin of the DOMAIN-BOUNDED census (|v-domain| x |k-domain| x 5
     # groups, never row count) is what actually makes the fact pass
-    # run once; the pin-cost rule applies (6 consumers). Values are
+    # run once (6 consumers). Values are
     # unchanged: vm/km sum the cell counts the marginal censuses
     # counted directly, and the distinct (g,v)/(g,k) domains are
     # exactly the marginal censuses' key sets.
@@ -1716,19 +1721,19 @@ def q_stats_sign_bh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pinned (segment, day) census — 310 rows at any SF; its two
     # consumers (per-segment totals + the sign join) each re-paid the
     # from_json fact parse unpinned (kendall rule)
-    daily = (
+    daily = pin(
         x.groupBy("g", "day")
         .agg(
             F.count("*").cast(D38).alias("nd"),
             F.sum("cents").cast(D38).alias("sd"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        "q_stats_sign_bh.daily",
     )
     gt = daily.groupBy("g").agg(
         F.sum("nd").alias("ng"), F.sum("sd").alias("sg")
     )
-    # explicit hint: the pinned census is RDD-backed (no size stats —
-    # the planner assumes huge and would sort-merge this 310x10 join)
+    # explicit hint (the broadcast corollary of localframe.pin): this
+    # 310x10 join would otherwise sort-merge
     d = daily.join(F.broadcast(gt), "g")
     signs = d.groupBy("g").agg(
         F.sum(
@@ -1803,6 +1808,39 @@ def q_stats_sign_bh(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("j").alias("bh_rank"),
         (F.col("j") <= F.col("jmax")).alias("bh_reject"),
     ).orderBy("g")
+
+
+def _kruskal_groups(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """(per_v, grp) shared by kruskal and dunn: the pooled value census
+    per_v (v, t) and per group g its size ng and sum s2 of DOUBLED
+    midranks r2 = 2*c_lt + t + 1. Both are marginals of one pinned joint
+    (group, value) census: ONE fact scan instead of three (round 12 —
+    the q_stats_kendall rule; dunn's before-plan held 7 fact scans)."""
+    x = t(spark, sf_dir, "events").select(
+        F.col("event_type").alias("g"),
+        F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)").alias("v"),
+    )
+    gv = pin(
+        x.groupBy("g", "v").agg(F.count("*").cast("bigint").alias("c")),
+        "kruskal.gv",
+    )
+    per_v = gv.groupBy("v").agg(F.sum("c").cast("bigint").alias("t"))
+    wv = Window.orderBy("v").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    rk = per_v.select(
+        "v",
+        (2 * (F.sum("t").over(wv) - F.col("t")) + F.col("t") + 1).alias("r2"),
+    )
+    grp = (
+        gv.join(rk, "v")
+        .groupBy("g")
+        .agg(
+            F.sum("c").cast(D38).alias("ng"),
+            F.sum(F.col("c") * F.col("r2")).cast(D38).alias("s2"),
+        )
+    )
+    return per_v, grp
 
 
 @register(
@@ -1892,37 +1930,7 @@ def q_stats_kruskal(spark: SparkSession, sf_dir: str) -> DataFrame:
     the (group, value) domain, one broadcast-joinable rank lookup,
     then arithmetic on a 5-row frame. Fact scanned twice at most
     (Catalyst often reuses the exchange); rows never windowed."""
-    x = t(spark, sf_dir, "events").select(
-        F.col("event_type").alias("g"),
-        F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)").alias("v"),
-    )
-    # pinned joint (group, value) census — the pooled value census
-    # (midranks + tie correction) is its marginal (the q_stats_dunn
-    # treatment): ONE fact scan instead of three
-    gv = (
-        x.groupBy("g", "v")
-        .agg(F.count("*").cast("bigint").alias("c"))
-        .localCheckpoint(eager=True)
-    )
-    per_v = gv.groupBy("v").agg(F.sum("c").cast("bigint").alias("t"))
-    wv = Window.orderBy("v").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    rk = per_v.select(
-        "v",
-        "t",
-        (
-            2 * (F.sum("t").over(wv) - F.col("t")) + F.col("t") + 1
-        ).alias("r2"),
-    )
-    grp = (
-        gv.join(rk.select("v", "r2"), "v")
-        .groupBy("g")
-        .agg(
-            F.sum("c").cast(D38).alias("ng"),
-            F.sum(F.col("c") * F.col("r2")).cast(D38).alias("s2"),
-        )
-    )
+    per_v, grp = _kruskal_groups(spark, sf_dir)
     gterm = grp.select(
         "ng",
         (
@@ -2620,9 +2628,12 @@ def q_stats_jonckheere(spark: SparkSession, sf_dir: str) -> DataFrame:
     # before-plan held 5 orders scans — vals/grps/tot each re-scanned),
     # and Catalyst's per-consumer subtree specialization defeats
     # exchange reuse. The census is domain-bounded (5 x |v-domain|).
-    gv = x.groupBy("g", "v").agg(
-        F.count("*").cast("bigint").alias("c")
-    ).localCheckpoint(eager=True)
+    gv = pin(
+        x.groupBy("g", "v").agg(
+            F.count("*").cast("bigint").alias("c")
+        ),
+        "q_stats_jonckheere.gv",
+    )
     vals = gv.select("v").distinct()
     grps = gv.select("g").distinct()
     grid = (
@@ -2696,6 +2707,84 @@ def q_stats_jonckheere(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 FRIEDMAN_K = 5  # event-type treatment domain; blocks = calendar days
+
+
+def _friedman_blocks(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The blocked frame the Friedman family (friedman, page_trend,
+    kendall_w, cronbach_alpha) shares: ``cell`` is the pinned (day d,
+    event type g) census of daily cent-sums v, ``complete`` the days
+    with all FRIEDMAN_K types observed. The <= 31xK census feeds every
+    downstream frame (complete-block filter, tie census, rank join);
+    unpinned, each consumer re-ran the fact scan (the q_stats_kendall
+    subtree-specialization finding)."""
+    cell = pin(
+        t(spark, sf_dir, "events")
+        .groupBy(
+            F.col("ts").cast("date").alias("d"),
+            F.col("event_type").alias("g"),
+        )
+        .agg(
+            F.sum(F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)"))
+            .cast("bigint")
+            .alias("v")
+        ),
+        "friedman.cell",
+    )
+    complete = (
+        cell.groupBy("d").agg(F.count("*").alias("kk"))
+        .filter(F.col("kk") == FRIEDMAN_K)
+        .select("d")
+    )
+    return cell, complete
+
+
+def _friedman_ranks(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(complete, s, byg) over the complete blocks: ``s`` carries each
+    cell's DOUBLED within-block midrank r2 = 2*c_lt + t + 1 (the
+    q_stats_kruskal tie identity, per block) by type g, ``byg`` the
+    per-type rank sums r2_sum."""
+    cell, complete = _friedman_blocks(spark, sf_dir)
+    c2 = cell.join(complete, "d")
+    tie = c2.groupBy("d", "v").agg(F.count("*").cast("bigint").alias("tcnt"))
+    wcum = (
+        Window.partitionBy("d")
+        .orderBy("v")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    rk = tie.select(
+        "d",
+        "v",
+        (
+            2 * (F.sum("tcnt").over(wcum) - F.col("tcnt"))
+            + F.col("tcnt")
+            + 1
+        ).alias("r2"),
+    )
+    s = c2.join(rk, ["d", "v"]).select("g", "r2")
+    byg = s.groupBy("g").agg(F.sum("r2").cast("bigint").alias("r2_sum"))
+    return complete, s, byg
+
+
+def _friedman_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """1-row (n, a2, devsq): block count, sum of squared doubled ranks
+    and sum_j (R2_j - n(k+1))^2 — the integer parts of the
+    tie-corrected Friedman Q that friedman and kendall_w report."""
+    complete, s, byg = _friedman_ranks(spark, sf_dir)
+    tot = s.agg(
+        F.sum(F.col("r2") * F.col("r2")).cast("bigint").alias("a2")
+    ).crossJoin(complete.agg(F.count("*").cast("bigint").alias("n")))
+    return byg.crossJoin(F.broadcast(tot)).agg(
+        F.first("n").alias("n"),
+        F.first("a2").alias("a2"),
+        F.sum(
+            (F.col("r2_sum") - F.col("n") * F.lit(FRIEDMAN_K + 1))
+            * (F.col("r2_sum") - F.col("n") * F.lit(FRIEDMAN_K + 1))
+        )
+        .cast("bigint")
+        .alias("devsq"),
+    )
 
 
 @register(
@@ -2780,59 +2869,7 @@ def q_stats_friedman(spark: SparkSession, sf_dir: str) -> DataFrame:
     after is windows and folds over a <= 31x5 frame — block count
     grows with the CALENDAR, not the row count, so a 100x scale-up
     changes only the census sums."""
-    cell = (
-        t(spark, sf_dir, "events")
-        .groupBy(
-            F.col("ts").cast("date").alias("d"),
-            F.col("event_type").alias("g"),
-        )
-        .agg(
-            F.sum(F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)"))
-            .cast("bigint")
-            .alias("v")
-        )
-        # pinned (round 12): the <= 31xK day-census feeds every
-        # downstream frame (complete-block filter, tie census, rank
-        # join) — unpinned, each consumer re-ran the fact scan (the
-        # q_stats_kendall subtree-specialization finding)
-        .localCheckpoint(eager=True)
-    )
-    complete = (
-        cell.groupBy("d").agg(F.count("*").alias("kk"))
-        .filter(F.col("kk") == FRIEDMAN_K)
-        .select("d")
-    )
-    c2 = cell.join(complete, "d")
-    tie = c2.groupBy("d", "v").agg(F.count("*").cast("bigint").alias("tcnt"))
-    wcum = (
-        Window.partitionBy("d")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    rk = tie.select(
-        "d",
-        "v",
-        (
-            2 * (F.sum("tcnt").over(wcum) - F.col("tcnt"))
-            + F.col("tcnt")
-            + 1
-        ).alias("r2"),
-    )
-    s = c2.join(rk, ["d", "v"]).select("g", "r2")
-    byg = s.groupBy("g").agg(F.sum("r2").cast("bigint").alias("r2_sum"))
-    tot = s.agg(
-        F.sum(F.col("r2") * F.col("r2")).cast("bigint").alias("a2")
-    ).crossJoin(complete.agg(F.count("*").cast("bigint").alias("n")))
-    q = byg.crossJoin(F.broadcast(tot)).agg(
-        F.first("n").alias("n"),
-        F.first("a2").alias("a2"),
-        F.sum(
-            (F.col("r2_sum") - F.col("n") * F.lit(FRIEDMAN_K + 1))
-            * (F.col("r2_sum") - F.col("n") * F.lit(FRIEDMAN_K + 1))
-        )
-        .cast("bigint")
-        .alias("devsq"),
-    )
+    q = _friedman_q(spark, sf_dir)
     kk1sq = FRIEDMAN_K * (FRIEDMAN_K + 1) ** 2
     num = F.lit(FRIEDMAN_K - 1) * F.col("devsq")
     den = F.col("a2") - F.col("n") * F.lit(kk1sq)
@@ -2956,9 +2993,12 @@ def q_ts_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (15 scans in the before-plan; the docstring's "one fact scan"
     # only became true with the pin, since Catalyst specializes each
     # subtree copy — the q_stats_kendall finding).
-    idx = day.select(
-        F.row_number().over(Window.orderBy("d")).alias("i"), "x"
-    ).localCheckpoint(eager=True)
+    idx = pin(
+        day.select(
+            F.row_number().over(Window.orderBy("d")).alias("i"), "x"
+        ),
+        "q_ts_ljung_box.idx",
+    )
     tot = idx.agg(
         F.count("*").cast("bigint").alias("n"),
         F.sum("x").cast("bigint").alias("s"),
@@ -3438,32 +3478,7 @@ def q_stats_dunn(spark: SparkSession, sf_dir: str) -> DataFrame:
     domain) reused verbatim, then a 5x5 upper-triangle self-join of
     the 5-row group frame — 10 output rows, all arithmetic
     domain-bounded."""
-    x = t(spark, sf_dir, "events").select(
-        F.col("event_type").alias("g"),
-        F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)").alias("v"),
-    )
-    # One pinned joint census; the pooled value census is its marginal
-    # (round 12 — the q_stats_kendall rule; before-plan: 7 fact scans).
-    gv = x.groupBy("g", "v").agg(
-        F.count("*").cast("bigint").alias("c")
-    ).localCheckpoint(eager=True)
-    per_v = gv.groupBy("v").agg(F.sum("c").cast("bigint").alias("t"))
-    wc = Window.orderBy("v").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    rk = per_v.select(
-        "v",
-        "t",
-        (2 * (F.sum("t").over(wc) - F.col("t")) + F.col("t") + 1).alias("r2"),
-    )
-    grp = (
-        gv.join(rk, "v")
-        .groupBy("g")
-        .agg(
-            F.sum("c").cast(D38).alias("ng"),
-            F.sum(F.col("c") * F.col("r2")).cast(D38).alias("s2"),
-        )
-    )
+    per_v, grp = _kruskal_groups(spark, sf_dir)
     tot = grp.agg(F.sum("ng").cast(D38).alias("n")).crossJoin(
         per_v.agg(
             F.sum(
@@ -3523,6 +3538,25 @@ def q_stats_dunn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Studentized-range critical q(0.05; k=5, df=inf) = 3.858, squared e4.
 TUKEY_Q2_E4 = 148_842
+
+
+def _group_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Pinned 5-row (g, n, s, q) census — per event type the count, cent
+    sum and cent square sum in DECIMAL(38,0) — shared by tukey and
+    games_howell. Every downstream marginal / self-join side reads it;
+    unpinned, each consumer re-paid the fact scan."""
+    x = t(spark, sf_dir, "events").select(
+        F.col("event_type").alias("g"),
+        F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)").alias("cents"),
+    )
+    return pin(
+        x.groupBy("g").agg(
+            F.count("*").cast(D38).alias("n"),
+            F.sum("cents").cast(D38).alias("s"),
+            F.sum(F.col("cents") * F.col("cents")).cast(D38).alias("q"),
+        ),
+        "group_moments",
+    )
 
 
 @register(
@@ -3599,21 +3633,7 @@ def q_stats_tukey(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: ONE map-side-combined census to 5 rows, a 10-row
     upper-triangle self-join, a 1-row scalar cross — identical scale
     shape to q_stats_dunn: the fact table is scanned once."""
-    x = t(spark, sf_dir, "events").select(
-        F.col("event_type").alias("g"),
-        F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)").alias("cents"),
-    )
-    # pinned 5-row group census: every downstream marginal / self-join
-    # side shares it — unpinned, each consumer re-paid the fact scan
-    grp = (
-        x.groupBy("g")
-        .agg(
-            F.count("*").cast(D38).alias("n"),
-            F.sum("cents").cast(D38).alias("s"),
-            F.sum(F.col("cents") * F.col("cents")).cast(D38).alias("q"),
-        )
-        .localCheckpoint(eager=True)
-    )
+    grp = _group_moments(spark, sf_dir)
     s2 = F.col("s") * F.col("s")
     gterm = grp.select(
         "g",
@@ -3768,21 +3788,7 @@ def q_stats_games_howell(spark: SparkSession, sf_dir: str) -> DataFrame:
     upper-triangle self-join — no pooled total is even needed (unlike
     Tukey there is no MSW scalar), so the fact table is scanned once
     and the plan is two exchanges end-to-end."""
-    x = t(spark, sf_dir, "events").select(
-        F.col("event_type").alias("g"),
-        F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)").alias("cents"),
-    )
-    # pinned 5-row group census: every downstream marginal / self-join
-    # side shares it — unpinned, each consumer re-paid the fact scan
-    grp = (
-        x.groupBy("g")
-        .agg(
-            F.count("*").cast(D38).alias("n"),
-            F.sum("cents").cast(D38).alias("s"),
-            F.sum(F.col("cents") * F.col("cents")).cast(D38).alias("q"),
-        )
-        .localCheckpoint(eager=True)
-    )
+    grp = _group_moments(spark, sf_dir)
     gterm = grp.select(
         "g",
         "n",
@@ -3847,6 +3853,21 @@ def q_stats_games_howell(spark: SparkSession, sf_dir: str) -> DataFrame:
             * F.col("nb")
         ).alias("significant"),
     ).orderBy("g_a", "g_b")
+
+
+def _type_day_sums(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(g, d, v): per event type and calendar day the cent-sum — the
+    calendar-bounded series both Mann-Kendall queries pin."""
+    return (
+        t(spark, sf_dir, "events")
+        .select(
+            F.col("event_type").alias("g"),
+            F.col("ts").cast("date").alias("d"),
+            F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)").alias("cents"),
+        )
+        .groupBy("g", "d")
+        .agg(F.sum("cents").cast("bigint").alias("v"))
+    )
 
 
 @register(
@@ -3923,20 +3944,10 @@ def q_stats_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiny frame (~n^2/2 = 435 pairs per series); the q_ts_theil_sen /
     q_stats_kendall domain-bounding discipline. 100x more events
     changes the daily sums, never the pair count."""
-    daily = (
-        t(spark, sf_dir, "events")
-        .select(
-            F.col("event_type").alias("g"),
-            F.col("ts").cast("date").alias("d"),
-            F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)").alias("cents"),
-        )
-        .groupBy("g", "d")
-        .agg(F.sum("cents").cast("bigint").alias("v"))
-        # pinned (round 12): the calendar-bounded census feeds the
-        # pair self-join's two sides, the day count and the tie census
-        # — unpinned, 4 fact scans (q_stats_kendall finding)
-        .localCheckpoint(eager=True)
-    )
+    # pinned (round 12): the calendar-bounded census feeds the
+    # pair self-join's two sides, the day count and the tie census
+    # — unpinned, 4 fact scans (q_stats_kendall finding)
+    daily = pin(_type_day_sums(spark, sf_dir), "q_stats_mann_kendall.daily")
     a = daily.select("g", F.col("d").alias("d_a"), F.col("v").alias("v_a"))
     b = daily.select(
         F.col("g").alias("g_b"), F.col("d").alias("d_b"),
@@ -5183,46 +5194,7 @@ def q_stats_page_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan at 100 TB: identical to Friedman — one (day, type) census
     off a single fact scan, windows over a <=31x5 frame; scale
     changes only the census sums, never the frame."""
-    cell = (
-        t(spark, sf_dir, "events")
-        .groupBy(
-            F.col("ts").cast("date").alias("d"),
-            F.col("event_type").alias("g"),
-        )
-        .agg(
-            F.sum(F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)"))
-            .cast("bigint")
-            .alias("v")
-        )
-        # pinned (round 12): the <= 31xK day-census feeds every
-        # downstream frame (complete-block filter, tie census, rank
-        # join) — unpinned, each consumer re-ran the fact scan (the
-        # q_stats_kendall subtree-specialization finding)
-        .localCheckpoint(eager=True)
-    )
-    complete = (
-        cell.groupBy("d").agg(F.count("*").alias("kk"))
-        .filter(F.col("kk") == FRIEDMAN_K)
-        .select("d")
-    )
-    c2 = cell.join(complete, "d")
-    tie = c2.groupBy("d", "v").agg(F.count("*").cast("bigint").alias("tcnt"))
-    wcum = (
-        Window.partitionBy("d")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    rk = tie.select(
-        "d",
-        "v",
-        (
-            2 * (F.sum("tcnt").over(wcum) - F.col("tcnt"))
-            + F.col("tcnt")
-            + 1
-        ).alias("r2"),
-    )
-    s = c2.join(rk, ["d", "v"]).select("g", "r2")
-    byg = s.groupBy("g").agg(F.sum("r2").cast("bigint").alias("r2_sum"))
+    complete, _, byg = _friedman_ranks(spark, sf_dir)
     scored = byg.select(
         "g",
         "r2_sum",
@@ -5347,16 +5319,11 @@ def q_stats_seasonal_mk(spark: SparkSession, sf_dir: str) -> DataFrame:
     7 * (n/7 choose 2) ~ n^2/14) — one (type, day) census, one tiny
     self-join, three small aggregates; 100x more events changes the
     daily sums, never the pair count."""
-    daily = (
-        t(spark, sf_dir, "events")
-        .select(
-            F.col("event_type").alias("g"),
-            F.col("ts").cast("date").alias("d"),
-            F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)").alias("cents"),
-        )
-        .groupBy("g", "d")
-        .agg(F.sum("cents").cast("bigint").alias("v"))
-        .select(
+    # pinned (round 12): calendar-bounded census, multiple
+    # consumers (pair join sides, counts, ties) — see
+    # q_stats_mann_kendall
+    daily = pin(
+        _type_day_sums(spark, sf_dir).select(
             "g",
             "d",
             "v",
@@ -5366,11 +5333,8 @@ def q_stats_seasonal_mk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).cast("bigint")
                 % 7
             ).alias("season"),
-        )
-        # pinned (round 12): calendar-bounded census, multiple
-        # consumers (pair join sides, counts, ties) — see
-        # q_stats_mann_kendall
-        .localCheckpoint(eager=True)
+        ),
+        "q_stats_seasonal_mk.daily",
     )
     a = daily.select(
         "g", "season", F.col("d").alias("d_a"), F.col("v").alias("v_a")
@@ -5724,59 +5688,7 @@ def q_stats_kendall_w(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan at 100 TB: identical to Friedman — one (day, type) census
     off a single fact scan, windows over a <= 31x5 frame; block
     count grows with the CALENDAR, not the row count."""
-    cell = (
-        t(spark, sf_dir, "events")
-        .groupBy(
-            F.col("ts").cast("date").alias("d"),
-            F.col("event_type").alias("g"),
-        )
-        .agg(
-            F.sum(F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)"))
-            .cast("bigint")
-            .alias("v")
-        )
-        # pinned (round 12): the <= 31xK day-census feeds every
-        # downstream frame (complete-block filter, tie census, rank
-        # join) — unpinned, each consumer re-ran the fact scan (the
-        # q_stats_kendall subtree-specialization finding)
-        .localCheckpoint(eager=True)
-    )
-    complete = (
-        cell.groupBy("d").agg(F.count("*").alias("kk"))
-        .filter(F.col("kk") == FRIEDMAN_K)
-        .select("d")
-    )
-    c2 = cell.join(complete, "d")
-    tie = c2.groupBy("d", "v").agg(F.count("*").cast("bigint").alias("tcnt"))
-    wcum = (
-        Window.partitionBy("d")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    rk = tie.select(
-        "d",
-        "v",
-        (
-            2 * (F.sum("tcnt").over(wcum) - F.col("tcnt"))
-            + F.col("tcnt")
-            + 1
-        ).alias("r2"),
-    )
-    s = c2.join(rk, ["d", "v"]).select("g", "r2")
-    byg = s.groupBy("g").agg(F.sum("r2").cast("bigint").alias("r2_sum"))
-    tot = s.agg(
-        F.sum(F.col("r2") * F.col("r2")).cast("bigint").alias("a2")
-    ).crossJoin(complete.agg(F.count("*").cast("bigint").alias("n")))
-    q = byg.crossJoin(F.broadcast(tot)).agg(
-        F.first("n").alias("n"),
-        F.first("a2").alias("a2"),
-        F.sum(
-            (F.col("r2_sum") - F.col("n") * F.lit(FRIEDMAN_K + 1))
-            * (F.col("r2_sum") - F.col("n") * F.lit(FRIEDMAN_K + 1))
-        )
-        .cast("bigint")
-        .alias("devsq"),
-    )
+    q = _friedman_q(spark, sf_dir)
     kk1sq = FRIEDMAN_K * (FRIEDMAN_K + 1) ** 2
     fin = q.select(
         "n",
@@ -5890,7 +5802,8 @@ def q_stats_cohen_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     conf = rated.groupBy("ra", "rb").agg(
         F.count("*").cast(D38).alias("cnt")
     )
-    conf = conf.localCheckpoint(eager=True)  # 3 consumers
+    # 3 consumers
+    conf = pin(conf, "q_stats_cohen_kappa.conf")
     tot = conf.agg(
         F.sum("cnt").cast(D38).alias("n"),
         F.sum(F.when(F.col("ra") == F.col("rb"), F.col("cnt")).otherwise(0))
@@ -5998,29 +5911,9 @@ def q_stats_cronbach_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
     census off a single fact scan, two tiny variance folds over the
     <= 31x5 frame, a scalar cross; 100x the data changes the census
     sums only."""
-    cell = (
-        t(spark, sf_dir, "events")
-        .groupBy(
-            F.col("ts").cast("date").alias("d"),
-            F.col("event_type").alias("g"),
-        )
-        .agg(
-            F.sum(F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)"))
-            .cast("bigint")
-            .alias("v")
-        )
-        # pinned (round 12): the <= 31xK day-census feeds every
-        # downstream frame (complete-block filter, tie census, rank
-        # join) — unpinned, each consumer re-ran the fact scan (the
-        # q_stats_kendall subtree-specialization finding)
-        .localCheckpoint(eager=True)
-    )
-    complete = (
-        cell.groupBy("d").agg(F.count("*").alias("kk"))
-        .filter(F.col("kk") == FRIEDMAN_K)
-        .select("d")
-    )
-    c2 = cell.join(complete, "d").localCheckpoint(eager=True)  # 3 consumers
+    cell, complete = _friedman_blocks(spark, sf_dir)
+    # 3 consumers
+    c2 = pin(cell.join(complete, "d"), "q_stats_cronbach_alpha.c2")
     nn = complete.agg(F.count("*").cast(D38).alias("n"))
     per_item = (
         c2.groupBy("g")
@@ -6801,9 +6694,13 @@ def q_stats_durbin_watson(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     wseq = Window.partitionBy("g").orderBy("d")
-    seq = daily.select(
-        "g", "y", F.row_number().over(wseq).cast("bigint").alias("tt")
-    ).localCheckpoint(eager=True)  # two consumers: fit + residual join
+    # two consumers: fit + residual join
+    seq = pin(
+        daily.select(
+            "g", "y", F.row_number().over(wseq).cast("bigint").alias("tt")
+        ),
+        "q_stats_durbin_watson.seq",
+    )
     fit = seq.groupBy("g").agg(
         F.count("*").cast(D38).alias("n"),
         (

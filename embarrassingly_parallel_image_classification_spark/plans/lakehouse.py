@@ -39,7 +39,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..localframe import local_df
+from ..localframe import local_df, pin
 from ..registry import register
 from ..sources.tables import t
 
@@ -1575,7 +1575,7 @@ def q_lake_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # v1: first half materializes the view the expensive way (full agg)
     snapshot_write(orders.filter(F.col("o_orderkey") % 2 == 0), path, "append")
-    view = agg_of(snapshot_read(spark, path, 1)).localCheckpoint(eager=True)
+    view = pin(agg_of(snapshot_read(spark, path, 1)), "q_lake_incremental_agg.view")
     # v2: append the delta; refresh = old view ⊕ agg(delta files only)
     snapshot_write(orders.filter(F.col("o_orderkey") % 2 == 1), path, "append")
     with open(_manifest_path(path, 1)) as f:
@@ -2816,7 +2816,7 @@ def q_lake_ivm_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     snapshot_write(orders.filter(half == 0), path, "append")
-    view = sketch_of(snapshot_read(spark, path, 1)).localCheckpoint(eager=True)
+    view = pin(sketch_of(snapshot_read(spark, path, 1)), "q_lake_ivm_distinct.view")
     snapshot_write(orders.filter(half == 1), path, "append")
     with open(_manifest_path(path, 1)) as f:
         v1_files = set(json.load(f)["files"])
@@ -3703,8 +3703,9 @@ def q_lake_incremental_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshot_write(cust.filter(F.col("c_custkey") % 3 != 0), cpath, "append")
     o1 = snapshot_read(spark, opath, 1)
     c1 = snapshot_read(spark, cpath, 1)
-    view = agg_of(o1.join(c1, o1.o_custkey == c1.c_custkey)).localCheckpoint(
-        eager=True
+    view = pin(
+        agg_of(o1.join(c1, o1.o_custkey == c1.c_custkey)),
+        "q_lake_incremental_join.view",
     )
     # v2 of both: the remaining halves append
     snapshot_write(orders.filter(F.col("o_orderkey") % 2 == 1), opath, "append")
@@ -3978,7 +3979,8 @@ def q_lake_branch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("bigint").alias("n"),
         F.sum("cents").cast("bigint").alias("cents"),
     ).select(F.lit("main_pre").alias("side"), "n", "cents")
-    pre = pre.localCheckpoint(eager=True)  # pin BEFORE the merge mutates main
+    # pin BEFORE the merge mutates main
+    pre = pin(pre, "q_lake_branch_merge.pre")
     merge_branch_ff(path, "etl")
     post = snapshot_read_mor(spark, path).agg(
         F.count("*").cast("bigint").alias("n"),

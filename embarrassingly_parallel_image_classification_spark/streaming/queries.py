@@ -15,6 +15,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..localframe import pin
 from ..registry import register
 from ..sources.tables import t
 from .core import events_stream, run_to_memory
@@ -258,6 +259,43 @@ def q_stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _purchase_click_join(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
+    """The stream–stream join every q_stream_*_join mode shares: the
+    watermarked purchase stream (p_id, user_id, pts) joined ``how`` to
+    the watermarked click stream (c_id, c_user_id, cts) on the same
+    user's clicks in the hour up to the purchase. Event times are
+    second-truncated on both sides (Spark µs vs DuckDB ns, SURVEY §7
+    risk 1), and the range condition uses the truncated timestamps so
+    boundary pairs agree across engines."""
+    purchases = (
+        events_stream(spark, sf_dir)
+        .filter(F.col("event_type") == "purchase")
+        .select(
+            F.col("event_id").alias("p_id"),
+            "user_id",
+            F.date_trunc("second", "ts").alias("pts"),
+        )
+        .withWatermark("pts", "10 minutes")
+    )
+    clicks = (
+        events_stream(spark, sf_dir)
+        .filter(F.col("event_type") == "click")
+        .select(
+            F.col("event_id").alias("c_id"),
+            F.col("user_id").alias("c_user_id"),
+            F.date_trunc("second", "ts").alias("cts"),
+        )
+        .withWatermark("cts", "10 minutes")
+    )
+    return purchases.join(
+        clicks,
+        (F.col("c_user_id") == F.col("user_id"))
+        & (F.col("cts") >= F.col("pts") - F.expr("INTERVAL 1 HOUR"))
+        & (F.col("cts") <= F.col("pts")),
+        how,
+    )
+
+
 @register(
     "q_stream_stream_join",
     oracle="""
@@ -279,38 +317,10 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the time-range predicate bound the join state (clicks older than
     the range + watermark are evicted) — the canonical two-stream
     enrichment; with availableNow the emitted pairs must equal the
-    batch theta-join (oracle).
-
-    Second-truncated event times on both sides (Spark µs vs DuckDB ns,
-    SURVEY §7 risk 1); the range condition uses the truncated
-    timestamps so boundary pairs agree across engines."""
-    purchases = (
-        events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("p_id"),
-            "user_id",
-            F.date_trunc("second", "ts").alias("pts"),
-        )
-        .withWatermark("pts", "10 minutes")
+    batch theta-join (oracle)."""
+    joined = _purchase_click_join(spark, sf_dir, "inner").select(
+        "p_id", "c_id", "user_id", F.unix_timestamp("pts").alias("purchase_sec")
     )
-    clicks = (
-        events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("c_id"),
-            F.col("user_id").alias("c_user_id"),
-            F.date_trunc("second", "ts").alias("cts"),
-        )
-        .withWatermark("cts", "10 minutes")
-    )
-    joined = purchases.join(
-        clicks,
-        (F.col("c_user_id") == F.col("user_id"))
-        & (F.col("cts") >= F.col("pts") - F.expr("INTERVAL 1 HOUR"))
-        & (F.col("cts") <= F.col("pts")),
-        "inner",
-    ).select("p_id", "c_id", "user_id", F.unix_timestamp("pts").alias("purchase_sec"))
     return run_to_memory(joined, "append")
 
 
@@ -398,33 +408,9 @@ def q_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     unmatched emit), so the driver check pins the eviction semantics,
     not just the join. State stays bounded: clicks older than
     range+delay are evicted every microbatch."""
-    purchases = (
-        events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("p_id"),
-            "user_id",
-            F.date_trunc("second", "ts").alias("pts"),
-        )
-        .withWatermark("pts", "10 minutes")
+    joined = _purchase_click_join(spark, sf_dir, "leftOuter").select(
+        "p_id", "c_id", "user_id", F.unix_timestamp("pts").alias("purchase_sec")
     )
-    clicks = (
-        events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("c_id"),
-            F.col("user_id").alias("c_user_id"),
-            F.date_trunc("second", "ts").alias("cts"),
-        )
-        .withWatermark("cts", "10 minutes")
-    )
-    joined = purchases.join(
-        clicks,
-        (F.col("c_user_id") == F.col("user_id"))
-        & (F.col("cts") >= F.col("pts") - F.expr("INTERVAL 1 HOUR"))
-        & (F.col("cts") <= F.col("pts")),
-        "leftOuter",
-    ).select("p_id", "c_id", "user_id", F.unix_timestamp("pts").alias("purchase_sec"))
     return run_to_memory(joined, "append")
 
 
@@ -460,32 +446,9 @@ def q_stream_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: same two-sided keyed state as the other modes, but the
     left side can DROP a row's state at first match (emit-once) —
     strictly smaller state than the outer forms."""
-    purchases = (
-        events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("p_id"),
-            "user_id",
-            F.date_trunc("second", "ts").alias("pts"),
-        )
-        .withWatermark("pts", "10 minutes")
+    joined = _purchase_click_join(spark, sf_dir, "leftSemi").select(
+        "p_id", "user_id", F.unix_timestamp("pts").alias("purchase_sec")
     )
-    clicks = (
-        events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user_id"),
-            F.date_trunc("second", "ts").alias("cts"),
-        )
-        .withWatermark("cts", "10 minutes")
-    )
-    joined = purchases.join(
-        clicks,
-        (F.col("c_user_id") == F.col("user_id"))
-        & (F.col("cts") >= F.col("pts") - F.expr("INTERVAL 1 HOUR"))
-        & (F.col("cts") <= F.col("pts")),
-        "leftSemi",
-    ).select("p_id", "user_id", F.unix_timestamp("pts").alias("purchase_sec"))
     return run_to_memory(joined, "append")
 
 
@@ -539,33 +502,7 @@ def q_stream_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     side keyed by user, rows evicted as the state watermark passes;
     full-outer adds no extra state, only the emit-on-evict path for
     both sides."""
-    purchases = (
-        events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("p_id"),
-            "user_id",
-            F.date_trunc("second", "ts").alias("pts"),
-        )
-        .withWatermark("pts", "10 minutes")
-    )
-    clicks = (
-        events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("c_id"),
-            F.col("user_id").alias("c_user_id"),
-            F.date_trunc("second", "ts").alias("cts"),
-        )
-        .withWatermark("cts", "10 minutes")
-    )
-    joined = purchases.join(
-        clicks,
-        (F.col("c_user_id") == F.col("user_id"))
-        & (F.col("cts") >= F.col("pts") - F.expr("INTERVAL 1 HOUR"))
-        & (F.col("cts") <= F.col("pts")),
-        "fullOuter",
-    ).select(
+    joined = _purchase_click_join(spark, sf_dir, "fullOuter").select(
         "p_id",
         "c_id",
         F.coalesce("user_id", "c_user_id").alias("user_id"),
@@ -615,33 +552,7 @@ def q_stream_right_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: state shape identical to the other modes — both sides keyed
     by user, rows evicted as the state watermark passes; right-outer
     adds only the emit-on-evict path for the click side."""
-    purchases = (
-        events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("p_id"),
-            "user_id",
-            F.date_trunc("second", "ts").alias("pts"),
-        )
-        .withWatermark("pts", "10 minutes")
-    )
-    clicks = (
-        events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("c_id"),
-            F.col("user_id").alias("c_user_id"),
-            F.date_trunc("second", "ts").alias("cts"),
-        )
-        .withWatermark("cts", "10 minutes")
-    )
-    joined = purchases.join(
-        clicks,
-        (F.col("c_user_id") == F.col("user_id"))
-        & (F.col("cts") >= F.col("pts") - F.expr("INTERVAL 1 HOUR"))
-        & (F.col("cts") <= F.col("pts")),
-        "rightOuter",
-    ).select(
+    joined = _purchase_click_join(spark, sf_dir, "rightOuter").select(
         "p_id",
         "c_id",
         F.col("c_user_id").alias("user_id"),
@@ -1033,13 +944,16 @@ def q_stream_bitmap_audience(spark: SparkSession, sf_dir: str) -> DataFrame:
     words_stream = ev.groupBy("event_type", "widx").agg(
         F.expr("bit_or(bit)").alias("word")
     )
-    # localCheckpoint re-materializes the drained sink with FRESH
+    # the pin re-materializes the drained sink with FRESH
     # attribute ids: self-joining a memory-sink view directly trips a
     # Spark resolver internal error ("conflicting attributes" — the
-    # same bug q_stream_topk works around with max_by); the checkpoint
+    # same bug q_stream_topk works around with max_by); the pin
     # also snapshots the words so both join sides read one immutable
     # frame
-    words = run_to_memory(words_stream, "complete").localCheckpoint(eager=True)
+    words = pin(
+        run_to_memory(words_stream, "complete"),
+        "q_stream_bitmap_audience.words",
+    )
     from ..operators.analytics import bitmap_overlap
 
     return bitmap_overlap(words)
@@ -1094,7 +1008,7 @@ def q_stream_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("is_ref").cast("bigint").alias("ref_n"),
         F.sum(1 - F.col("is_ref")).cast("bigint").alias("cur_n"),
     )
-    agg = run_to_memory(counts_stream, "complete").localCheckpoint(eager=True)
+    agg = pin(run_to_memory(counts_stream, "complete"), "q_stream_drift.agg")
     # the drift algebra is the SHARED tail — one definition with the
     # batch twin (ml/cleaning.py drift_report), per r7 verdict item 8
     from ..ml.cleaning import drift_report

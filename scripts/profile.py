@@ -213,8 +213,9 @@ def time_queries(a) -> None:
     """Warm pass, then min over --passes interleaved passes of build_s
     (until the DataFrame is returned) and total_s (build + noop sink),
     plus per pass the jobs of the query's job group, their summed wall
-    time, and the driver gap total_s - job wall. The last stdout line
-    is the JSON record. Job times come from the status store, which
+    time, the driver gap total_s - job wall, and the jobs launched by
+    localframe.pin (description "pin:<label>") with their wall time.
+    The last stdout line is the JSON record. Job times come from the status store, which
     keeps the last spark.ui.retainedJobs (1000) jobs."""
     from embarrassingly_parallel_image_classification_spark import registry
 
@@ -250,27 +251,40 @@ def time_queries(a) -> None:
         if n in errors:
             continue
         jobs = sc.statusTracker().getJobIdsForGroup(n)
-        wall = 0.0
+        wall = pin_wall = 0.0
+        pins = 0
         for j in jobs:
             jd = store.job(j)
+            dt = 0.0
             if jd.submissionTime().isDefined() and jd.completionTime().isDefined():
-                wall += (
+                dt = (
                     jd.completionTime().get().getTime()
                     - jd.submissionTime().get().getTime()
                 ) / 1000
+            wall += dt
+            desc = jd.description()
+            if desc.isDefined() and desc.get().startswith("pin:"):
+                pins += 1
+                pin_wall += dt
         out[n] = {
             "total_s": round(t, 3),
             "build_s": round(b, 3),
             "jobs": round(len(jobs) / a.passes, 1),
             "job_wall_s": round(wall / a.passes, 3),
             "gap_s": round(t - wall / a.passes, 3),
+            "pins": round(pins / a.passes, 1),
+            "pin_s": round(pin_wall / a.passes, 3),
         }
     print(f"loadavg={os.getloadavg()}")
-    print(f"{'total_s':>8s} {'build_s':>8s} {'jobs':>6s} {'job_wall':>8s} {'gap':>7s}  query")
+    print(
+        f"{'total_s':>8s} {'build_s':>8s} {'jobs':>6s} {'job_wall':>8s} "
+        f"{'gap':>7s} {'pins':>5s} {'pin_s':>7s}  query"
+    )
     for n, r in out.items():
         print(
             f"{r['total_s']:8.3f} {r['build_s']:8.3f} {r['jobs']:6.1f} "
-            f"{r['job_wall_s']:8.3f} {r['gap_s']:7.3f}  {n}"
+            f"{r['job_wall_s']:8.3f} {r['gap_s']:7.3f} {r['pins']:5.1f} "
+            f"{r['pin_s']:7.3f}  {n}"
         )
     print(json.dumps({"sf_dir": sf, "passes": a.passes, "queries": out, "errors": errors}))
 

@@ -121,3 +121,70 @@ def test_local_df_unrenderable_falls_back(spark):
     rows = [(date(2024, 1, 2), 1)]
     got = local_df(spark, rows, "d DATE, i BIGINT").collect()
     assert got[0].d == date(2024, 1, 2) and got[0].i == 1
+
+
+_DESC = "spark.job.description"
+
+
+def _group_jobs(sc, group: str, before: set, timeout_s: float = 10.0) -> list:
+    """Jobs of `group` not in `before`, waiting for the asynchronous
+    listener bus to register them in the status store."""
+    import time
+
+    deadline = time.monotonic() + timeout_s
+    while True:
+        jobs = [j for j in sc.statusTracker().getJobIdsForGroup(group) if j not in before]
+        if jobs or time.monotonic() > deadline:
+            return jobs
+        time.sleep(0.1)
+
+
+def test_pin_labels_its_job_inside_the_callers_group(spark):
+    """pin's job keeps the caller's job group (per-query job counts stay
+    whole), carries the description pin:<label>, and the caller's
+    description is back afterwards."""
+    from embarrassingly_parallel_image_classification_spark.localframe import pin
+
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    before = set(sc.statusTracker().getJobIdsForGroup("g"))
+    sc.setJobGroup("g", "outer")
+    try:
+        pin(spark.range(10), "t")
+        assert sc.getLocalProperty(_DESC) == "outer"
+        jobs = _group_jobs(sc, "g", before)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty(_DESC, None)
+    assert jobs
+    assert {store.job(j).description().get() for j in jobs} == {"pin:t"}
+
+
+def test_pin_keeps_rows_and_reads_an_rdd_scan(spark):
+    from embarrassingly_parallel_image_classification_spark.localframe import pin
+
+    df = pin(spark.range(10).selectExpr("id", "id * 3 AS x"), "rows")
+    assert sorted((r.id, r.x) for r in df.collect()) == [(i, 3 * i) for i in range(10)]
+    plan = df._jdf.queryExecution().sparkPlan()
+    assert plan.getClass().getSimpleName() == "RDDScanExec", plan.toString()
+
+
+def test_pin_restores_description_when_the_job_fails(spark):
+    from pyspark.sql import functions as F
+
+    from embarrassingly_parallel_image_classification_spark.localframe import pin
+
+    sc = spark.sparkContext
+    boom = spark.range(3).select(
+        F.raise_error(F.concat(F.lit("boom "), F.col("id").cast("string")))
+    )
+    sc.setJobDescription("outer")
+    try:
+        with pytest.raises(Exception, match="boom"):
+            pin(boom, "fails")
+        assert sc.getLocalProperty(_DESC) == "outer"
+    finally:
+        sc.setLocalProperty(_DESC, None)
+    with pytest.raises(Exception, match="boom"):
+        pin(boom, "fails")
+    assert sc.getLocalProperty(_DESC) is None

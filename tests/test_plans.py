@@ -458,11 +458,13 @@ def test_no_persist_in_library_source():
     function that returns a lazy DataFrame can never be unpersisted, so
     cache-manager entries accumulate across calls — the leak class
     measured at 6× slowdown in ml/dedup.py:143-149. Library code must
-    use localCheckpoint(eager=True) (ContextCleaner reclaims the blocks
-    when the plan is GC'd) or let the CALLER own caching. The one
-    allowed `.cache()` pair lives in ml/knn.py's IvfIndex build, whose
-    lifetime is owned by the module-level _IVF_CACHE singleton (bounded,
-    reused across calls — an index, not a leak)."""
+    pin through localframe.pin (localCheckpoint(eager=True): the
+    ContextCleaner reclaims the blocks when the plan is GC'd, and the
+    job is labelled pin:<label>) or let the CALLER own caching, so
+    `.localCheckpoint(` outside localframe.py is an offender too. The
+    one allowed `.cache()` pair lives in ml/knn.py's IvfIndex build,
+    whose lifetime is owned by the module-level _IVF_CACHE singleton
+    (bounded, reused across calls — an index, not a leak)."""
     import pathlib
 
     pkg = pathlib.Path(__file__).resolve().parents[1] / (
@@ -475,6 +477,8 @@ def test_no_persist_in_library_source():
             offenders.append(f"{py.name}: .persist(")
         if ".cache(" in src and py.name != "knn.py":
             offenders.append(f"{py.name}: .cache(")
+        if ".localCheckpoint(" in src and py.name != "localframe.py":
+            offenders.append(f"{py.name}: .localCheckpoint(")
     assert not offenders, offenders
 
 
