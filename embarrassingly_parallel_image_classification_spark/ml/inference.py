@@ -3,9 +3,11 @@
 The reference scores aerial-image tiles with a CNN by parallelizing file
 paths and doing ``mapPartitions`` with one model load per partition
 (SURVEY.md §3.1 [PK]). The Spark-native equivalent is an **Iterator
-pandas UDF**: model state is initialized once per Python worker, then
-applied to Arrow-delivered batches — the same amortized-init,
-vectorized-forward-pass shape, without hand-managed partitioning.
+Arrow UDF** (``arrow_udf``): model state is initialized once per Python
+worker, then applied to Arrow-delivered batches, each read as a
+zero-copy ``(n, d)`` matrix (``embedding_matrix``) — the same
+amortized-init, vectorized-forward-pass shape, without hand-managed
+partitioning and without pandas on the hot path.
 
 No pretrained DNN exists in this container (no network), so the model is
 a deterministic **nearest-centroid classifier** fit on the fixture
@@ -18,7 +20,11 @@ Scale notes (100 TB): fitting is a distributed aggregation (posexplode →
 per-(label, dim) partial avg — two-phase HashAggregate, no collect of raw
 data; only the 10×64 parameter matrix comes to the driver). Scoring is
 zero-shuffle, embarrassingly parallel — identical to the reference's
-structure but Arrow-vectorized.
+structure but Arrow-vectorized. The ordered lines (q_infer_batch,
+q_infer_batch_pbu) are the one exception: they sort the raw rows
+*before* the model, so the range exchange shuffles inputs once. Sorting
+the scored frame instead would run the model twice — once in the range
+partitioner's sample job and again in the shuffle.
 """
 
 from __future__ import annotations
@@ -27,6 +33,8 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa  # module-level: arrow_udf resolves the pa.Array hints here
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType
@@ -83,38 +91,64 @@ def nearest_centroid_predict(X: np.ndarray, cents: np.ndarray, labels: np.ndarra
     return labels[np.argmin(d, axis=1)]
 
 
-def make_predict_udf(cents: np.ndarray, labels: np.ndarray):
-    """Iterator pandas UDF: params captured once per worker, applied to
-    every Arrow batch — the Spark-native 'one model load per partition'."""
-    from pyspark.sql.functions import pandas_udf
+def embedding_matrix(batch: pa.Array) -> np.ndarray:
+    """One Arrow batch of ``array<float>`` rows → its ``(n, EMB_DIM)``
+    matrix, without a per-row Python object: the child values are
+    already one contiguous buffer. ``flatten()`` (not ``.values``)
+    honours the batch offset, so a sliced batch yields its own rows.
+    Raises on a null row or a row whose length is not ``EMB_DIM`` — a
+    bare reshape would accept ragged rows whose total happens to
+    divide."""
+    n = len(batch)
+    if batch.null_count:
+        raise ValueError(f"embedding batch has {batch.null_count} null row(s)")
+    lengths = pc.list_value_length(batch)
+    if n and pc.min_max(lengths).as_py() != {"min": EMB_DIM, "max": EMB_DIM}:
+        raise ValueError(f"embedding rows must all have length {EMB_DIM}")
+    return batch.flatten().to_numpy(zero_copy_only=False).reshape(n, EMB_DIM)
 
-    @pandas_udf(IntegerType())
-    def predict(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
+
+def make_predict_udf(cents: np.ndarray, labels: np.ndarray):
+    """Iterator Arrow UDF: params captured once per worker, applied to
+    every Arrow batch — the Spark-native 'one model load per partition'.
+    Each batch reaches the kernel as a zero-copy matrix
+    (``embedding_matrix``) and the predictions return as one Arrow array;
+    no pandas on the way in or out."""
+    from pyspark.sql.functions import arrow_udf
+
+    @arrow_udf(IntegerType())
+    def predict(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
         # Worker-side one-time init happens here (model deserialize).
         C = np.ascontiguousarray(cents)
         L = labels
-        for s in batches:
-            X = np.stack(s.to_numpy())
-            yield pd.Series(nearest_centroid_predict(X, C, L))
+        for batch in batches:
+            yield pa.array(nearest_centroid_predict(embedding_matrix(batch), C, L))
 
     return predict
 
 
-def score_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """embeddings → (vec_id, label, pred): the distributed scoring job."""
+def score_embeddings(spark: SparkSession, sf_dir: str, *order_by: str) -> DataFrame:
+    """embeddings → (vec_id, label, pred): the distributed scoring job.
+
+    With ``order_by`` the raw rows are sorted *before* the model runs, so
+    the range partitioner's sample job scans parquet and every row is
+    scored exactly once (sorting the scored frame would score it twice)."""
     emb = t(spark, sf_dir, "embeddings")
     cents, labels = fit_centroids(emb)
     predict = make_predict_udf(cents, labels)
-    return emb.select("vec_id", "label", predict("embedding").alias("pred"))
+    rows = emb.orderBy(*order_by) if order_by else emb
+    return rows.select("vec_id", "label", predict("embedding").alias("pred"))
 
 
-def score_embeddings_pbu(spark: SparkSession, sf_dir: str, batch_size: int = 1024) -> DataFrame:
+def score_embeddings_pbu(
+    spark: SparkSession, sf_dir: str, *order_by: str, batch_size: int = 1024
+) -> DataFrame:
     """Same scoring job via ``pyspark.ml.functions.predict_batch_udf`` —
     Spark's first-class batch-inference API (lazy per-worker model init,
     tensor batching). Kept alongside the Iterator-UDF path to prove the
-    two J1 formulations agree (tests/test_smoke.py)."""
+    two J1 formulations agree (tests/test_smoke.py). ``order_by`` sorts
+    before the model, as in ``score_embeddings``."""
     from pyspark.ml.functions import predict_batch_udf
-    from pyspark.sql.types import IntegerType
 
     emb = t(spark, sf_dir, "embeddings")
     cents, labels = fit_centroids(emb)
@@ -135,7 +169,8 @@ def score_embeddings_pbu(spark: SparkSession, sf_dir: str, batch_size: int = 102
         batch_size=batch_size,
         input_tensor_shapes=[[EMB_DIM]],
     )
-    return emb.select("vec_id", "label", predict("embedding").alias("pred"))
+    rows = emb.orderBy(*order_by) if order_by else emb
+    return rows.select("vec_id", "label", predict("embedding").alias("pred"))
 
 
 # The whole model is SQL-expressible (fit = per-(label, dim) AVG;
@@ -175,14 +210,15 @@ def q_infer_batch_pbu(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch inference through predict_batch_udf (the MMLSpark
     CNTKModel-transformer analog [PK]); same oracle as q_infer_batch —
     the two J1 formulations must agree with each other AND with SQL."""
-    return score_embeddings_pbu(spark, sf_dir).orderBy("vec_id")
+    return score_embeddings_pbu(spark, sf_dir, "vec_id")
 
 
 @register("q_infer_batch", oracle=_INFER_ORACLE, tags=("J1",))
 def q_infer_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch inference: one row per embedding with its predicted class
-    (see _INFER_ORACLE — the flagship is exactly oracle-checked)."""
-    return score_embeddings(spark, sf_dir).orderBy("vec_id")
+    (see _INFER_ORACLE — the flagship is exactly oracle-checked). The
+    rows are sorted before the model, so each is scored exactly once."""
+    return score_embeddings(spark, sf_dir, "vec_id")
 
 
 @register(
@@ -540,30 +576,32 @@ def q_infer_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     class id). Because the mean commutes with coordinate projection,
     each subspace model's centroids are SLICES of the one distributed
     centroid fit — no extra fit jobs; all three models score inside
-    ONE Iterator pandas UDF pass (one Arrow crossing for the whole
+    ONE Iterator Arrow UDF pass (one Arrow crossing for the whole
     ensemble, the shape a 3-model DNN ensemble would use). The vote is
     relational (explode → count → ranked pick), so the entire ensemble
     is exactly oracle-checked end to end."""
-    from pyspark.sql.types import ArrayType, IntegerType as _Int
-
-    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.functions import arrow_udf
+    from pyspark.sql.types import ArrayType
 
     emb = t(spark, sf_dir, "embeddings")
     cents, labels = fit_centroids(emb)
 
-    @pandas_udf(ArrayType(_Int()))
-    def predict3(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
+    @arrow_udf(ArrayType(IntegerType()))
+    def predict3(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
         C = np.ascontiguousarray(cents)
         L = labels
-        for s in batches:
-            X = np.stack(s.to_numpy())
+        for batch in batches:
+            X = embedding_matrix(batch)
             preds = [
                 nearest_centroid_predict(
                     X[:, lo:hi], np.ascontiguousarray(C[:, lo:hi]), L
                 )
                 for lo, hi in _SUBSPACES
             ]
-            yield pd.Series(np.stack(preds, axis=1).astype(np.int32).tolist())
+            # (n, 3) row-major → one list<int> per row, 3 values each
+            votes = np.stack(preds, axis=1).astype(np.int32).ravel()
+            offsets = np.arange(0, len(votes) + 1, len(_SUBSPACES), dtype=np.int32)
+            yield pa.ListArray.from_arrays(offsets, votes)
 
     scored = emb.select(
         "vec_id", "label", predict3("embedding").alias("preds")

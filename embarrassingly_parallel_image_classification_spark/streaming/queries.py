@@ -635,7 +635,7 @@ def q_stream_infer(spark: SparkSession, sf_dir: str) -> DataFrame:
     [PK]: newly-arriving batches scored as they land. The embeddings
     table becomes a bounded file stream; the nearest-centroid model
     (fit in batch — train offline, serve online) is applied per
-    microbatch through the same Iterator pandas UDF as q_infer_batch,
+    microbatch through the same Iterator Arrow UDF as q_infer_batch,
     so model init amortizes per worker across every batch the worker
     sees. availableNow drains the stream and the full prediction set
     must hash-match the BATCH inference oracle exactly — the

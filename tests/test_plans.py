@@ -109,6 +109,23 @@ def test_inference_is_arrow_vectorized(spark):
     assert "BatchEvalPython" not in plan
 
 
+def test_ordered_inference_scores_above_the_range_exchange(spark):
+    """The ordered J1 lines sort the raw rows, then score: the Python
+    eval node must sit ABOVE `Exchange rangepartitioning`. Below it, the
+    range partitioner's sample job would run the model over every row
+    and the shuffle would run it a second time."""
+    jvm = spark.sparkContext._jvm
+    for name in ("q_infer_batch", "q_infer_batch_pbu"):
+        df = registry.queries()[name](spark, SF_T2)
+        plan = jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "simple")
+        lines = plan.splitlines()
+        python = [i for i, line in enumerate(lines) if "ArrowEvalPython" in line]
+        exchange = [i for i, line in enumerate(lines) if "Exchange rangepartitioning" in line]
+        assert len(python) == 1 and len(exchange) == 1, plan
+        # the plan is one chain, so an earlier line is an ancestor
+        assert python[0] < exchange[0], f"{name} scores below the range exchange:\n{plan}"
+
+
 def test_broadcast_dims_stay_broadcast_in_star_join(spark):
     """customer⋈nation⋈region: both dim joins broadcast, zero shuffles
     of the fact side for the join itself (the only Exchange allowed is
