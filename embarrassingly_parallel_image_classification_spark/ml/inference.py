@@ -29,7 +29,10 @@ partitioner's sample job and again in the shuffle.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Iterator
+from urllib.parse import urlparse
+from urllib.request import url2pathname
 
 import numpy as np
 import pandas as pd
@@ -47,7 +50,14 @@ EMB_DIM = 64
 N_CLASSES = 10
 
 
-_CENTROID_CACHE: dict[tuple[str, str], tuple[np.ndarray, np.ndarray]] = {}
+_CENTROID_CACHE: dict[tuple, tuple[np.ndarray, np.ndarray]] = {}
+
+
+def _file_version(uri: str) -> tuple[str, int, int]:
+    """(uri, mtime in ns, size) of one local input file: a rewrite of
+    the file changes the tuple."""
+    st = os.stat(url2pathname(urlparse(uri).path))
+    return uri, st.st_mtime_ns, st.st_size
 
 
 def fit_centroids(emb: DataFrame) -> tuple[np.ndarray, np.ndarray]:
@@ -58,11 +68,12 @@ def fit_centroids(emb: DataFrame) -> tuple[np.ndarray, np.ndarray]:
     two-phase aggregation; only n_classes × dim tiny rows are collected.
     The memo key includes the application id (results are plain NumPy,
     but the fit job shouldn't rerun for every query in a driver pass)
-    and the input file list (distinct sf_dirs get distinct fits).
+    and each input file's name, mtime and size (distinct sf_dirs get
+    distinct fits, and a rewritten file is refit, never served stale).
     """
     key = (
         emb.sparkSession.sparkContext.applicationId,
-        ",".join(sorted(emb.inputFiles())),
+        tuple(_file_version(f) for f in sorted(emb.inputFiles())),
     )
     cached = _CENTROID_CACHE.get(key)
     if cached is not None:

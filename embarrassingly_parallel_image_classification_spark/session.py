@@ -30,6 +30,11 @@ ENGINE_CONFS: dict[str, str] = {
     "spark.sql.autoBroadcastJoinThreshold": str(32 * 1024 * 1024),
     # ANSI off: match DuckDB's permissive casts in oracle comparisons.
     "spark.sql.ansi.enabled": "false",
+    # Parquet TIMESTAMP(NANOS) reads as ns-epoch BIGINT instead of failing
+    # (events.ts in some fixture generations, see sources/tables.py); a
+    # no-op for µs/ms files. Set for the whole session so no loader flips
+    # it mid-run.
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
 }
 
 

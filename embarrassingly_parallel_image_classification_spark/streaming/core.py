@@ -6,12 +6,11 @@ events parquet, ``trigger(availableNow=True)`` so every run is finite,
 memory (or foreachBatch→parquet) sink so results come back as a
 DataFrame. No wall-clock sources anywhere.
 
-The events fixture's ts physical type has drifted across fixture
-generations (TIMESTAMP(NANOS) vs TIMESTAMP(MICROS)); a file stream
-needs an explicit schema, so the loader infers it from a cheap batch
-read of the same file and applies the same ts normalization as the
-batch loader (sources/tables.py) — the two MUST agree or stream-batch
-equivalence silently breaks.
+A file stream needs an explicit schema; the loaders take it from
+sources/tables.py's ``parquet_schema`` (inferred once per fixture file,
+then cached — no batch read per call) and events_stream applies the
+batch loader's own ts normalization (``normalize_events_ts``), so
+stream-batch equivalence cannot drift between two copies.
 """
 
 from __future__ import annotations
@@ -19,38 +18,30 @@ from __future__ import annotations
 import itertools
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.types import LongType
+
+from ..sources.tables import normalize_events_ts, parquet_schema
 
 _run_ids = itertools.count()
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The events table as a bounded file stream with a proper ts."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # Footer-only batch read: gives the stream its required schema and
-    # tells us which ts representation this fixture generation uses.
-    batch = spark.read.parquet(f"{sf_dir}/events.parquet")
+    """The events table as a bounded file stream with a proper ts: the
+    cached fixture schema, normalized exactly like the batch loader."""
     raw = (
-        spark.readStream.schema(batch.schema)
+        spark.readStream.schema(parquet_schema(spark, f"{sf_dir}/events.parquet"))
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
-    if isinstance(batch.schema["ts"].dataType, LongType):
-        # TIMESTAMP(NANOS) fixture read as ns-epoch longs.
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    # TIMESTAMP(MICROS) fixture: NTZ -> session-TZ (UTC) timestamp.
-    return raw.withColumn("ts", F.col("ts").cast("timestamp"))
+    return normalize_events_ts(raw)
 
 
 def documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The documents table as a bounded file stream — the crawl-ingest
     shape (new shards arriving continuously) the curation gates run
-    on in production. Schema from a footer-only batch read, same as
+    on in production. Schema from the fixture schema cache, same as
     events_stream; no ts normalization needed (no timestamp col)."""
-    batch = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return (
-        spark.readStream.schema(batch.schema)
+        spark.readStream.schema(parquet_schema(spark, f"{sf_dir}/documents.parquet"))
         .option("pathGlobFilter", "documents.parquet")
         .parquet(sf_dir)
     )

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from ..localframe import pin
 from ..registry import register
-from ..sources.tables import t
+from ..sources.tables import parquet_schema, t
 from .core import events_stream, run_to_memory
 
 
@@ -644,11 +644,10 @@ def q_stream_infer(spark: SparkSession, sf_dir: str) -> DataFrame:
     batching."""
     from ..ml.inference import fit_centroids, make_predict_udf
 
-    batch = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    cents, labels = fit_centroids(batch)
+    cents, labels = fit_centroids(t(spark, sf_dir, "embeddings"))
     predict = make_predict_udf(cents, labels)
     stream = (
-        spark.readStream.schema(batch.schema)
+        spark.readStream.schema(parquet_schema(spark, f"{sf_dir}/embeddings.parquet"))
         .option("pathGlobFilter", "embeddings.parquet")
         .parquet(sf_dir)
     )

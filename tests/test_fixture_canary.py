@@ -145,6 +145,6 @@ def test_events_parquet_physical_type_documented():
     assert it is one the loaders know how to normalize."""
     t = pq.read_schema(f"{SF_DIR}/events.parquet").field("ts").type
     assert str(t) in ("timestamp[ns]", "timestamp[us]", "int64"), (
-        f"events.ts physical type {t} is new — teach _load_events / "
-        f"events_stream how to normalize it"
+        f"events.ts physical type {t} is new — teach "
+        f"sources.tables.normalize_events_ts how to normalize it"
     )
