@@ -19,17 +19,45 @@ stats for pruning; commit is one atomic manifest publish). The two
 capabilities the real formats add on top are implemented here too:
   * optimistic concurrency — snapshot_write(expected_version=...)
     raises ConcurrentWriteError when another writer published first
-    (version claim is an atomic link(2), so two racing writers can
-    never both claim the same version);
+    (see the commit protocol below);
   * file-level statistics — snapshot_write(stats_col=...) records
     per-file min/max in the manifest; snapshot_read(between=...)
     prunes the file list against the predicate range before any scan
     (manifest-level data skipping, the Iceberg/Delta file-pruning
     path).
+
+Commit protocol (every state change; POLARIS-style: the compute that
+produced the files is separate from the one metadata operation that
+commits them):
+  * claim — ``_put_json`` writes a private ``<name>.tmp<uuid>``, then
+    link(2)s it to the final name. link fails when the name exists,
+    so exactly one racing writer creates each manifest version,
+    catalog version (``multi_table_commit``) or tag ref
+    (``create_tag``); the loser gets False. The tmp is removed in a
+    ``finally`` on success, lost race and error alike; only a crash
+    leaves one, and vacuum / catalog_vacuum reclaim it by age.
+  * publish — ``_publish`` stamps ``version`` and ``committed_at``,
+    claims ``_manifest_v<N>.json``, and only THEN appends the
+    ``_summary_of`` line to the metalog. A crash between the two
+    leaves a manifest without a line, which the next reader heals.
+  * lost race — data writers (snapshot_write, delete_where) rebuild
+    from the new latest manifest and retry, unless the caller pinned
+    a version (``expected_version``) or a table property their frame
+    was validated under moved. Metadata-only DDL shares one loop,
+    ``_alter``: rename_column and add_column_default check only the
+    manifest, so they rebase onto the new latest; set_generated_column,
+    add_check_constraint, set_identity_column and add_bloom_index read
+    the standing DATA at version v, so they pass v and raise
+    ConcurrentWriteError once the table has moved past it.
+  * rewrite — two files are replaced on purpose, never claimed:
+    erase_rows republishes history (``_put_json(replace=True)``), and
+    the metalog compaction rewrites its sidecar under the maintenance
+    lock.
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import shutil
@@ -52,6 +80,31 @@ class ConcurrentWriteError(RuntimeError):
 
 def _manifest_path(path: str, version: int) -> str:
     return os.path.join(path, f"_manifest_v{version}.json")
+
+
+def _manifest(path: str, version: int) -> dict:
+    with open(_manifest_path(path, version)) as f:
+        return json.load(f)
+
+
+def _put_json(final: str, doc: dict, replace: bool = False) -> bool:
+    """Atomically create ``final`` holding ``doc`` — the claim of the
+    commit protocol (module docstring). False when the name is already
+    taken. ``replace=True`` overwrites instead (erase_rows only)."""
+    tmp = f"{final}.tmp{uuid.uuid4().hex}"
+    try:
+        with open(tmp, "w") as f:
+            json.dump(doc, f)
+        if replace:
+            os.replace(tmp, final)
+        else:
+            os.link(tmp, final)
+        return True
+    except FileExistsError:
+        return False
+    finally:
+        with contextlib.suppress(FileNotFoundError):
+            os.unlink(tmp)
 
 
 def current_version(path: str) -> int:
@@ -245,8 +298,7 @@ def _metalog_scan(path: str) -> tuple[dict[int, dict], int, int]:
         if v in entries or v in tombs:
             continue
         try:
-            with open(_manifest_path(path, v)) as f:
-                m = json.load(f)
+            m = _manifest(path, v)
         except FileNotFoundError:
             # expired by a pre-metalog (or crashed) vacuum: tombstone
             # so the next reader never re-probes this version
@@ -332,6 +384,33 @@ def _metalog_compact(path: str) -> None:
             os.unlink(tmp)
         except OSError:
             pass
+
+
+def _publish(path: str, version: int, m: dict) -> bool:
+    """Commit manifest ``m`` as ``version`` (module docstring: claim,
+    then metalog). False when another writer holds ``version``."""
+    m = {**m, "version": version, "committed_at": time.time()}
+    if not _put_json(_manifest_path(path, version), m):
+        return False
+    _metalog_append(path, _summary_of(m, version))
+    return True
+
+
+def _alter(path: str, mode: str, change, validated_at: int | None = None) -> int:
+    """The metadata-only DDL commit: publish ``{**m, "mode": mode,
+    **change(m)}`` over the latest manifest ``m``; returns the new
+    version. ``change`` re-runs on every rebase and may raise.
+    ``validated_at``: the version whose data the caller checked; the
+    commit raises ConcurrentWriteError once the table moves past it."""
+    while True:
+        v = current_version(path)
+        if validated_at is not None and v != validated_at:
+            raise ConcurrentWriteError(
+                f"table moved from v{validated_at} to v{v} during {mode}; retry"
+            )
+        m = _manifest(path, v)
+        if _publish(path, v + 1, {**m, "mode": mode, **change(m)}):
+            return v + 1
 
 
 def _footer_stats(local_path: str, cols) -> tuple[dict, dict]:
@@ -467,7 +546,7 @@ def set_identity_column(
     high}`` that makes every subsequent snapshot_write ASSIGN the
     column (writers must omit it; supplying it raises — the ALWAYS
     contract). Uniqueness under concurrent appends comes from the same
-    atomic link(2) claim every commit already rides: the high-water
+    version claim every commit already rides: the high-water
     mark lives INSIDE the manifest, a writer bakes ids from the high
     it planned against, and the commit loop refuses to publish if the
     manifest it would chain to carries a different high (the racing
@@ -491,7 +570,7 @@ def set_identity_column(
             "declare identity on an existing table (write an empty "
             "frame first to create the table with its schema)"
         )
-    cur = snapshot_read(spark, path)
+    cur = snapshot_read(spark, path, v0)
     if name not in cur.columns:
         raise ValueError(
             f"identity column {name} must exist in the schema "
@@ -512,36 +591,13 @@ def set_identity_column(
         high = max(int(census["mx"]), start - step)
     else:
         high = start - step
-    while True:
-        v = current_version(path)
-        with open(_manifest_path(path, v)) as f:
-            m = json.load(f)
-        if v != v0:
-            raise ConcurrentWriteError(
-                "table moved during identity declaration; retry"
-            )
-        identity = dict(m.get("identity", {}))
-        identity[name] = {"start": start, "step": step, "high": high}
-        payload = {
-            **m,
-            "version": v + 1,
-            "mode": "set_identity",
-            "identity": identity,
-            "committed_at": time.time(),
-        }
-        tmp = _manifest_path(path, v + 1) + f".tmp{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(payload, f)
-        try:
-            os.link(tmp, _manifest_path(path, v + 1))  # atomic claim
-            os.unlink(tmp)
-            _metalog_append(path, _summary_of(payload, v + 1))
-            return v + 1
-        except FileExistsError:
-            os.unlink(tmp)  # lost the race
-            raise ConcurrentWriteError(
-                "version claimed concurrently during identity declaration"
-            )
+    spec = {"start": start, "step": step, "high": high}
+    return _alter(
+        path,
+        "set_identity",
+        lambda m: {"identity": {**m.get("identity", {}), name: spec}},
+        validated_at=v0,
+    )
 
 
 def snapshot_write(
@@ -564,17 +620,15 @@ def snapshot_write(
     schema instead of guessing.
 
     ``expected_version``: optimistic concurrency — raise
-    ConcurrentWriteError if the table moved past that version (the
-    version claim itself is an atomic ``os.link``, so two racing
-    writers can never both publish the same version even if both pass
-    the pre-check). ``stats_col``: record per-file min/max of that
+    ConcurrentWriteError if the table moved past that version, at the
+    pre-check or at the claim. ``stats_col``: record per-file min/max of that
     column in the manifest (footer-only read), enabling manifest-level
     file pruning in snapshot_read; a LIST records every named column
     (Delta's dataSkippingNumIndexedCols / Iceberg column metrics) —
     the first drives the legacy ``between=`` path, all of them the
     ``predicates=`` path. ``batch_id``: streaming-ingest
     idempotence token (Delta txnAppId/txnVersion analog) — recorded
-    INSIDE the atomically-linked manifest, so a crash can never
+    INSIDE the claimed manifest, so a crash can never
     publish data without its id (the replay gate and the data commit
     are one atomic action); ids accumulate across every subsequent
     snapshot (appends AND overwrites — compaction must not amnesia the
@@ -589,7 +643,7 @@ def snapshot_write(
 
     ``extra_defaults``: additional manifest ``defaults`` entries for
     columns this OVERWRITE introduced (MERGE schema evolution — see
-    merge_into_when). Overwrite rewrites every data file, so the scope
+    merge_into). Overwrite rewrites every data file, so the scope
     is empty (no pre-existing file owes a backfill); the entry's job is
     the append guard — subsequent writers must carry the column or the
     table's logical schema would silently narrow.
@@ -636,8 +690,7 @@ def snapshot_write(
         # handling below — a second current_version call here would
         # shift the commit loop's race-detection window (pinned by the
         # racing-DDL pytests).
-        with open(_manifest_path(path, _plan_base)) as f:
-            _m0 = json.load(f)
+        _m0 = _manifest(path, _plan_base)
     gen0: dict = {}
     if _m0 is not None:
         gen0 = _m0.get("generated", {})
@@ -764,8 +817,7 @@ def snapshot_write(
         carried_generated: dict = {}
         base = base_version if base_version is not None else prev
         if base > 0:
-            with open(_manifest_path(path, base)) as f:
-                m = json.load(f)
+            m = _manifest(path, base)
             # generated definitions survive every mode (table property,
             # like batch_ids); a set_generated_column racing this write
             # means the frame was computed/validated under a different
@@ -826,9 +878,7 @@ def snapshot_write(
                     )
         if batch_id is not None and batch_id not in carried_batch_ids:
             carried_batch_ids = carried_batch_ids + [batch_id]
-        version = prev + 1
         manifest = {
-            "version": version,
             "mode": mode,
             "files": sorted(visible),
             "stats": {k: vis_stats[k] for k in sorted(vis_stats)},
@@ -849,23 +899,14 @@ def snapshot_write(
             },
             "checks": checks0,
             "schema": logical_schema,
-            "committed_at": time.time(),
         }
-        tmp = _manifest_path(path, version) + f".tmp{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        try:
-            os.link(tmp, _manifest_path(path, version))  # atomic claim
-            os.unlink(tmp)
-            _metalog_append(path, _summary_of(manifest, version))
-            return version
-        except FileExistsError:
-            os.unlink(tmp)  # lost the race: another writer took `version`
-            if expected_version is not None:
-                raise ConcurrentWriteError(
-                    f"version {version} was claimed concurrently"
-                )
-            # unconditional append: rebase on the new current version
+        if _publish(path, prev + 1, manifest):
+            return prev + 1
+        if expected_version is not None:
+            raise ConcurrentWriteError(
+                f"version {prev + 1} was claimed concurrently"
+            )
+        # unconditional append: rebase on the new current version
 
 
 def snapshot_read(
@@ -891,8 +932,7 @@ def snapshot_read(
     max] intersects its range (conjunctive semantics, same
     conservatism: unstated columns/files are kept)."""
     v = version if version is not None else current_version(path)
-    with open(_manifest_path(path, v)) as f:
-        m = json.load(f)
+    m = _manifest(path, v)
     files = m["files"]
     renames: dict = m.get("renames", {})
     if predicates and renames:
@@ -1114,8 +1154,7 @@ def vacuum(
         reachable: set[str] = set()
         for v in sorted(keep_versions):
             try:
-                with open(_manifest_path(path, v)) as f:
-                    m = json.load(f)
+                m = _manifest(path, v)
             except FileNotFoundError:
                 continue  # already expired by an earlier, ref-blind vacuum
             reachable.update(m["files"])
@@ -1171,8 +1210,7 @@ def vacuum(
                     removed.append(name)  # same as catalog_vacuum
                 else:
                     try:
-                        with open(_manifest_path(path, v)) as f:
-                            kept_m = json.load(f)
+                        kept_m = _manifest(path, v)
                         reachable.update(kept_m["files"])
                         reachable.update(
                             d[0] for d in kept_m.get("delete_files", [])
@@ -1208,10 +1246,9 @@ def vacuum(
                 os.remove(full)
                 removed.append(name)
             if name.startswith("_manifest_v") and ".json.tmp" in name:
-                # a crash between the tmp write and the link(2) claim
-                # leaves the tmp behind (both success and lost-race
-                # paths unlink it); never visible to current_version
-                # (endswith('.json') fails), reclaim under the age rule
+                # a claim tmp only a crash leaves behind; never
+                # visible to current_version (endswith('.json')
+                # fails), reclaim under the age rule
                 if old_enough(full):
                     os.remove(full)
                     removed.append(name)
@@ -1321,38 +1358,96 @@ def merge_into(
     source: DataFrame,
     key: str,
     update_cols: list[str],
+    *,
+    matched_delete: str | None = None,
+    insert_cond: str | None = None,
+    evolve_schema: bool = False,
 ) -> int:
-    """MERGE INTO the snapshot table: matched target rows take the
-    source's update_cols (upsert), unmatched source rows insert,
-    unmatched target rows carry over — the batch CDC-apply every
-    lakehouse runs. Implemented as one full-outer join against the
-    current snapshot followed by an OVERWRITE snapshot publish
-    (copy-on-write, exactly how Delta/Iceberg MERGE rewrites files;
-    at 100 TB the join is pre-filtered to the files whose key ranges
+    """MERGE INTO the snapshot table — the batch CDC-apply every
+    lakehouse runs, with the Delta/Iceberg WHEN clauses:
+
+        WHEN MATCHED AND <matched_delete>     THEN DELETE
+        WHEN MATCHED                          THEN UPDATE SET update_cols
+        WHEN NOT MATCHED [AND <insert_cond>]  THEN INSERT
+        (unmatched target rows always carry over)
+
+    With no clause arguments this is the plain upsert. Clause order is
+    the standard: a matched row satisfying ``matched_delete`` is
+    deleted BEFORE the update applies, and the condition sees
+    PRE-update target values (SQL strings evaluated on the joined
+    frame — target columns under their own names, source columns as
+    ``__s_<col>``). Implemented as one MoR-aware full-outer join
+    against the current snapshot followed by one OVERWRITE publish
+    (copy-on-write, exactly how Delta/Iceberg MERGE rewrites files; at
+    100 TB the join is pre-filtered to the files whose key ranges
     intersect the source — manifest-level stats, the documented
-    upgrade path). Returns the new snapshot version."""
+    upgrade path). Returns the new snapshot version.
+
+    ``evolve_schema=True`` is Delta's MERGE ``mergeSchema``: source
+    columns absent from the target AUTO-WIDEN the table in the SAME
+    commit — the target frame gains each new column as typed NULL
+    (rows the source never touched read back NULL), matched rows take
+    the source value through the normal update path, and the overwrite
+    publish records the widened schema plus an empty-scope ``defaults``
+    entry so later appends must carry the column (the narrow-append
+    guard; the overwrite itself rewrote every file, so nothing owes a
+    backfill). Without it a widening source is an ERROR rather than a
+    silent column drop.
+
+    Identity columns: the rewrite keeps carried and matched ids
+    verbatim (``preserve_identity``). A merge that would INSERT into a
+    table declaring one raises ValueError — the overwrite cannot draw
+    fresh ids; append new keys through snapshot_write instead."""
+    v = current_version(path)
+    identity = sorted(_manifest(path, v).get("identity", {}))
     # MoR-aware read: merging against the RAW reader would resurrect
     # rows covered by deletion vectors (compositional bug class caught
     # by review; pinned in tests/test_plans_scale.py). The overwrite
     # publish below then clears the applied deletes — copy-on-write
     # folds them in, like compact_mor.
-    target = snapshot_read_mor(spark, path)
+    target = snapshot_read_mor(spark, path, v)
+    new_cols = [c for c in update_cols if c not in target.columns]
+    if new_cols and not evolve_schema:
+        raise ValueError(
+            f"source column(s) {new_cols} not in target schema; "
+            f"pass evolve_schema=True to auto-widen"
+        )
+    if set(identity) & set(update_cols):
+        raise ValueError(
+            f"identity column(s) {identity} are GENERATED ALWAYS AS "
+            f"IDENTITY — MERGE cannot update them"
+        )
+    src_fields = {f.name: f.dataType for f in source.schema.fields}
+    for c in new_cols:
+        target = target.withColumn(c, F.lit(None).cast(src_fields[c]))
     src = source.select(
         F.col(key).alias("__k"), *[F.col(c).alias(f"__s_{c}") for c in update_cols]
     )
     joined = target.join(src, target[key] == F.col("__k"), "full_outer")
+    src_only = target[key].isNull()
+    if matched_delete is not None:
+        is_matched = target[key].isNotNull() & F.col("__k").isNotNull()
+        joined = joined.filter(~(is_matched & F.expr(matched_delete)))
+    if insert_cond is not None:
+        joined = joined.filter(~src_only | F.expr(insert_cond))
+    if identity and joined.filter(src_only).limit(1).count():
+        raise ValueError(
+            f"MERGE would insert rows into a table with identity "
+            f"column(s) {identity}; append new keys with snapshot_write"
+        )
     merged_cols = []
     for c in target.columns:
         if c in update_cols:
-            merged_cols.append(
-                F.coalesce(F.col(f"__s_{c}"), F.col(c)).alias(c)
-            )
+            merged_cols.append(F.coalesce(F.col(f"__s_{c}"), F.col(c)).alias(c))
         elif c == key:
-            merged_cols.append(F.coalesce(F.col(key), F.col("__k")).alias(key))
+            merged_cols.append(F.coalesce(target[key], F.col("__k")).alias(key))
         else:
             merged_cols.append(F.col(c))
-    merged = joined.select(*merged_cols)
-    return snapshot_write(merged, path, "overwrite", preserve_identity=True)
+    extra = {c: {"value": None, "scope": []} for c in new_cols} or None
+    return snapshot_write(
+        joined.select(*merged_cols), path, "overwrite",
+        extra_defaults=extra, preserve_identity=True,
+    )
 
 
 @register(
@@ -1466,11 +1561,9 @@ def stream_ingest(stream_df: DataFrame, path: str) -> None:
 
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
         v = current_version(path)
-        if v > 0:
-            with open(_manifest_path(path, v)) as f:
-                if batch_id in json.load(f).get("batch_ids", []):
-                    return  # replayed batch: already published
-        # the id is committed INSIDE snapshot_write's atomically-linked
+        if v > 0 and batch_id in _manifest(path, v).get("batch_ids", []):
+            return  # replayed batch: already published
+        # the id is committed INSIDE snapshot_write's claimed
         # manifest — data and replay gate publish as ONE action, so a
         # crash between them (the restart scenario the gate exists for)
         # is impossible by construction; the earlier two-step spelling
@@ -1578,10 +1671,8 @@ def q_lake_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     view = pin(agg_of(snapshot_read(spark, path, 1)), "q_lake_incremental_agg.view")
     # v2: append the delta; refresh = old view ⊕ agg(delta files only)
     snapshot_write(orders.filter(F.col("o_orderkey") % 2 == 1), path, "append")
-    with open(_manifest_path(path, 1)) as f:
-        v1_files = set(json.load(f)["files"])
-    with open(_manifest_path(path, 2)) as f:
-        v2_files = json.load(f)["files"]
+    v1_files = set(_manifest(path, 1)["files"])
+    v2_files = _manifest(path, 2)["files"]
     delta_files = [name for name in v2_files if name not in v1_files]
     delta = spark.read.parquet(
         *[os.path.join(path, name) for name in delta_files]
@@ -1611,8 +1702,7 @@ def delete_where(
     os.makedirs(path, exist_ok=True)
     _cur = current_version(path)
     if _cur > 0:
-        with open(_manifest_path(path, _cur)) as f:
-            _m = json.load(f)
+        _m = _manifest(path, _cur)
         if _m.get("renames") or _m.get("defaults"):
             # the delete file stores LOGICAL key values but the MoR
             # reader anti-joins against the files' PHYSICAL columns,
@@ -1639,8 +1729,7 @@ def delete_where(
     shutil.rmtree(staging, ignore_errors=True)
     while True:
         prev = current_version(path)
-        with open(_manifest_path(path, prev)) as f:
-            m = json.load(f)
+        m = _manifest(path, prev)
         if m.get("renames") or m.get("defaults"):
             # re-check on the manifest the commit actually builds from:
             # a rename/add-default racing between the pre-check and
@@ -1652,9 +1741,7 @@ def delete_where(
                 "column mapping / defaults changed during delete; "
                 "compact and retry"
             )
-        version = prev + 1
         manifest = {
-            "version": version,
             "mode": "delete",
             "files": m["files"],
             "stats": m.get("stats", {}),
@@ -1673,19 +1760,10 @@ def delete_where(
             "generated": m.get("generated", {}),
             "identity": m.get("identity", {}),
             "checks": m.get("checks", {}),
-            "committed_at": time.time(),
             **({"schema": m["schema"]} if "schema" in m else {}),
         }
-        tmp = _manifest_path(path, version) + f".tmp{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        try:
-            os.link(tmp, _manifest_path(path, version))  # atomic claim
-            os.unlink(tmp)
-            _metalog_append(path, _summary_of(manifest, version))
-            return version
-        except FileExistsError:
-            os.unlink(tmp)  # lost the race: rebase on the new version
+        if _publish(path, prev + 1, manifest):
+            return prev + 1
 
 
 def snapshot_read_mor(
@@ -1699,8 +1777,7 @@ def snapshot_read_mor(
     re-inserted AFTER a delete survives while the old rows stay
     deleted."""
     v = version if version is not None else current_version(path)
-    with open(_manifest_path(path, v)) as f:
-        m = json.load(f)
+    m = _manifest(path, v)
     deletes = m.get("delete_files", [])
     if not deletes:
         return snapshot_read(spark, path, v)
@@ -1800,8 +1877,7 @@ def maybe_compact(
     hook Delta's auto-compaction and Iceberg's maintenance actions
     occupy."""
     v = current_version(path)
-    with open(_manifest_path(path, v)) as f:
-        n_deletes = len(json.load(f).get("delete_files", []))
+    n_deletes = len(_manifest(path, v).get("delete_files", []))
     if n_deletes < max_delete_files:
         return None
     return compact_mor(spark, path)
@@ -1885,7 +1961,7 @@ def multi_table_commit(
          catalog READER cannot see it yet — catalog reads resolve
          table versions through the catalog file, never through the
          tables' own latest manifests);
-      2. one atomic link(2) of a catalog version file recording every
+      2. one claimed catalog version file recording every
          table's new manifest version — the all-or-nothing point.
 
     A crash between the phases leaves orphan table versions referenced
@@ -1948,21 +2024,12 @@ def multi_table_commit(
             base_version=pinned,
         )
     cv = prev_cv + 1
-    tmp = _catalog_path(root, cv) + f".tmp{uuid.uuid4().hex}"
-    with open(tmp, "w") as f:
-        json.dump(
-            {
-                "version": cv,
-                "tables": new_tables,
-                "batch_ids": sorted(cat_batch_ids),
-            },
-            f,
-        )
-    try:
-        os.link(tmp, _catalog_path(root, cv))  # phase 2: atomic commit
-        os.unlink(tmp)
-    except FileExistsError:
-        os.unlink(tmp)
+    catalog = {
+        "version": cv,
+        "tables": new_tables,
+        "batch_ids": sorted(cat_batch_ids),
+    }
+    if not _put_json(_catalog_path(root, cv), catalog):  # phase 2
         raise ConcurrentWriteError(f"catalog version {cv} claimed concurrently")
     return cv
 
@@ -2099,8 +2166,7 @@ def q_lake_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         "append",
     )
     v = current_version(path)
-    with open(_manifest_path(path, v)) as f:
-        files = json.load(f)["files"]
+    files = _manifest(path, v)["files"]
     merged = spark.read.option("mergeSchema", "true").parquet(
         *[os.path.join(path, name) for name in files]
     )
@@ -2177,12 +2243,10 @@ def rename_column(path: str, old: str, new: str) -> int:
     delete files (their key columns reference physical names — real
     engines gate the same way via REORG/compaction). Returns the new
     version."""
-    while True:
-        v = current_version(path)
-        if v == 0:
-            raise ValueError("cannot rename a column of an empty table")
-        with open(_manifest_path(path, v)) as f:
-            m = json.load(f)
+    if current_version(path) == 0:
+        raise ValueError("cannot rename a column of an empty table")
+
+    def change(m: dict) -> dict:
         if m.get("delete_files"):
             raise ValueError(
                 "rename with pending MoR delete files is unsupported; "
@@ -2194,8 +2258,7 @@ def rename_column(path: str, old: str, new: str) -> int:
                 "unsupported (defaults are keyed by logical name); "
                 "rewrite via overwrite first"
             )
-        fields = m["schema"]["fields"]
-        names = [fl["name"] for fl in fields]
+        names = [fl["name"] for fl in m["schema"]["fields"]]
         if old not in names:
             raise ValueError(f"no such column: {old}")
         if new in names:
@@ -2205,27 +2268,13 @@ def rename_column(path: str, old: str, new: str) -> int:
         renames.pop(phys, None)
         if phys != new:
             renames[phys] = new
-        for fl in fields:
-            if fl["name"] == old:
-                fl["name"] = new
-        payload = {
-            **m,
-            "version": v + 1,
-            "mode": "rename",
-            "renames": renames,
-            "schema": m["schema"],
-            "committed_at": time.time(),
-        }
-        tmp = _manifest_path(path, v + 1) + f".tmp{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(payload, f)
-        try:
-            os.link(tmp, _manifest_path(path, v + 1))  # atomic claim
-            os.unlink(tmp)
-            _metalog_append(path, _summary_of(payload, v + 1))
-            return v + 1
-        except FileExistsError:
-            os.unlink(tmp)  # lost the race: rebase on the new version
+        fields = [
+            {**fl, "name": new} if fl["name"] == old else fl
+            for fl in m["schema"]["fields"]
+        ]
+        return {"renames": renames, "schema": {**m["schema"], "fields": fields}}
+
+    return _alter(path, "rename", change)
 
 
 def stream_ingest_fanout(
@@ -2367,12 +2416,10 @@ def add_column_default(path: str, name: str, sql_type: str, default) -> int:
                     f"default {default!r} does not cast to {sql_type}: "
                     f"pre-add rows would silently read NULL"
                 )
-    while True:
-        v = current_version(path)
-        if v == 0:
-            raise ValueError("cannot add a column to an empty table")
-        with open(_manifest_path(path, v)) as f:
-            m = json.load(f)
+    if current_version(path) == 0:
+        raise ValueError("cannot add a column to an empty table")
+
+    def change(m: dict) -> dict:
         if m.get("renames"):
             raise ValueError(
                 "initial-default on a renamed table is unsupported "
@@ -2391,34 +2438,19 @@ def add_column_default(path: str, name: str, sql_type: str, default) -> int:
         fields = m["schema"]["fields"]
         if name in [fl["name"] for fl in fields]:
             raise ValueError(f"column already exists: {name}")
-        fields.append(
-            {
-                "name": name,
-                "type": dtype.jsonValue(),
-                "nullable": True,
-                "metadata": {},
-            }
-        )
-        defaults = dict(m.get("defaults", {}))
-        defaults[name] = {"value": default, "scope": sorted(m["files"])}
-        payload = {
-            **m,
-            "version": v + 1,
-            "mode": "add_column",
-            "defaults": defaults,
-            "schema": m["schema"],
-            "committed_at": time.time(),
+        added = {
+            "name": name,
+            "type": dtype.jsonValue(),
+            "nullable": True,
+            "metadata": {},
         }
-        tmp = _manifest_path(path, v + 1) + f".tmp{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(payload, f)
-        try:
-            os.link(tmp, _manifest_path(path, v + 1))  # atomic claim
-            os.unlink(tmp)
-            _metalog_append(path, _summary_of(payload, v + 1))
-            return v + 1
-        except FileExistsError:
-            os.unlink(tmp)  # lost the race: rebase on the new version
+        scoped = {"value": default, "scope": sorted(m["files"])}
+        return {
+            "defaults": {**m.get("defaults", {}), name: scoped},
+            "schema": {**m["schema"], "fields": fields + [added]},
+        }
+
+    return _alter(path, "add_column", change)
 
 
 @register(
@@ -2537,10 +2569,10 @@ def _make_lake_stream_datasource():
     version ADDED relative to the previous one — subscribing to a
     table's appends as a change stream, exactly what Delta/Iceberg
     streaming sources do. Append-only by contract (like Delta's
-    default): an overwrite/delete version raises instead of silently
+    default): a version that drops a file or carries deletes (overwrite,
+    MERGE, DELETE) raises instead of silently
     replaying the table, so consumers can trust at-most-once delivery
     per row."""
-    import json as _json
     import os as _os
 
     import pyarrow.parquet as _pq
@@ -2565,19 +2597,17 @@ def _make_lake_stream_datasource():
         def latestOffset(self):
             return {"version": current_version(self.table)}
 
-        def _manifest(self, v):
-            with open(_manifest_path(self.table, v)) as f:
-                return _json.load(f)
-
         def partitions(self, start, end):
             lo, hi = start["version"], end["version"]
             parts = []
             prev_files: set = set()
             if lo > 0:
-                prev_files = set(self._manifest(lo)["files"])
+                prev_files = set(_manifest(self.table, lo)["files"])
             for v in range(lo + 1, hi + 1):
-                m = self._manifest(v)
-                if m.get("mode") != "append" or m.get("delete_files"):
+                m = _manifest(self.table, v)
+                # a metadata-only DDL version keeps every file and adds
+                # none, so it passes as an empty batch
+                if m.get("delete_files") or not prev_files <= set(m["files"]):
                     raise ValueError(
                         f"lake stream is append-only; version {v} is "
                         f"{m.get('mode')!r}"
@@ -2707,8 +2737,7 @@ def add_bloom_index(path: str, col: str, spark: SparkSession | None = None) -> i
     image (bigint/string columns — the point-lookup contract)."""
     spark = spark or SparkSession.getActiveSession()
     v = current_version(path)
-    with open(_manifest_path(path, v)) as f:
-        m = json.load(f)
+    m = _manifest(path, v)
     src = spark.read.parquet(*[os.path.join(path, n) for n in m["files"]])
     val = F.coalesce(F.col(col).cast("string"), F.lit("None"))
     pos = src.select(
@@ -2750,16 +2779,12 @@ def add_bloom_index(path: str, col: str, spark: SparkSession | None = None) -> i
         # JVM longs are two's-complement; the Python probe shifts
         # unsigned ints — same bits, normalize the representation
         blooms[r["file"]][r["w"]] = r["bits"] & ((1 << 64) - 1)
-    m["version"] = v + 1
-    m["bloom_col"] = col
-    m["blooms"] = blooms
-    tmp = _manifest_path(path, v + 1) + f".tmp{uuid.uuid4().hex}"
-    with open(tmp, "w") as f:
-        json.dump(m, f)
-    os.link(tmp, _manifest_path(path, v + 1))
-    os.unlink(tmp)
-    _metalog_append(path, _summary_of(m, v + 1))
-    return v + 1
+    return _alter(
+        path,
+        "add_bloom",
+        lambda m: {"bloom_col": col, "blooms": blooms},
+        validated_at=v,
+    )
 
 
 def snapshot_read_point(
@@ -2771,8 +2796,7 @@ def snapshot_read_point(
     impossible (Bloom guarantee), so the result always equals a full
     scan + filter."""
     v = current_version(path)
-    with open(_manifest_path(path, v)) as f:
-        m = json.load(f)
+    m = _manifest(path, v)
     assert m.get("bloom_col") == col, "no bloom index on this column"
     files = [
         name
@@ -2818,10 +2842,8 @@ def q_lake_ivm_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshot_write(orders.filter(half == 0), path, "append")
     view = pin(sketch_of(snapshot_read(spark, path, 1)), "q_lake_ivm_distinct.view")
     snapshot_write(orders.filter(half == 1), path, "append")
-    with open(_manifest_path(path, 1)) as f:
-        v1_files = set(json.load(f)["files"])
-    with open(_manifest_path(path, 2)) as f:
-        v2_files = json.load(f)["files"]
+    v1_files = set(_manifest(path, 1)["files"])
+    v2_files = _manifest(path, 2)["files"]
     delta = spark.read.parquet(
         *[os.path.join(path, n) for n in v2_files if n not in v1_files]
     )
@@ -2961,8 +2983,7 @@ def erase_rows(spark: SparkSession, path: str, col: str, value) -> int:
     manifests = {}
     for v in range(1, latest + 1):
         try:
-            with open(_manifest_path(path, v)) as f:
-                manifests[v] = json.load(f)
+            manifests[v] = _manifest(path, v)
         except FileNotFoundError:
             continue  # vacuumed-away version: nothing left to erase there
         for _dfile, dkey, _scope in manifests[v].get("delete_files", []):
@@ -3098,10 +3119,8 @@ def erase_rows(spark: SparkSession, path: str, col: str, value) -> int:
                 ]
                 for dfile, dkey, scope in m["delete_files"]
             ]
-        tmp = _manifest_path(path, v) + f".tmp{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(m, f)
-        os.replace(tmp, _manifest_path(path, v))  # erasure rewrites history by design
+        # erasure rewrites history by design
+        _put_json(_manifest_path(path, v), m, replace=True)
         # refresh the metalog line (a rewrite can fan one file out to
         # several replacements, changing n_files): later lines override.
         # Stamped with the current compaction gen — an override for a
@@ -3192,8 +3211,7 @@ def snapshot_clone(src: str, dst: str, version: int | None = None) -> int:
     (the clone is a new ingest domain — Delta shallow clones likewise
     do not inherit txnAppId history). Returns the clone's version (1)."""
     v = version if version is not None else current_version(src)
-    with open(_manifest_path(src, v)) as f:
-        m = json.load(f)
+    m = _manifest(src, v)
     os.makedirs(dst, exist_ok=True)
     for name in m["files"]:
         os.link(os.path.join(src, name), os.path.join(dst, name))
@@ -3203,7 +3221,6 @@ def snapshot_clone(src: str, dst: str, version: int | None = None) -> int:
         # table carrying MoR deletes crashed; pinned by pytest now)
         os.link(os.path.join(src, d[0]), os.path.join(dst, d[0]))
     manifest = {
-        "version": 1,
         "mode": "clone",
         "files": m["files"],
         "stats": m.get("stats", {}),
@@ -3222,15 +3239,10 @@ def snapshot_clone(src: str, dst: str, version: int | None = None) -> int:
         "identity": m.get("identity", {}),
         "checks": m.get("checks", {}),
         "schema": m["schema"],
-        "committed_at": time.time(),
         "cloned_from": {"path": src, "version": v},
     }
-    tmp = _manifest_path(dst, 1) + f".tmp{uuid.uuid4().hex}"
-    with open(tmp, "w") as f:
-        json.dump(manifest, f)
-    os.link(tmp, _manifest_path(dst, 1))
-    os.unlink(tmp)
-    _metalog_append(dst, _summary_of(manifest, 1))
+    if not _publish(dst, 1, manifest):
+        raise ConcurrentWriteError(f"{dst} already holds a table")
     return 1
 
 
@@ -3584,7 +3596,7 @@ def q_lake_write_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def create_tag(path: str, name: str, version: int | None = None) -> int:
     """Named REF (Iceberg tag / Delta named commit): pin a human name
-    to a snapshot version in one atomically-linked ref file. Tags are
+    to a snapshot version in one claimed ref file. Tags are
     immutable — re-tagging an existing name raises (delete the ref
     file to move it deliberately). vacuum() KEEPS tagged versions
     alive past any retention horizon (Iceberg's expire_snapshots
@@ -3595,14 +3607,7 @@ def create_tag(path: str, name: str, version: int | None = None) -> int:
     if not os.path.exists(_manifest_path(path, v)):
         raise FileNotFoundError(f"no snapshot v{v} to tag")
     ref = os.path.join(path, f"_ref_{name}.json")
-    tmp = ref + f".tmp{uuid.uuid4().hex}"
-    with open(tmp, "w") as f:
-        json.dump({"name": name, "version": v}, f)
-    try:
-        os.link(tmp, ref)
-        os.unlink(tmp)
-    except FileExistsError:
-        os.unlink(tmp)
+    if not _put_json(ref, {"name": name, "version": v}):
         raise ValueError(f"tag {name!r} already exists")
     return v
 
@@ -3690,10 +3695,8 @@ def q_lake_incremental_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     def delta_of(path: str, v_old: int, v_new: int) -> DataFrame:
-        with open(_manifest_path(path, v_old)) as f:
-            old_files = set(json.load(f)["files"])
-        with open(_manifest_path(path, v_new)) as f:
-            new_files = json.load(f)["files"]
+        old_files = set(_manifest(path, v_old)["files"])
+        new_files = _manifest(path, v_new)["files"]
         return spark.read.parquet(
             *[os.path.join(path, n) for n in new_files if n not in old_files]
         )
@@ -3869,15 +3872,14 @@ def merge_branch_ff(path: str, branch: str) -> int:
     legal when main has NOT advanced past the fork point — a diverged
     merge needs 3-way semantics this layer deliberately refuses
     (Nessie/Iceberg fast-forward rule): raises ConcurrentWriteError,
-    and the atomic os.link version claim makes the whole replay safe
+    and each replayed version's claim makes the whole replay safe
     against a racing main writer (the first contested version loses
     the race and the merge aborts with main unchanged — committed
     prefix manifests reference only reachable files, so a partial
     merge is a valid table state, not corruption). Returns main's new
     version."""
     bpath = branch_path(path, branch)
-    with open(_manifest_path(bpath, 1)) as f:
-        fork = json.load(f)["cloned_from"]
+    fork = _manifest(bpath, 1)["cloned_from"]
     if os.path.normpath(fork["path"]) != os.path.normpath(path):
         raise ValueError(f"{bpath} is not a branch of {path}")
     if current_version(path) != fork["version"]:
@@ -3887,8 +3889,7 @@ def merge_branch_ff(path: str, branch: str) -> int:
         )
     main_v = fork["version"]
     for bv in range(2, current_version(bpath) + 1):
-        with open(_manifest_path(bpath, bv)) as f:
-            m = json.load(f)
+        m = _manifest(bpath, bv)
         for name in m["files"]:
             dst = os.path.join(path, name)
             if not os.path.exists(dst):
@@ -3898,19 +3899,8 @@ def merge_branch_ff(path: str, branch: str) -> int:
             if not os.path.exists(dst):
                 os.link(os.path.join(bpath, d[0]), dst)
         main_v += 1
-        m = dict(m)
-        m["version"] = main_v
-        m["committed_at"] = time.time()
-        m["merged_from"] = {"branch": branch, "branch_version": bv}
-        tmp = _manifest_path(path, main_v) + f".tmp{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(m, f)
-        try:
-            os.link(tmp, _manifest_path(path, main_v))
-            os.unlink(tmp)
-            _metalog_append(path, _summary_of(m, main_v))
-        except FileExistsError:
-            os.unlink(tmp)
+        merged_from = {"branch": branch, "branch_version": bv}
+        if not _publish(path, main_v, {**m, "merged_from": merged_from}):
             raise ConcurrentWriteError(
                 f"version {main_v} claimed concurrently during merge"
             )
@@ -3989,80 +3979,6 @@ def q_lake_branch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pre.unionAll(post)
 
 
-def merge_into_when(
-    spark: SparkSession,
-    path: str,
-    source: DataFrame,
-    key: str,
-    update_cols: list[str],
-    matched_delete: str | None = None,
-    insert_cond: str | None = None,
-    evolve_schema: bool = False,
-) -> int:
-    """Full WHEN-clause MERGE (the Delta/Iceberg MERGE surface
-    merge_into's plain upsert doesn't cover):
-
-        WHEN MATCHED AND <matched_delete>     THEN DELETE
-        WHEN MATCHED                          THEN UPDATE SET update_cols
-        WHEN NOT MATCHED [AND <insert_cond>]  THEN INSERT
-        (unmatched target rows always carry over)
-
-    Clause order is the standard: a matched row satisfying
-    ``matched_delete`` is deleted BEFORE the update applies, and the
-    condition sees PRE-update target values (SQL strings evaluated on
-    the joined frame — target columns under their own names, source
-    columns as ``__s_<col>``). Same copy-on-write shape as
-    merge_into: one MoR-aware full-outer join, one OVERWRITE publish;
-    at 100 TB the join pre-filters to key-range-intersecting files
-    via manifest stats.
-
-    ``evolve_schema=True`` is Delta's MERGE ``mergeSchema``: source
-    columns absent from the target AUTO-WIDEN the table in the SAME
-    commit — the target frame gains each new column as typed NULL
-    (rows the source never touched read back NULL), matched rows take
-    the source value through the normal update path, and the overwrite
-    publish records the widened schema plus an empty-scope ``defaults``
-    entry so later appends must carry the column (the narrow-append
-    guard; the overwrite itself rewrote every file, so nothing owes a
-    backfill). With the default False, a widening source is an ERROR
-    rather than the silent column drop the aligned-schema code path
-    would produce."""
-    target = snapshot_read_mor(spark, path)
-    new_cols = [c for c in update_cols if c not in target.columns]
-    if new_cols and not evolve_schema:
-        raise ValueError(
-            f"source column(s) {new_cols} not in target schema; "
-            f"pass evolve_schema=True to auto-widen"
-        )
-    src_fields = {f.name: f.dataType for f in source.schema.fields}
-    for c in new_cols:
-        target = target.withColumn(c, F.lit(None).cast(src_fields[c]))
-    src = source.select(
-        F.col(key).alias("__k"), *[F.col(c).alias(f"__s_{c}") for c in update_cols]
-    )
-    joined = target.join(src, target[key] == F.col("__k"), "full_outer")
-    is_matched = target[key].isNotNull() & F.col("__k").isNotNull()
-    keep = F.lit(True)
-    if matched_delete is not None:
-        keep = ~(is_matched & F.expr(matched_delete))
-    if insert_cond is not None:
-        src_only = target[key].isNull()
-        keep = keep & (~src_only | F.expr(insert_cond))
-    merged_cols = []
-    for c in target.columns:
-        if c in update_cols:
-            merged_cols.append(F.coalesce(F.col(f"__s_{c}"), F.col(c)).alias(c))
-        elif c == key:
-            merged_cols.append(F.coalesce(target[key], F.col("__k")).alias(key))
-        else:
-            merged_cols.append(F.col(c))
-    merged = joined.filter(keep).select(*merged_cols)
-    extra = (
-        {c: {"value": None, "scope": []} for c in new_cols} if new_cols else None
-    )
-    return snapshot_write(merged, path, "overwrite", extra_defaults=extra)
-
-
 @register(
     "q_lake_merge_when",
     oracle="""
@@ -4122,7 +4038,7 @@ def q_lake_merge_when(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(777).cast("bigint").alias("cents"),
         )
     )
-    merge_into_when(
+    merge_into(
         spark, path, source, "k", ["cents"], matched_delete="cents > 30000000"
     )
     return snapshot_read(spark, path).agg(
@@ -4174,7 +4090,7 @@ def q_lake_merge_when(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_lake_merge_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MERGE with AUTOMATIC SCHEMA EVOLUTION (Delta MERGE +
     mergeSchema): the CDC source carries a column the target has never
-    seen (`chan`). One merge_into_when(evolve_schema=True) call widens
+    seen (`chan`). One merge_into(evolve_schema=True) call widens
     the table, updates matched even keys (cents→0, chan→'web'),
     inserts new keys (chan→'bulk'), and leaves every untouched legacy
     row with chan NULL — all in ONE commit, which the post-merge
@@ -4201,7 +4117,7 @@ def q_lake_merge_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("bulk").alias("chan"),
         )
     )
-    merge_into_when(
+    merge_into(
         spark, path, source, "k", ["cents", "chan"], evolve_schema=True
     )
     return snapshot_read(spark, path).agg(
@@ -4492,7 +4408,7 @@ def set_generated_column(spark: SparkSession, path: str, name: str, expr: str) -
     v = current_version(path)
     if v == 0:
         raise ValueError("cannot declare a generated column on an empty table")
-    cur = snapshot_read(spark, path)
+    cur = snapshot_read(spark, path, v)
     if name not in cur.columns:
         raise ValueError(
             f"generated column {name} must exist in the schema "
@@ -4503,29 +4419,12 @@ def set_generated_column(spark: SparkSession, path: str, name: str, expr: str) -
             f"existing rows violate {name} = {expr!r}; "
             f"rewrite the data before declaring it generated"
         )
-    while True:
-        v = current_version(path)
-        with open(_manifest_path(path, v)) as f:
-            m = json.load(f)
-        generated = dict(m.get("generated", {}))
-        generated[name] = expr
-        payload = {
-            **m,
-            "version": v + 1,
-            "mode": "set_generated",
-            "generated": generated,
-            "committed_at": time.time(),
-        }
-        tmp = _manifest_path(path, v + 1) + f".tmp{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(payload, f)
-        try:
-            os.link(tmp, _manifest_path(path, v + 1))  # atomic claim
-            os.unlink(tmp)
-            _metalog_append(path, _summary_of(payload, v + 1))
-            return v + 1
-        except FileExistsError:
-            os.unlink(tmp)  # lost the race: rebase on the new version
+    return _alter(
+        path,
+        "set_generated",
+        lambda m: {"generated": {**m.get("generated", {}), name: expr}},
+        validated_at=v,
+    )
 
 
 @register(
@@ -4685,42 +4584,18 @@ def add_check_constraint(
     v0 = current_version(path)
     if v0 == 0:
         raise ValueError("cannot add a constraint to an empty table")
-    cur = snapshot_read(spark, path)
+    cur = snapshot_read(spark, path, v0)
     if cur.filter(~F.coalesce(F.expr(expr), F.lit(True))).limit(1).count():
         raise ValueError(
             f"existing rows violate CHECK {name}: {expr!r}; "
             f"clean the data before declaring it"
         )
-    while True:
-        v = current_version(path)
-        with open(_manifest_path(path, v)) as f:
-            m = json.load(f)
-        if v != v0:
-            raise ConcurrentWriteError(
-                "table moved during constraint declaration; retry"
-            )
-        checks = dict(m.get("checks", {}))
-        checks[name] = expr
-        payload = {
-            **m,
-            "version": v + 1,
-            "mode": "add_check",
-            "checks": checks,
-            "committed_at": time.time(),
-        }
-        tmp = _manifest_path(path, v + 1) + f".tmp{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(payload, f)
-        try:
-            os.link(tmp, _manifest_path(path, v + 1))  # atomic claim
-            os.unlink(tmp)
-            _metalog_append(path, _summary_of(payload, v + 1))
-            return v + 1
-        except FileExistsError:
-            os.unlink(tmp)
-            raise ConcurrentWriteError(
-                "version claimed concurrently during constraint declaration"
-            )
+    return _alter(
+        path,
+        "add_check",
+        lambda m: {"checks": {**m.get("checks", {}), name: expr}},
+        validated_at=v0,
+    )
 
 
 @register(

@@ -2,7 +2,7 @@
 
     python scripts/profile.py plans                      # HEADLINE, one row per query
     python scripts/profile.py plans --all q_stats        # full registry, substring filter
-    python scripts/profile.py plans --top 40 --dump r12 before   # plans/r12/<q>_before.txt
+    python scripts/profile.py plans --top 40 --dump audit before # plans/audit/<q>_before.txt
     python scripts/profile.py plans --md > PLAN_AUDIT.md
     python scripts/profile.py time q_tpch_q5 q_market_basket --passes 10
     python scripts/profile.py scaling --k 16 q_tpch_q21 q_dedup_substring

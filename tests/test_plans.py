@@ -962,3 +962,38 @@ def test_lateral_alias_plan_matches_expanded(spark):
     assert re.sub(r"#\d+L?", "#x", plan(lca)) != re.sub(
         r"#\d+L?", "#x", plan(expanded)
     )
+
+
+def test_lakehouse_commits_through_one_claim():
+    """Source lint: plans/lakehouse.py creates every manifest, catalog
+    version and tag ref through ONE create-once claim (``_put_json``)
+    and reads manifests through ONE reader (``_manifest``). A
+    hand-copied tmp → json.dump → os.link sequence is how the copies
+    drifted (a leaked tmp, a raw FileExistsError, a stale commit time),
+    so ``os.link(tmp`` and ``json.dump(`` may appear only in the claim
+    primitive and the metalog helpers."""
+    import ast
+    import pathlib
+
+    src = (
+        pathlib.Path(__file__).resolve().parents[1]
+        / "embarrassingly_parallel_image_classification_spark"
+        / "plans"
+        / "lakehouse.py"
+    ).read_text()
+    owner: dict[int, str] = {}
+    for node in ast.parse(src).body:
+        if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+            for ln in range(node.lineno, node.end_lineno + 1):
+                owner[ln] = node.name
+    offenders = []
+    for i, line in enumerate(src.splitlines(), 1):
+        fn = owner.get(i, "<module>")
+        if ("os.link(tmp" in line or "json.dump(" in line) and not (
+            fn == "_put_json" or fn.startswith("_metalog_")
+        ):
+            offenders.append(f"{i} {fn}: {line.strip()}")
+        if "open(_manifest_path(" in line and fn != "_manifest":
+            offenders.append(f"{i} {fn}: {line.strip()}")
+    assert not offenders, offenders
+    assert src.count("os.link(tmp") == 1

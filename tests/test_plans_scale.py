@@ -1251,8 +1251,8 @@ def test_lakehouse_merge_schema_evolution_guards(spark, tmp_path):
         F.col("id").alias("k"), F.lit("web").alias("chan")
     )
     with pytest.raises(ValueError, match="evolve_schema"):
-        lakehouse.merge_into_when(spark, path, src, "k", ["chan"])
-    v = lakehouse.merge_into_when(
+        lakehouse.merge_into(spark, path, src, "k", ["chan"])
+    v = lakehouse.merge_into(
         spark, path, src, "k", ["chan"], evolve_schema=True
     )
     rows = {
@@ -2553,3 +2553,132 @@ def test_lakehouse_check_constraint_guards(spark, tmp_path):
         lakehouse.snapshot_write(
             spark.range(-1, 0).select(F.col("id").alias("k")), dst, "append"
         )
+
+
+def test_lakehouse_generated_column_refuses_a_racing_append(
+    spark, tmp_path, monkeypatch
+):
+    """set_generated_column validates the standing data at version v,
+    so its commit must refuse once the table has moved past v. Here a
+    writer appends a violating row (k=9, dbl=-1) right after the
+    validation read resolved its files; publishing the declaration
+    would claim ``dbl = k * 2`` over data that breaks it."""
+    import pytest
+
+    from embarrassingly_parallel_image_classification_spark.plans import lakehouse
+
+    path = str(tmp_path / "gen_race")
+    lakehouse.snapshot_write(
+        spark.range(3).select(F.col("id").alias("k"), (F.col("id") * 2).alias("dbl")),
+        path,
+        "append",
+    )
+    real_read = lakehouse.snapshot_read
+
+    def racing_read(*args, **kwargs):
+        out = real_read(*args, **kwargs)
+        monkeypatch.setattr(lakehouse, "snapshot_read", real_read)
+        lakehouse.snapshot_write(
+            spark.createDataFrame([(9, -1)], "k bigint, dbl bigint"), path, "append"
+        )
+        return out
+
+    monkeypatch.setattr(lakehouse, "snapshot_read", racing_read)
+    with pytest.raises(lakehouse.ConcurrentWriteError, match="table moved"):
+        lakehouse.set_generated_column(spark, path, "dbl", "k * 2")
+    assert [h["mode"] for h in lakehouse.table_history(path)] == ["append", "append"]
+
+
+def test_lakehouse_bloom_index_commits_as_its_own_mode(spark, tmp_path, monkeypatch):
+    """add_bloom_index publishes through the shared DDL loop: history
+    reports the commit as ``add_bloom`` (not the copied ``append``), it
+    carries its own commit time, and a race it loses — another writer
+    claims the version it would publish — raises ConcurrentWriteError
+    and leaves no ``_manifest_vN.json.tmp*`` behind."""
+    import json as _json
+
+    import pytest
+
+    from embarrassingly_parallel_image_classification_spark.plans import lakehouse
+
+    path = str(tmp_path / "bloom_tbl")
+    lakehouse.snapshot_write(
+        spark.range(20).select(F.col("id").alias("k")), path, "append"
+    )
+    assert lakehouse.add_bloom_index(path, "k", spark) == 2
+    assert [h["mode"] for h in lakehouse.table_history(path)] == ["append", "add_bloom"]
+    stamps = {}
+    for v in (1, 2):
+        with open(lakehouse._manifest_path(path, v)) as f:
+            stamps[v] = _json.load(f)["committed_at"]
+    assert stamps[2] > stamps[1]
+
+    # the directory listing goes stale: the index builds on v2 while
+    # another writer lands v3, and the claim of v3 is lost
+    real_cv = lakehouse.current_version
+    calls = {"n": 0}
+
+    def stale_cv(p):
+        calls["n"] += 1
+        if calls["n"] == 1:
+            monkeypatch.setattr(lakehouse, "current_version", real_cv)
+            lakehouse.snapshot_write(
+                spark.range(20, 25).select(F.col("id").alias("k")), path, "append"
+            )
+            monkeypatch.setattr(lakehouse, "current_version", stale_cv)
+        return 2 if calls["n"] <= 2 else real_cv(p)
+
+    monkeypatch.setattr(lakehouse, "current_version", stale_cv)
+    with pytest.raises(lakehouse.ConcurrentWriteError):
+        lakehouse.add_bloom_index(path, "k", spark)
+    monkeypatch.setattr(lakehouse, "current_version", real_cv)
+    assert real_cv(path) == 3
+    assert [n for n in os.listdir(path) if ".tmp" in n] == []
+
+
+def test_lakehouse_merge_keeps_identity_and_refuses_inserts(spark, tmp_path):
+    """MERGE on an identity table: matched and carried rows keep their
+    ids (the overwrite preserves them), while a merge that would INSERT
+    — the rewrite cannot draw fresh ids, so the new rows would publish
+    NULL — or that would UPDATE the identity column is refused with the
+    table unchanged."""
+    import pytest
+
+    from embarrassingly_parallel_image_classification_spark.plans import lakehouse
+
+    path = str(tmp_path / "id_merge")
+    lakehouse.snapshot_write(
+        spark.range(0).select(
+            F.col("id").alias("k"),
+            F.lit(None).cast("bigint").alias("rid"),
+            F.lit(None).cast("bigint").alias("v"),
+        ),
+        path,
+        "append",
+    )
+    lakehouse.set_identity_column(spark, path, "rid", start=1, step=1)
+    lakehouse.snapshot_write(
+        spark.range(4).select(F.col("id").alias("k"), (F.col("id") * 10).alias("v")),
+        path,
+        "append",
+    )
+    ids = {r["k"]: r["rid"] for r in lakehouse.snapshot_read(spark, path).collect()}
+    assert sorted(ids.values()) == [1, 2, 3, 4]
+    lakehouse.merge_into(
+        spark, path, spark.createDataFrame([(1, 111), (3, 333)], "k bigint, v bigint"),
+        "k", ["v"],
+    )
+    got = {
+        r["k"]: (r["rid"], r["v"])
+        for r in lakehouse.snapshot_read(spark, path).collect()
+    }
+    assert got == {0: (ids[0], 0), 1: (ids[1], 111), 2: (ids[2], 20), 3: (ids[3], 333)}
+    v = lakehouse.current_version(path)
+    upsert = spark.createDataFrame([(1, 5), (9, 99)], "k bigint, v bigint")
+    with pytest.raises(ValueError, match="insert rows into a table with identity"):
+        lakehouse.merge_into(spark, path, upsert, "k", ["v"])
+    with pytest.raises(ValueError, match="GENERATED ALWAYS"):
+        lakehouse.merge_into(
+            spark, path, upsert.select("k", F.col("v").alias("rid")), "k", ["rid"]
+        )
+    assert lakehouse.current_version(path) == v

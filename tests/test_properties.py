@@ -583,7 +583,7 @@ def test_merge_when_matches_dict_model(spark, target, source, thresh):
         sdf = spark.createDataFrame(
             [(k, v) for k, v in source.items()], "k bigint, v bigint"
         )
-        lakehouse.merge_into_when(
+        lakehouse.merge_into(
             spark, path, sdf, "k", ["v"], matched_delete=f"v > {thresh}"
         )
         model = {}

@@ -502,3 +502,37 @@ def test_stateful_topk_survives_checkpoint_restart(spark, tmp_path):
         ("b", 1): (6, 50),
         ("b", 2): (3, 5),
     }, got
+
+
+def test_lake_stream_source_passes_metadata_only_versions(spark, tmp_path):
+    """A metadata-only DDL version (here ADD CONSTRAINT CHECK) keeps
+    every file and adds none, so the append-only stream source treats
+    it as an empty step instead of refusing it: the rows appended on
+    both sides of the DDL each arrive exactly once."""
+    from embarrassingly_parallel_image_classification_spark.plans import lakehouse
+    from embarrassingly_parallel_image_classification_spark.plans.lakehouse import (
+        _make_lake_stream_datasource,
+    )
+
+    table = str(tmp_path / "tbl")
+    out = str(tmp_path / "out")
+    mk = lambda lo, hi: spark.range(lo, hi).select(F.col("id").alias("k"))
+    lakehouse.snapshot_write(mk(0, 10), table, "append")
+    lakehouse.add_check_constraint(spark, table, "nonneg", "k >= 0")
+    lakehouse.snapshot_write(mk(10, 15), table, "append")
+    spark.dataSource.register(_make_lake_stream_datasource())
+    q = (
+        spark.readStream.format("epic_lake_stream")
+        .option("path", table)
+        .option("schema", "k bigint")
+        .option("columns", "k")
+        .load()
+        .writeStream.format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    got = sorted(r["k"] for r in spark.read.parquet(out).collect())
+    assert got == list(range(15)), got
