@@ -4,7 +4,12 @@ The embedding column (FIXTURES.md) is the engine's stand-in for the
 reference's image-feature tensors. All kernels here are higher-order
 array functions (zip_with / aggregate / transform): they execute in the
 JVM with no Python crossing and no UDF registration, so they compose
-freely with joins/windows and stay inside whole-stage codegen spans.
+freely with joins/windows. They do NOT run as generated code: in Spark
+4.1.2 both ``ArrayAggregate`` and ``ZipWith`` implement
+``CodegenFallback`` (checked with ``javap`` on
+``spark-catalyst_2.13-4.1.2.jar``), so whole-stage codegen calls out to
+the interpreter and every element of every row goes through
+interpreted ``eval``.
 
 Accumulation is in DOUBLE regardless of the input element type —
 float32 accumulation over 100 TB would drift; casting per-element costs

@@ -813,17 +813,19 @@ def q_feat_gini_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
     criterion, Breiman 1984; the ranking layer over Q8's single-stump
     split finder). The identity gain = [sum_x (sum_c c_xc^2)/n_x -
     (sum_c C_c^2)/N] / N removes every probability: per-feature-value
-    purity A_x/n_x is e6-fixed by the ANOVA DIV/MOD decomposition
-    (integer quotient + a sub-2^53 remainder divided on identical
-    bits), the baseline term likewise, and the gain is an exact
-    integer FLOOR quotient. Ranking ties break on feature name — no
-    float anywhere, unlike the textbook p log p spelling whose
-    logarithms are not correctly-rounded across engines.
+    purity A_x/n_x goes through the e6 DIV/MOD fixing
+    (operators.stats.fix_e6), the baseline term likewise, and the
+    gain is an exact integer FLOOR quotient. Ranking ties break on
+    feature name — no float anywhere, unlike the textbook p log p
+    spelling whose logarithms are not correctly-rounded across
+    engines.
 
     Plan: a 4x map-side melt (stack) then ONE census to the
     (feature, value, label) domain — bounded by the feature domains
     (5+2+7+~5 values x 5 labels), never by rows; everything after is
     arithmetic on that tiny frame. Fact scanned once."""
+    from ..operators.stats import fix_e6
+
     x = t(spark, sf_dir, "events").select(
         F.col("event_type").alias("y"),
         (
@@ -850,16 +852,7 @@ def q_feat_gini_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("c") * F.col("c")).cast("decimal(38,0)").alias("a"),
     )
     term = per_v.groupBy("feature").agg(
-        F.sum(
-            F.lit(1000000).cast("decimal(38,0)")
-            * F.expr("a div nv").cast("decimal(38,0)")
-            + F.round(
-                F.lit(1000000.0)
-                * (F.col("a") % F.col("nv")).cast("double")
-                / F.col("nv").cast("double"),
-                0,
-            ).cast("decimal(38,0)")
-        )
+        F.sum(fix_e6(F.col("a"), F.col("nv")))
         .cast("decimal(38,0)")
         .alias("a_e6"),
         F.sum("nv").cast("decimal(38,0)").alias("n"),
@@ -873,12 +866,11 @@ def q_feat_gini_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     gain = term.crossJoin(F.broadcast(base)).select(
         "feature",
-        F.expr(
-            "CAST((a_e6 - (1000000 * (c2 div nn) "
-            "+ CAST(ROUND(1000000.0 * CAST(c2 % nn AS DOUBLE) "
-            "/ CAST(nn AS DOUBLE), 0) AS DECIMAL(38,0)))) div nn "
-            "AS BIGINT)"
-        ).alias("gain_e6"),
+        F.call_function(
+            "div", F.col("a_e6") - fix_e6(F.col("c2"), F.col("nn")), F.col("nn")
+        )
+        .cast("bigint")
+        .alias("gain_e6"),
     )
     w = Window.orderBy(F.desc("gain_e6"), F.asc("feature"))
     return gain.select(

@@ -3,8 +3,9 @@
 Three tiers, trading recall for scale:
 
 * ``knn_exact`` — brute force: broadcast the (small) query set against
-  the corpus, cosine in-SQL (functions.vectors), per-query top-k via a
-  ranking window. O(|corpus|·|queries|) but embarrassingly parallel and
+  the corpus, cosine from the functions.vectors higher-order-function
+  kernels (JVM-side but interpreted, not code-generated — see that
+  module), per-query top-k via a ranking window. O(|corpus|·|queries|) but embarrassingly parallel and
   zero-shuffle on the corpus side — the correctness oracle for every
   approximate tier.
 * ``knn_lsh`` — BucketedRandomProjectionLSH (random hyperplane buckets,

@@ -2,26 +2,44 @@
 distribution-level tests a data-quality / experimentation platform runs
 beyond the per-group moments of q_agg_stats and the pooled-variance
 t-test of q_ab_test [PK] — two-sample Kolmogorov–Smirnov, the Gini
-concentration coefficient, a Kaplan–Meier survivor curve, and the
-Theil–Sen robust slope.
+concentration coefficient, a Kaplan–Meier survivor curve, the
+Theil–Sen robust slope and the k-group, rank, survival and
+contingency families that followed.
 
-House exactness discipline, extended with one new lemma used
-throughout: **identical exact integer operands, cast to DOUBLE while
-< 2^53, then divided, are the SAME IEEE double in every engine**
-(casts of such integers are exact; division is correctly rounded), so
-a final ROUND(x * 1e6) agrees bit-for-bit between Spark and DuckDB
-with NO boundary case at all — the rounding decision is made on the
-same double. Decisions (significance booleans) never touch floats:
-they are cross-multiplied DECIMAL(38,0) integer comparisons
-(q_ab_test's multiply-through pattern). The only e6 log fixing (LN of
-a small-step rational, the q_select_dsir / q_text_perplexity
-precedent) is in the Kaplan–Meier step table, which is bounded by the
-distinct-duration domain, never by row count.
+Exactness rule (every query here is judged by exact DuckDB parity):
+
+* Operands are exact integers — cents, counts, ranks carried doubled —
+  summed in DECIMAL(38,0) (the oracle's HUGEINT).
+* A reported rational is one double division of exact integer
+  operands below 2^53: casting such an integer to DOUBLE is exact and
+  division is correctly rounded, so both engines hold the SAME double
+  and a final ROUND(x * 1e6) agrees bit for bit, with no boundary
+  case.
+* A rational whose numerator is too large for that (s^2/n at ~10^24)
+  goes through ``fix_e6``, the e6 DIV/MOD fixing: an exact integer
+  quotient plus a rounded remainder whose operands are again below
+  2^53. Sums of fixings are exact integers.
+* Decisions (significance booleans) never touch floats: they are
+  cross-multiplied DECIMAL(38,0) integer comparisons (q_ab_test's
+  multiply-through pattern), or exact floor quotients against an
+  integer critical value.
+
+The only e6 log fixing (LN of a small-step rational, the q_select_dsir
+/ q_text_perplexity precedent) is in the Kaplan–Meier step table,
+which is bounded by the distinct-duration domain, never by row count.
+
+Families that share a census or a chain read it from one function:
+``_type_cents`` / ``_type_moments`` (events by type in cents),
+``_oneway_ss`` (ANOVA sums of squares), ``_chi2_terms`` (contingency
+cells), ``_fo_census`` (the F-vs-O order samples),
+``_ab_scores`` (Ansari-Bradley tie-block scores), ``_durations`` /
+``_risk_table`` (survival), ``_type_day_sums`` (per type and day),
+``_lower_median`` and ``_orders_strata``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..localframe import local_df, pin
@@ -35,6 +53,213 @@ D38 = "decimal(38,0)"
 # D_num^2 * 10^6 > 1358^2 * (n+m) * n * m over exact integers
 # (D_num = max |CA*m - CB*n| is the cross-multiplied sup-distance).
 KS_C2_E6 = 1358 * 1358  # 1,844,164 = round(1.358^2 * 1e6)
+
+def fix_e6(num: Column, den: Column) -> Column:
+    """round(10^6 * num / den) as an exact DECIMAL(38,0): the e6 DIV/MOD
+    fixing 10^6 * (num div den) + round(10^6 * (num mod den) / den).
+
+    Precondition: 0 <= num, 0 < den < 2^53, and the result fits
+    DECIMAL(38,0) (num < 10^32). The quotient is exact integer
+    arithmetic. The remainder r = num mod den is below den < 2^53, so r
+    and den convert to DOUBLE exactly; 10^6 * r and the division by den
+    are each correctly rounded, so Spark and DuckDB (whose oracles spell
+    ``1000000 * (num // den) + CAST(ROUND(1000000.0 * CAST(num % den AS
+    DOUBLE) / CAST(den AS DOUBLE), 0) AS HUGEINT)``) round the SAME
+    double — identical operand bits, identical result, where a naive
+    10^6 * num / den would divide a ~10^24 numerator that no double
+    holds exactly. The quotient is a DECIMAL division of num - r, which
+    is exact: Spark's ``div`` returns BIGINT and silently wraps
+    quotients past 2^63."""
+    num, den = num.cast(D38), den.cast(D38)
+    return F.lit(1000000).cast(D38) * ((num - num % den) / den).cast(D38) + F.round(
+        F.lit(1000000.0) * (num % den).cast("double") / den.cast("double"), 0
+    ).cast(D38)
+
+
+def _type_cents(spark: SparkSession, sf_dir: str, value: str) -> DataFrame:
+    """(g, <value>): every event's type and its value in integer cents."""
+    return t(spark, sf_dir, "events").select(
+        F.col("event_type").alias("g"),
+        F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)").alias(value),
+    )
+
+
+def _type_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(g, n, s, q) per event type: count, cent sum and cent square sum
+    in DECIMAL(38,0) — one map-side-combined census to 5 rows."""
+    return _type_cents(spark, sf_dir, "cents").groupBy("g").agg(
+        F.count("*").cast(D38).alias("n"),
+        F.sum("cents").cast(D38).alias("s"),
+        F.sum(F.col("cents") * F.col("cents")).cast(D38).alias("q"),
+    )
+
+
+def _oneway_ss(grp: DataFrame) -> DataFrame:
+    """1-row (nn, k, ssb_e6, ssw_e6): the one-way ANOVA sums of squares
+    from a per-group (n, s, q) DECIMAL(38,0) frame. With A = sum_g
+    s_g^2/n_g, SSB = A - S^2/N and SSW = Q - A; every s^2/n is one
+    fix_e6, so both sums are exact integers in e6 units."""
+    gterm = grp.select(
+        "n", "s", "q", fix_e6(F.col("s") * F.col("s"), F.col("n")).alias("term_e6")
+    )
+    tot = gterm.agg(
+        F.sum("n").cast(D38).alias("nn"),
+        F.sum("s").cast(D38).alias("ss"),
+        F.sum("q").cast(D38).alias("qq"),
+        F.sum("term_e6").cast(D38).alias("a_e6"),
+        F.count("*").cast(D38).alias("k"),
+    )
+    return tot.select(
+        "nn",
+        "k",
+        (F.col("a_e6") - fix_e6(F.col("ss") * F.col("ss"), F.col("nn"))).alias(
+            "ssb_e6"
+        ),
+        (F.lit(1000000).cast(D38) * F.col("qq") - F.col("a_e6")).alias("ssw_e6"),
+    )
+
+
+def _chi2_terms(cells: DataFrame, row: str, col: str, *keep: str) -> DataFrame:
+    """(*keep, n, term_e6) per cell of a contingency frame of observed
+    counts ``o`` (DECIMAL(38,0)) keyed by ``row`` x ``col``; ``keep``
+    names the cell columns to carry, ``o`` among them. With
+    expected E = row*col/n, (O-E)^2/E is spelled multiplied through as
+    (O*n - row*col)^2 / (n*row*col): exact integer operands and one
+    double division per cell, e6-rounded; the statistic is the exact
+    sum of the cell terms."""
+    tot = cells.select(
+        *keep,
+        F.sum("o").over(Window.partitionBy(row)).alias("row_t"),
+        F.sum("o").over(Window.partitionBy(col)).alias("col_t"),
+        F.sum("o").over(Window.partitionBy()).alias("n"),
+    )
+    num = F.col("o") * F.col("n") - F.col("row_t") * F.col("col_t")
+    return tot.select(
+        *keep,
+        "n",
+        F.round(
+            (num * num).cast("double")
+            / (F.col("n") * F.col("row_t") * F.col("col_t")).cast("double")
+            * 1000000,
+            0,
+        )
+        .cast("bigint")
+        .alias("term_e6"),
+    )
+
+
+def _lower_median(census: DataFrame, value: str, *by: str) -> DataFrame:
+    """(*by, med): per ``by`` group the LOWER median of ``value`` from a
+    (*by, value, c) count census — the least value whose running count
+    reaches (n + 1) div 2. Exact, no percentile approximation."""
+    wcum = (
+        Window.partitionBy(*by)
+        .orderBy(value)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    cum = census.select(
+        *by,
+        value,
+        F.sum("c").over(wcum).alias("cum"),
+        F.sum("c").over(Window.partitionBy(*by)).alias("n_g"),
+    )
+    return (
+        cum.filter(F.col("cum") >= F.expr("(n_g + 1) div 2"))
+        .groupBy(*by)
+        .agg(F.min(value).alias("med"))
+    )
+
+
+def _fo_census(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(v, ca, cb, t) over the finished ('F') and open ('O') orders, the
+    two samples of every two-sample order test: per distinct total
+    price v in integer cents the 'F' count, the 'O' count and the
+    pooled count (BIGINT) — one map-side-combined census to the value
+    domain, bounded by the price range, not the rows."""
+    x = (
+        t(spark, sf_dir, "orders")
+        .filter(F.col("o_orderstatus").isin("F", "O"))
+        .select(
+            F.col("o_orderstatus").alias("st"),
+            F.expr("CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)").alias("v"),
+        )
+    )
+    return x.groupBy("v").agg(
+        F.sum(F.when(F.col("st") == "F", 1).otherwise(0)).cast("bigint").alias("ca"),
+        F.sum(F.when(F.col("st") == "O", 1).otherwise(0)).cast("bigint").alias("cb"),
+        F.count("*").cast("bigint").alias("t"),
+    )
+
+
+def _durations(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(user_id, d_min, observed) per user: whole minutes from the
+    first event to the first purchase, or to the last event when the
+    user never purchased (censored, observed = false)."""
+    e = t(spark, sf_dir, "events").select(
+        "user_id",
+        "event_type",
+        F.unix_timestamp(F.date_trunc("second", "ts")).alias("sec"),
+    )
+    per_user = e.groupBy("user_id").agg(
+        F.min("sec").alias("t0"),
+        F.min(F.when(F.col("event_type") == "purchase", F.col("sec"))).alias("tp"),
+        F.max("sec").alias("tl"),
+    )
+    return per_user.select(
+        "user_id",
+        F.expr("(coalesce(tp, tl) - t0) DIV 60").alias("d_min"),
+        F.col("tp").isNotNull().alias("observed"),
+    )
+
+
+def _risk_table(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(d_min, d_i, n_i) per distinct duration: d_i observed events and
+    n_i users still at risk (one descending cumulative count over the
+    distinct-duration domain)."""
+    steps = _durations(spark, sf_dir).groupBy("d_min").agg(
+        F.count(F.when(F.col("observed"), 1)).alias("d_i"),
+        F.count("*").alias("c_all"),
+    )
+    wdesc = Window.orderBy(F.col("d_min").desc()).rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    return steps.select("d_min", "d_i", F.sum("c_all").over(wdesc).alias("n_i"))
+
+
+def _type_day_sums(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(g, d, v): per event type and calendar day the cent sum — the
+    calendar-bounded series the trend, serial and blocked tests read."""
+    return (
+        t(spark, sf_dir, "events")
+        .groupBy(
+            F.col("event_type").alias("g"),
+            F.col("ts").cast("date").alias("d"),
+        )
+        .agg(
+            F.sum(F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)"))
+            .cast("bigint")
+            .alias("v")
+        )
+    )
+
+
+def _orders_strata(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(k, nk, r1, c1, a) per order-priority stratum with at least two
+    orders: the stratum size, the exposed count (even custkey), the
+    finished count and their overlap, in DECIMAL(38,0)."""
+    x = t(spark, sf_dir, "orders").select(
+        F.expr("CAST(SUBSTRING(o_orderpriority, 1, 1) AS BIGINT)").alias("k"),
+        F.when(F.col("o_custkey") % 2 == 0, 1).otherwise(0).alias("e"),
+        F.when(F.col("o_orderstatus") == "F", 1).otherwise(0).alias("s"),
+    )
+    strata = x.groupBy("k").agg(
+        F.count("*").cast(D38).alias("nk"),
+        F.sum("e").cast(D38).alias("r1"),
+        F.sum("s").cast(D38).alias("c1"),
+        F.sum(F.col("e") * F.col("s")).cast(D38).alias("a"),
+    )
+    return strata.filter(F.col("nk") >= 2)
+
 
 # Theil-Sen pair budget: the estimator is O(n^2) pairs by nature, so
 # production fits a RECENT WINDOW per key — this cap IS the scale
@@ -101,18 +326,7 @@ def q_stats_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     max. The fact table is scanned once and shuffles only value-domain
     partials; at 100 TB the cumulative step is a range-partitioned
     prefix sum over the same bounded domain."""
-    x = (
-        t(spark, sf_dir, "orders")
-        .filter(F.col("o_orderstatus").isin("F", "O"))
-        .select(
-            F.col("o_orderstatus").alias("st"),
-            F.expr("CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)").alias("v"),
-        )
-    )
-    per_v = x.groupBy("v").agg(
-        F.count(F.when(F.col("st") == "F", 1)).alias("ca"),
-        F.count(F.when(F.col("st") == "O", 1)).alias("cb"),
-    )
+    per_v = _fo_census(spark, sf_dir)
     wcum = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, Window.currentRow)
     wall = Window.orderBy("v").rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
@@ -299,30 +513,7 @@ def q_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy down to the distinct-duration domain, two windows over
     that domain-sized frame. Row count touches only the first
     aggregate; everything after is bounded by the duration domain."""
-    e = t(spark, sf_dir, "events").select(
-        "user_id",
-        "event_type",
-        F.unix_timestamp(F.date_trunc("second", "ts")).alias("sec"),
-    )
-    per_user = e.groupBy("user_id").agg(
-        F.min("sec").alias("t0"),
-        F.min(F.when(F.col("event_type") == "purchase", F.col("sec"))).alias("tp"),
-        F.max("sec").alias("tl"),
-    )
-    dur = per_user.select(
-        F.expr("(coalesce(tp, tl) - t0) DIV 60").alias("d_min"),
-        F.col("tp").isNotNull().alias("observed"),
-    )
-    steps = dur.groupBy("d_min").agg(
-        F.count(F.when(F.col("observed"), 1)).alias("d_i"),
-        F.count("*").alias("c_all"),
-    )
-    wdesc = Window.orderBy(F.col("d_min").desc()).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    risk = steps.select(
-        "d_min", "d_i", F.sum("c_all").over(wdesc).alias("n_i")
-    )
+    risk = _risk_table(spark, sf_dir)
     km = risk.filter((F.col("d_i") > 0) & (F.col("n_i") > F.col("d_i"))).select(
         "d_min",
         "d_i",
@@ -822,27 +1013,7 @@ def q_stats_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type", (F.col("user_id") % 2 == 0).alias("treat"))
         .agg(F.count("*").cast(D38).alias("o"))
     )
-    wrow = Window.partitionBy("event_type")
-    wcol = Window.partitionBy("treat")
-    wall = Window.partitionBy()
-    tot = cells.select(
-        "o",
-        F.sum("o").over(wrow).alias("row_t"),
-        F.sum("o").over(wcol).alias("col_t"),
-        F.sum("o").over(wall).alias("n"),
-    )
-    num = F.col("o") * F.col("n") - F.col("row_t") * F.col("col_t")
-    terms = tot.select(
-        "n",
-        F.round(
-            (num * num).cast("double")
-            / (F.col("n") * F.col("row_t") * F.col("col_t")).cast("double")
-            * 1000000,
-            0,
-        )
-        .cast("bigint")
-        .alias("term_e6"),
-    )
+    terms = _chi2_terms(cells, "event_type", "treat", "o")
     return terms.agg(
         F.max("n").cast("bigint").alias("n"),
         F.sum("term_e6").cast("bigint").alias("chi2_e6"),
@@ -1226,8 +1397,8 @@ def q_stats_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     C - D = sum c * (LL - LG) counts every pair exactly once at its
     larger-v member. Tie corrections n1/n2 come from the two marginal
     censuses; tau_b's one float expression (the sqrt quotient) runs on
-    identical exact-integer operand bits in both engines (< 2^53 —
-    the module-header lemma, same bound q_stats_spearman documents).
+    exact integer operands below 2^53 (the bound q_stats_spearman
+    documents).
     The naive spelling is a self-join of n rows with n rows per type
     — 4 * 10^6 pairs at sf0.01 and ruinous at any real scale; the
     grid spelling's cost is fixed by the domains alone.
@@ -1397,14 +1568,10 @@ def q_stats_anova(spark: SparkSession, sf_dir: str) -> DataFrame:
     groups; completes the classical battery next to Kruskal-free rank
     tests (Mann-Whitney) and the chi-square.
 
-    Exactness: each group's between-term s_g^2/n_g is e6-fixed by
-    integer DIV/MOD decomposition — 10^6*(s^2 div n) is exact integer
-    arithmetic and the residue r = s^2 mod n is < n < 2^53, so
-    round(10^6*r/n) divides identical operand bits in both engines
-    (module-header lemma; no operand anywhere near the 2^53 cliff,
-    unlike a naive 10^6*s^2/n whose numerator is ~10^24). SSB_e6 and
-    SSW_e6 are then exact integer sums/differences of those fixings
-    (house DECIMAL(38,0)); the F statistic is reported as an exact
+    Exactness: each group's between-term s_g^2/n_g goes through
+    fix_e6 (a naive 10^6*s^2/n would divide a ~10^24 numerator), and
+    SSB_e6 / SSW_e6 are exact integer sums of those fixings
+    (``_oneway_ss``); the F statistic is reported as an exact
     FLOOR-e6 integer quotient and the alpha = 0.05 decision is the
     cross-multiplied integer comparison SSB*(n-k)*10^4 >
     crit*SSW*(k-1) — no float ever enters the verdict.
@@ -1413,58 +1580,13 @@ def q_stats_anova(spark: SparkSession, sf_dir: str) -> DataFrame:
     after is arithmetic on a 5-row frame. The fact table is scanned
     once; at any scale this is the optimal shape (partial aggregation
     does all the work map-side)."""
-    x = t(spark, sf_dir, "events").select(
-        F.col("event_type").alias("g"),
-        F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)").alias("cents"),
-    )
-    grp = x.groupBy("g").agg(
-        F.count("*").cast(D38).alias("n"),
-        F.sum("cents").cast(D38).alias("s"),
-        F.sum(F.col("cents") * F.col("cents")).cast(D38).alias("q"),
-    )
-    s2 = F.col("s") * F.col("s")
-    gterm = grp.select(
-        "n",
-        "s",
-        "q",
-        (
-            F.lit(1000000).cast(D38) * F.expr("(s * s) div n").cast(D38)
-            + F.round(
-                F.lit(1000000.0)
-                * (s2 % F.col("n")).cast("double")
-                / F.col("n").cast("double"),
-                0,
-            ).cast(D38)
-        ).alias("term_e6"),
-    )
-    tot = gterm.agg(
-        F.sum("n").cast(D38).alias("nn"),
-        F.sum("s").cast(D38).alias("ss"),
-        F.sum("q").cast(D38).alias("qq"),
-        F.sum("term_e6").cast(D38).alias("a_e6"),
-        F.count("*").cast(D38).alias("k"),
-    )
-    ss2 = F.col("ss") * F.col("ss")
-    fin = tot.select(
-        "nn",
-        "k",
-        (
-            F.col("a_e6")
-            - (
-                F.lit(1000000).cast(D38)
-                * F.expr("(ss * ss) div nn").cast(D38)
-                + F.round(
-                    F.lit(1000000.0)
-                    * (ss2 % F.col("nn")).cast("double")
-                    / F.col("nn").cast("double"),
-                    0,
-                ).cast(D38)
-            )
-        ).alias("ssb_e6"),
-        (F.lit(1000000).cast(D38) * F.col("qq") - F.col("a_e6")).alias(
-            "ssw_e6"
-        ),
-    )
+    return _f_verdict(_oneway_ss(_type_moments(spark, sf_dir)), "f_e6_floor")
+
+
+def _f_verdict(fin: DataFrame, floor: str) -> DataFrame:
+    """The one-way F output over ``_oneway_ss``: n, k_groups, the two
+    sums, the FLOOR-e6 ratio SSB(n-k)/(SSW(k-1)) as ``floor``, and the
+    alpha = 0.05 verdict SSB*(n-k)*10^4 > crit*SSW*(k-1)."""
     return fin.select(
         F.col("nn").cast("bigint").alias("n"),
         F.col("k").cast("bigint").alias("k_groups"),
@@ -1474,7 +1596,7 @@ def q_stats_anova(spark: SparkSession, sf_dir: str) -> DataFrame:
             "(ssb_e6 * (nn - k) * 1000000) div (ssw_e6 * (k - 1))"
         )
         .cast("bigint")
-        .alias("f_e6_floor"),
+        .alias(floor),
         (
             F.col("ssb_e6") * (F.col("nn") - F.col("k")) * F.lit(10000)
             > F.lit(ANOVA_F_CRIT_E4)
@@ -1529,9 +1651,8 @@ def q_stats_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     associations far too small to matter; V is what a analyst actually
     reads). V^2 = chi^2 / (n * min(r-1, c-1)) with min-dim 4.
 
-    Exactness: the chi-square statistic reuses q_stats_chi2's
-    multiplied-through per-cell e6 fixing (exact DECIMAL operands,
-    one identical-bits double division per cell); V^2 is then the
+    Exactness: the chi-square statistic is q_stats_chi2's per-cell
+    sum (``_chi2_terms``); V^2 is then the
     exact FLOOR-e9 integer quotient chi2_e6 * 1000 div (n * 4), and
     the V > 0.2 'strong association' call is the cross-multiplied
     integer comparison chi2_e6 * 25 > n * 4 * 10^6. No float in any
@@ -1549,28 +1670,7 @@ def q_stats_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count("*").cast(D38).alias("o"))
     )
-    wrow = Window.partitionBy("event_type")
-    wcol = Window.partitionBy("kb")
-    wall = Window.partitionBy()
-    tot = cells.select(
-        "o",
-        F.sum("o").over(wrow).alias("row_t"),
-        F.sum("o").over(wcol).alias("col_t"),
-        F.sum("o").over(wall).alias("n"),
-    )
-    num = F.col("o") * F.col("n") - F.col("row_t") * F.col("col_t")
-    terms = tot.select(
-        "n",
-        F.round(
-            (num * num).cast("double")
-            / (F.col("n") * F.col("row_t") * F.col("col_t")).cast("double")
-            * 1000000,
-            0,
-        )
-        .cast("bigint")
-        .alias("term_e6"),
-    )
-    s = terms.agg(
+    s = _chi2_terms(cells, "event_type", "kb", "o").agg(
         F.max("n").cast("bigint").alias("n"),
         F.sum("term_e6").cast("bigint").alias("chi2_e6"),
     )
@@ -1816,10 +1916,7 @@ def _kruskal_groups(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFr
     midranks r2 = 2*c_lt + t + 1. Both are marginals of one pinned joint
     (group, value) census: ONE fact scan instead of three (round 12 —
     the q_stats_kendall rule; dunn's before-plan held 7 fact scans)."""
-    x = t(spark, sf_dir, "events").select(
-        F.col("event_type").alias("g"),
-        F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)").alias("v"),
-    )
+    x = _type_cents(spark, sf_dir, "v")
     gv = pin(
         x.groupBy("g", "v").agg(F.count("*").cast("bigint").alias("c")),
         "kruskal.gv",
@@ -1915,7 +2012,7 @@ def q_stats_kruskal(spark: SparkSession, sf_dir: str) -> DataFrame:
     test misses under skew. Pooled midranks come from the global tie
     census carried DOUBLED (2*c_lt + t + 1 — the house integer-rank
     identity), so each group's rank sum S2_g = 2*R_g is an exact
-    integer; S2_g^2/n_g is e6-fixed by the ANOVA DIV/MOD decomposition
+    integer; S2_g^2/n_g goes through fix_e6
     (S2^2 = 4R^2, so 12*sum(R^2/n) = 3*sum(S2^2/n) exactly);
     H = 12*sum(R^2/n)/(N(N+1)) - 3(N+1) and
     the tie correction H/C with C = 1 - sum(t^3-t)/(N^3-N) are exact
@@ -1932,19 +2029,7 @@ def q_stats_kruskal(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Catalyst often reuses the exchange); rows never windowed."""
     per_v, grp = _kruskal_groups(spark, sf_dir)
     gterm = grp.select(
-        "ng",
-        (
-            F.lit(1000000).cast(D38)
-            * F.expr("(s2 * s2) div ng").cast(D38)
-            + F.round(
-                F.lit(1000000.0)
-                * ((F.col("s2") * F.col("s2")) % F.col("ng")).cast(
-                    "double"
-                )
-                / F.col("ng").cast("double"),
-                0,
-            ).cast(D38)
-        ).alias("term_e6"),
+        "ng", fix_e6(F.col("s2") * F.col("s2"), F.col("ng")).alias("term_e6")
     )
     ties = per_v.agg(
         F.sum(
@@ -2059,39 +2144,7 @@ def q_survival_nelson_aalen(spark: SparkSession, sf_dir: str) -> DataFrame:
     at-risk counts, two ascending cumulative sums over the step
     domain. Fact scanned once; every post-census frame is bounded by
     the distinct-duration domain."""
-    e = t(spark, sf_dir, "events").select(
-        "user_id",
-        "event_type",
-        F.expr(
-            "CAST(unix_timestamp(date_trunc('second', ts)) AS BIGINT)"
-        ).alias("sec"),
-    )
-    per_user = e.groupBy("user_id").agg(
-        F.min("sec").alias("t0"),
-        F.min(
-            F.when(F.col("event_type") == "purchase", F.col("sec"))
-        ).alias("tp"),
-        F.max("sec").alias("tl"),
-    )
-    dur = per_user.select(
-        F.expr(
-            "CAST((CASE WHEN tp IS NOT NULL THEN tp ELSE tl END - t0) "
-            "div 60 AS BIGINT)"
-        ).alias("d_min"),
-        F.col("tp").isNotNull().alias("observed"),
-    )
-    steps = dur.groupBy("d_min").agg(
-        F.count(F.when(F.col("observed"), 1)).alias("d_i"),
-        F.count("*").alias("c_all"),
-    )
-    wdesc = (
-        Window.orderBy(F.desc("d_min"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    risk = steps.select(
-        "d_min", "d_i", F.sum("c_all").over(wdesc).alias("n_i")
-    )
-    na = risk.filter(F.col("d_i") > 0).select(
+    na = _risk_table(spark, sf_dir).filter(F.col("d_i") > 0).select(
         "d_min",
         "d_i",
         "n_i",
@@ -2226,37 +2279,16 @@ def q_survival_logrank(spark: SparkSession, sf_dir: str) -> DataFrame:
     descending cumulative sums sharing one window order (at-risk
     total and at-risk group-1), one fold. Fact scanned once; every
     post-census frame bounded by the duration domain."""
-    e = t(spark, sf_dir, "events").select(
-        "user_id",
-        "event_type",
-        F.expr(
-            "CAST(unix_timestamp(date_trunc('second', ts)) AS BIGINT)"
-        ).alias("sec"),
+    dur = _durations(spark, sf_dir).select(
+        (F.col("user_id") % 2 == 0).alias("grp"), "d_min", "observed"
     )
-    per_user = e.groupBy("user_id").agg(
-        (F.col("user_id") % 2 == 0).alias("grp"),
-        F.min("sec").alias("t0"),
-        F.min(
-            F.when(F.col("event_type") == "purchase", F.col("sec"))
-        ).alias("tp"),
-        F.max("sec").alias("tl"),
-    )
-    dur = per_user.select(
-        "grp",
-        F.expr(
-            "CAST((CASE WHEN tp IS NOT NULL THEN tp ELSE tl END - t0) "
-            "div 60 AS BIGINT)"
-        ).alias("d_min"),
-        F.col("tp").isNotNull().alias("observed"),
-    )
-    d38 = "decimal(38,0)"
     steps = dur.groupBy("d_min").agg(
-        F.count(F.when(F.col("observed"), 1)).cast(d38).alias("d_i"),
+        F.count(F.when(F.col("observed"), 1)).cast(D38).alias("d_i"),
         F.count(F.when(F.col("observed") & F.col("grp"), 1))
-        .cast(d38)
+        .cast(D38)
         .alias("d1_i"),
-        F.count("*").cast(d38).alias("c_all"),
-        F.count(F.when(F.col("grp"), 1)).cast(d38).alias("c1"),
+        F.count("*").cast(D38).alias("c_all"),
+        F.count(F.when(F.col("grp"), 1)).cast(D38).alias("c1"),
     )
     wdesc = Window.orderBy(F.desc("d_min")).rowsBetween(
         Window.unboundedPreceding, Window.currentRow
@@ -2276,7 +2308,7 @@ def q_survival_logrank(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.col("n_i").cast("double"),
             0,
         )
-        .cast(d38)
+        .cast(D38)
         .alias("e1_e6"),
         F.when(
             F.col("n_i") > 1,
@@ -2295,16 +2327,16 @@ def q_survival_logrank(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
         .otherwise(0)
-        .cast(d38)
+        .cast(D38)
         .alias("v_e6"),
     )
     s = terms.agg(
         F.sum(
-            F.col("d1_i").cast(d38) * 1000000 - F.col("e1_e6")
+            F.col("d1_i").cast(D38) * 1000000 - F.col("e1_e6")
         )
-        .cast(d38)
+        .cast(D38)
         .alias("omE_e6"),
-        F.sum("v_e6").cast(d38).alias("v_e6"),
+        F.sum("v_e6").cast(D38).alias("v_e6"),
         F.sum("d1_i").cast("bigint").alias("o1"),
         F.count("*").cast("bigint").alias("n_steps"),
     )
@@ -2717,19 +2749,7 @@ def _friedman_blocks(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataF
     downstream frame (complete-block filter, tie census, rank join);
     unpinned, each consumer re-ran the fact scan (the q_stats_kendall
     subtree-specialization finding)."""
-    cell = pin(
-        t(spark, sf_dir, "events")
-        .groupBy(
-            F.col("ts").cast("date").alias("d"),
-            F.col("event_type").alias("g"),
-        )
-        .agg(
-            F.sum(F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)"))
-            .cast("bigint")
-            .alias("v")
-        ),
-        "friedman.cell",
-    )
+    cell = pin(_type_day_sums(spark, sf_dir), "friedman.cell")
     complete = (
         cell.groupBy("d").agg(F.count("*").alias("kk"))
         .filter(F.col("kk") == FRIEDMAN_K)
@@ -3140,40 +3160,21 @@ def q_stats_brown_forsythe(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exactness: the group median comes from the (group, value) census
     with a cumulative window — the LOWER median (min value whose
     cumulative count reaches (n+1) div 2), a deterministic convention
-    both engines share; z is then an exact INTEGER, so the entire
-    q_stats_anova machinery applies verbatim: weighted group sums
-    (n, s, q) from census rows, s^2/n e6-fixed by the DIV/MOD
-    decomposition on identical operand bits, SSB/SSW exact integer
-    sums, W as a floor-e6 quotient and the alpha = 0.05 / df = (4, inf)
-    verdict cross-multiplied — no float in any decision.
+    both engines share; z is then an exact INTEGER, so q_stats_anova's
+    chain applies verbatim to weighted group sums (n, s, q) from
+    census rows: ``_oneway_ss`` for SSB/SSW, W as a floor-e6 quotient
+    and the alpha = 0.05 / df = (4, inf) verdict cross-multiplied.
 
     Plan: ONE census to the (group, value-domain) frame serves the
     median, the z transform, and all three moment sums — the fact
     table is scanned once and never re-touched; everything after is
     windows and folds over domain-bounded frames."""
-    x = t(spark, sf_dir, "events").select(
-        F.col("event_type").alias("g"),
-        F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)").alias("cents"),
+    gv = (
+        _type_cents(spark, sf_dir, "cents")
+        .groupBy("g", "cents")
+        .agg(F.count("*").cast("bigint").alias("c"))
     )
-    gv = x.groupBy("g", "cents").agg(F.count("*").cast("bigint").alias("c"))
-    wcum = (
-        Window.partitionBy("g")
-        .orderBy("cents")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    wtot = Window.partitionBy("g")
-    cum = gv.select(
-        "g",
-        "cents",
-        "c",
-        F.sum("c").over(wcum).alias("cum"),
-        F.sum("c").over(wtot).alias("n_g"),
-    )
-    med = (
-        cum.filter(F.col("cum") >= F.expr("(n_g + 1) div 2"))
-        .groupBy("g")
-        .agg(F.min("cents").alias("med"))
-    )
+    med = _lower_median(gv, "cents", "g")
     z = gv.join(med, "g").select(
         "g", F.abs(F.col("cents") - F.col("med")).alias("z"), "c"
     )
@@ -3182,66 +3183,7 @@ def q_stats_brown_forsythe(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("c") * F.col("z")).cast(D38).alias("s"),
         F.sum(F.col("c") * F.col("z") * F.col("z")).cast(D38).alias("q"),
     )
-    s2 = F.col("s") * F.col("s")
-    gterm = grp.select(
-        "n",
-        "s",
-        "q",
-        (
-            F.lit(1000000).cast(D38) * F.expr("(s * s) div n").cast(D38)
-            + F.round(
-                F.lit(1000000.0)
-                * (s2 % F.col("n")).cast("double")
-                / F.col("n").cast("double"),
-                0,
-            ).cast(D38)
-        ).alias("term_e6"),
-    )
-    tot = gterm.agg(
-        F.sum("n").cast(D38).alias("nn"),
-        F.sum("s").cast(D38).alias("ss"),
-        F.sum("q").cast(D38).alias("qq"),
-        F.sum("term_e6").cast(D38).alias("a_e6"),
-        F.count("*").cast(D38).alias("k"),
-    )
-    ss2 = F.col("ss") * F.col("ss")
-    fin = tot.select(
-        "nn",
-        "k",
-        (
-            F.col("a_e6")
-            - (
-                F.lit(1000000).cast(D38)
-                * F.expr("(ss * ss) div nn").cast(D38)
-                + F.round(
-                    F.lit(1000000.0)
-                    * (ss2 % F.col("nn")).cast("double")
-                    / F.col("nn").cast("double"),
-                    0,
-                ).cast(D38)
-            )
-        ).alias("ssb_e6"),
-        (F.lit(1000000).cast(D38) * F.col("qq") - F.col("a_e6")).alias(
-            "ssw_e6"
-        ),
-    )
-    return fin.select(
-        F.col("nn").cast("bigint").alias("n"),
-        F.col("k").cast("bigint").alias("k_groups"),
-        F.col("ssb_e6").cast("bigint").alias("ssb_e6"),
-        F.col("ssw_e6").cast("bigint").alias("ssw_e6"),
-        F.expr(
-            "(ssb_e6 * (nn - k) * 1000000) div (ssw_e6 * (k - 1))"
-        )
-        .cast("bigint")
-        .alias("w_e6_floor"),
-        (
-            F.col("ssb_e6") * (F.col("nn") - F.col("k")) * F.lit(10000)
-            > F.lit(ANOVA_F_CRIT_E4)
-            * F.col("ssw_e6")
-            * (F.col("k") - F.lit(1))
-        ).alias("significant"),
-    )
+    return _f_verdict(_oneway_ss(grp), "w_e6_floor")
 
 
 # F(0.95; 1, 26) = t(0.975; 26)^2 = 4.2252, e4-fixed. df2 = 26 is
@@ -3545,18 +3487,7 @@ def _group_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum and cent square sum in DECIMAL(38,0) — shared by tukey and
     games_howell. Every downstream marginal / self-join side reads it;
     unpinned, each consumer re-paid the fact scan."""
-    x = t(spark, sf_dir, "events").select(
-        F.col("event_type").alias("g"),
-        F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)").alias("cents"),
-    )
-    return pin(
-        x.groupBy("g").agg(
-            F.count("*").cast(D38).alias("n"),
-            F.sum("cents").cast(D38).alias("s"),
-            F.sum(F.col("cents") * F.col("cents")).cast(D38).alias("q"),
-        ),
-        "group_moments",
-    )
+    return pin(_type_moments(spark, sf_dir), "group_moments")
 
 
 @register(
@@ -3618,8 +3549,8 @@ def q_stats_tukey(spark: SparkSession, sf_dir: str) -> DataFrame:
     max-gap distribution directly).
 
     Exactness: the single (group) census gives exact (n, s, q); SSW
-    rides the q_stats_anova e6 DIV/MOD fixing (identical operand
-    bits); each pair's mean gap is the exact integer cross
+    is q_stats_anova's (``_oneway_ss``); each pair's mean gap is the
+    exact integer cross
     D = s_a*n_b - s_b*n_a over n_a*n_b; the HSD condition
     (m_a - m_b)^2 > q^2 * (SSW/(N-k))/2 * (1/n_a + 1/n_b)
     multiplies through to
@@ -3634,34 +3565,11 @@ def q_stats_tukey(spark: SparkSession, sf_dir: str) -> DataFrame:
     upper-triangle self-join, a 1-row scalar cross — identical scale
     shape to q_stats_dunn: the fact table is scanned once."""
     grp = _group_moments(spark, sf_dir)
-    s2 = F.col("s") * F.col("s")
-    gterm = grp.select(
-        "g",
-        "n",
-        "s",
-        "q",
-        (
-            F.lit(1000000).cast(D38) * F.expr("(s * s) div n").cast(D38)
-            + F.round(
-                F.lit(1000000.0)
-                * (s2 % F.col("n")).cast("double")
-                / F.col("n").cast("double"),
-                0,
-            ).cast(D38)
-        ).alias("term_e6"),
-    )
-    tot = gterm.agg(
-        F.sum("n").cast(D38).alias("nn"),
-        F.count("*").cast(D38).alias("k"),
-        (
-            F.lit(1000000).cast(D38) * F.sum("q").cast(D38)
-            - F.sum("term_e6").cast(D38)
-        ).alias("ssw_e6"),
-    )
-    a = gterm.select(
+    tot = _oneway_ss(grp).select("nn", "k", "ssw_e6")
+    a = grp.select(
         F.col("g").alias("g_a"), F.col("n").alias("na"), F.col("s").alias("sa")
     )
-    b = gterm.select(
+    b = grp.select(
         F.col("g").alias("g_b"), F.col("n").alias("nb"), F.col("s").alias("sb")
     )
     pairs = (
@@ -3853,21 +3761,6 @@ def q_stats_games_howell(spark: SparkSession, sf_dir: str) -> DataFrame:
             * F.col("nb")
         ).alias("significant"),
     ).orderBy("g_a", "g_b")
-
-
-def _type_day_sums(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(g, d, v): per event type and calendar day the cent-sum — the
-    calendar-bounded series both Mann-Kendall queries pin."""
-    return (
-        t(spark, sf_dir, "events")
-        .select(
-            F.col("event_type").alias("g"),
-            F.col("ts").cast("date").alias("d"),
-            F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)").alias("cents"),
-        )
-        .groupBy("g", "d")
-        .agg(F.sum("cents").cast("bigint").alias("v"))
-    )
 
 
 @register(
@@ -4096,10 +3989,7 @@ def q_stats_jarque_bera(spark: SparkSession, sf_dir: str) -> DataFrame:
     'streaming moments' implementation gets wrong in float), both
     map-side combined to 5 rows; the center joins back as a
     broadcast. Domain-bounded everywhere."""
-    x = t(spark, sf_dir, "events").select(
-        F.col("event_type").alias("g"),
-        F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)").alias("cents"),
-    )
+    x = _type_cents(spark, sf_dir, "cents")
     cen = x.groupBy("g").agg(
         F.count("*").cast(D38).alias("n"),
         F.sum("cents").cast(D38).alias("s"),
@@ -4230,25 +4120,11 @@ def q_stats_cramer_von_mises(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: identical shape to KS — one map-side-combined value census,
     one cumulative window over the value domain, a 1-row aggregate;
     the fact table is scanned once and never windowed."""
-    x = t(spark, sf_dir, "orders").filter(
-        F.col("o_orderstatus").isin("F", "O")
-    ).select(
-        F.col("o_orderstatus").alias("st"),
-        F.expr("CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)").alias("v"),
-    )
-    per_v = x.groupBy("v").agg(
-        F.sum(F.when(F.col("st") == "F", 1).otherwise(0))
-        .cast(D38)
-        .alias("ca"),
-        F.sum(F.when(F.col("st") == "O", 1).otherwise(0))
-        .cast(D38)
-        .alias("cb"),
-    )
     wcum = Window.orderBy("v").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
-    cum = per_v.select(
-        (F.col("ca") + F.col("cb")).alias("w"),
+    cum = _fo_census(spark, sf_dir).select(
+        (F.col("ca") + F.col("cb")).cast(D38).alias("w"),
         F.sum("ca").over(wcum).cast(D38).alias("fa"),
         F.sum("cb").over(wcum).cast(D38).alias("fb"),
     )
@@ -4347,35 +4223,19 @@ def q_stats_mood_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     where even ranks are distorted.
 
     Machinery reuse, both proven elsewhere: the pooled lower median
-    comes from the q_stats_brown_forsythe value-census selection
-    (MIN cents with running count >= (N+1) div 2 — exact, no
-    percentile approximation), and the 5x2 above/at-or-below
-    contingency runs through the q_stats_chi2 multiplied-through
-    per-cell fixing (O*n - row*col)^2 / (n*row*col) with the e6
-    rounding on identical operand bits, df = (5-1)(2-1) = 4 verdict
+    is q_stats_brown_forsythe's value-census selection
+    (``_lower_median``, pooled instead of per type), and the 5x2
+    above/at-or-below contingency runs through q_stats_chi2's
+    per-cell terms (``_chi2_terms``), df = (5-1)(2-1) = 4 verdict
     against the same 9.487729 critical value.
 
     Plan: one pooled value census (domain-bounded) + one window for
     the median, one 10-cell census + three windows over it — the
     fact table is scanned twice (median pass, cell pass), the
     classic two-pass exact-selection trade."""
-    x = t(spark, sf_dir, "events").select(
-        F.col("event_type").alias("g"),
-        F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)").alias("cents"),
-    )
+    x = _type_cents(spark, sf_dir, "cents")
     pv = x.groupBy("cents").agg(F.count("*").cast("bigint").alias("c"))
-    wcum = Window.orderBy("cents").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    wall = Window.partitionBy()
-    cum = pv.select(
-        "cents",
-        F.sum("c").over(wcum).alias("cumc"),
-        F.sum("c").over(wall).alias("nn"),
-    )
-    med = cum.filter(
-        F.col("cumc") >= F.expr("(nn + 1) div 2")
-    ).agg(F.min("cents").alias("med"))
+    med = _lower_median(pv, "cents")
     cells = (
         x.crossJoin(F.broadcast(med))
         .groupBy("g", (F.col("cents") > F.col("med")).alias("above"))
@@ -4384,31 +4244,7 @@ def q_stats_mood_median(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("med").alias("med"),
         )
     )
-    wrow = Window.partitionBy("g")
-    wcol = Window.partitionBy("above")
-    tot = cells.select(
-        "above",
-        "o",
-        "med",
-        F.sum("o").over(wrow).alias("row_t"),
-        F.sum("o").over(wcol).alias("col_t"),
-        F.sum("o").over(wall).alias("n"),
-    )
-    num = F.col("o") * F.col("n") - F.col("row_t") * F.col("col_t")
-    terms = tot.select(
-        "above",
-        "o",
-        "med",
-        "n",
-        F.round(
-            (num * num).cast("double")
-            / (F.col("n") * F.col("row_t") * F.col("col_t")).cast("double")
-            * 1000000,
-            0,
-        )
-        .cast("bigint")
-        .alias("term_e6"),
-    )
+    terms = _chi2_terms(cells, "g", "above", "above", "o", "med")
     return terms.agg(
         F.max("n").cast("bigint").alias("n"),
         F.max("med").cast("bigint").alias("pooled_median_cents"),
@@ -4437,6 +4273,38 @@ _AB_T_DUCK = (
     "      + ((2 * {n} + 1 - (({n} + 1) // 2) - {x})"
     "         * ({x} - (({n} + 1) // 2))) // 2 END)"
 )
+# e3 DIV/MOD fixing of an average tie score (num / t): remainders are
+# below the tie-block size t, far inside 2^53.
+_AB_FIX = (
+    "1000 * (({num}) div t)"
+    " + CAST(ROUND(1000.0 * CAST(({num}) % t AS DOUBLE)"
+    " / CAST(t AS DOUBLE), 0) AS BIGINT)"
+)
+
+
+def _ab_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(ca, t, nn, cumb, bsum) per tie block of the pooled F/O price
+    census: the block's 'F' count and size, the pooled size, the count
+    below it, and its Ansari-Bradley score sum T(cumb + t) - T(cumb)."""
+    wcum = Window.orderBy("v").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    pos = _fo_census(spark, sf_dir).select(
+        "ca",
+        "t",
+        (F.sum("t").over(wcum) - F.col("t")).alias("cumb"),
+        F.sum("t").over(Window.partitionBy()).alias("nn"),
+    )
+    return pos.select(
+        "ca",
+        "t",
+        "nn",
+        "cumb",
+        (
+            F.expr(_AB_T.format(x="(cumb + t)", n="nn"))
+            - F.expr(_AB_T.format(x="cumb", n="nn"))
+        ).alias("bsum"),
+    )
 
 
 @register(
@@ -4522,8 +4390,8 @@ def q_stats_ansari_bradley(spark: SparkSession, sf_dir: str) -> DataFrame:
     block's SCORE SUM via the closed-form prefix
     T(x) = sum min(j, N+1-j) (two consecutive-integer products, exact
     integer halves — verified against brute force in the twin);
-    average tie scores enter through the ANOVA e3 DIV/MOD fixing
-    (operands < 2^53 guaranteed since remainders are < t); exact
+    average tie scores enter through an e3 DIV/MOD fixing (``_AB_FIX``,
+    remainders < t); exact
     integer cross D = ab_e3*N - n*S1*1000; null moments conditional
     on the tie pattern (Hollander-Wolfe): E = n*S1/N,
     Var = nm(N*sum(a^2) - S1^2)/(N^2(N-1)); the z^2 verdict runs on
@@ -4538,49 +4406,13 @@ def q_stats_ansari_bradley(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: identical shape to KS/CvM — one map-side-combined value
     census, one cumulative window over the value domain, a 1-row
     aggregate; the fact table is scanned once."""
-    x = t(spark, sf_dir, "orders").filter(
-        F.col("o_orderstatus").isin("F", "O")
-    ).select(
-        F.col("o_orderstatus").alias("st"),
-        F.expr("CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)").alias("v"),
-    )
-    pv = x.groupBy("v").agg(
-        F.sum(F.when(F.col("st") == "F", 1).otherwise(0))
-        .cast("bigint")
-        .alias("ca"),
-        F.count("*").cast("bigint").alias("t"),
-    )
-    wcum = Window.orderBy("v").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    wall = Window.partitionBy()
-    pos = pv.select(
-        "ca",
-        "t",
-        (F.sum("t").over(wcum) - F.col("t")).alias("cumb"),
-        F.sum("t").over(wall).alias("nn"),
-    )
-    bs = pos.select(
-        "ca",
-        "t",
-        "nn",
-        (
-            F.expr(_AB_T.format(x="(cumb + t)", n="nn"))
-            - F.expr(_AB_T.format(x="cumb", n="nn"))
-        ).alias("bsum"),
-    )
-    fix = (
-        "1000 * (({num}) div t)"
-        " + CAST(ROUND(1000.0 * CAST(({num}) % t AS DOUBLE)"
-        " / CAST(t AS DOUBLE), 0) AS BIGINT)"
-    )
-    agg = bs.agg(
+    agg = _ab_scores(spark, sf_dir).agg(
         F.max("nn").cast(D38).alias("nn"),
         F.sum("ca").cast(D38).alias("n"),
         (F.max("nn") - F.sum("ca")).cast(D38).alias("m"),
         F.sum("bsum").cast(D38).alias("s1"),
-        F.sum(F.expr(fix.format(num="ca * bsum"))).cast(D38).alias("ab_e3"),
-        F.sum(F.expr(fix.format(num="bsum * bsum")))
+        F.sum(F.expr(_AB_FIX.format(num="ca * bsum"))).cast(D38).alias("ab_e3"),
+        F.sum(F.expr(_AB_FIX.format(num="bsum * bsum")))
         .cast(D38)
         .alias("s2_e3"),
     )
@@ -4745,44 +4577,7 @@ def q_stats_lepage(spark: SparkSession, sf_dir: str) -> DataFrame:
     combined value census (domain-bounded, not row-bounded), one
     window over the census, a 1-row aggregate; the fact table is
     scanned once."""
-    x = t(spark, sf_dir, "orders").filter(
-        F.col("o_orderstatus").isin("F", "O")
-    ).select(
-        F.col("o_orderstatus").alias("st"),
-        F.expr("CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)").alias("v"),
-    )
-    pv = x.groupBy("v").agg(
-        F.sum(F.when(F.col("st") == "F", 1).otherwise(0))
-        .cast("bigint")
-        .alias("ca"),
-        F.count("*").cast("bigint").alias("t"),
-    )
-    wcum = Window.orderBy("v").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    wall = Window.partitionBy()
-    pos = pv.select(
-        "ca",
-        "t",
-        (F.sum("t").over(wcum) - F.col("t")).alias("cumb"),
-        F.sum("t").over(wall).alias("nn"),
-    )
-    bs = pos.select(
-        "ca",
-        "t",
-        "nn",
-        "cumb",
-        (
-            F.expr(_AB_T.format(x="(cumb + t)", n="nn"))
-            - F.expr(_AB_T.format(x="cumb", n="nn"))
-        ).alias("bsum"),
-    )
-    fix = (
-        "1000 * (({num}) div t)"
-        " + CAST(ROUND(1000.0 * CAST(({num}) % t AS DOUBLE)"
-        " / CAST(t AS DOUBLE), 0) AS BIGINT)"
-    )
-    agg = bs.agg(
+    agg = _ab_scores(spark, sf_dir).agg(
         F.max("nn").cast(D38).alias("nn"),
         F.sum("ca").cast(D38).alias("n"),
         (F.max("nn") - F.sum("ca")).cast(D38).alias("m"),
@@ -4793,8 +4588,8 @@ def q_stats_lepage(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("t") * F.col("t") * F.col("t") - F.col("t"))
         .cast(D38)
         .alias("tie3"),
-        F.sum(F.expr(fix.format(num="ca * bsum"))).cast(D38).alias("ab_e3"),
-        F.sum(F.expr(fix.format(num="bsum * bsum")))
+        F.sum(F.expr(_AB_FIX.format(num="ca * bsum"))).cast(D38).alias("ab_e3"),
+        F.sum(F.expr(_AB_FIX.format(num="bsum * bsum")))
         .cast(D38)
         .alias("s2_e3"),
     )
@@ -5031,9 +4826,8 @@ def q_stats_cmh(spark: SparkSession, sf_dir: str) -> DataFrame:
     5-stratum census here.
 
     Exactness: per stratum the expected count E_k = r1*c1/n and the
-    hypergeometric variance r1*r0*c1*c0/(n^2(n-1)) enter through the
-    house e6 DIV/MOD fixing (integer quotient + correctly-rounded
-    remainder; the variance product needs DECIMAL(38,0)/HUGEINT — it
+    hypergeometric variance r1*r0*c1*c0/(n^2(n-1)) enter through
+    fix_e6 (the variance product needs DECIMAL(38,0)/HUGEINT — it
     passes 4.7e20 at sf1, far beyond BIGINT). num_e6 =
     sum(1e6*a_k - fix(r1*c1, n)) stays an EXACT signed integer (no
     floor-sign hazard: each fixing's operands are non-negative, the
@@ -5053,40 +4847,17 @@ def q_stats_cmh(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate — the scan is the entire cost, the classic
     stratified-analysis shape: evidence pools WITHOUT ever joining
     strata against each other."""
-    x = t(spark, sf_dir, "orders").select(
-        F.expr("CAST(SUBSTRING(o_orderpriority, 1, 1) AS BIGINT)").alias("k"),
-        F.when(F.col("o_custkey") % 2 == 0, 1).otherwise(0).alias("e"),
-        F.when(F.col("o_orderstatus") == "F", 1).otherwise(0).alias("s"),
-    )
-    strata = x.groupBy("k").agg(
-        F.count("*").cast(D38).alias("nk"),
-        F.sum("e").cast(D38).alias("r1"),
-        F.sum("s").cast(D38).alias("c1"),
-        F.sum(F.col("e") * F.col("s")).cast(D38).alias("a"),
-    )
-    terms = strata.filter(F.col("nk") >= 2).select(
+    r1, c1, nk = F.col("r1"), F.col("c1"), F.col("nk")
+    terms = _orders_strata(spark, sf_dir).select(
         "k",
         "nk",
         "a",
-        F.expr(
-            "1000000 * a"
-            " - (1000000 * ((r1 * c1) div nk)"
-            "    + CAST(ROUND(1000000.0 * CAST((r1 * c1) % nk AS DOUBLE)"
-            "           / CAST(nk AS DOUBLE), 0) AS decimal(38,0)))"
-        )
-        .cast(D38)
-        .alias("num_e6"),
-        F.expr(
-            "1000000 * ((r1 * (nk - r1) * c1 * (nk - c1))"
-            "           div (nk * nk * (nk - 1)))"
-            " + CAST(ROUND(1000000.0"
-            "       * CAST((r1 * (nk - r1) * c1 * (nk - c1))"
-            "              % (nk * nk * (nk - 1)) AS DOUBLE)"
-            "       / CAST(nk * nk * (nk - 1) AS DOUBLE), 0)"
-            "   AS decimal(38,0))"
-        )
-        .cast(D38)
-        .alias("var_e6"),
+        (F.lit(1000000).cast(D38) * F.col("a") - fix_e6(r1 * c1, nk)).alias(
+            "num_e6"
+        ),
+        fix_e6(r1 * (nk - r1) * c1 * (nk - c1), nk * nk * (nk - 1)).alias(
+            "var_e6"
+        ),
     )
     agg = terms.agg(
         F.count("*").cast("bigint").alias("n_strata"),
@@ -5550,8 +5321,8 @@ def q_stats_mh_odds(spark: SparkSession, sf_dir: str) -> DataFrame:
     (chi2 -> Cramer's V, MW -> AUC) applied to the stratified corner.
 
     Exactness: each stratum's cross products a*d, b*c enter through
-    the house e6 DIV/MOD fixing by n_k (all operands non-negative —
-    no floor-sign hazard anywhere in this query); the pooled ratio is
+    fix_e6 by n_k (all operands non-negative — no floor-sign hazard
+    anywhere in this query); the pooled ratio is
     one staged e6 floor of exact HUGEINT sums; the direction verdict
     (exposure_raises_odds = OR > 1) compares the two sums DIRECTLY —
     no division in the decision at all. Operand audit: a*d <= n_k^2/4
@@ -5563,18 +5334,7 @@ def q_stats_mh_odds(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan at 100 TB: identical to q_stats_cmh — ONE map-side-combined
     5-row stratum census, one 1-row aggregate; at 100 TB the two
     queries would share one census pass."""
-    x = t(spark, sf_dir, "orders").select(
-        F.expr("CAST(SUBSTRING(o_orderpriority, 1, 1) AS BIGINT)").alias("k"),
-        F.when(F.col("o_custkey") % 2 == 0, 1).otherwise(0).alias("e"),
-        F.when(F.col("o_orderstatus") == "F", 1).otherwise(0).alias("s"),
-    )
-    strata = x.groupBy("k").agg(
-        F.count("*").cast(D38).alias("nk"),
-        F.sum("e").cast(D38).alias("r1"),
-        F.sum("s").cast(D38).alias("c1"),
-        F.sum(F.col("e") * F.col("s")).cast(D38).alias("a"),
-    )
-    cells = strata.filter(F.col("nk") >= 2).select(
+    cells = _orders_strata(spark, sf_dir).select(
         "k",
         "nk",
         "a",
@@ -5584,15 +5344,10 @@ def q_stats_mh_odds(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast(D38)
         .alias("d"),
     )
-    fix = (
-        "1000000 * (({num}) div nk)"
-        " + CAST(ROUND(1000000.0 * CAST(({num}) % nk AS DOUBLE)"
-        " / CAST(nk AS DOUBLE), 0) AS decimal(38,0))"
-    )
     terms = cells.select(
         "k",
-        F.expr(fix.format(num="a * d")).cast(D38).alias("num_e6"),
-        F.expr(fix.format(num="b * c")).cast(D38).alias("den_e6"),
+        fix_e6(F.col("a") * F.col("d"), F.col("nk")).alias("num_e6"),
+        fix_e6(F.col("b") * F.col("c"), F.col("nk")).alias("den_e6"),
     )
     agg = terms.agg(
         F.count("*").cast("bigint").alias("n_strata"),
@@ -6066,22 +5821,10 @@ def q_stats_brunner_munzel(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combined value census, ONE window pass carrying three
     running sums, a 1-row aggregate; the fact table is scanned
     once."""
-    x = t(spark, sf_dir, "orders").filter(
-        F.col("o_orderstatus").isin("F", "O")
-    ).select(
-        F.col("o_orderstatus").alias("st"),
-        F.expr("CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)").alias("v"),
-    )
-    pv = x.groupBy("v").agg(
-        F.sum(F.when(F.col("st") == "F", 1).otherwise(0))
-        .cast("bigint")
-        .alias("ca"),
-        F.count("*").cast("bigint").alias("t"),
-    )
     wcum = Window.orderBy("v").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
-    pos = pv.select(
+    pos = _fo_census(spark, sf_dir).select(
         "ca",
         "t",
         (F.col("t") - F.col("ca")).alias("cb"),
@@ -6220,9 +5963,8 @@ def q_stats_eta_squared(spark: SparkSession, sf_dir: str) -> DataFrame:
     negative when F < 1, which is exactly why it is reported
     sign-split.
 
-    Exactness: rides q_stats_anova's chain verbatim — per-group
-    s^2/n e6 DIV/MOD fixings, SSB_e6/SSW_e6 as exact integer sums of
-    those fixings — then BOTH effect sizes are defined ON the
+    Exactness: SSB_e6/SSW_e6 are q_stats_anova's (``_oneway_ss``),
+    then BOTH effect sizes are defined ON the
     e6-fixed quantities (the pinned-chain convention: deterministic,
     identical in both engines): eta2_e6 one non-negative floor;
     omega2 multiplied through by (N-k) to
@@ -6236,60 +5978,7 @@ def q_stats_eta_squared(spark: SparkSession, sf_dir: str) -> DataFrame:
     5-row census, arithmetic on a 5-row frame, the fact table
     scanned once; at scale this query and q_stats_anova share one
     census pass."""
-    x = t(spark, sf_dir, "events").select(
-        F.col("event_type").alias("g"),
-        F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)").alias("cents"),
-    )
-    grp = x.groupBy("g").agg(
-        F.count("*").cast(D38).alias("n"),
-        F.sum("cents").cast(D38).alias("s"),
-        F.sum(F.col("cents") * F.col("cents")).cast(D38).alias("q"),
-    )
-    s2 = F.col("s") * F.col("s")
-    gterm = grp.select(
-        "n",
-        "s",
-        "q",
-        (
-            F.lit(1000000).cast(D38) * F.expr("(s * s) div n").cast(D38)
-            + F.round(
-                F.lit(1000000.0)
-                * (s2 % F.col("n")).cast("double")
-                / F.col("n").cast("double"),
-                0,
-            ).cast(D38)
-        ).alias("term_e6"),
-    )
-    tot = gterm.agg(
-        F.sum("n").cast(D38).alias("nn"),
-        F.sum("s").cast(D38).alias("ss"),
-        F.sum("q").cast(D38).alias("qq"),
-        F.sum("term_e6").cast(D38).alias("a_e6"),
-        F.count("*").cast(D38).alias("k"),
-    )
-    ss2 = F.col("ss") * F.col("ss")
-    fin = tot.select(
-        "nn",
-        "k",
-        (
-            F.col("a_e6")
-            - (
-                F.lit(1000000).cast(D38)
-                * F.expr("(ss * ss) div nn").cast(D38)
-                + F.round(
-                    F.lit(1000000.0)
-                    * (ss2 % F.col("nn")).cast("double")
-                    / F.col("nn").cast("double"),
-                    0,
-                ).cast(D38)
-            )
-        )
-        .cast(D38)
-        .alias("ssb_e6"),
-        (F.lit(1000000).cast(D38) * F.col("qq") - F.col("a_e6"))
-        .cast(D38)
-        .alias("ssw_e6"),
-    )
+    fin = _oneway_ss(_type_moments(spark, sf_dir))
     onum = F.expr("ssb_e6 * (nn - k) - (k - 1) * ssw_e6")
     eta = F.expr(
         "(ssb_e6 * 1000000)"
@@ -6681,18 +6370,7 @@ def q_stats_durbin_watson(spark: SparkSession, sf_dir: str) -> DataFrame:
     31-row-per-type window pair (row_number + lag), one 5-row
     aggregate; calendar-bounded — scale changes the census sums
     only."""
-    daily = (
-        t(spark, sf_dir, "events")
-        .groupBy(
-            F.col("event_type").alias("g"),
-            F.col("ts").cast("date").alias("d"),
-        )
-        .agg(
-            F.sum(F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)"))
-            .cast("bigint")
-            .alias("y")
-        )
-    )
+    daily = _type_day_sums(spark, sf_dir).withColumnRenamed("v", "y")
     wseq = Window.partitionBy("g").orderBy("d")
     # two consumers: fit + residual join
     seq = pin(
@@ -6817,18 +6495,7 @@ def q_stats_turning_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan at 100 TB: one (type, day) census, one lag+lead window over
     the 31-row-per-type frame, a 5-row aggregate — calendar-bounded
     like the whole D10 diagnostics family."""
-    daily = (
-        t(spark, sf_dir, "events")
-        .groupBy(
-            F.col("event_type").alias("g"),
-            F.col("ts").cast("date").alias("d"),
-        )
-        .agg(
-            F.sum(F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)"))
-            .cast("bigint")
-            .alias("y")
-        )
-    )
+    daily = _type_day_sums(spark, sf_dir).withColumnRenamed("v", "y")
     w = Window.partitionBy("g").orderBy("d")
     lagged = daily.select(
         "g",
@@ -7063,11 +6730,7 @@ def q_ab_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan at 100 TB: ONE map-side-combined 5-row census — the
     q_stats_anova scan shape; the power answer costs nothing beyond
     the moments the monitoring pass already collects."""
-    x = t(spark, sf_dir, "events").select(
-        F.col("event_type").alias("g"),
-        F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)").alias("v"),
-    )
-    census = x.groupBy("g").agg(
+    census = _type_cents(spark, sf_dir, "v").groupBy("g").agg(
         F.count("*").cast(D38).alias("n"),
         F.sum("v").cast(D38).alias("s"),
         (
@@ -7181,11 +6844,11 @@ def q_agg_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     cumulative window over the census domain, a 5-row aggregate —
     the KS/median scan shape; the fact table is scanned once and
     never sorted row-wise."""
-    x = t(spark, sf_dir, "events").select(
-        F.col("event_type").alias("g"),
-        F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)").alias("v"),
+    pv = (
+        _type_cents(spark, sf_dir, "v")
+        .groupBy("g", "v")
+        .agg(F.count("*").cast("bigint").alias("t"))
     )
-    pv = x.groupBy("g", "v").agg(F.count("*").cast("bigint").alias("t"))
     wcum = (
         Window.partitionBy("g")
         .orderBy("v")

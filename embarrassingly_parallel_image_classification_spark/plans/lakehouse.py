@@ -48,7 +48,12 @@ commits them):
     manifest, so they rebase onto the new latest; set_generated_column,
     add_check_constraint, set_identity_column and add_bloom_index read
     the standing DATA at version v, so they pass v and raise
-    ConcurrentWriteError once the table has moved past it.
+    ConcurrentWriteError once the table has moved past it. The same
+    holds for the OVERWRITE rewrites built from a read of the table
+    (merge_into, merge_into_latest, compact_mor, optimize_zorder,
+    restore_table): each reads at the version v it observed and
+    publishes with ``expected_version=v``, so an append that lands in
+    between raises instead of vanishing from the new snapshot.
   * rewrite — two files are replaced on purpose, never claimed:
     erase_rows republishes history (``_put_json(replace=True)``), and
     the metalog compaction rewrites its sidecar under the maintenance
@@ -1445,7 +1450,7 @@ def merge_into(
             merged_cols.append(F.col(c))
     extra = {c: {"value": None, "scope": []} for c in new_cols} or None
     return snapshot_write(
-        joined.select(*merged_cols), path, "overwrite",
+        joined.select(*merged_cols), path, "overwrite", expected_version=v,
         extra_defaults=extra, preserve_identity=True,
     )
 
@@ -1852,9 +1857,10 @@ def compact_mor(spark: SparkSession, path: str) -> int:
     after ~5–8 reads at any file count. Rule: compact at ≥4 delete
     files, or earlier when >~6 reads are expected before the next
     delete burst; at scale apply the same rule partition-locally."""
-    survivors = snapshot_read_mor(spark, path)
+    v = current_version(path)
+    survivors = snapshot_read_mor(spark, path, v)
     return snapshot_write(
-        survivors, path, "overwrite", preserve_identity=True
+        survivors, path, "overwrite", expected_version=v, preserve_identity=True
     )
 
 
@@ -2882,7 +2888,8 @@ def optimize_zorder(
         # "clustered" layout interleaves garbage (review finding). A
         # k-dim Morton needs a (k-1)-bit-gap spread — not implemented.
         raise ValueError("optimize_zorder supports exactly 2 z-columns")
-    df = snapshot_read(spark, path)
+    v = current_version(path)
+    df = snapshot_read(spark, path, v)
     zkey = " | ".join(
         f"({_spread_sql(f'({c} % 256)')} << {i})" for i, c in enumerate(cols)
     )
@@ -2893,8 +2900,8 @@ def optimize_zorder(
         .drop("__z")
     )
     return snapshot_write(
-        clustered, path, "overwrite", stats_col=list(cols),
-        preserve_identity=True,
+        clustered, path, "overwrite", expected_version=v,
+        stats_col=list(cols), preserve_identity=True,
     )
 
 
@@ -3339,7 +3346,8 @@ def merge_into_latest(
     the snapshot would hold >1 row per key and later merges compound
     it), and the reduction keeps the join side |keys|-sized however
     many rows the batch carries."""
-    target = snapshot_read_mor(spark, path)
+    v = current_version(path)
+    target = snapshot_read_mor(spark, path, v)
     cols = [key] + ord_cols + update_cols
     reduced = (
         source.groupBy(key)
@@ -3364,7 +3372,7 @@ def merge_into_latest(
         else:
             merged_cols.append(F.col(c))
     return snapshot_write(
-        joined.select(*merged_cols), path, "overwrite",
+        joined.select(*merged_cols), path, "overwrite", expected_version=v,
         preserve_identity=True,
     )
 
@@ -3475,8 +3483,11 @@ def restore_table(spark: SparkSession, path: str, version: int) -> int:
     into the new committed snapshot (review finding; real-format
     RESTORE preserves deletion vectors the same way). Returns the new
     version."""
+    v = current_version(path)
     old = snapshot_read_mor(spark, path, version)
-    return snapshot_write(old, path, "overwrite", preserve_identity=True)
+    return snapshot_write(
+        old, path, "overwrite", expected_version=v, preserve_identity=True
+    )
 
 
 @register(

@@ -964,6 +964,76 @@ def test_lateral_alias_plan_matches_expanded(spark):
     )
 
 
+def test_e6_fixing_spelled_once():
+    """Source lint: the e6 DIV/MOD fixing (10^6 * the remainder, divided
+    in double) is spelled only inside ``stats.fix_e6`` — in
+    operators/stats.py and ml/features.py a ``F.lit(1000000.0)``
+    multiplied by a ``%`` remainder appears nowhere else, and no
+    ``F.expr`` string spells ``1000000.0 * CAST(...)``. Hand copies are
+    where operand types and the quotient overflow drift apart."""
+    import ast
+    import pathlib
+
+    pkg = (
+        pathlib.Path(__file__).resolve().parents[1]
+        / "embarrassingly_parallel_image_classification_spark"
+    )
+
+    def is_lit_1e6(node):
+        return (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "lit"
+            and len(node.args) == 1
+            and isinstance(node.args[0], ast.Constant)
+            and node.args[0].value == 1000000.0
+            and isinstance(node.args[0].value, float)
+        )
+
+    def has_mod(node):
+        return any(
+            isinstance(n, ast.BinOp) and isinstance(n.op, ast.Mod)
+            for n in ast.walk(node)
+        )
+
+    found: dict[str, list] = {}
+    for rel in ("operators/stats.py", "ml/features.py"):
+        tree = ast.parse((pkg / rel).read_text())
+        owner: dict[int, str] = {}
+        for node in tree.body:
+            if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+                for ln in range(node.lineno, node.end_lineno + 1):
+                    owner[ln] = node.name
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.BinOp)
+                and isinstance(node.op, ast.Mult)
+                and (
+                    (is_lit_1e6(node.left) and has_mod(node.right))
+                    or (is_lit_1e6(node.right) and has_mod(node.left))
+                )
+            ):
+                found.setdefault(owner.get(node.lineno, "<module>"), []).append(
+                    f"{rel}:{node.lineno}"
+                )
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "expr"
+                and any(
+                    isinstance(c, ast.Constant)
+                    and isinstance(c.value, str)
+                    and "1000000.0 *" in c.value
+                    for a in node.args
+                    for c in ast.walk(a)
+                )
+            ):
+                found.setdefault(owner.get(node.lineno, "<module>"), []).append(
+                    f"{rel}:{node.lineno} (F.expr)"
+                )
+    assert list(found) == ["fix_e6"] and len(found["fix_e6"]) == 1, found
+
+
 def test_lakehouse_commits_through_one_claim():
     """Source lint: plans/lakehouse.py creates every manifest, catalog
     version and tag ref through ONE create-once claim (``_put_json``)

@@ -8,6 +8,7 @@ import os
 import shutil
 
 import pyspark.sql.functions as F
+import pytest
 
 from embarrassingly_parallel_image_classification_spark import registry
 from embarrassingly_parallel_image_classification_spark.plans import scale
@@ -2467,6 +2468,68 @@ def test_lakehouse_identity_two_writer_race(spark, tmp_path):
     ids = sorted(r["rid"] for r in rows)
     assert len(rows) == 1000
     assert ids == list(range(1, 1001))  # distinct AND contiguous
+
+
+# Each OVERWRITE rewrite built from a read of the table: (the reader it
+# calls, the call). The table holds (k, x) for k in 0..3 at version 1.
+_REWRITES = {
+    "merge_into": ("snapshot_read_mor", lambda lh, spark, path: lh.merge_into(
+        spark, path, spark.range(2).select(
+            F.col("id").alias("k"), F.lit(9).cast("bigint").alias("x")
+        ), "k", ["x"],
+    )),
+    "merge_into_latest": ("snapshot_read_mor", lambda lh, spark, path: (
+        lh.merge_into_latest(spark, path, spark.range(2).select(
+            F.col("id").alias("k"), F.lit(9).cast("bigint").alias("x")
+        ), "k", ["x"], [])
+    )),
+    "compact_mor": ("snapshot_read_mor", lambda lh, spark, path: (
+        lh.compact_mor(spark, path)
+    )),
+    "optimize_zorder": ("snapshot_read", lambda lh, spark, path: (
+        lh.optimize_zorder(spark, path, ("k", "x"), files=2)
+    )),
+    "restore_table": ("snapshot_read_mor", lambda lh, spark, path: (
+        lh.restore_table(spark, path, 1)
+    )),
+}
+
+
+@pytest.mark.parametrize("rewrite", sorted(_REWRITES))
+def test_lakehouse_rewrite_two_writer_race(spark, tmp_path, monkeypatch, rewrite):
+    """A rewrite reads the table at version v and publishes an
+    OVERWRITE. An append committed between the read and the publish
+    must not vanish from the new snapshot: the rewrite raises
+    ConcurrentWriteError and the append stays readable."""
+    from embarrassingly_parallel_image_classification_spark.plans import lakehouse
+
+    path = str(tmp_path / "rewrite_race")
+    lakehouse.snapshot_write(
+        spark.range(4).select(F.col("id").alias("k"), (F.col("id") * 2).alias("x")),
+        path, "append",
+    )
+    reader, call = _REWRITES[rewrite]
+    real = getattr(lakehouse, reader)
+    fired: list = []
+
+    def racing_read(*args, **kwargs):
+        df = real(*args, **kwargs)
+        if not fired:
+            fired.append(True)
+            lakehouse.snapshot_write(
+                spark.range(100, 103).select(
+                    F.col("id").alias("k"), F.col("id").alias("x")
+                ),
+                path, "append",
+            )
+        return df
+
+    monkeypatch.setattr(lakehouse, reader, racing_read)
+    with pytest.raises(lakehouse.ConcurrentWriteError):
+        call(lakehouse, spark, path)
+    assert fired
+    keys = {r["k"] for r in lakehouse.snapshot_read(spark, path).collect()}
+    assert keys == {0, 1, 2, 3, 100, 101, 102}
 
 
 def test_lakehouse_delete_and_clone_carry_generated(spark, tmp_path):

@@ -648,3 +648,69 @@ def test_word_ngrams_equals_python_reference(spark, texts, n):
         want_d = list(dict.fromkeys(want))  # first-occurrence order
         assert got[i][0] == want, (n, t, got[i][0], want)
         assert got[i][1] == want_d, (n, t, got[i][1], want_d)
+
+
+@st.composite
+def _e6_case(draw):
+    """(num, den) with 0 <= num <= 10^30 and 1 <= den < 2^53: free
+    draws, remainders one to three below den, and exact half-way
+    remainders (10^6 * r / den = m + 1/2 with den = 2*10^6*j)."""
+    kind = draw(st.sampled_from(("free", "near_den", "half")))
+    if kind == "free":
+        return draw(st.integers(0, 10**30)), draw(st.integers(1, 2**53 - 1))
+    if kind == "near_den":
+        den = draw(st.integers(1, 2**53 - 1))
+        r = den - draw(st.integers(1, min(den, 3)))
+    else:
+        j = draw(st.integers(1, (2**53 - 1) // 2_000_000))
+        den = 2_000_000 * j
+        r = j * (2 * draw(st.integers(0, 999_999)) + 1)
+    return draw(st.integers(0, (10**30 - r) // den)) * den + r, den
+
+
+@settings(
+    max_examples=10,
+    deadline=None,
+    derandomize=True,
+    suppress_health_check=[HealthCheck.too_slow],
+)
+@given(st.lists(_e6_case(), min_size=40, max_size=40))
+def test_fix_e6_equals_duckdb_oracle_spelling(spark, duck, cases):
+    """stats.fix_e6 (the one e6 DIV/MOD fixing every exact query uses)
+    equals the DuckDB oracle spelling on HUGEINT operands, case by
+    case, over its whole stated domain — quotients past 2^63 included,
+    where Spark's BIGINT `div` would wrap."""
+    from embarrassingly_parallel_image_classification_spark.operators.stats import (
+        D38,
+        fix_e6,
+    )
+
+    cases = [(10**30, 1), (0, 2**53 - 1), (2**53 - 2, 2**53 - 1)] + cases
+    rows = [(i, str(n), str(d)) for i, (n, d) in enumerate(cases)]
+    got = dict(
+        spark.createDataFrame(rows, "i int, num string, den string")
+        .select(
+            "i",
+            fix_e6(F.col("num").cast(D38), F.col("den").cast(D38))
+            .cast("string")
+            .alias("e6"),
+        )
+        .collect()
+    )
+    values = ", ".join(
+        f"({i}, CAST('{n}' AS HUGEINT), CAST('{d}' AS HUGEINT))"
+        for i, n, d in rows
+    )
+    want = dict(
+        duck.execute(
+            f"""
+            SELECT i, CAST(1000000 * (num // den)
+                     + CAST(ROUND(1000000.0 * CAST(num % den AS DOUBLE)
+                                  / CAST(den AS DOUBLE), 0) AS HUGEINT)
+                   AS VARCHAR)
+            FROM (VALUES {values}) v(i, num, den)
+            """
+        ).fetchall()
+    )
+    bad = [(cases[i], got[i], want[i]) for i in want if got[i] != want[i]]
+    assert not bad, bad[:5]
