@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..localframe import local_df, pin
+from ..operators.stats import comoment, moment_census
 from ..registry import register
 from ..sources.tables import t
 
@@ -812,7 +813,6 @@ def train_unigram(
     at 100 TB the corpus is touched once, and each EM iteration costs
     one explode+aggregate over the word VOCABULARY plus a V-row
     collect. Returns (final usage DataFrame, final lp table)."""
-    import pandas as pd
     from pyspark.sql.types import ArrayType, StringType
 
     d = t(spark, sf_dir, "documents")
@@ -990,18 +990,8 @@ def q_text_zipf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("y"),
     )
-    d38 = "decimal(38,0)"
-    s = pts.agg(
-        F.count("*").cast(d38).alias("n"),
-        F.sum("x").cast(d38).alias("sx"),
-        F.sum("y").cast(d38).alias("sy"),
-        F.sum(F.col("x") * F.col("y")).cast(d38).alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).cast(d38).alias("sxx"),
-    )
-    num = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")).cast("double")
-    den = (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")).cast("double")
-    slope = num / den
-    return s.select(
+    slope = comoment("x", "y").cast("double") / comoment("x", "x").cast("double")
+    return moment_census(pts, ["x", "y"]).select(
         F.col("n").cast("bigint").alias("n_points"),
         F.round(slope * 1000000, 0).cast("bigint").alias("slope_e6"),
         F.round(

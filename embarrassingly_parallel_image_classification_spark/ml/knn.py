@@ -14,16 +14,32 @@ Three tiers, trading recall for scale:
   probe the nprobe nearest centroids only; candidates shrink by
   ~n_clusters/nprobe. Classic FAISS-IVF structure in pure DataFrame ops.
 
-Similarities are rounded to 6 decimals BEFORE ranking, with vec_id as
-tiebreak, so rankings are reproducible bit-for-bit across engines.
+The ranking contract, stated here once and written once in code:
+
+* ``_sim`` is the exact pair score: cosine(embedding, q_emb) from the
+  functions.vectors kernels, rounded to 6 decimals BEFORE ranking, so a
+  rank never rests on the last bits of a float sum and reproduces
+  bit-for-bit across engines (DuckDB's ROUND(list_cosine_similarity, 6)).
+* ``_top_k`` is the rank cut: row_number() over (qid; sim desc, vec_id
+  asc), keep rank <= k. vec_id breaks every tie.
+* ``knn_exact`` is the exact verifier: every approximate tier is checked
+  against its answer, the pattern REPOSE (ICDE 2021) uses behind its
+  pruning tiers. The tiers that re-score a candidate set go through
+  ``_exact_rerank``, and the tiers whose rows carry an exact-top-k
+  membership flag go through ``_recall_census``.
+
+The other shared steps: ``_query_side`` (the (qid, q_emb) broadcast side),
+``IvfIndex.probe`` (the nprobe nearest cells), ``PqIndex.shortlist`` (the
+ADC cut), and ``_sign_bits``, ``_hamming_shortlist`` and
+``_hamming_cascade`` (the 1-bit tier).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.vectors import cosine, dot, l2_dist_sq, norm
+from ..functions.vectors import dot, l2_dist_sq, norm
 from ..localframe import local_df, pin
 from ..registry import register
 from ..sources.tables import t
@@ -48,6 +64,27 @@ _KNN_ORACLE = f"""
     """
 
 
+def _sim(c_norm: Column | None = None, q_norm: Column | None = None) -> Column:
+    """The exact pair score of `embedding` against `q_emb`, rounded to 6
+    decimals: cosine's spelling dot / nullif(norm_c * norm_q, 0) on the
+    same double operands. A frame that carries precomputed norms passes
+    them (knn_exact); otherwise each pair folds both norms."""
+    c_norm = norm("embedding") if c_norm is None else c_norm
+    q_norm = norm("q_emb") if q_norm is None else q_norm
+    return F.round(dot("embedding", "q_emb") / F.nullif(c_norm * q_norm, F.lit(0.0)), 6)
+
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """The rank cut: `scored` plus rank = row_number() over (qid; sim
+    desc, vec_id asc), rows with rank <= k."""
+    w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("vec_id"))
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
+def _query_side(queries: DataFrame) -> DataFrame:
+    """(qid, q_emb): the query vectors as the broadcast side of a pair
+    cross."""
+    return queries.select(F.col("vec_id").alias("qid"), F.col("embedding").alias("q_emb"))
 
 
 def knn_exact(
@@ -61,35 +98,23 @@ def knn_exact(
     ``queries`` must be small (it is broadcast). Excludes self-matches.
     Returns (qid, vec_id, *carry, sim, rank) — ``carry`` names extra
     corpus columns passed through to the result (q_knn_filtered rides
-    its metadata column this way instead of re-typing the whole
-    tie-break/rounding contract — review finding r7).
+    its metadata column this way).
 
     r12: each side's norm is computed ONCE PER ROW before the pair
     cross (the inlined cosine() recomputed both 64-element norm folds
-    per PAIR — 3x the expression work for |corpus|·|queries| pairs).
-    The per-pair expression keeps the exact spelling
-    dot / nullif(norm_a * norm_b, 0) on the same double operands, so
-    every sim bit matches the previous plan and the oracle."""
-    q = queries.select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("q_emb")
-    ).withColumn("__q_norm", norm("q_emb"))
+    per PAIR — 3x the expression work for |corpus|·|queries| pairs);
+    ``_sim`` takes the two norm columns, so every sim bit is the one the
+    per-pair spelling gives."""
+    q = _query_side(queries).withColumn("__q_norm", norm("q_emb"))
     pairs = (
         corpus.withColumn("__c_norm", norm("embedding"))
         .crossJoin(F.broadcast(q))
         .filter(F.col("vec_id") != F.col("qid"))
     )
     scored = pairs.select(
-        "qid",
-        "vec_id",
-        *carry,
-        F.round(
-            dot("embedding", "q_emb")
-            / F.nullif(F.col("__c_norm") * F.col("__q_norm"), F.lit(0.0)),
-            6,
-        ).alias("sim"),
+        "qid", "vec_id", *carry, _sim(F.col("__c_norm"), F.col("__q_norm")).alias("sim")
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _top_k(scored, k)
 
 
 @register(
@@ -132,9 +157,8 @@ def knn_exact_pandas(corpus: DataFrame, queries: DataFrame, k: int = TOP_K) -> D
             out = []
             for j, qid in enumerate(q_ids):
                 mask = ids != qid
-                # Round BEFORE ranking and break ties on vec_id — the
-                # exact ordering the JVM window uses, so the partition
-                # partial provably contains every global top-k member.
+                # The module's ranking order, so the partition partial
+                # provably contains every global top-k member.
                 # Sign-aware HALF-UP (np.round is half-even, Spark's
                 # F.round is half-up); sims within ~1 ulp of a 1e-6
                 # boundary can still legitimately differ from the
@@ -157,12 +181,7 @@ def knn_exact_pandas(corpus: DataFrame, queries: DataFrame, k: int = TOP_K) -> D
     # selection inside numpy is unrounded, which can only disagree on
     # round-6 ties straddling a partition's top-k cutoff (asserted
     # absent on the fixture by the row-for-row equality test).
-    w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return (
-        partials.withColumn("sim", F.round("sim", 6))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _top_k(partials.withColumn("sim", F.round("sim", 6)), k)
 
 
 @register("q_knn_exact_pandas", oracle=_KNN_ORACLE, tags=("K3", "J6"))
@@ -262,28 +281,24 @@ class IvfIndex:
             corpus.sparkSession, cents, "cell int, centroid array<double>"
         )
 
-    def query(self, queries: DataFrame, k: int = TOP_K, nprobe: int = 4) -> DataFrame:
-        q = queries.select(F.col("vec_id").alias("qid"), F.col("embedding").alias("q_emb"))
-        q_cells = (
-            q.crossJoin(F.broadcast(self.cent_df))
+    def probe(self, queries: DataFrame, nprobe: int) -> DataFrame:
+        """(qid, q_emb, cell): each query's nprobe nearest cells by L2²
+        to the centroid, ties on cell."""
+        w = Window.partitionBy("qid").orderBy(F.asc("cdist"), F.asc("cell"))
+        return (
+            _query_side(queries)
+            .crossJoin(F.broadcast(self.cent_df))
             .withColumn("cdist", l2_dist_sq("q_emb", "centroid"))
-            .withColumn(
-                "crank",
-                F.row_number().over(
-                    Window.partitionBy("qid").orderBy(F.asc("cdist"), F.asc("cell"))
-                ),
-            )
+            .withColumn("crank", F.row_number().over(w))
             .filter(F.col("crank") <= nprobe)
             .select("qid", "q_emb", "cell")
         )
-        cands = self.assigned.join(F.broadcast(q_cells), "cell").filter(
+
+    def query(self, queries: DataFrame, k: int = TOP_K, nprobe: int = 4) -> DataFrame:
+        cands = self.assigned.join(F.broadcast(self.probe(queries, nprobe)), "cell").filter(
             F.col("vec_id") != F.col("qid")
         )
-        scored = cands.select(
-            "qid", "vec_id", F.round(cosine("embedding", "q_emb"), 6).alias("sim")
-        )
-        w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("vec_id"))
-        return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+        return _top_k(cands.select("qid", "vec_id", _sim().alias("sim")), k)
 
 
 _IVF_CACHE: dict[tuple[str, str], IvfIndex] = {}
@@ -451,21 +466,26 @@ class PqIndex:
             expr = term if expr is None else expr + term
         return expr
 
+    def shortlist(self, pairs: DataFrame, n: int) -> DataFrame:
+        """(qid, vec_id): each query's n ADC-nearest candidates, ties on
+        vec_id. `pairs` holds (qid, vec_id, tbl, c0..c{m-1}) per
+        candidate: the coded row beside its query's table."""
+        w = Window.partitionBy("qid").orderBy(F.asc("adc_dist"), F.asc("vec_id"))
+        return (
+            pairs.select("qid", "vec_id", self.adc_expr().alias("adc_dist"))
+            .withColumn("srank", F.row_number().over(w))
+            .filter(F.col("srank") <= n)
+            .select("qid", "vec_id")
+        )
+
     def query(
         self, queries: DataFrame, k: int = TOP_K, shortlist: int = 50
     ) -> DataFrame:
         tdf = self._adc_table_df(queries)
-        adc = (
-            self.encoded.crossJoin(F.broadcast(tdf))
-            .filter(F.col("vec_id") != F.col("qid"))
-            .select("qid", "vec_id", self.adc_expr().alias("adc_dist"))
+        pairs = self.encoded.crossJoin(F.broadcast(tdf)).filter(
+            F.col("vec_id") != F.col("qid")
         )
-        w = Window.partitionBy("qid").orderBy(F.asc("adc_dist"), F.asc("vec_id"))
-        return (
-            adc.withColumn("srank", F.row_number().over(w))
-            .filter(F.col("srank") <= shortlist)
-            .select("qid", "vec_id")
-        )
+        return self.shortlist(pairs, shortlist)
 
 
 _PQ_CACHE: dict[tuple[str, str], "PqIndex"] = {}
@@ -485,23 +505,16 @@ def ensure_pq_index(spark: SparkSession, sf_dir: str) -> "PqIndex":
 def _exact_rerank(
     short: DataFrame, corpus: DataFrame, queries: DataFrame, k: int
 ) -> DataFrame:
-    """Shared retrieve-then-rerank tail of knn_pq and knn_ivfpq: join
-    the shortlist back to the raw vectors, score with the exact cosine
-    kernel, rank per query (ties on vec_id) and cut to k — ONE
-    definition so the rounding/tie-break/output contract cannot
-    diverge between the PQ tiers (review finding)."""
-    qv = queries.select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("q_emb")
-    )
+    """The retrieve-then-rerank tail of every candidate tier (PQ, IVFPQ,
+    the Hamming cascade): join the (qid, vec_id) shortlist back to the
+    raw vectors, score each pair exactly and cut to the top k —
+    (qid, vec_id, sim, rank) like knn_exact."""
     rer = (
         short.join(corpus, "vec_id")
-        .join(F.broadcast(qv), "qid")
-        .select(
-            "qid", "vec_id", F.round(cosine("embedding", "q_emb"), 6).alias("sim")
-        )
+        .join(F.broadcast(_query_side(queries)), "qid")
+        .select("qid", "vec_id", _sim().alias("sim"))
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return rer.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _top_k(rer, k)
 
 
 def knn_pq(
@@ -590,21 +603,7 @@ class IvfPqIndex:
         """Cell-pruned coded candidates per query — the frame the ADC
         join scores. Exposed separately so tests can assert the pruning
         ratio and plan shape."""
-        q = queries.select(
-            F.col("vec_id").alias("qid"), F.col("embedding").alias("q_emb")
-        )
-        q_cells = (
-            q.crossJoin(F.broadcast(self.ivf.cent_df))
-            .withColumn("cdist", l2_dist_sq("q_emb", "centroid"))
-            .withColumn(
-                "crank",
-                F.row_number().over(
-                    Window.partitionBy("qid").orderBy(F.asc("cdist"), F.asc("cell"))
-                ),
-            )
-            .filter(F.col("crank") <= nprobe)
-            .select("qid", "cell")
-        )
+        q_cells = self.ivf.probe(queries, nprobe).select("qid", "cell")
         # cell pruning FIRST: only coded rows in a probed cell ever
         # reach the ADC scoring join
         return self.coded.join(F.broadcast(q_cells), "cell").filter(
@@ -619,17 +618,8 @@ class IvfPqIndex:
         shortlist: int = 50,
     ) -> DataFrame:
         tdf = self.pq._adc_table_df(queries)
-        adc = (
-            self.candidates(queries, nprobe)
-            .join(F.broadcast(tdf), "qid")
-            .select("qid", "vec_id", self.pq.adc_expr().alias("adc_dist"))
-        )
-        w = Window.partitionBy("qid").orderBy(F.asc("adc_dist"), F.asc("vec_id"))
-        return (
-            adc.withColumn("srank", F.row_number().over(w))
-            .filter(F.col("srank") <= shortlist)
-            .select("qid", "vec_id")
-        )
+        pairs = self.candidates(queries, nprobe).join(F.broadcast(tdf), "qid")
+        return self.pq.shortlist(pairs, shortlist)
 
 
 _IVFPQ_CACHE: dict[tuple[str, str], "IvfPqIndex"] = {}
@@ -791,19 +781,9 @@ def q_mine_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = (
         emb.crossJoin(F.broadcast(q))
         .filter(F.col("label") != F.col("q_label"))
-        .select(
-            "qid",
-            "vec_id",
-            "label",
-            F.round(cosine("embedding", "q_emb"), 6).alias("sim"),
-        )
+        .select("qid", "vec_id", "label", _sim().alias("sim"))
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("qid", "vec_id", "label", "sim", "rank")
-    )
+    return _top_k(scored, TOP_K)
 
 
 class IvfPqResidualIndex:
@@ -905,17 +885,10 @@ class IvfPqResidualIndex:
         tdf = self._residual_tables(queries, nprobe)
         # ONE broadcast join on cell = pruning AND table attachment:
         # only coded rows in a probed cell reach the codegen ADC expr
-        adc = (
-            self.coded.join(F.broadcast(tdf), "cell")
-            .filter(F.col("vec_id") != F.col("qid"))
-            .select("qid", "vec_id", self.pq.adc_expr().alias("adc_dist"))
+        pairs = self.coded.join(F.broadcast(tdf), "cell").filter(
+            F.col("vec_id") != F.col("qid")
         )
-        w = Window.partitionBy("qid").orderBy(F.asc("adc_dist"), F.asc("vec_id"))
-        return (
-            adc.withColumn("srank", F.row_number().over(w))
-            .filter(F.col("srank") <= shortlist)
-            .select("qid", "vec_id")
-        )
+        return self.pq.shortlist(pairs, shortlist)
 
 
 _IVFPQR_CACHE: dict[tuple[str, str], "IvfPqResidualIndex"] = {}
@@ -1036,13 +1009,7 @@ def ivf_query_postfilter(
     re-rank work (never more index work: the probe set is unchanged).
     Returns (qid, vec_id, sim, rank) among survivors."""
     fetched = idx.query(queries, k=k * overfetch, nprobe=nprobe)
-    survivors = fetched.filter(predicate)
-    w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return (
-        survivors.select("qid", "vec_id", "sim")
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _top_k(fetched.filter(predicate).select("qid", "vec_id", "sim"), k)
 
 
 @register("q_knn_ivf_filtered", oracle=None, tags=("K3", "B2", "rows-only"))
@@ -1117,9 +1084,8 @@ def q_class_knn_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
     inference-side consumer of the K3 retrieval stack: 20 held-out
     embedding rows are classified by MAJORITY VOTE among their 5
     nearest train-set neighbors (cosine). Prediction ties break to the
-    smallest label, neighbor-rank ties to the smallest vec_id on the
-    e6-rounded similarity — the established K3 determinism contract —
-    so the whole decision path is discrete and exactly
+    smallest label, neighbor ranks follow the module's ranking
+    contract, so the whole decision path is discrete and exactly
     oracle-checkable (no decision ever rests on an unrounded float).
 
     Plan: rides knn_exact verbatim (broadcast queries x corpus, one
@@ -1154,6 +1120,77 @@ def q_class_knn_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("qid")
     )
+
+
+def _recall_census(top: DataFrame, emb: DataFrame, score: str) -> DataFrame:
+    """(qid, rank, vec_id, <score>, in_exact_topk) by (qid, rank): a
+    tier's top-k rows for the fixture queries, each flagged by whether
+    knn_exact over `emb` also ranks it in the top k — the recall census
+    of an approximate tier against the exact verifier."""
+    exact = knn_exact(emb, emb.filter(F.col("vec_id") < N_QUERIES), TOP_K).select(
+        F.col("qid").alias("xq"), F.col("vec_id").alias("xv"), F.lit(True).alias("hit")
+    )
+    return (
+        top.join(
+            F.broadcast(exact),
+            (F.col("xq") == F.col("qid")) & (F.col("xv") == F.col("vec_id")),
+            "left",
+        )
+        .select(
+            "qid",
+            F.col("rank").cast("bigint").alias("rank"),
+            "vec_id",
+            score,
+            F.coalesce(F.col("hit"), F.lit(False)).alias("in_exact_topk"),
+        )
+        .orderBy("qid", "rank")
+    )
+
+
+def _sign_bits(emb: DataFrame) -> DataFrame:
+    """(vec_id, sig): 1-bit sign quantization over the first 63 dims —
+    the one signature every Hamming tier (q_knn_hamming, its rerank and
+    postdedup variants) uses."""
+    return emb.select(
+        "vec_id",
+        F.expr(
+            "aggregate(zip_with(slice(embedding, 1, 63), "
+            "CAST(sequence(0, 62) AS ARRAY<INT>), "
+            "(e, i) -> IF(CAST(e AS DOUBLE) > 0D, "
+            "shiftleft(CAST(1 AS BIGINT), i), CAST(0 AS BIGINT))), "
+            "CAST(0 AS BIGINT), (acc, x) -> acc + x)"
+        ).alias("sig"),
+    )
+
+
+def _hamming_shortlist(bits: DataFrame, n: int) -> DataFrame:
+    """(qid, vec_id, hamming, rank): each fixture query's (vec_id <
+    N_QUERIES) n Hamming-nearest signatures in the (possibly pinned)
+    `_sign_bits` frame, ties on vec_id. `bits` may carry duplicate
+    surrogates."""
+    q = bits.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("qid"), F.col("sig").alias("qsig")
+    )
+    w = Window.partitionBy("qid").orderBy("hamming", "vec_id")
+    return (
+        bits.crossJoin(F.broadcast(q))
+        .filter(F.col("vec_id") != F.col("qid"))
+        .select(
+            "qid",
+            "vec_id",
+            F.bit_count(F.col("sig").bitwiseXOR(F.col("qsig"))).cast("bigint").alias("hamming"),
+        )
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= n)
+    )
+
+
+def _hamming_cascade(bits: DataFrame, corpus: DataFrame, k: int, overfetch: int) -> DataFrame:
+    """Binary shortlist (k*overfetch by Hamming over `bits`, the
+    signatures of `corpus`) -> exact rerank (top-k): (qid, vec_id, sim,
+    rank)."""
+    short = _hamming_shortlist(bits, k * overfetch).select("qid", "vec_id")
+    return _exact_rerank(short, corpus, corpus.filter(F.col("vec_id") < N_QUERIES), k)
 
 
 @register(
@@ -1218,8 +1255,8 @@ def q_knn_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Determinism: the bitmask is exact integer arithmetic (strictly-
     positive test per coordinate), Hamming is integer, ties break on
-    vec_id — and the recall annotation reuses q_knn_exact's e6-rounded
-    cosine contract, so the ENTIRE result is exactly oracle-checkable
+    vec_id — and the recall annotation is knn_exact's answer, so the
+    ENTIRE result is exactly oracle-checkable
     (unlike the seeded-hyperplane LSH tier q_dedup_embedding_lsh,
     whose planes are random). Plan: one map-side fold builds the
     signatures (no shuffle); the scan side carries 8 bytes per vector;
@@ -1232,47 +1269,7 @@ def q_knn_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     # in production) feeds both the query side and the corpus side —
     # unpinned, each re-paid the float scan and the 63-step sign fold
     bits = pin(_sign_bits(emb), "q_knn_hamming.bits")
-    q = bits.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("qid"), F.col("sig").alias("qsig")
-    )
-    scored = (
-        bits.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select(
-            "qid",
-            "vec_id",
-            F.bit_count(
-                F.col("sig").bitwiseXOR(F.col("qsig"))
-            ).cast("bigint").alias("hamming"),
-        )
-    )
-    w = Window.partitionBy("qid").orderBy("hamming", "vec_id")
-    ham_top = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-    )
-    exact = knn_exact(
-        emb, emb.filter(F.col("vec_id") < N_QUERIES), TOP_K
-    ).select(
-        F.col("qid").alias("xq"),
-        F.col("vec_id").alias("xv"),
-        F.lit(True).alias("hit"),
-    )
-    return (
-        ham_top.join(
-            F.broadcast(exact),
-            (F.col("xq") == F.col("qid")) & (F.col("xv") == F.col("vec_id")),
-            "left",
-        )
-        .select(
-            "qid",
-            F.col("rank").cast("bigint").alias("rank"),
-            "vec_id",
-            "hamming",
-            F.coalesce(F.col("hit"), F.lit(False)).alias("in_exact_topk"),
-        )
-        .orderBy("qid", "rank")
-    )
+    return _recall_census(_hamming_shortlist(bits, TOP_K), emb, "hamming")
 
 
 # Rerank cascade: binary shortlist OVERFETCH x4, then exact cosine on
@@ -1360,62 +1357,8 @@ def q_knn_hamming_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pinned bitmask index — shared by the query side and the corpus
     # side of the shortlist (see q_knn_hamming)
     bits = pin(_sign_bits(emb), "q_knn_hamming_rerank.bits")
-    q = bits.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("qid"), F.col("sig").alias("qsig")
-    )
-    wh = Window.partitionBy("qid").orderBy("hamming", "vec_id")
-    shortlist = (
-        bits.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select(
-            "qid",
-            "vec_id",
-            F.bit_count(F.col("sig").bitwiseXOR(F.col("qsig")))
-            .cast("bigint")
-            .alias("hamming"),
-        )
-        .withColumn("hrank", F.row_number().over(wh))
-        .filter(F.col("hrank") <= TOP_K * HAMMING_OVERFETCH)
-        .select("qid", "vec_id")
-    )
-    qv = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("q_emb")
-    )
-    reranked = (
-        shortlist.join(emb, "vec_id")
-        .join(F.broadcast(qv), "qid")
-        .select(
-            "qid",
-            "vec_id",
-            F.round(cosine("embedding", "q_emb"), 6).alias("sim"),
-        )
-    )
-    wr = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("vec_id"))
-    cascade = reranked.withColumn("rank", F.row_number().over(wr)).filter(
-        F.col("rank") <= TOP_K
-    )
-    exact = knn_exact(
-        emb, emb.filter(F.col("vec_id") < N_QUERIES), TOP_K
-    ).select(
-        F.col("qid").alias("xq"),
-        F.col("vec_id").alias("xv"),
-        F.lit(True).alias("hit"),
-    )
-    return (
-        cascade.join(
-            F.broadcast(exact),
-            (F.col("xq") == F.col("qid")) & (F.col("xv") == F.col("vec_id")),
-            "left",
-        )
-        .select(
-            "qid",
-            F.col("rank").cast("bigint").alias("rank"),
-            "vec_id",
-            "sim",
-            F.coalesce(F.col("hit"), F.lit(False)).alias("in_exact_topk"),
-        )
-        .orderBy("qid", "rank")
-    )
+    cascade = _hamming_cascade(bits, emb, TOP_K, HAMMING_OVERFETCH)
+    return _recall_census(cascade, emb, "sim")
 
 
 # ---------------------------------------------------------------------------
@@ -1434,70 +1377,6 @@ def q_knn_hamming_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 # best neighbor's copy (tied sim) — so hits_prededup < hits_postdedup by
 # construction, which is exactly the uplift the mitigation buys.
 _DUP_OFFSET = 100_000
-
-
-def _sign_bits(emb: DataFrame) -> DataFrame:
-    """(vec_id, sig): 1-bit sign quantization over the first 63 dims —
-    the one signature every Hamming tier (q_knn_hamming, its rerank and
-    postdedup variants) uses."""
-    return emb.select(
-        "vec_id",
-        F.expr(
-            "aggregate(zip_with(slice(embedding, 1, 63), "
-            "CAST(sequence(0, 62) AS ARRAY<INT>), "
-            "(e, i) -> IF(CAST(e AS DOUBLE) > 0D, "
-            "shiftleft(CAST(1 AS BIGINT), i), CAST(0 AS BIGINT))), "
-            "CAST(0 AS BIGINT), (acc, x) -> acc + x)"
-        ).alias("sig"),
-    )
-
-
-def _hamming_shortlist(corpus: DataFrame, k: int, overfetch: int) -> DataFrame:
-    """Stage 1 of the cascade: (qid, vec_id) for each query's
-    k*overfetch Hamming-nearest signatures. Queries are the original
-    fixture query set (vec_id < N_QUERIES); the corpus may carry
-    duplicate surrogates."""
-    bits = _sign_bits(corpus)
-    q = bits.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("qid"), F.col("sig").alias("qsig")
-    )
-    wh = Window.partitionBy("qid").orderBy("hamming", "vec_id")
-    return (
-        bits.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select(
-            "qid",
-            "vec_id",
-            F.bit_count(F.col("sig").bitwiseXOR(F.col("qsig")))
-            .cast("bigint")
-            .alias("hamming"),
-        )
-        .withColumn("hrank", F.row_number().over(wh))
-        .filter(F.col("hrank") <= k * overfetch)
-        .select("qid", "vec_id")
-    )
-
-
-def _hamming_cascade(corpus: DataFrame, k: int, overfetch: int) -> DataFrame:
-    """Binary shortlist (k*overfetch by Hamming) -> exact-cosine rerank
-    (top-k)."""
-    shortlist = _hamming_shortlist(corpus, k, overfetch)
-    qv = corpus.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("q_emb")
-    )
-    wr = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return (
-        shortlist.join(corpus, "vec_id")
-        .join(F.broadcast(qv), "qid")
-        .select(
-            "qid",
-            "vec_id",
-            F.round(cosine("embedding", "q_emb"), 6).alias("sim"),
-        )
-        .withColumn("rank", F.row_number().over(wr))
-        .filter(F.col("rank") <= k)
-        .select("qid", "vec_id")
-    )
 
 
 @register(
@@ -1674,10 +1553,11 @@ def q_knn_hamming_postdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth = knn_exact(
         corpus_d, emb.filter(F.col("vec_id") < N_QUERIES), TOP_K
     ).select(F.col("qid").alias("tq"), F.col("vec_id").alias("tv"))
-    casc_a = _hamming_cascade(corpus_a, TOP_K, HAMMING_OVERFETCH)
-    casc_d = _hamming_cascade(corpus_d, TOP_K, HAMMING_OVERFETCH)
+    bits_a, bits_d = _sign_bits(corpus_a), _sign_bits(corpus_d)
+    casc_a = _hamming_cascade(bits_a, corpus_a, TOP_K, HAMMING_OVERFETCH)
+    casc_d = _hamming_cascade(bits_d, corpus_d, TOP_K, HAMMING_OVERFETCH)
     sl_pre = (
-        _hamming_shortlist(corpus_a, TOP_K, HAMMING_OVERFETCH)
+        _hamming_shortlist(bits_a, TOP_K * HAMMING_OVERFETCH)
         .groupBy("qid")
         .agg(
             F.countDistinct(F.col("vec_id") % F.lit(_DUP_OFFSET)).alias(
@@ -1686,7 +1566,7 @@ def q_knn_hamming_postdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     sl_post = (
-        _hamming_shortlist(corpus_d, TOP_K, HAMMING_OVERFETCH)
+        _hamming_shortlist(bits_d, TOP_K * HAMMING_OVERFETCH)
         .groupBy("qid")
         .agg(F.countDistinct("vec_id").alias("shortlist_distinct_postdedup"))
     )
@@ -1879,28 +1759,7 @@ def q_knn_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
         dots.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= TOP_K)
     )
-    exact = knn_exact(
-        emb, emb.filter(F.col("vec_id") < N_QUERIES), TOP_K
-    ).select(
-        F.col("qid").alias("xq"),
-        F.col("vec_id").alias("xv"),
-        F.lit(True).alias("hit"),
-    )
-    return (
-        topk.join(
-            F.broadcast(exact),
-            (F.col("xq") == F.col("qid")) & (F.col("xv") == F.col("vec_id")),
-            "left",
-        )
-        .select(
-            "qid",
-            F.col("rank").cast("bigint").alias("rank"),
-            "vec_id",
-            "dot",
-            F.coalesce(F.col("hit"), F.lit(False)).alias("in_exact_topk"),
-        )
-        .orderBy("qid", "rank")
-    )
+    return _recall_census(topk, emb, "dot")
 
 
 # kNN self-join block bound: the exact primitive runs per BLOCK of this
@@ -1936,8 +1795,7 @@ def q_knn_self_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     label propagation / UMAP-style layouts), SemDeDup-style
     neighborhood audits and hard-negative mining all need the
     all-points variant. Semantics: per vector, the top-3 cosine
-    neighbors excluding self, ranked by ROUND(sim, 6) with vec_id
-    tie-break (the q_knn_exact determinism contract verbatim).
+    neighbors excluding self, under the module's ranking contract.
 
     The block bound IS the scale design: the exact self-join runs on
     a {SELF_JOIN_CAP}-vector BLOCK (capped by vec_id — O(cap^2) pair

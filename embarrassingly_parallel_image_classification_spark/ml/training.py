@@ -21,17 +21,21 @@ O(d) per partition exactly like MLlib's treeAggregate [PK]. The
 driver's only state is the d-vector of weights; T iterations = T
 scans (production caches the feature frame once).
 
-Integer-division discipline: Spark ``DIV``, DuckDB ``//`` and the
-``_tdiv`` helper below all truncate toward zero, so negative
-gradients divide identically in all three places.
+Integer-division discipline: every Spark-side quotient is
+``operators.stats.trunc_div`` (an exact DECIMAL quotient truncated
+toward zero; Spark's BIGINT ``div`` silently wraps past 2^63), the
+oracles spell it as a sign-split DuckDB ``//`` on absolute values, and
+the driver-side GD loop uses ``_tdiv`` below, so negative gradients
+divide identically in all three places.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..localframe import local_df, pin
+from ..operators.stats import D38, comoment, moment_census, trunc_div
 from ..registry import register
 from ..sources.tables import t
 
@@ -49,8 +53,8 @@ def _tdiv(a: int, b: int) -> int:
     return q if (a >= 0) == (b >= 0) else -q
 
 
-# Feature/target spelling shared (as SQL text) by the Spark query and
-# the oracle: x1 = priority rank centered at 0 (the leading digit of
+# Feature/target spelling of the oracle (the Spark query spells the
+# same columns): x1 = priority rank centered at 0 (the leading digit of
 # o_orderpriority, 1..5 → -2..2), x2 = order year centered at 1998
 # (fixture range 1995..2001 → -3..3), y = total price in cents DIV
 # 1000. Centering keeps the off-diagonal Gram terms small so the
@@ -149,12 +153,13 @@ def q_train_linreg_gd(spark: SparkSession, sf_dir: str) -> DataFrame:
     that the sums move to DECIMAL(38,0) exactly like q_dedup_semantic's
     128-bit cosine arithmetic."""
     pts = pin(
-        t(spark, sf_dir, "orders").selectExpr(
-            "CAST(CAST(substring(o_orderpriority, 1, 1) AS BIGINT) - 3"
-            " AS BIGINT) AS x1",
-            "CAST(year(o_orderdate) - 1998 AS BIGINT) AS x2",
-            "CAST(CAST(ROUND(o_totalprice * 100, 0) AS BIGINT) DIV 1000"
-            " AS BIGINT) AS y",
+        t(spark, sf_dir, "orders").select(
+            F.expr("CAST(CAST(substring(o_orderpriority, 1, 1) AS BIGINT) - 3 AS BIGINT)")
+            .alias("x1"),
+            F.expr("CAST(year(o_orderdate) - 1998 AS BIGINT)").alias("x2"),
+            trunc_div(F.expr("CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)"), F.lit(1000))
+            .cast("bigint")
+            .alias("y"),
         ),
         "q_train_linreg_gd.pts",
     )
@@ -434,63 +439,7 @@ def q_train_decision_stump(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows over that tiny frame, one TakeOrdered(5). The fact table
     is scanned once; a 100x scale-up changes only the census counts,
     not a single post-census row."""
-    li = t(spark, sf_dir, "lineitem").select(
-        F.expr("CAST(ROUND(l_quantity, 0) AS BIGINT)").alias("qty"),
-        F.expr("CAST(ROUND(l_discount * 100, 0) AS BIGINT)").alias("disc"),
-        F.when(F.col("l_returnflag") == "R", 1).otherwise(0).alias("y"),
-    )
-    # stack(), not unionAll-of-two-selects (round 12): the union
-    # spelling scans the fact table ONCE PER FEATURE — stack() emits
-    # both (feature, val) rows per input row in a single pass, so a
-    # census over F features costs one scan, not F.
-    long = li.select(
-        F.expr("stack(2, 'quantity', qty, 'discount', disc)"
-               " AS (feature, val)"),
-        "y",
-    )
-    per_v = long.groupBy("feature", "val").agg(
-        F.sum("y").cast("bigint").alias("pos"),
-        (F.count("*") - F.sum("y")).cast("bigint").alias("neg"),
-    )
-    wcum = (
-        Window.partitionBy("feature")
-        .orderBy("val")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    wtot = Window.partitionBy("feature")
-    cum = per_v.select(
-        "feature",
-        "val",
-        F.sum("pos").over(wcum).cast("bigint").alias("lp"),
-        F.sum("neg").over(wcum).cast("bigint").alias("lneg"),
-        F.sum("pos").over(wtot).cast("bigint").alias("tp"),
-        F.sum("neg").over(wtot).cast("bigint").alias("tn"),
-    )
-    n_left = F.col("lp") + F.col("lneg")
-    rp = F.col("tp") - F.col("lp")
-    rneg = F.col("tn") - F.col("lneg")
-    n_right = rp + rneg
-    gini = F.round(
-        (
-            F.lit(2.0)
-            * (
-                (F.col("lp") * F.col("lneg")).cast("double")
-                / n_left.cast("double")
-                + (rp * rneg).cast("double") / n_right.cast("double")
-            )
-            / (F.col("tp") + F.col("tn")).cast("double")
-        )
-        * 1000000,
-        0,
-    ).cast("bigint")
-    splits = cum.filter((n_left > 0) & (n_right > 0)).select(
-        "feature",
-        F.col("val").alias("threshold"),
-        n_left.alias("n_left"),
-        n_right.alias("n_right"),
-        gini.alias("gini_e6"),
-    )
-    return splits.orderBy("gini_e6", "feature", "threshold").limit(5)
+    return _root_splits(_tree_base(spark, sf_dir), 5)
 
 
 # Isotonic fit window: PAVA runs per key over the FIRST ISO_N events
@@ -716,18 +665,10 @@ def q_train_grouped_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("CAST(year(o_orderdate) - 1998 AS BIGINT)").alias("x"),
         F.expr("CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)").alias("y"),
     )
-    d38 = "decimal(38,0)"
-    s = pts.groupBy("grp").agg(
-        F.count("*").cast(d38).alias("n"),
-        F.sum("x").cast(d38).alias("sx"),
-        F.sum("y").cast(d38).alias("sy"),
-        F.sum(F.col("x") * F.col("y")).cast(d38).alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).cast(d38).alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).cast(d38).alias("syy"),
-    )
-    num = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")).cast("double")
-    den = (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")).cast("double")
-    deny = (F.col("n") * F.col("syy") - F.col("sy") * F.col("sy")).cast("double")
+    s = moment_census(pts, ["x", "y"], ("grp",))
+    num = comoment("x", "y").cast("double")
+    den = comoment("x", "x").cast("double")
+    deny = comoment("y", "y").cast("double")
     slope = num / den
     return s.select(
         "grp",
@@ -1000,6 +941,18 @@ def q_train_gbt_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
 # approximated.
 RIDGE_LAMBDA = 10_000
 
+
+def _price_census(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The moment census of lineitem's (x1, x2, y) = (quantity,
+    discount-pct, extendedprice cents) that ridge and lasso solve."""
+    x = t(spark, sf_dir, "lineitem").select(
+        F.col("l_quantity").cast("bigint").alias("x1"),
+        F.expr("CAST(ROUND(l_discount * 100, 0) AS BIGINT)").alias("x2"),
+        F.expr("CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT)").alias("y"),
+    )
+    return moment_census(x, ["x1", "x2", "y"])
+
+
 @register(
     "q_train_ridge",
     oracle=f"""
@@ -1064,11 +1017,11 @@ def q_train_ridge(spark: SparkSession, sf_dir: str) -> DataFrame:
     L2-penalized normal equations (X'X + lambda*I) beta = X'y solved
     EXACTLY by Cramer's rule — the 3x3 system's determinants are
     integer polynomials in the nine census sums, so every coefficient
-    is an exact rational detb_j/det0 reported as a sign-split
-    TRUNCATED e6 integer quotient (floor on the absolute values, where
-    Spark's `div` and DuckDB's `//` agree bit-for-bit; no float
-    anywhere). Complements q_train_linreg_gd: same model family, the
-    ITERATIVE spelling there vs the one-shot algebraic solve here —
+    is an exact rational detb_j/det0 reported as a TRUNCATED e6
+    integer quotient (trunc_div; the oracle's sign-split `//` on
+    absolute values agrees bit-for-bit; no float anywhere).
+    Complements q_train_linreg_gd: same model family, the ITERATIVE
+    spelling there vs the one-shot algebraic solve here —
     at 100 TB the closed form is ONE census pass + driver-side 3x3
     arithmetic, strictly cheaper than any GD schedule when the
     feature count is small enough to invert.
@@ -1077,34 +1030,16 @@ def q_train_ridge(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums; everything after is constant-time arithmetic ON that row
     (no second scan, no iteration, no collect — the determinant
     algebra runs inside the same Catalyst plan)."""
-    x = t(spark, sf_dir, "lineitem").select(
-        F.col("l_quantity").cast("bigint").alias("x1"),
-        F.expr("CAST(ROUND(l_discount * 100, 0) AS BIGINT)").alias("x2"),
-        F.expr("CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT)").alias(
-            "y"
-        ),
-    )
-    d38 = "decimal(38,0)"
-    c = x.agg(
-        F.count("*").cast(d38).alias("n"),
-        F.sum("x1").cast(d38).alias("sx1"),
-        F.sum("x2").cast(d38).alias("sx2"),
-        F.sum(F.col("x1") * F.col("x1")).cast(d38).alias("sx11"),
-        F.sum(F.col("x1") * F.col("x2")).cast(d38).alias("sx12"),
-        F.sum(F.col("x2") * F.col("x2")).cast(d38).alias("sx22"),
-        F.sum("y").cast(d38).alias("sy"),
-        F.sum(F.col("x1") * F.col("y")).cast(d38).alias("sx1y"),
-        F.sum(F.col("x2") * F.col("y")).cast(d38).alias("sx2y"),
-    )
+    c = _price_census(spark, sf_dir)
     lam = RIDGE_LAMBDA
     m = c.select(
         "n",
         F.expr(f"n + {lam}").alias("a11"),
         F.col("sx1").alias("a12"),
         F.col("sx2").alias("a13"),
-        F.expr(f"sx11 + {lam}").alias("a22"),
-        F.col("sx12").alias("a23"),
-        F.expr(f"sx22 + {lam}").alias("a33"),
+        F.expr(f"sx1x1 + {lam}").alias("a22"),
+        F.col("sx1x2").alias("a23"),
+        F.expr(f"sx2x2 + {lam}").alias("a33"),
         F.col("sy").alias("b1"),
         F.col("sx1y").alias("b2"),
         F.col("sx2y").alias("b3"),
@@ -1130,11 +1065,7 @@ def q_train_ridge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def trunc_e6(num: str):
-        return (
-            F.when(F.col(num) < 0, -1).otherwise(1)
-            * F.when(F.col("det0") < 0, -1).otherwise(1)
-            * F.expr(f"abs({num}) * 1000000 div abs(det0)")
-        ).cast("bigint")
+        return trunc_div(F.col(num) * 1000000, F.col("det0")).cast("bigint")
 
     return d.select(
         F.col("n").cast("bigint").alias("n"),
@@ -1167,9 +1098,9 @@ def _lasso_cd_sql() -> tuple:
       b_j_e6   = sign(rho) * ((|rho| - lam_e6) // c_jj) if |rho| > lam
                  else 0                               (soft threshold)
     The intercept is recovered once at the end on the raw scale.
-    Sign-split floor keeps Spark `div` (truncating) and DuckDB `//`
-    (flooring) bit-identical on the non-negative operands they agree
-    on."""
+    The Spark side divides with trunc_div; the sign-split DuckDB `//`
+    here floors only non-negative operands, where floor and truncation
+    agree."""
     ctes = ["s0 AS (SELECT *, CAST(0 AS DECIMAL(38,0)) AS b1, CAST(0 AS DECIMAL(38,0)) AS b2 FROM cc)"]
     k = 0
     for _ in range(LASSO_SWEEPS):
@@ -1268,62 +1199,39 @@ def q_train_lasso_cd(spark: SparkSession, sf_dir: str) -> DataFrame:
     updates plus the intercept recovery are constant-time arithmetic
     on that single row inside the same Catalyst plan (no iteration, no
     collect, no second scan)."""
-    x = t(spark, sf_dir, "lineitem").select(
-        F.col("l_quantity").cast("bigint").alias("x1"),
-        F.expr("CAST(ROUND(l_discount * 100, 0) AS BIGINT)").alias("x2"),
-        F.expr("CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT)").alias(
-            "y"
-        ),
+    c = _price_census(spark, sf_dir)
+    cc = c.select(
+        "n",
+        "sx1",
+        "sx2",
+        "sy",
+        comoment("x1", "y").cast(D38).alias("c1y"),
+        comoment("x2", "y").cast(D38).alias("c2y"),
+        comoment("x1", "x2").cast(D38).alias("c12"),
+        comoment("x1", "x1").cast(D38).alias("c11"),
+        comoment("x2", "x2").cast(D38).alias("c22"),
+        (F.greatest(F.abs(comoment("x1", "y")), F.abs(comoment("x2", "y"))) * 500000)
+        .cast(D38)
+        .alias("lam"),
     )
-    d38 = "decimal(38,0)"
-    c = x.agg(
-        F.count("*").cast(d38).alias("n"),
-        F.sum("x1").cast(d38).alias("sx1"),
-        F.sum("x2").cast(d38).alias("sx2"),
-        F.sum(F.col("x1") * F.col("x1")).cast(d38).alias("sx11"),
-        F.sum(F.col("x1") * F.col("x2")).cast(d38).alias("sx12"),
-        F.sum(F.col("x2") * F.col("x2")).cast(d38).alias("sx22"),
-        F.sum("y").cast(d38).alias("sy"),
-        F.sum(F.col("x1") * F.col("y")).cast(d38).alias("sx1y"),
-        F.sum(F.col("x2") * F.col("y")).cast(d38).alias("sx2y"),
-    )
-    cc = c.selectExpr(
-        "n", "sx1", "sx2", "sy",
-        "CAST(n * sx1y - sx1 * sy AS DECIMAL(38,0)) AS c1y",
-        "CAST(n * sx2y - sx2 * sy AS DECIMAL(38,0)) AS c2y",
-        "CAST(n * sx12 - sx1 * sx2 AS DECIMAL(38,0)) AS c12",
-        "CAST(n * sx11 - sx1 * sx1 AS DECIMAL(38,0)) AS c11",
-        "CAST(n * sx22 - sx2 * sx2 AS DECIMAL(38,0)) AS c22",
-        "CAST(GREATEST(ABS(n * sx1y - sx1 * sy), "
-        "ABS(n * sx2y - sx2 * sy)) * 500000 "
-        "AS DECIMAL(38,0)) AS lam",
-    )
-    s = cc.withColumn("b1", F.lit(0).cast(d38)).withColumn(
-        "b2", F.lit(0).cast(d38)
-    )
+    s = cc.withColumn("b1", F.lit(0).cast(D38)).withColumn("b2", F.lit(0).cast(D38))
+    lam = F.col("lam")
     for _ in range(LASSO_SWEEPS):
         for j, oth in ((1, 2), (2, 1)):
-            rho = f"(1000000 * c{j}y - b{oth} * c12)"
+            rho = F.lit(1000000) * F.col(f"c{j}y") - F.col(f"b{oth}") * F.col("c12")
+            # soft threshold: rho shrunk toward zero by lam, over c_jj > 0
+            shrunk = F.when(rho < 0, rho + lam).otherwise(rho - lam)
             s = s.withColumn(
                 f"b{j}",
-                F.expr(
-                    f"CASE WHEN ABS({rho}) <= lam "
-                    f"THEN CAST(0 AS DECIMAL(38,0)) "
-                    f"ELSE (CASE WHEN {rho} < 0 THEN -1 ELSE 1 END) "
-                    f"* ((ABS({rho}) - lam) div c{j}{j}) END"
-                ).cast(d38),
+                F.when(F.abs(rho) <= lam, F.lit(0).cast(D38))
+                .otherwise(trunc_div(shrunk, F.col(f"c{j}{j}")))
+                .cast(D38),
             )
-    b0e = "(1000000 * sy - b1 * sx1 - b2 * sx2)"
-    s = s.withColumn(
-        "b0",
-        F.expr(
-            f"(CASE WHEN {b0e} < 0 THEN -1 ELSE 1 END) "
-            f"* (ABS({b0e}) div n)"
-        ).cast(d38),
-    )
+    b0e = F.lit(1000000) * F.col("sy") - F.col("b1") * F.col("sx1") - F.col("b2") * F.col("sx2")
+    s = s.withColumn("b0", trunc_div(b0e, F.col("n")))
     return s.select(
         F.col("n").cast("bigint").alias("n"),
-        F.expr("lam div 1000000").cast("bigint").alias("lam_natural"),
+        trunc_div(lam, F.lit(1000000)).cast("bigint").alias("lam_natural"),
         F.col("b0").cast("bigint").alias("b0_e6"),
         F.col("b1").cast("bigint").alias("b1_e6"),
         F.col("b2").cast("bigint").alias("b2_e6"),
@@ -1396,6 +1304,98 @@ def _stump_split_scores(long: DataFrame, part_cols: tuple[str, ...]) -> DataFram
         n_right.alias("n_right"),
         gini.alias("gini_e6"),
     )
+
+
+def _tree_base(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(qty, disc, y): lineitem's two integer features and the binary
+    label returnflag = 'R' — the instance layout every tree trainer
+    here grows from."""
+    return t(spark, sf_dir, "lineitem").select(
+        F.expr("CAST(ROUND(l_quantity, 0) AS BIGINT)").alias("qty"),
+        F.expr("CAST(ROUND(l_discount * 100, 0) AS BIGINT)").alias("disc"),
+        F.when(F.col("l_returnflag") == "R", 1).otherwise(0).alias("y"),
+    )
+
+
+def _two_features(df: DataFrame, part_cols: tuple[str, ...]) -> DataFrame:
+    """(part_cols..., feature, val, y) with one row per feature. stack(),
+    not a union of two selects (round 12): the union scans the fact
+    table once per feature, stack() emits both rows in one pass."""
+    return df.select(
+        *part_cols,
+        F.expr("stack(2, 'quantity', qty, 'discount', disc) AS (feature, val)"),
+        "y",
+    )
+
+
+_SPLIT = ("feature", "threshold", "n_left", "n_right", "gini_e6")
+
+
+def _root_splits(base: DataFrame, n: int) -> DataFrame:
+    """The n best root splits of a (qty, disc, y) layout, ties broken
+    by (feature, threshold)."""
+    splits = _stump_split_scores(_two_features(base, ()), ())
+    return splits.orderBy("gini_e6", "feature", "threshold").limit(n)
+
+
+def _side(feature: str, threshold: str) -> Column:
+    """'L' when the row goes left of the split named by the `feature`
+    and `threshold` columns (value <= threshold), else 'R'."""
+    left = ((F.col(feature) == "quantity") & (F.col("qty") <= F.col(threshold))) | (
+        (F.col(feature) == "discount") & (F.col("disc") <= F.col(threshold))
+    )
+    return F.when(left, F.lit("L")).otherwise(F.lit("R"))
+
+
+def _route_root(base: DataFrame, root: DataFrame) -> DataFrame:
+    """(qty, disc, y, node): `base` labeled L/R by the 1-row root split,
+    broadcast onto every row (the scalar-cross pattern)."""
+    rootb = F.broadcast(
+        root.select(F.col("feature").alias("r_feature"), F.col("threshold").alias("r_threshold"))
+    )
+    return (
+        base.crossJoin(rootb)
+        .withColumn("node", _side("r_feature", "r_threshold"))
+        .select("qty", "disc", "y", "node")
+    )
+
+
+def _route(layout: DataFrame, best: DataFrame) -> DataFrame:
+    """(qty, disc, y, node): each row's path label extended by one
+    character through its node's best split (a broadcast hash join on
+    node; a node without a split drops its rows)."""
+    bestb = F.broadcast(
+        best.select(
+            "node", F.col("feature").alias("s_feature"), F.col("threshold").alias("s_threshold")
+        )
+    )
+    return (
+        layout.join(bestb, "node")
+        .withColumn("node", F.concat(F.col("node"), _side("s_feature", "s_threshold")))
+        .select("qty", "disc", "y", "node")
+    )
+
+
+def _best_splits(layout: DataFrame) -> DataFrame:
+    """(node, feature, threshold, n_left, n_right, gini_e6): each node's
+    best split over a (qty, disc, y, node) layout — one census for the
+    whole level, ties broken by (feature, threshold)."""
+    splits = _stump_split_scores(_two_features(layout, ("node",)), ("node",))
+    w = Window.partitionBy("node").orderBy("gini_e6", "feature", "threshold")
+    return (
+        splits.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") == 1)
+        .select("node", *_SPLIT)
+    )
+
+
+def _tree_rows(root: DataFrame, *levels: DataFrame) -> DataFrame:
+    """The tree's output: the root split as node 'root', then each
+    level's best splits, ordered by path label."""
+    out = root.select(F.lit("root").alias("node"), *_SPLIT)
+    for level in levels:
+        out = out.unionAll(level)
+    return out.orderBy("node")
 
 
 _TREE2_BASE_SQL = """
@@ -1532,53 +1532,9 @@ def q_train_tree_depth2(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: 3 rows — the root split and each child's best split, with
     exact child sizes and scores (a pure child with no valid split
     would simply emit no row, deterministically in both engines)."""
-    li = t(spark, sf_dir, "lineitem").select(
-        F.expr("CAST(ROUND(l_quantity, 0) AS BIGINT)").alias("qty"),
-        F.expr("CAST(ROUND(l_discount * 100, 0) AS BIGINT)").alias("disc"),
-        F.when(F.col("l_returnflag") == "R", 1).otherwise(0).alias("y"),
-    )
-
-    def two_features(df: DataFrame, extra: tuple[str, ...]) -> DataFrame:
-        # stack() = one fact scan per census (see q_train_decision_stump)
-        return df.select(
-            *extra,
-            F.expr("stack(2, 'quantity', qty, 'discount', disc)"
-                   " AS (feature, val)"),
-            "y",
-        )
-
-    splits0 = _stump_split_scores(two_features(li, ()), ())
-    root = splits0.orderBy("gini_e6", "feature", "threshold").limit(1)
-    rootb = F.broadcast(
-        root.select(
-            F.col("feature").alias("r_feature"),
-            F.col("threshold").alias("r_threshold"),
-        )
-    )
-    base2 = li.crossJoin(rootb).withColumn(
-        "node",
-        F.when(
-            ((F.col("r_feature") == "quantity") & (F.col("qty") <= F.col("r_threshold")))
-            | ((F.col("r_feature") == "discount") & (F.col("disc") <= F.col("r_threshold"))),
-            F.lit("L"),
-        ).otherwise(F.lit("R")),
-    )
-    splits2 = _stump_split_scores(two_features(base2, ("node",)), ("node",))
-    w2 = Window.partitionBy("node").orderBy("gini_e6", "feature", "threshold")
-    best2 = (
-        splits2.withColumn("rk", F.row_number().over(w2))
-        .filter(F.col("rk") == 1)
-        .select("node", "feature", "threshold", "n_left", "n_right", "gini_e6")
-    )
-    out_root = root.select(
-        F.lit("root").alias("node"),
-        "feature",
-        "threshold",
-        "n_left",
-        "n_right",
-        "gini_e6",
-    )
-    return out_root.unionAll(best2).orderBy("node")
+    li = _tree_base(spark, sf_dir)
+    root = _root_splits(li, 1)
+    return _tree_rows(root, _best_splits(_route_root(li, root)))
 
 
 @register(
@@ -1761,111 +1717,19 @@ def q_train_tree_depth3(spark: SparkSession, sf_dir: str) -> DataFrame:
     grandchildren, each with its winning split, exact child sizes and
     score. Path labels sort lexicographically (L < LL < LR < R < RL
     < RR < root) the same way in Spark and DuckDB (pure ASCII)."""
-    li = t(spark, sf_dir, "lineitem").select(
-        F.expr("CAST(ROUND(l_quantity, 0) AS BIGINT)").alias("qty"),
-        F.expr("CAST(ROUND(l_discount * 100, 0) AS BIGINT)").alias("disc"),
-        F.when(F.col("l_returnflag") == "R", 1).otherwise(0).alias("y"),
-    )
-
-    def two_features(df: DataFrame, extra: tuple[str, ...]) -> DataFrame:
-        # stack() = one fact scan per census (see q_train_decision_stump)
-        return df.select(
-            *extra,
-            F.expr("stack(2, 'quantity', qty, 'discount', disc)"
-                   " AS (feature, val)"),
-            "y",
-        )
-
-    splits0 = _stump_split_scores(two_features(li, ()), ())
+    li = _tree_base(spark, sf_dir)
     # the root pick (1 row) feeds the routing AND the output union —
     # pin it so the root census runs once
-    root = pin(
-        splits0.orderBy("gini_e6", "feature", "threshold")
-        .limit(1),
-        "q_train_tree_depth3.root",
-    )
-    rootb = F.broadcast(
-        root.select(
-            F.col("feature").alias("r_feature"),
-            F.col("threshold").alias("r_threshold"),
-        )
-    )
+    root = pin(_root_splits(li, 1), "q_train_tree_depth3.root")
     # materialize the routed INSTANCE LAYOUT between levels — the
     # production GBM contract behind the "depth d = d scans" claim:
     # each level reads the previous layout, never re-derives it, so
     # the raw fact table is scanned exactly twice (root census +
     # layout build) regardless of depth
-    base2 = pin(
-        li.crossJoin(rootb)
-        .withColumn(
-            "node",
-            F.when(
-                (
-                    (F.col("r_feature") == "quantity")
-                    & (F.col("qty") <= F.col("r_threshold"))
-                )
-                | (
-                    (F.col("r_feature") == "discount")
-                    & (F.col("disc") <= F.col("r_threshold"))
-                ),
-                F.lit("L"),
-            ).otherwise(F.lit("R")),
-        )
-        .select("qty", "disc", "y", "node"),
-        "q_train_tree_depth3.base2",
-    )
-    splits2 = _stump_split_scores(two_features(base2, ("node",)), ("node",))
-    w2 = Window.partitionBy("node").orderBy("gini_e6", "feature", "threshold")
+    base2 = pin(_route_root(li, root), "q_train_tree_depth3.base2")
     # <=2 rows, feeds level-3 routing AND the output union
-    best2 = pin(
-        splits2.withColumn("rk", F.row_number().over(w2))
-        .filter(F.col("rk") == 1)
-        .select("node", "feature", "threshold", "n_left", "n_right", "gini_e6"),
-        "q_train_tree_depth3.best2",
-    )
-    best2b = F.broadcast(
-        best2.select(
-            "node",
-            F.col("feature").alias("s_feature"),
-            F.col("threshold").alias("s_threshold"),
-        )
-    )
-    base3 = (
-        base2.join(best2b, "node")
-        .withColumn(
-            "node",
-            F.concat(
-                F.col("node"),
-                F.when(
-                    (
-                        (F.col("s_feature") == "quantity")
-                        & (F.col("qty") <= F.col("s_threshold"))
-                    )
-                    | (
-                        (F.col("s_feature") == "discount")
-                        & (F.col("disc") <= F.col("s_threshold"))
-                    ),
-                    F.lit("L"),
-                ).otherwise(F.lit("R")),
-            ),
-        )
-        .select("qty", "disc", "y", "node")
-    )
-    splits3 = _stump_split_scores(two_features(base3, ("node",)), ("node",))
-    best3 = (
-        splits3.withColumn("rk", F.row_number().over(w2))
-        .filter(F.col("rk") == 1)
-        .select("node", "feature", "threshold", "n_left", "n_right", "gini_e6")
-    )
-    out_root = root.select(
-        F.lit("root").alias("node"),
-        "feature",
-        "threshold",
-        "n_left",
-        "n_right",
-        "gini_e6",
-    )
-    return out_root.unionAll(best2).unionAll(best3).orderBy("node")
+    best2 = pin(_best_splits(base2), "q_train_tree_depth3.best2")
+    return _tree_rows(root, best2, _best_splits(_route(base2, best2)))
 
 
 _PERC_EPOCHS = 3
@@ -1968,9 +1832,9 @@ def q_train_perceptron(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("CAST(SUBSTRING(o_orderpriority, 1, 1) AS BIGINT)").alias(
                 "x1"
             ),
-            F.expr(
-                "CAST(ROUND(o_totalprice * 100, 0) AS BIGINT) div 1000000"
-            ).alias("x2"),
+            trunc_div(F.expr("CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)"), F.lit(1000000))
+            .cast("bigint")
+            .alias("x2"),
             F.when(F.col("o_orderstatus") == "F", 1)
             .otherwise(-1)
             .alias("y"),
@@ -2035,9 +1899,7 @@ def q_train_perceptron(spark: SparkSession, sf_dir: str) -> DataFrame:
             "w2",
             "n_train",
             "n_misclassified",
-            F.expr(
-                "(n_train - n_misclassified) * 1000000 div n_train"
-            )
+            trunc_div((F.col("n_train") - F.col("n_misclassified")) * 1000000, F.col("n_train"))
             .cast("bigint")
             .alias("accuracy_e6"),
         )

@@ -18,7 +18,12 @@ Exactness rule (every query here is judged by exact DuckDB parity):
 * A rational whose numerator is too large for that (s^2/n at ~10^24)
   goes through ``fix_e6``, the e6 DIV/MOD fixing: an exact integer
   quotient plus a rounded remainder whose operands are again below
-  2^53. Sums of fixings are exact integers.
+  2^53. Sums of fixings are exact integers. A quotient truncated toward
+  zero goes through ``trunc_div``.
+* Least-squares and correlation statistics read one
+  ``moment_census`` (n, the sums and the product sums, each operand
+  widened before it multiplies) through ``comoment`` and
+  ``pearson_r``.
 * Decisions (significance booleans) never touch floats: they are
   cross-multiplied DECIMAL(38,0) integer comparisons (q_ab_test's
   multiply-through pattern), or exact floor quotients against an
@@ -74,6 +79,57 @@ def fix_e6(num: Column, den: Column) -> Column:
     return F.lit(1000000).cast(D38) * ((num - num % den) / den).cast(D38) + F.round(
         F.lit(1000000.0) * (num % den).cast("double") / den.cast("double"), 0
     ).cast(D38)
+
+
+def trunc_div(a: Column, b: Column) -> Column:
+    """a / b truncated toward zero, as an exact DECIMAL(38,0): the
+    sign-split quotient sign(a) * sign(b) * (|a| div |b|) that DuckDB
+    oracles spell with ``//`` on absolute values.
+
+    Precondition: b != 0, |a| + |b| < 10^38, and |a / b| < 10^32 (a
+    DECIMAL(38,0) division result keeps 32 integer digits). The DECIMAL
+    division |a| / |b| rounded to an integer is floor(|a| / |b|) or one
+    more; the one more is taken back where it times |b| overshoots |a|.
+    No DECIMAL remainder is taken: per row it cost four times this
+    spelling. Spark's ``div`` returns BIGINT and silently wraps
+    quotients past 2^63."""
+    a, b = a.cast(D38), b.cast(D38)
+    q = (F.abs(a) / F.abs(b)).cast(D38)
+    q = q - F.when(q * F.abs(b) > F.abs(a), 1).otherwise(0)
+    return (F.when(a < 0, -1).otherwise(1) * F.when(b < 0, -1).otherwise(1) * q).cast(D38)
+
+
+def moment_census(df: DataFrame, cols: list[str], by: tuple[str, ...] = ()) -> DataFrame:
+    """(by..., n, s<a>..., s<a><b>...): the count, each column's sum and
+    each product sum (a at or before b in `cols`) of the integer columns
+    `cols`, per `by` group, in DECIMAL(38,0) — the sufficient statistics
+    of least squares and Pearson correlation. Each operand is widened
+    before it multiplies: a BIGINT product-and-sum wraps silently past
+    2^63. A sum no consumer reads costs nothing: Catalyst's column
+    pruning drops its aggregate."""
+    w = {c: F.col(c).cast(D38) for c in cols}
+    return df.groupBy(*by).agg(
+        F.count("*").cast(D38).alias("n"),
+        *[F.sum(w[c]).alias(f"s{c}") for c in cols],
+        *[F.sum(w[a] * w[b]).alias(f"s{a}{b}") for i, a in enumerate(cols) for b in cols[i:]],
+    )
+
+
+def comoment(a: str, b: str) -> Column:
+    """n * S_ab - S_a * S_b over a `moment_census` row: n^2 times the
+    covariance of a and b, an exact integer."""
+    return F.col("n") * F.col(f"s{a}{b}") - F.col(f"s{a}") * F.col(f"s{b}")
+
+
+def pearson_r(a: str = "x", b: str = "y") -> Column:
+    """Pearson's r of a and b over a `moment_census` row, rounded to 6
+    decimals: the three exact comoments cast to DOUBLE once each, so
+    both engines divide and take the root of identical operand bits."""
+    return F.round(
+        comoment(a, b).cast("double")
+        / F.sqrt(comoment(a, a).cast("double") * comoment(b, b).cast("double")),
+        6,
+    )
 
 
 def _type_cents(spark: SparkSession, sf_dir: str, value: str) -> DataFrame:
@@ -1275,20 +1331,7 @@ def q_stats_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
     return s.select(
         "event_type",
         F.col("n").cast("bigint").alias("n_rows"),
-        F.round(
-            (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")).cast(
-                "double"
-            )
-            / F.sqrt(
-                (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")).cast(
-                    "double"
-                )
-                * (F.col("n") * F.col("syy") - F.col("sy") * F.col("sy")).cast(
-                    "double"
-                )
-            ),
-            6,
-        ).alias("rho"),
+        pearson_r().alias("rho"),
     ).orderBy("event_type")
 
 
@@ -6108,26 +6151,12 @@ def q_stats_partial_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
         "y",
         F.row_number().over(Window.orderBy("d")).cast("bigint").alias("z"),
     )
-    sums = seq.agg(
-        F.count("*").cast(D38).alias("n"),
-        F.sum("x").cast(D38).alias("sx"),
-        F.sum("y").cast(D38).alias("sy"),
-        F.sum("z").cast(D38).alias("sz"),
-        F.sum(F.col("x").cast(D38) * F.col("x")).cast(D38).alias("sxx"),
-        F.sum(F.col("y").cast(D38) * F.col("y")).cast(D38).alias("syy"),
-        F.sum(F.col("z").cast(D38) * F.col("z")).cast(D38).alias("szz"),
-        F.sum(F.col("x").cast(D38) * F.col("y")).cast(D38).alias("sxy"),
-        F.sum(F.col("x").cast(D38) * F.col("z")).cast(D38).alias("sxz"),
-        F.sum(F.col("y").cast(D38) * F.col("z")).cast(D38).alias("syz"),
-    )
-    c = sums.select(
+    c = moment_census(seq, ["x", "y", "z"]).select(
         "n",
-        F.expr("n * sxx - sx * sx").cast(D38).alias("cxx"),
-        F.expr("n * syy - sy * sy").cast(D38).alias("cyy"),
-        F.expr("n * szz - sz * sz").cast(D38).alias("czz"),
-        F.expr("n * sxy - sx * sy").cast(D38).alias("cxy"),
-        F.expr("n * sxz - sx * sz").cast(D38).alias("cxz"),
-        F.expr("n * syz - sy * sz").cast(D38).alias("cyz"),
+        *[
+            comoment(a, b).cast(D38).alias(f"c{a}{b}")
+            for a, b in ("xx", "yy", "zz", "xy", "xz", "yz")
+        ],
     )
     p = c.select(
         "n",

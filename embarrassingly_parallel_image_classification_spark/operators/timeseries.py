@@ -433,6 +433,8 @@ def q_timeseries_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     a second-moment statistic. One hash aggregate per group + a
     broadcast-joined per-group epoch offset (without the offset, Σx²
     on raw epochs overflows even 128-bit at corpus scale)."""
+    from .stats import comoment, moment_census
+
     ev = t(spark, sf_dir, "events").select(
         "event_type",
         F.unix_timestamp("ts").alias("sec"),
@@ -444,25 +446,16 @@ def q_timeseries_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("sec") - F.col("sec0")).alias("x"),
         F.col("cents").alias("y"),
     )
-    d38 = "decimal(38,0)"
-    sums = xy.groupBy("event_type").agg(
-        F.count("*").cast(d38).alias("n"),
-        F.sum("x").cast(d38).alias("sx"),
-        F.sum("y").cast(d38).alias("sy"),
-        F.sum(F.col("x") * F.col("y")).cast(d38).alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).cast(d38).alias("sxx"),
-    )
+    sums = moment_census(xy, ["x", "y"], ("event_type",))
     # intercept via the closed form (Σy·Σx² − Σx·Σxy) / (n·(nΣx² − Σx²)):
     # every operand stays an EXACT decimal and each output pays exactly
     # ONE double division — re-deriving intercept from the already-
     # divided slope doubled the float ops and landed a value on a
     # round-6 boundary that the two engines split (first-cut failure).
-    num = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")).cast("double")
-    den = (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")).cast("double")
+    num = comoment("x", "y").cast("double")
+    den = comoment("x", "x").cast("double")
     inum = (F.col("sy") * F.col("sxx") - F.col("sx") * F.col("sxy")).cast("double")
-    iden = (
-        F.col("n") * (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx"))
-    ).cast("double")
+    iden = (F.col("n") * comoment("x", "x")).cast("double")
     return sums.select(
         "event_type",
         F.col("n").cast("bigint").alias("n"),
@@ -1167,6 +1160,8 @@ def q_timeseries_xcorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact aggregate to (hour, type), a co-keyed self-join on the hour
     (both sides from the same tiny bar frame), one global aggregate.
     Never a row-level join of the two raw series."""
+    from .stats import moment_census, pearson_r
+
     bars = (
         t(spark, sf_dir, "events")
         .filter(F.col("event_type").isin("click", "purchase"))
@@ -1187,27 +1182,8 @@ def q_timeseries_xcorr(spark: SparkSession, sf_dir: str) -> DataFrame:
             "hr",
         )
     )
-    d38 = "decimal(38,0)"
-    s = xy.agg(
-        F.count("*").cast(d38).alias("n"),
-        F.sum("x").cast(d38).alias("sx"),
-        F.sum("y").cast(d38).alias("sy"),
-        F.sum(F.col("x") * F.col("y")).cast(d38).alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).cast(d38).alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).cast(d38).alias("syy"),
-    )
-    return s.select(
-        F.col("n").cast("bigint").alias("n_bars"),
-        F.round(
-            (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")).cast("double")
-            / F.sqrt(
-                (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")).cast("double")
-                * (F.col("n") * F.col("syy") - F.col("sy") * F.col("sy")).cast(
-                    "double"
-                )
-            ),
-            6,
-        ).alias("corr"),
+    return moment_census(xy, ["x", "y"]).select(
+        F.col("n").cast("bigint").alias("n_bars"), pearson_r().alias("corr")
     )
 
 
@@ -1513,6 +1489,8 @@ def q_timeseries_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     lag expansion is a map-side 6-way explode OF THE BAR FRAME (never
     the fact table), self-equi-joined on (type, hour+lag) — bar-domain
     keyed, fact rows never join; one aggregate to type x lag rows."""
+    from .stats import moment_census, pearson_r
+
     bars = (
         t(spark, sf_dir, "events")
         .groupBy(
@@ -1546,33 +1524,12 @@ def q_timeseries_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("et2") == F.col("event_type"))
         & (F.col("h2") == F.col("h") + F.col("lag")),
     ).select("event_type", "lag", F.col("cents").alias("x"), "y")
-    d38 = "decimal(38,0)"
-    s = pairs.groupBy("event_type", "lag").agg(
-        F.count("*").cast(d38).alias("n"),
-        F.sum("x").cast(d38).alias("sx"),
-        F.sum("y").cast(d38).alias("sy"),
-        F.sum(F.col("x") * F.col("y")).cast(d38).alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).cast(d38).alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).cast(d38).alias("syy"),
-    )
+    s = moment_census(pairs, ["x", "y"], ("event_type", "lag"))
     return s.select(
         "event_type",
         F.col("lag").cast("bigint").alias("lag"),
         F.col("n").cast("bigint").alias("n_pairs"),
-        F.round(
-            (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")).cast(
-                "double"
-            )
-            / F.sqrt(
-                (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")).cast(
-                    "double"
-                )
-                * (F.col("n") * F.col("syy") - F.col("sy") * F.col("sy")).cast(
-                    "double"
-                )
-            ),
-            6,
-        ).alias("acf"),
+        pearson_r().alias("acf"),
     ).orderBy("event_type", "lag")
 
 

@@ -463,13 +463,6 @@ def _footer_stats(local_path: str, cols) -> tuple[dict, dict]:
     return per_col, per_null
 
 
-def _file_stats(local_path: str, col: str):
-    """(min, max) of ``col`` from footer metadata only (single-column
-    convenience over _footer_stats)."""
-    per_col, _ = _footer_stats(local_path, [col])
-    return tuple(per_col[col]) if col in per_col else None
-
-
 def _assign_identity_staged(
     spark: SparkSession, staging: str, ident: dict
 ) -> tuple[str, dict]:

@@ -266,8 +266,6 @@ def q_scan_provenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB oracle reads the SAME directory with `filename = true`;
     both engines normalize to the basename so URI-scheme differences
     (file:// vs plain path) can't leak into the hash."""
-    import os as _os
-
     # ensure the partitioned sink exists (same helper the A6 query uses)
     from ..registry import _REGISTRY
 

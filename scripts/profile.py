@@ -115,6 +115,41 @@ def _pin_walk(node, flags: list) -> bool:
     return name in PIN_SCANS or any(sides)
 
 
+# A dump names the same plan differently from run to run: expression,
+# lambda-variable, common-subexpression, plan and RDD ids count up
+# through the session, an RDD's call site depends on JVM warm-up
+# (NativeMethodAccessorImpl.java:0 early, <unknown>:0 later), scratch
+# tables carry the process id, and lakehouse data files carry random
+# uuids. `stable` renumbers each id family in first-seen order (links
+# inside one plan survive) and masks the call sites, the pid and the
+# uuids, so two runs of one tree, or two trees, diff cleanly. A uuid is
+# masked, not renumbered: a scan's Location shows the first of its
+# files in name order, so which file shows is itself random.
+IDS = (r"(#)(\d+)", r"(lambda \w+?_)(\d+)", r"(_common_expr_)(\d+)", r"(plan_id=)(\d+)",
+       r"(RDD\[)(\d+)")
+UUID = r"[0-9a-f]{8}-?[0-9a-f]{4}-?[0-9a-f]{4}-?[0-9a-f]{4}-?[0-9a-f]{12}"
+
+
+def stable(text: str) -> str:
+    """`text` with ids renumbered in first-seen order, and RDD call
+    sites, this process's pid and every uuid masked."""
+    text = re.sub(r"(RDD\[\d+\] at \w+ at )\S+:\d+", r"\1<site>", text)
+    text = re.sub(UUID, "<uuid>", re.sub(rf"_{os.getpid()}(?!\d)", "_<pid>", text))
+    for pattern in IDS:
+        seen: dict[str, str] = {}
+        text = re.sub(pattern, lambda m: m[1] + seen.setdefault(m[2], str(len(seen) + 1)), text)
+    return text
+
+
+def table_of(path: str) -> str:
+    """A scanned parquet path's table: a fixture file's stem, else (a
+    data file under a table directory) the directory, pid removed."""
+    stem = os.path.basename(path).split(".")[0]
+    if not re.search(UUID, stem):
+        return stem
+    return re.sub(rf"_{os.getpid()}$", "", os.path.basename(os.path.dirname(path)))
+
+
 def inspect(df) -> dict:
     """Plan properties from one capture of the formatted plan and the
     pre-AQE physical plan (`sparkPlan()`)."""
@@ -129,7 +164,9 @@ def inspect(df) -> dict:
     _pin_walk(qe.sparkPlan(), pins)
     return {
         "plan": plan,
-        "tables": Counter(re.findall(r"Location:[^\n]*?(\w+)\.parquet", plan)),
+        "tables": Counter(
+            table_of(f) for f in re.findall(r"Location:[^\n]*?([\w./-]+)\.parquet", plan)
+        ),
         "exchanges": len(re.findall(r"\bExchange\b", tree)),
         "joins": Counter(re.findall(JOINS, tree)),
         "python": re.findall(PY_NODES, tree),
@@ -183,7 +220,7 @@ def plans(a) -> None:
     for name, p in each(names, lambda n: inspect(qs[n](spark, sf)), errors):
         if a.dump:
             with open(os.path.join(outdir, f"{name}_{a.dump[1]}.txt"), "w") as f:
-                f.write(p["plan"] + "\n")
+                f.write(stable(p["plan"]) + "\n")
         joins = ", ".join(
             f"{k.replace('Join', '')}×{v}" for k, v in sorted(p["joins"].items())
         )

@@ -1067,3 +1067,78 @@ def test_lakehouse_commits_through_one_claim():
             offenders.append(f"{i} {fn}: {line.strip()}")
     assert not offenders, offenders
     assert src.count("os.link(tmp") == 1
+
+
+def _calls_by_function(rel: str, match) -> dict[str, list[int]]:
+    """{innermost enclosing def: [line, ...]} of the calls in package
+    module `rel` for which `match(call)` holds."""
+    import ast
+    import pathlib
+
+    path = (
+        pathlib.Path(__file__).resolve().parents[1]
+        / "embarrassingly_parallel_image_classification_spark"
+        / rel
+    )
+    tree = ast.parse(path.read_text())
+    owner: dict[int, str] = {}
+    for node in ast.walk(tree):  # outer defs first, inner ones overwrite
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            for ln in range(node.lineno, node.end_lineno + 1):
+                owner[ln] = node.name
+    found: dict[str, list[int]] = {}
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute) and match(node):
+            found.setdefault(owner.get(node.lineno, "<module>"), []).append(node.lineno)
+    return found
+
+
+def test_knn_rank_cut_spelled_once():
+    """Source lint: the kNN rank cut's order (sim desc, vec_id asc) is
+    spelled only inside ``knn._top_k``: every tier ranks through it, so
+    the tie-break cannot drift between the exact verifier and a tier."""
+    import ast
+
+    found = _calls_by_function(
+        "ml/knn.py",
+        lambda c: c.func.attr == "orderBy"
+        and [ast.unparse(a) for a in c.args] == ["F.desc('sim')", "F.asc('vec_id')"],
+    )
+    assert list(found) == ["_top_k"] and len(found["_top_k"]) == 1, found
+
+
+def test_moment_census_spelled_once():
+    """Source lint: the trainers, the corpus statistics and the time
+    series read (n, Σx, Σy, Σxy, Σx², Σy²) from ``stats.moment_census``;
+    none of them aliases its own ``sxy`` / ``sxx`` sum."""
+    import ast
+
+    for rel in ("ml/training.py", "ml/corpus.py", "operators/timeseries.py"):
+        found = _calls_by_function(
+            rel,
+            lambda c: c.func.attr == "alias"
+            and any(isinstance(a, ast.Constant) and a.value in ("sxy", "sxx") for a in c.args),
+        )
+        assert not found, (rel, found)
+
+
+def test_training_spark_quotients_avoid_div():
+    """Source lint: no Spark-side ``F.expr`` / ``selectExpr`` string in
+    ml/training.py divides with ``div``, which returns BIGINT and wraps
+    silently past 2^63; quotients go through ``stats.trunc_div``. The
+    DuckDB oracle strings are not Spark calls and are not checked."""
+    import ast
+    import re
+
+    found = _calls_by_function(
+        "ml/training.py",
+        lambda c: c.func.attr in ("expr", "selectExpr")
+        and any(
+            isinstance(n, ast.Constant)
+            and isinstance(n.value, str)
+            and re.search(r"\bdiv\b", n.value, re.IGNORECASE)
+            for a in c.args
+            for n in ast.walk(a)
+        ),
+    )
+    assert not found, found

@@ -714,3 +714,67 @@ def test_fix_e6_equals_duckdb_oracle_spelling(spark, duck, cases):
     )
     bad = [(cases[i], got[i], want[i]) for i in want if got[i] != want[i]]
     assert not bad, bad[:5]
+
+
+@st.composite
+def _trunc_case(draw):
+    """(a, b) with |a| <= 10^30 and 0 < |b| < 2^63, both signs: free
+    draws, |a| < |b| (a zero quotient), exact multiples of b, and
+    remainders one to three below |b| (where a rounded quotient
+    overshoots)."""
+    b = draw(st.integers(1, 2**63 - 1)) * draw(st.sampled_from((1, -1)))
+    kind = draw(st.sampled_from(("free", "below", "multiple", "near_next")))
+    if kind == "free":
+        return draw(st.integers(-(10**30), 10**30)), b
+    if kind == "below":
+        return draw(st.integers(1 - abs(b), abs(b) - 1)), b
+    q = draw(st.integers(0, 10**30 // abs(b) - 1))
+    r = 0 if kind == "multiple" else max(abs(b) - draw(st.integers(1, 3)), 0)
+    return draw(st.sampled_from((1, -1))) * (q * abs(b) + r), b
+
+
+@settings(
+    max_examples=10,
+    deadline=None,
+    derandomize=True,
+    suppress_health_check=[HealthCheck.too_slow],
+)
+@given(st.lists(_trunc_case(), min_size=40, max_size=40))
+def test_trunc_div_equals_duckdb_sign_split_floor(spark, duck, cases):
+    """stats.trunc_div (every truncated quotient the trainers take)
+    equals the oracles' sign-split spelling sign(a) * sign(b) *
+    (|a| // |b|) on HUGEINT operands over its stated domain —
+    quotients past 2^63 included, where Spark's BIGINT `div` wraps."""
+    from embarrassingly_parallel_image_classification_spark.operators.stats import (
+        D38,
+        trunc_div,
+    )
+
+    cases = [
+        (10**30, 1), (10**30, -1), (-(10**30), 1), (0, -7), (-5, 2**63 - 1),
+        (10**37 + 3, -(10**10)),  # a dividend past 10^32, a quotient inside
+    ] + cases
+    rows = [(i, str(a), str(b)) for i, (a, b) in enumerate(cases)]
+    got = dict(
+        spark.createDataFrame(rows, "i int, a string, b string")
+        .select(
+            "i",
+            trunc_div(F.col("a").cast(D38), F.col("b").cast(D38)).cast("string").alias("q"),
+        )
+        .collect()
+    )
+    values = ", ".join(
+        f"({i}, CAST('{a}' AS HUGEINT), CAST('{b}' AS HUGEINT))" for i, a, b in rows
+    )
+    want = dict(
+        duck.execute(
+            f"""
+            SELECT i, CAST((CASE WHEN a < 0 THEN -1 ELSE 1 END)
+                           * (CASE WHEN b < 0 THEN -1 ELSE 1 END)
+                           * (ABS(a) // ABS(b)) AS VARCHAR)
+            FROM (VALUES {values}) v(i, a, b)
+            """
+        ).fetchall()
+    )
+    bad = [(cases[i], got[i], want[i]) for i in want if got[i] != want[i]]
+    assert not bad, bad[:5]

@@ -81,3 +81,23 @@ def test_scripts_import_pyspark_beside_profile_py():
         assert run("gen_queries_md.py") == f.read()
     bench = os.path.join(ROOT, "BENCH_full.json")
     assert '"geomean_now_over_prev": 1.0' in run("profile.py", "compare", bench, bench)
+
+
+def test_plans_summary_and_dump_match_across_processes(tmp_path):
+    """Two runs of `plans --dump` over a lakehouse query print the same
+    summary row and write the same dump: a scan is named by its table,
+    not its first data file's uuid, and the dump masks session ids,
+    uuids and the scratch directory's pid."""
+
+    def run(suffix):
+        return subprocess.run(
+            [sys.executable, os.path.join(ROOT, "scripts", "profile.py"), "plans",
+             "q_lake_clone", "--dump", str(tmp_path), suffix],
+            capture_output=True, text=True, check=True, cwd=ROOT,
+            env={**os.environ, "SPARK_GRAFT_SF_DIR": SF_SMOKE},
+        ).stdout
+
+    rows = [run(suffix) for suffix in ("a", "b")]
+    assert "lake_clone_src" in rows[0] and rows[0] == rows[1]
+    a, b = ((tmp_path / f"q_lake_clone_{s}.txt").read_text() for s in "ab")
+    assert "Location" in a and a == b
