@@ -2,16 +2,21 @@
 
 ``spark.createDataFrame(rows, schema)`` on a Python list builds a
 PYTHON-RDD-backed frame: the rows are pickled, parallelized over
-``defaultParallelism`` slices (32 here — 29 of them EMPTY for a 3-row
-list), and every slice pays a JVM→Python-worker round trip whenever the
-frame materializes (broadcast build, collect, noop sink). Measured on
-this box (round 12): a 3-row frame costs **0.32–0.45 s per
-materialization** on the default path, 0.19 s pinned to one slice, and
-**0.05 s as a pure-JVM literal relation** — and driver-built state
-frames sit on the critical path of every selection round, trainer
-iteration and broadcast build, so the engine pays this repeatedly per
-query. On a real cluster the same per-slice task + Python-worker cost
-exists; a literal relation is the right spelling at every scale.
+``defaultParallelism`` slices (one per core — 29 of 32 EMPTY for a
+3-row list on local[32]), and every slice pays a JVM→Python-worker
+round trip whenever the frame materializes (broadcast build, collect,
+noop sink). Measured at local[32] (round 12, before the worker daemon
+of ``pyworker.py`` stopped each task from re-reading ``pyspark.zip``):
+a 3-row frame cost 0.32–0.45 s per materialization on the default
+path, 0.19 s pinned to one slice, and 0.05 s as a pure-JVM literal
+relation. Re-measured at local[4] with the daemon (collect, 10 warm
+runs each, two processes): **0.13–0.21 s** on the default path,
+0.11–0.19 s on one slice, **0.06–0.10 s as a literal** — and
+driver-built state frames sit on the critical path of every selection
+round, trainer iteration and broadcast build, so the engine pays this
+repeatedly per query. On a real cluster the same per-slice task +
+Python-worker cost exists; a literal relation is the right spelling at
+every scale.
 
 ``local_df`` builds the same frame as ``inline(array(struct(...)))``
 over JVM literals: no Python worker, no pickling, and Catalyst folds it

@@ -1003,7 +1003,9 @@ def snapshot_read(
             )
             groups.setdefault(key, []).append(name)
         parts = []
-        for key, names in groups.items():
+        # sorted, not insertion order: that follows the random data-file
+        # names, and the union's branch order would change run to run
+        for key, names in sorted(groups.items()):
             g = spark.read.option("mergeSchema", "true").parquet(
                 *[os.path.join(path, n) for n in names]
             )
@@ -1789,7 +1791,7 @@ def snapshot_read_mor(
     for name, idxs in covering.items():
         groups.setdefault(idxs, []).append(name)
     out = None
-    for idxs, names in groups.items():
+    for idxs, names in sorted(groups.items()):  # see snapshot_read's defaults
         df = spark.read.parquet(*[os.path.join(path, n) for n in names])
         for i in idxs:
             del_file, key, _scope = deletes[i]

@@ -11,6 +11,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from . import pyworker
+
 # At 100 TB these would be set per-cluster; locally they keep partition
 # sizes sane at sf0.1 and below.
 ENGINE_CONFS: dict[str, str] = {
@@ -45,6 +47,11 @@ def get_spark(app_name: str = "epic-spark", extra_conf: dict | None = None) -> S
     confs = dict(ENGINE_CONFS)
     confs.setdefault("spark.sql.shuffle.partitions", cpus)
     confs.setdefault("spark.driver.memory", "16g")
+    # Python workers fork from the engine's daemon, which re-reads a zip
+    # directory only when the archive changed (see pyworker.py). A launch-
+    # only conf, so it stays out of ENGINE_CONFS: apply_engine_confs runs
+    # before every query and a static conf would fail there each time.
+    confs.setdefault("spark.python.daemon.module", pyworker.__name__)
     if extra_conf:
         confs.update(extra_conf)
     for k, v in confs.items():

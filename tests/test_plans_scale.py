@@ -2745,3 +2745,48 @@ def test_lakehouse_merge_keeps_identity_and_refuses_inserts(spark, tmp_path):
             spark, path, upsert.select("k", F.col("v").alias("rid")), "k", ["rid"]
         )
     assert lakehouse.current_version(path) == v
+
+
+@pytest.mark.parametrize("read", ["defaults", "mor"])
+def test_lakehouse_grouped_reads_union_in_one_order(spark, tmp_path, monkeypatch, read):
+    """snapshot_read (defaults) and snapshot_read_mor group the data files
+    by what applies to them and union the groups. The branch order must
+    not follow the random uuid file names: force the pre-change file to
+    sort first, then last, and expect the same rows in the same order."""
+    import itertools
+    import types
+
+    from embarrassingly_parallel_image_classification_spark.plans import lakehouse
+
+    def rows(tag, first_prefix, second_prefix):
+        prefix, count = [first_prefix], itertools.count()
+        monkeypatch.setattr(
+            lakehouse,
+            "uuid",
+            types.SimpleNamespace(
+                uuid4=lambda: types.SimpleNamespace(hex=f"{prefix[0]}{next(count):031x}")
+            ),
+        )
+        path = str(tmp_path / tag)
+        lakehouse.snapshot_write(
+            spark.range(4).select(F.col("id").alias("k")).coalesce(1), path, "append"
+        )
+        if read == "defaults":
+            lakehouse.add_column_default(path, "c", "string", "old")
+            later = spark.range(4, 8).select(F.col("id").alias("k"), F.lit("new").alias("c"))
+        else:
+            lakehouse.delete_where(
+                spark, path, "k", spark.range(1).select(F.col("id").alias("k"))
+            )
+            later = spark.range(4, 8).select(F.col("id").alias("k"))
+        prefix[0] = second_prefix
+        lakehouse.snapshot_write(later.coalesce(1), path, "append")
+        m = lakehouse._manifest(path, lakehouse.current_version(path))
+        assert len(m["files"]) == 2
+        reader = lakehouse.snapshot_read if read == "defaults" else lakehouse.snapshot_read_mor
+        return [r["k"] for r in reader(spark, path).collect()]
+
+    older_first = rows("a", "0", "f")
+    older_last = rows("b", "f", "0")
+    assert sorted(older_first) == sorted(older_last)
+    assert older_first == older_last
