@@ -20,11 +20,11 @@ Scale notes (100 TB): fitting is a distributed aggregation (posexplode →
 per-(label, dim) partial avg — two-phase HashAggregate, no collect of raw
 data; only the 10×64 parameter matrix comes to the driver). Scoring is
 zero-shuffle, embarrassingly parallel — identical to the reference's
-structure but Arrow-vectorized. The ordered lines (q_infer_batch,
-q_infer_batch_pbu) are the one exception: they sort the raw rows
-*before* the model, so the range exchange shuffles inputs once. Sorting
-the scored frame instead would run the model twice — once in the range
-partitioner's sample job and again in the shuffle.
+structure but Arrow-vectorized. The model runs on each partition where
+the scan lands it and nothing sorts its output: an output order is owed
+only where a LIMIT or top-k cuts on it (registry.py), so q_infer_batch,
+q_infer_batch_pbu, q_infer_eval and q_infer_ensemble have no Exchange
+between the scan and the model.
 """
 
 from __future__ import annotations
@@ -138,27 +138,25 @@ def make_predict_udf(cents: np.ndarray, labels: np.ndarray):
     return predict
 
 
-def score_embeddings(spark: SparkSession, sf_dir: str, *order_by: str) -> DataFrame:
+def score_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """embeddings → (vec_id, label, pred): the distributed scoring job.
 
-    With ``order_by`` the raw rows are sorted *before* the model runs, so
-    the range partitioner's sample job scans parquet and every row is
-    scored exactly once (sorting the scored frame would score it twice)."""
+    Each partition is scored as it is scanned, in no particular order:
+    no shuffle, and every row crosses into Python exactly once."""
     emb = t(spark, sf_dir, "embeddings")
     cents, labels = fit_centroids(emb)
     predict = make_predict_udf(cents, labels)
-    rows = emb.orderBy(*order_by) if order_by else emb
-    return rows.select("vec_id", "label", predict("embedding").alias("pred"))
+    return emb.select("vec_id", "label", predict("embedding").alias("pred"))
 
 
 def score_embeddings_pbu(
-    spark: SparkSession, sf_dir: str, *order_by: str, batch_size: int = 1024
+    spark: SparkSession, sf_dir: str, *, batch_size: int = 1024
 ) -> DataFrame:
     """Same scoring job via ``pyspark.ml.functions.predict_batch_udf`` —
     Spark's first-class batch-inference API (lazy per-worker model init,
     tensor batching). Kept alongside the Iterator-UDF path to prove the
-    two J1 formulations agree (tests/test_smoke.py). ``order_by`` sorts
-    before the model, as in ``score_embeddings``."""
+    two J1 formulations agree (tests/test_smoke.py); like
+    ``score_embeddings`` it scores partitions as scanned, unordered."""
     from pyspark.ml.functions import predict_batch_udf
 
     emb = t(spark, sf_dir, "embeddings")
@@ -180,8 +178,7 @@ def score_embeddings_pbu(
         batch_size=batch_size,
         input_tensor_shapes=[[EMB_DIM]],
     )
-    rows = emb.orderBy(*order_by) if order_by else emb
-    return rows.select("vec_id", "label", predict("embedding").alias("pred"))
+    return emb.select("vec_id", "label", predict("embedding").alias("pred"))
 
 
 # The whole model is SQL-expressible (fit = per-(label, dim) AVG;
@@ -221,15 +218,15 @@ def q_infer_batch_pbu(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch inference through predict_batch_udf (the MMLSpark
     CNTKModel-transformer analog [PK]); same oracle as q_infer_batch —
     the two J1 formulations must agree with each other AND with SQL."""
-    return score_embeddings_pbu(spark, sf_dir, "vec_id")
+    return score_embeddings_pbu(spark, sf_dir)
 
 
 @register("q_infer_batch", oracle=_INFER_ORACLE, tags=("J1",))
 def q_infer_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch inference: one row per embedding with its predicted class
-    (see _INFER_ORACLE — the flagship is exactly oracle-checked). The
-    rows are sorted before the model, so each is scored exactly once."""
-    return score_embeddings(spark, sf_dir, "vec_id")
+    (see _INFER_ORACLE — the flagship is exactly oracle-checked). Each
+    partition is scored where the scan lands it: no shuffle, no sort."""
+    return score_embeddings(spark, sf_dir)
 
 
 @register(
@@ -586,55 +583,43 @@ def q_infer_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     voted with the deterministic tiebreak (most votes, then lowest
     class id). Because the mean commutes with coordinate projection,
     each subspace model's centroids are SLICES of the one distributed
-    centroid fit — no extra fit jobs; all three models score inside
-    ONE Iterator Arrow UDF pass (one Arrow crossing for the whole
-    ensemble, the shape a 3-model DNN ensemble would use). The vote is
-    relational (explode → count → ranked pick), so the entire ensemble
-    is exactly oracle-checked end to end."""
+    centroid fit — no extra fit jobs; all three models score and vote
+    inside ONE Iterator Arrow UDF pass (one Arrow crossing for the whole
+    ensemble, the shape a 3-model DNN ensemble would use). A row's three
+    votes are already in that row, so the vote needs no shuffle; the
+    oracle votes relationally (union → count → ranked pick), so the
+    whole ensemble is exactly oracle-checked end to end."""
     from pyspark.sql.functions import arrow_udf
-    from pyspark.sql.types import ArrayType
 
     emb = t(spark, sf_dir, "embeddings")
     cents, labels = fit_centroids(emb)
 
-    @arrow_udf(ArrayType(IntegerType()))
+    @arrow_udf("struct<pred_vote:int,n_votes:bigint>")
     def predict3(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
         C = np.ascontiguousarray(cents)
         L = labels
         for batch in batches:
             X = embedding_matrix(batch)
-            preds = [
-                nearest_centroid_predict(
-                    X[:, lo:hi], np.ascontiguousarray(C[:, lo:hi]), L
-                )
-                for lo, hi in _SUBSPACES
-            ]
-            # (n, 3) row-major → one list<int> per row, 3 values each
-            votes = np.stack(preds, axis=1).astype(np.int32).ravel()
-            offsets = np.arange(0, len(votes) + 1, len(_SUBSPACES), dtype=np.int32)
-            yield pa.ListArray.from_arrays(offsets, votes)
+            P = np.stack(
+                [
+                    nearest_centroid_predict(X[:, lo:hi], np.ascontiguousarray(C[:, lo:hi]), L)
+                    for lo, hi in _SUBSPACES
+                ],
+                axis=1,
+            )  # (n, 3): one vote per subspace model
+            votes = (P[:, :, None] == P[:, None, :]).sum(axis=2)  # votes for each pick
+            best = np.lexsort((P, -votes), axis=1)[:, 0]  # most votes, then lowest id
+            rows = np.arange(len(P))
+            yield pa.StructArray.from_arrays(
+                [
+                    pa.array(P[rows, best].astype(np.int32)),
+                    pa.array(votes[rows, best].astype(np.int64)),
+                ],
+                names=["pred_vote", "n_votes"],
+            )
 
-    scored = emb.select(
-        "vec_id", "label", predict3("embedding").alias("preds")
-    )
-    votes = scored.select(
-        "vec_id", "label", F.explode("preds").alias("pred")
-    )
-    tally = votes.groupBy("vec_id", "pred").agg(
-        F.any_value("label").alias("label"), F.count("*").alias("n_votes")
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("vec_id").orderBy(F.desc("n_votes"), F.asc("pred"))
-    return (
-        tally.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "vec_id",
-            "label",
-            F.col("pred").cast("int").alias("pred_vote"),
-            F.col("n_votes").cast("bigint").alias("n_votes"),
-        )
+    return emb.select("vec_id", "label", predict3("embedding").alias("v")).select(
+        "vec_id", "label", "v.pred_vote", "v.n_votes"
     )
 
 

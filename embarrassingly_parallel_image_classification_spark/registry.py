@@ -14,7 +14,11 @@ Design rules enforced by convention here (SURVEY.md §7 risks):
     query and the oracle SQL;
   * floating aggregate outputs are rounded to 6 decimals on both sides;
   * timestamps are cast to DATE / date_trunc'ed before being exposed;
-  * collect_list-style outputs are sorted (sort_array / list_sort).
+  * collect_list-style outputs are sorted (sort_array / list_sort);
+  * an output order is owed only where a LIMIT or top-k cuts on it:
+    every check (the driver's value hash, tests' ``assert_matches_oracle``,
+    perfbench's gate) compares rows order-insensitively, so a sort that
+    no cut reads is a range-sample job and a shuffle that buy nothing.
 """
 
 from __future__ import annotations
@@ -59,11 +63,26 @@ def register(name: str, oracle: Optional[str] = None, tags: tuple = ()):
 
 def specs() -> dict[str, QuerySpec]:
     """Registered queries, oracle-backed first and rows-only (no-oracle)
-    last, each group in registration order: a rows-only check never
-    takes a slot ahead of an oracle-backed one in a driver that verifies
-    a prefix."""
+    last, so a rows-only check never takes a slot ahead of an
+    oracle-backed one in a driver that verifies a prefix. Within each
+    group the order is source order: the defining module's place in
+    ``_QUERY_MODULES``, then the line the function is defined on, then
+    registration order. It never depends on which query module happens
+    to import another first."""
     _ensure_loaded()
-    return dict(sorted(_REGISTRY.items(), key=lambda kv: kv[1].oracle is None))
+    module_rank = {f"{__package__}.{m}": i for i, m in enumerate(_QUERY_MODULES)}
+
+    def source_order(entry: tuple[int, QuerySpec]) -> tuple:
+        i, spec = entry
+        return (
+            spec.oracle is None,
+            module_rank[spec.fn.__module__],
+            spec.fn.__code__.co_firstlineno,
+            i,
+        )
+
+    ordered = sorted(enumerate(_REGISTRY.values()), key=source_order)
+    return {spec.name: spec for _, spec in ordered}
 
 
 def queries() -> dict[str, QueryFn]:

@@ -7,6 +7,8 @@ though its values still match the oracle.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
 from embarrassingly_parallel_image_classification_spark import registry
@@ -109,21 +111,29 @@ def test_inference_is_arrow_vectorized(spark):
     assert "BatchEvalPython" not in plan
 
 
-def test_ordered_inference_scores_above_the_range_exchange(spark):
-    """The ordered J1 lines sort the raw rows, then score: the Python
-    eval node must sit ABOVE `Exchange rangepartitioning`. Below it, the
-    range partitioner's sample job would run the model over every row
-    and the shuffle would run it a second time."""
+def test_j1_lines_score_with_no_shuffle(spark):
+    """The J1 lines score each partition where the scan lands it (no
+    output order is owed, registry.py): the batch lines and the ensemble
+    (which votes inside its UDF) have exactly one Python eval node and
+    no Exchange or Sort anywhere, and q_infer_eval has no Exchange below
+    its Python node, only its aggregate's above."""
     jvm = spark.sparkContext._jvm
-    for name in ("q_infer_batch", "q_infer_batch_pbu"):
+
+    def simple_plan(name):
         df = registry.queries()[name](spark, SF_T2)
-        plan = jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "simple")
-        lines = plan.splitlines()
-        python = [i for i, line in enumerate(lines) if "ArrowEvalPython" in line]
-        exchange = [i for i, line in enumerate(lines) if "Exchange rangepartitioning" in line]
-        assert len(python) == 1 and len(exchange) == 1, plan
-        # the plan is one chain, so an earlier line is an ancestor
-        assert python[0] < exchange[0], f"{name} scores below the range exchange:\n{plan}"
+        return jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "simple")
+
+    for name in ("q_infer_batch", "q_infer_batch_pbu", "q_infer_ensemble"):
+        plan = simple_plan(name)
+        assert plan.count("ArrowEvalPython") == 1, plan
+        assert "Exchange" not in plan, f"{name} shuffles:\n{plan}"
+        assert not re.search(r"\bSort\b", plan), f"{name} sorts:\n{plan}"
+    lines = simple_plan("q_infer_eval").splitlines()
+    python = [i for i, line in enumerate(lines) if "ArrowEvalPython" in line]
+    exchange = [i for i, line in enumerate(lines) if "Exchange" in line]
+    assert len(python) == 1, lines
+    # the plan is one chain, so a later line is a descendant
+    assert all(e < python[0] for e in exchange), "\n".join(lines)
 
 
 def test_broadcast_dims_stay_broadcast_in_star_join(spark):

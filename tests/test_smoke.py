@@ -92,6 +92,33 @@ def test_registry_orders_oracle_before_rows_only():
     assert first_rows_only > last_oracle
 
 
+def test_registry_order_does_not_follow_import_order():
+    """specs() orders by source position, not by import side effects: a
+    process that imports operators.stats before operators.timeseries (as
+    a top-level import of one query module by another would) sees the
+    same order as this one."""
+    import os
+    import subprocess
+    import sys
+
+    from embarrassingly_parallel_image_classification_spark import registry
+
+    code = (
+        "import sys\n"
+        "from importlib import import_module\n"
+        "pkg = 'embarrassingly_parallel_image_classification_spark'\n"
+        "for m in sys.argv[1:]:\n"
+        "    import_module(f'{pkg}.{m}')\n"
+        "print('\\n'.join(import_module(f'{pkg}.registry').specs()))\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", code, "operators.stats", "operators.timeseries"],
+        capture_output=True, text=True, check=True, cwd=root,
+    ).stdout
+    assert out.splitlines() == list(registry.specs())
+
+
 def test_observation_metrics_match_independent_agg(spark):
     """q_observe_metrics' observed counters (collected during the main
     query's execution, no extra pass) must equal a separately-computed
