@@ -40,24 +40,70 @@ commits them):
     claims ``_manifest_v<N>.json``, and only THEN appends the
     ``_summary_of`` line to the metalog. A crash between the two
     leaves a manifest without a line, which the next reader heals.
-  * lost race — data writers (snapshot_write, delete_where) rebuild
-    from the new latest manifest and retry, unless the caller pinned
-    a version (``expected_version``) or a table property their frame
-    was validated under moved. Metadata-only DDL shares one loop,
-    ``_alter``: rename_column and add_column_default check only the
-    manifest, so they rebase onto the new latest; set_generated_column,
-    add_check_constraint, set_identity_column and add_bloom_index read
-    the standing DATA at version v, so they pass v and raise
-    ConcurrentWriteError once the table has moved past it. The same
-    holds for the OVERWRITE rewrites built from a read of the table
-    (merge_into, merge_into_latest, compact_mor, optimize_zorder,
-    restore_table): each reads at the version v it observed and
-    publishes with ``expected_version=v``, so an append that lands in
-    between raises instead of vanishing from the new snapshot.
+  * commit — ``_commit`` is the one loop that publishes a next
+    version: each pass re-reads the latest version v, refuses when the
+    caller validated at a version the table has moved past, and
+    publishes ``{**_carry(m), "mode": mode, **change(m)}`` at v + 1,
+    where m is the base manifest (the latest, or a pinned base) and
+    ``change`` re-runs on every pass and may raise. Writers stage
+    first (data files, delete files, validation reads) and then call
+    it. snapshot_clone and merge_branch_ff publish fixed versions
+    through ``_publish`` and build from ``_carry`` too.
   * rewrite — two files are replaced on purpose, never claimed:
-    erase_rows republishes history (``_put_json(replace=True)``), and
-    the metalog compaction rewrites its sidecar under the maintenance
-    lock.
+    erase_rows republishes history (``_put_json(replace=True)``,
+    remapping every file-keyed entry: files, stats, default and delete
+    scopes, blooms), and the metalog compaction rewrites its sidecar
+    under the maintenance lock.
+
+Carry rule (``_carry`` is the one place that knows the manifest keys;
+a writer's ``change`` returns only what its kind sets):
+
+    key                     append  overwrite delete  DDL   clone  merge
+    files, stats,           merge   replace   carry   carry carry  carry
+      col_stats, null_stats
+    delete_files            carry   reset     add     carry carry  carry
+    renames, defaults       carry   reset     carry   set   carry  carry
+    generated, identity,    carry   carry     carry   set   carry  carry
+      checks
+    batch_ids               +id     +id       carry   carry reset  +main
+    schema                  new     new       carry   set   carry  carry
+    blooms, bloom_col       drop    drop      drop    set   carry  carry
+    version, committed_at,  never carried: stamped per commit; cloned_from
+      mode, cloned_from,    appears only on a clone's own version,
+      merged_from           merged_from only on a merged version
+
+"set": the DDL that owns the key rewrites it (rename_column: renames
+and schema; add_column_default: defaults and schema; add_bloom_index:
+the bloom keys; and so on) and every other DDL carries it; appends
+also move the identity high-water mark. "+id" adds the write's
+``batch_id``. The merge column is a branch version replayed onto main
+by merge_branch_ff: it carries the branch's keys, and "+main" keeps
+main's ids at the fork point beside the branch's. A data commit drops
+the bloom index because snapshot_read_point applies neither new files
+nor delete files, so a carried index would miss appended rows or
+return deleted ones.
+
+Rebase or refuse when another commit lands first:
+
+    write kind                              on a racing commit
+    append, overwrite, delete_where,        rebase onto the new latest
+      rename_column, add_column_default
+    snapshot_write(expected_version=v) and  refuse: ConcurrentWriteError
+      the rewrites built on a read at v       "table moved ..."
+      (merge_into, merge_into_latest,
+      compact_mor, optimize_zorder,
+      restore_table); the DDL that read
+      the data at v (set_generated_column,
+      add_check_constraint,
+      set_identity_column, add_bloom_index)
+    snapshot_write whose planned            refuse: ConcurrentWriteError
+      generated / identity (defs and          "<property> changed during
+      high-water) / checks, or on append      <mode>; retry"
+      renames / defaults, moved
+    a commit that would break the           delete_where: ConcurrentWriteError
+      one-at-a-time rule                      (ValueError before staging);
+      (``_one_at_a_time``)                    rename_column and
+                                              add_column_default: ValueError
 """
 
 from __future__ import annotations
@@ -401,21 +447,64 @@ def _publish(path: str, version: int, m: dict) -> bool:
     return True
 
 
-def _alter(path: str, mode: str, change, validated_at: int | None = None) -> int:
-    """The metadata-only DDL commit: publish ``{**m, "mode": mode,
-    **change(m)}`` over the latest manifest ``m``; returns the new
-    version. ``change`` re-runs on every rebase and may raise.
-    ``validated_at``: the version whose data the caller checked; the
-    commit raises ConcurrentWriteError once the table moves past it."""
+# Stamped or chosen by each commit itself, never inherited.
+_PER_COMMIT_KEYS = ("version", "committed_at", "mode", "cloned_from", "merged_from")
+# Index one version's data files; a data commit drops them.
+_FILE_INDEX_KEYS = ("blooms", "bloom_col")
+_DATA_MODES = ("append", "overwrite", "delete")
+
+
+def _carry(m: dict, mode: str | None = None) -> dict:
+    """What a commit of kind ``mode`` inherits from its base manifest
+    ``m`` (the carry rule in the module docstring): every key but the
+    per-commit ones, and for a data commit not the bloom index."""
+    drop = _PER_COMMIT_KEYS + (_FILE_INDEX_KEYS if mode in _DATA_MODES else ())
+    return {k: val for k, val in m.items() if k not in drop}
+
+
+def _commit(
+    path: str, mode: str, change, validated_at: int | None = None, base: int | None = None
+) -> int:
+    """The one loop that publishes a next version: ``{**_carry(m),
+    "mode": mode, **change(m)}`` at latest + 1, where ``m`` is the
+    manifest of version ``base`` (0 = empty table) or else of the
+    latest; returns the new version. ``change`` re-runs on every
+    rebase and may raise. ``validated_at``: the version the caller's
+    staging checked; the commit raises ConcurrentWriteError once the
+    table moves past it."""
     while True:
         v = current_version(path)
         if validated_at is not None and v != validated_at:
             raise ConcurrentWriteError(
                 f"table moved from v{validated_at} to v{v} during {mode}; retry"
             )
-        m = _manifest(path, v)
-        if _publish(path, v + 1, {**m, "mode": mode, **change(m)}):
+        b = v if base is None else base
+        m = _manifest(path, b) if b > 0 else {}
+        if _publish(path, v + 1, {**_carry(m, mode), "mode": mode, **change(m)}):
             return v + 1
+
+
+def _one_at_a_time(m: dict, adds: str, raced: bool = False) -> None:
+    """Renames, defaults and delete files: one at a time. A column
+    mapping, initial-default columns and pending MoR delete files each
+    change how a data file's physical columns read back, and no reader
+    composes two of them (the MoR reader knows neither mapping nor
+    defaults, and defaults are keyed by logical name). Refuses a
+    commit that adds manifest key ``adds`` to ``m`` while ``m`` holds
+    another of the three: ValueError, or ConcurrentWriteError when
+    ``raced`` (the other landed after the caller's own check)."""
+    rewrite = "rewrite via overwrite first"
+    rule = {  # key: (the commit adding it, the table holding it, the remedy)
+        "renames": ("rename", "column mapping (a renamed table)", rewrite),
+        "defaults": ("add column default", "initial-default columns", rewrite),
+        "delete_files": ("MoR delete", "pending MoR delete files", "compact_mor first"),
+    }
+    op = rule[adds][0]
+    for key, (_op, held, fix) in rule.items():
+        if key != adds and m.get(key):
+            if raced:
+                raise ConcurrentWriteError(f"{held} appeared during {op}; {fix}, retry")
+            raise ValueError(f"{op} on a table with {held} is unsupported; {fix}")
 
 
 def _footer_stats(local_path: str, cols) -> tuple[dict, dict]:
@@ -590,12 +679,23 @@ def set_identity_column(
     else:
         high = start - step
     spec = {"start": start, "step": step, "high": high}
-    return _alter(
+    return _commit(
         path,
         "set_identity",
         lambda m: {"identity": {**m.get("identity", {}), name: spec}},
         validated_at=v0,
     )
+
+
+# Table properties a staged write is planned and validated under, by the
+# name its refusal gives them; renames and defaults bind appends only
+# (an overwrite replaces both).
+_PLANNED = (
+    ("generated", "generated columns"),
+    ("identity", "identity high-water mark"),
+    ("checks", "CHECK constraints"),
+)
+_PLANNED_APPEND = (("renames", "column mapping"), ("defaults", "defaulted columns"))
 
 
 def snapshot_write(
@@ -653,10 +753,12 @@ def snapshot_write(
     and must OMIT identity columns (GENERATED ALWAYS AS IDENTITY):
     snapshot_write assigns them from the manifest's high-water mark —
     see set_identity_column for the protocol."""
-    assert mode in ("append", "overwrite")
-    assert extra_defaults is None or mode == "overwrite", (
-        "extra_defaults is an overwrite-commit (schema evolution) concept"
-    )
+    if mode not in ("append", "overwrite"):
+        raise ValueError(f"mode must be 'append' or 'overwrite', got {mode!r}")
+    if extra_defaults is not None and mode != "overwrite":
+        raise ValueError(
+            "extra_defaults is an overwrite-commit (schema evolution) concept"
+        )
     os.makedirs(path, exist_ok=True)
     if expected_version is not None and current_version(path) != expected_version:
         raise ConcurrentWriteError(
@@ -682,26 +784,21 @@ def snapshot_write(
     # BEFORE the logical-schema capture so the computed column is part
     # of the committed schema.
     _plan_base = base_version if base_version is not None else current_version(path)
-    _m0 = None
-    if _plan_base > 0:
-        # ONE planning read serves the generated / rename / default
-        # handling below — a second current_version call here would
-        # shift the commit loop's race-detection window (pinned by the
-        # racing-DDL pytests).
-        _m0 = _manifest(path, _plan_base)
-    gen0: dict = {}
-    if _m0 is not None:
-        gen0 = _m0.get("generated", {})
-        for _col, _expr in sorted(gen0.items()):
-            if _col not in df.columns:
-                df = df.withColumn(_col, F.expr(_expr))
-            elif df.filter(
-                ~F.col(_col).eqNullSafe(F.expr(_expr))
-            ).limit(1).count():
-                raise ValueError(
-                    f"generated column {_col} violates its expression "
-                    f"{_expr!r}; drop the column to have it computed"
-                )
+    # ONE planning read serves the generated / rename / default
+    # handling below — a second current_version call here would shift
+    # the commit loop's race-detection window (pinned by the racing-DDL
+    # pytests). The commit refuses when a _PLANNED property moved.
+    _m0 = _manifest(path, _plan_base) if _plan_base > 0 else {}
+    for _col, _expr in sorted(_m0.get("generated", {}).items()):
+        if _col not in df.columns:
+            df = df.withColumn(_col, F.expr(_expr))
+        elif df.filter(
+            ~F.col(_col).eqNullSafe(F.expr(_expr))
+        ).limit(1).count():
+            raise ValueError(
+                f"generated column {_col} violates its expression "
+                f"{_expr!r}; drop the column to have it computed"
+            )
     # CHECK constraints (Delta ALTER TABLE ADD CONSTRAINT ... CHECK):
     # table-level manifest predicates every write must satisfy. SQL
     # semantics: a row violates only when the expression is FALSE —
@@ -709,10 +806,7 @@ def snapshot_write(
     # NOT coalesce(expr, true) spelling. Early-exit probe (limit 1)
     # over the INCOMING batch only; the standing table was validated
     # when the constraint was declared and is immutable since.
-    checks0: dict = {}
-    if _m0 is not None:
-        checks0 = _m0.get("checks", {})
-    for _cname, _cexpr in sorted(checks0.items()):
+    for _cname, _cexpr in sorted(_m0.get("checks", {}).items()):
         if df.filter(
             ~F.coalesce(F.expr(_cexpr), F.lit(True))
         ).limit(1).count():
@@ -725,9 +819,7 @@ def snapshot_write(
     # the immutable staged files, so per-file footer row counts give
     # each file a disjoint contiguous range with no second scan of the
     # incoming data and no nondeterministic double evaluation of df).
-    ident0: dict = {}
-    if _m0 is not None:
-        ident0 = _m0.get("identity", {})
+    ident0 = _m0.get("identity", {})
     if ident0 and not preserve_identity:
         _supplied = [c for c in sorted(ident0) if c in df.columns]
         if _supplied:
@@ -745,11 +837,8 @@ def snapshot_write(
                     {"name": _c, "type": "long", "nullable": False,
                      "metadata": {}}
                 )
-    renames: dict = {}
-    defaults0: dict = {}
-    if mode == "append" and _m0 is not None:
-        renames = _m0.get("renames", {})
-        _to_phys = {l: p for p, l in renames.items()}
+    if mode == "append":
+        _to_phys = {l: p for p, l in _m0.get("renames", {}).items()}
         if _to_phys:
             # ONE select from the full mapping, not sequential
             # withColumnRenamed calls: a swap mapping ({a: b, b: a},
@@ -760,8 +849,7 @@ def snapshot_write(
                 *[F.col(c).alias(_to_phys.get(c, c)) for c in df.columns]
             )
         stat_cols = [_to_phys.get(c, c) for c in stat_cols]
-        defaults0 = _m0.get("defaults", {})
-        _missing_dft = [c for c in defaults0 if c not in df.columns]
+        _missing_dft = [c for c in _m0.get("defaults", {}) if c not in df.columns]
         if _missing_dft:
             # the manifest schema is the last writer's frame; a write
             # omitting a defaulted column would silently drop it from
@@ -799,112 +887,46 @@ def snapshot_write(
     shutil.rmtree(staging, ignore_errors=True)
     if _staging_raw is not None:
         shutil.rmtree(_staging_raw, ignore_errors=True)
-    while True:
-        prev = current_version(path)
-        if expected_version is not None and prev != expected_version:
+    # the properties the frame was planned and validated under: a racing
+    # commit that moved one invalidates the staged files (a racing
+    # identity winner consumed the ids baked into them), so the caller
+    # retries the whole write; renames and defaults bind only appends
+    planned = _PLANNED + (_PLANNED_APPEND if mode == "append" else ())
+    staged = {"stats": stats, "col_stats": col_stats, "null_stats": null_stats}
+
+    def change(m: dict) -> dict:
+        moved = [name for k, name in planned if m.get(k, {}) != _m0.get(k, {})]
+        if moved:
             raise ConcurrentWriteError(
-                f"table at version {prev}, expected {expected_version}"
+                f"{', '.join(moved)} changed during {mode}; retry"
             )
-        visible, vis_stats = list(new_files), dict(stats)
-        vis_col_stats = dict(col_stats)
-        vis_null_stats = dict(null_stats)
-        carried_deletes: list = []
-        carried_batch_ids: list = []
-        carried_renames: dict = {}
-        carried_defaults: dict = {}
-        carried_generated: dict = {}
-        base = base_version if base_version is not None else prev
-        if base > 0:
-            m = _manifest(path, base)
-            # generated definitions survive every mode (table property,
-            # like batch_ids); a set_generated_column racing this write
-            # means the frame was computed/validated under a different
-            # definition — retry, same rule as renames/defaults.
-            carried_generated = m.get("generated", {})
-            if carried_generated != gen0:
-                raise ConcurrentWriteError(
-                    "generated columns changed during write; retry"
-                )
-            # identity is compared on DEFS AND HIGH-WATER: a racing
-            # writer that won the link(2) claim already consumed the
-            # range this write baked into its staged files — publishing
-            # would duplicate ids, so the loser must re-run the whole
-            # write (re-assignment needs new files). Same caller-retry
-            # rule as renames/defaults.
-            if m.get("identity", {}) != ident0:
-                raise ConcurrentWriteError(
-                    "identity high-water mark moved during write; retry"
-                )
-            # a constraint added while this write was staging means the
-            # frame was validated against the OLD check set — retry
-            if m.get("checks", {}) != checks0:
-                raise ConcurrentWriteError(
-                    "CHECK constraints changed during write; retry"
-                )
-            # ingest-idempotence ids survive EVERY snapshot, including
-            # overwrite/compaction — dropping them would let a stream
-            # restart replay an already-ingested batch.
-            carried_batch_ids = m.get("batch_ids", [])
-            if mode == "append":
-                visible = m["files"] + visible
-                vis_stats.update(m.get("stats", {}))
-                vis_col_stats.update(m.get("col_stats", {}))
-                vis_null_stats.update(m.get("null_stats", {}))
-                # deletes carry FORWARD across appends (they're scoped
-                # to the data files that existed when the delete was
-                # published, so re-inserted keys in new files are
-                # safe); an overwrite replaces all data, clearing them.
-                carried_deletes = m.get("delete_files", [])
-                carried_renames = m.get("renames", {})
-                carried_defaults = m.get("defaults", {})
-                if carried_renames != renames:
-                    # a rename_column raced this append: the staged
-                    # files were written under a mapping that is no
-                    # longer the table's — publishing them would mix
-                    # physical layouts. Callers retry the whole write.
-                    raise ConcurrentWriteError(
-                        "column mapping changed during append; retry"
-                    )
-                if carried_defaults != defaults0:
-                    # an add_column_default raced this append: the
-                    # frame was validated against the OLD defaults, so
-                    # publishing its schema would silently drop the new
-                    # defaulted column from every subsequent read
-                    # (review finding). Callers retry the whole write.
-                    raise ConcurrentWriteError(
-                        "defaulted columns changed during append; retry"
-                    )
-        if batch_id is not None and batch_id not in carried_batch_ids:
-            carried_batch_ids = carried_batch_ids + [batch_id]
-        manifest = {
-            "mode": mode,
-            "files": sorted(visible),
-            "stats": {k: vis_stats[k] for k in sorted(vis_stats)},
-            "col_stats": {
-                k: vis_col_stats[k] for k in sorted(vis_col_stats)
+        old = m if mode == "append" else {}  # merged on append, replaced on overwrite
+        # ingest-idempotence ids survive EVERY snapshot, overwrites and
+        # compactions included: dropping them would let a stream
+        # restart replay an already-ingested batch
+        ids = m.get("batch_ids", [])
+        if batch_id is not None and batch_id not in ids:
+            ids = ids + [batch_id]
+        return {
+            "files": sorted(old.get("files", []) + new_files),
+            **{
+                k: dict(sorted({**old.get(k, {}), **new}.items()))
+                for k, new in staged.items()
             },
-            "null_stats": {
-                k: vis_null_stats[k] for k in sorted(vis_null_stats)
-            },
-            "delete_files": carried_deletes,
-            "batch_ids": sorted(carried_batch_ids),
-            "renames": carried_renames,
-            "defaults": {**carried_defaults, **(extra_defaults or {})},
-            "generated": carried_generated,
+            # deletes carry FORWARD across appends: each is scoped to the
+            # files that existed when it was published
+            "delete_files": old.get("delete_files", []),
+            "renames": old.get("renames", {}),
+            "defaults": {**old.get("defaults", {}), **(extra_defaults or {})},
+            "batch_ids": sorted(ids),
             "identity": {
                 c: {**d, "high": _new_high.get(c, d["high"])}
                 for c, d in ident0.items()
             },
-            "checks": checks0,
             "schema": logical_schema,
         }
-        if _publish(path, prev + 1, manifest):
-            return prev + 1
-        if expected_version is not None:
-            raise ConcurrentWriteError(
-                f"version {prev + 1} was claimed concurrently"
-            )
-        # unconditional append: rebase on the new current version
+
+    return _commit(path, mode, change, validated_at=expected_version, base=base_version)
 
 
 def snapshot_read(
@@ -1702,18 +1724,9 @@ def delete_where(
     os.makedirs(path, exist_ok=True)
     _cur = current_version(path)
     if _cur > 0:
-        _m = _manifest(path, _cur)
-        if _m.get("renames") or _m.get("defaults"):
-            # the delete file stores LOGICAL key values but the MoR
-            # reader anti-joins against the files' PHYSICAL columns,
-            # and this manifest writer doesn't carry the mapping —
-            # either would silently corrupt a mapped table. Same
-            # one-at-a-time rule as rename_column's delete guard.
-            raise ValueError(
-                "MoR delete on a table with column mapping or "
-                "initial-default columns is unsupported; rewrite via "
-                "overwrite/merge_into first"
-            )
+        # the delete file stores LOGICAL key values but the MoR reader
+        # anti-joins against the files' PHYSICAL columns
+        _one_at_a_time(_manifest(path, _cur), "delete_files")
     staging = os.path.join(path, f"_staging_{uuid.uuid4().hex}")
     keys_df.select(F.col(key)).write.mode("overwrite").parquet(staging)
     del_file = f"delete-{uuid.uuid4().hex}.parquet"
@@ -1727,43 +1740,19 @@ def delete_where(
     tables = [pq.read_table(os.path.join(staging, n)) for n in parts]
     pq.write_table(pa.concat_tables(tables), os.path.join(path, del_file))
     shutil.rmtree(staging, ignore_errors=True)
-    while True:
-        prev = current_version(path)
-        m = _manifest(path, prev)
-        if m.get("renames") or m.get("defaults"):
-            # re-check on the manifest the commit actually builds from:
-            # a rename/add-default racing between the pre-check and
-            # here would otherwise be silently stripped (this payload
-            # would omit the mapping) AND the delete keys would
-            # anti-join logical values against physical columns
-            # (review finding — the append path handles the same race)
-            raise ConcurrentWriteError(
-                "column mapping / defaults changed during delete; "
-                "compact and retry"
-            )
-        manifest = {
-            "mode": "delete",
-            "files": m["files"],
-            "stats": m.get("stats", {}),
-            "col_stats": m.get("col_stats", {}),
-            "null_stats": m.get("null_stats", {}),
-            # each delete is SCOPED to the data files visible when it
-            # was published — rows for the same key appended LATER must
-            # survive (Iceberg sequence-number semantics)
-            "delete_files": m.get("delete_files", [])
-            + [[del_file, key, sorted(m["files"])]],
-            # carry forward table schema + ingest-idempotence ids +
-            # generated/identity table properties — a delete snapshot
-            # changes none of them (dropping generated/identity here
-            # would silently un-declare the DDL: round-10 carry fix)
-            "batch_ids": m.get("batch_ids", []),
-            "generated": m.get("generated", {}),
-            "identity": m.get("identity", {}),
-            "checks": m.get("checks", {}),
-            **({"schema": m["schema"]} if "schema" in m else {}),
-        }
-        if _publish(path, prev + 1, manifest):
-            return prev + 1
+
+    def change(m: dict) -> dict:
+        # re-check on the manifest the commit builds from: a rename or
+        # add-default racing the pre-check would otherwise anti-join
+        # logical keys against physical columns
+        _one_at_a_time(m, "delete_files", raced=True)
+        # each delete is SCOPED to the data files visible when it was
+        # published — rows for the same key appended LATER must survive
+        # (Iceberg sequence-number semantics)
+        scoped = [del_file, key, sorted(m["files"])]
+        return {"delete_files": m.get("delete_files", []) + [scoped]}
+
+    return _commit(path, "delete", change)
 
 
 def snapshot_read_mor(
@@ -2248,17 +2237,7 @@ def rename_column(path: str, old: str, new: str) -> int:
         raise ValueError("cannot rename a column of an empty table")
 
     def change(m: dict) -> dict:
-        if m.get("delete_files"):
-            raise ValueError(
-                "rename with pending MoR delete files is unsupported; "
-                "compact_mor first"
-            )
-        if m.get("defaults"):
-            raise ValueError(
-                "rename on a table with initial-default columns is "
-                "unsupported (defaults are keyed by logical name); "
-                "rewrite via overwrite first"
-            )
+        _one_at_a_time(m, "renames")
         names = [fl["name"] for fl in m["schema"]["fields"]]
         if old not in names:
             raise ValueError(f"no such column: {old}")
@@ -2275,7 +2254,7 @@ def rename_column(path: str, old: str, new: str) -> int:
         ]
         return {"renames": renames, "schema": {**m["schema"], "fields": fields}}
 
-    return _alter(path, "rename", change)
+    return _commit(path, "rename", change)
 
 
 def stream_ingest_fanout(
@@ -2421,21 +2400,7 @@ def add_column_default(path: str, name: str, sql_type: str, default) -> int:
         raise ValueError("cannot add a column to an empty table")
 
     def change(m: dict) -> dict:
-        if m.get("renames"):
-            raise ValueError(
-                "initial-default on a renamed table is unsupported "
-                "(defaults are keyed by logical name)"
-            )
-        if m.get("delete_files"):
-            # snapshot_read_mor's raw-parquet group reads know nothing
-            # about defaults, so a defaulted table with live delete
-            # files would silently omit (then fail to resolve) the new
-            # column — same one-at-a-time rule as rename_column
-            # (review finding)
-            raise ValueError(
-                "initial-default with pending MoR delete files is "
-                "unsupported; compact_mor first"
-            )
+        _one_at_a_time(m, "defaults")
         fields = m["schema"]["fields"]
         if name in [fl["name"] for fl in fields]:
             raise ValueError(f"column already exists: {name}")
@@ -2451,7 +2416,7 @@ def add_column_default(path: str, name: str, sql_type: str, default) -> int:
             "schema": {**m["schema"], "fields": fields + [added]},
         }
 
-    return _alter(path, "add_column", change)
+    return _commit(path, "add_column", change)
 
 
 @register(
@@ -2780,7 +2745,7 @@ def add_bloom_index(path: str, col: str, spark: SparkSession | None = None) -> i
         # JVM longs are two's-complement; the Python probe shifts
         # unsigned ints — same bits, normalize the representation
         blooms[r["file"]][r["w"]] = r["bits"] & ((1 << 64) - 1)
-    return _alter(
+    return _commit(
         path,
         "add_bloom",
         lambda m: {"bloom_col": col, "blooms": blooms},
@@ -2798,7 +2763,8 @@ def snapshot_read_point(
     scan + filter."""
     v = current_version(path)
     m = _manifest(path, v)
-    assert m.get("bloom_col") == col, "no bloom index on this column"
+    if m.get("bloom_col") != col:
+        raise ValueError(f"no bloom index on column {col!r}")
     files = [
         name
         for name in m["files"]
@@ -2980,7 +2946,8 @@ def erase_rows(spark: SparkSession, path: str, col: str, value) -> int:
     rows (tombstones); the normal compact+vacuum cycle removes that
     pseudonymous residue."""
     latest = current_version(path)
-    assert latest >= 1, "no table at path"
+    if latest < 1:
+        raise ValueError(f"no table at {path}")
     all_files: set[str] = set()
     manifests = {}
     for v in range(1, latest + 1):
@@ -3108,6 +3075,14 @@ def erase_rows(spark: SparkSession, path: str, col: str, value) -> int:
                 d["scope"] = sorted(
                     {nn for s in d["scope"] for nn in mapping.get(s, [s])}
                 )
+        # each replacement inherits the bloom words of the file it
+        # replaces: its rows are a subset, so no false negatives
+        if m.get("blooms"):
+            m["blooms"] = {
+                nn: words
+                for name, words in m["blooms"].items()
+                for nn in mapping.get(name, [name])
+            }
         # remap MoR delete SCOPES through the same old→new mapping so
         # sequence-number scoping survives the rewrite; the rewritten
         # replacement holds the same rows minus the erased ones, so
@@ -3208,10 +3183,11 @@ def snapshot_clone(src: str, dst: str, version: int | None = None) -> int:
     only to the writing table's manifest, and vacuum on either side
     merely drops ITS link (the inode survives until the last table
     releases it — the exact semantics real formats get from object-
-    store ref-counting). Stats, per-column stats, delete scoping and
-    the schema carry over verbatim; ``batch_ids`` deliberately do NOT
-    (the clone is a new ingest domain — Delta shallow clones likewise
-    do not inherit txnAppId history). Returns the clone's version (1)."""
+    store ref-counting). Stats, per-column stats, delete scoping, the
+    bloom index and the schema carry over verbatim; ``batch_ids``
+    deliberately do NOT (the clone is a new ingest domain — Delta
+    shallow clones likewise do not inherit txnAppId history). Returns
+    the clone's version (1)."""
     v = version if version is not None else current_version(src)
     m = _manifest(src, v)
     os.makedirs(dst, exist_ok=True)
@@ -3222,25 +3198,14 @@ def snapshot_clone(src: str, dst: str, version: int | None = None) -> int:
         # format — d["file"] here was a latent TypeError: cloning any
         # table carrying MoR deletes crashed; pinned by pytest now)
         os.link(os.path.join(src, d[0]), os.path.join(dst, d[0]))
+    # everything else (column mapping, defaults, the DDL properties —
+    # the clone inherits the source's identity high-water mark, so ids
+    # keep ascending from where the source left off) is carried: the
+    # clone reads back AND writes forward identically
     manifest = {
+        **_carry(m),
         "mode": "clone",
-        "files": m["files"],
-        "stats": m.get("stats", {}),
-        "col_stats": m.get("col_stats", {}),
-        "delete_files": m.get("delete_files", []),
         "batch_ids": [],
-        "null_stats": m.get("null_stats", {}),
-        # column mapping, defaults, and the generated/identity DDL
-        # properties are part of the table's logical identity — a
-        # clone must read back AND write forward identically (the
-        # clone inherits the source's high-water mark, so ids keep
-        # ascending from where the source left off)
-        "renames": m.get("renames", {}),
-        "defaults": m.get("defaults", {}),
-        "generated": m.get("generated", {}),
-        "identity": m.get("identity", {}),
-        "checks": m.get("checks", {}),
-        "schema": m["schema"],
         "cloned_from": {"path": src, "version": v},
     }
     if not _publish(dst, 1, manifest):
@@ -3894,6 +3859,9 @@ def merge_branch_ff(path: str, branch: str) -> int:
             f"point v{fork['version']}: fast-forward is impossible"
         )
     main_v = fork["version"]
+    # main's ingest ids survive the fast-forward: the branch began a
+    # new ingest domain (snapshot_clone resets batch_ids)
+    main_ids = set(_manifest(path, main_v).get("batch_ids", []))
     for bv in range(2, current_version(bpath) + 1):
         m = _manifest(bpath, bv)
         for name in m["files"]:
@@ -3905,8 +3873,13 @@ def merge_branch_ff(path: str, branch: str) -> int:
             if not os.path.exists(dst):
                 os.link(os.path.join(bpath, d[0]), dst)
         main_v += 1
-        merged_from = {"branch": branch, "branch_version": bv}
-        if not _publish(path, main_v, {**m, "merged_from": merged_from}):
+        replay = {
+            **_carry(m),
+            "mode": m.get("mode", "append"),
+            "batch_ids": sorted(main_ids | set(m.get("batch_ids", []))),
+            "merged_from": {"branch": branch, "branch_version": bv},
+        }
+        if not _publish(path, main_v, replay):
             raise ConcurrentWriteError(
                 f"version {main_v} claimed concurrently during merge"
             )
@@ -4425,7 +4398,7 @@ def set_generated_column(spark: SparkSession, path: str, name: str, expr: str) -
             f"existing rows violate {name} = {expr!r}; "
             f"rewrite the data before declaring it generated"
         )
-    return _alter(
+    return _commit(
         path,
         "set_generated",
         lambda m: {"generated": {**m.get("generated", {}), name: expr}},
@@ -4596,7 +4569,7 @@ def add_check_constraint(
             f"existing rows violate CHECK {name}: {expr!r}; "
             f"clean the data before declaring it"
         )
-    return _alter(
+    return _commit(
         path,
         "add_check",
         lambda m: {"checks": {**m.get("checks", {}), name: expr}},

@@ -1051,9 +1051,16 @@ def test_lakehouse_commits_through_one_claim():
     hand-copied tmp → json.dump → os.link sequence is how the copies
     drifted (a leaked tmp, a raw FileExistsError, a stale commit time),
     so ``os.link(tmp`` and ``json.dump(`` may appear only in the claim
-    primitive and the metalog helpers."""
+    primitive and the metalog helpers. Likewise every next version
+    publishes through the one commit loop: the module holds one
+    ``while True`` (``_commit``), ``_publish`` is called only from
+    ``_commit`` and the two writers that publish fixed versions
+    (``snapshot_clone``, ``merge_branch_ff``), and the one-at-a-time
+    rule's refusals are spelled only in ``_one_at_a_time``."""
     import ast
+    import io
     import pathlib
+    import tokenize
 
     src = (
         pathlib.Path(__file__).resolve().parents[1]
@@ -1075,8 +1082,26 @@ def test_lakehouse_commits_through_one_claim():
             offenders.append(f"{i} {fn}: {line.strip()}")
         if "open(_manifest_path(" in line and fn != "_manifest":
             offenders.append(f"{i} {fn}: {line.strip()}")
+        if "_publish(" in line and "def _publish(" not in line and fn not in (
+            "_commit",
+            "snapshot_clone",
+            "merge_branch_ff",
+        ):
+            offenders.append(f"{i} {fn}: {line.strip()}")
+    for tok in tokenize.generate_tokens(io.StringIO(src).readline):
+        fn = owner.get(tok.start[0], "<module>")
+        if (
+            tok.type == tokenize.STRING
+            and fn != "_one_at_a_time"
+            and any(
+                phrase in tok.string
+                for phrase in ("pending MoR delete", "renamed table", "compact_mor first")
+            )
+        ):
+            offenders.append(f"{tok.start[0]} {fn}: {tok.string}")
     assert not offenders, offenders
     assert src.count("os.link(tmp") == 1
+    assert src.count("while True") == 1
 
 
 def _calls_by_function(rel: str, match) -> dict[str, list[int]]:

@@ -2790,3 +2790,173 @@ def test_lakehouse_grouped_reads_union_in_one_order(spark, tmp_path, monkeypatch
     older_last = rows("b", "f", "0")
     assert sorted(older_first) == sorted(older_last)
     assert older_first == older_last
+
+
+@pytest.fixture(scope="module")
+def carry_base(spark, tmp_path_factory):
+    """A lakehouse table carrying every inheritable property: a clone
+    (v1) of a table with a generated and an identity column, then a
+    CHECK constraint (v2), an append with batch id 7 (v3) and a bloom
+    index on k (v4). Tests copy it rather than write into it."""
+    from embarrassingly_parallel_image_classification_spark.plans import lakehouse
+
+    root = tmp_path_factory.mktemp("carry_base")
+    src, path = str(root / "src"), str(root / "tbl")
+    lakehouse.snapshot_write(
+        spark.range(6).select(
+            F.col("id").alias("k"),
+            (F.col("id") * 2).alias("dbl"),
+            (F.col("id") + 1).alias("rid"),
+        ),
+        src,
+        "append",
+    )
+    lakehouse.set_generated_column(spark, src, "dbl", "k * 2")
+    lakehouse.set_identity_column(spark, src, "rid")
+    lakehouse.snapshot_clone(src, path)
+    lakehouse.add_check_constraint(spark, path, "nonneg", "k >= 0")
+    lakehouse.snapshot_write(
+        spark.range(6, 8).select(F.col("id").alias("k")), path, "append", batch_id=7
+    )
+    lakehouse.add_bloom_index(path, "k", spark)
+    return path
+
+
+def _commit_of_kind(spark, lakehouse, kind: str, path: str) -> str:
+    """Make one commit of ``kind`` on the table at ``path``; returns the
+    path of the table that received it."""
+    k = F.col("id").alias("k")
+    if kind == "append":
+        lakehouse.snapshot_write(spark.range(8, 10).select(k), path, "append")
+    elif kind == "overwrite":
+        lakehouse.snapshot_write(spark.range(3).select(k), path, "overwrite")
+    elif kind == "delete":
+        lakehouse.delete_where(spark, path, "k", spark.range(1).select(k))
+    elif kind == "rename":
+        lakehouse.rename_column(path, "k", "key")
+    elif kind == "add_column":
+        lakehouse.add_column_default(path, "c", "bigint", 7)
+    elif kind == "set_generated":
+        lakehouse.set_generated_column(spark, path, "dbl", "k + k")
+    elif kind == "add_check":
+        lakehouse.add_check_constraint(spark, path, "small", "k < 1000")
+    elif kind == "set_identity":
+        lakehouse.set_identity_column(spark, path, "rid", start=100)
+    elif kind == "add_bloom":
+        lakehouse.add_bloom_index(path, "dbl", spark)
+    elif kind == "clone":
+        dst = path + "_clone"
+        lakehouse.snapshot_clone(path, dst)
+        return dst
+    else:  # merge: a DDL on a branch, fast-forwarded into main
+        bpath = lakehouse.create_branch(path, "b")
+        lakehouse.add_check_constraint(spark, bpath, "small", "k < 1000")
+        lakehouse.merge_branch_ff(path, "b")
+    return path
+
+
+@pytest.mark.parametrize(
+    "kind",
+    [
+        "append", "overwrite", "delete", "rename", "add_column", "set_generated",
+        "add_check", "set_identity", "add_bloom", "clone", "merge",
+    ],
+)
+def test_lakehouse_commit_kinds_follow_the_carry_rule(spark, tmp_path, carry_base, kind):
+    """Every commit kind keeps or changes the manifest keys exactly as
+    the carry rule in the lakehouse module docstring says: schema,
+    generated, identity, checks and batch_ids survive unless the kind
+    sets them; cloned_from appears only on a clone's own version and
+    merged_from only on a merged one; a data commit drops the bloom
+    index and every other kind keeps it; and a point read after a
+    delete never returns a deleted key."""
+    from embarrassingly_parallel_image_classification_spark.plans import lakehouse
+
+    path = str(tmp_path / "tbl")
+    shutil.copytree(carry_base, path)
+    before = lakehouse._manifest(path, lakehouse.current_version(path))
+    target = _commit_of_kind(spark, lakehouse, kind, path)
+    after = lakehouse._manifest(target, lakehouse.current_version(target))
+
+    def props(m):
+        return {
+            "names": [fl["name"] for fl in m["schema"]["fields"]],
+            "generated": m.get("generated", {}),
+            "identity": {
+                c: (d["start"], d["step"]) for c, d in m.get("identity", {}).items()
+            },
+            "checks": m.get("checks", {}),
+            "batch_ids": m.get("batch_ids", []),
+        }
+
+    want = props(before)
+    if kind == "rename":
+        want["names"] = ["key" if n == "k" else n for n in want["names"]]
+    elif kind == "add_column":
+        want["names"] = want["names"] + ["c"]
+    elif kind == "set_generated":
+        want["generated"] = {"dbl": "k + k"}
+    elif kind in ("add_check", "merge"):
+        want["checks"] = {**want["checks"], "small": "k < 1000"}
+    elif kind == "set_identity":
+        want["identity"] = {"rid": (100, 1)}
+    elif kind == "clone":
+        want["batch_ids"] = []
+    assert props(after) == want
+    assert ("cloned_from" in after) == (kind == "clone")
+    assert ("merged_from" in after) == (kind == "merge")
+    history = lakehouse.table_history(target)
+    assert [h["cloned_from"] is not None for h in history] == [
+        h["mode"] == "clone" for h in history
+    ], history
+    data_commit = kind in ("append", "overwrite", "delete")
+    assert ("blooms" in after) == (not data_commit)
+    assert ("bloom_col" in after) == (not data_commit)
+    if "blooms" in after:
+        assert set(after["blooms"]) == set(after["files"])
+    if kind == "delete":
+        try:
+            got = [r["k"] for r in lakehouse.snapshot_read_point(spark, path, "k", 0).collect()]
+        except ValueError:  # the delete dropped the index
+            got = []
+        assert 0 not in got
+
+
+def test_lakehouse_point_read_after_erase_matches_a_filtered_scan(spark, tmp_path):
+    """erase_rows rewrites the files holding the erased rows; each
+    replacement inherits the bloom words of the file it replaces, so a
+    bloom-pruned point read still equals a full scan + filter."""
+    from embarrassingly_parallel_image_classification_spark.plans import lakehouse
+
+    path = str(tmp_path / "tbl")
+    lakehouse.snapshot_write(
+        spark.range(20).select(F.col("id").alias("k")).repartition(4, "k"), path, "append"
+    )
+    lakehouse.add_bloom_index(path, "k", spark)
+    assert lakehouse.erase_rows(spark, path, "k", 5) == 1
+    for value in (3, 5, 17, 25):
+        point = sorted(
+            r["k"] for r in lakehouse.snapshot_read_point(spark, path, "k", value).collect()
+        )
+        scan = sorted(
+            r["k"]
+            for r in lakehouse.snapshot_read(spark, path).filter(F.col("k") == value).collect()
+        )
+        assert point == scan, value
+
+
+def test_lakehouse_write_mode_is_checked_under_python_O(spark, tmp_path):
+    """snapshot_write's argument checks raise ValueError rather than
+    assert (``python -O`` strips asserts, and a mistyped mode would then
+    fall through to overwrite semantics); a refused call publishes
+    nothing."""
+    from embarrassingly_parallel_image_classification_spark.plans import lakehouse
+
+    path = str(tmp_path / "tbl")
+    df = spark.range(3).select(F.col("id").alias("k"))
+    lakehouse.snapshot_write(df, path, "append")
+    with pytest.raises(ValueError, match="append"):
+        lakehouse.snapshot_write(df, path, "Append")
+    with pytest.raises(ValueError, match="extra_defaults"):
+        lakehouse.snapshot_write(df, path, "append", extra_defaults={"c": {}})
+    assert lakehouse.current_version(path) == 1

@@ -7,12 +7,17 @@ derandomized so CI-like runs are stable. The properties:
 * prefix-filtered similarity join ≡ naive all-pairs join at the same
   threshold, for ANY corpus (the losslessness theorem, adversarially
   probed with short docs, repeated tokens, shared boilerplate);
-* star CC ≡ min-label CC on arbitrary random graphs.
+* star CC ≡ min-label CC on arbitrary random graphs;
+* two lakehouse writers interleaved (one commits inside the other's
+  stage → commit window) ≡ the sequential model in commit order.
 """
 
 from __future__ import annotations
 
-from hypothesis import HealthCheck, given, settings
+from typing import NamedTuple
+
+import pytest
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -272,6 +277,199 @@ def test_lakehouse_model_equivalence_on_random_op_sequences(spark, ops):
             )
     finally:
         _shutil.rmtree(path, ignore_errors=True)
+
+
+_write = st.tuples(
+    st.sampled_from(["append", "overwrite", "delete", "rename", "add_column", "compact"]),
+    st.lists(st.integers(0, 9), min_size=1, max_size=3),
+)
+
+
+class _Lake(NamedTuple):
+    """The sequential model of the interleaving test's table: k values,
+    k's logical name, the column mapping, the defaulted columns, whether
+    MoR delete files are pending, the identity high-water mark, and the
+    mode of every published version in commit order."""
+
+    rows: tuple
+    col: str
+    renames: tuple
+    defaults: tuple
+    deletes: bool
+    high: int
+    modes: tuple
+
+
+def _model_step(plan: _Lake, at: _Lake, kind: str, keys: list, label: str):
+    """A write planned on ``plan`` and committed on ``at`` (the same
+    state when nothing interleaved): (next state, None) when it
+    publishes, (None, exception type) when it is refused."""
+    from embarrassingly_parallel_image_classification_spark.plans import lakehouse
+
+    refused = lakehouse.ConcurrentWriteError
+    if kind == "append":
+        if (at.high, at.renames, at.defaults) != (plan.high, plan.renames, plan.defaults):
+            return None, refused
+        nxt = at._replace(rows=at.rows + tuple(keys), high=at.high + len(keys))
+    elif kind == "overwrite":
+        if at.high != plan.high:
+            return None, refused
+        nxt = _Lake(tuple(keys), plan.col, (), (), False, at.high + len(keys), at.modes)
+    elif kind == "compact":
+        if at.modes != plan.modes:
+            return None, refused
+        nxt = at._replace(renames=(), defaults=(), deletes=False)
+        kind = "overwrite"
+    elif kind == "delete":
+        if plan.renames or plan.defaults:
+            return None, ValueError  # refused before staging
+        if at.renames or at.defaults:
+            return None, refused
+        nxt = at._replace(rows=tuple(k for k in at.rows if k not in keys), deletes=True)
+    elif kind == "rename":
+        if at.deletes or at.defaults or at.col != plan.col:
+            return None, ValueError
+        renames = dict(at.renames)
+        phys = next((p for p, lg in renames.items() if lg == plan.col), plan.col)
+        renames.pop(phys, None)
+        if phys != f"k_{label}":
+            renames[phys] = f"k_{label}"
+        nxt = at._replace(col=f"k_{label}", renames=tuple(sorted(renames.items())))
+    else:  # add_column
+        if at.renames or at.deletes:
+            return None, ValueError
+        nxt = at._replace(defaults=at.defaults + (f"c_{label}",))
+    return nxt._replace(modes=nxt.modes + (kind,)), None
+
+
+def _run_write(spark, path: str, plan: _Lake, kind: str, keys: list, label: str):
+    """Run one write planned on ``plan``; the type of the exception that
+    refused it, or None when it published."""
+    from embarrassingly_parallel_image_classification_spark.plans import lakehouse
+
+    frame = spark.createDataFrame([(k,) for k in keys], f"{plan.col} bigint")
+    try:
+        if kind == "append":
+            for c in plan.defaults:
+                frame = frame.withColumn(c, F.lit(7).cast("bigint"))
+            lakehouse.snapshot_write(frame, path, "append")
+        elif kind == "overwrite":
+            lakehouse.snapshot_write(frame, path, "overwrite")
+        elif kind == "delete":
+            lakehouse.delete_where(spark, path, plan.col, frame)
+        elif kind == "rename":
+            lakehouse.rename_column(path, plan.col, f"k_{label}")
+        elif kind == "add_column":
+            lakehouse.add_column_default(path, f"c_{label}", "bigint", 7)
+        else:
+            lakehouse.compact_mor(spark, path)
+    except (ValueError, lakehouse.ConcurrentWriteError) as e:
+        return type(e)
+    return None
+
+
+@pytest.fixture(scope="module")
+def identity_lake(spark, tmp_path_factory):
+    """v1 an empty (k, rid) table, v2 rid declared IDENTITY, v3 k = 1, 2,
+    3 appended (rid 1..3); the model state that matches it."""
+    from embarrassingly_parallel_image_classification_spark.plans import lakehouse
+
+    path = str(tmp_path_factory.mktemp("identity_lake") / "tbl")
+    lakehouse.snapshot_write(
+        spark.createDataFrame([], "k bigint, rid bigint"), path, "append"
+    )
+    lakehouse.set_identity_column(spark, path, "rid")
+    lakehouse.snapshot_write(
+        spark.createDataFrame([(1,), (2,), (3,)], "k bigint"), path, "append"
+    )
+    return path, _Lake((1, 2, 3), "k", (), (), False, 3, ("append", "set_identity", "append"))
+
+
+@settings(
+    max_examples=20,
+    deadline=None,
+    derandomize=True,
+    suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
+)
+@example(prefix=[], a=("compact", [1]), b=("append", [5]))
+@example(prefix=[], a=("compact", [1]), b=("delete", [2]))
+@example(prefix=[], a=("append", [4]), b=("append", [5]))
+@example(prefix=[("rename", [0])], a=("delete", [1]), b=("compact", [0]))
+@example(prefix=[("delete", [2])], a=("append", [2]), b=("add_column", [0]))
+@given(prefix=st.lists(_write, max_size=1), a=_write, b=_write)
+def test_lakehouse_interleaved_writers_match_the_sequential_model(
+    spark, tmp_path, identity_lake, prefix, a, b
+):
+    """Writer B commits entirely inside writer A's stage → commit
+    window: B runs when A first calls ``_commit``, the one loop every
+    write kind publishes through. The published history must equal the
+    sequential model applied in commit order (B, then A rebased onto B
+    or refused by the rebase-or-refuse table in the lakehouse module
+    docstring); a refused write raises the predicted exception and
+    creates no version; no acknowledged write is lost (every version
+    reads back its model rows); and no identity value is assigned
+    twice. A compact_mor that rebased instead of refusing would drop
+    B's rows; an append that ignored the moved identity high-water
+    mark would publish B's ids again."""
+    import shutil as _shutil
+    import uuid as _uuid
+
+    from embarrassingly_parallel_image_classification_spark.plans import lakehouse
+
+    path = str(tmp_path / _uuid.uuid4().hex)
+    _shutil.copytree(identity_lake[0], path)
+    s = identity_lake[1]
+    for kind, keys in prefix:
+        got = _run_write(spark, path, s, kind, keys, "p")
+        nxt, want = _model_step(s, s, kind, keys, "p")
+        assert got == want, (prefix, got, want)
+        s = nxt or s
+    fired: list = []
+    real_commit = lakehouse._commit
+
+    def b_lands_first(*args, **kwargs):
+        if not fired:  # B's own commits pass straight through
+            fired.append(None)
+            fired[0] = _run_write(spark, path, s, *b, "b")
+        return real_commit(*args, **kwargs)
+
+    lakehouse._commit = b_lands_first
+    try:
+        got_a = _run_write(spark, path, s, *a, "a")
+    finally:
+        lakehouse._commit = real_commit
+    after_b, want_b = _model_step(s, s, *b, "b")
+    if fired:
+        got_b = fired[0]
+        after_a, want_a = _model_step(s, after_b or s, *a, "a")
+        final = after_a or after_b or s
+    else:  # A was refused before its commit: B runs alone
+        after_a, want_a = _model_step(s, s, *a, "a")
+        assert after_a is None, "a write published without committing"
+        got_b = _run_write(spark, path, s, *b, "b")
+        final = after_b or s
+    assert (got_a, got_b) == (want_a, want_b), (prefix, a, b)
+    assert lakehouse.current_version(path) == len(final.modes)
+    assert [h["mode"] for h in lakehouse.table_history(path)] == list(final.modes)
+    # every version from s on reads back its model rows
+    names = {len(x.modes): x for x in (s, after_b, after_a) if x is not None}
+    frames = [
+        lakehouse.snapshot_read_mor(spark, path, v).select(
+            F.lit(v).alias("v"), F.col(names[v].col).alias("k"), "rid"
+        )
+        for v in sorted(names)
+    ]
+    union = frames[0]
+    for f in frames[1:]:
+        union = union.unionByName(f)
+    got = {}
+    for r in union.collect():
+        got.setdefault(r["v"], []).append((r["k"], r["rid"]))
+    for v, st_ in names.items():
+        rows = got.get(v, [])
+        assert sorted(k for k, _ in rows) == sorted(st_.rows), (v, prefix, a, b)
+        rids = [rid for _, rid in rows]
+        assert None not in rids and len(set(rids)) == len(rids), (v, rids)
 
 
 @settings(
