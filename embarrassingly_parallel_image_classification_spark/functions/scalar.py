@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..sources.tables import t
+from ..sources.tables import cents, t
 
 
 @register(
@@ -485,9 +485,7 @@ def q_variant_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.struct(
                     F.col("o_orderpriority").alias("priority"),
                     F.struct(
-                        F.round(F.col("o_totalprice") * 100, 0)
-                        .cast("bigint")
-                        .alias("cents"),
+                        cents("o_totalprice").alias("cents"),
                         F.col("o_orderdate").cast("date").cast("string").alias("d"),
                     ).alias("meta"),
                 )
@@ -604,7 +602,7 @@ def q_fn_format(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_format("o_orderdate", "yyyy-MM").alias("order_month"),
             F.format_string(
                 "%d cents",
-                F.expr("CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)"),
+                cents("o_totalprice"),
             ).alias("price_label"),
         )
     )
@@ -874,9 +872,7 @@ def q_fn_try_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate; no shuffle beyond the 3-group fold."""
     x = t(spark, sf_dir, "lineitem").select(
         F.expr("CAST(ROUND(l_quantity, 0) AS BIGINT)").alias("qty"),
-        F.expr("CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT)").alias(
-            "cents"
-        ),
+        cents("l_extendedprice").alias("cents"),
         F.col("l_returnflag").alias("flag"),
     )
     tried = x.select(

@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 
 from ..localframe import local_df, pin
 from ..registry import register
-from ..sources.tables import t
+from ..sources.tables import cents, t
 
 _K = 5  # substring-dedup gram width (tokens)
 
@@ -233,10 +233,8 @@ def q_quality_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     only data-sized exchange). Integer headroom: counts·totals·1e6
     stays < 2^63 up to ~10^6 rows per side per the docstring contract;
     beyond that, drop the e6 scale to e3."""
-    b = t(spark, sf_dir, "orders").select(
-        F.expr("CAST(ROUND(o_totalprice * 100, 0) AS BIGINT) DIV 5000000").alias(
-            "bucket"
-        ),
+    b = t(spark, sf_dir, "orders").withColumn("c", cents("o_totalprice")).select(
+        F.expr("c DIV 5000000").alias("bucket"),
         F.when(F.year("o_orderdate") < 1998, 1).otherwise(0).alias("is_ref"),
     )
     agg = b.groupBy("bucket").agg(
@@ -378,7 +376,7 @@ def q_clean_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic ((n+19) DIV 20), clipping is GREATEST/LEAST on cents."""
     li = t(spark, sf_dir, "lineitem").select(
         F.col("l_returnflag").alias("grp"),
-        F.expr("CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT)").alias("cents"),
+        cents("l_extendedprice").alias("cents"),
     )
     rk = li.select(
         "grp",
@@ -788,12 +786,7 @@ def q_quality_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     obs = (
         o.select(
-            F.substring(
-                F.expr("CAST(CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)"
-                       " AS STRING)"),
-                1,
-                1,
-            )
+            F.substring(cents("o_totalprice").cast("string"), 1, 1)
             .cast("bigint")
             .alias("digit")
         )

@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 
 from ..localframe import local_df, pin
 from ..registry import register
-from ..sources.tables import t
+from ..sources.tables import cents, t
 
 # Equi-width bucket count for q_feat_bucketize — module-level so the
 # Spark plan, the oracle, and any downstream consumer share ONE
@@ -200,7 +200,7 @@ def q_feat_target_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = t(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_orderpriority",
-        F.expr("CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)").alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     g = pts.groupBy("o_orderpriority").agg(
         F.sum("cents").cast("bigint").alias("s"),
@@ -254,7 +254,7 @@ def q_feat_bucketize(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment — one fact scan, zero fact shuffles."""
     pts = t(spark, sf_dir, "orders").select(
         "o_orderkey",
-        F.expr("CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)").alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     bounds = pts.agg(
         F.min("cents").cast("bigint").alias("lo"),
@@ -332,7 +332,7 @@ def q_feat_target_kfold(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).cast("bigint")
             % 5
         ).alias("fold"),
-        F.expr("CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)").alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     # pinned 25-row (priority, fold) census: gt is its marginal —
     # unpinned, the gt subtree re-ran the md5-fold fact pass
@@ -439,7 +439,7 @@ def q_pipeline_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey",
         "o_orderpriority",
         F.expr("CAST(year(o_orderdate) AS BIGINT)").alias("yr"),
-        F.expr("CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)").alias("cents"),
+        cents("o_totalprice").alias("cents"),
         (
             F.conv(
                 F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 8),
@@ -560,9 +560,7 @@ def q_feat_robust_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
             "l_orderkey",
             "l_linenumber",
             F.col("l_returnflag").alias("g"),
-            F.expr("CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT)").alias(
-                "cents"
-            ),
+            cents("l_extendedprice").alias("cents"),
         ),
         "q_feat_robust_scale.pts",
     )
@@ -826,7 +824,7 @@ def q_feat_gini_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic on that tiny frame. Fact scanned once."""
     from ..operators.stats import fix_e6
 
-    x = t(spark, sf_dir, "events").select(
+    x = t(spark, sf_dir, "events").withColumn("c", cents("value")).select(
         F.col("event_type").alias("y"),
         (
             F.expr("CAST(from_json(props, 'k INT').k AS BIGINT)") % 5
@@ -835,9 +833,7 @@ def q_feat_gini_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("CAST(dayofweek(CAST(ts AS TIMESTAMP)) AS BIGINT)").alias(
             "f_dow"
         ),
-        F.expr(
-            "CAST(ROUND(value * 100, 0) AS BIGINT) div 10000"
-        ).alias("f_band"),
+        F.expr("c div 10000").alias("f_band"),
     )
     melted = x.selectExpr(
         "stack(4, 'f_kmod', f_kmod, 'f_parity', f_parity, "

@@ -44,7 +44,7 @@ from pyspark.sql.types import IntegerType
 
 from ..localframe import pin
 from ..registry import register
-from ..sources.tables import t
+from ..sources.tables import cents, t
 
 EMB_DIM = 64
 N_CLASSES = 10
@@ -436,7 +436,7 @@ def q_eval_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     per bin; the query is the standard reliability-diagram input
     computed as two scans (global min/max, then one aggregate)."""
     ev = t(spark, sf_dir, "events").select(
-        F.round(F.col("value") * 100, 0).cast("bigint").alias("cents"),
+        cents("value").alias("cents"),
         (F.col("event_type") == "purchase").cast("int").alias("y"),
     )
     rng = ev.agg(
@@ -1086,7 +1086,7 @@ def q_eval_brier(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: the q_eval_calibration shape — one global (min, max) 1-row
     broadcast, one 10-bin census, arithmetic on the 10-row frame."""
     ev = t(spark, sf_dir, "events").select(
-        F.round(F.col("value") * 100, 0).cast("bigint").alias("cents"),
+        cents("value").alias("cents"),
         (F.col("event_type") == "purchase").cast("int").alias("y"),
     )
     rng = ev.agg(F.min("cents").alias("lo"), F.max("cents").alias("hi"))

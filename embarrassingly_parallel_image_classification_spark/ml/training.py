@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 from ..localframe import local_df, pin
 from ..operators.stats import D38, comoment, moment_census, trunc_div
 from ..registry import register
-from ..sources.tables import t
+from ..sources.tables import cents, t
 
 # Shared hyperparameters — module-level so the Spark loop, the oracle
 # generator, and the pytest self-checks read ONE definition.
@@ -157,7 +157,7 @@ def q_train_linreg_gd(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("CAST(CAST(substring(o_orderpriority, 1, 1) AS BIGINT) - 3 AS BIGINT)")
             .alias("x1"),
             F.expr("CAST(year(o_orderdate) - 1998 AS BIGINT)").alias("x2"),
-            trunc_div(F.expr("CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)"), F.lit(1000))
+            trunc_div(cents("o_totalprice"), F.lit(1000))
             .cast("bigint")
             .alias("y"),
         ),
@@ -549,7 +549,7 @@ def q_train_isotonic(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = t(spark, sf_dir, "events").select(
         "user_id",
         "event_id",
-        F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)").alias("cents"),
+        cents("value").alias("cents"),
         F.row_number()
         .over(Window.partitionBy("user_id").orderBy("ts", "event_id"))
         .alias("i"),
@@ -663,7 +663,7 @@ def q_train_grouped_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = t(spark, sf_dir, "orders").select(
         F.col("o_orderpriority").alias("grp"),
         F.expr("CAST(year(o_orderdate) - 1998 AS BIGINT)").alias("x"),
-        F.expr("CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)").alias("y"),
+        cents("o_totalprice").alias("y"),
     )
     s = moment_census(pts, ["x", "y"], ("grp",))
     num = comoment("x", "y").cast("double")
@@ -808,8 +808,8 @@ def q_train_gbt_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
     censuses, exactly how LightGBM's histogram mode spends its
     network."""
     li = t(spark, sf_dir, "lineitem").select(
-        F.expr("CAST(ROUND(l_discount * 100, 0) AS BIGINT)").alias("disc"),
-        F.expr("CAST(ROUND(l_tax * 100, 0) AS BIGINT)").alias("tax"),
+        cents("l_discount").alias("disc"),
+        cents("l_tax").alias("tax"),
         F.expr("CAST(ROUND(l_quantity, 0) AS BIGINT)").alias("y"),
     )
     d38 = "decimal(38,0)"
@@ -947,8 +947,8 @@ def _price_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     discount-pct, extendedprice cents) that ridge and lasso solve."""
     x = t(spark, sf_dir, "lineitem").select(
         F.col("l_quantity").cast("bigint").alias("x1"),
-        F.expr("CAST(ROUND(l_discount * 100, 0) AS BIGINT)").alias("x2"),
-        F.expr("CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT)").alias("y"),
+        cents("l_discount").alias("x2"),
+        cents("l_extendedprice").alias("y"),
     )
     return moment_census(x, ["x1", "x2", "y"])
 
@@ -1312,7 +1312,7 @@ def _tree_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     here grows from."""
     return t(spark, sf_dir, "lineitem").select(
         F.expr("CAST(ROUND(l_quantity, 0) AS BIGINT)").alias("qty"),
-        F.expr("CAST(ROUND(l_discount * 100, 0) AS BIGINT)").alias("disc"),
+        cents("l_discount").alias("disc"),
         F.when(F.col("l_returnflag") == "R", 1).otherwise(0).alias("y"),
     )
 
@@ -1832,7 +1832,7 @@ def q_train_perceptron(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("CAST(SUBSTRING(o_orderpriority, 1, 1) AS BIGINT)").alias(
                 "x1"
             ),
-            trunc_div(F.expr("CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)"), F.lit(1000000))
+            trunc_div(cents("o_totalprice"), F.lit(1000000))
             .cast("bigint")
             .alias("x2"),
             F.when(F.col("o_orderstatus") == "F", 1)

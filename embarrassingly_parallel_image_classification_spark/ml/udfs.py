@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from ..registry import register
-from ..sources.tables import t
+from ..sources.tables import cents, t
 
 
 @register(
@@ -302,7 +302,7 @@ def q_udtf_table_arg(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "ts",
         "event_id",
-        F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)").alias("cents"),
+        cents("value").alias("cents"),
     ).createOrReplaceTempView("events_runs_in")
     return spark.sql(
         "SELECT f.* FROM longest_run_udtf("
@@ -407,7 +407,7 @@ def q_udf_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_id",
             "user_id",
             "ts",
-            F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)").alias("cents"),
+            cents("value").alias("cents"),
         )
     )
     w = (
@@ -463,11 +463,11 @@ def q_udf_cogroup(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer sums only."""
     cust = t(spark, sf_dir, "customer").select(
         F.col("c_nationkey").cast("bigint").alias("nationkey"),
-        F.round(F.col("c_acctbal") * 100, 0).cast("bigint").alias("cents"),
+        cents("c_acctbal").alias("cents"),
     )
     supp = t(spark, sf_dir, "supplier").select(
         F.col("s_nationkey").cast("bigint").alias("nationkey"),
-        F.round(F.col("s_acctbal") * 100, 0).cast("bigint").alias("cents"),
+        cents("s_acctbal").alias("cents"),
     )
 
     def census(key, cpdf: pd.DataFrame, spdf: pd.DataFrame) -> pd.DataFrame:
@@ -529,7 +529,7 @@ def q_udf_grouped_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cust = t(spark, sf_dir, "customer").select(
         F.col("c_mktsegment").alias("segment"),
-        F.round(F.col("c_acctbal") * 100, 0).cast("bigint").alias("cents"),
+        cents("c_acctbal").alias("cents"),
     )
 
     def census(table: pa.Table) -> pa.Table:
@@ -590,7 +590,7 @@ def q_udf_cogroup_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ords = t(spark, sf_dir, "orders").select(
         F.col("o_orderstatus").alias("status"),
-        F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     li = t(spark, sf_dir, "lineitem").select(
         F.col("l_linestatus").alias("status"),

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from ..localframe import local_df, pin
 from ..registry import register
-from ..sources.tables import t
+from ..sources.tables import cents, t
 
 
 @register(
@@ -407,7 +407,7 @@ def q_profile_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: distinct-heavy profiling over 100 TB would swap exact
     distincts for D5's approx_count_distinct — same query shape."""
     o = t(spark, sf_dir, "orders")
-    price_c = F.round(F.col("o_totalprice") * 100, 0).cast("bigint")
+    price_c = cents("o_totalprice")
     return o.agg(
         F.count("*").alias("n_rows"),
         F.countDistinct("o_custkey").alias("n_customers"),
@@ -439,7 +439,7 @@ def q_agg_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     every profiling UI. Bin edges are exact-representable doubles, so
     edge rows bin identically on both engines. One two-phase agg."""
     o = t(spark, sf_dir, "orders")
-    price_c = F.round(F.col("o_totalprice") * 100, 0).cast("bigint")
+    price_c = cents("o_totalprice")
     return (
         o.select(
             F.floor(F.col("o_totalprice") / 25000).cast("bigint").alias("bin"),
@@ -482,13 +482,13 @@ def q_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     observed = li.observe(
         obs,
         F.count(F.lit(1)).alias("rows_seen"),
-        F.sum(F.round(F.col("l_extendedprice") * 100, 0).cast("bigint")).alias(
+        F.sum(cents("l_extendedprice")).alias(
             "cents_seen"
         ),
     )
     return observed.groupBy("l_linestatus").agg(
         F.count("*").alias("n"),
-        F.sum(F.round(F.col("l_extendedprice") * 100, 0).cast("bigint")).alias(
+        F.sum(cents("l_extendedprice")).alias(
             "sum_price_c"
         ),
     )
@@ -644,7 +644,7 @@ def q_agg_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
         t(spark, sf_dir, "events")
         .groupBy(
             "event_type",
-            F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)").alias("cents"),
+            cents("value").alias("cents"),
         )
         .agg(F.count("*").alias("n"))
     )
@@ -704,7 +704,7 @@ def q_agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket containing the median."""
     li = t(spark, sf_dir, "lineitem").select(
         F.col("l_returnflag").alias("grp"),
-        F.expr("CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT)").alias("cents"),
+        cents("l_extendedprice").alias("cents"),
         F.col("l_quantity").cast("bigint").alias("w"),
     )
     c = li.select(
@@ -1066,9 +1066,7 @@ def q_agg_quantile_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = pin(
         t(spark, sf_dir, "lineitem").select(
             F.lit("_").alias("g"),
-            F.expr("CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT)").alias(
-                "cents"
-            ),
+            cents("l_extendedprice").alias("cents"),
         ),
         "q_agg_quantile_select.pts",
     )
@@ -1122,9 +1120,7 @@ def q_agg_group_median_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = pin(
         t(spark, sf_dir, "lineitem").select(
             F.col("l_returnflag").alias("g"),
-            F.expr("CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT)").alias(
-                "cents"
-            ),
+            cents("l_extendedprice").alias("cents"),
         ),
         "q_agg_group_median_select.pts",
     )

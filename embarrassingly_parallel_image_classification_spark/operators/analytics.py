@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 
 from ..localframe import pin
 from ..registry import register
-from ..sources.tables import t
+from ..sources.tables import cents, t
 
 
 @register(
@@ -79,7 +79,7 @@ def q_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     p = t(spark, sf_dir, "part").select(
         "p_partkey",
-        F.expr("CAST(ROUND(p_retailprice * 100, 0) AS BIGINT)").alias("price_c"),
+        cents("p_retailprice").alias("price_c"),
         "p_size",
     )
     pairs = p.select("price_c", "p_size").distinct()
@@ -230,7 +230,7 @@ def q_alloc_prorata(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("o_orderkey") % 5 == 0)
         .select(
             "o_orderkey",
-            F.expr("CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)").alias("total_c"),
+            cents("o_totalprice").alias("total_c"),
         )
     )
     wo = Window.partitionBy("l_orderkey")
@@ -308,7 +308,7 @@ def q_pareto_8020(spark: SparkSession, sf_dir: str) -> DataFrame:
         o.join(c, o.o_custkey == c.c_custkey)
         .groupBy(F.col("c_mktsegment").alias("segment"), "o_custkey")
         .agg(
-            F.sum(F.expr("CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)"))
+            F.sum(cents("o_totalprice"))
             .cast("bigint")
             .alias("cents")
         )
@@ -438,7 +438,7 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = t(spark, sf_dir, "orders").select(
         "o_custkey",
         F.col("o_orderdate").cast("date").alias("d"),
-        F.expr("CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)").alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     anchor = o.agg(F.max("d").alias("maxd"))
     cust = (
@@ -522,7 +522,7 @@ def q_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     x = t(spark, sf_dir, "events").select(
         "event_type",
         (F.col("user_id") % 2 == 0).alias("treat"),
-        F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)").alias("cents"),
+        cents("value").alias("cents"),
     )
     d38 = "decimal(38,0)"
     g = x.groupBy("event_type").agg(
@@ -800,7 +800,7 @@ def q_attribution_lasttouch(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         "event_type",
         F.unix_micros("ts").alias("us"),
-        F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)").alias("cents"),
+        cents("value").alias("cents"),
     )
     w = (
         Window.partitionBy("user_id")
@@ -969,7 +969,7 @@ def q_join_spatial_radius(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = t(spark, sf_dir, "events").select(
         F.col("event_id").alias("id"),
         (F.col("user_id") % 1000).alias("x"),
-        F.expr("CAST(ROUND(value * 100, 0) AS BIGINT) % 1000").alias("y"),
+        (cents("value") % 1000).alias("y"),
     ).repartition(spark.sparkContext.defaultParallelism, "id")
     offs = F.expr("explode(flatten(transform(sequence(-1, 1), "
                   "dx -> transform(sequence(-1, 1), dy -> struct(dx, dy)))))")
@@ -1149,7 +1149,7 @@ def q_attribution_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         "event_type",
         F.unix_micros("ts").alias("us"),
-        F.round(F.col("value") * 100, 0).cast("bigint").alias("cents"),
+        cents("value").alias("cents"),
     )
     p = ev.filter(F.col("event_type") == "purchase").select(
         F.col("user_id").alias("p_user"),
@@ -1351,11 +1351,11 @@ def q_geo_point_in_polygon(spark: SparkSession, sf_dir: str) -> DataFrame:
     one keyed shuffle of (event_id)-partials, one 5-row census. At
     100 TB with a REAL polygon table, the edge side is the broadcast
     dimension of q_join_spatial_radius's grid pattern."""
-    pts = t(spark, sf_dir, "events").selectExpr(
+    pts = t(spark, sf_dir, "events").select(
         "event_id",
         "event_type",
-        "user_id % 1000 AS px",
-        "CAST(ROUND(value * 100, 0) AS BIGINT) % 1000 AS py",
+        (F.col("user_id") % 1000).alias("px"),
+        (cents("value") % 1000).alias("py"),
     )
     edges = pts.selectExpr(
         "event_id",
@@ -1467,7 +1467,7 @@ def q_ab_sequential(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.col("ts").cast("date").alias("day"),
         (F.col("user_id") % 2 == 0).alias("treat"),
-        F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)").alias("cents"),
+        cents("value").alias("cents"),
     )
     d38 = "decimal(38,0)"
     daily = x.groupBy("event_type", "day").agg(
@@ -1621,7 +1621,7 @@ def q_alloc_fifo(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ts",
         "event_id",
         "event_type",
-        F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)").alias("cents"),
+        cents("value").alias("cents"),
     )
     w = (
         Window.partitionBy("user_id")

@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..sources.tables import t
+from ..sources.tables import cents, t
 
 
 @register(
@@ -152,14 +152,14 @@ def q_union_by_name(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = c.filter(F.col("c_custkey") % 101 == 0).select(
         F.lit("cust").alias("side"),
         F.col("c_custkey").alias("key"),
-        F.round(F.col("c_acctbal") * 100, 0).cast("bigint").alias("cents"),
+        cents("c_acctbal").alias("cents"),
     )
     supp = (
         s.filter(F.col("s_suppkey") % 11 == 0)
         .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
         .select(
             F.col("n_regionkey").cast("bigint").alias("region_key"),
-            F.round(F.col("s_acctbal") * 100, 0).cast("bigint").alias("cents"),
+            cents("s_acctbal").alias("cents"),
             F.col("s_suppkey").alias("key"),
             F.lit("supp").alias("side"),
         )

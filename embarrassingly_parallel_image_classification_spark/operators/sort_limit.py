@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from ..localframe import pin
 from ..registry import register
-from ..sources.tables import t
+from ..sources.tables import cents, t
 
 
 @register(
@@ -150,7 +150,7 @@ def q_lateral_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(2)
         .select(
             "c_custkey",
-            F.round(F.col("c_acctbal") * 100, 0).cast("bigint").alias("acctbal_cents"),
+            cents("c_acctbal").alias("acctbal_cents"),
         )
     )
     return nat.lateralJoin(sub).select("n_name", "c_custkey", "acctbal_cents")
@@ -263,7 +263,7 @@ def q_agg_equidepth(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie-permutation invariant.) Two narrow fact scans, all other
     frames census- or literal-sized."""
     c = t(spark, sf_dir, "orders").select(
-        F.expr("CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)").alias("cents"),
+        cents("o_totalprice").alias("cents"),
     ).withColumn("bkt", F.expr("cents DIV 100000"))
     blocks = pin(
         c.groupBy("bkt")

@@ -49,7 +49,7 @@ from pyspark.sql import functions as F
 
 from ..localframe import local_df, pin
 from ..registry import register
-from ..sources.tables import t
+from ..sources.tables import cents, t
 
 D38 = "decimal(38,0)"
 
@@ -136,7 +136,7 @@ def _type_cents(spark: SparkSession, sf_dir: str, value: str) -> DataFrame:
     """(g, <value>): every event's type and its value in integer cents."""
     return t(spark, sf_dir, "events").select(
         F.col("event_type").alias("g"),
-        F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)").alias(value),
+        cents("value").alias(value),
     )
 
 
@@ -237,7 +237,7 @@ def _fo_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("o_orderstatus").isin("F", "O"))
         .select(
             F.col("o_orderstatus").alias("st"),
-            F.expr("CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)").alias("v"),
+            cents("o_totalprice").alias("v"),
         )
     )
     return x.groupBy("v").agg(
@@ -292,7 +292,7 @@ def _type_day_sums(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("ts").cast("date").alias("d"),
         )
         .agg(
-            F.sum(F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)"))
+            F.sum(cents("value"))
             .cast("bigint")
             .alias("v")
         )
@@ -476,7 +476,7 @@ def q_stats_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("c_acctbal") >= 0)
         .select(
             F.col("c_mktsegment").alias("seg"),
-            F.expr("CAST(ROUND(c_acctbal * 100, 0) AS BIGINT)").alias("cents"),
+            cents("c_acctbal").alias("cents"),
             "c_custkey",
         )
     )
@@ -658,7 +658,7 @@ def q_ts_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "event_id",
         F.unix_timestamp(F.date_trunc("second", "ts")).alias("sec"),
-        F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)").alias("cents"),
+        cents("value").alias("cents"),
     )
     wrn = Window.partitionBy("user_id").orderBy(
         F.col("sec").desc(), F.col("event_id").desc()
@@ -800,7 +800,7 @@ def q_stats_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     x = t(spark, sf_dir, "events").select(
         "event_type",
         (F.col("user_id") % 2 == 0).alias("treat"),
-        F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)").alias("v"),
+        cents("value").alias("v"),
     )
     per_v = x.groupBy("event_type", "v").agg(
         F.count(F.when(F.col("treat"), 1)).cast("bigint").alias("n1v"),
@@ -958,7 +958,7 @@ def q_stats_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     x = t(spark, sf_dir, "events").select(
         "event_id",
         "event_type",
-        F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)").alias("cents"),
+        cents("value").alias("cents"),
     )
     # The replicate fan-out multiplies per-row work by B; the fixture
     # table is ONE parquet split, which would serialize all B x N md5
@@ -1147,7 +1147,7 @@ def q_stats_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = t(spark, sf_dir, "events").select(
         "event_id",
         F.unix_timestamp(F.date_trunc("second", "ts")).alias("sec"),
-        F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)").alias("cents"),
+        cents("value").alias("cents"),
     )
     med = e.agg(
         F.expr(
@@ -1270,7 +1270,7 @@ def q_stats_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan the census spelling exists to avoid."""
     x = t(spark, sf_dir, "events").select(
         "event_type",
-        F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)").alias("v"),
+        cents("value").alias("v"),
         F.expr(
             "CAST(from_json(props, 'k INT').k AS BIGINT)"
         ).alias("k"),
@@ -1446,11 +1446,9 @@ def q_stats_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     — 4 * 10^6 pairs at sf0.01 and ruinous at any real scale; the
     grid spelling's cost is fixed by the domains alone.
     """
-    x = t(spark, sf_dir, "events").select(
+    x = t(spark, sf_dir, "events").withColumn("c", cents("value")).select(
         F.col("event_type").alias("g"),
-        F.expr(
-            "CAST(ROUND(value * 100, 0) AS BIGINT) div 100"
-        ).alias("v"),
+        F.expr("c div 100").alias("v"),
         F.expr("CAST(from_json(props, 'k INT').k AS BIGINT)").alias("k"),
     )
     cells = pin(
@@ -1859,7 +1857,7 @@ def q_stats_sign_bh(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("CAST(from_json(props, 'k INT').k AS BIGINT)") % 10
         ).alias("g"),
         F.col("ts").cast("date").alias("day"),
-        F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)").alias("cents"),
+        cents("value").alias("cents"),
     )
     # pinned (segment, day) census — 310 rows at any SF; its two
     # consumers (per-segment totals + the sign join) each re-paid the
@@ -2696,7 +2694,7 @@ def q_stats_jonckheere(spark: SparkSession, sf_dir: str) -> DataFrame:
     the grid; one keyed join; 1-row fold."""
     x = t(spark, sf_dir, "orders").select(
         F.col("o_orderpriority").alias("g"),
-        F.expr("CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)").alias("v"),
+        cents("o_totalprice").alias("v"),
     )
     # Census pinned once, marginals derived from it (the q_stats_kendall
     # round-12 rule): unpinned, the fact scan re-ran per consumer (the
@@ -3046,7 +3044,7 @@ def q_ts_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
         t(spark, sf_dir, "events")
         .groupBy(F.col("ts").cast("date").alias("d"))
         .agg(
-            F.sum(F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)"))
+            F.sum(cents("value"))
             .cast("bigint")
             .alias("x")
         )
@@ -5584,13 +5582,9 @@ def q_stats_cohen_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan at 100 TB: ONE map-side-combined 9-cell confusion census,
     two 3-row marginal folds, a scalar cross — the scan is the
     entire cost."""
+    c = cents("o_totalprice")
     rated = t(spark, sf_dir, "orders").select(
-        F.expr(
-            "CASE WHEN CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)"
-            " < 10000000 THEN 0"
-            " WHEN CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)"
-            " < 30000000 THEN 1 ELSE 2 END"
-        ).alias("ra"),
+        F.when(c < 10000000, 0).when(c < 30000000, 1).otherwise(2).alias("ra"),
         F.expr(
             "CASE WHEN SUBSTRING(o_orderpriority, 1, 1) IN ('1', '2')"
             " THEN 2 WHEN SUBSTRING(o_orderpriority, 1, 1) = '3' THEN 1"
@@ -6140,7 +6134,7 @@ def q_stats_partial_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
         t(spark, sf_dir, "events")
         .groupBy(F.col("ts").cast("date").alias("d"))
         .agg(
-            F.sum(F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)"))
+            F.sum(cents("value"))
             .cast("bigint")
             .alias("x"),
             F.count("*").cast("bigint").alias("y"),
@@ -6273,7 +6267,7 @@ def q_stats_point_biserial(spark: SparkSession, sf_dir: str) -> DataFrame:
     x = t(spark, sf_dir, "events").select(
         F.col("event_type").alias("g"),
         F.when(F.col("user_id") % 2 == 0, 1).otherwise(0).alias("treat"),
-        F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)").alias("v"),
+        cents("value").alias("v"),
     )
     grp = x.groupBy("g").agg(
         F.sum("treat").cast(D38).alias("n1"),
@@ -6635,7 +6629,7 @@ def q_stats_mahalanobis(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side."""
     x = t(spark, sf_dir, "events").select(
         F.col("event_type").alias("g"),
-        F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)").alias("cx"),
+        cents("value").alias("cx"),
         F.hour("ts").cast("bigint").alias("cy"),
     )
     model = x.groupBy("g").agg(

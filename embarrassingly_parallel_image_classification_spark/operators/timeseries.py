@@ -6,27 +6,154 @@ that happened to have events).
 Scale shape: the spine is (time-range / granularity) × |types| rows —
 tiny regardless of data volume — so it broadcasts; the only shuffle is
 the per-(hour, type) count of the fact table itself.
+
+Money is integer cents (``tables.cents``). Each family that several
+queries share has one builder: ``_hourly_spine`` (gapfill, ffill),
+``_last_ticks`` and ``_weighted_ticks`` (the last-k tick frame and its
+position-weighted BIGINT dots: ewma, holt, holt_winters; one weight
+list per forecaster feeds both the broadcast frame and the oracle's
+VALUES), and ``_daily_census`` / ``_daily_dollars`` (the (type, day)
+census: sse, mase, decompose, croston). The oracles copy no CTE of
+these families by hand either: ``_SPINE_SQL``, ``_LAST_TICKS_SQL`` and
+``DAILY_DOLLARS_SQL`` are oracle-only fragments.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..localframe import local_df
 from ..registry import register
-from ..sources.tables import t
+from ..sources.tables import cents, t
+from .stats import comoment, moment_census, pearson_r
 
-
-@register(
-    "q_timeseries_gapfill",
-    oracle="""
-    WITH b AS (
+# Oracle-only SQL fragments, one per copied CTE family (the Spark side
+# has its own builders below; oracles share no code with the engine
+# they check). Each starts at its first keyword and ends before the
+# separator that follows it in the oracle.
+_SPINE_SQL = """WITH b AS (
         SELECT date_trunc('hour', MIN(ts)) AS lo, date_trunc('hour', MAX(ts)) AS hi
         FROM events
     ),
     spine AS (SELECT UNNEST(generate_series(lo, hi, INTERVAL 1 HOUR)) AS h FROM b),
-    types AS (SELECT DISTINCT event_type FROM events),
+    types AS (SELECT DISTINCT event_type FROM events)"""
+
+_LAST_TICKS_SQL = """pts AS (
+        SELECT event_type,
+               CAST(ROUND(value * 100, 0) AS BIGINT) AS cents,
+               ROW_NUMBER() OVER (PARTITION BY event_type
+                                  ORDER BY ts DESC, event_id DESC) AS rn
+        FROM events
+    )"""
+
+DAILY_DOLLARS_SQL = """daily AS (
+        SELECT event_type,
+               CAST(ts AS DATE) AS day,
+               CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) // 100
+                    AS BIGINT) AS y
+        FROM events GROUP BY event_type, day
+    )"""
+
+
+def _hourly_spine(ev: DataFrame, agg: Column) -> DataFrame:
+    """The dense hourly spine: every hour from the first event's hour to
+    the last one's (``sequence`` exploded from a 1-row bounds aggregate,
+    so the driver never sees the data), crossed with the broadcast
+    distinct types and left-joined to ``agg`` per (hour, type). Columns:
+    spine_h, spine_type, and agg's column, NULL on a gap hour."""
+    bounds = ev.agg(
+        F.date_trunc("hour", F.min("ts")).alias("lo"),
+        F.date_trunc("hour", F.max("ts")).alias("hi"),
+    )
+    spine = bounds.select(
+        F.explode(F.sequence("lo", "hi", F.expr("INTERVAL 1 HOUR"))).alias("spine_h")
+    )
+    types = ev.select(F.col("event_type").alias("spine_type")).distinct()
+    hourly = ev.groupBy(
+        F.date_trunc("hour", "ts").alias("cnt_h"), F.col("event_type").alias("cnt_type")
+    ).agg(agg)
+    return spine.crossJoin(F.broadcast(types)).join(
+        hourly,
+        (F.col("cnt_h") == F.col("spine_h"))
+        & (F.col("cnt_type") == F.col("spine_type")),
+        "left",
+    )
+
+
+def _last_ticks(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
+    """(event_type, ts, event_id, cents, rn): each type's last ``k``
+    ticks, rn = 1 for the latest by (ts desc, event_id desc) — a total
+    order, so the cut is deterministic under duplicate timestamps. The
+    rank plans as WindowGroupLimit: a per-partition top-k per type
+    before the shuffle."""
+    ev = t(spark, sf_dir, "events").select(
+        "event_type", "ts", "event_id", cents("value").alias("cents")
+    )
+    w = Window.partitionBy("event_type").orderBy(F.desc("ts"), F.desc("event_id"))
+    return ev.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k)
+
+
+def _values_sql(rows: list[tuple]) -> str:
+    """A weight list rendered as the oracle's VALUES rows."""
+    return ", ".join("(" + ", ".join(map(str, r)) + ")" for r in rows)
+
+
+def _weighted_ticks(
+    spark: SparkSession, sf_dir: str, rows: list[tuple], schema: str, dots: dict
+) -> DataFrame:
+    """Per event_type, exact BIGINT dot products of the last k ticks'
+    cents with position weights: ``rows`` holds one (pos, weight, ...)
+    tuple per position 1..k (oldest first; the oracle's VALUES renders
+    the same list), broadcast and joined on pos; ``dots`` maps each
+    output column to its weight expression over those columns. Types
+    with fewer than k ticks are dropped."""
+    k = len(rows)
+    recent = _last_ticks(spark, sf_dir, k).withColumn("pos", k + 1 - F.col("rn"))
+    return (
+        recent.join(F.broadcast(local_df(spark, rows, schema)), "pos")
+        .groupBy("event_type")
+        .agg(
+            F.count("*").cast("bigint").alias("n_ticks"),
+            *[
+                F.sum(F.col("cents") * w).cast("bigint").alias(name)
+                for name, w in dots.items()
+            ],
+        )
+        .filter(F.col("n_ticks") == k)
+    )
+
+
+def _daily_census(spark: SparkSession, sf_dir: str, agg: Column) -> DataFrame:
+    """(event_type, day, agg): one row per (type, calendar day), the
+    events' cents aggregated by ``agg``. The fact table collapses to
+    a calendar-bounded frame (about 30 rows per type at any scale) in
+    one map-side-combined aggregate."""
+    return (
+        t(spark, sf_dir, "events")
+        .select(
+            "event_type",
+            F.col("ts").cast("date").alias("day"),
+            cents("value").alias("cents"),
+        )
+        .groupBy("event_type", "day")
+        .agg(agg)
+    )
+
+
+def _daily_dollars(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(event_type, day, y): each type's daily revenue in whole dollars,
+    the floor of the day's exact cent sum over 100 (non-negative, so
+    Spark's truncating ``div`` and DuckDB's flooring ``//`` agree)."""
+    return _daily_census(
+        spark, sf_dir, F.expr("CAST(SUM(cents) div 100 AS BIGINT)").alias("y")
+    )
+
+
+@register(
+    "q_timeseries_gapfill",
+    oracle=f"""
+    {_SPINE_SQL},
     counts AS (
         SELECT date_trunc('hour', ts) AS h, event_type, COUNT(*) AS n
         FROM events GROUP BY 1, 2
@@ -47,32 +174,11 @@ def q_timeseries_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     hour, max hour) exploded from a 1-row aggregate — driver never sees
     the data; counts shuffle once on (hour, type)."""
     ev = t(spark, sf_dir, "events")
-    hour = F.date_trunc("hour", "ts")
-    bounds = ev.agg(
-        F.date_trunc("hour", F.min("ts")).alias("lo"),
-        F.date_trunc("hour", F.max("ts")).alias("hi"),
-    )
-    spine = bounds.select(
-        F.explode(F.sequence("lo", "hi", F.expr("INTERVAL 1 HOUR"))).alias("spine_h")
-    )
-    types = ev.select(F.col("event_type").alias("spine_type")).distinct()
-    counts = ev.groupBy(hour.alias("cnt_h"), F.col("event_type").alias("cnt_type")).agg(
-        F.count("*").alias("n")
-    )
-    return (
-        spine.crossJoin(F.broadcast(types))
-        .join(
-            counts,
-            (F.col("cnt_h") == F.col("spine_h"))
-            & (F.col("cnt_type") == F.col("spine_type")),
-            "left",
-        )
-        .select(
-            F.unix_timestamp("spine_h").alias("hour_sec"),
-            F.col("spine_type").alias("event_type"),
-            F.coalesce(F.col("n"), F.lit(0).cast("long")).alias("n"),
-            F.col("n").isNull().alias("is_gap"),
-        )
+    return _hourly_spine(ev, F.count("*").alias("n")).select(
+        F.unix_timestamp("spine_h").alias("hour_sec"),
+        F.col("spine_type").alias("event_type"),
+        F.coalesce(F.col("n"), F.lit(0).cast("long")).alias("n"),
+        F.col("n").isNull().alias("is_gap"),
     )
 
 
@@ -213,8 +319,6 @@ def q_scd2_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     user_id with the interval test as a residual — a hash join, never
     a range BNLJ; intervals per user are non-overlapping by
     construction so each fact matches exactly one dim row."""
-    from pyspark.sql import Window
-
     ev = t(spark, sf_dir, "events")
     day = F.date_trunc("day", F.col("ts")).cast("date")
     w_day = Window.partitionBy("user_id", "d").orderBy(
@@ -252,13 +356,8 @@ def q_scd2_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_timeseries_ffill",
-    oracle="""
-    WITH b AS (
-        SELECT date_trunc('hour', MIN(ts)) AS lo, date_trunc('hour', MAX(ts)) AS hi
-        FROM events
-    ),
-    spine AS (SELECT UNNEST(generate_series(lo, hi, INTERVAL 1 HOUR)) AS h FROM b),
-    types AS (SELECT DISTINCT event_type FROM events),
+    oracle=f"""
+    {_SPINE_SQL},
     hourly AS (
         SELECT date_trunc('hour', ts) AS h, event_type,
                CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) AS BIGINT) AS cents
@@ -285,40 +384,17 @@ def q_timeseries_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
     stay NULL on both engines. Totals are integer cents so the carry
     is bit-exact; one window pass per type after a single (hour, type)
     shuffle."""
-    from pyspark.sql import Window
-
     ev = t(spark, sf_dir, "events")
-    hour = F.date_trunc("hour", "ts")
-    bounds = ev.agg(
-        F.date_trunc("hour", F.min("ts")).alias("lo"),
-        F.date_trunc("hour", F.max("ts")).alias("hi"),
-    )
-    spine = bounds.select(
-        F.explode(F.sequence("lo", "hi", F.expr("INTERVAL 1 HOUR"))).alias("spine_h")
-    )
-    types = ev.select(F.col("event_type").alias("spine_type")).distinct()
-    hourly = ev.groupBy(hour.alias("cnt_h"), F.col("event_type").alias("cnt_type")).agg(
-        F.sum(F.round(F.col("value") * 100, 0).cast("bigint")).alias("cents")
-    )
     w = (
         Window.partitionBy("spine_type")
         .orderBy("spine_h")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    return (
-        spine.crossJoin(F.broadcast(types))
-        .join(
-            hourly,
-            (F.col("cnt_h") == F.col("spine_h"))
-            & (F.col("cnt_type") == F.col("spine_type")),
-            "left",
-        )
-        .select(
-            F.unix_timestamp("spine_h").alias("hour_sec"),
-            F.col("spine_type").alias("event_type"),
-            F.col("cents").isNull().alias("is_gap"),
-            F.last("cents", ignorenulls=True).over(w).alias("filled_cents"),
-        )
+    return _hourly_spine(ev, F.sum(cents("value")).alias("cents")).select(
+        F.unix_timestamp("spine_h").alias("hour_sec"),
+        F.col("spine_type").alias("event_type"),
+        F.col("cents").isNull().alias("is_gap"),
+        F.last("cents", ignorenulls=True).over(w).alias("filled_cents"),
     )
 
 
@@ -366,7 +442,7 @@ def q_timeseries_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.date_trunc("hour", "ts").alias("bar"),
         F.struct(F.col("ts"), F.col("event_id")).alias("ord"),
-        F.round(F.col("value") * 100, 0).cast("bigint").alias("cents"),
+        cents("value").alias("cents"),
     )
     return ev.groupBy("event_type", "bar").agg(
         F.min_by("cents", "ord").cast("bigint").alias("open"),
@@ -433,12 +509,10 @@ def q_timeseries_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     a second-moment statistic. One hash aggregate per group + a
     broadcast-joined per-group epoch offset (without the offset, Σx²
     on raw epochs overflows even 128-bit at corpus scale)."""
-    from .stats import comoment, moment_census
-
     ev = t(spark, sf_dir, "events").select(
         "event_type",
         F.unix_timestamp("ts").alias("sec"),
-        F.round(F.col("value") * 100, 0).cast("bigint").alias("cents"),
+        cents("value").alias("cents"),
     )
     base = ev.groupBy("event_type").agg(F.min("sec").alias("sec0"))
     xy = ev.join(F.broadcast(base), "event_type").select(
@@ -511,7 +585,7 @@ def q_anomaly_3sigma(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = t(spark, sf_dir, "events").select(
         "event_id",
         "event_type",
-        F.round(F.col("value") * 100, 0).cast("bigint").alias("c"),
+        cents("value").alias("c"),
     )
     d38 = "decimal(38,0)"
     stats = ev.groupBy("event_type").agg(
@@ -538,14 +612,8 @@ def q_anomaly_3sigma(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # shared with the streaming twin (streaming/queries.py q_stream_ewma):
 # both spellings must land on the identical exact integer statistic
-EWMA_ORACLE = """
-    WITH pts AS (
-        SELECT event_type,
-               CAST(ROUND(value * 100, 0) AS BIGINT) AS cents,
-               ROW_NUMBER() OVER (PARTITION BY event_type
-                                  ORDER BY ts DESC, event_id DESC) AS rn
-        FROM events
-    )
+EWMA_ORACLE = f"""
+    WITH {_LAST_TICKS_SQL}
     SELECT event_type,
            CAST(SUM(cents * CAST(POWER(2, 16 - rn) AS BIGINT)) AS BIGINT)
                AS ewma_num_x2e16,
@@ -575,18 +643,7 @@ def q_timeseries_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     WindowGroupLimit (per-partition top-16 per type BEFORE the
     shuffle), then one hash aggregate — the streaming twin is the
     recursive s_t = (x_t + s_{t-1})/2 update in a stateful operator."""
-    ev = t(spark, sf_dir, "events").select(
-        "event_type",
-        "ts",
-        "event_id",
-        F.round(F.col("value") * 100, 0).cast("bigint").alias("cents"),
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("event_type").orderBy(
-        F.desc("ts"), F.desc("event_id")
-    )
-    recent = ev.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= 16)
+    recent = _last_ticks(spark, sf_dir, 16)
     weight = F.pow(F.lit(2.0), 16 - F.col("rn")).cast("bigint")
     return recent.groupBy("event_type").agg(
         F.sum(F.col("cents") * weight).cast("bigint").alias("ewma_num_x2e16"),
@@ -634,14 +691,12 @@ def q_timeseries_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
     (event_type, hour), so the window's sort reuses the aggregation
     shuffle partitioning; duplicate timestamps get zero weight except
     the last by event_id — deterministic in both engines."""
-    from pyspark.sql import Window
-
     ev = t(spark, sf_dir, "events").select(
         "event_type",
         "ts",
         "event_id",
         F.date_trunc("hour", "ts").alias("h"),
-        F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)").alias("cents"),
+        cents("value").alias("cents"),
     )
     w = Window.partitionBy("event_type", "h").orderBy("ts", "event_id")
     x = ev.withColumn(
@@ -711,7 +766,7 @@ def q_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     x = t(spark, sf_dir, "events").select(
         "event_id",
         "event_type",
-        F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)").alias("cents"),
+        cents("value").alias("cents"),
     )
     med = x.groupBy("event_type").agg(
         F.expr(
@@ -787,8 +842,6 @@ def q_concurrency_peak(spark: SparkSession, sf_dir: str) -> DataFrame:
     window over the SAME partitioning as the running sum (no second
     sort, no broadcast self-join) — the whole query is one fact scan
     and one exchange."""
-    from pyspark.sql import Window
-
     ev = t(spark, sf_dir, "events")
     pts = ev.select(
         "event_type",
@@ -876,7 +929,7 @@ def q_changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "ts",
         "event_id",
-        F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)").alias("cents"),
+        cents("value").alias("cents"),
     )
     by = Window.partitionBy("event_type").orderBy("ts", "event_id")
     whole = Window.partitionBy("event_type")
@@ -1096,7 +1149,7 @@ def q_period_over_period(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("week_idx"),
         )
         .agg(
-            F.sum(F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)"))
+            F.sum(cents("value"))
             .cast("bigint")
             .alias("cents")
         )
@@ -1160,14 +1213,12 @@ def q_timeseries_xcorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact aggregate to (hour, type), a co-keyed self-join on the hour
     (both sides from the same tiny bar frame), one global aggregate.
     Never a row-level join of the two raw series."""
-    from .stats import moment_census, pearson_r
-
     bars = (
         t(spark, sf_dir, "events")
         .filter(F.col("event_type").isin("click", "purchase"))
         .groupBy(F.date_trunc("hour", "ts").alias("hr"), "event_type")
         .agg(
-            F.sum(F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)"))
+            F.sum(cents("value"))
             .cast("bigint")
             .alias("cents")
         )
@@ -1233,7 +1284,7 @@ def q_window_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "ts",
         "event_id",
-        F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)").alias("cents"),
+        cents("value").alias("cents"),
     )
     by = Window.partitionBy("event_type").orderBy("ts", "event_id")
     cum_w = by.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -1291,7 +1342,7 @@ def q_timeseries_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = t(spark, sf_dir, "events").select(
         "event_type",
         F.hour("ts").cast("bigint").alias("hod"),
-        F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)").alias("cents"),
+        cents("value").alias("cents"),
     )
     hh = e.groupBy("event_type", "hod").agg(
         F.count("*").cast("bigint").alias("n"),
@@ -1310,15 +1361,15 @@ def q_timeseries_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _holt_weights() -> tuple[dict[int, int], dict[int, int], int]:
-    """Exact dyadic weights for Holt double-exponential smoothing
-    (level + trend) with alpha = beta = 1/2 over exactly 12 ticks,
-    s_1 = x_1, b_1 = 0: run the recursion symbolically over
-    Fractions; every coefficient's denominator divides 2^22, so
-    scaling by 2^22 makes both statistics exact BIGINT linear
-    combinations of the inputs (level weights sum to exactly 2^22 —
-    a constant series smooths to itself). Shared by the Spark plan
-    and the DuckDB oracle, so no engine ever runs the recursion."""
+def _holt_weights() -> list[tuple[int, int, int]]:
+    """(pos, ws, wb) per input position 1..12: exact dyadic weights for
+    Holt double-exponential smoothing (level + trend) with alpha = beta
+    = 1/2 over exactly 12 ticks, s_1 = x_1, b_1 = 0: run the recursion
+    symbolically over Fractions; every coefficient's denominator divides
+    2^22, so scaling by 2^22 makes both statistics exact BIGINT linear
+    combinations of the inputs (level weights sum to exactly 2^22 — a
+    constant series smooths to itself). Shared by the Spark plan and the
+    DuckDB oracle, so no engine ever runs the recursion."""
     from fractions import Fraction as Fr
 
     k = 12
@@ -1332,31 +1383,19 @@ def _holt_weights() -> tuple[dict[int, int], dict[int, int], int]:
         b = [(sn - si) / 2 + bi / 2 for sn, si, bi in zip(s_new, s, b)]
         s = s_new
     den = 1 << 22
-    ws = {i + 1: int(c * den) for i, c in enumerate(s)}
-    wb = {i + 1: int(c * den) for i, c in enumerate(b)}
-    return ws, wb, den
+    return [
+        (i + 1, int(si * den), int(bi * den)) for i, (si, bi) in enumerate(zip(s, b))
+    ]
 
 
-_HOLT_WS, _HOLT_WB, _HOLT_DEN = _holt_weights()
-
-
-def _holt_values_sql() -> str:
-    return ", ".join(
-        f"({p}, {_HOLT_WS[p]}, {_HOLT_WB[p]})" for p in sorted(_HOLT_WS)
-    )
+_HOLT_ROWS = _holt_weights()
 
 
 @register(
     "q_timeseries_holt",
     oracle=f"""
-    WITH w(pos, ws, wb) AS (VALUES {_holt_values_sql()}),
-    pts AS (
-        SELECT event_type,
-               CAST(ROUND(value * 100, 0) AS BIGINT) AS cents,
-               ROW_NUMBER() OVER (PARTITION BY event_type
-                                  ORDER BY ts DESC, event_id DESC) AS rn
-        FROM events
-    ),
+    WITH w(pos, ws, wb) AS (VALUES {_values_sql(_HOLT_ROWS)}),
+    {_LAST_TICKS_SQL},
     last12 AS (SELECT event_type, cents, 13 - rn AS pos
                FROM pts WHERE rn <= 12)
     SELECT p.event_type,
@@ -1390,43 +1429,13 @@ def q_timeseries_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequential-looking recursion embarrassingly parallel — the
     general lesson for linear recurrences at 100 TB (same move as
     the GD trainer's closed-form iteration)."""
-    ev = t(spark, sf_dir, "events").select(
-        "event_type",
-        "ts",
-        "event_id",
-        F.round(F.col("value") * 100, 0).cast("bigint").alias("cents"),
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("event_type").orderBy(
-        F.desc("ts"), F.desc("event_id")
-    )
-    recent = (
-        ev.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 12)
-        .withColumn("pos", 13 - F.col("rn"))
-    )
-    wdf = local_df(
-        recent.sparkSession,
-        [(p, _HOLT_WS[p], _HOLT_WB[p]) for p in sorted(_HOLT_WS)],
+    ws, wb = F.col("ws"), F.col("wb")
+    return _weighted_ticks(
+        spark,
+        sf_dir,
+        _HOLT_ROWS,
         "pos INT, ws BIGINT, wb BIGINT",
-    )
-    return (
-        recent.join(F.broadcast(wdf), "pos")
-        .groupBy("event_type")
-        .agg(
-            F.count("*").cast("bigint").alias("n_ticks"),
-            F.sum(F.col("cents") * F.col("ws"))
-            .cast("bigint")
-            .alias("level_x2e22"),
-            F.sum(F.col("cents") * F.col("wb"))
-            .cast("bigint")
-            .alias("trend_x2e22"),
-            F.sum(F.col("cents") * (F.col("ws") + F.col("wb")))
-            .cast("bigint")
-            .alias("forecast_x2e22"),
-        )
-        .filter(F.col("n_ticks") == 12)
+        {"level_x2e22": ws, "trend_x2e22": wb, "forecast_x2e22": ws + wb},
     )
 
 
@@ -1489,8 +1498,6 @@ def q_timeseries_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     lag expansion is a map-side 6-way explode OF THE BAR FRAME (never
     the fact table), self-equi-joined on (type, hour+lag) — bar-domain
     keyed, fact rows never join; one aggregate to type x lag rows."""
-    from .stats import moment_census, pearson_r
-
     bars = (
         t(spark, sf_dir, "events")
         .groupBy(
@@ -1501,9 +1508,7 @@ def q_timeseries_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("h"),
         )
         .agg(
-            F.sum(F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)")).alias(
-                "cents"
-            )
+            F.sum(cents("value")).alias("cents")
         )
     )
     lagged = bars.select(
@@ -1530,19 +1535,13 @@ def q_timeseries_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("lag").cast("bigint").alias("lag"),
         F.col("n").cast("bigint").alias("n_pairs"),
         pearson_r().alias("acf"),
-    ).orderBy("event_type", "lag")
+    )
 
 
 @register(
     "q_ts_changepoint_sse",
-    oracle="""
-    WITH daily AS (
-        SELECT event_type,
-               CAST(ts AS DATE) AS day,
-               CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) // 100
-                    AS BIGINT) AS y
-        FROM events GROUP BY event_type, day
-    ),
+    oracle=f"""
+    WITH {DAILY_DOLLARS_SQL},
     pre AS (
         SELECT event_type, day, y,
                CAST(SUM(y) OVER w AS DECIMAL(38,0)) AS s1,
@@ -1601,18 +1600,7 @@ def q_ts_changepoint_sse(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact table is scanned once. The naive spelling recomputes two
     variances per candidate split (O(days^2) passes); prefix sums make
     every candidate's gain fall out of ONE cumulative window."""
-    daily = (
-        t(spark, sf_dir, "events")
-        .groupBy(
-            "event_type", F.col("ts").cast("date").alias("day")
-        )
-        .agg(
-            F.expr(
-                "CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) div 100 "
-                "AS BIGINT)"
-            ).alias("y")
-        )
-    )
+    daily = _daily_dollars(spark, sf_dir)
     wcum = (
         Window.partitionBy("event_type")
         .orderBy("day")
@@ -1654,7 +1642,6 @@ def q_ts_changepoint_sse(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n2").cast("bigint").alias("n_right"),
             "gain_floor",
         )
-        .orderBy("event_type")
     )
 
 
@@ -1669,13 +1656,7 @@ MASE_PERIOD = 7
 @register(
     "q_ts_backtest_mase",
     oracle=f"""
-    WITH daily AS (
-        SELECT event_type,
-               CAST(ts AS DATE) AS day,
-               CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) // 100
-                    AS BIGINT) AS y
-        FROM events GROUP BY event_type, day
-    ),
+    WITH {DAILY_DOLLARS_SQL},
     r AS (
         SELECT event_type, day, y,
                ROW_NUMBER() OVER (PARTITION BY event_type
@@ -1728,16 +1709,7 @@ def q_ts_backtest_mase(spark: SparkSession, sf_dir: str) -> DataFrame:
     the evaluation harness the Holt trainer (q_timeseries_holt) plugs
     into: any forecaster that emits y_hat joins the same scoring
     frame.""".format(h=MASE_HORIZON, p=MASE_PERIOD)
-    daily = (
-        t(spark, sf_dir, "events")
-        .groupBy("event_type", F.col("ts").cast("date").alias("day"))
-        .agg(
-            F.expr(
-                "CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) div 100 "
-                "AS BIGINT)"
-            ).alias("y")
-        )
-    )
+    daily = _daily_dollars(spark, sf_dir)
     wo = Window.partitionBy("event_type").orderBy("day")
     wall = Window.partitionBy("event_type")
     r = daily.select(
@@ -1790,7 +1762,7 @@ def q_ts_backtest_mase(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("err_num") * F.col("scale_n")
             < F.lit(h) * F.col("scale_num")
         ).alias("beats_naive"),
-    ).orderBy("event_type")
+    )
 
 
 def _hw_weights() -> tuple[list, list, dict, int]:
@@ -1844,34 +1816,18 @@ def _hw_weights() -> tuple[list, list, dict, int]:
 
 
 _HW_WS, _HW_WB, _HW_WC, _HW_DEN = _hw_weights()
-
-
-def _hw_values_sql() -> str:
-    rows = []
-    for i in range(16):
-        # forecast weights: f_h = s + h*b + c[(h-1) % 4]
-        wf = [
-            _HW_WS[i] + h * _HW_WB[i] + _HW_WC[(h - 1) % 4][i]
-            for h in (1, 2, 3, 4)
-        ]
-        rows.append(
-            f"({i + 1}, {_HW_WS[i]}, {_HW_WB[i]}, "
-            f"{wf[0]}, {wf[1]}, {wf[2]}, {wf[3]})"
-        )
-    return ", ".join(rows)
+# (pos, ws, wb, wf1..wf4) per position; forecast weights f_h = s + h*b + c[(h-1) % 4]
+_HW_ROWS = [
+    (i + 1, ws, wb, *(ws + h * wb + _HW_WC[(h - 1) % 4][i] for h in (1, 2, 3, 4)))
+    for i, (ws, wb) in enumerate(zip(_HW_WS, _HW_WB))
+]
 
 
 @register(
     "q_timeseries_holt_winters",
     oracle=f"""
-    WITH w(pos, ws, wb, wf1, wf2, wf3, wf4) AS (VALUES {_hw_values_sql()}),
-    pts AS (
-        SELECT event_type,
-               CAST(ROUND(value * 100, 0) AS BIGINT) AS cents,
-               ROW_NUMBER() OVER (PARTITION BY event_type
-                                  ORDER BY ts DESC, event_id DESC) AS rn
-        FROM events
-    ),
+    WITH w(pos, ws, wb, wf1, wf2, wf3, wf4) AS (VALUES {_values_sql(_HW_ROWS)}),
+    {_LAST_TICKS_SQL},
     last16 AS (SELECT event_type, cents, 17 - rn AS pos
                FROM pts WHERE rn <= 16)
     SELECT p.event_type,
@@ -1915,55 +1871,14 @@ def q_timeseries_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     what makes a sequential-looking LINEAR recurrence embarrassingly
     parallel at 100 TB (seasonality adds state width m, not
     sequential depth)."""
-    ev = t(spark, sf_dir, "events").select(
-        "event_type",
-        "ts",
-        "event_id",
-        F.round(F.col("value") * 100, 0).cast("bigint").alias("cents"),
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("event_type").orderBy(
-        F.desc("ts"), F.desc("event_id")
-    )
-    recent = (
-        ev.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 16)
-        .withColumn("pos", 17 - F.col("rn"))
-    )
-    wrows = []
-    for i in range(16):
-        wf = [
-            _HW_WS[i] + h * _HW_WB[i] + _HW_WC[(h - 1) % 4][i]
-            for h in (1, 2, 3, 4)
-        ]
-        wrows.append((i + 1, _HW_WS[i], _HW_WB[i], *wf))
-    wdf = local_df(
-        recent.sparkSession,
-        wrows,
-        "pos INT, ws BIGINT, wb BIGINT, wf1 BIGINT, wf2 BIGINT,"
-        " wf3 BIGINT, wf4 BIGINT",
-    )
-    return (
-        recent.join(F.broadcast(wdf), "pos")
-        .groupBy("event_type")
-        .agg(
-            F.count("*").cast("bigint").alias("n_ticks"),
-            *[
-                F.sum(F.col("cents") * F.col(c))
-                .cast("bigint")
-                .alias(f"{name}_x2e24")
-                for c, name in (
-                    ("ws", "level"),
-                    ("wb", "trend"),
-                    ("wf1", "f1"),
-                    ("wf2", "f2"),
-                    ("wf3", "f3"),
-                    ("wf4", "f4"),
-                )
-            ],
-        )
-        .filter(F.col("n_ticks") == 16)
+    cols = ("ws", "wb", "wf1", "wf2", "wf3", "wf4")
+    names = ("level", "trend", "f1", "f2", "f3", "f4")
+    return _weighted_ticks(
+        spark,
+        sf_dir,
+        _HW_ROWS,
+        "pos INT, " + ", ".join(f"{c} BIGINT" for c in cols),
+        {f"{n}_x2e24": F.col(c) for c, n in zip(cols, names)},
     )
 
 
@@ -2026,23 +1941,14 @@ def q_timeseries_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     the centered MA is ONE ROWS-framed window over that tiny frame and
     the seasonal profile one more bounded groupBy — 100x more events
     never changes a post-census row count."""
-    daily = (
-        t(spark, sf_dir, "events")
-        .select(
-            F.col("event_type").alias("g"),
-            F.col("ts").cast("date").alias("d"),
-            F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)").alias("cents"),
-        )
-        .groupBy("g", "d")
-        .agg(F.sum("cents").cast("bigint").alias("v"))
-    )
-    wseq = Window.partitionBy("g").orderBy("d")
+    daily = _daily_census(spark, sf_dir, F.sum("cents").cast("bigint").alias("v"))
+    wseq = Window.partitionBy("event_type").orderBy("day")
     wma = wseq.rowsBetween(-3, 3)
-    wall = Window.partitionBy("g")
+    wall = Window.partitionBy("event_type")
     seq = daily.select(
-        "g",
+        "event_type",
         (
-            F.datediff(F.col("d"), F.lit("1970-01-01").cast("date")).cast(
+            F.datediff(F.col("day"), F.lit("1970-01-01").cast("date")).cast(
                 "bigint"
             )
             % 7
@@ -2054,24 +1960,12 @@ def q_timeseries_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     detr = seq.filter(
         (F.col("rn") >= 4) & (F.col("rn") <= F.col("n") - 3)
-    ).select("g", "dow", (7 * F.col("v") - F.col("trend_x7")).alias("detr_x7"))
-    return (
-        detr.groupBy("g", "dow")
-        .agg(
-            F.count("*").cast("bigint").alias("n_obs"),
-            F.sum("detr_x7").cast("bigint").alias("seasonal_sum_x7"),
-            F.min("detr_x7").cast("bigint").alias("min_detr_x7"),
-            F.max("detr_x7").cast("bigint").alias("max_detr_x7"),
-        )
-        .select(
-            F.col("g").alias("event_type"),
-            F.col("dow").cast("bigint").alias("dow"),
-            "n_obs",
-            "seasonal_sum_x7",
-            "min_detr_x7",
-            "max_detr_x7",
-        )
-        .orderBy("event_type", "dow")
+    ).select("event_type", "dow", (7 * F.col("v") - F.col("trend_x7")).alias("detr_x7"))
+    return detr.groupBy("event_type", "dow").agg(
+        F.count("*").cast("bigint").alias("n_obs"),
+        F.sum("detr_x7").cast("bigint").alias("seasonal_sum_x7"),
+        F.min("detr_x7").cast("bigint").alias("min_detr_x7"),
+        F.max("detr_x7").cast("bigint").alias("max_detr_x7"),
     )
 
 
@@ -2148,35 +2042,17 @@ def q_timeseries_croston(spark: SparkSession, sf_dir: str) -> DataFrame:
     (map-side combined, calendar-bounded), one LAG + one top-13
     window over the ~30-row-per-type nonzero frame (WindowGroupLimit
     prunes before the shuffle), one 5-row dot-product aggregate."""
-    daily = (
-        t(spark, sf_dir, "events")
-        .groupBy(
-            F.col("event_type"),
-            F.col("ts").cast("date").alias("d"),
-        )
-        .agg(
-            F.sum(
-                F.when(
-                    F.expr("CAST(ROUND(value * 100, 0) AS BIGINT) % 20")
-                    == 0,
-                    1,
-                ).otherwise(0)
-            )
-            .cast("bigint")
-            .alias("z")
-        )
-    )
-    from pyspark.sql import Window as W
-
-    wlag = W.partitionBy("event_type").orderBy("d")
-    wdesc = W.partitionBy("event_type").orderBy(F.desc("d"))
+    z = F.sum(F.when(F.col("cents") % 20 == 0, 1).otherwise(0)).cast("bigint")
+    daily = _daily_census(spark, sf_dir, z.alias("z"))
+    wlag = Window.partitionBy("event_type").orderBy("day")
+    wdesc = Window.partitionBy("event_type").orderBy(F.desc("day"))
     nz = (
         daily.filter(F.col("z") > 0)
         .select(
             "event_type",
-            "d",
+            "day",
             "z",
-            F.datediff(F.col("d"), F.lag("d").over(wlag))
+            F.datediff(F.col("day"), F.lag("day").over(wlag))
             .cast("bigint")
             .alias("gap"),
         )
@@ -2186,7 +2062,7 @@ def q_timeseries_croston(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("rn") <= 12) & F.col("gap").isNotNull()
     ).withColumn(
         "n",
-        F.count("*").over(W.partitionBy("event_type")).cast("bigint"),
+        F.count("*").over(Window.partitionBy("event_type")).cast("bigint"),
     )
     wexpr = (
         "(CASE WHEN n - rn + 1 = 1 THEN CAST(1 AS BIGINT)"
@@ -2212,5 +2088,4 @@ def q_timeseries_croston(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("sba_rate_e6"),
         )
-        .orderBy("event_type")
     )

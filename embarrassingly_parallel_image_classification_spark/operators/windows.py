@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..sources.tables import t
+from ..sources.tables import cents, t
 
 
 @register(
@@ -148,11 +148,11 @@ def q_window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     in last-ulp summation order, and even an exact double average hits
     round-half ties where Spark (half-up) and DuckDB (half-even)
     disagree — both were round-1/round-2 driver reds."""
-    cents = F.round(F.col("o_totalprice") * 100, 0).cast("bigint")
+    c = cents("o_totalprice")
     w = Window.orderBy("cents").rangeBetween(-100_000, 100_000)
     return (
         t(spark, sf_dir, "orders")
-        .select("o_orderkey", "o_totalprice", cents.alias("cents"))
+        .select("o_orderkey", "o_totalprice", c.alias("cents"))
         .select(
             "o_orderkey",
             "o_totalprice",
@@ -369,7 +369,7 @@ def q_window_time_range(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         "user_id",
         F.unix_timestamp(F.date_trunc("second", "ts")).alias("sec"),
-        F.round(F.col("value") * 100, 0).cast("bigint").alias("cents"),
+        cents("value").alias("cents"),
     )
     w = Window.partitionBy("user_id").orderBy("sec").rangeBetween(-3600, 0)
     return e.select(
@@ -415,9 +415,9 @@ def q_window_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows share one (event_type) shuffle and one sort. Values in
     integer cents; ties ordered by event_id — deterministic in both
     engines."""
-    cents = F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)")
+    c = cents("value")
     ev = t(spark, sf_dir, "events").select(
-        "event_id", "event_type", "ts", cents.alias("cents")
+        "event_id", "event_type", "ts", c.alias("cents")
     )
     w5 = (
         Window.partitionBy("event_type")
@@ -491,7 +491,7 @@ def q_window_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "ts",
         "event_id",
-        F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)").alias("cents"),
+        cents("value").alias("cents"),
     )
     tw = (
         Window.partitionBy("event_type")
@@ -568,7 +568,7 @@ def q_window_cume_nth(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = t(spark, sf_dir, "orders").select(
         F.col("o_orderpriority").alias("grp"),
         F.col("o_orderkey").alias("id"),
-        F.expr("CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)").alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     full = (
         Window.partitionBy("grp")
@@ -649,7 +649,7 @@ def q_window_rolling_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "ts",
         F.row_number().over(w_ord).cast("bigint").alias("x"),
-        F.round(F.col("value") * 100, 0).cast("bigint").alias("y"),
+        cents("value").alias("y"),
     )
     # frame ordered by the SAME keys as the row_number pass — x is a
     # bijection of (ts, event_id) within the partition, and matching

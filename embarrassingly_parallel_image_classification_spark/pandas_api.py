@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .registry import register
-from .sources.tables import t
+from .sources.tables import cents, t
 
 
 @register(
@@ -182,7 +182,7 @@ def q_ps_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = t(spark, sf_dir, "events").select(
         "event_id",
         "event_type",
-        F.round(F.col("value") * 100, 0).cast("bigint").alias("cents"),
+        cents("value").alias("cents"),
     )
     ps = e.pandas_api(index_col="event_id").sort_index()
     out = (

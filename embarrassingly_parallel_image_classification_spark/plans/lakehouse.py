@@ -120,7 +120,7 @@ from pyspark.sql import functions as F
 
 from ..localframe import local_df, pin
 from ..registry import register
-from ..sources.tables import t
+from ..sources.tables import cents, t
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -1319,7 +1319,7 @@ def q_lake_snapshots(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(path, ignore_errors=True)
     orders = t(spark, sf_dir, "orders").select(
         "o_orderkey",
-        F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     snapshot_write(orders.filter(F.col("o_orderkey") % 2 == 0), path, "append")
     snapshot_write(orders.filter(F.col("o_orderkey") % 2 == 1), path, "append")
@@ -1510,7 +1510,7 @@ def q_lake_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(path, ignore_errors=True)
     orders = t(spark, sf_dir, "orders").select(
         "o_orderkey",
-        F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     snapshot_write(orders.filter(F.col("o_orderkey") % 3 != 0), path, "append")
     source = orders.filter(F.col("o_orderkey") % 2 == 0).select(
@@ -1632,7 +1632,7 @@ def q_lake_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = events_stream(spark, sf_dir).select(
         "event_id",
         "event_type",
-        F.round(F.col("value") * 100, 0).cast("bigint").alias("cents"),
+        cents("value").alias("cents"),
     )
     stream_ingest(ev, path)
     # replay: fresh checkpoint ⇒ the same batches arrive again with the
@@ -1641,7 +1641,7 @@ def q_lake_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev2 = events_stream(spark, sf_dir).select(
         "event_id",
         "event_type",
-        F.round(F.col("value") * 100, 0).cast("bigint").alias("cents"),
+        cents("value").alias("cents"),
     )
     stream_ingest(ev2, path)
     back = snapshot_read(spark, path)
@@ -1680,7 +1680,7 @@ def q_lake_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = t(spark, sf_dir, "orders").select(
         "o_orderkey",
         F.col("o_orderpriority").alias("priority"),
-        F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
 
     def agg_of(df: DataFrame) -> DataFrame:
@@ -2078,11 +2078,11 @@ def q_lake_multi_table_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(root, ignore_errors=True)
     ord_ = t(spark, sf_dir, "orders").select(
         "o_orderkey",
-        F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     li = t(spark, sf_dir, "lineitem").select(
         "l_orderkey",
-        F.round(F.col("l_extendedprice") * 100, 0).cast("bigint").alias("cents"),
+        cents("l_extendedprice").alias("cents"),
     )
     for half in (0, 1):
         multi_table_commit(
@@ -2150,7 +2150,7 @@ def q_lake_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshot_write(
         orders.filter(F.col("o_orderkey") % 2 == 1).select(
             "o_orderkey",
-            F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("cents"),
+            cents("o_totalprice").alias("cents"),
         ),
         path,
         "append",
@@ -2201,7 +2201,7 @@ def q_lake_null_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = t(spark, sf_dir, "orders").select(
         "o_orderkey",
         F.when(F.col("o_orderkey") % 4 == 0, F.lit(None))
-        .otherwise(F.round(F.col("o_totalprice") * 100, 0).cast("bigint"))
+        .otherwise(cents("o_totalprice"))
         .alias("cents"),
     )
     for q in range(4):
@@ -2341,7 +2341,7 @@ def q_lake_stream_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
         typed = batch_df.select(
             "event_id",
             "event_type",
-            F.round(F.col("value") * 100, 0).cast("bigint").alias("cents"),
+            cents("value").alias("cents"),
         )
         return {
             "purchases": typed.filter(F.col("event_type") == "purchase"),
@@ -2456,7 +2456,7 @@ def q_lake_default_column(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(path, ignore_errors=True)
     orders = t(spark, sf_dir, "orders").select(
         "o_orderkey",
-        F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     snapshot_write(orders.filter(F.col("o_orderkey") % 2 == 0), path, "append")
     add_column_default(path, "channel", "string", "web")
@@ -2508,7 +2508,7 @@ def q_lake_column_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(path, ignore_errors=True)
     orders = t(spark, sf_dir, "orders").select(
         "o_orderkey",
-        F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("o_cents"),
+        cents("o_totalprice").alias("o_cents"),
     )
     snapshot_write(orders.filter(F.col("o_orderkey") % 2 == 0), path, "append")
     rename_column(path, "o_cents", "price_cents")
@@ -2638,7 +2638,7 @@ def q_lake_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = t(spark, sf_dir, "orders").select(
         "o_orderkey",
         F.col("o_orderpriority").alias("priority"),
-        F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     snapshot_write(orders.filter(F.col("o_orderkey") % 2 == 0), path, "append")
     snapshot_write(orders.filter(F.col("o_orderkey") % 2 == 1), path, "append")
@@ -2901,7 +2901,7 @@ def q_lake_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = t(spark, sf_dir, "events").select(
         (F.col("user_id") % 256).alias("u"),
         F.expr("CAST(FLOOR(ABS(value)) AS BIGINT) % 256").alias("v"),
-        F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)").alias("cents"),
+        cents("value").alias("cents"),
         "event_id",
     )
     snapshot_write(ev.repartition(8, "event_id"), path, "append", stats_col=["u", "v"])
@@ -3153,7 +3153,7 @@ def q_lake_erase(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey",
         "o_custkey",
         "o_orderpriority",
-        F.expr("CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)").alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     snapshot_write(o.filter(F.col("o_orderkey") % 2 == 0), path, "append")
     snapshot_write(o.filter(F.col("o_orderkey") % 2 == 1), path, "append")
@@ -3257,7 +3257,7 @@ def q_lake_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(dst, ignore_errors=True)
     orders = t(spark, sf_dir, "orders").select(
         "o_orderkey",
-        F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     snapshot_write(orders.filter(F.col("o_orderkey") % 2 == 0), src, "append")
     snapshot_write(orders.filter(F.col("o_orderkey") % 2 == 1), src, "append")
@@ -3381,7 +3381,7 @@ def q_lake_stream_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             "user_id",
             F.unix_micros("ts").alias("us"),
             "event_id",
-            F.round(F.col("value") * 100, 0).cast("bigint").alias("cents"),
+            cents("value").alias("cents"),
         )
         .limit(0)
     )
@@ -3397,7 +3397,7 @@ def q_lake_stream_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         F.unix_micros("ts").alias("us"),
         "event_id",
-        F.round(F.col("value") * 100, 0).cast("bigint").alias("cents"),
+        cents("value").alias("cents"),
     )
     q = (
         ev.writeStream.foreachBatch(apply_batch)
@@ -3482,7 +3482,7 @@ def q_lake_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(path, ignore_errors=True)
     orders = t(spark, sf_dir, "orders").select(
         "o_orderkey",
-        F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     snapshot_write(orders.filter(F.col("o_orderkey") % 2 == 0), path, "append")
     snapshot_write(orders, path, "overwrite")
@@ -3544,7 +3544,7 @@ def q_lake_write_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(dead, ignore_errors=True)
     src = t(spark, sf_dir, "orders").select(
         "o_orderkey",
-        F.expr("CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)").alias("cents"),
+        cents("o_totalprice").alias("cents"),
         "o_orderpriority",
     )
     rule = (F.col("cents") > 0) & (F.col("o_orderkey") % 97 != 0)
@@ -3656,7 +3656,7 @@ def q_lake_incremental_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = t(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_custkey",
-        F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     cust = t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
 
@@ -3785,7 +3785,7 @@ def q_lake_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("d"),
         F.expr("month(o_orderdate)").alias("m"),
-        F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("cents"),
+        cents("o_totalprice").alias("cents"),
         "o_orderdate",
     )
     q1 = o.filter(
@@ -3932,7 +3932,7 @@ def q_lake_branch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(bpath, ignore_errors=True)
     o = t(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("k"),
-        F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     snapshot_write(o.filter(F.col("k") % 2 == 0), path, "append")
     create_branch(path, "etl")
@@ -4008,7 +4008,7 @@ def q_lake_merge_when(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(path, ignore_errors=True)
     o = t(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("k"),
-        F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     snapshot_write(o, path, "append")
     source = o.filter(F.col("k") % 2 == 0).select("k", F.lit(0).cast("bigint").alias("cents")).unionAll(
@@ -4084,7 +4084,7 @@ def q_lake_merge_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(path, ignore_errors=True)
     o = t(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("k"),
-        F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     snapshot_write(o, path, "append")
     source = o.filter(F.col("k") % 2 == 0).select(
@@ -4145,7 +4145,7 @@ def q_lake_history_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(path, ignore_errors=True)
     orders = t(spark, sf_dir, "orders").select(
         "o_orderkey",
-        F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     even = orders.filter(F.col("o_orderkey") % 2 == 0).coalesce(1)
     odd = orders.filter(F.col("o_orderkey") % 2 == 1).coalesce(1)
@@ -4246,7 +4246,7 @@ def q_lake_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(path, ignore_errors=True)
     pts = t(spark, sf_dir, "orders").select(
         "o_orderkey",
-        F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     v1, v2 = _mutation_versions(pts)
     snapshot_write(v1, path, "append")
@@ -4315,7 +4315,7 @@ def q_lake_replicate(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(dst_path, ignore_errors=True)
     pts = t(spark, sf_dir, "orders").select(
         "o_orderkey",
-        F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     v1, v2 = _mutation_versions(pts)
     v3 = v2.filter(F.col("o_orderkey") % 9 != 0).select(
@@ -4443,7 +4443,7 @@ def q_lake_generated_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(path, ignore_errors=True)
     orders = t(spark, sf_dir, "orders").select(
         "o_orderkey",
-        F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("cents"),
+        cents("o_totalprice").alias("cents"),
         F.col("o_orderdate"),
     )
     year_expr = "CAST(year(CAST(o_orderdate AS DATE)) AS BIGINT)"
@@ -4524,7 +4524,7 @@ def q_lake_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(path, ignore_errors=True)
     orders = t(spark, sf_dir, "orders").select(
         "o_orderkey",
-        F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     empty = orders.withColumn(
         "row_id", F.lit(None).cast("bigint")
@@ -4615,7 +4615,7 @@ def q_lake_check_constraint(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_totalprice") > 0
     ).select(
         "o_orderkey",
-        F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     snapshot_write(orders.filter(F.col("o_orderkey") % 2 == 0), path, "append")
     add_check_constraint(spark, path, "positive_cents", "cents > 0")

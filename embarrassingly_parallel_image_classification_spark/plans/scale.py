@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from ..localframe import local_df
 from ..registry import register
-from ..sources.tables import t
+from ..sources.tables import cents, t
 
 
 BLOOM_BITS = 1 << 17  # 128 Ki bits = 2048 longs — fine as a broadcast literal
@@ -338,7 +338,7 @@ def q_scale_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = t(spark, sf_dir, "events").select(
         "event_id",
         "event_type",
-        F.round(F.col("value") * 100, 0).cast("bigint").alias("cents"),
+        cents("value").alias("cents"),
     )
     ev.repartition(64).write.mode("overwrite").parquet(frag)
     spark.read.parquet(frag).repartition(4).write.mode("overwrite").parquet(compact)
@@ -404,7 +404,7 @@ def q_mv_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = t(spark, sf_dir, "orders").select(
         "o_orderpriority",
         F.date_trunc("month", "o_orderdate").alias("month"),
-        F.expr("CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)").alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     (
         o.groupBy("o_orderpriority", "month")

@@ -10,11 +10,11 @@ shape). Scale notes per query in the docstrings.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..sources.tables import t
+from ..sources.tables import cents, t
 
 
 @register(
@@ -153,14 +153,6 @@ def q_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _cents(col: str) -> Column:
-    """Exact integer cents from a 2-decimal money double. Money sums run
-    on BIGINT cents so every partial-sum order is exact — double sums
-    diverge last-ulp between engines (round-1 lesson; the fixture's
-    money columns are verified 2-decimal)."""
-    return F.round(F.col(col) * 100, 0).cast("bigint")
-
-
 @register(
     "q_tpch_q6",
     oracle="""
@@ -190,7 +182,7 @@ def q_tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("l_quantity") < 24)
         )
         .agg(
-            (F.sum(_cents("l_extendedprice") * _cents("l_discount")) / F.lit(10000.0)).alias(
+            (F.sum(cents("l_extendedprice") * cents("l_discount")) / F.lit(10000.0)).alias(
                 "revenue"
             ),
             F.count("*").alias("n"),
@@ -225,7 +217,7 @@ def q_tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_shipdate").cast("date") < F.lit("1997-10-01").cast("date"))
     )
     p = F.broadcast(t(spark, sf_dir, "part").select("p_partkey", "p_type"))
-    rev = _cents("l_extendedprice") * (F.lit(100) - _cents("l_discount"))
+    rev = cents("l_extendedprice") * (F.lit(100) - cents("l_discount"))
     return (
         li.join(p, F.col("l_partkey") == F.col("p_partkey"))
         .select(rev.alias("rev"), "p_type")
@@ -326,7 +318,7 @@ def q_tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
         & F.col("p_size").between(1, 35)
         & F.col("l_quantity").between(20, 30)
     )
-    rev = _cents("l_extendedprice") * (F.lit(100) - _cents("l_discount"))
+    rev = cents("l_extendedprice") * (F.lit(100) - cents("l_discount"))
     return (
         li.join(p, F.col("p_partkey") == F.col("l_partkey"))
         .filter(cond)

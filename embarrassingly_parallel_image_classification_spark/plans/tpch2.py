@@ -33,8 +33,7 @@ from pyspark.sql import functions as F
 
 from ..localframe import local_df
 from ..registry import register
-from ..sources.tables import t
-from .tpch import _cents
+from ..sources.tables import cents, t
 
 
 def _qty(colname: str = "l_quantity"):
@@ -191,7 +190,7 @@ def q_tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair = (
         (F.col("supp_nation") == "NATION_1") & (F.col("cust_nation") == "NATION_2")
     ) | ((F.col("supp_nation") == "NATION_2") & (F.col("cust_nation") == "NATION_1"))
-    rev_e4 = _cents("l_extendedprice") * (F.lit(100) - _cents("l_discount"))
+    rev_e4 = cents("l_extendedprice") * (F.lit(100) - cents("l_discount"))
     return (
         li.join(o, F.col("o_orderkey") == F.col("l_orderkey"))
         .join(c, F.col("c_custkey") == F.col("o_custkey"))
@@ -264,7 +263,7 @@ def q_tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("supp_nation")
         )
     )
-    rev_e4 = _cents("l_extendedprice") * (F.lit(100) - _cents("l_discount"))
+    rev_e4 = cents("l_extendedprice") * (F.lit(100) - cents("l_discount"))
     flat = (
         li.join(p, F.col("p_partkey") == F.col("l_partkey"))
         .join(o, F.col("o_orderkey") == F.col("l_orderkey"))
@@ -328,9 +327,9 @@ def q_tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = t(spark, sf_dir, "supplier")
     o = t(spark, sf_dir, "orders")
     n = F.broadcast(t(spark, sf_dir, "nation"))
-    profit_e4 = _cents("l_extendedprice") * (
-        F.lit(100) - _cents("l_discount")
-    ) - _cents("p_retailprice") * _qty() * F.lit(100)
+    profit_e4 = cents("l_extendedprice") * (
+        F.lit(100) - cents("l_discount")
+    ) - cents("p_retailprice") * _qty() * F.lit(100)
     return (
         li.join(p, F.col("p_partkey") == F.col("l_partkey"))
         .join(s, F.col("s_suppkey") == F.col("l_suppkey"))
@@ -378,9 +377,9 @@ def q_tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(s, F.col("s_suppkey") == F.col("l_suppkey"))
         .join(n, F.col("n_nationkey") == F.col("s_nationkey"))
         .groupBy("n_name")
-        .agg(F.sum(_cents("l_extendedprice")).alias("value_c"))
+        .agg(F.sum(cents("l_extendedprice")).alias("value_c"))
     )
-    total = li.agg(F.sum(_cents("l_extendedprice")).alias("total_c"))
+    total = li.agg(F.sum(cents("l_extendedprice")).alias("total_c"))
     return (
         nv.crossJoin(F.broadcast(total))
         .filter(F.lit(20) * F.col("value_c") > F.col("total_c"))
@@ -487,7 +486,7 @@ def q_tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_shipdate").cast("date") >= F.lit("1997-01-01").cast("date"))
         & (F.col("l_shipdate").cast("date") < F.lit("1997-04-01").cast("date"))
     )
-    rev_e4 = _cents("l_extendedprice") * (F.lit(100) - _cents("l_discount"))
+    rev_e4 = cents("l_extendedprice") * (F.lit(100) - cents("l_discount"))
     rev = li.groupBy("l_suppkey").agg(F.sum(rev_e4).alias("total_e4"))
     mx = rev.agg(F.max("total_e4").alias("mx"))
     s = t(spark, sf_dir, "supplier")
@@ -573,7 +572,7 @@ def q_tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(pa, F.col("pa_partkey") == F.col("l_partkey"))
         .filter(F.lit(5) * _qty() * F.col("n") < F.col("sum_qty"))
         .agg(
-            (F.sum(_cents("l_extendedprice")) / F.lit(100.0) / F.lit(7.0)).alias(
+            (F.sum(cents("l_extendedprice")) / F.lit(100.0) / F.lit(7.0)).alias(
                 "avg_yearly"
             )
         )
@@ -732,7 +731,7 @@ def q_tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
     urgent orders specifically to keep the anti-join non-trivial."""
     c = t(spark, sf_dir, "customer")
     pos = c.filter(F.col("c_acctbal") > 0.0).agg(
-        F.sum(_cents("c_acctbal")).alias("sum_c"), F.count("*").alias("n")
+        F.sum(cents("c_acctbal")).alias("sum_c"), F.count("*").alias("n")
     )
     urgent = (
         t(spark, sf_dir, "orders")
@@ -741,12 +740,12 @@ def q_tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         c.crossJoin(F.broadcast(pos))
-        .filter(_cents("c_acctbal") * F.col("n") > F.col("sum_c"))
+        .filter(cents("c_acctbal") * F.col("n") > F.col("sum_c"))
         .join(urgent, F.col("o_custkey") == F.col("c_custkey"), "left_anti")
         .groupBy("c_nationkey")
         .agg(
             F.count("*").alias("numcust"),
-            (F.sum(_cents("c_acctbal")) / F.lit(100.0)).alias("totacctbal"),
+            (F.sum(cents("c_acctbal")) / F.lit(100.0)).alias("totacctbal"),
         )
     )
 

@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
-from .tables import t
+from .tables import cents, t
 
 # value = (id * KNUTH) % MOD — integer-valued doubles, so partial sums
 # are exact in any summation order (driver hash is exact; never expose
@@ -284,7 +284,7 @@ def q_sink_custom_writer(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = t(spark, sf_dir, "orders").select(
         "o_orderkey",
         F.col("o_orderpriority").alias("priority"),
-        F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     src.write.format("epic_jsonl_sink").option("path", path).mode("append").save()
     with open(os.path.join(path, "_MANIFEST.json")) as f:
@@ -396,7 +396,7 @@ def q_stream_custom_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "event_id",
             "user_id",
-            F.round(F.col("value") * 100, 0).cast("bigint").alias("cents"),
+            cents("value").alias("cents"),
         )
     )
     q = (
@@ -512,7 +512,7 @@ def q_sink_arrow_writer(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = t(spark, sf_dir, "orders").select(
         "o_orderkey",
         F.col("o_orderpriority").alias("priority"),
-        F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     src.write.format("epic_arrow_parquet_sink").option("path", path).mode(
         "append"

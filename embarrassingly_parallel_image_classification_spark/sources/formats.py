@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from ..localframe import local_df
 from ..registry import register
-from .tables import t
+from .tables import cents, t
 
 _SCRATCH = os.path.join(tempfile.gettempdir(), "epic_spark_scratch")
 
@@ -325,7 +325,7 @@ def q_scan_merge_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = t(spark, sf_dir, "orders")
     o.filter(F.col("o_orderkey") % 2 == 0).select(
         F.col("o_orderkey").alias("k"),
-        F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("cents"),
+        cents("o_totalprice").alias("cents"),
     ).coalesce(2).write.mode("overwrite").parquet(g1)
     o.filter(F.col("o_orderkey") % 2 == 1).select(
         F.col("o_orderkey").alias("k"),
@@ -391,13 +391,11 @@ def q_scan_csv_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_orderkey") % 7 == 0,
             F.concat(
                 F.lit("X"),
-                F.round(F.col("o_totalprice") * 100, 0)
-                .cast("bigint")
+                cents("o_totalprice")
                 .cast("string"),
             ),
         ).otherwise(
-            F.round(F.col("o_totalprice") * 100, 0)
-            .cast("bigint")
+            cents("o_totalprice")
             .cast("string")
         ),
         F.col("o_orderpriority"),
@@ -472,7 +470,7 @@ def q_sink_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = t(spark, sf_dir, "orders").select(
         "o_orderkey",
         F.col("o_orderpriority").alias("prio"),
-        F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     src.filter(F.col("o_orderkey") % 2 == 0).write.partitionBy(
         "prio"

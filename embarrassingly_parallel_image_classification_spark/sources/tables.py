@@ -29,8 +29,9 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructType
 
 TABLES = (
     "region",
@@ -108,12 +109,21 @@ def normalize_events_ts(raw: DataFrame) -> DataFrame:
     Shared by load_table and streaming/core.py's events_stream,
     so batch and stream always normalize the same way.
     """
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import LongType
-
     if isinstance(raw.schema["ts"].dataType, LongType):
         return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return raw.withColumn("ts", F.col("ts").cast("timestamp"))
+
+
+def cents(col: str | Column) -> Column:
+    """Money as exact integer cents: HALF_UP of ``col * 100``, cast to
+    BIGINT. The fixture's money columns carry two decimals, so every
+    money sum, order and comparison runs on these integers and is exact
+    in any partial-sum order (double sums diverge in the last ulp
+    between engines). The oracles spell the same rule in their own SQL,
+    ``CAST(ROUND(x * 100, 0) AS BIGINT)``; Spark plans both spellings
+    as the same ``cast(round(x * 100.0, 0) as bigint)``."""
+    c = F.col(col) if isinstance(col, str) else col
+    return F.round(c * 100, 0).cast("bigint")
 
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -5,20 +5,40 @@ the Spark-µs / DuckDB-ns divide (SURVEY §7 risk 1). Oracles are the
 equivalent batch SQL: with availableNow over a fixed fixture, the
 stream's final answer must equal the batch answer (stream-batch
 equivalence — the canonical Structured Streaming correctness property).
+The per-key stateful lines (stateful, ewma, twap, topk, cusum) each
+supply only a fold and its schemas to ``core.drain_stateful``, whose
+docstring states why their drained answer does not depend on how the
+source splits into micro-batches.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+import calendar
 
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..localframe import pin
+from ..ml.cleaning import drift_report
+from ..ml.curation import GOPHER_MEANLEN_E1, GOPHER_MIN_STOP, GOPHER_WORDS
+from ..ml.inference import fit_centroids, make_predict_udf
+from ..ml.text import STOPWORDS
+from ..operators.analytics import BITMAP_AUDIENCE_ORACLE, bitmap_overlap
+from ..operators.timeseries import DAILY_DOLLARS_SQL, EWMA_ORACLE, TWAP_ORACLE
+from ..plans.scale import checksum_report, row_fingerprint60
 from ..registry import register
-from ..sources.tables import parquet_schema, t
-from .core import events_stream, run_to_memory
+from ..sources.tables import cents, parquet_schema, t
+from .core import documents_stream, drain_stateful, events_stream, run_to_memory
+
+# Oracle-only SQL fragments of the stream-join family: the purchase and
+# click sides on second-truncated event times, and the global watermark
+# (the later of the two streams' minimum max-time, minus the delay).
+_P_SQL = """p AS (SELECT event_id AS p_id, user_id, date_trunc('second', ts) AS pts
+               FROM events WHERE event_type = 'purchase')"""
+_C_SQL = """c AS (SELECT event_id AS c_id, user_id, date_trunc('second', ts) AS cts
+               FROM events WHERE event_type = 'click')"""
+_WM_SQL = """wm AS (SELECT LEAST((SELECT MAX(pts) FROM p), (SELECT MAX(cts) FROM c))
+                       - INTERVAL 10 MINUTE AS w)"""
 
 
 @register(
@@ -298,11 +318,9 @@ def _purchase_click_join(spark: SparkSession, sf_dir: str, how: str) -> DataFram
 
 @register(
     "q_stream_stream_join",
-    oracle="""
-    WITH p AS (SELECT event_id AS p_id, user_id, date_trunc('second', ts) AS pts
-               FROM events WHERE event_type = 'purchase'),
-         c AS (SELECT event_id AS c_id, user_id, date_trunc('second', ts) AS cts
-               FROM events WHERE event_type = 'click')
+    oracle=f"""
+    WITH {_P_SQL},
+         {_C_SQL}
     SELECT p.p_id, c.c_id, p.user_id,
            CAST(epoch(p.pts) AS BIGINT) AS purchase_sec
     FROM p JOIN c ON c.user_id = p.user_id
@@ -340,48 +358,28 @@ def q_stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     (max and count are order-independent, no float accumulation), so
     it carries an exact batch-SQL oracle — upgraded round 4 from
     rows-only (also equals-batch asserted in tests/test_streaming.py)."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     ev = events_stream(spark, sf_dir).withWatermark("ts", "10 minutes")
 
-    def track(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        mx, n = state.get if state.exists else (float("-inf"), 0)
-        for pdf in pdfs:
-            if len(pdf):
-                mx = max(mx, float(pdf["value"].max()))
-                n += int(len(pdf))
-        state.update((mx, n))
-        yield pd.DataFrame({"user_id": [key[0]], "max_value": [mx], "n_events": [n]})
+    def fold(key, state, rows):
+        mx, n = max(state[0], float(rows["value"].max())), state[1] + len(rows)
+        return (mx, n), {"user_id": [key[0]], "max_value": [mx], "n_events": [n]}
 
-    out = (
-        ev.groupBy("user_id")
-        .applyInPandasWithState(
-            track,
-            outputStructType="user_id BIGINT, max_value DOUBLE, n_events BIGINT",
-            stateStructType="mx DOUBLE, n BIGINT",
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-    sink = run_to_memory(out, "update")
-    # Update mode emits one row per key per microbatch; if the source
-    # ever splits into multiple batches, earlier rows are running
-    # prefixes of the final state. Both tracked quantities are monotone,
-    # so max() over the emitted rows IS the final state per key.
-    return sink.groupBy("user_id").agg(
-        F.max("max_value").alias("max_value"), F.max("n_events").alias("n_events")
+    return drain_stateful(
+        ev,
+        ["user_id"],
+        fold,
+        (float("-inf"), 0),
+        "mx DOUBLE, n BIGINT",
+        "user_id BIGINT, max_value DOUBLE, n_events BIGINT",
     )
 
 
 @register(
     "q_stream_outer_join",
-    oracle="""
-    WITH p AS (SELECT event_id AS p_id, user_id, date_trunc('second', ts) AS pts
-               FROM events WHERE event_type = 'purchase'),
-         c AS (SELECT event_id AS c_id, user_id, date_trunc('second', ts) AS cts
-               FROM events WHERE event_type = 'click'),
-         wm AS (SELECT LEAST((SELECT MAX(pts) FROM p), (SELECT MAX(cts) FROM c))
-                       - INTERVAL 10 MINUTE AS w)
+    oracle=f"""
+    WITH {_P_SQL},
+         {_C_SQL},
+         {_WM_SQL}
     SELECT p.p_id, c.c_id, p.user_id,
            CAST(epoch(p.pts) AS BIGINT) AS purchase_sec
     FROM p JOIN c ON c.user_id = p.user_id
@@ -416,9 +414,8 @@ def q_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_stream_semi_join",
-    oracle="""
-    WITH p AS (SELECT event_id AS p_id, user_id, date_trunc('second', ts) AS pts
-               FROM events WHERE event_type = 'purchase'),
+    oracle=f"""
+    WITH {_P_SQL},
          c AS (SELECT user_id, date_trunc('second', ts) AS cts
                FROM events WHERE event_type = 'click')
     SELECT p.p_id, p.user_id,
@@ -454,13 +451,10 @@ def q_stream_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_stream_full_outer_join",
-    oracle="""
-    WITH p AS (SELECT event_id AS p_id, user_id, date_trunc('second', ts) AS pts
-               FROM events WHERE event_type = 'purchase'),
-         c AS (SELECT event_id AS c_id, user_id, date_trunc('second', ts) AS cts
-               FROM events WHERE event_type = 'click'),
-         wm AS (SELECT LEAST((SELECT MAX(pts) FROM p), (SELECT MAX(cts) FROM c))
-                       - INTERVAL 10 MINUTE AS w)
+    oracle=f"""
+    WITH {_P_SQL},
+         {_C_SQL},
+         {_WM_SQL}
     SELECT p.p_id, c.c_id, p.user_id,
            CAST(epoch(p.pts) AS BIGINT) AS p_sec,
            CAST(epoch(c.cts) AS BIGINT) AS c_sec
@@ -514,13 +508,10 @@ def q_stream_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_stream_right_outer_join",
-    oracle="""
-    WITH p AS (SELECT event_id AS p_id, user_id, date_trunc('second', ts) AS pts
-               FROM events WHERE event_type = 'purchase'),
-         c AS (SELECT event_id AS c_id, user_id, date_trunc('second', ts) AS cts
-               FROM events WHERE event_type = 'click'),
-         wm AS (SELECT LEAST((SELECT MAX(pts) FROM p), (SELECT MAX(cts) FROM c))
-                       - INTERVAL 10 MINUTE AS w)
+    oracle=f"""
+    WITH {_P_SQL},
+         {_C_SQL},
+         {_WM_SQL}
     SELECT p.p_id, c.c_id, c.user_id,
            CAST(epoch(c.cts) AS BIGINT) AS click_sec
     FROM p JOIN c ON c.user_id = p.user_id
@@ -642,10 +633,8 @@ def q_stream_infer(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream-batch equivalence that makes an online scorer trustworthy:
     same model, same rows, same answers, regardless of arrival
     batching."""
-    from ..ml.inference import fit_centroids, make_predict_udf
-
-    cents, labels = fit_centroids(t(spark, sf_dir, "embeddings"))
-    predict = make_predict_udf(cents, labels)
+    centroids, labels = fit_centroids(t(spark, sf_dir, "embeddings"))
+    predict = make_predict_udf(centroids, labels)
     stream = (
         spark.readStream.schema(parquet_schema(spark, f"{sf_dir}/embeddings.parquet"))
         .option("pathGlobFilter", "embeddings.parquet")
@@ -653,9 +642,6 @@ def q_stream_infer(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     scored = stream.select("vec_id", "label", predict("embedding").alias("pred"))
     return run_to_memory(scored, "append")
-
-
-from ..operators.timeseries import EWMA_ORACLE  # noqa: E402
 
 
 @register(
@@ -675,69 +661,32 @@ def q_stream_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-emits prefixes), and the drained result must hash-equal the
     batch spelling's oracle — streaming/batch parity on an exact
     integer statistic."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     ev = (
         events_stream(spark, sf_dir)
         .withWatermark("ts", "10 minutes")
-        .select(
-            "event_type",
-            "ts",
-            "event_id",
-            F.round(F.col("value") * 100, 0).cast("bigint").alias("cents"),
-        )
+        .select("event_type", "ts", "event_id", cents("value").alias("cents"))
     )
 
-    def track(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        if state.exists:
-            ts_l, id_l, c_l, total = state.get
-            ts_l, id_l, c_l = list(ts_l), list(id_l), list(c_l)
-        else:
-            ts_l, id_l, c_l, total = [], [], [], 0
-        for pdf in pdfs:
-            if len(pdf):
-                ts_l += pdf["ts"].astype("int64").tolist()
-                id_l += pdf["event_id"].tolist()
-                c_l += pdf["cents"].tolist()
-                total += int(len(pdf))
-        keep = sorted(
-            range(len(ts_l)), key=lambda i: (ts_l[i], id_l[i]), reverse=True
-        )[:16]
-        ts_l = [int(ts_l[i]) for i in keep]
-        id_l = [int(id_l[i]) for i in keep]
+    def fold(key, state, rows):
+        ts_l = list(state[0]) + rows["ts"].astype("int64").tolist()
+        id_l = list(state[1]) + rows["event_id"].tolist()
+        c_l = list(state[2]) + rows["cents"].tolist()
+        order = sorted(range(len(ts_l)), key=lambda i: (ts_l[i], id_l[i]), reverse=True)
+        keep = order[:16]
         c_l = [int(c_l[i]) for i in keep]
-        state.update((ts_l, id_l, c_l, total))
         ewma = sum(c * (1 << (15 - k)) for k, c in enumerate(c_l))
-        yield pd.DataFrame(
-            {
-                "event_type": [key[0]],
-                "ewma_num_x2e16": [ewma],
-                "n_ticks": [len(c_l)],
-                "n_total": [total],
-            }
-        )
+        state = ([int(ts_l[i]) for i in keep], [int(id_l[i]) for i in keep], c_l)
+        out = {"event_type": [key[0]], "ewma_num_x2e16": [ewma], "n_ticks": [len(c_l)]}
+        return state, out
 
-    out = ev.groupBy("event_type").applyInPandasWithState(
-        track,
-        outputStructType=(
-            "event_type STRING, ewma_num_x2e16 BIGINT, "
-            "n_ticks BIGINT, n_total BIGINT"
-        ),
-        stateStructType=(
-            "ts ARRAY<BIGINT>, ids ARRAY<BIGINT>, "
-            "cents ARRAY<BIGINT>, total BIGINT"
-        ),
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return drain_stateful(
+        ev,
+        ["event_type"],
+        fold,
+        ([], [], []),
+        "ts ARRAY<BIGINT>, ids ARRAY<BIGINT>, cents ARRAY<BIGINT>",
+        "event_type STRING, ewma_num_x2e16 BIGINT, n_ticks BIGINT",
     )
-    sink = run_to_memory(out, "update")
-    return sink.groupBy("event_type").agg(
-        F.max_by("ewma_num_x2e16", "n_total").alias("ewma_num_x2e16"),
-        F.max("n_ticks").cast("bigint").alias("n_ticks"),
-    )
-
-
-from ..operators.timeseries import TWAP_ORACLE  # noqa: E402
 
 
 @register(
@@ -758,8 +707,6 @@ def q_stream_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
     BATCH spelling's oracle (same TWAP_ORACLE text), the stream-batch
     parity contract. A monotone tick count picks the last emission in
     update mode."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     ev = (
         events_stream(spark, sf_dir)
         .withWatermark("ts", "10 minutes")
@@ -768,60 +715,38 @@ def q_stream_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_trunc("hour", "ts").alias("h"),
             "ts",
             "event_id",
-            F.round(F.col("value") * 100, 0).cast("bigint").alias("cents"),
+            cents("value").alias("cents"),
         )
     )
 
-    def track(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        import calendar
-
-        if state.exists:
-            ts_l, id_l, c_l = (list(x) for x in state.get)
-        else:
-            ts_l, id_l, c_l = [], [], []
-        for pdf in pdfs:
-            if len(pdf):
-                # µs since epoch, matching the oracle's epoch_us
-                ts_l += pdf["ts"].astype("datetime64[us]").astype("int64").tolist()
-                id_l += pdf["event_id"].tolist()
-                c_l += pdf["cents"].tolist()
-        state.update((ts_l, id_l, c_l))
+    def fold(key, state, rows):
+        # µs since epoch, matching the oracle's epoch_us
+        us = rows["ts"].astype("datetime64[us]").astype("int64")
+        ts_l = list(state[0]) + us.tolist()
+        id_l = list(state[1]) + rows["event_id"].tolist()
+        c_l = list(state[2]) + rows["cents"].tolist()
         order = sorted(range(len(ts_l)), key=lambda i: (ts_l[i], id_l[i]))
         t_s = [int(ts_l[i]) for i in order]
         c_s = [int(c_l[i]) for i in order]
         hour_sec = calendar.timegm(key[1].timetuple())
         hour_end_us = (hour_sec + 3600) * 1_000_000
-        num = sum(
-            c * (nxt - t)
-            for c, t, nxt in zip(c_s, t_s, t_s[1:] + [hour_end_us])
-        )
-        den = hour_end_us - t_s[0]
-        yield pd.DataFrame(
-            {
-                "event_type": [key[0]],
-                "hour_sec": [hour_sec],
-                "twap_num": [num],
-                "twap_den": [den],
-                "n_total": [len(t_s)],
-            }
-        )
+        num = sum(c * (nxt - t) for c, t, nxt in zip(c_s, t_s, t_s[1:] + [hour_end_us]))
+        out = {
+            "event_type": [key[0]],
+            "hour_sec": [hour_sec],
+            "twap_num": [num],
+            "twap_den": [hour_end_us - t_s[0]],
+        }
+        return (ts_l, id_l, c_l), out
 
-    out = ev.groupBy("event_type", "h").applyInPandasWithState(
-        track,
-        outputStructType=(
-            "event_type STRING, hour_sec BIGINT, twap_num BIGINT, "
-            "twap_den BIGINT, n_total BIGINT"
-        ),
-        stateStructType=(
-            "ts ARRAY<BIGINT>, ids ARRAY<BIGINT>, cents ARRAY<BIGINT>"
-        ),
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    sink = run_to_memory(out, "update")
-    return sink.groupBy("event_type", "hour_sec").agg(
-        F.max_by("twap_num", "n_total").alias("twap_num"),
-        F.max_by("twap_den", "n_total").alias("twap_den"),
+    return drain_stateful(
+        ev,
+        ["event_type", "h"],
+        fold,
+        ([], [], []),
+        "ts ARRAY<BIGINT>, ids ARRAY<BIGINT>, cents ARRAY<BIGINT>",
+        "event_type STRING, hour_sec BIGINT, twap_num BIGINT, twap_den BIGINT",
+        answer_keys=["event_type", "hour_sec"],
     )
 
 
@@ -853,67 +778,37 @@ def q_stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     same exact streaming/batch-parity contract as q_stream_ewma. A
     monotone seen-count picks each key's LAST emission (update mode
     re-emits prefixes)."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     ev = (
         events_stream(spark, sf_dir)
         .withWatermark("ts", "10 minutes")
-        .select(
-            "event_type",
-            "event_id",
-            F.round(F.col("value") * 100, 0).cast("bigint").alias("cents"),
-        )
+        .select("event_type", "event_id", cents("value").alias("cents"))
     )
 
-    def track(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        if state.exists:
-            id_l, c_l, total = state.get
-            id_l, c_l = list(id_l), list(c_l)
-        else:
-            id_l, c_l, total = [], [], 0
-        for pdf in pdfs:
-            if len(pdf):
-                id_l += pdf["event_id"].tolist()
-                c_l += pdf["cents"].tolist()
-                total += int(len(pdf))
+    def fold(key, state, rows):
+        id_l = list(state[0]) + rows["event_id"].tolist()
+        c_l = list(state[1]) + rows["cents"].tolist()
         keep = sorted(range(len(c_l)), key=lambda i: (-c_l[i], id_l[i]))[:5]
         id_l = [int(id_l[i]) for i in keep]
         c_l = [int(c_l[i]) for i in keep]
-        state.update((id_l, c_l, total))
-        yield pd.DataFrame(
-            {
-                "event_type": [key[0]] * len(id_l),
-                "rank": [r + 1 for r in range(len(id_l))],
-                "event_id": id_l,
-                "cents": c_l,
-                "n_total": [total] * len(id_l),
-            }
-        )
+        out = {
+            "event_type": [key[0]] * len(id_l),
+            "rank": list(range(1, len(id_l) + 1)),
+            "event_id": id_l,
+            "cents": c_l,
+        }
+        return (id_l, c_l), out
 
-    out = ev.groupBy("event_type").applyInPandasWithState(
-        track,
-        outputStructType=(
-            "event_type STRING, rank BIGINT, event_id BIGINT, "
-            "cents BIGINT, n_total BIGINT"
-        ),
-        stateStructType="ids ARRAY<BIGINT>, cents ARRAY<BIGINT>, total BIGINT",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    # the leaderboard never shrinks, so every final rank row is in the
+    # key's last emission
+    return drain_stateful(
+        ev,
+        ["event_type"],
+        fold,
+        ([], []),
+        "ids ARRAY<BIGINT>, cents ARRAY<BIGINT>",
+        "event_type STRING, rank BIGINT, event_id BIGINT, cents BIGINT",
+        answer_keys=["event_type", "rank"],
     )
-    sink = run_to_memory(out, "update")
-    # last emission per (type, rank): leaderboard size is monotone
-    # non-decreasing, so every final rank row carries the max n_total
-    return (
-        sink.groupBy("event_type", "rank")
-        .agg(
-            F.max_by("event_id", "n_total").alias("event_id"),
-            F.max_by("cents", "n_total").alias("cents"),
-        )
-        .select("event_type", "rank", "event_id", "cents")
-    )
-
-
-from ..operators.analytics import BITMAP_AUDIENCE_ORACLE  # noqa: E402
 
 
 @register(
@@ -953,8 +848,6 @@ def q_stream_bitmap_audience(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_to_memory(words_stream, "complete"),
         "q_stream_bitmap_audience.words",
     )
-    from ..operators.analytics import bitmap_overlap
-
     return bitmap_overlap(words)
 
 
@@ -997,8 +890,8 @@ def q_stream_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink. In production the reference histogram is a static broadcast
     and the tumbling-window variant emits one drift row per window;
     the final-state form here is what an exact oracle can pin."""
-    ev = events_stream(spark, sf_dir).select(
-        F.expr("CAST(ROUND(value * 100, 0) AS BIGINT) DIV 5000").alias("bucket"),
+    ev = events_stream(spark, sf_dir).withColumn("c", cents("value")).select(
+        F.expr("c DIV 5000").alias("bucket"),
         F.when(F.col("ts") < F.lit("2024-01-16").cast("timestamp"), 1)
         .otherwise(0)
         .alias("is_ref"),
@@ -1008,10 +901,6 @@ def q_stream_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(1 - F.col("is_ref")).cast("bigint").alias("cur_n"),
     )
     agg = pin(run_to_memory(counts_stream, "complete"), "q_stream_drift.agg")
-    # the drift algebra is the SHARED tail — one definition with the
-    # batch twin (ml/cleaning.py drift_report), per r7 verdict item 8
-    from ..ml.cleaning import drift_report
-
     return drift_report(agg)
 
 
@@ -1064,8 +953,6 @@ def q_stream_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
     the '<NULL>' sentinel — Spark's concat_ws silently DROPS null
     args while DuckDB's || nulls the row, so nulls must never reach
     the concatenation)."""
-    from ..plans.scale import checksum_report, row_fingerprint60
-
     ev = events_stream(spark, sf_dir)
     agg = checksum_report(
         ev.select(
@@ -1074,21 +961,13 @@ def q_stream_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "event_id",
                 "event_type",
                 "user_id",
-                F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)"),
+                cents("value"),
                 F.unix_timestamp(F.date_trunc("second", F.col("ts"))),
                 F.md5("props"),
             ).alias("h60"),
         )
     )
     return run_to_memory(agg, "complete")
-
-
-from ..ml.curation import (  # noqa: E402 — shared rule constants
-    GOPHER_MEANLEN_E1,
-    GOPHER_MIN_STOP,
-    GOPHER_WORDS,
-)
-from ..ml.text import STOPWORDS  # noqa: E402
 
 
 @register(
@@ -1128,8 +1007,6 @@ def q_stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale this is the shape that gates an ingest firehose: per-row
     rules are stateless map work, the only state is |sources|
     counters."""
-    from .core import documents_stream
-
     d = documents_stream(spark, sf_dir)
     toks = d.select(
         "source", F.split("text", " ").alias("w"), "n_chars"
@@ -1194,11 +1071,9 @@ def q_stream_feature_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     microbatch the only work is a hash lookup against the broadcast
     dict; the complete-mode census is the verification harness, not
     the serving path."""
-    from .core import events_stream, run_to_memory
-
     batch = t(spark, sf_dir, "events").select(
         "event_type",
-        F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)").alias("cents"),
+        cents("value").alias("cents"),
     )
     dic = batch.groupBy("event_type").agg(
         F.expr("CAST(SUM(cents) DIV COUNT(*) AS BIGINT)").alias("te_c")
@@ -1219,13 +1094,7 @@ def q_stream_feature_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
 CUSUM_REF_DAYS = 7
 
 CUSUM_STREAM_ORACLE = f"""
-    WITH daily AS (
-        SELECT event_type,
-               CAST(ts AS DATE) AS day,
-               CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) // 100
-                    AS BIGINT) AS y
-        FROM events GROUP BY event_type, day
-    ),
+    WITH {DAILY_DOLLARS_SQL},
     r AS (
         SELECT event_type, day, y,
                ROW_NUMBER() OVER (PARTITION BY event_type
@@ -1289,34 +1158,21 @@ def q_stream_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     progress emission must hash-equal the batch oracle — the
     streaming/batch parity discipline of q_stream_ewma applied to
     sequential drift detection."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     ev = (
         events_stream(spark, sf_dir)
         .withWatermark("ts", "10 minutes")
         .select(
             "event_type",
             F.col("ts").cast("date").cast("string").alias("day"),
-            F.round(F.col("value") * 100, 0).cast("bigint").alias("cents"),
+            cents("value").alias("cents"),
         )
     )
 
-    def track(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        if state.exists:
-            days, sums, total = state.get
-            acc = dict(zip(list(days), list(sums)))
-            total = int(total)
-        else:
-            acc, total = {}, 0
-        for pdf in pdfs:
-            if len(pdf):
-                for d, c in zip(pdf["day"], pdf["cents"]):
-                    acc[str(d)] = acc.get(str(d), 0) + int(c)
-                total += int(len(pdf))
+    def fold(key, state, rows):
+        acc = dict(zip(list(state[0]), list(state[1])))
+        for d, c in zip(rows["day"], rows["cents"]):
+            acc[str(d)] = acc.get(str(d), 0) + int(c)
         days_sorted = sorted(acc)
-        state.update(
-            (days_sorted, [acc[d] for d in days_sorted], total)
-        )
         ys = [acc[d] // 100 for d in days_sorted]
         ref_n = CUSUM_REF_DAYS
         if len(ys) > ref_n:
@@ -1328,35 +1184,15 @@ def q_stream_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
                     alarm = i
         else:
             ref, alarm = 0, 0
-        yield pd.DataFrame(
-            {
-                "event_type": [key[0]],
-                "n_days": [len(ys)],
-                "ref": [ref],
-                "alarm_t": [alarm],
-                "n_total": [total],
-            }
-        )
+        out = {"event_type": [key[0]], "n_days": [len(ys)], "ref": [ref]}
+        out["alarm_t"] = [alarm]
+        return (days_sorted, [acc[d] for d in days_sorted]), out
 
-    out = ev.groupBy("event_type").applyInPandasWithState(
-        track,
-        outputStructType=(
-            "event_type STRING, n_days BIGINT, ref BIGINT, "
-            "alarm_t BIGINT, n_total BIGINT"
-        ),
-        stateStructType=(
-            "days ARRAY<STRING>, sums ARRAY<BIGINT>, total BIGINT"
-        ),
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    sink = run_to_memory(out, "update")
-    return (
-        sink.groupBy("event_type")
-        .agg(
-            F.max_by("n_days", "n_total").cast("bigint").alias("n_days"),
-            F.max_by("ref", "n_total").cast("bigint").alias("ref"),
-            F.max_by("alarm_t", "n_total").cast("bigint").alias("alarm_t"),
-        )
-        .orderBy("event_type")
+    return drain_stateful(
+        ev,
+        ["event_type"],
+        fold,
+        ([], []),
+        "days ARRAY<STRING>, sums ARRAY<BIGINT>",
+        "event_type STRING, n_days BIGINT, ref BIGINT, alarm_t BIGINT",
     )

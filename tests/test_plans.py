@@ -1177,3 +1177,63 @@ def test_training_spark_quotients_avoid_div():
         ),
     )
     assert not found, found
+
+
+def _package_calls(match) -> dict[tuple[str, str], list[int]]:
+    """{(module, innermost enclosing def): [line, ...]} of the calls in
+    every package module for which `match(call)` holds."""
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / (
+        "embarrassingly_parallel_image_classification_spark"
+    )
+    found: dict[tuple[str, str], list[int]] = {}
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        for fn, lines in _calls_by_function(rel, match).items():
+            found[(rel, fn)] = lines
+    return found
+
+
+def test_money_to_cents_spelled_once():
+    """Source lint: the money rule (HALF_UP of x·100, cast to BIGINT) is
+    spelled on the Spark side only in ``tables.cents``: no other call
+    rounds a column ``* 100, 0``, and no ``expr``/``selectExpr`` string
+    carries ``ROUND(<col> * 100, 0)``. Ratio roundings (a quotient
+    times 100) are not money and are not matched; the DuckDB oracle
+    strings are not Spark calls and are not checked."""
+    import ast
+
+    rule = re.compile(r"ROUND\(\s*[\w.{}]+\s*\*\s*100\s*,\s*0\s*\)", re.IGNORECASE)
+
+    def is_column(node) -> bool:
+        if isinstance(node, ast.Constant):
+            return isinstance(node.value, str)
+        return isinstance(node, ast.Call) and ast.unparse(node.func) in ("F.col", "col")
+
+    def match(c) -> bool:
+        if c.func.attr == "round" and c.args:
+            x = c.args[0]
+            return (
+                isinstance(x, ast.BinOp)
+                and isinstance(x.op, ast.Mult)
+                and isinstance(x.right, ast.Constant)
+                and x.right.value == 100
+                and is_column(x.left)
+                and (len(c.args) < 2 or ast.unparse(c.args[1]) == "0")
+            )
+        return c.func.attr in ("expr", "selectExpr") and any(
+            rule.search(ast.unparse(a)) for a in c.args
+        )
+
+    found = _package_calls(match)
+    assert set(found) <= {("sources/tables.py", "cents")}, found
+
+
+def test_apply_in_pandas_with_state_only_in_drain_builder():
+    """Source lint: every stateful stream line runs through
+    ``streaming.core.drain_stateful``, the one owner of the state
+    read/update, ``n_total`` and the last-emission drain; no query
+    calls ``applyInPandasWithState`` itself."""
+    found = _package_calls(lambda c: c.func.attr == "applyInPandasWithState")
+    assert list(found) == [("streaming/core.py", "drain_stateful")], found

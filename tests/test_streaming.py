@@ -536,3 +536,68 @@ def test_lake_stream_source_passes_metadata_only_versions(spark, tmp_path):
     q.awaitTermination()
     got = sorted(r["k"] for r in spark.read.parquet(out).collect())
     assert got == list(range(15)), got
+
+
+def test_stateful_lines_drain_the_final_state_over_three_micro_batches(
+    spark, duck, tmp_path, monkeypatch
+):
+    """The fixture's events are one file, so every stateful line sees one
+    micro-batch and its drain never has to choose between emissions.
+    Here the events stream reads the same rows as 3 ts-contiguous files,
+    one per micro-batch (contiguous, so no row is late for the 10-minute
+    watermark): each line re-emits a key once per batch that has its
+    rows, and the drained answer must still equal the batch oracle."""
+    import os
+    import time
+
+    import pyarrow.parquet as pq
+
+    from embarrassingly_parallel_image_classification_spark import registry
+    from embarrassingly_parallel_image_classification_spark.sources.tables import (
+        normalize_events_ts,
+        parquet_schema,
+    )
+    from embarrassingly_parallel_image_classification_spark.streaming import core
+    from tests.conftest import assert_matches_oracle
+
+    src = tmp_path / "events"
+    src.mkdir()
+    events = pq.read_table(f"{SF_T2}/events.parquet").sort_by("ts")
+    step = -(-events.num_rows // 3)
+    now = time.time()
+    for i in range(3):
+        path = str(src / f"part{i}.parquet")
+        pq.write_table(events.slice(i * step, step), path)
+        os.utime(path, (now + i, now + i))
+
+    def three_batches(spark_, sf_dir):
+        raw = (
+            spark_.readStream.schema(parquet_schema(spark_, f"{sf_dir}/events.parquet"))
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(src))
+        )
+        return normalize_events_ts(raw)
+
+    sink_rows = []
+    run_to_memory = core.run_to_memory
+
+    def counted(result, mode):
+        sink = run_to_memory(result, mode)
+        sink_rows.append(sink.count())
+        return sink
+
+    monkeypatch.setattr(sq, "events_stream", three_batches)
+    monkeypatch.setattr(core, "run_to_memory", counted)
+    specs = registry.specs()
+    lines = ("stateful", "ewma", "twap", "topk", "cusum")
+    for name in [f"q_stream_{line}" for line in lines]:
+        answer_rows = []
+
+        def fn(spark_, sf_dir, spec=specs[name]):
+            df = spec.fn(spark_, sf_dir)
+            answer_rows.append(df.count())
+            return df
+
+        assert_matches_oracle(spark, duck, name, fn, specs[name].oracle, SF_T2)
+        # some key emitted more than once, so the drain had to pick
+        assert sink_rows[-1] > answer_rows[-1], (name, sink_rows[-1], answer_rows[-1])
