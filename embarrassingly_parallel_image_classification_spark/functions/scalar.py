@@ -674,7 +674,6 @@ def q_fn_url(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("n_missing_param"),
         )
-        .orderBy("host")
     )
 
 
@@ -717,7 +716,6 @@ def q_fn_collation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.lower("seg_ci").alias("segment"), "n", "first_key"
         )
-        .orderBy("segment")
     )
 
 
@@ -776,7 +774,6 @@ def q_fn_timezone(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_events"),
             F.countDistinct("user_id").alias("n_users"),
         )
-        .orderBy("zone", "local_date")
     )
 
 
@@ -919,7 +916,6 @@ def q_fn_try_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("t_elem").cast("bigint").alias("elem_hits"),
             F.min("t_elem").alias("elem_min"),
         )
-        .orderBy("flag")
     )
 
 
@@ -1053,5 +1049,4 @@ def q_fn_luhn(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("n_tampered_valid"),
         )
-        .orderBy("seg")
     )

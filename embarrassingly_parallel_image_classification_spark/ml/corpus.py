@@ -1087,5 +1087,4 @@ def q_text_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_docs",
             "max_per_doc",
         )
-        .orderBy("phrase")
     )

@@ -1448,7 +1448,6 @@ def q_dedup_paragraph(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.when(F.col("rn") == 1, 1)).cast("bigint").alias("n_kept"),
             F.count(F.when(F.col("rn") > 1, 1)).cast("bigint").alias("n_dropped"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -1803,7 +1802,6 @@ def q_text_symspell(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n").alias("dict_n"),
             F.expr("CAST(levenshtein(typo, w) AS BIGINT)").alias("ed"),
         )
-        .orderBy("typo", "suggestion")
     )
 
 
@@ -1983,5 +1981,4 @@ def q_dedup_minhash_affine(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "CAST(i * 1000000 div (sz_a + sz_b - i) AS BIGINT)"
             ).alias("jaccard_e6"),
         )
-        .orderBy("doc_a", "doc_b")
     )

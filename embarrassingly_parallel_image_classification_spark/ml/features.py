@@ -739,7 +739,6 @@ def q_feat_chi2_select(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("a").alias("n_docs"),
             "assoc",
         )
-        .orderBy("lang", "rnk")
     )
 
 
@@ -873,4 +872,4 @@ def q_feat_gini_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
         "feature",
         "gain_e6",
         F.row_number().over(w).cast("bigint").alias("rank"),
-    ).orderBy("rank")
+    )

@@ -1118,15 +1118,14 @@ def q_class_knn_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
             "votes",
             (F.col("true_label") == F.col("label")).alias("correct"),
         )
-        .orderBy("qid")
     )
 
 
 def _recall_census(top: DataFrame, emb: DataFrame, score: str) -> DataFrame:
-    """(qid, rank, vec_id, <score>, in_exact_topk) by (qid, rank): a
-    tier's top-k rows for the fixture queries, each flagged by whether
-    knn_exact over `emb` also ranks it in the top k — the recall census
-    of an approximate tier against the exact verifier."""
+    """(qid, rank, vec_id, <score>, in_exact_topk): a tier's top-k rows
+    for the fixture queries, each flagged by whether knn_exact over
+    `emb` also ranks it in the top k — the recall census of an
+    approximate tier against the exact verifier."""
     exact = knn_exact(emb, emb.filter(F.col("vec_id") < N_QUERIES), TOP_K).select(
         F.col("qid").alias("xq"), F.col("vec_id").alias("xv"), F.lit(True).alias("hit")
     )
@@ -1143,7 +1142,6 @@ def _recall_census(top: DataFrame, emb: DataFrame, score: str) -> DataFrame:
             score,
             F.coalesce(F.col("hit"), F.lit(False)).alias("in_exact_topk"),
         )
-        .orderBy("qid", "rank")
     )
 
 
@@ -1617,7 +1615,6 @@ def q_knn_hamming_postdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("recall_uplift"),
         )
-        .orderBy("qid")
     )
 
 

@@ -364,7 +364,7 @@ def q_multimodal_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan: two chained mapInPandas passes (Arrow in, Arrow out, no
     shuffle between them — payloads never leave the task that made
-    them), one final ORDER BY for presentation. At 100 TB the synth
+    them). At 100 TB the synth
     stage is replaced by `binaryFile` reads; the decode stage is
     unchanged."""
     ids = t(spark, sf_dir, "embeddings").select("vec_id")
@@ -402,7 +402,7 @@ def q_multimodal_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return clips.mapInPandas(
         feats, "vec_id long, frame long, energy long, zero_cross long, peak long"
-    ).orderBy("vec_id", "frame")
+    )
 
 
 # Keyframe selection: a frame is a KEYFRAME when its energy (sum of
@@ -496,5 +496,4 @@ def q_multimodal_keyframes(spark: SparkSession, sf_dir: str) -> DataFrame:
         .mapInPandas(
             keyframes, "media_id long, frame_idx long, energy long"
         )
-        .orderBy("media_id", "frame_idx")
     )

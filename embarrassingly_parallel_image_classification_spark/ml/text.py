@@ -928,8 +928,7 @@ def q_text_kwic(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction.
 
     Plan at 100 TB: map-only — split, posexplode, filter, two
-    slices; no shuffle at all until the output sort (which a real
-    snippet service would drop); the filter prunes to matching
+    slices; no shuffle at all; the filter prunes to matching
     positions before any context string is built."""
     toks = t(spark, sf_dir, "documents").select(
         "doc_id", F.split("text", " ").alias("arr")
@@ -956,4 +955,4 @@ def q_text_kwic(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr(f"slice(arr, p + 1, {_KWIC_CTX})"), " "
         ).alias("right_ctx"),
     )
-    return hits.orderBy("doc_id", "pos")
+    return hits

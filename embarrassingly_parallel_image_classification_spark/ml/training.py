@@ -365,7 +365,6 @@ def q_train_naive_bayes(spark: SparkSession, sf_dir: str) -> DataFrame:
             "true_lang",
             (F.col("pred_lang") == F.col("true_lang")).alias("correct"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -599,7 +598,7 @@ def q_train_isotonic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return sel.mapInPandas(
         fit_part, "user_id long, x long, y_cents long, iso_e6 long"
-    ).orderBy("user_id", "x")
+    )
 
 
 @register(
@@ -684,7 +683,7 @@ def q_train_grouped_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(num * num / (den * deny) * 1000000, 0)
         .cast("bigint")
         .alias("r2_e6"),
-    ).orderBy("grp")
+    )
 
 
 @register(
@@ -931,7 +930,7 @@ def q_train_gbt_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("pred_right_e6"),
     )
-    return r1.unionAll(r2).orderBy("round")
+    return r1.unionAll(r2)
 
 
 # Ridge penalty for q_train_ridge, on the integer (cents / units /
@@ -1391,11 +1390,11 @@ def _best_splits(layout: DataFrame) -> DataFrame:
 
 def _tree_rows(root: DataFrame, *levels: DataFrame) -> DataFrame:
     """The tree's output: the root split as node 'root', then each
-    level's best splits, ordered by path label."""
+    level's best splits, one row per path label."""
     out = root.select(F.lit("root").alias("node"), *_SPLIT)
     for level in levels:
         out = out.unionAll(level)
-    return out.orderBy("node")
+    return out
 
 
 _TREE2_BASE_SQL = """
@@ -1715,8 +1714,7 @@ def q_train_tree_depth3(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output: up to 7 rows — root, both children, all four
     grandchildren, each with its winning split, exact child sizes and
-    score. Path labels sort lexicographically (L < LL < LR < R < RL
-    < RR < root) the same way in Spark and DuckDB (pure ASCII)."""
+    score, keyed by its path label."""
     li = _tree_base(spark, sf_dir)
     # the root pick (1 row) feeds the routing AND the output union —
     # pin it so the root census runs once

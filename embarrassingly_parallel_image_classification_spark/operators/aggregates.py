@@ -894,7 +894,6 @@ def q_agg_approx_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.expr("approx_top_k(w, 8, 10000)").alias("tk"))
         .select(F.inline("tk"))
         .select(F.col("item"), F.col("count").cast("bigint").alias("cnt"))
-        .orderBy(F.desc("cnt"), "item")
     )
 
 

@@ -1072,7 +1072,6 @@ def q_geo_geohash(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("gh").alias("first_gh6"),
             F.max("gh").alias("last_gh6"),
         )
-        .orderBy("cell2")
     )
 
 
@@ -1382,7 +1381,6 @@ def q_geo_point_in_polygon(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " DIV count(*) AS BIGINT)"
             ).alias("share_e6"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -1531,7 +1529,7 @@ def q_ab_sequential(spark: SparkSession, sf_dir: str) -> DataFrame:
             * (F.col("n2") * b1 + F.col("n1") * b2)
             * nn
         ).alias("reject"),
-    ).orderBy("event_type", "look")
+    )
 
 
 @register(
@@ -1683,5 +1681,4 @@ def q_alloc_fifo(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "unfilled_cents"
             ),
         )
-        .orderBy("user_id")
     )

@@ -648,7 +648,7 @@ def q_graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("node").cast("bigint").alias("node"),
         F.col("lbl").cast("bigint").alias("comp"),
         F.count("*").over(w).cast("bigint").alias("comp_size"),
-    ).orderBy("node")
+    )
 
 
 @register(
@@ -777,7 +777,6 @@ def q_graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " ELSE 0 END AS BIGINT)"
             ).alias("clustering_e6"),
         )
-        .orderBy("node")
     )
 
 
@@ -1116,7 +1115,6 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("core_degree"),
             F.col("converged"),
         )
-        .orderBy("node")
     )
 
 

@@ -38,7 +38,8 @@ Families that share a census or a chain read it from one function:
 ``_oneway_ss`` (ANOVA sums of squares), ``_chi2_terms`` (contingency
 cells), ``_fo_census`` (the F-vs-O order samples),
 ``_ab_scores`` (Ansari-Bradley tie-block scores), ``_durations`` /
-``_risk_table`` (survival), ``_type_day_sums`` (per type and day),
+``_risk_table`` (survival), ``daily_census`` / ``_type_day_sums`` (per
+type and calendar day; the time-series lines read the census too),
 ``_lower_median`` and ``_orders_strata``.
 """
 
@@ -282,21 +283,29 @@ def _risk_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     return steps.select("d_min", "d_i", F.sum("c_all").over(wdesc).alias("n_i"))
 
 
+def daily_census(spark: SparkSession, sf_dir: str, *aggs: Column) -> DataFrame:
+    """(event_type, day, *aggs): one row per (type, calendar day), the
+    events' ``cents`` aggregated by ``aggs``. The fact table collapses
+    to a calendar-bounded frame (about 30 rows per type at any scale)
+    in one map-side-combined aggregate."""
+    return (
+        t(spark, sf_dir, "events")
+        .select(
+            "event_type",
+            F.col("ts").cast("date").alias("day"),
+            cents("value").alias("cents"),
+        )
+        .groupBy("event_type", "day")
+        .agg(*aggs)
+    )
+
+
 def _type_day_sums(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(g, d, v): per event type and calendar day the cent sum — the
     calendar-bounded series the trend, serial and blocked tests read."""
-    return (
-        t(spark, sf_dir, "events")
-        .groupBy(
-            F.col("event_type").alias("g"),
-            F.col("ts").cast("date").alias("d"),
-        )
-        .agg(
-            F.sum(cents("value"))
-            .cast("bigint")
-            .alias("v")
-        )
-    )
+    return daily_census(
+        spark, sf_dir, F.sum("cents").cast("bigint").alias("v")
+    ).toDF("g", "d", "v")
 
 
 def _orders_strata(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -498,7 +507,7 @@ def q_stats_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(num.cast("double") / den.cast("double") * 1000000, 0)
         .cast("bigint")
         .alias("gini_e6"),
-    ).orderBy("seg")
+    )
 
 
 @register(
@@ -593,7 +602,7 @@ def q_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("d_i").cast("bigint").alias("n_events"),
         F.col("n_i").cast("bigint").alias("n_at_risk"),
         F.sum("step_ln_e6").over(wasc).cast("bigint").alias("ln_surv_e6"),
-    ).orderBy("d_min")
+    )
 
 
 @register(
@@ -718,7 +727,6 @@ def q_ts_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.avg("slope") * 1000000, 0).cast("bigint").alias("slope_e6"),
             F.max("cnt").cast("bigint").alias("n_pairs"),
         )
-        .orderBy("user_id")
     )
 
 
@@ -854,7 +862,6 @@ def q_stats_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
                 > 4 * F.lit(MW_Z2_E4) * F.col("n1") * F.col("n2") * kk
             ).alias("significant"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -1013,7 +1020,6 @@ def q_stats_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         pt.join(ci, "event_type")
         .select("event_type", "n", "mean_e2", "lo_e2", "hi_e2")
-        .orderBy("event_type")
     )
 
 
@@ -1332,7 +1338,7 @@ def q_stats_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.col("n").cast("bigint").alias("n_rows"),
         pearson_r().alias("rho"),
-    ).orderBy("event_type")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1539,7 +1545,6 @@ def q_stats_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
                 6,
             ).alias("tau_b"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -1948,7 +1953,7 @@ def q_stats_sign_bh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("p_e6"),
         F.col("j").alias("bh_rank"),
         (F.col("j") <= F.col("jmax")).alias("bh_reject"),
-    ).orderBy("g")
+    )
 
 
 def _kruskal_groups(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
@@ -2215,7 +2220,7 @@ def q_survival_nelson_aalen(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_i").cast("bigint").alias("n_at_risk"),
         F.sum("step_e6").over(wasc).cast("bigint").alias("cum_hazard_e6"),
         F.sum("var_e9").over(wasc).cast("bigint").alias("cum_var_e9"),
-    ).orderBy("d_min")
+    )
 
 
 # Log-rank rejection at alpha = 0.05, df = 1: chi-square critical
@@ -3112,7 +3117,6 @@ def q_ts_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
             "lb_e6",
             (F.col("lb_e6") > F.lit(CHI2_DF7_E6)).alias("significant"),
         )
-        .orderBy("lag")
     )
 
 
@@ -3516,7 +3520,7 @@ def q_stats_dunn(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(3).cast(D38) * (F.col("n") - 1) * staged * F.lit(1000000)
             > F.lit(DUNN_Z2_E6).cast(D38) * (F.col("nga") + F.col("ngb")) * vterm
         ).alias("significant"),
-    ).orderBy("g_a", "g_b")
+    )
 
 
 # Studentized-range critical q(0.05; k=5, df=inf) = 3.858, squared e4.
@@ -3650,7 +3654,7 @@ def q_stats_tukey(spark: SparkSession, sf_dir: str) -> DataFrame:
             * F.col("ssw_e6")
             * (F.col("na") + F.col("nb"))
         ).alias("significant"),
-    ).orderBy("g_a", "g_b")
+    )
 
 
 # Games-Howell shares the studentized-range yardstick with Tukey:
@@ -3801,7 +3805,7 @@ def q_stats_games_howell(spark: SparkSession, sf_dir: str) -> DataFrame:
             * F.col("na")
             * F.col("nb")
         ).alias("significant"),
-    ).orderBy("g_a", "g_b")
+    )
 
 
 @register(
@@ -3941,7 +3945,6 @@ def q_stats_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("trend"),
             sig.alias("significant"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -4084,7 +4087,7 @@ def q_stats_jarque_bera(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("(n * s1 * 100) div (m2 * m2)").cast(D38) * F.lit(1000)
             > F.lit(JB24_E3).cast(D38)
         ).alias("normality_rejected"),
-    ).orderBy("event_type")
+    )
 
 
 # Two-sample Cramer-von Mises asymptotic critical value at alpha=0.05:
@@ -5230,7 +5233,7 @@ def q_stats_seasonal_mk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit("no_trend"))
         .alias("trend"),
         sig.alias("significant"),
-    ).orderBy("event_type")
+    )
 
 
 @register(
@@ -6311,7 +6314,7 @@ def q_stats_point_biserial(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("r2_pb_signed_e6"),
         t2.cast("bigint").alias("t2_e3"),
         (t2 > F.lit(3841)).alias("significant"),
-    ).orderBy("event_type")
+    )
 
 
 @register(
@@ -6457,7 +6460,7 @@ def q_stats_durbin_watson(spark: SparkSession, sf_dir: str) -> DataFrame:
             " WHEN dw_num * 10 > dw_den * 25 THEN 'negative'"
             " ELSE 'none' END"
         ).alias("autocorrelation"),
-    ).orderBy("event_type")
+    )
 
 
 @register(
@@ -6554,7 +6557,7 @@ def q_stats_turning_points(spark: SparkSession, sf_dir: str) -> DataFrame:
         dev.cast("bigint").alias("dev_x3"),
         z2.cast("bigint").alias("z2_e3"),
         (z2 > F.lit(3841)).alias("nonrandom"),
-    ).orderBy("event_type")
+    )
 
 
 @register(
@@ -6693,7 +6696,6 @@ def q_stats_mahalanobis(spark: SparkSession, sf_dir: str) -> DataFrame:
             "outlier_rate_e6",
             "d2_max_e3",
         )
-        .orderBy("event_type")
     )
 
 
@@ -6780,7 +6782,7 @@ def q_ab_power(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("s div (50 * n)").cast("bigint").alias("mde_cents"),
         nreq.cast("bigint").alias("n_required_per_arm"),
         (F.expr("n div 2") >= nreq).alias("adequately_powered"),
-    ).orderBy("event_type")
+    )
 
 
 @register(
@@ -6929,4 +6931,4 @@ def q_agg_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("winsorized_mean_e2"),
         F.col("v_lo").cast("bigint").alias("p10_cents"),
         F.col("v_hi").cast("bigint").alias("p90_cents"),
-    ).orderBy("event_type")
+    )

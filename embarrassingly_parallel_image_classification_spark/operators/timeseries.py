@@ -12,10 +12,11 @@ queries share has one builder: ``_hourly_spine`` (gapfill, ffill),
 ``_last_ticks`` and ``_weighted_ticks`` (the last-k tick frame and its
 position-weighted BIGINT dots: ewma, holt, holt_winters; one weight
 list per forecaster feeds both the broadcast frame and the oracle's
-VALUES), and ``_daily_census`` / ``_daily_dollars`` (the (type, day)
-census: sse, mase, decompose, croston). The oracles copy no CTE of
-these families by hand either: ``_SPINE_SQL``, ``_LAST_TICKS_SQL`` and
-``DAILY_DOLLARS_SQL`` are oracle-only fragments.
+VALUES), and ``_daily_dollars`` over ``stats.daily_census`` (the
+(type, day) census: sse, mase, decompose, croston). The oracles copy
+no CTE of these families by hand either: ``_SPINE_SQL``,
+``_LAST_TICKS_SQL`` and ``DAILY_DOLLARS_SQL`` are oracle-only
+fragments.
 """
 
 from __future__ import annotations
@@ -26,7 +27,7 @@ from pyspark.sql import functions as F
 from ..localframe import local_df
 from ..registry import register
 from ..sources.tables import cents, t
-from .stats import comoment, moment_census, pearson_r
+from .stats import comoment, daily_census, moment_census, pearson_r
 
 # Oracle-only SQL fragments, one per copied CTE family (the Spark side
 # has its own builders below; oracles share no code with the engine
@@ -124,28 +125,11 @@ def _weighted_ticks(
     )
 
 
-def _daily_census(spark: SparkSession, sf_dir: str, agg: Column) -> DataFrame:
-    """(event_type, day, agg): one row per (type, calendar day), the
-    events' cents aggregated by ``agg``. The fact table collapses to
-    a calendar-bounded frame (about 30 rows per type at any scale) in
-    one map-side-combined aggregate."""
-    return (
-        t(spark, sf_dir, "events")
-        .select(
-            "event_type",
-            F.col("ts").cast("date").alias("day"),
-            cents("value").alias("cents"),
-        )
-        .groupBy("event_type", "day")
-        .agg(agg)
-    )
-
-
 def _daily_dollars(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(event_type, day, y): each type's daily revenue in whole dollars,
     the floor of the day's exact cent sum over 100 (non-negative, so
     Spark's truncating ``div`` and DuckDB's flooring ``//`` agree)."""
-    return _daily_census(
+    return daily_census(
         spark, sf_dir, F.expr("CAST(SUM(cents) div 100 AS BIGINT)").alias("y")
     )
 
@@ -1941,7 +1925,7 @@ def q_timeseries_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     the centered MA is ONE ROWS-framed window over that tiny frame and
     the seasonal profile one more bounded groupBy — 100x more events
     never changes a post-census row count."""
-    daily = _daily_census(spark, sf_dir, F.sum("cents").cast("bigint").alias("v"))
+    daily = daily_census(spark, sf_dir, F.sum("cents").cast("bigint").alias("v"))
     wseq = Window.partitionBy("event_type").orderBy("day")
     wma = wseq.rowsBetween(-3, 3)
     wall = Window.partitionBy("event_type")
@@ -2043,7 +2027,7 @@ def q_timeseries_croston(spark: SparkSession, sf_dir: str) -> DataFrame:
     window over the ~30-row-per-type nonzero frame (WindowGroupLimit
     prunes before the shuffle), one 5-row dot-product aggregate."""
     z = F.sum(F.when(F.col("cents") % 20 == 0, 1).otherwise(0)).cast("bigint")
-    daily = _daily_census(spark, sf_dir, z.alias("z"))
+    daily = daily_census(spark, sf_dir, z.alias("z"))
     wlag = Window.partitionBy("event_type").orderBy("day")
     wdesc = Window.partitionBy("event_type").orderBy(F.desc("day"))
     nz = (

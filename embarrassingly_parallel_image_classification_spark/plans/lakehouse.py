@@ -1332,7 +1332,7 @@ def q_lake_snapshots(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("cents").cast("bigint").alias("cents"),
             )
         )
-    return frames[0].unionByName(frames[1]).orderBy("version")
+    return frames[0].unionByName(frames[1])
 
 
 @register(
@@ -1371,7 +1371,7 @@ def q_lake_overwrite_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(v).cast("int").alias("version"), F.count("*").alias("n")
             )
         )
-    return frames[0].unionByName(frames[1]).orderBy("version")
+    return frames[0].unionByName(frames[1])
 
 
 def merge_into(
@@ -1569,7 +1569,7 @@ def q_lake_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     dele = r1.exceptAll(r2).agg(
         F.lit("delete").alias("change"), F.count("*").alias("n")
     )
-    return ins.unionByName(dele).orderBy("change")
+    return ins.unionByName(dele)
 
 
 def stream_ingest(stream_df: DataFrame, path: str) -> None:
@@ -2112,7 +2112,7 @@ def q_lake_multi_table_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "item_cents",
             )
         )
-    return frames[0].unionByName(frames[1]).orderBy("cv")
+    return frames[0].unionByName(frames[1])
 
 
 @register(
@@ -2362,7 +2362,7 @@ def q_lake_stream_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("cents").cast("bigint").alias("cents"),
             )
         )
-    return frames[0].unionByName(frames[1]).orderBy("tbl")
+    return frames[0].unionByName(frames[1])
 
 
 def add_column_default(path: str, name: str, sql_type: str, default) -> int:
@@ -2477,7 +2477,6 @@ def q_lake_default_column(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n"),
             F.sum("cents").cast("bigint").alias("cents"),
         )
-        .orderBy(F.col("channel").asc_nulls_first())
     )
 
 
@@ -2814,7 +2813,7 @@ def q_lake_ivm_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     delta = spark.read.parquet(
         *[os.path.join(path, n) for n in v2_files if n not in v1_files]
     )
-    refreshed = (
+    return (
         view.unionByName(sketch_of(delta))
         .groupBy("priority")
         .agg(F.expr("hll_union_agg(sk)").alias("sk"))
@@ -2823,7 +2822,6 @@ def q_lake_ivm_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("hll_sketch_estimate(sk)").cast("bigint").alias("approx_customers"),
         )
     )
-    return refreshed.orderBy("priority")
 
 
 def optimize_zorder(
@@ -3279,7 +3277,6 @@ def q_lake_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
         report("source", snapshot_read(spark, src))
         .unionByName(report("clone_v1", snapshot_read(spark, dst, 1)))
         .unionByName(report("clone_v2", snapshot_read(spark, dst)))
-        .orderBy("side")
     )
 
 
@@ -3499,7 +3496,7 @@ def q_lake_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = frames[0]
     for fr in frames[1:]:
         out = out.unionByName(fr)
-    return out.orderBy("version")
+    return out
 
 
 @register(
@@ -3561,7 +3558,6 @@ def q_lake_write_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         report("clean", main)
         .unionByName(report("quarantine", dead))
-        .orderBy("side")
     )
 
 
@@ -4166,7 +4162,7 @@ def q_lake_history_table(spark: SparkSession, sf_dir: str) -> DataFrame:
             for h in hist
         ],
         "version BIGINT, mode STRING, n_files BIGINT, n_delete_files BIGINT",
-    ).orderBy("version")
+    )
 
 
 # Shared version-mutation spec for q_lake_snapshot_diff and
@@ -4465,7 +4461,6 @@ def q_lake_generated_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n"),
             F.sum("cents").cast("bigint").alias("cents"),
         )
-        .orderBy("o_year")
     )
 
 
@@ -4543,7 +4538,6 @@ def q_lake_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("row_id").alias("max_id"),
             F.sum("row_id").cast("bigint").alias("sum_id"),
         )
-        .orderBy("parity")
     )
 
 

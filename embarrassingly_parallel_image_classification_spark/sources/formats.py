@@ -223,7 +223,7 @@ def q_scan_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.element_at(F.split("path", "/"), -1).alias("file_name"),
         F.col("length"),
         F.md5(F.hex("content")).alias("content_md5"),
-    ).orderBy("file_name")
+    )
 
 
 # q_scan_binary's oracle is resolved when oracle_sql() is asked (the
@@ -494,7 +494,6 @@ def q_sink_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n"),
             F.sum("cents").cast("bigint").alias("cents"),
         )
-        .orderBy("prio")
     )
 
 
@@ -548,7 +547,6 @@ def q_scan_file_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").cast("bigint").alias("n_rows"),
             F.countDistinct("fname").cast("bigint").alias("n_files"),
         )
-        .orderBy("prio")
     )
 
 
@@ -608,5 +606,4 @@ def q_scan_text(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("n_data"),
         )
-        .orderBy("lang")
     )

@@ -213,6 +213,7 @@ def test_kwic_matches_brute_force(spark):
 
     got = (
         registry.queries()["q_text_kwic"](spark, SF_SMOKE)
+        .orderBy("doc_id", "pos")
         .toPandas()
     )
     docs = duckdb.sql(

@@ -422,17 +422,56 @@ _CARTESIAN_OK = {
 }
 
 
+# Queries whose unlimited root sort is the surface they exist to
+# exercise. Everywhere else an output order is owed only where a LIMIT
+# or top-k cuts on it (registry.py docstring): every check compares
+# rows order-insensitively, so a root sort buys a range-sample job and
+# a shuffle that nothing reads.
+_ROOT_SORT_OK = {
+    "q_sort",              # the range-partitioned sort path is its subject
+    "q_sql_pipe",          # `|> ORDER BY` is one of the pipe operators
+                           # it enumerates
+    "q_sql_group_by_all",  # ORDER BY ALL is the syntax under test
+}
+
+
+def root_sorted(df) -> bool:
+    """Whether the optimized plan's root, below any Project, Filter or
+    SubqueryAlias, is a global Sort. A Sort under a limit is owed (the
+    root is then the limit, planned as TakeOrderedAndProject)."""
+    node = df._jdf.queryExecution().optimizedPlan()
+    while node.nodeName() in ("Project", "Filter", "SubqueryAlias"):
+        node = node.children().apply(0)
+    # Scala's Sort.global is a Python keyword
+    return node.nodeName() == "Sort" and getattr(node, "global")()
+
+
 def test_no_accidental_cartesian_anywhere(spark):
     """Global plan lint: an unlisted CartesianProduct or
     BroadcastNestedLoopJoin means some equi-join silently lost its key
     (the classic way a query regresses to O(n·m) at scale). Every
-    allowlisted query documents WHY its unkeyed join is the algorithm."""
+    allowlisted query documents WHY its unkeyed join is the algorithm.
+
+    The same loop (one build per query) lints output order: the batch
+    queries that end in a global sort are exactly ``_ROOT_SORT_OK``.
+    The check reads the optimized plan, so a DataFrame ``orderBy`` and
+    a trailing SQL ``ORDER BY`` are caught alike."""
+    sorted_roots = set()
     for name, fn in registry.queries().items():
-        if name in _CARTESIAN_OK or name.startswith("q_stream"):
+        if name.startswith("q_stream"):
             continue
-        plan = explain_str(fn(spark, SF_T2))
+        df = fn(spark, SF_T2)
+        if root_sorted(df):
+            sorted_roots.add(name)
+        if name in _CARTESIAN_OK:
+            continue
+        plan = explain_str(df)
         assert "CartesianProduct" not in plan, f"{name} has a CartesianProduct"
         assert "BroadcastNestedLoopJoin" not in plan, f"{name} has a BNLJ"
+    assert sorted_roots == _ROOT_SORT_OK, (
+        f"root sorts no check reads: {sorted(sorted_roots - _ROOT_SORT_OK)}; "
+        f"allowlisted but unsorted: {sorted(_ROOT_SORT_OK - sorted_roots)}"
+    )
 
 
 def test_weighted_sample_is_topk_not_full_sort(spark):
@@ -958,7 +997,6 @@ def test_lateral_alias_plan_matches_expanded(spark):
                CAST(MAX(cents) AS BIGINT) AS max_cents
         FROM x
         GROUP BY o_orderpriority, bucket_dollars
-        ORDER BY o_orderpriority, bucket_dollars
         """
     )
 
