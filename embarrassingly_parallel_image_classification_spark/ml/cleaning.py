@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.hashing import md5_int
 from ..localframe import local_df, pin
 from ..registry import register
 from ..sources.tables import cents, t
@@ -588,14 +589,7 @@ def q_split_kfold(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         t(spark, sf_dir, "documents")
         .select(
-            (
-                F.conv(
-                    F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8),
-                    16,
-                    10,
-                ).cast("bigint")
-                % 5
-            ).alias("fold"),
+            (md5_int(F.col("doc_id").cast("string"), 8) % 5).alias("fold"),
             "lang",
             "n_chars",
         )

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.hashing import md5_int
 from ..localframe import local_df, pin
 from ..operators.stats import comoment, moment_census
 from ..registry import register
@@ -529,22 +530,15 @@ def q_sample_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
             d.sparkSession.range(1, 4).select(F.col("id").alias("neg_ix"))
         )
     )
-    h = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.col("doc_id").cast("string"),
-                    F.lit("-"),
-                    F.col("neg_ix").cast("string"),
-                    F.lit("-negseed42"),
-                )
-            ),
-            1,
-            8,
+    h = md5_int(
+        F.concat(
+            F.col("doc_id").cast("string"),
+            F.lit("-"),
+            F.col("neg_ix").cast("string"),
+            F.lit("-negseed42"),
         ),
-        16,
-        10,
-    ).cast("bigint")
+        8,
+    )
     raw = h % F.lit(n_docs - 1)
     return draws.select(
         "doc_id",
@@ -636,15 +630,7 @@ def q_mix_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ),
     ).select("lang", "n", "rate_e6")
-    u = F.conv(
-        F.substring(
-            F.md5(F.concat(F.col("doc_id").cast("string"), F.lit("-mix42"))),
-            1,
-            8,
-        ),
-        16,
-        10,
-    ).cast("bigint") % 1000000
+    u = md5_int(F.concat(F.col("doc_id").cast("string"), F.lit("-mix42")), 8) % 1000000
     return (
         d.select("doc_id", "lang", u.alias("u"))
         .join(F.broadcast(thr), "lang")

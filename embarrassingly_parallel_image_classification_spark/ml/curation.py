@@ -40,6 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.hashing import md5_int
 from ..localframe import pin
 from ..registry import register
 from ..sources.tables import t
@@ -303,7 +304,7 @@ def q_quality_linear_clf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "w",
             (
-                F.conv(F.substring(F.md5("w"), 1, 8), 16, 10).cast("bigint")
+                md5_int("w", 8)
                 % 2001
                 - 1000
             ).cast("bigint").alias("wgt"),
@@ -399,7 +400,7 @@ def q_select_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
             "lang",
             (
-                F.conv(F.substring(F.md5("w"), 1, 8), 16, 10).cast("bigint")
+                md5_int("w", 8)
                 % 256
             ).alias("b"),
         ),

@@ -33,6 +33,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.hashing import md5_int
 from ..localframe import local_df, pin
 from ..registry import register
 from ..sources.tables import cents, t
@@ -324,14 +325,7 @@ def q_feat_target_kfold(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = t(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_orderpriority",
-        (
-            F.conv(
-                F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 8),
-                16,
-                10,
-            ).cast("bigint")
-            % 5
-        ).alias("fold"),
+        (md5_int(F.col("o_orderkey").cast("string"), 8) % 5).alias("fold"),
         cents("o_totalprice").alias("cents"),
     )
     # pinned 25-row (priority, fold) census: gt is its marginal —
@@ -440,14 +434,7 @@ def q_pipeline_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderpriority",
         F.expr("CAST(year(o_orderdate) AS BIGINT)").alias("yr"),
         cents("o_totalprice").alias("cents"),
-        (
-            F.conv(
-                F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 8),
-                16,
-                10,
-            ).cast("bigint")
-            % 5
-        ).alias("fold"),
+        (md5_int(F.col("o_orderkey").cast("string"), 8) % 5).alias("fold"),
     )
     # ONE pinned (priority, fold) census (≤ 5x5 rows) carries every
     # dictionary/bounds aggregate the matrix needs: the string-index

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.hashing import md5_int
 from ..registry import register
 from ..sources.tables import t
 
@@ -446,7 +447,7 @@ def q_text_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "tok")
     )
     cut = (
-        F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10).cast("bigint") % 16 == 0
+        md5_int("tok", 8) % 16 == 0
     ).cast("int")
     w = (
         Window.partitionBy("doc_id")
@@ -623,9 +624,7 @@ def q_text_feature_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = d.select("doc_id", F.explode(F.split("text", " ")).alias("w"))
 
     def h(prefix: str):
-        return F.conv(
-            F.substring(F.md5(F.concat(F.lit(prefix), F.col("w"))), 1, 8), 16, 10
-        ).cast("bigint")
+        return md5_int(F.concat(F.lit(prefix), F.col("w")), 8)
 
     return (
         toks.select(

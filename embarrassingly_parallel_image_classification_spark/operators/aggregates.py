@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.hashing import md5_int
 from ..localframe import local_df, pin
 from ..registry import register
 from ..sources.tables import cents, t
@@ -548,8 +549,8 @@ def q_agg_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(F.explode(F.split("text", " ")).alias("w"))
 
     def bucket(seed: int, col):
-        h = F.conv(F.substring(F.md5(F.concat(F.lit(str(seed)), col)), 1, 8), 16, 10)
-        return (h.cast("bigint") % _CMS_WIDTH).alias(f"b{seed}")
+        h = md5_int(F.concat(F.lit(str(seed)), col), 8)
+        return (h % _CMS_WIDTH).alias(f"b{seed}")
 
     stack_args = ", ".join(f"{s}, b{s}" for s in range(_CMS_SEEDS))
     b = toks.select(*[bucket(s, F.col("w")) for s in range(_CMS_SEEDS)]).selectExpr(
@@ -1204,10 +1205,7 @@ def q_agg_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     h = (
         t(spark, sf_dir, "orders")
         .select(
-            F.expr(
-                "CAST(conv(substring(md5(CAST(o_custkey AS STRING)), 1, 10),"
-                " 16, 10) AS BIGINT)"
-            ).alias("hv")
+            md5_int(F.col("o_custkey").cast("string"), 10).alias("hv")
         )
         .distinct()
     )

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.hashing import md5_int
 from ..localframe import local_df
 from ..registry import register
 from ..sources.tables import t
@@ -234,13 +235,7 @@ def q_sample_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "source",
         (F.expr("CAST(substring(source, 4) AS INT)") % 4).alias("bucket"),
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("mix"), F.col("doc_id").cast("string"))), 1, 8),
-            16,
-            10,
-        )
-        .cast("bigint")
-        .alias("h"),
+        md5_int(F.concat(F.lit("mix"), F.col("doc_id").cast("string")), 8).alias("h"),
     )
     kept = F.when(F.col("h") < F.col("thr"), 1).otherwise(0)
     return (
@@ -294,9 +289,7 @@ def q_sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     then a 100·partitions merge at the driver), the O(n) reservoir
     shape; the full corpus is never sorted."""
     d = t(spark, sf_dir, "documents").filter(F.col("n_chars") > 0)
-    u = F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10).cast(
-        "bigint"
-    )
+    u = md5_int(F.col("doc_id").cast("string"), 8)
     prio = u / (F.lit(4294967296.0) * F.col("n_chars"))
     return (
         d.select("doc_id", "n_chars", prio.alias("p"))

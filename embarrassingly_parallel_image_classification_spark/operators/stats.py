@@ -41,6 +41,12 @@ cells), ``_fo_census`` (the F-vs-O order samples),
 ``_risk_table`` (survival), ``daily_census`` / ``_type_day_sums`` (per
 type and calendar day; the time-series lines read the census too),
 ``_lower_median`` and ``_orders_strata``.
+
+The oracles share CTE text only through oracle-only fragments, never
+through these builders: ``_events_x`` (events in cents by type as
+(g, cents) or (g, v)), ``_GRP_SQL`` (the per-group (n, s, q) HUGEINT
+census) and ``_FRIEDMAN_CELLS_SQL`` (the Friedman cell/complete
+blocks).
 """
 
 from __future__ import annotations
@@ -48,6 +54,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.hashing import md5_int
 from ..localframe import local_df, pin
 from ..registry import register
 from ..sources.tables import cents, t
@@ -59,6 +66,24 @@ D38 = "decimal(38,0)"
 # D_num^2 * 10^6 > 1358^2 * (n+m) * n * m over exact integers
 # (D_num = max |CA*m - CB*n| is the cross-multiplied sup-distance).
 KS_C2_E6 = 1358 * 1358  # 1,844,164 = round(1.358^2 * 1e6)
+
+
+def _events_x(col: str) -> str:
+    """The ``x`` CTE: events as (g = event type, `col` = exact cents)."""
+    return f"""x AS (
+        SELECT event_type AS g,
+               CAST(ROUND(value * 100, 0) AS BIGINT) AS {col}
+        FROM events
+    )"""
+
+
+# The per-group (n, s, q) = (count, Σ cents, Σ cents²) HUGEINT census.
+_GRP_SQL = """grp AS (
+        SELECT g, CAST(COUNT(*) AS HUGEINT) AS n,
+               CAST(SUM(cents) AS HUGEINT) AS s,
+               CAST(SUM(cents * cents) AS HUGEINT) AS q
+        FROM x GROUP BY g
+    )"""
 
 def fix_e6(num: Column, den: Column) -> Column:
     """round(10^6 * num / den) as an exact DECIMAL(38,0): the e6 DIV/MOD
@@ -980,12 +1005,19 @@ def q_stats_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.array(*[F.lit(b) for b in range(1, BOOTSTRAP_B + 1)])
         ).alias("b"),
         "event_id",
-    ).selectExpr(
+    ).select(
         "event_type",
         "cents",
         "b",
-        "CAST(conv(substring(md5(CAST(event_id AS STRING) || ':' || "
-        "CAST(b AS STRING)), 1, 8), 16, 10) AS BIGINT) % 1000000 AS u",
+        (
+            md5_int(
+                F.concat(
+                    F.col("event_id").cast("string"), F.lit(":"), F.col("b").cast("string")
+                ),
+                8,
+            )
+            % 1000000
+        ).alias("u"),
     )
     weighted = drawn.selectExpr(
         "event_type", "b", "cents", _pois_weight_sql("u") + " AS w"
@@ -1559,17 +1591,8 @@ ANOVA_F_CRIT_E4 = 23719
 @register(
     "q_stats_anova",
     oracle=f"""
-    WITH x AS (
-        SELECT event_type AS g,
-               CAST(ROUND(value * 100, 0) AS BIGINT) AS cents
-        FROM events
-    ),
-    grp AS (
-        SELECT g, CAST(COUNT(*) AS HUGEINT) AS n,
-               CAST(SUM(cents) AS HUGEINT) AS s,
-               CAST(SUM(cents * cents) AS HUGEINT) AS q
-        FROM x GROUP BY g
-    ),
+    WITH {_events_x("cents")},
+    {_GRP_SQL},
     gterm AS (
         SELECT g, n, s, q,
                1000000 * ((s * s) // n)
@@ -1989,11 +2012,7 @@ def _kruskal_groups(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFr
 @register(
     "q_stats_kruskal",
     oracle=f"""
-    WITH x AS (
-        SELECT event_type AS g,
-               CAST(ROUND(value * 100, 0) AS BIGINT) AS v
-        FROM events
-    ),
+    WITH {_events_x("v")},
     per_v AS (
         SELECT v, CAST(COUNT(*) AS BIGINT) AS t FROM x GROUP BY v
     ),
@@ -2785,6 +2804,17 @@ def q_stats_jonckheere(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 FRIEDMAN_K = 5  # event-type treatment domain; blocks = calendar days
+# The Friedman blocks: per (day, type) cent sums on the days every type
+# occurs (oracle-only).
+_FRIEDMAN_CELLS_SQL = f"""cell AS (
+        SELECT CAST(ts AS DATE) AS d, event_type AS g,
+               CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) AS BIGINT) AS v
+        FROM events GROUP BY 1, 2
+    ),
+    complete AS (
+        SELECT d FROM cell GROUP BY d HAVING COUNT(*) = {FRIEDMAN_K}
+    ),
+    c2 AS (SELECT cell.* FROM cell JOIN complete USING (d))"""
 
 
 def _friedman_blocks(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
@@ -2856,15 +2886,7 @@ def _friedman_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_stats_friedman",
     oracle=f"""
-    WITH cell AS (
-        SELECT CAST(ts AS DATE) AS d, event_type AS g,
-               CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) AS BIGINT) AS v
-        FROM events GROUP BY 1, 2
-    ),
-    complete AS (
-        SELECT d FROM cell GROUP BY d HAVING COUNT(*) = {FRIEDMAN_K}
-    ),
-    c2 AS (SELECT cell.* FROM cell JOIN complete USING (d)),
+    WITH {_FRIEDMAN_CELLS_SQL},
     tie AS (SELECT d, v, CAST(COUNT(*) AS BIGINT) AS tcnt
             FROM c2 GROUP BY d, v),
     rk AS (
@@ -3123,11 +3145,7 @@ def q_ts_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_stats_brown_forsythe",
     oracle=f"""
-    WITH x AS (
-        SELECT event_type AS g,
-               CAST(ROUND(value * 100, 0) AS BIGINT) AS cents
-        FROM events
-    ),
+    WITH {_events_x("cents")},
     gv AS (
         SELECT g, cents, CAST(COUNT(*) AS BIGINT) AS c
         FROM x GROUP BY g, cents
@@ -3383,11 +3401,7 @@ DUNN_Z2_E6 = 7_879_439
 @register(
     "q_stats_dunn",
     oracle=f"""
-    WITH x AS (
-        SELECT event_type AS g,
-               CAST(ROUND(value * 100, 0) AS BIGINT) AS v
-        FROM events
-    ),
+    WITH {_events_x("v")},
     per_v AS (
         SELECT v, CAST(COUNT(*) AS BIGINT) AS t FROM x GROUP BY v
     ),
@@ -3538,17 +3552,8 @@ def _group_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_stats_tukey",
     oracle=f"""
-    WITH x AS (
-        SELECT event_type AS g,
-               CAST(ROUND(value * 100, 0) AS BIGINT) AS cents
-        FROM events
-    ),
-    grp AS (
-        SELECT g, CAST(COUNT(*) AS HUGEINT) AS n,
-               CAST(SUM(cents) AS HUGEINT) AS s,
-               CAST(SUM(cents * cents) AS HUGEINT) AS q
-        FROM x GROUP BY g
-    ),
+    WITH {_events_x("cents")},
+    {_GRP_SQL},
     gterm AS (
         SELECT g, n, s, q,
                1000000 * ((s * s) // n)
@@ -3667,17 +3672,8 @@ GH_Q2_E4 = TUKEY_Q2_E4
 @register(
     "q_stats_games_howell",
     oracle=f"""
-    WITH x AS (
-        SELECT event_type AS g,
-               CAST(ROUND(value * 100, 0) AS BIGINT) AS cents
-        FROM events
-    ),
-    grp AS (
-        SELECT g, CAST(COUNT(*) AS HUGEINT) AS n,
-               CAST(SUM(cents) AS HUGEINT) AS s,
-               CAST(SUM(cents * cents) AS HUGEINT) AS q
-        FROM x GROUP BY g
-    ),
+    WITH {_events_x("cents")},
+    {_GRP_SQL},
     gterm AS (
         SELECT g, n, s,
                ((n * q - s * s) * 1000000) // (n * n * (n - 1)) AS u_e6
@@ -3956,11 +3952,7 @@ JB24_E3 = 14_379_516
 @register(
     "q_stats_jarque_bera",
     oracle=f"""
-    WITH x AS (
-        SELECT event_type AS g,
-               CAST(ROUND(value * 100, 0) AS BIGINT) AS cents
-        FROM events
-    ),
+    WITH {_events_x("cents")},
     cen AS (
         SELECT g, CAST(COUNT(*) AS HUGEINT) AS n,
                CAST(SUM(cents) AS HUGEINT) AS s
@@ -4207,11 +4199,7 @@ def q_stats_cramer_von_mises(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_stats_mood_median",
     oracle=f"""
-    WITH x AS (
-        SELECT event_type AS g,
-               CAST(ROUND(value * 100, 0) AS BIGINT) AS cents
-        FROM events
-    ),
+    WITH {_events_x("cents")},
     pv AS (
         SELECT cents, CAST(COUNT(*) AS BIGINT) AS c FROM x GROUP BY cents
     ),
@@ -4931,15 +4919,7 @@ def q_stats_cmh(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_stats_page_trend",
     oracle=f"""
-    WITH cell AS (
-        SELECT CAST(ts AS DATE) AS d, event_type AS g,
-               CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) AS BIGINT) AS v
-        FROM events GROUP BY 1, 2
-    ),
-    complete AS (
-        SELECT d FROM cell GROUP BY d HAVING COUNT(*) = {FRIEDMAN_K}
-    ),
-    c2 AS (SELECT cell.* FROM cell JOIN complete USING (d)),
+    WITH {_FRIEDMAN_CELLS_SQL},
     tie AS (SELECT d, v, CAST(COUNT(*) AS BIGINT) AS tcnt
             FROM c2 GROUP BY d, v),
     rk AS (
@@ -5415,15 +5395,7 @@ def q_stats_mh_odds(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_stats_kendall_w",
     oracle=f"""
-    WITH cell AS (
-        SELECT CAST(ts AS DATE) AS d, event_type AS g,
-               CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) AS BIGINT) AS v
-        FROM events GROUP BY 1, 2
-    ),
-    complete AS (
-        SELECT d FROM cell GROUP BY d HAVING COUNT(*) = {FRIEDMAN_K}
-    ),
-    c2 AS (SELECT cell.* FROM cell JOIN complete USING (d)),
+    WITH {_FRIEDMAN_CELLS_SQL},
     tie AS (SELECT d, v, CAST(COUNT(*) AS BIGINT) AS tcnt
             FROM c2 GROUP BY d, v),
     rk AS (
@@ -5633,15 +5605,7 @@ def q_stats_cohen_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_stats_cronbach_alpha",
     oracle=f"""
-    WITH cell AS (
-        SELECT CAST(ts AS DATE) AS d, event_type AS g,
-               CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) AS BIGINT) AS v
-        FROM events GROUP BY 1, 2
-    ),
-    complete AS (
-        SELECT d FROM cell GROUP BY d HAVING COUNT(*) = {FRIEDMAN_K}
-    ),
-    c2 AS (SELECT cell.* FROM cell JOIN complete USING (d)),
+    WITH {_FRIEDMAN_CELLS_SQL},
     nn AS (SELECT CAST(COUNT(*) AS HUGEINT) AS n FROM complete),
     items AS (
         SELECT CAST(SUM(vi) AS HUGEINT) AS sum_vi
@@ -5941,18 +5905,9 @@ def q_stats_brunner_munzel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_stats_eta_squared",
-    oracle="""
-    WITH x AS (
-        SELECT event_type AS g,
-               CAST(ROUND(value * 100, 0) AS BIGINT) AS cents
-        FROM events
-    ),
-    grp AS (
-        SELECT g, CAST(COUNT(*) AS HUGEINT) AS n,
-               CAST(SUM(cents) AS HUGEINT) AS s,
-               CAST(SUM(cents * cents) AS HUGEINT) AS q
-        FROM x GROUP BY g
-    ),
+    oracle=f"""
+    WITH {_events_x("cents")},
+    {_GRP_SQL},
     gterm AS (
         SELECT n, s, q,
                1000000 * ((s * s) // n)
@@ -6707,11 +6662,7 @@ POWER_ZSUM2_E6 = 7_848_879
 @register(
     "q_ab_power",
     oracle=f"""
-    WITH x AS (
-        SELECT event_type AS g,
-               CAST(ROUND(value * 100, 0) AS BIGINT) AS v
-        FROM events
-    ),
+    WITH {_events_x("v")},
     census AS (
         SELECT g, CAST(COUNT(*) AS HUGEINT) AS n,
                CAST(SUM(v) AS HUGEINT) AS s,
@@ -6787,12 +6738,8 @@ def q_ab_power(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_agg_trimmed_mean",
-    oracle="""
-    WITH x AS (
-        SELECT event_type AS g,
-               CAST(ROUND(value * 100, 0) AS BIGINT) AS v
-        FROM events
-    ),
+    oracle=f"""
+    WITH {_events_x("v")},
     pv AS (
         SELECT g, v, CAST(COUNT(*) AS BIGINT) AS t
         FROM x GROUP BY g, v

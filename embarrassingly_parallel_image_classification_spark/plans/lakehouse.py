@@ -118,6 +118,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.hashing import md5_int
 from ..localframe import local_df, pin
 from ..registry import register
 from ..sources.tables import cents, t
@@ -2711,13 +2712,7 @@ def add_bloom_index(path: str, col: str, spark: SparkSession | None = None) -> i
             F.array(
                 *[
                     F.pmod(
-                        F.conv(
-                            F.substring(
-                                F.md5(F.concat(F.lit(f"{s}:"), val)), 1, 16
-                            ),
-                            16,
-                            10,
-                        ).cast("decimal(20,0)"),
+                        md5_int(F.concat(F.lit(f"{s}:"), val), 16),
                         F.lit(_BLOOM_BITS),
                     ).cast("int")
                     for s in range(_BLOOM_K)

@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.hashing import md5_int
+from ..ml.dedup import pair_ctes
 from ..registry import register
 from ..sources.tables import t
 from ..ml.curation import (
@@ -186,16 +188,7 @@ def q_quality_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
                UNNEST(list_transform(range(1, len(ws) - 1),
                       i -> array_to_string(ws[i : i + 2], ' '))) AS shingle
         FROM ktoks),
-    sizes AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id),
-    inter AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
-        FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2),
-    pairs AS (
-        SELECT id_a, id_b FROM inter
-        JOIN sizes sa ON sa.doc_id = id_a
-        JOIN sizes sb ON sb.doc_id = id_b
-        WHERE inter / (sa.sz + sb.sz - inter) >= 0.5),
+    {pair_ctes(4, 8, inline=True)},
     e2 AS (SELECT id_a AS src, id_b AS dst FROM pairs
            UNION ALL SELECT id_b, id_a FROM pairs),
     reach(node, lab) AS (
@@ -569,20 +562,7 @@ def q_pipeline_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("lang", "rate_e6")
     )
-    u = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(F.col("doc_id").cast("string"), F.lit("-mix42"))
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 1000000
-    )
+    u = md5_int(F.concat(F.col("doc_id").cast("string"), F.lit("-mix42")), 8) % 1000000
     flags = flags.join(F.broadcast(rates), "lang", "left").withColumn(
         "mix", F.col("dec") & (u < F.coalesce("rate_e6", F.lit(0)))
     )
@@ -616,12 +596,7 @@ def q_pipeline_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_docs",
         "n_chars",
     )
-    fold = (
-        F.conv(
-            F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10
-        ).cast("bigint")
-        % 5
-    )
+    fold = md5_int(F.col("doc_id").cast("string"), 8) % 5
     folded = (
         flags.filter("mix")
         .groupBy("lang", fold.alias("fold"))

@@ -29,6 +29,7 @@ import tempfile
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.hashing import md5_int
 from ..localframe import local_df
 from ..registry import register
 from ..sources.tables import cents, t
@@ -242,10 +243,10 @@ def q_scale_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     orderkey at write time → the join itself plans with no Exchange
     (asserted in tests); values equal the plain join."""
     lt, ot = bucket_table_names(sf_dir)
-    # Trust the per-bucket sortBy order at scan time (one file per
-    # bucket, see write_bucketed) — this is what removes the Sort under
-    # the SMJ, not just the Exchange.
-    spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
+    # The scan trusts the per-bucket sortBy order (one file per bucket,
+    # see write_bucketed; spark.sql.legacy.bucketedTableScan.
+    # outputOrdering is an ENGINE_CONFS entry) — this is what removes
+    # the Sort under the SMJ, not just the Exchange.
     if not spark.catalog.tableExists(lt):
         write_bucketed(t(spark, sf_dir, "lineitem"), lt, "l_orderkey")
     if not spark.catalog.tableExists(ot):
@@ -524,9 +525,7 @@ def row_fingerprint60(*cols) -> "F.Column":
                    else c.cast("string"), F.lit(_NULL_SENTINEL))
         for c in cols
     ]
-    return F.conv(
-        F.substring(F.md5(F.concat_ws("|", *safe)), 1, 15), 16, 10
-    ).cast("bigint")
+    return md5_int(F.concat_ws("|", *safe), 15)
 
 
 def checksum_report(df: DataFrame) -> DataFrame:

@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 
 from ..localframe import local_df
 from ..registry import register
-from ..sources.tables import cents, t
+from ..sources.tables import cents, cents_sql, t
 
 
 def _qty(colname: str = "l_quantity"):
@@ -860,12 +860,11 @@ def q_sql_pipe(spark: SparkSession, sf_dir: str) -> DataFrame:
     front ends agree to the cent."""
     t(spark, sf_dir, "lineitem").createOrReplaceTempView("__pipe_lineitem")
     return spark.sql(
-        """
+        f"""
         FROM __pipe_lineitem
         |> WHERE CAST(l_shipdate AS DATE) <= DATE '1998-09-01'
-        |> EXTEND CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT) AS cents,
-                  CAST(ROUND(l_extendedprice * (1 - l_discount) * 100, 0)
-                       AS BIGINT) AS dcents
+        |> EXTEND {cents_sql("l_extendedprice")} AS cents,
+                  {cents_sql("l_extendedprice * (1 - l_discount)")} AS dcents
         |> AGGREGATE COUNT(*) AS n_items,
                      CAST(SUM(cents) AS BIGINT) AS gross_c,
                      CAST(SUM(dcents) AS BIGINT) AS disc_c
@@ -906,7 +905,7 @@ def q_sql_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     t(spark, sf_dir, "orders").createOrReplaceTempView("__udf_orders")
     spark.sql(
         "CREATE OR REPLACE TEMPORARY FUNCTION cents(x DOUBLE) "
-        "RETURNS BIGINT RETURN CAST(ROUND(x * 100, 0) AS BIGINT)"
+        f"RETURNS BIGINT RETURN {cents_sql('x')}"
     )
     spark.sql(
         """
@@ -1031,22 +1030,21 @@ def q_sql_variables(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.sql(
         "DECLARE OR REPLACE VARIABLE __big_thr BIGINT DEFAULT 0"
     )
+    price = cents_sql("o_totalprice")
     spark.sql(
-        """
+        f"""
         SET VAR __big_thr =
-            (SELECT MAX(CAST(ROUND(o_totalprice * 100, 0) AS BIGINT))
-                    * 3 DIV 4
+            (SELECT MAX({price}) * 3 DIV 4
              FROM __var_orders)
         """
     )
     return spark.sql(
-        """
+        f"""
         SELECT o_orderpriority,
                COUNT(*) AS n,
-               CAST(SUM(CAST(ROUND(o_totalprice * 100, 0) AS BIGINT))
-                    AS BIGINT) AS cents
+               CAST(SUM({price}) AS BIGINT) AS cents
         FROM __var_orders
-        WHERE CAST(ROUND(o_totalprice * 100, 0) AS BIGINT) > __big_thr
+        WHERE {price} > __big_thr
         GROUP BY o_orderpriority
         """
     )
@@ -1080,11 +1078,10 @@ def q_sql_parameterized(spark: SparkSession, sf_dir: str) -> DataFrame:
     spelling: pushdown and partial aggregation intact."""
     t(spark, sf_dir, "orders").createOrReplaceTempView("__param_orders")
     return spark.sql(
-        """
+        f"""
         SELECT o_orderpriority,
                CAST(COUNT(*) AS BIGINT) AS n,
-               CAST(SUM(CAST(ROUND(o_totalprice * 100, 0) AS BIGINT))
-                    AS BIGINT) AS cents
+               CAST(SUM({cents_sql("o_totalprice")}) AS BIGINT) AS cents
         FROM IDENTIFIER(:tbl)
         WHERE o_totalprice > :minp AND o_orderstatus = :status
         GROUP BY o_orderpriority
@@ -1121,12 +1118,11 @@ def q_sql_group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate with pushdown intact."""
     t(spark, sf_dir, "orders").createOrReplaceTempView("__gba_orders")
     return spark.sql(
-        """
+        f"""
         SELECT o_orderpriority,
                CAST(year(o_orderdate) AS BIGINT) AS yr,
                COUNT(*) AS n,
-               CAST(SUM(CAST(ROUND(o_totalprice * 100, 0) AS BIGINT))
-                    AS BIGINT) AS cents
+               CAST(SUM({cents_sql("o_totalprice")}) AS BIGINT) AS cents
         FROM __gba_orders
         GROUP BY ALL
         ORDER BY ALL
@@ -1282,11 +1278,11 @@ def q_sql_execute_immediate(spark: SparkSession, sf_dir: str) -> DataFrame:
     string once at EXECUTE time; the parquet scan keeps its pushed
     quantity filter (the template does not defeat pushdown)."""
     t(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
+    revenue = cents_sql("IDENTIFIER('l_' || 'extendedprice')")
     template = (
         "SELECT l_returnflag, "
         "CAST(COUNT(*) AS BIGINT) AS n, "
-        "CAST(SUM(CAST(ROUND(IDENTIFIER('l_' || 'extendedprice') * 100, 0)"
-        " AS BIGINT)) AS BIGINT) AS revenue_cents "
+        f"CAST(SUM({revenue}) AS BIGINT) AS revenue_cents "
         "FROM IDENTIFIER('line' || 'item') "
         "WHERE l_quantity < ? "
         "GROUP BY l_returnflag"
@@ -1347,8 +1343,7 @@ def q_sql_udf_lateral(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.sql(
         "CREATE OR REPLACE TEMPORARY FUNCTION rev_e4(p DOUBLE, d DOUBLE) "
         "RETURNS BIGINT "
-        "RETURN CAST(ROUND(p * 100, 0) AS BIGINT) "
-        "       * (100 - CAST(ROUND(d * 100, 0) AS BIGINT))"
+        f"RETURN {cents_sql('p')} * (100 - {cents_sql('d')})"
     )
     spark.sql(
         "CREATE OR REPLACE TEMPORARY FUNCTION qty_tiers(q DOUBLE) "
@@ -1414,24 +1409,25 @@ def q_sql_exec_into(spark: SparkSession, sf_dir: str) -> DataFrame:
     the parquet reader."""
     t(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     spark.sql("DECLARE OR REPLACE VARIABLE hi_cutoff_cents BIGINT")
+    price = cents_sql("o_totalprice")
     spark.sql(
         "SET VAR hi_cutoff_cents = "
-        "(SELECT SUM(CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)) "
+        f"(SELECT SUM({price}) "
         " DIV COUNT(*) FROM orders)"
     )
     spark.sql("DECLARE OR REPLACE VARIABLE n_hi BIGINT")
     spark.sql(
         "EXECUTE IMMEDIATE "
         "'SELECT CAST(COUNT(*) AS BIGINT) FROM orders "
-        " WHERE CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)"
+        f" WHERE {price}"
         " > hi_cutoff_cents' INTO n_hi"
     )
     return spark.sql(
-        """
+        f"""
         SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS n_above,
                hi_cutoff_cents AS cutoff_cents, n_hi AS n_hi_total
         FROM orders
-        WHERE CAST(ROUND(o_totalprice * 100, 0) AS BIGINT) > hi_cutoff_cents
+        WHERE {price} > hi_cutoff_cents
         GROUP BY o_orderpriority
         """
     )
@@ -1582,10 +1578,10 @@ def q_sql_lateral_alias(spark: SparkSession, sf_dir: str) -> DataFrame:
     column pruning reaches the scan."""
     t(spark, sf_dir, "orders").createOrReplaceTempView("__lca_orders")
     return spark.sql(
-        """
+        f"""
         WITH x AS (
             SELECT o_orderpriority,
-                   CAST(ROUND(o_totalprice * 100, 0) AS BIGINT) AS cents,
+                   {cents_sql("o_totalprice")} AS cents,
                    cents - cents % 500000 AS bucket_cents,
                    bucket_cents div 100 AS bucket_dollars
             FROM __lca_orders

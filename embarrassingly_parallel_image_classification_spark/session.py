@@ -37,6 +37,14 @@ ENGINE_CONFS: dict[str, str] = {
     # no-op for µs/ms files. Set for the whole session so no loader flips
     # it mid-run.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # Both are read when a plan runs, after the query function returned,
+    # so a query cannot set and restore them; set here, they hold for
+    # every query alike. Python data sources receive their filters
+    # (sources/custom.pushdown_table), and a bucketed scan trusts its
+    # per-bucket sort (plans/scale.q_scale_bucketed_join: no Sort under
+    # the bucketed merge join).
+    "spark.sql.python.filterPushdown.enabled": "true",
+    "spark.sql.legacy.bucketedTableScan.outputOrdering": "true",
 }
 
 

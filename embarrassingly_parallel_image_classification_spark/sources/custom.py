@@ -611,9 +611,9 @@ def _make_pushdown_datasource():
 
 
 def pushdown_table(spark: SparkSession, n: int = 10_000, parts: int = 8) -> DataFrame:
-    """Register (idempotent) and read the pushdown-capable source; the
-    caller must enable spark.sql.python.filterPushdown.enabled."""
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+    """Register (idempotent) and read the pushdown-capable source. Its
+    filters reach ``pushFilters`` only with
+    spark.sql.python.filterPushdown.enabled, an ENGINE_CONFS entry."""
     spark.dataSource.register(_make_pushdown_datasource())
     return (
         spark.read.format("epic_synthetic_pushdown")

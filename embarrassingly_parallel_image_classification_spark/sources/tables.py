@@ -126,6 +126,14 @@ def cents(col: str | Column) -> Column:
     return F.round(c * 100, 0).cast("bigint")
 
 
+def cents_sql(x: str) -> str:
+    """``cents`` as Spark SQL text, for the lines whose surface under
+    test is the SQL front end (``spark.sql`` texts, SQL function
+    bodies): HALF_UP of the SQL expression `x` times 100, cast to
+    BIGINT. It parses to the same expression as ``cents``."""
+    return f"CAST(ROUND({x} * 100, 0) AS BIGINT)"
+
+
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Shorthand used throughout the operator library."""
     return load_table(spark, sf_dir, name)

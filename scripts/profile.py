@@ -252,8 +252,11 @@ def time_queries(a) -> None:
     plus per pass the jobs of the query's job group, their summed wall
     time, the driver gap total_s - job wall, and the jobs launched by
     localframe.pin (description "pin:<label>") with their wall time.
-    The last stdout line is the JSON record. Job times come from the status store, which
-    keeps the last spark.ui.retainedJobs (1000) jobs."""
+    The last stdout line is the JSON record. Each (query, pass) runs in
+    its own job group, read from the status store right after that pass
+    with the listener bus drained: the store keeps only the last
+    spark.ui.retainedJobs (1000) jobs, so a read after all passes would
+    miss the early passes' jobs."""
     from embarrassingly_parallel_image_classification_spark import registry
 
     sf = sf_dir("sf0.1")
@@ -261,6 +264,7 @@ def time_queries(a) -> None:
     names = select(a, qs)
     spark = session("profile-time")
     sc = spark.sparkContext
+    jsc = sc._jsc.sc()
 
     def run(n):
         t0 = time.perf_counter()
@@ -269,44 +273,50 @@ def time_queries(a) -> None:
         df.write.format("noop").mode("overwrite").save()
         return t1 - t0, time.perf_counter() - t0
 
-    def grouped(n):
-        sc.setJobGroup(n, f"profile:{n}")
-        return run(n)
-
-    errors: dict[str, str] = {}
-    # untimed warm pass: JIT, parquet footers, Python workers, index builds
-    for _ in each(names, run, errors):
-        pass
-    best: dict[str, list[float]] = {}
-    for _ in range(a.passes):
-        for n, (b, t) in each(names, grouped, errors):
-            old = best.get(n, [math.inf, math.inf])
-            best[n] = [min(old[0], b), min(old[1], t)]
-    store = sc._jsc.sc().statusStore()
-    out = {}
-    for n, (b, t) in best.items():
-        if n in errors:
-            continue
-        jobs = sc.statusTracker().getJobIdsForGroup(n)
-        wall = pin_wall = 0.0
-        pins = 0
-        for j in jobs:
-            jd = store.job(j)
+    def jobs_of(group) -> list[float]:
+        """[jobs, summed job wall s, pin jobs, pin wall s] of one group."""
+        jsc.listenerBus().waitUntilEmpty()
+        tally = [0, 0.0, 0, 0.0]
+        for j in sc.statusTracker().getJobIdsForGroup(group):
+            jd = jsc.statusStore().job(j)
             dt = 0.0
             if jd.submissionTime().isDefined() and jd.completionTime().isDefined():
                 dt = (
                     jd.completionTime().get().getTime()
                     - jd.submissionTime().get().getTime()
                 ) / 1000
-            wall += dt
             desc = jd.description()
-            if desc.isDefined() and desc.get().startswith("pin:"):
-                pins += 1
-                pin_wall += dt
+            pin = desc.isDefined() and desc.get().startswith("pin:")
+            for i, v in enumerate((1, dt, int(pin), dt if pin else 0.0)):
+                tally[i] += v
+        return tally
+
+    def grouped(n, p):
+        group = f"{n}#{p}"
+        sc.setJobGroup(group, f"profile:{n}")
+        out = run(n)
+        return out, jobs_of(group)
+
+    errors: dict[str, str] = {}
+    # untimed warm pass: JIT, parquet footers, Python workers, index builds
+    for _ in each(names, run, errors):
+        pass
+    best: dict[str, list[float]] = {}
+    tallies: dict[str, list[float]] = {}
+    for p in range(a.passes):
+        for n, ((b, t), tally) in each(names, lambda n: grouped(n, p), errors):
+            old = best.get(n, [math.inf, math.inf])
+            best[n] = [min(old[0], b), min(old[1], t)]
+            tallies[n] = [x + y for x, y in zip(tallies.get(n, [0] * 4), tally)]
+    out = {}
+    for n, (b, t) in best.items():
+        if n in errors:
+            continue
+        jobs, wall, pins, pin_wall = tallies[n]
         out[n] = {
             "total_s": round(t, 3),
             "build_s": round(b, 3),
-            "jobs": round(len(jobs) / a.passes, 1),
+            "jobs": round(jobs / a.passes, 1),
             "job_wall_s": round(wall / a.passes, 3),
             "gap_s": round(t - wall / a.passes, 3),
             "pins": round(pins / a.passes, 1),

@@ -1266,6 +1266,182 @@ def test_money_to_cents_spelled_once():
 
     found = _package_calls(match)
     assert set(found) <= {("sources/tables.py", "cents")}, found
+    # spark.sql texts (the SQL front-end lines) render the rule through
+    # tables.cents_sql; q_sql_portable and q_sql_decorrelate run their
+    # oracle's own text on purpose.
+    sql_rule = re.compile(
+        r"ROUND\((?:[^()]|\([^()]*\))*?\*\s*100\s*,\s*0\s*\)", re.IGNORECASE
+    )
+    found = {
+        k: v for k, v in _sql_texts().items() if any(sql_rule.search(x) for x in v)
+    }
+    assert set(found) <= {
+        ("plans/tpch2.py", "q_sql_portable"),
+        ("plans/tpch2.py", "q_sql_decorrelate"),
+    }, found
+
+
+def _sql_texts() -> dict[tuple[str, str], list[str]]:
+    """{(module, innermost enclosing def): [text, ...]} of the literal
+    SQL reaching each ``spark.sql`` call in the package: string and
+    f-string arguments (their literal parts) and names bound to them in
+    the enclosing function or at module level, followed once."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / (
+        "embarrassingly_parallel_image_classification_spark"
+    )
+    out: dict[tuple[str, str], list[str]] = {}
+    for path in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        owner: dict[int, ast.AST] = {}
+        for node in ast.walk(tree):  # outer defs first, inner ones overwrite
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                for ln in range(node.lineno, node.end_lineno + 1):
+                    owner[ln] = node
+
+        def bound(scope) -> dict[str, ast.AST]:
+            return {
+                t.id: n.value
+                for n in ast.walk(scope)
+                if isinstance(n, ast.Assign)
+                for t in n.targets
+                if isinstance(t, ast.Name)
+            }
+
+        module_names = bound(tree)
+        for call in ast.walk(tree):
+            if not (
+                isinstance(call, ast.Call)
+                and isinstance(call.func, ast.Attribute)
+                and call.func.attr == "sql"
+            ):
+                continue
+            fn = owner.get(call.lineno)
+            names = {**module_names, **(bound(fn) if fn else {})}
+            texts = []
+            todo = list(call.args) + [k.value for k in call.keywords]
+            seen = set()
+            while todo:
+                node = todo.pop()
+                for n in ast.walk(node):
+                    if isinstance(n, ast.Constant) and isinstance(n.value, str):
+                        texts.append(n.value)
+                    elif isinstance(n, ast.Name) and n.id in names and n.id not in seen:
+                        seen.add(n.id)
+                        todo.append(names[n.id])
+            key = (path.relative_to(pkg).as_posix(), fn.name if fn else "<module>")
+            out.setdefault(key, []).extend(texts)
+    return out
+
+
+def test_portable_hash_spelled_once():
+    """Source lint: the portable hash (md5 hex digits read as an
+    integer) is spelled on the Spark side only in
+    ``functions.hashing.md5_int``, which owns the width rule (15 hex
+    digits fit a signed BIGINT, 16 need DECIMAL(20,0)): no other call
+    is ``conv``, and no ``expr``/``selectExpr`` string carries
+    ``conv(``. The DuckDB oracles keep their own ``('0x' || …)::BIGINT``
+    spelling and are not checked."""
+    import ast
+
+    def match(c) -> bool:
+        if c.func.attr == "conv":
+            return True
+        return c.func.attr in ("expr", "selectExpr") and any(
+            "conv(" in ast.unparse(a) for a in c.args
+        )
+
+    found = _package_calls(match)
+    assert list(found) == [("functions/hashing.py", "md5_int")], found
+
+
+def test_dedup_family_steps_spelled_once():
+    """Source lint: each step the near-duplicate tiers share is spelled
+    once in ``ml/dedup.py`` — the exact tau rational
+    (``_tau_rational``), the rare-first ranking (``_rare_first_prefix``:
+    the only window ordered by document frequency), the integer ceil
+    bound and the ``array_intersect`` verify of the prefix join
+    (``_prefix_join``; containment keeps its own verify), the banded
+    LSH candidate join (``_band_pairs``: the only join on ``band``), and
+    Charikar's bit-vote fold (``_charikar``: the only ``shiftright``)."""
+    import ast
+
+    def calls(match) -> set[str]:
+        return set(_calls_by_function("ml/dedup.py", match))
+
+    def arg_text(c) -> str:
+        return " ".join(ast.unparse(a) for a in c.args)
+
+    assert calls(lambda c: c.func.attr == "limit_denominator") == {"_tau_rational"}
+    assert calls(
+        lambda c: c.func.attr == "orderBy" and "df" in arg_text(c)
+    ) == {"_rare_first_prefix"}
+    assert calls(
+        lambda c: c.func.attr == "expr" and re.search(r"\* sz\w* \+", arg_text(c))
+    ) == {"_prefix_join"}
+    assert calls(lambda c: c.func.attr == "array_intersect") == {
+        "_prefix_join",
+        "q_dedup_containment",
+    }
+    assert calls(
+        lambda c: c.func.attr == "join"
+        and not isinstance(c.func.value, ast.Constant)  # str.join
+        and "band" in arg_text(c)
+    ) == {"_band_pairs"}
+    assert calls(lambda c: c.func.attr == "shiftright") == {"_charikar"}
+
+
+def test_session_confs_set_in_session_or_restored():
+    """Source lint: a query never leaves a session conf behind. A
+    ``conf.set`` in the package sits in ``session.py`` (the
+    ENGINE_CONFS every query runs under) or in a function that restores
+    the same key in a ``finally`` (set back or unset), as
+    ``streaming/core.py``, ``sources/formats.py`` and ``plans/tpch2.py``
+    do. A conf read only when the plan runs, after the query function
+    returned, cannot be restored and belongs in ENGINE_CONFS."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / (
+        "embarrassingly_parallel_image_classification_spark"
+    )
+
+    def conf_calls(node, verbs):
+        return [
+            c
+            for c in ast.walk(node)
+            if isinstance(c, ast.Call)
+            and isinstance(c.func, ast.Attribute)
+            and c.func.attr in verbs
+            and ast.unparse(c.func.value).endswith("conf")
+            and c.args
+        ]
+
+    left: list[str] = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        if rel == "session.py":
+            continue
+        tree = ast.parse(path.read_text())
+        owner: dict[int, ast.AST] = {}
+        for node in ast.walk(tree):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                for ln in range(node.lineno, node.end_lineno + 1):
+                    owner[ln] = node
+        for c in conf_calls(tree, ("set",)):
+            fn = owner.get(c.lineno)
+            restored = {
+                ast.unparse(r.args[0])
+                for t in (ast.walk(fn) if fn else ())
+                if isinstance(t, ast.Try)
+                for s in t.finalbody
+                for r in conf_calls(s, ("set", "unset"))
+            }
+            if ast.unparse(c.args[0]) not in restored:
+                left.append(f"{rel}:{c.lineno} {ast.unparse(c)}")
+    assert not left, left
 
 
 def test_apply_in_pandas_with_state_only_in_drain_builder():

@@ -65,11 +65,10 @@ def test_prefix_filter_lossless_on_random_corpora(spark, texts):
 @given(_corpus)
 def test_prefix_filter_lossless_at_non_dyadic_tau(spark, texts):
     """Same losslessness property at tau=0.3 — NOT exactly representable
-    in binary. A float ceil(tau*sz) can round up past the true integer
-    (e.g. ceil(0.1*10) = ceil(1.0000000000000002) = 2, not 1),
-    shortening the prefix below the theorem's bound and
-    silently dropping true pairs; the integer (num·sz+den−1) div den
-    bound in jaccard_pairs_at must not (round-4 ADVICE item 1)."""
+    in binary, so the bounds must come from the exact rational 3/10. (A
+    float ceil(0.3*sz) happens to be right for every sz below 400, so
+    the float-ceil failure itself is pinned by the boundary test
+    below.)"""
     rows = [(i, t) for i, t in enumerate(texts)]
     d = spark.createDataFrame(rows, "doc_id bigint, text string")
     fast = {
@@ -83,6 +82,28 @@ def test_prefix_filter_lossless_at_non_dyadic_tau(spark, texts):
         .collect()
     }
     assert fast == naive
+
+
+def test_prefix_filter_keeps_the_pair_a_float_ceil_drops(spark):
+    """A pair exactly at the threshold whose only shared shingles rank
+    last in one side's rare-first order. At tau = 0.07 and |A| = 100 a
+    float ceil(0.07 * 100) is ceil(7.000000000000001) = 8, one more than
+    the true 7, so a float bound shortens A's prefix by one and loses
+    the pair; the integer bound (num·sz + den − 1) div den keeps it."""
+    words = [f"w{i}" for i in range(102)]  # 100 distinct trigrams
+    texts = [" ".join(words), " ".join(words[-9:])]  # B = A's last 7
+    d = spark.createDataFrame(list(enumerate(texts)), "doc_id bigint, text string")
+    fast = {
+        (r.id_a, r.id_b, r.jaccard)
+        for r in dedup.jaccard_pairs_at(d, 0.07).collect()
+    }
+    naive = {
+        (r.id_a, r.id_b, r.jaccard)
+        for r in dedup.jaccard_pairs(d)
+        .filter(F.col("jaccard_raw") >= 0.07)
+        .collect()
+    }
+    assert fast == naive == {(0, 1, 0.07)}
 
 
 _edges = st.lists(
@@ -479,6 +500,8 @@ def test_lakehouse_interleaved_writers_match_the_sequential_model(
     suppress_health_check=[HealthCheck.too_slow],
 )
 @given(_corpus)
+# an existing copy with the larger id: the cross join has no a < b
+@example(texts=["eps zeta", "alpha beta gamma delta", "alpha beta gamma delta"])
 def test_incremental_cross_join_lossless_on_random_corpora(spark, texts):
     """jaccard_cross_at (round-6 incremental screen) == the naive
     all-pairs join restricted to cross pairs, for ANY corpus and a

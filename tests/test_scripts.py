@@ -101,3 +101,27 @@ def test_plans_summary_and_dump_match_across_processes(tmp_path):
     assert "lake_clone_src" in rows[0] and rows[0] == rows[1]
     a, b = ((tmp_path / f"q_lake_clone_{s}.txt").read_text() for s in "ab")
     assert "Location" in a and a == b
+
+
+def test_time_counts_every_pass_past_the_job_retention():
+    """`profile.py time` reads each (query, pass) job group right after
+    that pass. With the status store keeping only the last 2 jobs, a
+    three-pass run over two one-scan lines still counts the first
+    line's jobs in every pass, the same per pass as the second line's;
+    a read after all passes finds the first line's jobs evicted."""
+    import json
+
+    names = ["q_project", "q_filter"]
+    out = subprocess.run(
+        [sys.executable, os.path.join(ROOT, "scripts", "profile.py"), "time",
+         *names, "--passes", "3"],
+        capture_output=True, text=True, check=True, cwd=ROOT,
+        env={
+            **os.environ,
+            "SPARK_GRAFT_SF_DIR": SF_SMOKE,
+            "PYSPARK_SUBMIT_ARGS": "--conf spark.ui.retainedJobs=2 pyspark-shell",
+        },
+    ).stdout
+    rec = json.loads(out.strip().splitlines()[-1])["queries"]
+    jobs = [rec[n]["jobs"] for n in names]
+    assert jobs[0] == jobs[1] >= 1, rec
