@@ -18,8 +18,11 @@ nothing measurable.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..registry import register
+from ..sources.tables import t
 
 
 def _c(col: str | Column) -> Column:
@@ -91,11 +94,6 @@ def quantize_e6(x: str | Column) -> Column:
 # NumPy; this is the scale path that replaces that when the corpus
 # stops fitting on the driver.
 # ---------------------------------------------------------------------------
-
-from pyspark.sql import DataFrame, SparkSession  # noqa: E402
-
-from ..registry import register  # noqa: E402
-from ..sources.tables import t  # noqa: E402
 
 
 @register(

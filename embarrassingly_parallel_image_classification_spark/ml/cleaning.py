@@ -158,6 +158,27 @@ def q_dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# The oracle twin of ``drift_report`` over a ``b`` (bucket, is_ref)
+# CTE: per-bucket reference/current counts, their totals, and each
+# bucket's exact cross-difference and e6 TVD contribution.
+_DRIFT_REPORT_SQL = """agg AS (
+        SELECT bucket,
+               CAST(SUM(is_ref) AS BIGINT) AS ref_n,
+               CAST(SUM(1 - is_ref) AS BIGINT) AS cur_n
+        FROM b GROUP BY bucket
+    ),
+    tot AS (
+        SELECT CAST(SUM(ref_n) AS BIGINT) AS rt,
+               CAST(SUM(cur_n) AS BIGINT) AS ct
+        FROM agg
+    )
+    SELECT bucket, ref_n, cur_n,
+           CAST(cur_n * rt - ref_n * ct AS BIGINT) AS dxr,
+           CAST(ABS(cur_n * rt - ref_n * ct) * 1000000 // (rt * ct)
+                AS BIGINT) AS tvd_e6
+    FROM agg CROSS JOIN tot"""
+
+
 def drift_report(agg: DataFrame) -> DataFrame:
     """Shared drift ALGEBRA for the batch/stream twin pair
     (q_quality_drift here, streaming/queries.py q_stream_drift): given
@@ -190,28 +211,13 @@ def drift_report(agg: DataFrame) -> DataFrame:
 
 @register(
     "q_quality_drift",
-    oracle="""
+    oracle=f"""
     WITH b AS (
         SELECT CAST(ROUND(o_totalprice * 100) AS BIGINT) // 5000000 AS bucket,
                CASE WHEN year(o_orderdate) < 1998 THEN 1 ELSE 0 END AS is_ref
         FROM orders
     ),
-    agg AS (
-        SELECT bucket,
-               CAST(SUM(is_ref) AS BIGINT) AS ref_n,
-               CAST(SUM(1 - is_ref) AS BIGINT) AS cur_n
-        FROM b GROUP BY bucket
-    ),
-    tot AS (
-        SELECT CAST(SUM(ref_n) AS BIGINT) AS rt,
-               CAST(SUM(cur_n) AS BIGINT) AS ct
-        FROM agg
-    )
-    SELECT bucket, ref_n, cur_n,
-           CAST(cur_n * rt - ref_n * ct AS BIGINT) AS dxr,
-           CAST(ABS(cur_n * rt - ref_n * ct) * 1000000 // (rt * ct)
-                AS BIGINT) AS tvd_e6
-    FROM agg CROSS JOIN tot
+    {_DRIFT_REPORT_SQL}
     """,
     tags=("D3", "K4"),
 )

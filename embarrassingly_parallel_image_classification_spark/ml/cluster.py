@@ -35,6 +35,13 @@ assignment feeding a K-row aggregate. (An earlier draft kept centroids
 as a DataFrame and paid a per-round groupBy(vec_id) argmin shuffle
 plus a vec_id join — the review caught the docstring/plan mismatch;
 this spelling is the one the docs always claimed.)
+
+The SemDeDup oracles share their CTE text through oracle-only
+fragments: ``_sem_training_ctes`` (the corpus, its quantized long form,
+the init and the hard Lloyd rounds; twin of ``_semantic_trained``),
+``_sem_assign_sql`` (one argmin assignment round; twin of ``_best``)
+and ``_SEM_NEAR_SQL`` (the same-cell exact-cosine pair condition).
+The long-form assignments share ``_longform_dist``.
 """
 
 from __future__ import annotations
@@ -216,11 +223,23 @@ _SEM_PLANT_MOD = 40  # every 40th vector gets a planted 0.99-scaled copy
 # corpus outgrows it (review finding: 100_000 breaks at 100k rows)
 
 
-def _semantic_oracle() -> str:
-    """The full SemDeDup dataflow as one chained-CTE oracle: corpus
-    with planted copies → the q_cluster_kmeans iterations → within-
-    cluster pairwise cosine in 128-bit integer arithmetic → per-
-    cluster dedup census."""
+def _sem_assign_sql(k: int) -> str:
+    """The ``a{k+1}`` CTE: each quantized vector's nearest centroid of
+    ``c{k}`` (lowest cid on ties), the oracle twin of ``_best``."""
+    return f"""a{k + 1} AS (
+        SELECT vec_id, cid FROM (
+            SELECT qo.vec_id, c.cid,
+                   SUM((qo.qv - c.cv) * (qo.qv - c.cv)) AS dist
+            FROM qo JOIN c{k} c ON qo.pos = c.pos
+            GROUP BY qo.vec_id, c.cid)
+        QUALIFY ROW_NUMBER() OVER (
+            PARTITION BY vec_id ORDER BY dist, cid) = 1)"""
+
+
+def _sem_training_ctes() -> list[str]:
+    """The SemDeDup corpus (with planted copies), its quantized long
+    form (q, qo), the first-K init and the _ITERS hard Lloyd rounds
+    a1, c1, ..., c_ITERS: the oracle twin of ``_semantic_trained``."""
     ctes = [
         f"""corpus AS (
         SELECT vec_id, embedding, 1.0 AS s FROM embeddings
@@ -228,7 +247,7 @@ def _semantic_oracle() -> str:
         SELECT vec_id + (SELECT MAX(vec_id) + 1 FROM embeddings),
                embedding, 0.99 AS s
         FROM embeddings WHERE vec_id % {_SEM_PLANT_MOD} = 0)""",
-        f"""q AS (
+        """q AS (
         SELECT vec_id,
                CAST(generate_subscripts(embedding, 1) - 1 AS INT) AS pos,
                CAST(FLOOR((CAST(unnest(embedding) AS DOUBLE) * s) * 1000000
@@ -244,31 +263,22 @@ def _semantic_oracle() -> str:
         "c0 AS (SELECT init.cid, qo.pos, qo.qv AS cv FROM init "
         "JOIN qo USING (vec_id))",
     ]
-    for k in range(_ITERS + 1):
+    for k in range(_ITERS):
+        ctes.append(_sem_assign_sql(k))
         ctes.append(
-            f"""a{k + 1} AS (
-        SELECT vec_id, cid FROM (
-            SELECT qo.vec_id, c.cid,
-                   SUM((qo.qv - c.cv) * (qo.qv - c.cv)) AS dist
-            FROM qo JOIN c{k} c ON qo.pos = c.pos
-            GROUP BY qo.vec_id, c.cid)
-        QUALIFY ROW_NUMBER() OVER (
-            PARTITION BY vec_id ORDER BY dist, cid) = 1)"""
-        )
-        if k < _ITERS:
-            ctes.append(
-                f"""c{k + 1} AS (
+            f"""c{k + 1} AS (
         SELECT a.cid, qo.pos,
                (2 * SUM(qo.qv) + COUNT(*)) // (2 * COUNT(*)) AS cv
         FROM a{k + 1} a JOIN qo USING (vec_id)
         GROUP BY a.cid, qo.pos)"""
-            )
-    final = f"a{_ITERS + 1}"
-    ctes.append(
-        f"""pairs AS (
-        SELECT aa.cid, ab.vec_id AS dupe
-        FROM {final} aa JOIN {final} ab
-             ON aa.cid = ab.cid AND aa.vec_id < ab.vec_id
+        )
+    return ctes
+
+
+# The near-pair condition of a pairs CTE over the assignments aa, ab:
+# same cell, and cosine^2 >= tau^2 in exact 128-bit integers over the
+# raw quantized components q.
+_SEM_NEAR_SQL = f"""ON aa.cid = ab.cid AND aa.vec_id < ab.vec_id
         JOIN (SELECT a.vec_id va, b.vec_id vb,
                      SUM(a.raw * b.raw) AS dot,
                      SUM(a.raw * a.raw) AS na,
@@ -278,7 +288,22 @@ def _semantic_oracle() -> str:
              ON d.va = aa.vec_id AND d.vb = ab.vec_id
         WHERE d.dot > 0
           AND CAST(d.dot AS HUGEINT) * d.dot * 1000000
-              >= {_SEM_TAU2_E6} * CAST(d.na AS HUGEINT) * d.nb)"""
+              >= {_SEM_TAU2_E6} * CAST(d.na AS HUGEINT) * d.nb"""
+
+
+def _semantic_oracle() -> str:
+    """The full SemDeDup dataflow as one chained-CTE oracle: corpus
+    with planted copies → the q_cluster_kmeans iterations → within-
+    cluster pairwise cosine in 128-bit integer arithmetic → per-
+    cluster dedup census."""
+    ctes = _sem_training_ctes()
+    ctes.append(_sem_assign_sql(_ITERS))
+    final = f"a{_ITERS + 1}"
+    ctes.append(
+        f"""pairs AS (
+        SELECT aa.cid, ab.vec_id AS dupe
+        FROM {final} aa JOIN {final} ab
+             {_SEM_NEAR_SQL})"""
     )
     return (
         "WITH "
@@ -437,6 +462,20 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _longform_dist(points_long: DataFrame, cents: DataFrame) -> DataFrame:
+    """(vec_id, cid, dist): squared distance of each long-form point to
+    each broadcast centroid, one partial aggregate per (vec_id, cid)."""
+    return (
+        points_long.join(F.broadcast(cents), "pos")
+        .groupBy("vec_id", "cid")
+        .agg(
+            F.sum(
+                (F.col("x") - F.col("cv")) * (F.col("x") - F.col("cv"))
+            ).alias("dist")
+        )
+    )
+
+
 def assign_longform(points_long: DataFrame, cents: DataFrame) -> DataFrame:
     """Lloyd assignment with centroids as a DATAFRAME — the production
     spelling once K reaches the hundreds: ``points_long`` is
@@ -450,13 +489,7 @@ def assign_longform(points_long: DataFrame, cents: DataFrame) -> DataFrame:
     literal path never pays. Both produce IDENTICAL assignments
     (integer arithmetic; pinned by test_ml_self_oracles)."""
     return (
-        points_long.join(F.broadcast(cents), "pos")
-        .groupBy("vec_id", "cid")
-        .agg(
-            F.sum(
-                (F.col("x") - F.col("cv")) * (F.col("x") - F.col("cv"))
-            ).alias("dist")
-        )
+        _longform_dist(points_long, cents)
         .groupBy("vec_id")
         .agg(F.min(F.struct("dist", "cid")).alias("b"))
         .select("vec_id", F.col("b.dist").alias("dist"),
@@ -482,13 +515,7 @@ def assign_longform_soft(
     instead of the min-struct argmin. Returns (vec_id, cid, rank)."""
     w = Window.partitionBy("vec_id").orderBy("dist", "cid")
     return (
-        points_long.join(F.broadcast(cents), "pos")
-        .groupBy("vec_id", "cid")
-        .agg(
-            F.sum(
-                (F.col("x") - F.col("cv")) * (F.col("x") - F.col("cv"))
-            ).alias("dist")
-        )
+        _longform_dist(points_long, cents)
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= p)
         .select("vec_id", "cid", "rank")
@@ -498,53 +525,13 @@ def assign_longform_soft(
 def _semantic_soft_oracle() -> str:
     """q_dedup_semantic's chained-CTE oracle with the FINAL assignment
     made SOFT (each vector joins its 2 nearest cells, rn <= 2 instead
-    of = 1): training stays hard (identical corpus/q/qo/init/c0..cN
-    CTEs, regenerated with the same construction as _semantic_oracle),
+    of = 1): training stays hard (the same ``_sem_training_ctes`` as
+    _semantic_oracle),
     the pair search runs within every probed cell, and the census keys
     on each vector's HOME (rank-1) cluster — the SemDeDup prune
     decision: drop a member from its home cluster when a duplicate is
     found in ANY probed cell."""
-    ctes = [
-        f"""corpus AS (
-        SELECT vec_id, embedding, 1.0 AS s FROM embeddings
-        UNION ALL
-        SELECT vec_id + (SELECT MAX(vec_id) + 1 FROM embeddings),
-               embedding, 0.99 AS s
-        FROM embeddings WHERE vec_id % {_SEM_PLANT_MOD} = 0)""",
-        f"""q AS (
-        SELECT vec_id,
-               CAST(generate_subscripts(embedding, 1) - 1 AS INT) AS pos,
-               CAST(FLOOR((CAST(unnest(embedding) AS DOUBLE) * s) * 1000000
-                          + 0.5) AS BIGINT) AS raw
-        FROM corpus)""",
-        f"qo AS (SELECT vec_id, pos, raw + {_OFFSET} AS qv FROM q)",
-        f"""init AS (
-        SELECT vec_id,
-               CAST(ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS BIGINT)
-                   AS cid
-        FROM (SELECT DISTINCT vec_id FROM corpus
-              ORDER BY vec_id LIMIT {_SEM_K}))""",
-        "c0 AS (SELECT init.cid, qo.pos, qo.qv AS cv FROM init "
-        "JOIN qo USING (vec_id))",
-    ]
-    for k in range(_ITERS):  # HARD training rounds only
-        ctes.append(
-            f"""a{k + 1} AS (
-        SELECT vec_id, cid FROM (
-            SELECT qo.vec_id, c.cid,
-                   SUM((qo.qv - c.cv) * (qo.qv - c.cv)) AS dist
-            FROM qo JOIN c{k} c ON qo.pos = c.pos
-            GROUP BY qo.vec_id, c.cid)
-        QUALIFY ROW_NUMBER() OVER (
-            PARTITION BY vec_id ORDER BY dist, cid) = 1)"""
-        )
-        ctes.append(
-            f"""c{k + 1} AS (
-        SELECT a.cid, qo.pos,
-               (2 * SUM(qo.qv) + COUNT(*)) // (2 * COUNT(*)) AS cv
-        FROM a{k + 1} a JOIN qo USING (vec_id)
-        GROUP BY a.cid, qo.pos)"""
-        )
+    ctes = _sem_training_ctes()
     # SOFT final assignment: rank retained, top-2 cells per vector
     ctes.append(
         f"""soft AS (
@@ -563,17 +550,7 @@ def _semantic_soft_oracle() -> str:
         f"""pairs AS (
         SELECT ab.vec_id AS dupe
         FROM soft aa JOIN soft ab
-             ON aa.cid = ab.cid AND aa.vec_id < ab.vec_id
-        JOIN (SELECT a.vec_id va, b.vec_id vb,
-                     SUM(a.raw * b.raw) AS dot,
-                     SUM(a.raw * a.raw) AS na,
-                     SUM(b.raw * b.raw) AS nb
-              FROM q a JOIN q b ON a.pos = b.pos AND a.vec_id < b.vec_id
-              GROUP BY a.vec_id, b.vec_id) d
-             ON d.va = aa.vec_id AND d.vb = ab.vec_id
-        WHERE d.dot > 0
-          AND CAST(d.dot AS HUGEINT) * d.dot * 1000000
-              >= {_SEM_TAU2_E6} * CAST(d.na AS HUGEINT) * d.nb)"""
+             {_SEM_NEAR_SQL})"""
     )
     return (
         "WITH "

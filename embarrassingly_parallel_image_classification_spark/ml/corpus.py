@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_int
 from ..localframe import local_df, pin
-from ..operators.stats import comoment, moment_census
+from ..operators.stats import _XY_SUMS_SQL, comoment, moment_census
 from ..registry import register
 from ..sources.tables import t
 
@@ -926,11 +926,7 @@ ZIPF_TOP_K = 100
         FROM top
     ),
     s AS (
-        SELECT CAST(COUNT(*) AS DECIMAL(38,0)) AS n,
-               CAST(SUM(x) AS DECIMAL(38,0)) AS sx,
-               CAST(SUM(y) AS DECIMAL(38,0)) AS sy,
-               CAST(SUM(x * y) AS DECIMAL(38,0)) AS sxy,
-               CAST(SUM(x * x) AS DECIMAL(38,0)) AS sxx
+        SELECT {_XY_SUMS_SQL}
         FROM pts
     )
     SELECT CAST(n AS BIGINT) AS n_points,

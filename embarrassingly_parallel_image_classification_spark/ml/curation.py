@@ -58,6 +58,23 @@ GOPHER_DUP_E6 = 120_000         # duplicate-bigram fraction cap, e6
 GOPHER_MIN_STOP = 1             # stopword floor
 
 
+def dup_bigram_census(toks: DataFrame) -> DataFrame:
+    """(doc_id, total, dupn) over a frame carrying the token array
+    ``w``: per document its word 2-gram count and how many of those
+    occur more than once in it (the Gopher duplicate fraction's
+    parts)."""
+    return (
+        toks.select("doc_id", F.explode(word_ngrams(2)).alias("gram"))
+        .groupBy("doc_id", "gram")
+        .agg(F.count("*").alias("n"))
+        .groupBy("doc_id")
+        .agg(
+            F.sum("n").alias("total"),
+            F.sum(F.when(F.col("n") > 1, F.col("n")).otherwise(0)).alias("dupn"),
+        )
+    )
+
+
 @register(
     "q_quality_gopher",
     oracle=f"""
@@ -131,16 +148,7 @@ def q_quality_gopher(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "q_quality_gopher.toks",
     )
-    dup = (
-        toks.select("doc_id", F.explode(word_ngrams(2)).alias("gram"))
-        .groupBy("doc_id", "gram")
-        .agg(F.count("*").alias("n"))
-        .groupBy("doc_id")
-        .agg(
-            F.sum("n").alias("total"),
-            F.sum(F.when(F.col("n") > 1, F.col("n")).otherwise(0)).alias("dupn"),
-        )
-    )
+    dup = dup_bigram_census(toks)
     stop_arr = F.array(*[F.lit(s) for s in _STOP])
     feat = (
         toks.join(dup, "doc_id", "left")

@@ -51,10 +51,10 @@ These stay separate on purpose:
   both.
 
 Oracle side: the DuckDB texts never call these builders. Their shared
-CTEs are oracle-only fragments — ``shingle_ctes`` (toks/sh),
-``pair_ctes`` (sizes/inter/pairs, also read by q_pipeline_pretrain)
-and ``_CLOSURE_SQL`` (e2/reach/clusters, in ``_CLUSTER_CTES``) — laid
-out by ``_cte`` in each oracle's own indentation.
+CTEs are oracle-only fragments — ``SHINGLE_CTES`` (toks/sh),
+``INTER_CTES`` / ``PAIR_CTES`` (sizes/inter/pairs, also read by
+q_pipeline_pretrain) and ``_CLOSURE_SQL`` (e2/reach/clusters, in
+``_CLUSTER_CTES``).
 
 Everything is deterministic (hash-seeded, no RNG), so rows-only queries
 are still reproducible run-to-run.
@@ -79,47 +79,33 @@ MINHASH_BANDS = 4  # 4 rows per band
 SHINGLE_N = 3
 
 # Oracle-only SQL fragments: the DuckDB texts build each shared CTE
-# from these, never from the Spark builders they check. ``_cte`` lays a
-# fragment out in the caller's indentation, so every oracle renders the
-# text it always had.
-_TOKS_SQL = "toks AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents)"
-_SH_SQL = f"""SELECT DISTINCT doc_id,
-       UNNEST(list_transform(
-           range(1, len(ws) - {SHINGLE_N - 2}),
-           i -> array_to_string(ws[i : i + {SHINGLE_N - 1}], ' '))) AS shingle
-FROM toks"""
+# from these, never from the Spark builders they check. ``SHINGLE_CTES``
+# is toks/sh, the distinct word SHINGLE_N-grams per document;
+# ``INTER_CTES`` the sizes (``_SIZES_SQL``)/inter intersection counts of the naive
+# shingle self-join over ``sh``; ``PAIR_CTES`` adds the ``pairs`` of
+# trigram Jaccard >= 0.5.
+SHINGLE_CTES = f"""toks AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
+    sh AS (
+        SELECT DISTINCT doc_id,
+               UNNEST(list_transform(
+                   range(1, len(ws) - {SHINGLE_N - 2}),
+                   i -> array_to_string(ws[i : i + {SHINGLE_N - 1}], ' '))) AS shingle
+        FROM toks
+    )"""
 _SIZES_SQL = "sizes AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id)"
-_INTER_SQL = """SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
-FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-GROUP BY 1, 2"""
-_PAIRS_SQL = """SELECT id_a, id_b FROM inter
-JOIN sizes sa ON sa.doc_id = id_a
-JOIN sizes sb ON sb.doc_id = id_b
-WHERE inter / (sa.sz + sb.sz - inter) >= 0.5"""
-
-
-def _cte(name: str, body: str, col: int, indent: int, inline: bool) -> str:
-    """`name AS (body)` with the body's lines at column `indent` and the
-    closing parenthesis after its last line (`inline`) or on a line of
-    its own at column `col`."""
-    lines = "\n".join(" " * indent + line for line in body.split("\n"))
-    return f"{name} AS (\n{lines}" + (")" if inline else f"\n{' ' * col})")
-
-
-def shingle_ctes(col: int, indent: int, inline: bool = False) -> str:
-    """Oracle-only ``toks``/``sh`` CTEs: the distinct word SHINGLE_N-grams
-    per document, ``sh`` starting at column `col`."""
-    return f"{_TOKS_SQL},\n{' ' * col}" + _cte("sh", _SH_SQL, col, indent, inline)
-
-
-def pair_ctes(col: int, indent: int, inline: bool = False, pairs: bool = True) -> str:
-    """Oracle-only ``sizes``/``inter`` CTEs over ``sh`` — the naive
-    shingle self-join's intersection counts — and, with `pairs`, the
-    ``pairs`` CTE of the trigram-Jaccard >= 0.5 pairs."""
-    ctes = [_SIZES_SQL, _cte("inter", _INTER_SQL, col, indent, inline)]
-    if pairs:
-        ctes.append(_cte("pairs", _PAIRS_SQL, col, indent, inline))
-    return f",\n{' ' * col}".join(ctes)
+INTER_CTES = f"""{_SIZES_SQL},
+    inter AS (
+        SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
+        FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+        GROUP BY 1, 2
+    )"""
+PAIR_CTES = f"""{INTER_CTES},
+    pairs AS (
+        SELECT id_a, id_b FROM inter
+        JOIN sizes sa ON sa.doc_id = id_a
+        JOIN sizes sb ON sb.doc_id = id_b
+        WHERE inter / (sa.sz + sb.sz - inter) >= 0.5
+    )"""
 
 
 # The components of the pair graph by recursive label propagation.
@@ -135,8 +121,8 @@ _CLOSURE_SQL = """e2 AS (
     ),
     clusters AS (SELECT node AS doc_id, MIN(lab) AS cluster_id FROM reach GROUP BY node)"""
 _CLUSTER_CTES = f"""WITH RECURSIVE
-    {shingle_ctes(4, 8)},
-    {pair_ctes(4, 8)},
+    {SHINGLE_CTES},
+    {PAIR_CTES},
     {_CLOSURE_SQL}"""
 
 
@@ -363,8 +349,8 @@ def jaccard_pairs_at(d: DataFrame, tau: float, n: int = SHINGLE_N) -> DataFrame:
 @register(
     "q_dedup_ngram_jaccard",
     oracle=f"""
-    WITH {shingle_ctes(9, 11)},
-         {pair_ctes(9, 11, pairs=False)}
+    WITH {SHINGLE_CTES},
+         {INTER_CTES}
     SELECT id_a, id_b,
            ROUND(inter / (sa.sz + sb.sz - inter), 6) AS jaccard
     FROM inter
@@ -728,7 +714,7 @@ def _minhash_portable_oracle(perms: int = MINHASH_PERMS, bands: int = MINHASH_BA
     )
     matches = " + ".join(f"CASE WHEN a.m{i} = b.m{i} THEN 1 ELSE 0 END" for i in range(perms))
     return f"""
-    WITH {shingle_ctes(4, 8, inline=True)},
+    WITH {SHINGLE_CTES},
     sig AS (SELECT doc_id, {mins} FROM sh GROUP BY doc_id),
     banded AS ({band_rows}),
     cand AS (
@@ -1136,7 +1122,7 @@ def jaccard_cross_at(
 @register(
     "q_dedup_incremental",
     oracle=f"""
-    WITH {shingle_ctes(9, 11)},
+    WITH {SHINGLE_CTES},
          {_SIZES_SQL},
          inter AS (
            SELECT e.doc_id AS id_exist, i.doc_id AS id_new, COUNT(*) AS inter
@@ -1183,7 +1169,7 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_dedup_containment",
     oracle=f"""
-    WITH {shingle_ctes(9, 11)},
+    WITH {SHINGLE_CTES},
          {_SIZES_SQL},
          inter AS (
            SELECT a.doc_id AS contained_id, b.doc_id AS container_id,

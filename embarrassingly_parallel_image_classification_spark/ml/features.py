@@ -30,11 +30,12 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_int
 from ..localframe import local_df, pin
+from ..operators.aggregates import _GROUP_RANKS_SQL, select_group_quantiles
 from ..registry import register
 from ..sources.tables import cents, t
 
@@ -42,6 +43,35 @@ from ..sources.tables import cents, t
 # Spark plan, the oracle, and any downstream consumer share ONE
 # definition (the GOPHER_* rule from round 7).
 BUCKETIZE_K = 16
+
+
+def _price_bucket() -> Column:
+    """The equal-width bucket (0..BUCKETIZE_K-1) of ``cents`` within its
+    [lo, hi] range; 0 when the range is a single value."""
+    return (
+        F.when(
+            F.col("hi") > F.col("lo"),
+            F.expr(f"(cents - lo) * {BUCKETIZE_K} DIV (hi - lo + 1)"),
+        )
+        .otherwise(0)
+        .cast("bigint")
+    )
+
+
+# Per (priority, fold) cent sum s_f and count n_f of ``pts``, and per
+# priority their totals s_t, n_t: the out-of-fold target-encoding sums.
+_FOLD_SUMS_SQL = """gf AS (
+        SELECT o_orderpriority, fold,
+               CAST(SUM(cents) AS BIGINT) AS s_f,
+               CAST(COUNT(*) AS BIGINT) AS n_f
+        FROM pts GROUP BY o_orderpriority, fold
+    ),
+    gt AS (
+        SELECT o_orderpriority,
+               CAST(SUM(s_f) AS BIGINT) AS s_t,
+               CAST(SUM(n_f) AS BIGINT) AS n_t
+        FROM gf GROUP BY o_orderpriority
+    )"""
 
 # One-hot cardinality ceiling: the vocabulary collect is bounded by the
 # CATEGORY DOMAIN, and this guard keeps that claim honest — past it the
@@ -264,19 +294,13 @@ def q_feat_bucketize(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pts.crossJoin(F.broadcast(bounds)).select(
         "o_orderkey",
         "cents",
-        F.when(
-            F.col("hi") > F.col("lo"),
-            F.expr(f"(cents - lo) * {BUCKETIZE_K} DIV (hi - lo + 1)"),
-        )
-        .otherwise(0)
-        .cast("bigint")
-        .alias("bucket"),
+        _price_bucket().alias("bucket"),
     )
 
 
 @register(
     "q_feat_target_kfold",
-    oracle="""
+    oracle=f"""
     WITH pts AS (
         SELECT o_orderkey, o_orderpriority,
                CAST(('0x' || substring(md5(CAST(o_orderkey AS VARCHAR)), 1, 8))::BIGINT % 5
@@ -284,18 +308,7 @@ def q_feat_bucketize(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(ROUND(o_totalprice * 100, 0) AS BIGINT) AS cents
         FROM orders
     ),
-    gf AS (
-        SELECT o_orderpriority, fold,
-               CAST(SUM(cents) AS BIGINT) AS s_f,
-               CAST(COUNT(*) AS BIGINT) AS n_f
-        FROM pts GROUP BY o_orderpriority, fold
-    ),
-    gt AS (
-        SELECT o_orderpriority,
-               CAST(SUM(s_f) AS BIGINT) AS s_t,
-               CAST(SUM(n_f) AS BIGINT) AS n_t
-        FROM gf GROUP BY o_orderpriority
-    )
+    {_FOLD_SUMS_SQL}
     SELECT p.o_orderkey, p.o_orderpriority, p.fold,
            CASE WHEN t.n_t > f.n_f
                 THEN CAST((t.s_t - f.s_f) // (t.n_t - f.n_f) AS BIGINT)
@@ -378,18 +391,7 @@ def q_feat_target_kfold(spark: SparkSession, sf_dir: str) -> DataFrame:
                     - 1 AS BIGINT) AS prio_idx
         FROM counts
     ),
-    gf AS (
-        SELECT o_orderpriority, fold,
-               CAST(SUM(cents) AS BIGINT) AS s_f,
-               CAST(COUNT(*) AS BIGINT) AS n_f
-        FROM pts GROUP BY o_orderpriority, fold
-    ),
-    gt AS (
-        SELECT o_orderpriority,
-               CAST(SUM(s_f) AS BIGINT) AS s_t,
-               CAST(SUM(n_f) AS BIGINT) AS n_t
-        FROM gf GROUP BY o_orderpriority
-    ),
+    {_FOLD_SUMS_SQL},
     bounds AS (
         SELECT CAST(MIN(cents) AS BIGINT) AS lo,
                CAST(MAX(cents) AS BIGINT) AS hi
@@ -484,31 +486,20 @@ def q_pipeline_features(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("n_t") > F.col("n_f"),
                 F.expr("CAST((s_t - s_f) DIV (n_t - n_f) AS BIGINT)"),
             ).alias("te_oof_c"),
-            F.when(
-                F.col("hi") > F.col("lo"),
-                F.expr(f"(cents - lo) * {BUCKETIZE_K} DIV (hi - lo + 1)"),
-            )
-            .otherwise(0)
-            .cast("bigint")
-            .alias("price_bucket"),
+            _price_bucket().alias("price_bucket"),
         )
     )
 
 
 @register(
     "q_feat_robust_scale",
-    oracle="""
+    oracle=f"""
     WITH c AS (
         SELECT l_orderkey, l_linenumber, l_returnflag AS g,
                CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT) AS cents
         FROM lineitem
     ),
-    n AS (SELECT g, CAST(COUNT(*) AS BIGINT) AS cnt FROM c GROUP BY g),
-    ranked AS (
-        SELECT g, cents,
-               ROW_NUMBER() OVER (PARTITION BY g ORDER BY cents) AS rn
-        FROM c
-    ),
+    {_GROUP_RANKS_SQL},
     quart AS (
         SELECT n.g,
                MAX(CASE WHEN r.rn = (n.cnt * 25 + 99) // 100
@@ -540,8 +531,6 @@ def q_feat_robust_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     degenerate zero-IQR group divides by 1 instead of exploding).
     The Q-family shape end to end: tiny selection state → broadcast →
     one fact scan, zero fact shuffles."""
-    from ..operators.aggregates import select_group_quantiles
-
     pts = pin(
         t(spark, sf_dir, "lineitem").select(
             "l_orderkey",

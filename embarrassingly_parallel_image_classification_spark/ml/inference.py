@@ -25,6 +25,12 @@ the scan lands it and nothing sorts its output: an output order is owed
 only where a LIMIT or top-k cuts on it (registry.py), so q_infer_batch,
 q_infer_batch_pbu, q_infer_eval and q_infer_ensemble have no Exchange
 between the scan and the model.
+
+Oracle fragments: ``_INFER_ORACLE`` is the flagship's whole oracle
+(``q_stream_infer`` checks the same predictions), ``_QUANT_CTES_SQL``
+the quantized inputs and code centroids (twin of ``_quant_centroids``)
+that the quantized and uncertainty oracles share, and ``_CALIB_SQL``
+the cent/label bins of the calibration and Brier oracles.
 """
 
 from __future__ import annotations
@@ -47,7 +53,6 @@ from ..registry import register
 from ..sources.tables import cents, t
 
 EMB_DIM = 64
-N_CLASSES = 10
 
 
 _CENTROID_CACHE: dict[tuple, tuple[np.ndarray, np.ndarray]] = {}
@@ -409,15 +414,20 @@ def q_eval_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "q_eval_calibration",
-    oracle="""
-    WITH s AS (
+# Event values in cents with the purchase label y, and their range
+# (the bins of the calibration and Brier lines).
+_CALIB_SQL = """s AS (
         SELECT CAST(ROUND(value * 100, 0) AS BIGINT) AS cents,
                CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y
         FROM events
     ),
-    rng AS (SELECT MIN(cents) AS lo, MAX(cents) AS hi FROM s)
+    rng AS (SELECT MIN(cents) AS lo, MAX(cents) AS hi FROM s)"""
+
+
+@register(
+    "q_eval_calibration",
+    oracle=f"""
+    WITH {_CALIB_SQL}
     SELECT ((cents - lo) * 10) // (hi - lo + 1) AS bin,
            COUNT(*) AS n,
            ROUND(SUM(cents) / (100.0 * COUNT(*)), 6) AS mean_score,
@@ -737,6 +747,24 @@ def q_eval_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _QSHIFT, _QSTEP = 1_000_000, 16_384  # e6 shift to nonneg; ~int8 step
+
+# The quantized inputs (xe: e6-shifted components xs; xq: their int8
+# codes) and per-class code centroids (cent), the oracle twin of
+# ``_quant_centroids``.
+_QUANT_CTES_SQL = f"""xe AS (
+        SELECT vec_id, label,
+               UNNEST(range(1, len(embedding) + 1)) AS pos,
+               UNNEST(list_transform(CAST(embedding AS DOUBLE[]),
+                   v -> CAST(ROUND(v * 1000000) AS BIGINT) + {_QSHIFT}))
+                   AS xs
+        FROM embeddings
+    ),
+    xq AS (SELECT vec_id, label, pos, xs // {_QSTEP} AS xq FROM xe),
+    cent AS (
+        SELECT label AS cl, pos,
+               (CAST(SUM(xs) AS BIGINT) // COUNT(*)) // {_QSTEP} AS cq
+        FROM xe GROUP BY 1, 2
+    )"""
 _QXS_EXPR = (
     f"transform(embedding, v -> "
     f"CAST(ROUND(CAST(v AS DOUBLE) * 1000000, 0) AS BIGINT) + {_QSHIFT})"
@@ -764,20 +792,7 @@ def _quant_centroids(emb):
 
 
 _QUANT_ORACLE = f"""
-    WITH xe AS (
-        SELECT vec_id, label,
-               UNNEST(range(1, len(embedding) + 1)) AS pos,
-               UNNEST(list_transform(CAST(embedding AS DOUBLE[]),
-                   v -> CAST(ROUND(v * 1000000) AS BIGINT) + {_QSHIFT}))
-                   AS xs
-        FROM embeddings
-    ),
-    xq AS (SELECT vec_id, label, pos, xs // {_QSTEP} AS xq FROM xe),
-    cent AS (
-        SELECT label AS cl, pos,
-               (CAST(SUM(xs) AS BIGINT) // COUNT(*)) // {_QSTEP} AS cq
-        FROM xe GROUP BY 1, 2
-    ),
+    WITH {_QUANT_CTES_SQL},
     d AS (
         SELECT vec_id, label, cl,
                SUM((xq - cq) * (xq - cq)) AS dist
@@ -915,20 +930,7 @@ def q_eval_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 _UNCERTAIN_K = 64
 
 _UNCERTAIN_ORACLE = f"""
-    WITH xe AS (
-        SELECT vec_id, label,
-               UNNEST(range(1, len(embedding) + 1)) AS pos,
-               UNNEST(list_transform(CAST(embedding AS DOUBLE[]),
-                   v -> CAST(ROUND(v * 1000000) AS BIGINT) + {_QSHIFT}))
-                   AS xs
-        FROM embeddings
-    ),
-    xq AS (SELECT vec_id, label, pos, xs // {_QSTEP} AS xq FROM xe),
-    cent AS (
-        SELECT label AS cl, pos,
-               (CAST(SUM(xs) AS BIGINT) // COUNT(*)) // {_QSTEP} AS cq
-        FROM xe GROUP BY 1, 2
-    ),
+    WITH {_QUANT_CTES_SQL},
     d AS (
         SELECT vec_id, cl,
                SUM((xq - cq) * (xq - cq)) AS dist
@@ -1007,13 +1009,8 @@ def q_select_uncertain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_eval_brier",
-    oracle="""
-    WITH s AS (
-        SELECT CAST(ROUND(value * 100, 0) AS BIGINT) AS cents,
-               CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y
-        FROM events
-    ),
-    rng AS (SELECT MIN(cents) AS lo, MAX(cents) AS hi FROM s),
+    oracle=f"""
+    WITH {_CALIB_SQL},
     b AS (
         SELECT ((cents - lo) * 10) // (hi - lo + 1) AS bin,
                cents - lo AS pnum, y, hi - lo AS pden

@@ -32,6 +32,12 @@ The other shared steps: ``_query_side`` (the (qid, q_emb) broadcast side),
 ``IvfIndex.probe`` (the nprobe nearest cells), ``PqIndex.shortlist`` (the
 ADC cut), and ``_sign_bits``, ``_hamming_shortlist`` and
 ``_hamming_cascade`` (the 1-bit tier).
+
+The oracles share their CTE text through oracle-only fragments, each
+the DuckDB twin of one step above: ``_EXACT_TOPK_SQL`` (the
+``knn_exact`` verifier of ``_recall_census``), ``_SIGN_BITS_SQL``
+(``_sign_bits`` and the query signatures), ``_HAMMING_SHORT_SQL`` (the
+overfetched Hamming cut) and ``_cascade_sql`` (``_exact_rerank``).
 """
 
 from __future__ import annotations
@@ -1121,6 +1127,35 @@ def q_class_knn_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# The oracle twins of ``_recall_census``'s verifier and ``_sign_bits``:
+# ``exact`` (qid, vec_id) is knn_exact's float-cosine top-k per fixture
+# query; ``bits`` (vec_id, sig) the 63-bit sign signatures and ``q``
+# (qid, qsig) the queries' own.
+_EXACT_TOPK_SQL = f"""exact AS (
+        SELECT q.vec_id AS qid, e.vec_id
+        FROM embeddings e
+        CROSS JOIN (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
+                    FROM embeddings WHERE vec_id < {N_QUERIES}) q
+        WHERE e.vec_id <> q.vec_id
+        QUALIFY ROW_NUMBER() OVER (PARTITION BY q.vec_id
+            ORDER BY ROUND(list_cosine_similarity(
+                CAST(e.embedding AS DOUBLE[]), q.emb), 6) DESC,
+                e.vec_id) <= {TOP_K}
+    )"""
+_SIGN_BITS_SQL = f"""bits AS (
+        SELECT e.vec_id,
+               SUM(CASE WHEN CAST(e.embedding[i.i + 1] AS DOUBLE) > 0
+                        THEN (CAST(1 AS BIGINT) << i.i)
+                        ELSE 0 END) AS sig
+        FROM embeddings e, range(63) i(i)
+        GROUP BY e.vec_id
+    ),
+    q AS (
+        SELECT vec_id AS qid, sig AS qsig FROM bits
+        WHERE qid < {N_QUERIES}
+    )"""
+
+
 def _recall_census(top: DataFrame, emb: DataFrame, score: str) -> DataFrame:
     """(qid, rank, vec_id, <score>, in_exact_topk): a tier's top-k rows
     for the fixture queries, each flagged by whether knn_exact over
@@ -1194,18 +1229,7 @@ def _hamming_cascade(bits: DataFrame, corpus: DataFrame, k: int, overfetch: int)
 @register(
     "q_knn_hamming",
     oracle=f"""
-    WITH bits AS (
-        SELECT e.vec_id,
-               SUM(CASE WHEN CAST(e.embedding[i.i + 1] AS DOUBLE) > 0
-                        THEN (CAST(1 AS BIGINT) << i.i)
-                        ELSE 0 END) AS sig
-        FROM embeddings e, range(63) i(i)
-        GROUP BY e.vec_id
-    ),
-    q AS (
-        SELECT vec_id AS qid, sig AS qsig FROM bits
-        WHERE qid < {N_QUERIES}
-    ),
+    WITH {_SIGN_BITS_SQL},
     scored AS (
         SELECT q.qid, b.vec_id,
                bit_count(xor(b.sig, q.qsig)) AS hamming
@@ -1217,17 +1241,7 @@ def _hamming_cascade(bits: DataFrame, corpus: DataFrame, k: int, overfetch: int)
                    ORDER BY hamming, vec_id) AS rank
         FROM scored
     ),
-    exact AS (
-        SELECT q.vec_id AS qid, e.vec_id
-        FROM embeddings e
-        CROSS JOIN (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
-                    FROM embeddings WHERE vec_id < {N_QUERIES}) q
-        WHERE e.vec_id <> q.vec_id
-        QUALIFY ROW_NUMBER() OVER (PARTITION BY q.vec_id
-            ORDER BY ROUND(list_cosine_similarity(
-                CAST(e.embedding AS DOUBLE[]), q.emb), 6) DESC,
-                e.vec_id) <= {TOP_K}
-    )
+    {_EXACT_TOPK_SQL}
     SELECT h.qid, h.rank, h.vec_id,
            CAST(h.hamming AS BIGINT) AS hamming,
            EXISTS (SELECT 1 FROM exact x
@@ -1275,22 +1289,31 @@ def q_knn_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
 # applied to the 1-bit tier).
 HAMMING_OVERFETCH = 4
 
+# The binary shortlist's cut: per query qb the overfetched Hamming top.
+_HAMMING_SHORT_SQL = f"""QUALIFY ROW_NUMBER() OVER (PARTITION BY qb.qid
+            ORDER BY bit_count(xor(b.sig, qb.qsig)), b.vec_id)
+          <= {TOP_K * HAMMING_OVERFETCH}"""
+
+
+def _cascade_sql(tier: str) -> str:
+    """The ``casc_<tier>`` CTE: the exact-cosine top-k rerank of the
+    shortlist ``short_<tier>`` over ``corpus_<tier>`` (the oracle twin
+    of ``_exact_rerank``)."""
+    return f"""casc_{tier} AS (
+        SELECT s.qid, s.vec_id
+        FROM short_{tier} s JOIN corpus_{tier} c ON c.vec_id = s.vec_id
+        JOIN q ON q.qid = s.qid
+        QUALIFY ROW_NUMBER() OVER (PARTITION BY s.qid
+            ORDER BY ROUND(list_cosine_similarity(
+                CAST(c.embedding AS DOUBLE[]), q.q_emb), 6) DESC,
+                s.vec_id) <= {TOP_K}
+    )"""
+
 
 @register(
     "q_knn_hamming_rerank",
     oracle=f"""
-    WITH bits AS (
-        SELECT e.vec_id,
-               SUM(CASE WHEN CAST(e.embedding[i.i + 1] AS DOUBLE) > 0
-                        THEN (CAST(1 AS BIGINT) << i.i)
-                        ELSE 0 END) AS sig
-        FROM embeddings e, range(63) i(i)
-        GROUP BY e.vec_id
-    ),
-    q AS (
-        SELECT vec_id AS qid, sig AS qsig FROM bits
-        WHERE qid < {N_QUERIES}
-    ),
+    WITH {_SIGN_BITS_SQL},
     shortlist AS (
         SELECT qid, vec_id FROM (
             SELECT q.qid, b.vec_id,
@@ -1314,17 +1337,7 @@ HAMMING_OVERFETCH = 4
                    ORDER BY sim DESC, vec_id) AS rank
         FROM reranked
     ),
-    exact AS (
-        SELECT q.vec_id AS qid, e.vec_id
-        FROM embeddings e
-        CROSS JOIN (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
-                    FROM embeddings WHERE vec_id < {N_QUERIES}) q
-        WHERE e.vec_id <> q.vec_id
-        QUALIFY ROW_NUMBER() OVER (PARTITION BY q.vec_id
-            ORDER BY ROUND(list_cosine_similarity(
-                CAST(e.embedding AS DOUBLE[]), q.emb), 6) DESC,
-                e.vec_id) <= {TOP_K}
-    )
+    {_EXACT_TOPK_SQL}
     SELECT c.qid, c.rank, c.vec_id, c.sim,
            EXISTS (SELECT 1 FROM exact x
                    WHERE x.qid = c.qid AND x.vec_id = c.vec_id)
@@ -1420,37 +1433,17 @@ _DUP_OFFSET = 100_000
     short_a AS (
         SELECT qb.qid, b.vec_id
         FROM bits_a b CROSS JOIN qb WHERE b.vec_id <> qb.qid
-        QUALIFY ROW_NUMBER() OVER (PARTITION BY qb.qid
-            ORDER BY bit_count(xor(b.sig, qb.qsig)), b.vec_id)
-          <= {TOP_K * HAMMING_OVERFETCH}
+        {_HAMMING_SHORT_SQL}
     ),
-    casc_a AS (
-        SELECT s.qid, s.vec_id
-        FROM short_a s JOIN corpus_a c ON c.vec_id = s.vec_id
-        JOIN q ON q.qid = s.qid
-        QUALIFY ROW_NUMBER() OVER (PARTITION BY s.qid
-            ORDER BY ROUND(list_cosine_similarity(
-                CAST(c.embedding AS DOUBLE[]), q.q_emb), 6) DESC,
-                s.vec_id) <= {TOP_K}
-    ),
+    {_cascade_sql("a")},
     short_d AS (
         SELECT qb.qid, b.vec_id
         FROM bits_a b CROSS JOIN qb
         WHERE b.vec_id <> qb.qid
           AND b.vec_id IN (SELECT doc_id FROM survivors)
-        QUALIFY ROW_NUMBER() OVER (PARTITION BY qb.qid
-            ORDER BY bit_count(xor(b.sig, qb.qsig)), b.vec_id)
-          <= {TOP_K * HAMMING_OVERFETCH}
+        {_HAMMING_SHORT_SQL}
     ),
-    casc_d AS (
-        SELECT s.qid, s.vec_id
-        FROM short_d s JOIN corpus_d c ON c.vec_id = s.vec_id
-        JOIN q ON q.qid = s.qid
-        QUALIFY ROW_NUMBER() OVER (PARTITION BY s.qid
-            ORDER BY ROUND(list_cosine_similarity(
-                CAST(c.embedding AS DOUBLE[]), q.q_emb), 6) DESC,
-                s.vec_id) <= {TOP_K}
-    ),
+    {_cascade_sql("d")},
     pre AS (
         SELECT c.qid,
                COUNT(DISTINCT c.vec_id % {_DUP_OFFSET}) AS hits
@@ -1663,17 +1656,7 @@ SQ8_LEVELS = 255
                    ORDER BY dot DESC, vec_id) AS rank
         FROM dots
     ),
-    exact AS (
-        SELECT q.vec_id AS qid, e.vec_id
-        FROM embeddings e
-        CROSS JOIN (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
-                    FROM embeddings WHERE vec_id < {N_QUERIES}) q
-        WHERE e.vec_id <> q.vec_id
-        QUALIFY ROW_NUMBER() OVER (PARTITION BY q.vec_id
-            ORDER BY ROUND(list_cosine_similarity(
-                CAST(e.embedding AS DOUBLE[]), q.emb), 6) DESC,
-                e.vec_id) <= {TOP_K}
-    )
+    {_EXACT_TOPK_SQL}
     SELECT t.qid, CAST(t.rank AS BIGINT) AS rank, t.vec_id, t.dot,
            EXISTS (SELECT 1 FROM exact x
                    WHERE x.qid = t.qid AND x.vec_id = t.vec_id)

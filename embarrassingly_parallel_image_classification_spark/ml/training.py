@@ -27,6 +27,14 @@ toward zero; Spark's BIGINT ``div`` silently wraps past 2^63), the
 oracles spell it as a sign-split DuckDB ``//`` on absolute values, and
 the driver-side GD loop uses ``_tdiv`` below, so negative gradients
 divide identically in all three places.
+
+Oracle fragments: the tree oracles are generated level by level, the
+DuckDB twin of the Spark tree builders: ``_level_sql`` (a level's
+split census, twin of ``_stump_split_scores``), ``_route_sql``
+(``_route_root`` / ``_route``) and ``_tree_oracle`` (the best split per
+node, ``_best_splits``; depth 3 is depth 2 plus one level).
+``_gbt_cum_sql`` is a boosting round's running split sums and
+``_LINE_XY_SQL`` the ridge/lasso design.
 """
 
 from __future__ import annotations
@@ -35,7 +43,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..localframe import local_df, pin
-from ..operators.stats import D38, comoment, moment_census, trunc_div
+from ..operators.stats import D38, _xy_moments_sql, comoment, moment_census, trunc_div
 from ..registry import register
 from ..sources.tables import cents, t
 
@@ -43,6 +51,31 @@ from ..sources.tables import cents, t
 # generator, and the pytest self-checks read ONE definition.
 GD_ITERS = 6
 GD_LR_DEN = 4  # learning rate = 1/4, below 2/λmax for these features
+
+# lineitem's (x1, x2, y) = (quantity, discount cents, price cents), the
+# design the ridge and lasso oracles fit.
+_LINE_XY_SQL = """
+            SELECT CAST(l_quantity AS BIGINT) AS x1,
+                   CAST(ROUND(l_discount * 100, 0) AS BIGINT) AS x2,
+                   CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT) AS y
+            FROM lineitem
+        """
+
+
+def _gbt_cum_sql(k: int) -> str:
+    """The ``w{k}`` CTE of boosting round `k`: per feature f and value v
+    of the census ``c{k}`` (n, s) the left running count and sum (nl,
+    sl) and the feature totals (nt, st)."""
+    return f"""w{k} AS (
+        SELECT f, v,
+               SUM(n) OVER (PARTITION BY f ORDER BY v
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS nl,
+               SUM(s) OVER (PARTITION BY f ORDER BY v
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sl,
+               SUM(n) OVER (PARTITION BY f) AS nt,
+               SUM(s) OVER (PARTITION BY f) AS st
+        FROM c{k}
+    )"""
 
 
 def _tdiv(a: int, b: int) -> int:
@@ -603,23 +636,14 @@ def q_train_isotonic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_train_grouped_ols",
-    oracle="""
+    oracle=f"""
     WITH pts AS (
         SELECT o_orderpriority AS grp,
                CAST(year(o_orderdate) - 1998 AS BIGINT) AS x,
                CAST(ROUND(o_totalprice * 100, 0) AS BIGINT) AS y
         FROM orders
     ),
-    s AS (
-        SELECT grp,
-               CAST(COUNT(*) AS DECIMAL(38,0)) AS n,
-               CAST(SUM(x) AS DECIMAL(38,0)) AS sx,
-               CAST(SUM(y) AS DECIMAL(38,0)) AS sy,
-               CAST(SUM(x * y) AS DECIMAL(38,0)) AS sxy,
-               CAST(SUM(x * x) AS DECIMAL(38,0)) AS sxx,
-               CAST(SUM(y * y) AS DECIMAL(38,0)) AS syy
-        FROM pts GROUP BY grp
-    )
+    {_xy_moments_sql("pts", "grp")}
     SELECT grp,
            CAST(n AS BIGINT) AS n_rows,
            CAST(ROUND(CAST(n * sxy - sx * sy AS DOUBLE)
@@ -688,7 +712,7 @@ def q_train_grouped_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_train_gbt_stumps",
-    oracle="""
+    oracle=f"""
     WITH base AS (
         SELECT CAST(ROUND(l_discount * 100, 0) AS BIGINT) AS disc,
                CAST(ROUND(l_tax * 100, 0) AS BIGINT) AS tax,
@@ -704,16 +728,7 @@ def q_train_grouped_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(SUM(y) AS DECIMAL(38,0)) AS s
         FROM long1 GROUP BY f, v
     ),
-    w1 AS (
-        SELECT f, v,
-               SUM(n) OVER (PARTITION BY f ORDER BY v
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS nl,
-               SUM(s) OVER (PARTITION BY f ORDER BY v
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sl,
-               SUM(n) OVER (PARTITION BY f) AS nt,
-               SUM(s) OVER (PARTITION BY f) AS st
-        FROM c1
-    ),
+    {_gbt_cum_sql(1)},
     sc1 AS (
         SELECT f, v, nl, sl, nt - nl AS nr, st - sl AS sr,
                CAST(ROUND(CAST(sl * sl AS DOUBLE) / CAST(nl AS DOUBLE)
@@ -740,16 +755,7 @@ def q_train_grouped_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(SUM(z) AS DECIMAL(38,0)) AS s
         FROM long2 GROUP BY f, v
     ),
-    w2 AS (
-        SELECT f, v,
-               SUM(n) OVER (PARTITION BY f ORDER BY v
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS nl,
-               SUM(s) OVER (PARTITION BY f ORDER BY v
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sl,
-               SUM(n) OVER (PARTITION BY f) AS nt,
-               SUM(s) OVER (PARTITION BY f) AS st
-        FROM c2
-    ),
+    {_gbt_cum_sql(2)},
     sc2 AS (
         SELECT f, v, nl, sl, nt - nl AS nr, st - sl AS sr,
                CAST(sl * sl AS DOUBLE) / CAST(nl AS DOUBLE)
@@ -965,12 +971,7 @@ def _price_census(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(SUM(y) AS HUGEINT) AS sy,
                CAST(SUM(x1 * y) AS HUGEINT) AS sx1y,
                CAST(SUM(x2 * y) AS HUGEINT) AS sx2y
-        FROM (
-            SELECT CAST(l_quantity AS BIGINT) AS x1,
-                   CAST(ROUND(l_discount * 100, 0) AS BIGINT) AS x2,
-                   CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT) AS y
-            FROM lineitem
-        )
+        FROM ({_LINE_XY_SQL})
     ),
     m AS (
         SELECT n, sy,
@@ -1133,12 +1134,7 @@ def _lasso_oracle() -> str:
                CAST(SUM(y) AS DECIMAL(38,0)) AS sy,
                CAST(SUM(x1 * y) AS DECIMAL(38,0)) AS sx1y,
                CAST(SUM(x2 * y) AS DECIMAL(38,0)) AS sx2y
-        FROM (
-            SELECT CAST(l_quantity AS BIGINT) AS x1,
-                   CAST(ROUND(l_discount * 100, 0) AS BIGINT) AS x2,
-                   CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT) AS y
-            FROM lineitem
-        )
+        FROM ({_LINE_XY_SQL})
     ),
     cc AS (
         SELECT n, sx1, sx2, sy,
@@ -1412,101 +1408,110 @@ _TREE2_GINI_SQL = """CAST(ROUND((2.0 * (
                    ) / CAST(tp + tn AS DOUBLE)) * 1000000, 0) AS BIGINT)"""
 
 
-@register(
-    "q_train_tree_depth2",
-    oracle=f"""
-    WITH base AS ({_TREE2_BASE_SQL}),
-    long0 AS (
-        SELECT 'quantity' AS feature, qty AS val, y FROM base
+def _level_sql(k: int) -> str:
+    """The ``long{k}``/``per{k}``/``cum{k}``/``splits{k}`` CTEs: every
+    candidate split of tree level `k` over ``base{k}``, the oracle twin
+    of ``_stump_split_scores``. Level 0 is the root (over ``base``, no
+    node column); deeper levels score per path label ``node``."""
+    src, node = ("base", "") if k == 0 else (f"base{k}", "node, ")
+    return f"""long{k} AS (
+        SELECT {node}'quantity' AS feature, qty AS val, y FROM {src}
         UNION ALL
-        SELECT 'discount' AS feature, disc AS val, y FROM base
+        SELECT {node}'discount' AS feature, disc AS val, y FROM {src}
     ),
-    per0 AS (
-        SELECT feature, val,
+    per{k} AS (
+        SELECT {node}feature, val,
                CAST(SUM(y) AS BIGINT) AS pos,
                CAST(COUNT(*) - SUM(y) AS BIGINT) AS neg
-        FROM long0 GROUP BY feature, val
+        FROM long{k} GROUP BY {node}feature, val
     ),
-    cum0 AS (
-        SELECT feature, val,
-               CAST(SUM(pos) OVER (PARTITION BY feature ORDER BY val
+    cum{k} AS (
+        SELECT {node}feature, val,
+               CAST(SUM(pos) OVER (PARTITION BY {node}feature ORDER BY val
                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
                     AS BIGINT) AS lp,
-               CAST(SUM(neg) OVER (PARTITION BY feature ORDER BY val
+               CAST(SUM(neg) OVER (PARTITION BY {node}feature ORDER BY val
                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
                     AS BIGINT) AS lneg,
-               CAST(SUM(pos) OVER (PARTITION BY feature) AS BIGINT) AS tp,
-               CAST(SUM(neg) OVER (PARTITION BY feature) AS BIGINT) AS tn
-        FROM per0
+               CAST(SUM(pos) OVER (PARTITION BY {node}feature) AS BIGINT) AS tp,
+               CAST(SUM(neg) OVER (PARTITION BY {node}feature) AS BIGINT) AS tn
+        FROM per{k}
     ),
-    splits0 AS (
-        SELECT feature, val AS threshold,
+    splits{k} AS (
+        SELECT {node}feature, val AS threshold,
                lp + lneg AS n_left,
                (tp - lp) + (tn - lneg) AS n_right,
                {_TREE2_GINI_SQL} AS gini_e6
-        FROM cum0
+        FROM cum{k}
         WHERE lp + lneg > 0 AND (tp - lp) + (tn - lneg) > 0
-    ),
-    root AS (
-        SELECT * FROM splits0 ORDER BY gini_e6, feature, threshold LIMIT 1
-    ),
-    base2 AS (
+    )"""
+
+
+def _route_sql(k: int) -> str:
+    """The ``base{k}`` CTE: every row labelled with its path to level
+    `k`, the oracle twin of ``_route_root`` (k = 2, through the root)
+    and ``_route`` (deeper, through level k - 1's best splits)."""
+    if k == 2:
+        return """base2 AS (
         SELECT b.qty, b.disc, b.y,
                CASE WHEN (r.feature = 'quantity' AND b.qty <= r.threshold)
                       OR (r.feature = 'discount' AND b.disc <= r.threshold)
                     THEN 'L' ELSE 'R' END AS node
         FROM base b CROSS JOIN root r
-    ),
-    long2 AS (
-        SELECT node, 'quantity' AS feature, qty AS val, y FROM base2
-        UNION ALL
-        SELECT node, 'discount' AS feature, disc AS val, y FROM base2
-    ),
-    per2 AS (
-        SELECT node, feature, val,
-               CAST(SUM(y) AS BIGINT) AS pos,
-               CAST(COUNT(*) - SUM(y) AS BIGINT) AS neg
-        FROM long2 GROUP BY node, feature, val
-    ),
-    cum2 AS (
-        SELECT node, feature, val,
-               CAST(SUM(pos) OVER (PARTITION BY node, feature ORDER BY val
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                    AS BIGINT) AS lp,
-               CAST(SUM(neg) OVER (PARTITION BY node, feature ORDER BY val
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                    AS BIGINT) AS lneg,
-               CAST(SUM(pos) OVER (PARTITION BY node, feature) AS BIGINT)
-                   AS tp,
-               CAST(SUM(neg) OVER (PARTITION BY node, feature) AS BIGINT)
-                   AS tn
-        FROM per2
-    ),
-    splits2 AS (
-        SELECT node, feature, val AS threshold,
-               lp + lneg AS n_left,
-               (tp - lp) + (tn - lneg) AS n_right,
-               {_TREE2_GINI_SQL} AS gini_e6
-        FROM cum2
-        WHERE lp + lneg > 0 AND (tp - lp) + (tn - lneg) > 0
-    ),
-    best2 AS (
+    )"""
+    return f"""base{k} AS (
+        SELECT b.qty, b.disc, b.y,
+               b.node || CASE WHEN (s.feature = 'quantity'
+                                    AND b.qty <= s.threshold)
+                              OR (s.feature = 'discount'
+                                  AND b.disc <= s.threshold)
+                              THEN 'L' ELSE 'R' END AS node
+        FROM base{k - 1} b JOIN best{k - 1} s ON s.node = b.node
+    )"""
+
+
+def _tree_oracle(depth: int) -> str:
+    """The tree of `depth` levels as one DuckDB query: the root split,
+    then per level the routing, the split census and each node's best
+    split (the oracle twin of ``_best_splits``), one row per node."""
+    levels = "".join(
+        f""",
+    {_route_sql(k)},
+    {_level_sql(k)},
+    best{k} AS (
         SELECT node, feature, threshold, n_left, n_right, gini_e6
-        FROM splits2
+        FROM splits{k}
         QUALIFY ROW_NUMBER() OVER (PARTITION BY node
             ORDER BY gini_e6, feature, threshold) = 1
+    )"""
+        for k in range(2, depth + 1)
     )
-    SELECT 'root' AS node, feature, threshold,
-           CAST(n_left AS BIGINT) AS n_left,
-           CAST(n_right AS BIGINT) AS n_right, gini_e6
-    FROM root
+    rows = "".join(
+        f"""
     UNION ALL
     SELECT node, feature, threshold,
            CAST(n_left AS BIGINT) AS n_left,
            CAST(n_right AS BIGINT) AS n_right, gini_e6
-    FROM best2
+    FROM best{k}"""
+        for k in range(2, depth + 1)
+    )
+    return f"""
+    WITH base AS ({_TREE2_BASE_SQL}),
+    {_level_sql(0)},
+    root AS (
+        SELECT * FROM splits0 ORDER BY gini_e6, feature, threshold LIMIT 1
+    ){levels}
+    SELECT 'root' AS node, feature, threshold,
+           CAST(n_left AS BIGINT) AS n_left,
+           CAST(n_right AS BIGINT) AS n_right, gini_e6
+    FROM root{rows}
     ORDER BY node
-    """,
+    """
+
+
+@register(
+    "q_train_tree_depth2",
+    oracle=_tree_oracle(2),
     tags=("Q8", "Q11", "D9", "E3"),
 )
 def q_train_tree_depth2(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1538,152 +1543,7 @@ def q_train_tree_depth2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_train_tree_depth3",
-    oracle=f"""
-    WITH base AS ({_TREE2_BASE_SQL}),
-    long0 AS (
-        SELECT 'quantity' AS feature, qty AS val, y FROM base
-        UNION ALL
-        SELECT 'discount' AS feature, disc AS val, y FROM base
-    ),
-    per0 AS (
-        SELECT feature, val,
-               CAST(SUM(y) AS BIGINT) AS pos,
-               CAST(COUNT(*) - SUM(y) AS BIGINT) AS neg
-        FROM long0 GROUP BY feature, val
-    ),
-    cum0 AS (
-        SELECT feature, val,
-               CAST(SUM(pos) OVER (PARTITION BY feature ORDER BY val
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                    AS BIGINT) AS lp,
-               CAST(SUM(neg) OVER (PARTITION BY feature ORDER BY val
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                    AS BIGINT) AS lneg,
-               CAST(SUM(pos) OVER (PARTITION BY feature) AS BIGINT) AS tp,
-               CAST(SUM(neg) OVER (PARTITION BY feature) AS BIGINT) AS tn
-        FROM per0
-    ),
-    splits0 AS (
-        SELECT feature, val AS threshold,
-               lp + lneg AS n_left,
-               (tp - lp) + (tn - lneg) AS n_right,
-               {_TREE2_GINI_SQL} AS gini_e6
-        FROM cum0
-        WHERE lp + lneg > 0 AND (tp - lp) + (tn - lneg) > 0
-    ),
-    root AS (
-        SELECT * FROM splits0 ORDER BY gini_e6, feature, threshold LIMIT 1
-    ),
-    base2 AS (
-        SELECT b.qty, b.disc, b.y,
-               CASE WHEN (r.feature = 'quantity' AND b.qty <= r.threshold)
-                      OR (r.feature = 'discount' AND b.disc <= r.threshold)
-                    THEN 'L' ELSE 'R' END AS node
-        FROM base b CROSS JOIN root r
-    ),
-    long2 AS (
-        SELECT node, 'quantity' AS feature, qty AS val, y FROM base2
-        UNION ALL
-        SELECT node, 'discount' AS feature, disc AS val, y FROM base2
-    ),
-    per2 AS (
-        SELECT node, feature, val,
-               CAST(SUM(y) AS BIGINT) AS pos,
-               CAST(COUNT(*) - SUM(y) AS BIGINT) AS neg
-        FROM long2 GROUP BY node, feature, val
-    ),
-    cum2 AS (
-        SELECT node, feature, val,
-               CAST(SUM(pos) OVER (PARTITION BY node, feature ORDER BY val
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                    AS BIGINT) AS lp,
-               CAST(SUM(neg) OVER (PARTITION BY node, feature ORDER BY val
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                    AS BIGINT) AS lneg,
-               CAST(SUM(pos) OVER (PARTITION BY node, feature) AS BIGINT)
-                   AS tp,
-               CAST(SUM(neg) OVER (PARTITION BY node, feature) AS BIGINT)
-                   AS tn
-        FROM per2
-    ),
-    splits2 AS (
-        SELECT node, feature, val AS threshold,
-               lp + lneg AS n_left,
-               (tp - lp) + (tn - lneg) AS n_right,
-               {_TREE2_GINI_SQL} AS gini_e6
-        FROM cum2
-        WHERE lp + lneg > 0 AND (tp - lp) + (tn - lneg) > 0
-    ),
-    best2 AS (
-        SELECT node, feature, threshold, n_left, n_right, gini_e6
-        FROM splits2
-        QUALIFY ROW_NUMBER() OVER (PARTITION BY node
-            ORDER BY gini_e6, feature, threshold) = 1
-    ),
-    base3 AS (
-        SELECT b.qty, b.disc, b.y,
-               b.node || CASE WHEN (s.feature = 'quantity'
-                                    AND b.qty <= s.threshold)
-                              OR (s.feature = 'discount'
-                                  AND b.disc <= s.threshold)
-                              THEN 'L' ELSE 'R' END AS node
-        FROM base2 b JOIN best2 s ON s.node = b.node
-    ),
-    long3 AS (
-        SELECT node, 'quantity' AS feature, qty AS val, y FROM base3
-        UNION ALL
-        SELECT node, 'discount' AS feature, disc AS val, y FROM base3
-    ),
-    per3 AS (
-        SELECT node, feature, val,
-               CAST(SUM(y) AS BIGINT) AS pos,
-               CAST(COUNT(*) - SUM(y) AS BIGINT) AS neg
-        FROM long3 GROUP BY node, feature, val
-    ),
-    cum3 AS (
-        SELECT node, feature, val,
-               CAST(SUM(pos) OVER (PARTITION BY node, feature ORDER BY val
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                    AS BIGINT) AS lp,
-               CAST(SUM(neg) OVER (PARTITION BY node, feature ORDER BY val
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                    AS BIGINT) AS lneg,
-               CAST(SUM(pos) OVER (PARTITION BY node, feature) AS BIGINT)
-                   AS tp,
-               CAST(SUM(neg) OVER (PARTITION BY node, feature) AS BIGINT)
-                   AS tn
-        FROM per3
-    ),
-    splits3 AS (
-        SELECT node, feature, val AS threshold,
-               lp + lneg AS n_left,
-               (tp - lp) + (tn - lneg) AS n_right,
-               {_TREE2_GINI_SQL} AS gini_e6
-        FROM cum3
-        WHERE lp + lneg > 0 AND (tp - lp) + (tn - lneg) > 0
-    ),
-    best3 AS (
-        SELECT node, feature, threshold, n_left, n_right, gini_e6
-        FROM splits3
-        QUALIFY ROW_NUMBER() OVER (PARTITION BY node
-            ORDER BY gini_e6, feature, threshold) = 1
-    )
-    SELECT 'root' AS node, feature, threshold,
-           CAST(n_left AS BIGINT) AS n_left,
-           CAST(n_right AS BIGINT) AS n_right, gini_e6
-    FROM root
-    UNION ALL
-    SELECT node, feature, threshold,
-           CAST(n_left AS BIGINT) AS n_left,
-           CAST(n_right AS BIGINT) AS n_right, gini_e6
-    FROM best2
-    UNION ALL
-    SELECT node, feature, threshold,
-           CAST(n_left AS BIGINT) AS n_left,
-           CAST(n_right AS BIGINT) AS n_right, gini_e6
-    FROM best3
-    ORDER BY node
-    """,
+    oracle=_tree_oracle(3),
     tags=("Q8", "Q11", "D9", "E3"),
 )
 def q_train_tree_depth3(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1083,20 +1083,25 @@ def q_agg_quantile_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     return local_df(spark, out, "q BIGINT, k BIGINT, value BIGINT")
 
 
+# Per group g of ``c`` (g, cents): its size cnt (n) and each row's rank
+# rn by cents (ranked), the oracle twin of ``select_group_quantiles``.
+_GROUP_RANKS_SQL = """n AS (SELECT g, CAST(COUNT(*) AS BIGINT) AS cnt FROM c GROUP BY g),
+    ranked AS (
+        SELECT g, cents,
+               ROW_NUMBER() OVER (PARTITION BY g ORDER BY cents) AS rn
+        FROM c
+    )"""
+
+
 @register(
     "q_agg_group_median_select",
-    oracle="""
+    oracle=f"""
     WITH c AS (
         SELECT l_returnflag AS g,
                CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT) AS cents
         FROM lineitem
     ),
-    n AS (SELECT g, CAST(COUNT(*) AS BIGINT) AS cnt FROM c GROUP BY g),
-    ranked AS (
-        SELECT g, cents,
-               ROW_NUMBER() OVER (PARTITION BY g ORDER BY cents) AS rn
-        FROM c
-    )
+    {_GROUP_RANKS_SQL}
     SELECT n.g AS g, n.cnt AS n, CAST((n.cnt + 1) // 2 AS BIGINT) AS k,
            r.cents AS median_c
     FROM n JOIN ranked r

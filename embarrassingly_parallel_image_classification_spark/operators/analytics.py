@@ -469,18 +469,9 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "q_ab_test",
-    oracle="""
-    WITH x AS (
-        SELECT event_type,
-               user_id % 2 = 0 AS treat,
-               CAST(ROUND(value * 100, 0) AS BIGINT) AS cents
-        FROM events
-    ),
-    g AS (
-        SELECT event_type,
-               CAST(COUNT(*) FILTER (WHERE treat) AS DECIMAL(38,0)) AS n1,
+# Per group of ``x`` (treat, cents): the treated/control counts n1/n2,
+# cent sums s1/s2 and square sums q1/q2, in DECIMAL(38,0).
+_TREAT_MOMENTS_SQL = """CAST(COUNT(*) FILTER (WHERE treat) AS DECIMAL(38,0)) AS n1,
                CAST(COUNT(*) FILTER (WHERE NOT treat) AS DECIMAL(38,0)) AS n2,
                CAST(COALESCE(SUM(cents) FILTER (WHERE treat), 0)
                     AS DECIMAL(38,0)) AS s1,
@@ -489,7 +480,21 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(COALESCE(SUM(cents * cents) FILTER (WHERE treat), 0)
                     AS DECIMAL(38,0)) AS q1,
                CAST(COALESCE(SUM(cents * cents) FILTER (WHERE NOT treat), 0)
-                    AS DECIMAL(38,0)) AS q2
+                    AS DECIMAL(38,0)) AS q2"""
+
+
+@register(
+    "q_ab_test",
+    oracle=f"""
+    WITH x AS (
+        SELECT event_type,
+               user_id % 2 = 0 AS treat,
+               CAST(ROUND(value * 100, 0) AS BIGINT) AS cents
+        FROM events
+    ),
+    g AS (
+        SELECT event_type,
+               {_TREAT_MOMENTS_SQL}
         FROM x GROUP BY event_type
     )
     SELECT event_type,
@@ -744,16 +749,34 @@ def q_grid_hotspots(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "q_attribution_lasttouch",
-    oracle="""
-    WITH ev AS (
+# Events in microseconds and cents (ev), the purchases (p) and the
+# touches (tch) an attribution line credits: the oracle twin of
+# ``_touch_events``.
+_TOUCHES_SQL = """ev AS (
         SELECT user_id, event_id, event_type, epoch_us(ts) AS us,
                CAST(ROUND(value * 100, 0) AS BIGINT) AS cents
         FROM events
     ),
     p AS (SELECT * FROM ev WHERE event_type = 'purchase'),
-    tch AS (SELECT * FROM ev WHERE event_type IN ('click', 'view')),
+    tch AS (SELECT * FROM ev WHERE event_type IN ('click', 'view'))"""
+
+
+def _touch_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(user_id, event_id, event_type, us, cents): events with their
+    microsecond timestamp and cent value, the attribution lines' input."""
+    return t(spark, sf_dir, "events").select(
+        "user_id",
+        "event_id",
+        "event_type",
+        F.unix_micros("ts").alias("us"),
+        cents("value").alias("cents"),
+    )
+
+
+@register(
+    "q_attribution_lasttouch",
+    oracle=f"""
+    WITH {_TOUCHES_SQL},
     cand AS (
         SELECT p.event_id AS pid, p.cents, t.event_type AS ch,
                t.us AS t_us,
@@ -795,13 +818,7 @@ def q_attribution_lasttouch(spark: SparkSession, sf_dir: str) -> DataFrame:
     channel is deterministic. One user-keyed exchange total; at 100 TB
     this is the sessionization shuffle profile, and the 3-day
     lookback bounds state exactly like a stream watermark would."""
-    ev = t(spark, sf_dir, "events").select(
-        "user_id",
-        "event_id",
-        "event_type",
-        F.unix_micros("ts").alias("us"),
-        cents("value").alias("cents"),
-    )
+    ev = _touch_events(spark, sf_dir)
     w = (
         Window.partitionBy("user_id")
         .orderBy("us", "event_id")
@@ -1077,14 +1094,8 @@ def q_geo_geohash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_attribution_linear",
-    oracle="""
-    WITH ev AS (
-        SELECT user_id, event_id, event_type, epoch_us(ts) AS us,
-               CAST(ROUND(value * 100, 0) AS BIGINT) AS cents
-        FROM events
-    ),
-    p AS (SELECT * FROM ev WHERE event_type = 'purchase'),
-    tch AS (SELECT * FROM ev WHERE event_type IN ('click', 'view')),
+    oracle=f"""
+    WITH {_TOUCHES_SQL},
     cand AS (
         SELECT p.event_id AS pid, p.cents, t.event_type AS ch,
                t.us AS t_us, t.event_id AS tid
@@ -1143,13 +1154,7 @@ def q_attribution_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     AQE's reach."""
     from pyspark.sql import Window
 
-    ev = t(spark, sf_dir, "events").select(
-        "user_id",
-        "event_id",
-        "event_type",
-        F.unix_micros("ts").alias("us"),
-        cents("value").alias("cents"),
-    )
+    ev = _touch_events(spark, sf_dir)
     p = ev.filter(F.col("event_type") == "purchase").select(
         F.col("user_id").alias("p_user"),
         F.col("event_id").alias("pid"),
@@ -1402,17 +1407,7 @@ POCOCK5_Z2_E6 = 5_822_569
     ),
     daily AS (
         SELECT event_type, day,
-               CAST(COUNT(*) FILTER (WHERE treat) AS DECIMAL(38,0)) AS n1,
-               CAST(COUNT(*) FILTER (WHERE NOT treat)
-                    AS DECIMAL(38,0)) AS n2,
-               CAST(COALESCE(SUM(cents) FILTER (WHERE treat), 0)
-                    AS DECIMAL(38,0)) AS s1,
-               CAST(COALESCE(SUM(cents) FILTER (WHERE NOT treat), 0)
-                    AS DECIMAL(38,0)) AS s2,
-               CAST(COALESCE(SUM(cents * cents) FILTER (WHERE treat), 0)
-                    AS DECIMAL(38,0)) AS q1,
-               CAST(COALESCE(SUM(cents * cents)
-                    FILTER (WHERE NOT treat), 0) AS DECIMAL(38,0)) AS q2
+               {_TREAT_MOMENTS_SQL}
         FROM x GROUP BY event_type, day
     ),
     cum AS (
@@ -1532,32 +1527,30 @@ def q_ab_sequential(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _fifo_ranges_sql(name: str, event_type: str) -> str:
+    """The ``name`` CTE: each `event_type` row's cent range [lo, hi) on
+    its user's running cent total (ts, event_id order)."""
+    return f"""{name} AS (
+        SELECT user_id, event_id, cents,
+               SUM(cents) OVER (PARTITION BY user_id ORDER BY ts, event_id
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS hi,
+               SUM(cents) OVER (PARTITION BY user_id ORDER BY ts, event_id
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                 - cents AS lo
+        FROM x WHERE event_type = '{event_type}'
+    )"""
+
+
 @register(
     "q_alloc_fifo",
-    oracle="""
+    oracle=f"""
     WITH x AS (
         SELECT user_id, ts, event_id, event_type,
                CAST(ROUND(value * 100, 0) AS BIGINT) AS cents
         FROM events WHERE event_type IN ('view', 'purchase')
     ),
-    lots AS (
-        SELECT user_id, event_id, cents,
-               SUM(cents) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS hi,
-               SUM(cents) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                 - cents AS lo
-        FROM x WHERE event_type = 'view'
-    ),
-    outs AS (
-        SELECT user_id, event_id, cents,
-               SUM(cents) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS hi,
-               SUM(cents) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                 - cents AS lo
-        FROM x WHERE event_type = 'purchase'
-    ),
+    {_fifo_ranges_sql("lots", "view")},
+    {_fifo_ranges_sql("outs", "purchase")},
     matched AS (
         SELECT l.user_id,
                SUM(LEAST(l.hi, o.hi) - GREATEST(l.lo, o.lo)) AS m

@@ -651,14 +651,25 @@ def q_graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "q_graph_clustering_coeff",
-    oracle=f"""
-    WITH base AS ({_EDGES_SQL}),
+# The undirected simple graph und (a < b) of the edge table, and each
+# node's degree in it (deg).
+_UND_SQL = f"""base AS ({_EDGES_SQL}),
     und AS (
         SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
         FROM base WHERE src <> dst
-    ),
+    )"""
+_DEG_SQL = """deg AS (
+        SELECT node, CAST(COUNT(*) AS BIGINT) AS degree
+        FROM (
+            SELECT a AS node FROM und UNION ALL SELECT b FROM und
+        ) d GROUP BY node
+    )"""
+
+
+@register(
+    "q_graph_clustering_coeff",
+    oracle=f"""
+    WITH {_UND_SQL},
     tri AS (
         SELECT e1.a AS x, e1.b AS y, e2.b AS z
         FROM und e1
@@ -673,12 +684,7 @@ def q_graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
             UNION ALL SELECT z FROM tri
         ) t GROUP BY node
     ),
-    deg AS (
-        SELECT node, CAST(COUNT(*) AS BIGINT) AS degree
-        FROM (
-            SELECT a AS node FROM und UNION ALL SELECT b FROM und
-        ) d GROUP BY node
-    )
+    {_DEG_SQL}
     SELECT d.node, d.degree,
            CAST(COALESCE(p.n_tri, 0) AS BIGINT) AS n_triangles,
            CAST(CASE WHEN d.degree >= 2
@@ -783,17 +789,8 @@ def q_graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_graph_assortativity",
     oracle=f"""
-    WITH base AS ({_EDGES_SQL}),
-    und AS (
-        SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-        FROM base WHERE src <> dst
-    ),
-    deg AS (
-        SELECT node, CAST(COUNT(*) AS BIGINT) AS degree
-        FROM (
-            SELECT a AS node FROM und UNION ALL SELECT b FROM und
-        ) d GROUP BY node
-    ),
+    WITH {_UND_SQL},
+    {_DEG_SQL},
     dir AS (
         SELECT u.a AS s, u.b AS t FROM und u
         UNION ALL

@@ -43,15 +43,26 @@ type and calendar day; the time-series lines read the census too),
 ``_lower_median`` and ``_orders_strata``.
 
 The oracles share CTE text only through oracle-only fragments, never
-through these builders: ``_events_x`` (events in cents by type as
-(g, cents) or (g, v)), ``_GRP_SQL`` (the per-group (n, s, q) HUGEINT
-census) and ``_FRIEDMAN_CELLS_SQL`` (the Friedman cell/complete
-blocks).
+through these builders; each fragment is the DuckDB twin of the
+builder it checks: ``_events_x`` (events in cents by type as (g,
+cents) or (g, v)), ``_GRP_SQL`` (the per-group (n, s, q) HUGEINT
+census), ``_gterm_sql`` / ``_oneway_ss_sql`` (``_oneway_ss``),
+``_chi2_terms_sql`` (``_chi2_terms``), ``_FO_X_SQL`` / ``_FO_PV_SQL``
+(``_fo_census``), ``_AB_POS_SQL`` / ``_ab_agg_sql`` (``_ab_scores`` /
+``_ab_agg``), ``_EVENT_SEC_SQL`` / ``_RISK_SQL`` (``_durations`` /
+``_risk_table``), ``_KRUSKAL_GROUPS_SQL`` (``_kruskal_groups``),
+``_FRIEDMAN_CELLS_SQL`` / ``_FRIEDMAN_RANKS_SQL`` / ``_FRIEDMAN_Q_SQL``
+(``_friedman_blocks`` / ``_friedman_ranks`` / ``_friedman_q``),
+``_ORDERS_STRATA_SQL`` (``_orders_strata``), ``_daily_sql``
+(``_type_day_sums``), and ``_XY_SUMS_SQL`` / ``_xy_moments_sql``
+(``moment_census``; the time-series, training and corpus oracles read
+them too).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql.window import WindowSpec
 from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_int
@@ -84,6 +95,224 @@ _GRP_SQL = """grp AS (
                CAST(SUM(cents * cents) AS HUGEINT) AS q
         FROM x GROUP BY g
     )"""
+
+
+def _daily_sql(col: str) -> str:
+    """The ``daily`` CTE: per (event type g, calendar day d) the cent
+    sum as `col` (the oracle twin of ``_type_day_sums``)."""
+    return f"""daily AS (
+        SELECT event_type AS g, CAST(ts AS DATE) AS d,
+               CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) AS BIGINT)
+                 AS {col}
+        FROM events GROUP BY 1, 2
+    )"""
+
+
+# The (n, sx, sy, sxy, sxx) DECIMAL(38,0) sums of (x, y) pairs.
+_XY_SUMS_SQL = """CAST(COUNT(*) AS DECIMAL(38,0)) AS n,
+               CAST(SUM(x) AS DECIMAL(38,0)) AS sx,
+               CAST(SUM(y) AS DECIMAL(38,0)) AS sy,
+               CAST(SUM(x * y) AS DECIMAL(38,0)) AS sxy,
+               CAST(SUM(x * x) AS DECIMAL(38,0)) AS sxx"""
+
+
+def _xy_moments_sql(src: str, by: str) -> str:
+    """The ``s`` CTE: per `by` group of `src` the (n, sx, sy, sxy, sxx,
+    syy) DECIMAL(38,0) moments of (x, y), the oracle twin of
+    ``moment_census``."""
+    return f"""s AS (
+        SELECT {by},
+               {_XY_SUMS_SQL},
+               CAST(SUM(y * y) AS DECIMAL(38,0)) AS syy
+        FROM {src} GROUP BY {by}
+    )"""
+
+
+def _gterm_sql(keep: str) -> str:
+    """The ``gterm`` CTE: `keep` and the e6 fixing of s^2/n per group
+    of ``grp`` (n, s, q)."""
+    return f"""gterm AS (
+        SELECT {keep},
+               1000000 * ((s * s) // n)
+                 + CAST(ROUND(1000000.0
+                       * CAST((s * s) % n AS DOUBLE)
+                       / CAST(n AS DOUBLE), 0) AS HUGEINT) AS term_e6
+        FROM grp
+    )"""
+
+
+def _oneway_ss_sql(keep: str) -> str:
+    """The ``gterm``/``tot``/``fin`` CTEs over ``grp`` (n, s, q): the
+    oracle twin of ``_oneway_ss``, ending in (nn, k, ssb_e6, ssw_e6)."""
+    return f"""{_gterm_sql(keep)},
+    tot AS (
+        SELECT CAST(SUM(n) AS HUGEINT) AS nn,
+               CAST(SUM(s) AS HUGEINT) AS ss,
+               CAST(SUM(q) AS HUGEINT) AS qq,
+               CAST(SUM(term_e6) AS HUGEINT) AS a_e6,
+               CAST(COUNT(*) AS HUGEINT) AS k
+        FROM gterm
+    ),
+    fin AS (
+        SELECT nn, k,
+               a_e6 - (1000000 * ((ss * ss) // nn)
+                       + CAST(ROUND(1000000.0
+                             * CAST((ss * ss) % nn AS DOUBLE)
+                             / CAST(nn AS DOUBLE), 0) AS HUGEINT))
+                 AS ssb_e6,
+               1000000 * qq - a_e6 AS ssw_e6
+        FROM tot
+    )"""
+
+
+def _chi2_terms_sql(row: str, col: str, keep: str) -> str:
+    """The ``tot``/``terms`` CTEs over ``cells`` (`row`, `col`, o): the
+    oracle twin of ``_chi2_terms``, one term_e6 per cell after `keep`."""
+    return f"""tot AS (
+        SELECT {row}, {col}, o,
+               SUM(o) OVER (PARTITION BY {row}) AS row_t,
+               SUM(o) OVER (PARTITION BY {col}) AS col_t,
+               SUM(o) OVER () AS n
+        FROM cells
+    ),
+    terms AS (
+        SELECT {keep},
+               CAST(ROUND(CAST((o * n - row_t * col_t)
+                               * (o * n - row_t * col_t) AS DOUBLE)
+                          / CAST(n * row_t * col_t AS DOUBLE) * 1000000, 0)
+                    AS BIGINT) AS term_e6
+        FROM tot
+    )"""
+
+
+# The kruskal/dunn census: the pooled value census per_v (v, t), the
+# doubled midranks rk and per group g its size ng and rank sum s2 (the
+# oracle twin of ``_kruskal_groups``).
+_KRUSKAL_GROUPS_SQL = f"""{_events_x("v")},
+    per_v AS (
+        SELECT v, CAST(COUNT(*) AS BIGINT) AS t FROM x GROUP BY v
+    ),
+    rk AS (
+        SELECT v, t,
+               2 * (SUM(t) OVER (ORDER BY v
+                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - t)
+                 + t + 1 AS r2
+        FROM per_v
+    ),
+    gv AS (
+        SELECT g, v, CAST(COUNT(*) AS BIGINT) AS c FROM x GROUP BY g, v
+    ),
+    grp AS (
+        SELECT gv.g,
+               CAST(SUM(gv.c) AS HUGEINT) AS ng,
+               CAST(SUM(gv.c * rk.r2) AS HUGEINT) AS s2
+        FROM gv JOIN rk ON rk.v = gv.v
+        GROUP BY gv.g
+    )"""
+
+# Events with their whole-second epoch (the survival lines' source).
+_EVENT_SEC_SQL = """e AS (
+        SELECT user_id, event_type,
+               CAST(epoch(date_trunc('second', ts)) AS BIGINT) AS sec
+        FROM events
+    )"""
+
+# Per-user durations (dur) and the at-risk step table (steps, risk):
+# the oracle twin of ``_durations`` / ``_risk_table``.
+_RISK_SQL = f"""{_EVENT_SEC_SQL},
+    per_user AS (
+        SELECT user_id,
+               MIN(sec) AS t0,
+               MIN(sec) FILTER (WHERE event_type = 'purchase') AS tp,
+               MAX(sec) AS tl
+        FROM e GROUP BY user_id
+    ),
+    dur AS (
+        SELECT (CASE WHEN tp IS NOT NULL THEN tp ELSE tl END - t0) // 60
+                   AS d_min,
+               tp IS NOT NULL AS observed
+        FROM per_user
+    ),
+    steps AS (
+        SELECT d_min,
+               COUNT(*) FILTER (WHERE observed) AS d_i,
+               COUNT(*) AS c_all
+        FROM dur GROUP BY d_min
+    ),
+    risk AS (
+        SELECT d_min, d_i,
+               SUM(c_all) OVER (ORDER BY d_min DESC
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS n_i
+        FROM steps
+    )"""
+
+# Per order-priority stratum k: size nk, exposed r1, finished c1 and
+# their overlap a (the oracle twin of ``_orders_strata``; each reader
+# applies the nk >= 2 filter itself).
+_ORDERS_STRATA_SQL = """x AS (
+        SELECT CAST(SUBSTRING(o_orderpriority, 1, 1) AS BIGINT) AS k,
+               CASE WHEN o_custkey % 2 = 0 THEN 1 ELSE 0 END AS e,
+               CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END AS s
+        FROM orders
+    ),
+    strata AS (
+        SELECT k,
+               CAST(COUNT(*) AS HUGEINT) AS nk,
+               CAST(SUM(e) AS HUGEINT) AS r1,
+               CAST(SUM(s) AS HUGEINT) AS c1,
+               CAST(SUM(e * s) AS HUGEINT) AS a
+        FROM x GROUP BY k
+    )"""
+
+# The F-vs-O order samples in cents (x) and their per-price census pv
+# (v, ca, t): the oracle twin of ``_fo_census``.
+_FO_X_SQL = """x AS (
+        SELECT o_orderstatus AS st,
+               CAST(ROUND(o_totalprice * 100, 0) AS BIGINT) AS v
+        FROM orders WHERE o_orderstatus IN ('F', 'O')
+    )"""
+_FO_PV_SQL = f"""{_FO_X_SQL},
+    pv AS (
+        SELECT v,
+               CAST(COUNT(*) FILTER (WHERE st = 'F') AS BIGINT) AS ca,
+               CAST(COUNT(*) AS BIGINT) AS t
+        FROM x GROUP BY v
+    )"""
+# pos (v, ca, t, cumb, nn): the tie-block positions ``_ab_scores`` scores.
+_AB_POS_SQL = f"""{_FO_PV_SQL},
+    pos AS (
+        SELECT v, ca, t,
+               SUM(t) OVER (ORDER BY v
+                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - t
+                 AS cumb,
+               SUM(t) OVER () AS nn
+        FROM pv
+    )"""
+
+
+def _ab_agg_sql(*extra: str) -> str:
+    """The ``agg`` CTE over the Ansari-Bradley block scores ``bs``:
+    (nn, n, m, s1, *extra, ab_e3, s2_e3), the e3 fixings of the F
+    score total and of the squared-score sum (_AB_FIX's DuckDB twin)."""
+    cols = "".join(f"\n               {c}," for c in extra)
+    return f"""agg AS (
+        SELECT CAST(MAX(nn) AS HUGEINT) AS nn,
+               CAST(SUM(ca) AS HUGEINT) AS n,
+               CAST(MAX(nn) - SUM(ca) AS HUGEINT) AS m,
+               CAST(SUM(bsum) AS HUGEINT) AS s1,{cols}
+               CAST(SUM(1000 * ((ca * bsum) // t)
+                        + CAST(ROUND(1000.0
+                              * CAST((ca * bsum) % t AS DOUBLE)
+                              / CAST(t AS DOUBLE), 0) AS HUGEINT))
+                    AS HUGEINT) AS ab_e3,
+               CAST(SUM(1000 * ((bsum * bsum) // t)
+                        + CAST(ROUND(1000.0
+                              * CAST((bsum * bsum) % t AS DOUBLE)
+                              / CAST(t AS DOUBLE), 0) AS HUGEINT))
+                    AS HUGEINT) AS s2_e3
+        FROM bs
+    )"""
+
 
 def fix_e6(num: Column, den: Column) -> Column:
     """round(10^6 * num / den) as an exact DECIMAL(38,0): the e6 DIV/MOD
@@ -252,6 +481,13 @@ def _lower_median(census: DataFrame, value: str, *by: str) -> DataFrame:
     )
 
 
+def _running_by_v() -> WindowSpec:
+    """The running frame over the value domain v (every row from the
+    first through the current), the cumulative counts of the order
+    tests."""
+    return Window.orderBy("v").rowsBetween(Window.unboundedPreceding, Window.currentRow)
+
+
 def _fo_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(v, ca, cb, t) over the finished ('F') and open ('O') orders, the
     two samples of every two-sample order test: per distinct total
@@ -361,11 +597,7 @@ THEIL_SEN_WINDOW = 25
 @register(
     "q_stats_ks_test",
     oracle=f"""
-    WITH x AS (
-        SELECT o_orderstatus AS st,
-               CAST(ROUND(o_totalprice * 100, 0) AS BIGINT) AS v
-        FROM orders WHERE o_orderstatus IN ('F', 'O')
-    ),
+    WITH {_FO_X_SQL},
     per_v AS (
         SELECT v,
                COUNT(*) FILTER (WHERE st = 'F') AS ca,
@@ -417,7 +649,7 @@ def q_stats_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     partials; at 100 TB the cumulative step is a range-partitioned
     prefix sum over the same bounded domain."""
     per_v = _fo_census(spark, sf_dir)
-    wcum = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    wcum = _running_by_v()
     wall = Window.orderBy("v").rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
     )
@@ -537,37 +769,8 @@ def q_stats_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_survival_km",
-    oracle="""
-    WITH e AS (
-        SELECT user_id, event_type,
-               CAST(epoch(date_trunc('second', ts)) AS BIGINT) AS sec
-        FROM events
-    ),
-    per_user AS (
-        SELECT user_id,
-               MIN(sec) AS t0,
-               MIN(sec) FILTER (WHERE event_type = 'purchase') AS tp,
-               MAX(sec) AS tl
-        FROM e GROUP BY user_id
-    ),
-    dur AS (
-        SELECT (CASE WHEN tp IS NOT NULL THEN tp ELSE tl END - t0) // 60
-                   AS d_min,
-               tp IS NOT NULL AS observed
-        FROM per_user
-    ),
-    steps AS (
-        SELECT d_min,
-               COUNT(*) FILTER (WHERE observed) AS d_i,
-               COUNT(*) AS c_all
-        FROM dur GROUP BY d_min
-    ),
-    risk AS (
-        SELECT d_min, d_i,
-               SUM(c_all) OVER (ORDER BY d_min DESC
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS n_i
-        FROM steps
-    ),
+    oracle=f"""
+    WITH {_RISK_SQL},
     km AS (
         SELECT d_min, d_i, n_i,
                CAST(ROUND(LN(CAST(n_i - d_i AS DOUBLE)
@@ -901,6 +1104,19 @@ BOOTSTRAP_B = 100
 CHI2_DF4_E6 = 9_487_729
 
 
+def _chi2_df4_q(num: Column, den: Column, floor: str) -> list[Column]:
+    """(q_num, q_den, q_e6_floor, significant) of a Q = num / den
+    statistic judged against chi-square df = 4: ``floor`` spells the e6
+    floor quotient (0 where den <= 0), and the verdict is the
+    cross-multiplied num * 10^6 > CHI2_DF4_E6 * den."""
+    return [
+        num.cast("bigint").alias("q_num"),
+        den.cast("bigint").alias("q_den"),
+        F.when(den > 0, F.expr(floor)).otherwise(0).cast("bigint").alias("q_e6_floor"),
+        ((den > 0) & (num * 1000000 > F.lit(CHI2_DF4_E6) * den)).alias("significant"),
+    ]
+
+
 def _pois_weight_sql(u: str) -> str:
     """CASE ladder mapping a uniform e6 draw to a Poisson(1) weight —
     one spelling used verbatim in BOTH the Spark selectExpr and the
@@ -1063,21 +1279,7 @@ def q_stats_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(COUNT(*) AS DECIMAL(38,0)) AS o
         FROM events GROUP BY event_type, treat
     ),
-    tot AS (
-        SELECT event_type, treat, o,
-               SUM(o) OVER (PARTITION BY event_type) AS row_t,
-               SUM(o) OVER (PARTITION BY treat) AS col_t,
-               SUM(o) OVER () AS n
-        FROM cells
-    ),
-    terms AS (
-        SELECT n,
-               CAST(ROUND(CAST((o * n - row_t * col_t)
-                               * (o * n - row_t * col_t) AS DOUBLE)
-                          / CAST(n * row_t * col_t AS DOUBLE) * 1000000, 0)
-                    AS BIGINT) AS term_e6
-        FROM tot
-    )
+    {_chi2_terms_sql("event_type", "treat", "n")}
     SELECT CAST(MAX(n) AS BIGINT) AS n,
            CAST(SUM(term_e6) AS BIGINT) AS chi2_e6,
            SUM(term_e6) > {CHI2_DF4_E6} AS significant
@@ -1593,32 +1795,7 @@ ANOVA_F_CRIT_E4 = 23719
     oracle=f"""
     WITH {_events_x("cents")},
     {_GRP_SQL},
-    gterm AS (
-        SELECT g, n, s, q,
-               1000000 * ((s * s) // n)
-                 + CAST(ROUND(1000000.0
-                       * CAST((s * s) % n AS DOUBLE)
-                       / CAST(n AS DOUBLE), 0) AS HUGEINT) AS term_e6
-        FROM grp
-    ),
-    tot AS (
-        SELECT CAST(SUM(n) AS HUGEINT) AS nn,
-               CAST(SUM(s) AS HUGEINT) AS ss,
-               CAST(SUM(q) AS HUGEINT) AS qq,
-               CAST(SUM(term_e6) AS HUGEINT) AS a_e6,
-               CAST(COUNT(*) AS HUGEINT) AS k
-        FROM gterm
-    ),
-    fin AS (
-        SELECT nn, k,
-               a_e6 - (1000000 * ((ss * ss) // nn)
-                       + CAST(ROUND(1000000.0
-                             * CAST((ss * ss) % nn AS DOUBLE)
-                             / CAST(nn AS DOUBLE), 0) AS HUGEINT))
-                 AS ssb_e6,
-               1000000 * qq - a_e6 AS ssw_e6
-        FROM tot
-    )
+    {_oneway_ss_sql("g, n, s, q")}
     SELECT CAST(nn AS BIGINT) AS n,
            CAST(k AS BIGINT) AS k_groups,
            CAST(ssb_e6 AS BIGINT) AS ssb_e6,
@@ -1677,28 +1854,14 @@ def _f_verdict(fin: DataFrame, floor: str) -> DataFrame:
 
 @register(
     "q_stats_cramers_v",
-    oracle="""
+    oracle=f"""
     WITH cells AS (
         SELECT event_type,
                CAST(json_extract(props, '$.k') AS BIGINT) % 5 AS kb,
                CAST(COUNT(*) AS DECIMAL(38,0)) AS o
         FROM events GROUP BY event_type, kb
     ),
-    tot AS (
-        SELECT event_type, kb, o,
-               SUM(o) OVER (PARTITION BY event_type) AS row_t,
-               SUM(o) OVER (PARTITION BY kb) AS col_t,
-               SUM(o) OVER () AS n
-        FROM cells
-    ),
-    terms AS (
-        SELECT n,
-               CAST(ROUND(CAST((o * n - row_t * col_t)
-                               * (o * n - row_t * col_t) AS DOUBLE)
-                          / CAST(n * row_t * col_t AS DOUBLE) * 1000000, 0)
-                    AS BIGINT) AS term_e6
-        FROM tot
-    ),
+    {_chi2_terms_sql("event_type", "kb", "n")},
     s AS (
         SELECT CAST(MAX(n) AS BIGINT) AS n,
                CAST(SUM(term_e6) AS BIGINT) AS chi2_e6
@@ -1991,9 +2154,7 @@ def _kruskal_groups(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFr
         "kruskal.gv",
     )
     per_v = gv.groupBy("v").agg(F.sum("c").cast("bigint").alias("t"))
-    wv = Window.orderBy("v").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
+    wv = _running_by_v()
     rk = per_v.select(
         "v",
         (2 * (F.sum("t").over(wv) - F.col("t")) + F.col("t") + 1).alias("r2"),
@@ -2012,27 +2173,7 @@ def _kruskal_groups(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFr
 @register(
     "q_stats_kruskal",
     oracle=f"""
-    WITH {_events_x("v")},
-    per_v AS (
-        SELECT v, CAST(COUNT(*) AS BIGINT) AS t FROM x GROUP BY v
-    ),
-    rk AS (
-        SELECT v, t,
-               2 * (SUM(t) OVER (ORDER BY v
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - t)
-                 + t + 1 AS r2
-        FROM per_v
-    ),
-    gv AS (
-        SELECT g, v, CAST(COUNT(*) AS BIGINT) AS c FROM x GROUP BY g, v
-    ),
-    grp AS (
-        SELECT gv.g,
-               CAST(SUM(gv.c) AS HUGEINT) AS ng,
-               CAST(SUM(gv.c * rk.r2) AS HUGEINT) AS s2
-        FROM gv JOIN rk ON rk.v = gv.v
-        GROUP BY gv.g
-    ),
+    WITH {_KRUSKAL_GROUPS_SQL},
     gterm AS (
         SELECT ng, s2,
                1000000 * ((s2 * s2) // ng)
@@ -2138,37 +2279,8 @@ def q_stats_kruskal(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_survival_nelson_aalen",
-    oracle="""
-    WITH e AS (
-        SELECT user_id, event_type,
-               CAST(epoch(date_trunc('second', ts)) AS BIGINT) AS sec
-        FROM events
-    ),
-    per_user AS (
-        SELECT user_id,
-               MIN(sec) AS t0,
-               MIN(sec) FILTER (WHERE event_type = 'purchase') AS tp,
-               MAX(sec) AS tl
-        FROM e GROUP BY user_id
-    ),
-    dur AS (
-        SELECT (CASE WHEN tp IS NOT NULL THEN tp ELSE tl END - t0) // 60
-                   AS d_min,
-               tp IS NOT NULL AS observed
-        FROM per_user
-    ),
-    steps AS (
-        SELECT d_min,
-               COUNT(*) FILTER (WHERE observed) AS d_i,
-               COUNT(*) AS c_all
-        FROM dur GROUP BY d_min
-    ),
-    risk AS (
-        SELECT d_min, d_i,
-               SUM(c_all) OVER (ORDER BY d_min DESC
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS n_i
-        FROM steps
-    ),
+    oracle=f"""
+    WITH {_RISK_SQL},
     na AS (
         SELECT d_min, d_i, n_i,
                CAST(ROUND(1000000.0 * CAST(d_i AS DOUBLE)
@@ -2250,11 +2362,7 @@ CHI2_DF1_E6 = 3_841_459
 @register(
     "q_survival_logrank",
     oracle=f"""
-    WITH e AS (
-        SELECT user_id, event_type,
-               CAST(epoch(date_trunc('second', ts)) AS BIGINT) AS sec
-        FROM events
-    ),
+    WITH {_EVENT_SEC_SQL},
     per_user AS (
         SELECT user_id,
                user_id % 2 = 0 AS grp,
@@ -2614,18 +2722,12 @@ def q_stats_cochran_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_total",
         "sum_row_sq",
         "sum_col_sq",
-        num.cast("bigint").alias("q_num"),
-        den.cast("bigint").alias("q_den"),
-        F.when(den > 0, F.expr(
+        *_chi2_df4_q(
+            num,
+            den,
             f"({COCHRAN_K - 1} * ({COCHRAN_K} * sum_col_sq"
             f" - n_total * n_total) * 1000000)"
-            f" div ({COCHRAN_K} * n_total - sum_row_sq)"
-        ))
-        .otherwise(0)
-        .cast("bigint")
-        .alias("q_e6_floor"),
-        ((den > 0) & (num * 1000000 > F.lit(CHI2_DF4_E6) * den)).alias(
-            "significant"
+            f" div ({COCHRAN_K} * n_total - sum_row_sq)",
         ),
     )
 
@@ -2816,6 +2918,35 @@ _FRIEDMAN_CELLS_SQL = f"""cell AS (
     ),
     c2 AS (SELECT cell.* FROM cell JOIN complete USING (d))"""
 
+# The within-block doubled midranks s (g, r2) and per-type rank sums
+# byg (g, r2_sum): the oracle twin of ``_friedman_ranks``.
+_FRIEDMAN_RANKS_SQL = f"""{_FRIEDMAN_CELLS_SQL},
+    tie AS (SELECT d, v, CAST(COUNT(*) AS BIGINT) AS tcnt
+            FROM c2 GROUP BY d, v),
+    rk AS (
+        SELECT d, v,
+               2 * (SUM(tcnt) OVER (PARTITION BY d ORDER BY v
+                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - tcnt)
+                 + tcnt + 1 AS r2
+        FROM tie
+    ),
+    s AS (SELECT c2.g, rk.r2 FROM c2
+          JOIN rk ON rk.d = c2.d AND rk.v = c2.v),
+    byg AS (SELECT g, CAST(SUM(r2) AS BIGINT) AS r2_sum FROM s GROUP BY g)"""
+# The 1-row (n, a2, devsq) q: the oracle twin of ``_friedman_q``.
+_FRIEDMAN_Q_SQL = f"""{_FRIEDMAN_RANKS_SQL},
+    tot AS (
+        SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM complete) AS n,
+               (SELECT CAST(SUM(r2 * r2) AS BIGINT) FROM s) AS a2
+    ),
+    q AS (
+        SELECT tot.n, tot.a2,
+               (SELECT CAST(SUM((r2_sum - tot.n * {FRIEDMAN_K + 1})
+                            * (r2_sum - tot.n * {FRIEDMAN_K + 1}))
+                       AS BIGINT) FROM byg) AS devsq
+        FROM tot
+    )"""
+
 
 def _friedman_blocks(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """The blocked frame the Friedman family (friedman, page_trend,
@@ -2886,30 +3017,7 @@ def _friedman_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_stats_friedman",
     oracle=f"""
-    WITH {_FRIEDMAN_CELLS_SQL},
-    tie AS (SELECT d, v, CAST(COUNT(*) AS BIGINT) AS tcnt
-            FROM c2 GROUP BY d, v),
-    rk AS (
-        SELECT d, v,
-               2 * (SUM(tcnt) OVER (PARTITION BY d ORDER BY v
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - tcnt)
-                 + tcnt + 1 AS r2
-        FROM tie
-    ),
-    s AS (SELECT c2.g, rk.r2 FROM c2
-          JOIN rk ON rk.d = c2.d AND rk.v = c2.v),
-    byg AS (SELECT g, CAST(SUM(r2) AS BIGINT) AS r2_sum FROM s GROUP BY g),
-    tot AS (
-        SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM complete) AS n,
-               (SELECT CAST(SUM(r2 * r2) AS BIGINT) FROM s) AS a2
-    ),
-    q AS (
-        SELECT tot.n, tot.a2,
-               (SELECT CAST(SUM((r2_sum - tot.n * {FRIEDMAN_K + 1})
-                            * (r2_sum - tot.n * {FRIEDMAN_K + 1}))
-                       AS BIGINT) FROM byg) AS devsq
-        FROM tot
-    )
+    WITH {_FRIEDMAN_Q_SQL}
     SELECT n AS n_blocks,
            CAST({FRIEDMAN_K} AS BIGINT) AS k,
            CAST({FRIEDMAN_K - 1} * devsq AS BIGINT) AS q_num,
@@ -2964,20 +3072,8 @@ def q_stats_friedman(spark: SparkSession, sf_dir: str) -> DataFrame:
     return q.select(
         F.col("n").alias("n_blocks"),
         F.lit(FRIEDMAN_K).cast("bigint").alias("k"),
-        num.cast("bigint").alias("q_num"),
-        den.cast("bigint").alias("q_den"),
-        F.when(
-            den > 0,
-            F.expr(
-                f"({FRIEDMAN_K - 1} * devsq * 1000000)"
-                f" div (a2 - n * {kk1sq})"
-            ),
-        )
-        .otherwise(0)
-        .cast("bigint")
-        .alias("q_e6_floor"),
-        ((den > 0) & (num * 1000000 > F.lit(CHI2_DF4_E6) * den)).alias(
-            "significant"
+        *_chi2_df4_q(
+            num, den, f"({FRIEDMAN_K - 1} * devsq * 1000000) div (a2 - n * {kk1sq})"
         ),
     )
 
@@ -3172,32 +3268,7 @@ def q_ts_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(SUM(c * z * z) AS HUGEINT) AS q
         FROM z GROUP BY g
     ),
-    gterm AS (
-        SELECT n, s, q,
-               1000000 * ((s * s) // n)
-                 + CAST(ROUND(1000000.0
-                       * CAST((s * s) % n AS DOUBLE)
-                       / CAST(n AS DOUBLE), 0) AS HUGEINT) AS term_e6
-        FROM grp
-    ),
-    tot AS (
-        SELECT CAST(SUM(n) AS HUGEINT) AS nn,
-               CAST(SUM(s) AS HUGEINT) AS ss,
-               CAST(SUM(q) AS HUGEINT) AS qq,
-               CAST(SUM(term_e6) AS HUGEINT) AS a_e6,
-               CAST(COUNT(*) AS HUGEINT) AS k
-        FROM gterm
-    ),
-    fin AS (
-        SELECT nn, k,
-               a_e6 - (1000000 * ((ss * ss) // nn)
-                       + CAST(ROUND(1000000.0
-                             * CAST((ss * ss) % nn AS DOUBLE)
-                             / CAST(nn AS DOUBLE), 0) AS HUGEINT))
-                 AS ssb_e6,
-               1000000 * qq - a_e6 AS ssw_e6
-        FROM tot
-    )
+    {_oneway_ss_sql("n, s, q")}
     SELECT CAST(nn AS BIGINT) AS n,
            CAST(k AS BIGINT) AS k_groups,
            CAST(ssb_e6 AS BIGINT) AS ssb_e6,
@@ -3401,27 +3472,7 @@ DUNN_Z2_E6 = 7_879_439
 @register(
     "q_stats_dunn",
     oracle=f"""
-    WITH {_events_x("v")},
-    per_v AS (
-        SELECT v, CAST(COUNT(*) AS BIGINT) AS t FROM x GROUP BY v
-    ),
-    rk AS (
-        SELECT v, t,
-               2 * (SUM(t) OVER (ORDER BY v
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - t)
-                 + t + 1 AS r2
-        FROM per_v
-    ),
-    gv AS (
-        SELECT g, v, CAST(COUNT(*) AS BIGINT) AS c FROM x GROUP BY g, v
-    ),
-    grp AS (
-        SELECT gv.g,
-               CAST(SUM(gv.c) AS HUGEINT) AS ng,
-               CAST(SUM(gv.c * rk.r2) AS HUGEINT) AS s2
-        FROM gv JOIN rk ON rk.v = gv.v
-        GROUP BY gv.g
-    ),
+    WITH {_KRUSKAL_GROUPS_SQL},
     tot AS (
         SELECT CAST(SUM(ng) AS HUGEINT) AS n,
                (SELECT CAST(SUM(t * t * t - t) AS HUGEINT) FROM per_v)
@@ -3554,14 +3605,7 @@ def _group_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH {_events_x("cents")},
     {_GRP_SQL},
-    gterm AS (
-        SELECT g, n, s, q,
-               1000000 * ((s * s) // n)
-                 + CAST(ROUND(1000000.0
-                       * CAST((s * s) % n AS DOUBLE)
-                       / CAST(n AS DOUBLE), 0) AS HUGEINT) AS term_e6
-        FROM grp
-    ),
+    {_gterm_sql("g, n, s, q")},
     tot AS (
         SELECT CAST(SUM(n) AS HUGEINT) AS nn,
                CAST(COUNT(*) AS HUGEINT) AS k,
@@ -3807,12 +3851,7 @@ def q_stats_games_howell(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_stats_mann_kendall",
     oracle=f"""
-    WITH daily AS (
-        SELECT event_type AS g, CAST(ts AS DATE) AS d,
-               CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) AS BIGINT)
-                 AS v
-        FROM events GROUP BY 1, 2
-    ),
+    WITH {_daily_sql("v")},
     pairs AS (
         SELECT a.g,
                CAST(SUM(CASE WHEN b.v > a.v THEN 1
@@ -4090,11 +4129,7 @@ CVM_CRIT_E3 = 461
 @register(
     "q_stats_cramer_von_mises",
     oracle=f"""
-    WITH x AS (
-        SELECT o_orderstatus AS st,
-               CAST(ROUND(o_totalprice * 100, 0) AS BIGINT) AS v
-        FROM orders WHERE o_orderstatus IN ('F', 'O')
-    ),
+    WITH {_FO_X_SQL},
     per_v AS (
         SELECT v,
                CAST(COUNT(*) FILTER (WHERE st = 'F') AS HUGEINT) AS ca,
@@ -4156,9 +4191,7 @@ def q_stats_cramer_von_mises(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: identical shape to KS — one map-side-combined value census,
     one cumulative window over the value domain, a 1-row aggregate;
     the fact table is scanned once and never windowed."""
-    wcum = Window.orderBy("v").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
+    wcum = _running_by_v()
     cum = _fo_census(spark, sf_dir).select(
         (F.col("ca") + F.col("cb")).cast(D38).alias("w"),
         F.sum("ca").over(wcum).cast(D38).alias("fa"),
@@ -4219,21 +4252,7 @@ def q_stats_cramer_von_mises(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(COUNT(*) AS DECIMAL(38,0)) AS o
         FROM x, med GROUP BY x.g, x.cents > med.med
     ),
-    tot AS (
-        SELECT g, above, o,
-               SUM(o) OVER (PARTITION BY g) AS row_t,
-               SUM(o) OVER (PARTITION BY above) AS col_t,
-               SUM(o) OVER () AS n
-        FROM cells
-    ),
-    terms AS (
-        SELECT g, above, o, row_t, n,
-               CAST(ROUND(CAST((o * n - row_t * col_t)
-                               * (o * n - row_t * col_t) AS DOUBLE)
-                          / CAST(n * row_t * col_t AS DOUBLE) * 1000000, 0)
-                    AS BIGINT) AS term_e6
-        FROM tot
-    )
+    {_chi2_terms_sql("g", "above", "g, above, o, row_t, n")}
     SELECT CAST(MAX(n) AS BIGINT) AS n,
            CAST(MAX(med.med) AS BIGINT) AS pooled_median_cents,
            CAST(SUM(CASE WHEN above THEN o ELSE 0 END) AS BIGINT)
@@ -4318,9 +4337,7 @@ def _ab_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(ca, t, nn, cumb, bsum) per tie block of the pooled F/O price
     census: the block's 'F' count and size, the pooled size, the count
     below it, and its Ansari-Bradley score sum T(cumb + t) - T(cumb)."""
-    wcum = Window.orderBy("v").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
+    wcum = _running_by_v()
     pos = _fo_census(spark, sf_dir).select(
         "ca",
         "t",
@@ -4339,51 +4356,45 @@ def _ab_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _ab_agg(spark: SparkSession, sf_dir: str, *extra: Column) -> DataFrame:
+    """1-row (nn, n, m, s1, *extra, ab_e3, s2_e3) over ``_ab_scores``:
+    pooled size, 'F' and 'O' counts, the score total and the e3
+    fixings (``_AB_FIX``) of the 'F' score sum and of the squared-score
+    sum; ``extra`` aggregates ride the same pass."""
+    return _ab_scores(spark, sf_dir).agg(
+        F.max("nn").cast(D38).alias("nn"),
+        F.sum("ca").cast(D38).alias("n"),
+        (F.max("nn") - F.sum("ca")).cast(D38).alias("m"),
+        F.sum("bsum").cast(D38).alias("s1"),
+        *extra,
+        F.sum(F.expr(_AB_FIX.format(num="ca * bsum"))).cast(D38).alias("ab_e3"),
+        F.sum(F.expr(_AB_FIX.format(num="bsum * bsum"))).cast(D38).alias("s2_e3"),
+    )
+
+
+def _ab_stages() -> list[Column]:
+    """(dstage, vnum_e3) over ``_ab_agg``: the staged floor |D| div 1000
+    of the exact cross D = ab_e3*N - n*S1*1000, and the e3 variance
+    numerator N*sum(a^2) - S1^2 (clamped at 0)."""
+    return [
+        F.expr("ABS(ab_e3 * nn - n * s1 * 1000) div 1000").cast(D38).alias("dstage"),
+        F.expr("GREATEST(nn * s2_e3 - s1 * s1 * 1000, CAST(0 AS decimal(38,0)))")
+        .cast(D38)
+        .alias("vnum_e3"),
+    ]
+
+
 @register(
     "q_stats_ansari_bradley",
     oracle=f"""
-    WITH x AS (
-        SELECT o_orderstatus AS st,
-               CAST(ROUND(o_totalprice * 100, 0) AS BIGINT) AS v
-        FROM orders WHERE o_orderstatus IN ('F', 'O')
-    ),
-    pv AS (
-        SELECT v,
-               CAST(COUNT(*) FILTER (WHERE st = 'F') AS BIGINT) AS ca,
-               CAST(COUNT(*) AS BIGINT) AS t
-        FROM x GROUP BY v
-    ),
-    pos AS (
-        SELECT v, ca, t,
-               SUM(t) OVER (ORDER BY v
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - t
-                 AS cumb,
-               SUM(t) OVER () AS nn
-        FROM pv
-    ),
+    WITH {_AB_POS_SQL},
     bs AS (
         SELECT ca, t, nn,
                {_AB_T_DUCK.format(x="(cumb + t)", n="nn")}
                  - {_AB_T_DUCK.format(x="cumb", n="nn")} AS bsum
         FROM pos
     ),
-    agg AS (
-        SELECT CAST(MAX(nn) AS HUGEINT) AS nn,
-               CAST(SUM(ca) AS HUGEINT) AS n,
-               CAST(MAX(nn) - SUM(ca) AS HUGEINT) AS m,
-               CAST(SUM(bsum) AS HUGEINT) AS s1,
-               CAST(SUM(1000 * ((ca * bsum) // t)
-                        + CAST(ROUND(1000.0
-                              * CAST((ca * bsum) % t AS DOUBLE)
-                              / CAST(t AS DOUBLE), 0) AS HUGEINT))
-                    AS HUGEINT) AS ab_e3,
-               CAST(SUM(1000 * ((bsum * bsum) // t)
-                        + CAST(ROUND(1000.0
-                              * CAST((bsum * bsum) % t AS DOUBLE)
-                              / CAST(t AS DOUBLE), 0) AS HUGEINT))
-                    AS HUGEINT) AS s2_e3
-        FROM bs
-    ),
+    {_ab_agg_sql()},
     fin AS (
         SELECT nn, n, m, s1, ab_e3,
                ABS(ab_e3 * nn - n * s1 * 1000) // 1000 AS dstage,
@@ -4438,28 +4449,14 @@ def q_stats_ansari_bradley(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: identical shape to KS/CvM — one map-side-combined value
     census, one cumulative window over the value domain, a 1-row
     aggregate; the fact table is scanned once."""
-    agg = _ab_scores(spark, sf_dir).agg(
-        F.max("nn").cast(D38).alias("nn"),
-        F.sum("ca").cast(D38).alias("n"),
-        (F.max("nn") - F.sum("ca")).cast(D38).alias("m"),
-        F.sum("bsum").cast(D38).alias("s1"),
-        F.sum(F.expr(_AB_FIX.format(num="ca * bsum"))).cast(D38).alias("ab_e3"),
-        F.sum(F.expr(_AB_FIX.format(num="bsum * bsum")))
-        .cast(D38)
-        .alias("s2_e3"),
-    )
+    agg = _ab_agg(spark, sf_dir)
     fin = agg.select(
         "nn",
         "n",
         "m",
         "s1",
         "ab_e3",
-        F.expr("ABS(ab_e3 * nn - n * s1 * 1000) div 1000")
-        .cast(D38)
-        .alias("dstage"),
-        F.expr("GREATEST(nn * s2_e3 - s1 * s1 * 1000, CAST(0 AS decimal(38,0)))")
-        .cast(D38)
-        .alias("vnum_e3"),
+        *_ab_stages(),
     )
     # the floor MUST run on vnum_e3 alone: Spark `div` returns BIGINT
     # and silently WRAPS quotients > int64 (probed round 12 —
@@ -4502,49 +4499,16 @@ LEPAGE_D_E3 = 5991
 @register(
     "q_stats_lepage",
     oracle=f"""
-    WITH x AS (
-        SELECT o_orderstatus AS st,
-               CAST(ROUND(o_totalprice * 100, 0) AS BIGINT) AS v
-        FROM orders WHERE o_orderstatus IN ('F', 'O')
-    ),
-    pv AS (
-        SELECT v,
-               CAST(COUNT(*) FILTER (WHERE st = 'F') AS BIGINT) AS ca,
-               CAST(COUNT(*) AS BIGINT) AS t
-        FROM x GROUP BY v
-    ),
-    pos AS (
-        SELECT v, ca, t,
-               SUM(t) OVER (ORDER BY v
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - t
-                 AS cumb,
-               SUM(t) OVER () AS nn
-        FROM pv
-    ),
+    WITH {_AB_POS_SQL},
     bs AS (
         SELECT ca, t, nn, cumb,
                {{ab_t_hi}} - {{ab_t_lo}} AS bsum
         FROM pos
     ),
-    agg AS (
-        SELECT CAST(MAX(nn) AS HUGEINT) AS nn,
-               CAST(SUM(ca) AS HUGEINT) AS n,
-               CAST(MAX(nn) - SUM(ca) AS HUGEINT) AS m,
-               CAST(SUM(bsum) AS HUGEINT) AS s1,
-               CAST(SUM(ca * (2 * cumb + t + 1)) AS HUGEINT) AS r1x2,
-               CAST(SUM(t * t * t - t) AS HUGEINT) AS tie3,
-               CAST(SUM(1000 * ((ca * bsum) // t)
-                        + CAST(ROUND(1000.0
-                              * CAST((ca * bsum) % t AS DOUBLE)
-                              / CAST(t AS DOUBLE), 0) AS HUGEINT))
-                    AS HUGEINT) AS ab_e3,
-               CAST(SUM(1000 * ((bsum * bsum) // t)
-                        + CAST(ROUND(1000.0
-                              * CAST((bsum * bsum) % t AS DOUBLE)
-                              / CAST(t AS DOUBLE), 0) AS HUGEINT))
-                    AS HUGEINT) AS s2_e3
-        FROM bs
-    ),
+    {_ab_agg_sql(
+        "CAST(SUM(ca * (2 * cumb + t + 1)) AS HUGEINT) AS r1x2",
+        "CAST(SUM(t * t * t - t) AS HUGEINT) AS tie3",
+    )},
     fin AS (
         SELECT nn, n, m, s1, r1x2, ab_e3,
                r1x2 - n * (nn + 1) AS wdiff,
@@ -4609,21 +4573,15 @@ def q_stats_lepage(spark: SparkSession, sf_dir: str) -> DataFrame:
     combined value census (domain-bounded, not row-bounded), one
     window over the census, a 1-row aggregate; the fact table is
     scanned once."""
-    agg = _ab_scores(spark, sf_dir).agg(
-        F.max("nn").cast(D38).alias("nn"),
-        F.sum("ca").cast(D38).alias("n"),
-        (F.max("nn") - F.sum("ca")).cast(D38).alias("m"),
-        F.sum("bsum").cast(D38).alias("s1"),
+    agg = _ab_agg(
+        spark,
+        sf_dir,
         F.sum(F.col("ca") * (2 * F.col("cumb") + F.col("t") + 1))
         .cast(D38)
         .alias("r1x2"),
         F.sum(F.col("t") * F.col("t") * F.col("t") - F.col("t"))
         .cast(D38)
         .alias("tie3"),
-        F.sum(F.expr(_AB_FIX.format(num="ca * bsum"))).cast(D38).alias("ab_e3"),
-        F.sum(F.expr(_AB_FIX.format(num="bsum * bsum")))
-        .cast(D38)
-        .alias("s2_e3"),
     )
     fin = agg.select(
         "nn",
@@ -4641,12 +4599,7 @@ def q_stats_lepage(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast(D38)
         .alias("wden"),
-        F.expr("ABS(ab_e3 * nn - n * s1 * 1000) div 1000")
-        .cast(D38)
-        .alias("dstage"),
-        F.expr("GREATEST(nn * s2_e3 - s1 * s1 * 1000, CAST(0 AS decimal(38,0)))")
-        .cast(D38)
-        .alias("vnum_e3"),
+        *_ab_stages(),
     )
     # both floors follow the round-12 quotient-wrap pin: the AB vnum
     # floor runs on vnum_e3 alone (quotient ~2.1e15 at sf0.1, safe
@@ -4794,21 +4747,8 @@ def q_stats_cochran_armitage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_stats_cmh",
-    oracle="""
-    WITH x AS (
-        SELECT CAST(SUBSTRING(o_orderpriority, 1, 1) AS BIGINT) AS k,
-               CASE WHEN o_custkey % 2 = 0 THEN 1 ELSE 0 END AS e,
-               CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END AS s
-        FROM orders
-    ),
-    strata AS (
-        SELECT k,
-               CAST(COUNT(*) AS HUGEINT) AS nk,
-               CAST(SUM(e) AS HUGEINT) AS r1,
-               CAST(SUM(s) AS HUGEINT) AS c1,
-               CAST(SUM(e * s) AS HUGEINT) AS a
-        FROM x GROUP BY k
-    ),
+    oracle=f"""
+    WITH {_ORDERS_STRATA_SQL},
     terms AS (
         SELECT k, nk, a,
                1000000 * a
@@ -4919,19 +4859,7 @@ def q_stats_cmh(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_stats_page_trend",
     oracle=f"""
-    WITH {_FRIEDMAN_CELLS_SQL},
-    tie AS (SELECT d, v, CAST(COUNT(*) AS BIGINT) AS tcnt
-            FROM c2 GROUP BY d, v),
-    rk AS (
-        SELECT d, v,
-               2 * (SUM(tcnt) OVER (PARTITION BY d ORDER BY v
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - tcnt)
-                 + tcnt + 1 AS r2
-        FROM tie
-    ),
-    s AS (SELECT c2.g, rk.r2 FROM c2
-          JOIN rk ON rk.d = c2.d AND rk.v = c2.v),
-    byg AS (SELECT g, CAST(SUM(r2) AS BIGINT) AS r2_sum FROM s GROUP BY g),
+    WITH {_FRIEDMAN_RANKS_SQL},
     scored AS (
         SELECT g, r2_sum,
                CAST(DENSE_RANK() OVER (ORDER BY g) AS BIGINT) AS j
@@ -5286,21 +5214,8 @@ def q_stats_prop_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_stats_mh_odds",
-    oracle="""
-    WITH x AS (
-        SELECT CAST(SUBSTRING(o_orderpriority, 1, 1) AS BIGINT) AS k,
-               CASE WHEN o_custkey % 2 = 0 THEN 1 ELSE 0 END AS e,
-               CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END AS s
-        FROM orders
-    ),
-    strata AS (
-        SELECT k,
-               CAST(COUNT(*) AS HUGEINT) AS nk,
-               CAST(SUM(e) AS HUGEINT) AS r1,
-               CAST(SUM(s) AS HUGEINT) AS c1,
-               CAST(SUM(e * s) AS HUGEINT) AS a
-        FROM x GROUP BY k
-    ),
+    oracle=f"""
+    WITH {_ORDERS_STRATA_SQL},
     cells AS (
         SELECT k, nk, a,
                r1 - a AS b,
@@ -5395,30 +5310,7 @@ def q_stats_mh_odds(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_stats_kendall_w",
     oracle=f"""
-    WITH {_FRIEDMAN_CELLS_SQL},
-    tie AS (SELECT d, v, CAST(COUNT(*) AS BIGINT) AS tcnt
-            FROM c2 GROUP BY d, v),
-    rk AS (
-        SELECT d, v,
-               2 * (SUM(tcnt) OVER (PARTITION BY d ORDER BY v
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - tcnt)
-                 + tcnt + 1 AS r2
-        FROM tie
-    ),
-    s AS (SELECT c2.g, rk.r2 FROM c2
-          JOIN rk ON rk.d = c2.d AND rk.v = c2.v),
-    byg AS (SELECT g, CAST(SUM(r2) AS BIGINT) AS r2_sum FROM s GROUP BY g),
-    tot AS (
-        SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM complete) AS n,
-               (SELECT CAST(SUM(r2 * r2) AS BIGINT) FROM s) AS a2
-    ),
-    q AS (
-        SELECT tot.n, tot.a2,
-               (SELECT CAST(SUM((r2_sum - tot.n * {FRIEDMAN_K + 1})
-                            * (r2_sum - tot.n * {FRIEDMAN_K + 1}))
-                       AS BIGINT) FROM byg) AS devsq
-        FROM tot
-    ),
+    WITH {_FRIEDMAN_Q_SQL},
     fin AS (
         SELECT n,
                CAST({FRIEDMAN_K - 1} * devsq AS BIGINT) AS q_num,
@@ -5730,18 +5622,8 @@ def q_stats_cronbach_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_stats_brunner_munzel",
-    oracle="""
-    WITH x AS (
-        SELECT o_orderstatus AS st,
-               CAST(ROUND(o_totalprice * 100, 0) AS BIGINT) AS v
-        FROM orders WHERE o_orderstatus IN ('F', 'O')
-    ),
-    pv AS (
-        SELECT v,
-               CAST(COUNT(*) FILTER (WHERE st = 'F') AS BIGINT) AS ca,
-               CAST(COUNT(*) AS BIGINT) AS t
-        FROM x GROUP BY v
-    ),
+    oracle=f"""
+    WITH {_FO_PV_SQL},
     pos AS (
         SELECT v, ca, t, t - ca AS cb,
                SUM(t) OVER w - t AS cum,
@@ -5825,9 +5707,7 @@ def q_stats_brunner_munzel(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combined value census, ONE window pass carrying three
     running sums, a 1-row aggregate; the fact table is scanned
     once."""
-    wcum = Window.orderBy("v").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
+    wcum = _running_by_v()
     pos = _fo_census(spark, sf_dir).select(
         "ca",
         "t",
@@ -5908,31 +5788,7 @@ def q_stats_brunner_munzel(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH {_events_x("cents")},
     {_GRP_SQL},
-    gterm AS (
-        SELECT n, s, q,
-               1000000 * ((s * s) // n)
-                 + CAST(ROUND(1000000.0 * CAST((s * s) % n AS DOUBLE)
-                       / CAST(n AS DOUBLE), 0) AS HUGEINT) AS term_e6
-        FROM grp
-    ),
-    tot AS (
-        SELECT CAST(SUM(n) AS HUGEINT) AS nn,
-               CAST(SUM(s) AS HUGEINT) AS ss,
-               CAST(SUM(q) AS HUGEINT) AS qq,
-               CAST(SUM(term_e6) AS HUGEINT) AS a_e6,
-               CAST(COUNT(*) AS HUGEINT) AS k
-        FROM gterm
-    ),
-    fin AS (
-        SELECT nn, k,
-               a_e6 - (1000000 * ((ss * ss) // nn)
-                       + CAST(ROUND(1000000.0
-                             * CAST((ss * ss) % nn AS DOUBLE)
-                             / CAST(nn AS DOUBLE), 0) AS HUGEINT))
-                 AS ssb_e6,
-               1000000 * qq - a_e6 AS ssw_e6
-        FROM tot
-    )
+    {_oneway_ss_sql("n, s, q")}
     SELECT CAST(nn AS BIGINT) AS n, CAST(k AS BIGINT) AS k,
            CAST((ssb_e6 * 1000000)
                 // GREATEST(ssb_e6 + ssw_e6, 1) AS BIGINT) AS eta2_e6,
@@ -6274,13 +6130,8 @@ def q_stats_point_biserial(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_stats_durbin_watson",
-    oracle="""
-    WITH daily AS (
-        SELECT event_type AS g, CAST(ts AS DATE) AS d,
-               CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) AS BIGINT)
-                 AS y
-        FROM events GROUP BY 1, 2
-    ),
+    oracle=f"""
+    WITH {_daily_sql("y")},
     seq AS (
         SELECT g, y,
                CAST(ROW_NUMBER() OVER (PARTITION BY g ORDER BY d)
@@ -6420,13 +6271,8 @@ def q_stats_durbin_watson(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_stats_turning_points",
-    oracle="""
-    WITH daily AS (
-        SELECT event_type AS g, CAST(ts AS DATE) AS d,
-               CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) AS BIGINT)
-                 AS y
-        FROM events GROUP BY 1, 2
-    ),
+    oracle=f"""
+    WITH {_daily_sql("y")},
     lagged AS (
         SELECT g, y,
                LAG(y) OVER (PARTITION BY g ORDER BY d) AS yp,

@@ -27,7 +27,15 @@ from pyspark.sql import functions as F
 from ..localframe import local_df
 from ..registry import register
 from ..sources.tables import cents, t
-from .stats import comoment, daily_census, moment_census, pearson_r
+from .stats import (
+    _XY_SUMS_SQL,
+    _daily_sql,
+    _xy_moments_sql,
+    comoment,
+    daily_census,
+    moment_census,
+    pearson_r,
+)
 
 # Oracle-only SQL fragments, one per copied CTE family (the Spark side
 # has its own builders below; oracles share no code with the engine
@@ -856,6 +864,17 @@ def q_concurrency_peak(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _event_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(event_type, ts, event_id, cents): events as per-type series in
+    exact cents, ordered within a type by (ts, event_id)."""
+    return t(spark, sf_dir, "events").select(
+        "event_type",
+        "ts",
+        "event_id",
+        cents("value").alias("cents"),
+    )
+
+
 @register(
     "q_changepoint_cusum",
     oracle="""
@@ -909,12 +928,7 @@ def q_changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     from per-segment partials (P_k offsets add), while BIGINT widens
     to DECIMAL(38,0) once n·P_k approaches 2^63 (the
     q_timeseries_trend discipline)."""
-    pts = t(spark, sf_dir, "events").select(
-        "event_type",
-        "ts",
-        "event_id",
-        cents("value").alias("cents"),
-    )
+    pts = _event_cents(spark, sf_dir)
     by = Window.partitionBy("event_type").orderBy("ts", "event_id")
     whole = Window.partitionBy("event_type")
     run = pts.select(
@@ -1154,7 +1168,7 @@ def q_period_over_period(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_timeseries_xcorr",
-    oracle="""
+    oracle=f"""
     WITH bars AS (
         SELECT date_trunc('hour', ts) AS hr, event_type,
                CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) AS BIGINT)
@@ -1168,11 +1182,7 @@ def q_period_over_period(spark: SparkSession, sf_dir: str) -> DataFrame:
         WHERE a.event_type = 'click' AND b.event_type = 'purchase'
     ),
     s AS (
-        SELECT CAST(COUNT(*) AS DECIMAL(38,0)) AS n,
-               CAST(SUM(x) AS DECIMAL(38,0)) AS sx,
-               CAST(SUM(y) AS DECIMAL(38,0)) AS sy,
-               CAST(SUM(x * y) AS DECIMAL(38,0)) AS sxy,
-               CAST(SUM(x * x) AS DECIMAL(38,0)) AS sxx,
+        SELECT {_XY_SUMS_SQL},
                CAST(SUM(y * y) AS DECIMAL(38,0)) AS syy
         FROM xy
     )
@@ -1264,12 +1274,7 @@ def q_window_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     statistic; at 100 TB series segment (type × epoch) and drawdown
     recombines from per-segment (max-drawdown, running-peak, head/tail
     cum) partials — the classic associative drawdown merge."""
-    pts = t(spark, sf_dir, "events").select(
-        "event_type",
-        "ts",
-        "event_id",
-        cents("value").alias("cents"),
-    )
+    pts = _event_cents(spark, sf_dir)
     by = Window.partitionBy("event_type").orderBy("ts", "event_id")
     cum_w = by.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     run = pts.withColumn("cum", F.sum("cents").over(cum_w))
@@ -1447,16 +1452,7 @@ ACF_MAX_LAG = 6
         FROM lagged a
         JOIN bars b ON b.event_type = a.event_type AND b.h = a.h + a.lag
     ),
-    s AS (
-        SELECT event_type, lag,
-               CAST(COUNT(*) AS DECIMAL(38,0)) AS n,
-               CAST(SUM(x) AS DECIMAL(38,0)) AS sx,
-               CAST(SUM(y) AS DECIMAL(38,0)) AS sy,
-               CAST(SUM(x * y) AS DECIMAL(38,0)) AS sxy,
-               CAST(SUM(x * x) AS DECIMAL(38,0)) AS sxx,
-               CAST(SUM(y * y) AS DECIMAL(38,0)) AS syy
-        FROM pairs GROUP BY event_type, lag
-    )
+    {_xy_moments_sql("pairs", "event_type, lag")}
     SELECT event_type, CAST(lag AS BIGINT) AS lag,
            CAST(n AS BIGINT) AS n_pairs,
            ROUND(CAST(n * sxy - sx * sy AS DOUBLE)
@@ -1868,13 +1864,8 @@ def q_timeseries_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_timeseries_decompose",
-    oracle="""
-    WITH daily AS (
-        SELECT event_type AS g, CAST(ts AS DATE) AS d,
-               CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) AS BIGINT)
-                 AS v
-        FROM events GROUP BY 1, 2
-    ),
+    oracle=f"""
+    WITH {_daily_sql("v")},
     seq AS (
         SELECT g, d, v,
                CAST(d - DATE '1970-01-01' AS BIGINT) % 7 AS dow,

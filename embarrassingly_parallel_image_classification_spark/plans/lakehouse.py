@@ -109,6 +109,7 @@ Rebase or refuse when another commit lands first:
 from __future__ import annotations
 
 import contextlib
+import functools
 import json
 import os
 import shutil
@@ -120,7 +121,9 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_int
 from ..localframe import local_df, pin
+from ..plans.scale import _TYPE_CENTS_ORACLE
 from ..registry import register
+from ..sources.custom import _PRIORITY_CENTS_ORACLE
 from ..sources.tables import cents, t
 
 
@@ -930,6 +933,26 @@ def snapshot_write(
     return _commit(path, mode, change, validated_at=expected_version, base=base_version)
 
 
+def _fresh_orders(spark: SparkSession, sf_dir: str, kind: str, *cols) -> tuple[str, DataFrame]:
+    """A fresh (emptied) ``kind`` scratch table path, and orders as
+    (*cols, cents): the start of every orders snapshot line."""
+    from ..sources.formats import scratch
+
+    path = scratch(kind, sf_dir)
+    shutil.rmtree(path, ignore_errors=True)
+    return path, t(spark, sf_dir, "orders").select(*cols, cents("o_totalprice").alias("cents"))
+
+
+def _per_version(spark: SparkSession, path: str, versions: tuple, *aggs) -> DataFrame:
+    """One row per snapshot version of the table at ``path``: the
+    version and ``aggs`` over that snapshot, in version order."""
+    frames = [
+        snapshot_read(spark, path, v).agg(F.lit(v).cast("int").alias("version"), *aggs)
+        for v in versions
+    ]
+    return functools.reduce(DataFrame.unionByName, frames)
+
+
 def snapshot_read(
     spark: SparkSession,
     path: str,
@@ -1314,26 +1337,12 @@ def q_lake_snapshots(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes both halves from the source, so a file leaking across
     snapshots (isolation bug) or a dropped/duplicated file (manifest
     bug) fails the hash."""
-    from ..sources.formats import scratch
-
-    path = scratch("lake_orders", sf_dir)
-    shutil.rmtree(path, ignore_errors=True)
-    orders = t(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        cents("o_totalprice").alias("cents"),
-    )
+    path, orders = _fresh_orders(spark, sf_dir, "lake_orders", "o_orderkey")
     snapshot_write(orders.filter(F.col("o_orderkey") % 2 == 0), path, "append")
     snapshot_write(orders.filter(F.col("o_orderkey") % 2 == 1), path, "append")
-    frames = []
-    for v in (1, 2):
-        frames.append(
-            snapshot_read(spark, path, v).agg(
-                F.lit(v).cast("int").alias("version"),
-                F.count("*").alias("n"),
-                F.sum("cents").cast("bigint").alias("cents"),
-            )
-        )
-    return frames[0].unionByName(frames[1])
+    return _per_version(
+        spark, path, (1, 2), F.count("*").alias("n"), F.sum("cents").cast("bigint").alias("cents")
+    )
 
 
 @register(
@@ -1365,14 +1374,7 @@ def q_lake_overwrite_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshot_write(
         orders.filter(F.col("o_orderpriority") == "1-URGENT"), path, "overwrite"
     )
-    frames = []
-    for v in (1, 2):
-        frames.append(
-            snapshot_read(spark, path, v).agg(
-                F.lit(v).cast("int").alias("version"), F.count("*").alias("n")
-            )
-        )
-    return frames[0].unionByName(frames[1])
+    return _per_version(spark, path, (1, 2), F.count("*").alias("n"))
 
 
 def merge_into(
@@ -1505,14 +1507,7 @@ def q_lake_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     unmatched target rows survive. The oracle recomputes the merge
     relationally; reading the POST-MERGE SNAPSHOT back (not the
     in-memory frame) proves the copy-on-write publish round-trips."""
-    from ..sources.formats import scratch
-
-    path = scratch("lake_merge", sf_dir)
-    shutil.rmtree(path, ignore_errors=True)
-    orders = t(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        cents("o_totalprice").alias("cents"),
-    )
+    path, orders = _fresh_orders(spark, sf_dir, "lake_merge", "o_orderkey")
     snapshot_write(orders.filter(F.col("o_orderkey") % 3 != 0), path, "append")
     source = orders.filter(F.col("o_orderkey") % 2 == 0).select(
         "o_orderkey", F.lit(0).cast("bigint").alias("cents")
@@ -1608,12 +1603,7 @@ def stream_ingest(stream_df: DataFrame, path: str) -> None:
 
 @register(
     "q_lake_stream_ingest",
-    oracle="""
-    SELECT event_type, COUNT(*) AS n,
-           CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) AS BIGINT) AS cents
-    FROM events
-    GROUP BY event_type
-    """,
+    oracle=_TYPE_CENTS_ORACLE,
     tags=("lakehouse", "I8", "A9"),
 )
 def q_lake_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1654,13 +1644,7 @@ def q_lake_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_lake_incremental_agg",
-    oracle="""
-    SELECT o_orderpriority AS priority, COUNT(*) AS n,
-           CAST(SUM(CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)) AS BIGINT)
-               AS cents
-    FROM orders
-    GROUP BY o_orderpriority
-    """,
+    oracle=_PRIORITY_CENTS_ORACLE,
     tags=("lakehouse", "D1", "IVM"),
 )
 def q_lake_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1674,14 +1658,8 @@ def q_lake_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates (min/max and distinct-count are not — they need the
     merge-tree generalization, documented here). The final state must
     equal a full recompute over the source (oracle)."""
-    from ..sources.formats import scratch
-
-    path = scratch("lake_ivm", sf_dir)
-    shutil.rmtree(path, ignore_errors=True)
-    orders = t(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        F.col("o_orderpriority").alias("priority"),
-        cents("o_totalprice").alias("cents"),
+    path, orders = _fresh_orders(
+        spark, sf_dir, "lake_ivm", "o_orderkey", F.col("o_orderpriority").alias("priority")
     )
 
     def agg_of(df: DataFrame) -> DataFrame:
@@ -2451,14 +2429,7 @@ def q_lake_default_column(spark: SparkSession, sf_dir: str) -> DataFrame:
     show pre-add rows as 'web' (scoped default) while the explicit
     NULLs stay NULL — the distinction a read-side coalesce gets wrong
     and file-scoping gets right."""
-    from ..sources.formats import scratch
-
-    path = scratch("lake_default", sf_dir)
-    shutil.rmtree(path, ignore_errors=True)
-    orders = t(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        cents("o_totalprice").alias("cents"),
-    )
+    path, orders = _fresh_orders(spark, sf_dir, "lake_default", "o_orderkey")
     snapshot_write(orders.filter(F.col("o_orderkey") % 2 == 0), path, "append")
     add_column_default(path, "channel", "string", "web")
     snapshot_write(
@@ -2612,13 +2583,7 @@ def _make_lake_stream_datasource():
 
 @register(
     "q_lake_stream_source",
-    oracle="""
-    SELECT o_orderpriority AS priority, COUNT(*) AS n,
-           CAST(SUM(CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)) AS BIGINT)
-               AS cents
-    FROM orders
-    GROUP BY o_orderpriority
-    """,
+    oracle=_PRIORITY_CENTS_ORACLE,
     tags=("lakehouse", "A10", "I8"),
 )
 def q_lake_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2630,15 +2595,10 @@ def q_lake_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     side: this). Must aggregate to exactly the full source (oracle):
     a file delivered twice (offset bug) or dropped (manifest-diff bug)
     fails the hash."""
-    from ..sources.formats import scratch
     from ..streaming.core import run_to_memory
 
-    path = scratch("lake_streamsrc", sf_dir)
-    shutil.rmtree(path, ignore_errors=True)
-    orders = t(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        F.col("o_orderpriority").alias("priority"),
-        cents("o_totalprice").alias("cents"),
+    path, orders = _fresh_orders(
+        spark, sf_dir, "lake_streamsrc", "o_orderkey", F.col("o_orderpriority").alias("priority")
     )
     snapshot_write(orders.filter(F.col("o_orderkey") % 2 == 0), path, "append")
     snapshot_write(orders.filter(F.col("o_orderkey") % 2 == 1), path, "append")
@@ -3468,30 +3428,13 @@ def q_lake_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reading all three versions must show the restore reproduced v1's
     content EXACTLY while v2 stays time-travelable (audit trail — a
     restore is a roll-forward, never a history rewrite)."""
-    from ..sources.formats import scratch
-
-    path = scratch("lake_restore", sf_dir)
-    shutil.rmtree(path, ignore_errors=True)
-    orders = t(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        cents("o_totalprice").alias("cents"),
-    )
+    path, orders = _fresh_orders(spark, sf_dir, "lake_restore", "o_orderkey")
     snapshot_write(orders.filter(F.col("o_orderkey") % 2 == 0), path, "append")
     snapshot_write(orders, path, "overwrite")
     restore_table(spark, path, 1)
-    frames = []
-    for v in (1, 2, 3):
-        frames.append(
-            snapshot_read(spark, path, v).agg(
-                F.lit(v).cast("int").alias("version"),
-                F.count("*").alias("n"),
-                F.sum("cents").cast("bigint").alias("cents"),
-            )
-        )
-    out = frames[0]
-    for fr in frames[1:]:
-        out = out.unionByName(fr)
-    return out
+    return _per_version(
+        spark, path, (1, 2, 3), F.count("*").alias("n"), F.sum("cents").cast("bigint").alias("cents")
+    )
 
 
 @register(
@@ -3993,14 +3936,7 @@ def q_lake_merge_when(spark: SparkSession, sf_dir: str) -> DataFrame:
     one batch). The oracle replays all three clauses relationally;
     row counts, updated/inserted tallies and the exact cents total
     must match."""
-    from ..sources.formats import scratch
-
-    path = scratch("lake_merge_when", sf_dir)
-    shutil.rmtree(path, ignore_errors=True)
-    o = t(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("k"),
-        cents("o_totalprice").alias("cents"),
-    )
+    path, o = _fresh_orders(spark, sf_dir, "lake_merge_when", F.col("o_orderkey").alias("k"))
     snapshot_write(o, path, "append")
     source = o.filter(F.col("k") % 2 == 0).select("k", F.lit(0).cast("bigint").alias("cents")).unionAll(
         o.filter(F.col("k") % 1000 == 0).select(
@@ -4069,14 +4005,7 @@ def q_lake_merge_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     manifest also gains an empty-scope default entry so a later
     narrow append raises instead of silently narrowing the schema
     (guard pinned in tests/test_plans.py)."""
-    from ..sources.formats import scratch
-
-    path = scratch("lake_merge_evolve", sf_dir)
-    shutil.rmtree(path, ignore_errors=True)
-    o = t(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("k"),
-        cents("o_totalprice").alias("cents"),
-    )
+    path, o = _fresh_orders(spark, sf_dir, "lake_merge_evolve", F.col("o_orderkey").alias("k"))
     snapshot_write(o, path, "append")
     source = o.filter(F.col("k") % 2 == 0).select(
         "k", F.lit(0).cast("bigint").alias("cents"), F.lit("web").alias("chan")
@@ -4130,14 +4059,7 @@ def q_lake_history_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     one sequential read + one listdir regardless of version count
     (L6), never a per-manifest open — the metadata-table path an
     operator dashboards at production commit rates."""
-    from ..sources.formats import scratch
-
-    path = scratch("lake_history", sf_dir)
-    shutil.rmtree(path, ignore_errors=True)
-    orders = t(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        cents("o_totalprice").alias("cents"),
-    )
+    path, orders = _fresh_orders(spark, sf_dir, "lake_history", "o_orderkey")
     even = orders.filter(F.col("o_orderkey") % 2 == 0).coalesce(1)
     odd = orders.filter(F.col("o_orderkey") % 2 == 1).coalesce(1)
     snapshot_write(even, path, "append")
@@ -4508,14 +4430,7 @@ def q_lake_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
     one batch-bounded shuffle (per-staged-file ranges from parquet
     footers — see _assign_identity_staged); the standing table is
     never read or rewritten."""
-    from ..sources.formats import scratch
-
-    path = scratch("lake_identity", sf_dir)
-    shutil.rmtree(path, ignore_errors=True)
-    orders = t(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        cents("o_totalprice").alias("cents"),
-    )
+    path, orders = _fresh_orders(spark, sf_dir, "lake_identity", "o_orderkey")
     empty = orders.withColumn(
         "row_id", F.lit(None).cast("bigint")
     ).limit(0)

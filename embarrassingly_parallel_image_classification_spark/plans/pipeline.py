@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.hashing import md5_int
-from ..ml.dedup import pair_ctes
+from ..ml.dedup import PAIR_CTES
 from ..registry import register
 from ..sources.tables import t
 from ..ml.curation import (
@@ -30,11 +30,24 @@ from ..ml.curation import (
     GOPHER_MEANLEN_E1,
     GOPHER_MIN_STOP,
     GOPHER_WORDS,
+    dup_bigram_census,
 )
 from ..ml.text import STOPWORDS as _GOPHER_STOP
 from ..ml.text import word_ngrams
 
 _MIN_WORDS = 30
+
+
+def _quality_docs(docs: DataFrame) -> DataFrame:
+    """(doc_id, lang, text, n_words) of the documents that pass the
+    quality filter (at least _MIN_WORDS words): the first stage of
+    q_pipeline_e2e and q_pipeline_pretrain."""
+    return docs.select(
+        "doc_id",
+        "lang",
+        "text",
+        F.size(F.split("text", " ")).cast("bigint").alias("n_words"),
+    ).filter(F.col("n_words") >= _MIN_WORDS)
 
 
 @register(
@@ -69,12 +82,7 @@ def q_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle — the property that lets a 100 TB corpus rebuild be audited
     stage by stage."""
     docs = t(spark, sf_dir, "documents")
-    q = docs.select(
-        "doc_id",
-        "lang",
-        "text",
-        F.size(F.split("text", " ")).cast("bigint").alias("n_words"),
-    ).filter(F.col("n_words") >= _MIN_WORDS)
+    q = _quality_docs(docs)
     d = q.groupBy(F.md5(F.col("text").cast("binary")).alias("h")).agg(
         F.min("doc_id").alias("keep_id")
     )
@@ -188,7 +196,7 @@ def q_quality_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
                UNNEST(list_transform(range(1, len(ws) - 1),
                       i -> array_to_string(ws[i : i + 2], ' '))) AS shingle
         FROM ktoks),
-    {pair_ctes(4, 8, inline=True)},
+    {PAIR_CTES},
     e2 AS (SELECT id_a AS src, id_b AS dst FROM pairs
            UNION ALL SELECT id_b, id_a FROM pairs),
     reach(node, lab) AS (
@@ -243,12 +251,7 @@ def q_pipeline_pretrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.formats import scratch
 
     docs = t(spark, sf_dir, "documents")
-    q = docs.select(
-        "doc_id",
-        "lang",
-        "text",
-        F.size(F.split("text", " ")).cast("bigint").alias("n_words"),
-    ).filter(F.col("n_words") >= _MIN_WORDS)
+    q = _quality_docs(docs)
     ex = q.groupBy(F.md5(F.col("text").cast("binary")).alias("h")).agg(
         F.min("doc_id").alias("keep_id")
     )
@@ -463,18 +466,7 @@ def q_pipeline_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # --- stage 1 flag g: Gopher rule gate (shared constants) ---
     toks = corpus0.withColumn("w", F.split("text", " "))
-    dup = (
-        toks.select("doc_id", F.explode(word_ngrams(2)).alias("gram"))
-        .groupBy("doc_id", "gram")
-        .agg(F.count("*").alias("n"))
-        .groupBy("doc_id")
-        .agg(
-            F.sum("n").alias("total"),
-            F.sum(F.when(F.col("n") > 1, F.col("n")).otherwise(0)).alias(
-                "dupn"
-            ),
-        )
-    )
+    dup = dup_bigram_census(toks)
     stop_arr = F.array(*[F.lit(s) for s in _GOPHER_STOP])
     feat = toks.join(dup, "doc_id", "left").select(
         "doc_id", "text", "n_chars", "lang", "is_orig",

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from ..functions.hashing import md5_int
 from ..localframe import local_df
 from ..registry import register
+from ..sources.formats import scratch_tag
 from ..sources.tables import cents, t
 
 
@@ -75,13 +76,9 @@ def build_bloom(dim: DataFrame, key: str, m_bits: int = BLOOM_BITS, seeds=BLOOM_
     return words
 
 
-def bloom_might_contain(
-    words: list[int], key: Column, m_bits: int = BLOOM_BITS, seeds=BLOOM_SEEDS
-) -> Column:
-    """Pure-Catalyst Bloom membership test: k hash positions checked
-    against an array<long> literal — stays inside whole-stage codegen,
-    no Python, no shuffle, applied at the scan."""
-    arr = F.lit(words)
+def _bloom_probe(arr: Column, key: Column, m_bits: int, seeds) -> Column:
+    """True where every seed's hash position of ``key`` is set in the
+    array<long> bitmap ``arr`` (k positions, one word and bit each)."""
     cond = F.lit(True)
     for s in seeds:
         p = F.pmod(F.xxhash64(key, F.lit(s)), F.lit(m_bits))
@@ -91,6 +88,15 @@ def bloom_might_contain(
         ).bitwiseAND(F.lit(1))
         cond = cond & (bit == 1)
     return cond
+
+
+def bloom_might_contain(
+    words: list[int], key: Column, m_bits: int = BLOOM_BITS, seeds=BLOOM_SEEDS
+) -> Column:
+    """Pure-Catalyst Bloom membership test: k hash positions checked
+    against an array<long> literal — stays inside whole-stage codegen,
+    no Python, no shuffle, applied at the scan."""
+    return _bloom_probe(F.lit(words), key, m_bits, seeds)
 
 
 def bloom_probe_col(key: Column, m_bits: int = BLOOM_BITS, seeds=BLOOM_SEEDS) -> Column:
@@ -101,16 +107,7 @@ def bloom_probe_col(key: Column, m_bits: int = BLOOM_BITS, seeds=BLOOM_SEEDS) ->
     generated code past HotSpot's JIT inlining limits and the probe
     runs interpreted (measured 2× slower end-to-end at sf0.1; the
     probe alone 1.07 s literal vs 0.51 s column on 600 k rows)."""
-    arr = F.col("__bloom")
-    cond = F.lit(True)
-    for s in seeds:
-        p = F.pmod(F.xxhash64(key, F.lit(s)), F.lit(m_bits))
-        word = F.element_at(arr, (p / 64).cast("int") + 1)
-        bit = F.call_function(
-            "shiftright", word, F.pmod(p, F.lit(64)).cast("int")
-        ).bitwiseAND(F.lit(1))
-        cond = cond & (bit == 1)
-    return cond
+    return _bloom_probe(F.col("__bloom"), key, m_bits, seeds)
 
 
 def bloom_semi_join(fact: DataFrame, fact_key: str, dim: DataFrame, dim_key: str) -> DataFrame:
@@ -198,15 +195,13 @@ BUCKETS = 8
 
 
 def bucket_table_names(sf_dir: str) -> tuple[str, str]:
-    """(lineitem, orders) bucketed-table names for ``sf_dir``. The tag
-    includes the pid: two processes (e.g. pytest + a driver run)
-    sharing one warehouse dir must not overwrite each other's bucket
-    files mid-scan — observed as a flaky missing-file read when the
-    full test suite and drive_contract ran concurrently."""
-    tag = (
-        os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-        + f"_{os.getpid()}"
-    )
+    """(lineitem, orders) bucketed-table names for ``sf_dir``, tagged
+    with ``scratch_tag`` (dots made underscores for a table name): two
+    processes (e.g. pytest + a driver run) sharing one warehouse dir
+    must not overwrite each other's bucket files mid-scan — observed as
+    a flaky missing-file read when the full test suite and
+    drive_contract ran concurrently."""
+    tag = scratch_tag(sf_dir).replace(".", "_")
     return f"lineitem_b_{tag}", f"orders_b_{tag}"
 
 
@@ -307,14 +302,20 @@ def q_scale_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "q_scale_compaction",
-    oracle="""
+# Per event type the count and the cent sum of events: what a rewrite
+# of the events table (compaction here, streaming ingest in
+# plans/lakehouse.py) must still aggregate to.
+_TYPE_CENTS_ORACLE = """
     SELECT event_type, COUNT(*) AS n,
            CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) AS BIGINT) AS cents
     FROM events
     GROUP BY event_type
-    """,
+    """
+
+
+@register(
+    "q_scale_compaction",
+    oracle=_TYPE_CENTS_ORACLE,
     tags=("scale", "A6", "A1"),
 )
 def q_scale_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:

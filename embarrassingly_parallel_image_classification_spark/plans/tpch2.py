@@ -139,6 +139,18 @@ def q_tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sel.groupBy("o_orderpriority").agg(F.count("*").alias("order_count"))
 
 
+def _supplier_nations(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """(supplier, its broadcast nation names as (s_nk, supp_nation)):
+    the supplier side every nation-pair query (q7, q8) joins."""
+    s = t(spark, sf_dir, "supplier")
+    n1 = F.broadcast(
+        t(spark, sf_dir, "nation").select(
+            F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("supp_nation")
+        )
+    )
+    return s, n1
+
+
 @register(
     "q_tpch_q7",
     oracle="""
@@ -176,12 +188,7 @@ def q_tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     o = t(spark, sf_dir, "orders")
     c = t(spark, sf_dir, "customer")
-    s = t(spark, sf_dir, "supplier")
-    n1 = F.broadcast(
-        t(spark, sf_dir, "nation").select(
-            F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("supp_nation")
-        )
-    )
+    s, n1 = _supplier_nations(spark, sf_dir)
     n2 = F.broadcast(
         t(spark, sf_dir, "nation").select(
             F.col("n_nationkey").alias("c_nk"), F.col("n_name").alias("cust_nation")
@@ -257,12 +264,7 @@ def q_tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     r = F.broadcast(t(spark, sf_dir, "region").filter(F.col("r_name") == "AMERICA"))
-    s = t(spark, sf_dir, "supplier")
-    n1 = F.broadcast(
-        t(spark, sf_dir, "nation").select(
-            F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("supp_nation")
-        )
-    )
+    s, n1 = _supplier_nations(spark, sf_dir)
     rev_e4 = cents("l_extendedprice") * (F.lit(100) - cents("l_discount"))
     flat = (
         li.join(p, F.col("p_partkey") == F.col("l_partkey"))

@@ -14,6 +14,11 @@ partition must be independently computable on any executor).
 
 from __future__ import annotations
 
+import json
+import os
+import shutil
+import uuid
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -196,6 +201,76 @@ def q_stream_custom_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_to_memory(agg, "complete")
 
 
+# Per priority the count and the cent sum of orders: what a round trip
+# of orders through a sink (here, and the snapshot lines of
+# plans/lakehouse.py) must still aggregate to.
+_PRIORITY_CENTS_ORACLE = """
+    SELECT o_orderpriority AS priority,
+           COUNT(*) AS n,
+           CAST(SUM(CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)) AS BIGINT) AS cents
+    FROM orders
+    GROUP BY o_orderpriority
+    """
+
+
+def _commit_message():
+    """The custom sinks' WriterCommitMessage: one task's file name (None
+    when the task wrote nothing) and row count. Built lazily, the
+    data-source rule."""
+    from pyspark.sql.datasource import WriterCommitMessage
+
+    class _Committed(WriterCommitMessage):
+        def __init__(self, filename, n):
+            self.filename = filename
+            self.n = n
+
+    return _Committed
+
+
+def _write_jsonl_task(path: str, rows) -> tuple[str, int]:
+    """(file name, row count): one task's rows serialized as a fresh
+    JSON-lines file under ``path``."""
+    os.makedirs(path, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}.jsonl"
+    n = 0
+    with open(os.path.join(path, name), "w") as f:
+        for row in rows:
+            f.write(json.dumps(row.asDict()) + "\n")
+            n += 1
+    return name, n
+
+
+def _write_manifest(path: str, name: str, **manifest) -> None:
+    """The driver-side commit: the manifest ``name`` under ``path``
+    listing the committed task files."""
+    with open(os.path.join(path, name), "w") as f:
+        json.dump(manifest, f)
+
+
+def _manifest_files(path: str, name: str = "_MANIFEST.json") -> list[str]:
+    """The task files a committed manifest ``name`` under ``path`` lists."""
+    with open(os.path.join(path, name)) as f:
+        return [os.path.join(path, file) for file in json.load(f)["files"]]
+
+
+def _sink_orders(spark: SparkSession, sf_dir: str, source, kind: str) -> list[str]:
+    """Write orders' (o_orderkey, priority, cents) through the custom
+    batch sink ``source`` into a fresh ``kind`` scratch dir; returns the
+    files its manifest lists (the only ones a reader may see)."""
+    from .formats import scratch
+
+    spark.dataSource.register(source)
+    path = scratch(kind, sf_dir)
+    shutil.rmtree(path, ignore_errors=True)
+    src = t(spark, sf_dir, "orders").select(
+        "o_orderkey",
+        F.col("o_orderpriority").alias("priority"),
+        cents("o_totalprice").alias("cents"),
+    )
+    src.write.format(source.name()).option("path", path).mode("append").save()
+    return _manifest_files(path)
+
+
 def _make_writer_datasource():
     """Custom batch SINK via the Python DataSource writer API (lazy-
     built, same rule as _make_datasource): each executor partition
@@ -206,38 +281,24 @@ def _make_writer_datasource():
     (Hive FileOutputCommitter, Iceberg/Delta manifests) is built on.
     abort() leaves no manifest, so half-written task files are never
     visible to readers."""
-    import json
-    import os
-    import uuid
+    from pyspark.sql.datasource import DataSource, DataSourceWriter
 
-    from pyspark.sql.datasource import DataSource, DataSourceWriter, WriterCommitMessage
-
-    class _Committed(WriterCommitMessage):
-        def __init__(self, filename, n):
-            self.filename = filename
-            self.n = n
+    _Committed = _commit_message()
 
     class JsonlWriter(DataSourceWriter):
         def __init__(self, options):
             self.path = options["path"]
 
         def write(self, rows):
-            os.makedirs(self.path, exist_ok=True)
-            name = f"part-{uuid.uuid4().hex}.jsonl"
-            n = 0
-            with open(os.path.join(self.path, name), "w") as f:
-                for row in rows:
-                    f.write(json.dumps(row.asDict()) + "\n")
-                    n += 1
-            return _Committed(name, n)
+            return _Committed(*_write_jsonl_task(self.path, rows))
 
         def commit(self, messages):
-            manifest = {
-                "files": sorted(m.filename for m in messages),
-                "rows": sum(m.n for m in messages),
-            }
-            with open(os.path.join(self.path, "_MANIFEST.json"), "w") as f:
-                json.dump(manifest, f)
+            _write_manifest(
+                self.path,
+                "_MANIFEST.json",
+                files=sorted(m.filename for m in messages),
+                rows=sum(m.n for m in messages),
+            )
 
         def abort(self, messages):
             pass
@@ -255,13 +316,7 @@ def _make_writer_datasource():
 
 @register(
     "q_sink_custom_writer",
-    oracle="""
-    SELECT o_orderpriority AS priority,
-           COUNT(*) AS n,
-           CAST(SUM(CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)) AS BIGINT) AS cents
-    FROM orders
-    GROUP BY o_orderpriority
-    """,
+    oracle=_PRIORITY_CENTS_ORACLE,
     tags=("A10", "A7"),
 )
 def q_sink_custom_writer(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -272,23 +327,7 @@ def q_sink_custom_writer(spark: SparkSession, sf_dir: str) -> DataFrame:
     With the batch/stream readers above, the Python connector surface
     is now covered in all three modes (batch read, stream read, batch
     write)."""
-    import json
-    import os
-    import shutil
-
-    from .formats import scratch
-
-    spark.dataSource.register(_make_writer_datasource())
-    path = scratch("custom_jsonl", sf_dir)
-    shutil.rmtree(path, ignore_errors=True)
-    src = t(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        F.col("o_orderpriority").alias("priority"),
-        cents("o_totalprice").alias("cents"),
-    )
-    src.write.format("epic_jsonl_sink").option("path", path).mode("append").save()
-    with open(os.path.join(path, "_MANIFEST.json")) as f:
-        files = [os.path.join(path, name) for name in json.load(f)["files"]]
+    files = _sink_orders(spark, sf_dir, _make_writer_datasource(), "custom_jsonl")
     back = spark.read.schema("o_orderkey bigint, priority string, cents bigint").json(
         files
     )
@@ -305,45 +344,25 @@ def _make_stream_writer_datasource():
     manifest lands, and a replayed batch overwrites the same manifest
     id instead of double-publishing (idempotent commit, the streaming
     sink contract)."""
-    import json
-    import os
-    import uuid
+    from pyspark.sql.datasource import DataSource, DataSourceStreamWriter
 
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceStreamWriter,
-        WriterCommitMessage,
-    )
-
-    class _Committed(WriterCommitMessage):
-        def __init__(self, filename, n):
-            self.filename = filename
-            self.n = n
+    _Committed = _commit_message()
 
     class JsonlStreamWriter(DataSourceStreamWriter):
         def __init__(self, options):
             self.path = options["path"]
 
         def write(self, rows):
-            os.makedirs(self.path, exist_ok=True)
-            name = f"part-{uuid.uuid4().hex}.jsonl"
-            n = 0
-            with open(os.path.join(self.path, name), "w") as f:
-                for row in rows:
-                    f.write(json.dumps(row.asDict()) + "\n")
-                    n += 1
-            return _Committed(name, n)
+            return _Committed(*_write_jsonl_task(self.path, rows))
 
         def commit(self, messages, batchId):
-            manifest = {
-                "batch": batchId,
-                "files": sorted(m.filename for m in messages if m is not None),
-                "rows": sum(m.n for m in messages if m is not None),
-            }
-            with open(
-                os.path.join(self.path, f"_MANIFEST-{batchId}.json"), "w"
-            ) as f:
-                json.dump(manifest, f)
+            _write_manifest(
+                self.path,
+                f"_MANIFEST-{batchId}.json",
+                batch=batchId,
+                files=sorted(m.filename for m in messages if m is not None),
+                rows=sum(m.n for m in messages if m is not None),
+            )
 
         def abort(self, messages, batchId):
             pass
@@ -378,9 +397,6 @@ def q_stream_custom_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     directly (oracle). Closes the connector matrix: batch read, stream
     read, batch write, stream write — all four modes oracle-checked."""
     import glob
-    import json
-    import os
-    import shutil
 
     from ..streaming.core import events_stream
     from .formats import scratch
@@ -410,8 +426,7 @@ def q_stream_custom_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     q.awaitTermination()
     files = []
     for mf in glob.glob(os.path.join(path, "_MANIFEST-*.json")):
-        with open(mf) as f:
-            files += [os.path.join(path, name) for name in json.load(f)["files"]]
+        files += _manifest_files(path, os.path.basename(mf))
     back = spark.read.schema("event_id bigint, user_id bigint, cents bigint").json(
         files
     )
@@ -428,22 +443,11 @@ def _make_arrow_writer_datasource():
     record; this one hands columnar buffers straight to the parquet
     encoder). Same two-phase commit: task parquet files + driver
     manifest."""
-    import json
-    import os
-    import uuid
-
     import pyarrow as pa
     import pyarrow.parquet as pq
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceArrowWriter,
-        WriterCommitMessage,
-    )
+    from pyspark.sql.datasource import DataSource, DataSourceArrowWriter
 
-    class _Committed(WriterCommitMessage):
-        def __init__(self, filename, n):
-            self.filename = filename
-            self.n = n
+    _Committed = _commit_message()
 
     class ArrowParquetWriter(DataSourceArrowWriter):
         def __init__(self, options):
@@ -460,14 +464,12 @@ def _make_arrow_writer_datasource():
             return _Committed(name, table.num_rows)
 
         def commit(self, messages):
-            manifest = {
-                "files": sorted(
-                    m.filename for m in messages if m.filename is not None
-                ),
-                "rows": sum(m.n for m in messages),
-            }
-            with open(os.path.join(self.path, "_MANIFEST.json"), "w") as f:
-                json.dump(manifest, f)
+            _write_manifest(
+                self.path,
+                "_MANIFEST.json",
+                files=sorted(m.filename for m in messages if m.filename is not None),
+                rows=sum(m.n for m in messages),
+            )
 
         def abort(self, messages):
             pass
@@ -485,13 +487,7 @@ def _make_arrow_writer_datasource():
 
 @register(
     "q_sink_arrow_writer",
-    oracle="""
-    SELECT o_orderpriority AS priority,
-           COUNT(*) AS n,
-           CAST(SUM(CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)) AS BIGINT) AS cents
-    FROM orders
-    GROUP BY o_orderpriority
-    """,
+    oracle=_PRIORITY_CENTS_ORACLE,
     tags=("A10", "A6"),
 )
 def q_sink_arrow_writer(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -500,25 +496,7 @@ def q_sink_arrow_writer(spark: SparkSession, sf_dir: str) -> DataFrame:
     → read back only manifest-listed files → aggregate; must equal
     aggregating the source (same oracle as the row-based sink, so the
     two writer paths are provably equivalent end-to-end)."""
-    import json
-    import os
-    import shutil
-
-    from .formats import scratch
-
-    spark.dataSource.register(_make_arrow_writer_datasource())
-    path = scratch("custom_arrow_pq", sf_dir)
-    shutil.rmtree(path, ignore_errors=True)
-    src = t(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        F.col("o_orderpriority").alias("priority"),
-        cents("o_totalprice").alias("cents"),
-    )
-    src.write.format("epic_arrow_parquet_sink").option("path", path).mode(
-        "append"
-    ).save()
-    with open(os.path.join(path, "_MANIFEST.json")) as f:
-        files = [os.path.join(path, name) for name in json.load(f)["files"]]
+    files = _sink_orders(spark, sf_dir, _make_arrow_writer_datasource(), "custom_arrow_pq")
     back = spark.read.parquet(*files)
     return back.groupBy("priority").agg(
         F.count("*").alias("n"), F.sum("cents").alias("cents")

@@ -15,6 +15,7 @@ Scratch dirs are per-(format, sf) and rewritten idempotently
 from __future__ import annotations
 
 import os
+import re
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -27,16 +28,29 @@ from .tables import cents, t
 _SCRATCH = os.path.join(tempfile.gettempdir(), "epic_spark_scratch")
 
 
+def scratch_tag(sf_dir: str) -> str:
+    """``<sf dir name>_<pid>``: the tag every pid-scoped scratch name
+    (``scratch`` dirs, plans/scale.py's bucketed tables) ends in. The
+    pid isolates concurrent processes (e.g. pytest and drive_contract
+    running together): two processes overwriting one path race a
+    reader into missing-file errors."""
+    return f"{os.path.basename(os.path.normpath(sf_dir))}_{os.getpid()}"
+
+
+def mask_scratch_pid(text: str) -> str:
+    """`text` with this process's pid masked (``_<pid>``) where it ends
+    a scratch tag (``_<sf dir name>_<pid>``, dots or underscores in the
+    name) and nowhere else: the same digits elsewhere are some other
+    number."""
+    return re.sub(rf"(_[^\s/'\"_]+)_{os.getpid()}(?!\d)", r"\1_<pid>", text)
+
+
 def scratch(kind: str, sf_dir: str) -> str:
-    """Per-(kind, sf, PID) scratch dir. The pid isolates concurrent
-    processes (e.g. pytest and drive_contract running together): the
-    sink queries rewrite their scratch idempotently, and two processes
-    overwriting one path race a reader into missing-file errors — the
-    same flake class fixed for bucketed tables (plans/scale.py). Any
-    oracle that reads a scratch path back builds its SQL through this
-    helper at import time, so query and oracle stay in the same pid."""
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    return os.path.join(_SCRATCH, f"{kind}_{tag}_{os.getpid()}")
+    """Per-(kind, sf, PID) scratch dir (``scratch_tag``): the sink
+    queries rewrite their scratch idempotently. Any oracle that reads a
+    scratch path back builds its SQL through this helper when the
+    oracle is resolved, so query and oracle stay in the same pid."""
+    return os.path.join(_SCRATCH, f"{kind}_{scratch_tag(sf_dir)}")
 
 
 ORDERS_CSV_SCHEMA = (

@@ -46,11 +46,6 @@ TABLES = (
     "embeddings",
 )
 
-# Dimension tables small enough to broadcast at ANY scale factor (TPC-H
-# fixes region=5 and nation=25 rows). customer/supplier/part grow with
-# sf, so they are broadcast only when an explicit hint makes sense.
-BROADCAST_DIMS = ("region", "nation")
-
 # Session confs whose value changes the schema Spark infers from a
 # parquet footer; each is part of the schema cache key.
 SCHEMA_CONFS = (

@@ -19,9 +19,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..localframe import pin
-from ..ml.cleaning import drift_report
+from ..ml.cleaning import _DRIFT_REPORT_SQL, drift_report
 from ..ml.curation import GOPHER_MEANLEN_E1, GOPHER_MIN_STOP, GOPHER_WORDS
-from ..ml.inference import fit_centroids, make_predict_udf
+from ..ml.inference import _INFER_ORACLE, fit_centroids, make_predict_udf
 from ..ml.text import STOPWORDS
 from ..operators.analytics import BITMAP_AUDIENCE_ORACLE, bitmap_overlap
 from ..operators.timeseries import DAILY_DOLLARS_SQL, EWMA_ORACLE, TWAP_ORACLE
@@ -39,6 +39,12 @@ _C_SQL = """c AS (SELECT event_id AS c_id, user_id, date_trunc('second', ts) AS 
                FROM events WHERE event_type = 'click')"""
 _WM_SQL = """wm AS (SELECT LEAST((SELECT MAX(pts) FROM p), (SELECT MAX(cts) FROM c))
                        - INTERVAL 10 MINUTE AS w)"""
+# The clicks an outer join emits unmatched: evicted by the watermark
+# with no purchase of the same user in the hour before the click.
+_UNMATCHED_CLICKS_SQL = """FROM c, wm
+    WHERE c.cts < wm.w - INTERVAL 1 HOUR
+      AND NOT EXISTS (SELECT 1 FROM p WHERE p.user_id = c.user_id
+                      AND c.cts >= p.pts - INTERVAL 1 HOUR AND c.cts <= p.pts)"""
 
 
 @register(
@@ -96,6 +102,28 @@ def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_to_memory(out, "complete")
 
 
+def _sessions(spark: SparkSession, sf_dir: str, gap) -> DataFrame:
+    """(sess_start_sec, sess_end_sec, user_id, n_events) per session
+    window of inactivity `gap` (a duration string or a per-event
+    Column) over the second-truncated event stream, drained in
+    complete mode."""
+    ev = (
+        events_stream(spark, sf_dir)
+        .withColumn("ts", F.date_trunc("second", "ts"))
+        .withWatermark("ts", "10 minutes")
+    )
+    agg = ev.groupBy(F.session_window("ts", gap), "user_id").agg(
+        F.count("*").alias("n_events")
+    )
+    out = agg.select(
+        F.unix_timestamp(F.col("session_window.start")).alias("sess_start_sec"),
+        F.unix_timestamp(F.col("session_window.end")).alias("sess_end_sec"),
+        "user_id",
+        "n_events",
+    )
+    return run_to_memory(out, "complete")
+
+
 @register(
     "q_stream_session",
     oracle="""
@@ -135,21 +163,7 @@ def q_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     timestamp-exposure convention (cf. q_sessionize) — so no fixture
     precision drift (ns vs µs parquet) can flip a gap comparison at a
     sub-second boundary."""
-    ev = (
-        events_stream(spark, sf_dir)
-        .withColumn("ts", F.date_trunc("second", "ts"))
-        .withWatermark("ts", "10 minutes")
-    )
-    agg = ev.groupBy(F.session_window("ts", "30 minutes"), "user_id").agg(
-        F.count("*").alias("n_events")
-    )
-    out = agg.select(
-        F.unix_timestamp(F.col("session_window.start")).alias("sess_start_sec"),
-        F.unix_timestamp(F.col("session_window.end")).alias("sess_end_sec"),
-        "user_id",
-        "n_events",
-    )
-    return run_to_memory(out, "complete")
+    return _sessions(spark, sf_dir, "30 minutes")
 
 
 @register(
@@ -194,21 +208,7 @@ def q_stream_session_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame:
     gap = F.when(F.col("event_type") == "click", "10 minutes").otherwise(
         "30 minutes"
     )
-    ev = (
-        events_stream(spark, sf_dir)
-        .withColumn("ts", F.date_trunc("second", "ts"))
-        .withWatermark("ts", "10 minutes")
-    )
-    agg = ev.groupBy(F.session_window("ts", gap), "user_id").agg(
-        F.count("*").alias("n_events")
-    )
-    out = agg.select(
-        F.unix_timestamp(F.col("session_window.start")).alias("sess_start_sec"),
-        F.unix_timestamp(F.col("session_window.end")).alias("sess_end_sec"),
-        "user_id",
-        "n_events",
-    )
-    return run_to_memory(out, "complete")
+    return _sessions(spark, sf_dir, gap)
 
 
 @register(
@@ -473,10 +473,7 @@ def q_stream_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT CAST(NULL AS BIGINT) AS p_id, c.c_id, c.user_id,
            CAST(NULL AS BIGINT) AS p_sec,
            CAST(epoch(c.cts) AS BIGINT) AS c_sec
-    FROM c, wm
-    WHERE c.cts < wm.w - INTERVAL 1 HOUR
-      AND NOT EXISTS (SELECT 1 FROM p WHERE p.user_id = c.user_id
-                      AND c.cts >= p.pts - INTERVAL 1 HOUR AND c.cts <= p.pts)
+    {_UNMATCHED_CLICKS_SQL}
     """,
     tags=("I9", "I4", "C3"),
 )
@@ -520,10 +517,7 @@ def q_stream_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     UNION ALL
     SELECT CAST(NULL AS BIGINT) AS p_id, c.c_id, c.user_id,
            CAST(epoch(c.cts) AS BIGINT) AS click_sec
-    FROM c, wm
-    WHERE c.cts < wm.w - INTERVAL 1 HOUR
-      AND NOT EXISTS (SELECT 1 FROM p WHERE p.user_id = c.user_id
-                      AND c.cts >= p.pts - INTERVAL 1 HOUR AND c.cts <= p.pts)
+    {_UNMATCHED_CLICKS_SQL}
     """,
     tags=("I9", "I4", "C3"),
 )
@@ -597,28 +591,7 @@ def q_stream_chained_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_stream_infer",
-    oracle="""
-    WITH expl AS (
-        SELECT label, generate_subscripts(embedding, 1) AS pos,
-               CAST(unnest(embedding) AS DOUBLE) AS val
-        FROM embeddings),
-    cent AS (SELECT label AS clab, pos, AVG(val) AS c FROM expl GROUP BY label, pos),
-    c2 AS (SELECT clab, SUM(c*c) AS cc FROM cent GROUP BY clab),
-    vex AS (
-        SELECT vec_id, label, generate_subscripts(embedding, 1) AS pos,
-               CAST(unnest(embedding) AS DOUBLE) AS val
-        FROM embeddings),
-    dist AS (
-        SELECT v.vec_id, ANY_VALUE(v.label) AS label, c.clab,
-               SUM(-2.0 * v.val * c.c) + ANY_VALUE(c2.cc) AS d
-        FROM vex v JOIN cent c ON c.pos = v.pos
-        JOIN c2 ON c2.clab = c.clab
-        GROUP BY v.vec_id, c.clab),
-    ranked AS (SELECT vec_id, label, clab,
-                      ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d, clab) AS rn
-               FROM dist)
-    SELECT vec_id, label, CAST(clab AS INT) AS pred FROM ranked WHERE rn = 1
-    """,
+    oracle=_INFER_ORACLE,
     tags=("I8", "J1"),
 )
 def q_stream_infer(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -853,29 +826,14 @@ def q_stream_bitmap_audience(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_stream_drift",
-    oracle="""
+    oracle=f"""
     WITH b AS (
         SELECT CAST(ROUND(value * 100) AS BIGINT) // 5000 AS bucket,
                CASE WHEN ts < TIMESTAMP '2024-01-16' THEN 1 ELSE 0 END
                    AS is_ref
         FROM events
     ),
-    agg AS (
-        SELECT bucket,
-               CAST(SUM(is_ref) AS BIGINT) AS ref_n,
-               CAST(SUM(1 - is_ref) AS BIGINT) AS cur_n
-        FROM b GROUP BY bucket
-    ),
-    tot AS (
-        SELECT CAST(SUM(ref_n) AS BIGINT) AS rt,
-               CAST(SUM(cur_n) AS BIGINT) AS ct
-        FROM agg
-    )
-    SELECT bucket, ref_n, cur_n,
-           CAST(cur_n * rt - ref_n * ct AS BIGINT) AS dxr,
-           CAST(ABS(cur_n * rt - ref_n * ct) * 1000000 // (rt * ct)
-                AS BIGINT) AS tvd_e6
-    FROM agg CROSS JOIN tot
+    {_DRIFT_REPORT_SQL}
     """,
     tags=("I1", "D3"),
 )

@@ -3,6 +3,7 @@
     python scripts/profile.py plans                      # HEADLINE, one row per query
     python scripts/profile.py plans --all q_stats        # full registry, substring filter
     python scripts/profile.py plans --top 40 --dump audit before # plans/audit/<q>_before.txt
+                                                                 # (+ <q>_before.oracle.sql per oracle)
     python scripts/profile.py plans --md > PLAN_AUDIT.md
     python scripts/profile.py time q_tpch_q5 q_market_basket --passes 10
     python scripts/profile.py scaling --k 16 q_tpch_q21 q_dedup_substring
@@ -119,12 +120,15 @@ def _pin_walk(node, flags: list) -> bool:
 # lambda-variable, common-subexpression, plan and RDD ids count up
 # through the session, an RDD's call site depends on JVM warm-up
 # (NativeMethodAccessorImpl.java:0 early, <unknown>:0 later), scratch
-# tables carry the process id, and lakehouse data files carry random
-# uuids. `stable` renumbers each id family in first-seen order (links
-# inside one plan survive) and masks the call sites, the pid and the
-# uuids, so two runs of one tree, or two trees, diff cleanly. A uuid is
-# masked, not renumbered: a scan's Location shows the first of its
-# files in name order, so which file shows is itself random.
+# names end in the process id (`scratch_tag`), and lakehouse data files
+# carry random uuids. `stable` renumbers each id family in first-seen
+# order (links inside one plan survive) and masks the call sites, the
+# pid of the scratch names (`mask_scratch_pid`: elsewhere the same
+# digits are an id, so a lambda variable numbered like the pid is
+# renumbered, not masked) and the uuids, so two runs of one tree, or
+# two trees, diff cleanly. A uuid is masked,
+# not renumbered: a scan's Location shows the first of its files in
+# name order, so which file shows is itself random.
 IDS = (r"(#)(\d+)", r"(lambda \w+?_)(\d+)", r"(_common_expr_)(\d+)", r"(plan_id=)(\d+)",
        r"(RDD\[)(\d+)")
 UUID = r"[0-9a-f]{8}-?[0-9a-f]{4}-?[0-9a-f]{4}-?[0-9a-f]{4}-?[0-9a-f]{12}"
@@ -132,9 +136,14 @@ UUID = r"[0-9a-f]{8}-?[0-9a-f]{4}-?[0-9a-f]{4}-?[0-9a-f]{4}-?[0-9a-f]{12}"
 
 def stable(text: str) -> str:
     """`text` with ids renumbered in first-seen order, and RDD call
-    sites, this process's pid and every uuid masked."""
+    sites, the pid of the scratch names and every uuid masked."""
+    from embarrassingly_parallel_image_classification_spark.sources.formats import (
+        mask_scratch_pid,
+    )
+
+    text = mask_scratch_pid(text)
     text = re.sub(r"(RDD\[\d+\] at \w+ at )\S+:\d+", r"\1<site>", text)
-    text = re.sub(UUID, "<uuid>", re.sub(rf"_{os.getpid()}(?!\d)", "_<pid>", text))
+    text = re.sub(UUID, "<uuid>", text)
     for pattern in IDS:
         seen: dict[str, str] = {}
         text = re.sub(pattern, lambda m: m[1] + seen.setdefault(m[2], str(len(seen) + 1)), text)
@@ -212,6 +221,9 @@ def plans(a) -> None:
     if a.dump:
         outdir = os.path.join(ROOT, "plans", a.dump[0])
         os.makedirs(outdir, exist_ok=True)
+        for name, sql in registry.oracles().items():
+            with open(os.path.join(outdir, f"{name}_{a.dump[1]}.oracle.sql"), "w") as f:
+                f.write(stable(sql) + "\n")
     if a.md:
         print(MD_HEADER.format(sf=sf))
     errors: dict[str, str] = {}
@@ -442,7 +454,8 @@ def main() -> None:
 
     p = picker("plans", plans, "one plan-property row per batch query")
     p.add_argument("--dump", nargs=2, metavar=("TAG", "SUFFIX"),
-                   help="write plans/TAG/<query>_SUFFIX.txt")
+                   help="write plans/TAG/<query>_SUFFIX.txt, and every oracle"
+                   " as plans/TAG/<query>_SUFFIX.oracle.sql")
     p.add_argument("--md", action="store_true", help="print PLAN_AUDIT.md")
     p = picker("time", time_queries, "warm min-of-N build/total timing and jobs")
     p.add_argument("--passes", type=int, default=3)

@@ -1451,3 +1451,86 @@ def test_apply_in_pandas_with_state_only_in_drain_builder():
     calls ``applyInPandasWithState`` itself."""
     found = _package_calls(lambda c: c.func.attr == "applyInPandasWithState")
     assert list(found) == [("streaming/core.py", "drain_stateful")], found
+
+
+# Pairs of top-level definitions that may share a repeated 6-line block,
+# each with its reason. ``name@oracle`` is the ``@register`` decorator
+# (the oracle text) of query function ``name``. Only two kinds belong
+# here: an oracle and the engine-side SQL it checks (oracles share no
+# code with the engine), and implementations a docstring says are kept
+# apart on purpose.
+_BLOCK_REPEATS_ALLOWED = {
+    ("operators/graph.py:_sssp_oracle", "operators/graph.py:q_graph_shortest_path"): (
+        "oracle text and the engine-side SQL it checks: both end in the "
+        "same infinity-to-NULL projection of the last relaxation round"
+    ),
+    (
+        "plans/tpch2.py:q_sql_lateral_alias",
+        "plans/tpch2.py:q_sql_lateral_alias@oracle",
+    ): (
+        "oracle text and the engine-side SQL it checks: the oracle is the "
+        "fully expanded spelling of the same aggregate over the same "
+        "buckets"
+    ),
+}
+
+
+def _package_blocks(window: int = 6, min_chars: int = 120) -> dict[tuple, list]:
+    """{6-line block: [(owner, line), ...]} over the package's ``.py``
+    files: each line stripped, blank, ``#`` comment and import lines
+    dropped, blocks under ``min_chars`` characters skipped. The owner
+    is ``module:name`` of the enclosing top-level definition, with
+    ``@oracle`` for a query function's ``@register`` decorator."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / (
+        "embarrassingly_parallel_image_classification_spark"
+    )
+    blocks: dict[tuple, list] = {}
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        src = path.read_text()
+        spans = []  # (first, last, owner) per top-level statement
+        for node in ast.parse(src).body:
+            name = getattr(node, "name", None)
+            if name is None and isinstance(node, (ast.Assign, ast.AnnAssign)):
+                target = node.targets[0] if isinstance(node, ast.Assign) else node.target
+                name = ast.unparse(target)
+            name = f"{rel}:{name or node.lineno}"
+            decos = getattr(node, "decorator_list", [])
+            if decos:
+                spans.append((decos[0].lineno, node.lineno - 1, name + "@oracle"))
+            spans.append((node.lineno, node.end_lineno, name))
+
+        def owner(line: int) -> str:
+            return next((o for a, b, o in spans if a <= line <= b), f"{rel}:?")
+
+        kept = []
+        for i, raw in enumerate(src.splitlines(), 1):
+            s = raw.strip()
+            if not s or s.startswith("#") or re.match(r"from \S+ import |import ", s):
+                continue
+            kept.append((i, s))
+        for k in range(len(kept) - window + 1):
+            block = tuple(s for _, s in kept[k : k + window])
+            if sum(map(len, block)) >= min_chars:
+                line = kept[k][0]
+                blocks.setdefault(block, []).append((owner(line), line))
+    return blocks
+
+
+def test_no_block_repeats_in_package():
+    """Source lint: no 6-line block (stripped lines, blanks, comments
+    and imports dropped, blocks under 120 characters ignored) occurs
+    twice anywhere in the package. A pattern used twice is one
+    function, or one oracle-only fragment on the oracle side; the only
+    repeats allowed are the pairs in ``_BLOCK_REPEATS_ALLOWED``."""
+    allowed = {tuple(sorted(pair)) for pair in _BLOCK_REPEATS_ALLOWED}
+    bad = set()
+    for block, where in _package_blocks().items():
+        for i, (a, la) in enumerate(where):
+            for b, lb in where[i + 1 :]:
+                if tuple(sorted((a, b))) not in allowed:
+                    bad.add(f"{a} (line {la}) and {b} (line {lb}): {block[0]!r}")
+    assert not bad, "repeated blocks:\n" + "\n".join(sorted(bad))

@@ -101,6 +101,38 @@ def test_plans_summary_and_dump_match_across_processes(tmp_path):
     assert "lake_clone_src" in rows[0] and rows[0] == rows[1]
     a, b = ((tmp_path / f"q_lake_clone_{s}.txt").read_text() for s in "ab")
     assert "Location" in a and a == b
+    # every oracle is dumped beside the plans, pid-masked, so a
+    # cross-tree oracle check is `diff -r` of two dump dirs
+    from embarrassingly_parallel_image_classification_spark import registry
+
+    oracles = {p.name for p in tmp_path.glob("*_a.oracle.sql")}
+    assert oracles == {f"{n}_a.oracle.sql" for n in registry.oracles()}
+    a, b = ((tmp_path / f"q_scan_provenance_{s}.oracle.sql").read_text() for s in "ab")
+    assert "_<pid>" in a and a == b
+
+
+def test_stable_masks_the_pid_only_in_scratch_names():
+    """`stable` masks the pid where it ends a scratch name (a scratch
+    dir, a bucketed table) and renumbers a lambda variable whose
+    number happens to equal the pid like any other."""
+    from embarrassingly_parallel_image_classification_spark.plans.scale import (
+        bucket_table_names,
+    )
+    from embarrassingly_parallel_image_classification_spark.sources.formats import scratch
+
+    pid = os.getpid()
+    table = bucket_table_names(SF_SMOKE)[0]
+    text = (
+        f"Project [lambda x_7, lambda y_{pid}, lambda z_3] "
+        f"Location: {scratch('lake_merge', SF_SMOKE)}/part-0.parquet "
+        f"Scan {table}"
+    )
+    got = _profile().stable(text)
+    sf = os.path.basename(SF_SMOKE)
+    assert "lambda x_1, lambda y_2, lambda z_3" in got
+    assert f"lake_merge_{sf}_<pid>/part-0.parquet" in got
+    assert f"lineitem_b_{sf.replace('.', '_')}_<pid>" in got
+    assert str(pid) not in got
 
 
 def test_time_counts_every_pass_past_the_job_retention():
