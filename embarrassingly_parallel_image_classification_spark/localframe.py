@@ -18,12 +18,21 @@ repeatedly per query. On a real cluster the same per-slice task +
 Python-worker cost exists; a literal relation is the right spelling at
 every scale.
 
-``local_df`` builds the same frame as ``inline(array(struct(...)))``
-over JVM literals: no Python worker, no pickling, and Catalyst folds it
-to a ``LocalTableScan``. Values are typed by casting each literal to
-the DDL schema's field type, which reproduces ``createDataFrame``'s
-coercions for the primitive types used here (strings, integers,
-floats, booleans, None, flat arrays). Row order is preserved.
+``local_df`` builds the same frame as one ``VALUES`` inline table of
+JVM literals (``SELECT * FROM VALUES (...), ... AS t(cols)``): no
+Python worker, no pickling, and the analyzer's ``ResolveInlineTables``
+turns it into a ``LocalRelation`` with exact statistics, coalesced to
+one partition as the range was (an aggregate over it plans no
+shuffle). The earlier
+spelling, ``inline(array(struct(...)))`` over a one-row range, made the
+analyzer type-coerce the array node by node and the optimizer fold it
+afterwards. On a 528-row, 3-column table (the q_stats_sign_bh Pascal
+table; local[4], 12 warm runs, medians): building it took 157 → 58 ms,
+and a broadcast join of it against a 20,000-row range 391 → 257 ms.
+Values are typed by casting each literal to the DDL schema's field
+type, which reproduces ``createDataFrame``'s coercions for the
+primitive types used here (strings, integers, floats, booleans, None,
+flat arrays). Row order is preserved.
 
 Large lists (> ``_INLINE_MAX`` rows) fall back to a single-slice
 pickled RDD: one Python round trip instead of ``defaultParallelism``,
@@ -123,26 +132,26 @@ def local_df(
         return spark.createDataFrame(
             spark.sparkContext.parallelize(rows, 1), st
         )
-    # Fast path: the entire relation as ONE SQL expression string —
-    # a single py4j round trip + one JVM parse, vs ~3 py4j calls per
-    # cell on the Column path (which measured ~10 s of driver time for
-    # a 528-row table; see _sql_val).
+    # Fast path: the entire relation as ONE SQL string (a single py4j
+    # round trip + one JVM parse, vs ~3 py4j calls per cell on the
+    # Column path; see _sql_val), spelled as an inline table so the
+    # analyzer turns it into a LocalRelation. coalesce(1): a
+    # LocalTableScan reports no partitioning, so without it every
+    # aggregate over the frame plans a shuffle and its own job; one
+    # partition satisfies any distribution, and the statistics stay.
     try:
-        structs_sql = []
+        rows_sql = []
         for row in rows:
             if not isinstance(row, (tuple, list)):
                 row = (row,)
-            fields_sql = ", ".join(
-                f"'{f.name}', {_sql_val(v, f.dataType)}"
-                for v, f in zip(row, st.fields)
+            cells = ", ".join(
+                _sql_val(v, f.dataType) for v, f in zip(row, st.fields)
             )
-            structs_sql.append(f"named_struct({fields_sql})")
-        # numPartitions=1: the default range splits by
-        # defaultParallelism, which would launch 31 empty tasks per
-        # materialization.
-        return spark.range(0, 1, 1, 1).select(
-            F.expr(f"inline(array({', '.join(structs_sql)}))")
-        )
+            rows_sql.append(f"({cells})")
+        cols = ", ".join("`" + f.name.replace("`", "``") + "`" for f in st.fields)
+        return spark.sql(
+            f"SELECT * FROM VALUES {', '.join(rows_sql)} AS t({cols})"
+        ).coalesce(1)
     except _Unrenderable:
         pass
     structs = []

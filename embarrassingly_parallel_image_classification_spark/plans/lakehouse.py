@@ -83,6 +83,13 @@ the bloom index because snapshot_read_point applies neither new files
 nor delete files, so a carried index would miss appended rows or
 return deleted ones.
 
+Schema rule: a read takes its columns and types from the manifest it
+resolved (``schema``, recorded at commit; ``renames`` maps physical to
+logical names), never from the data files. ``_scan`` is the one reader
+of data files, so no read launches Spark's footer-inference job. Only
+the reads that span versions whose schemas differ (erase_rows and
+q_lake_schema_evolution) infer a schema, with ``mergeSchema``.
+
 Rebase or refuse when another commit lands first:
 
     write kind                              on a racing commit
@@ -118,6 +125,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from ..functions.hashing import md5_int
 from ..localframe import local_df, pin
@@ -556,11 +564,39 @@ def _footer_stats(local_path: str, cols) -> tuple[dict, dict]:
     return per_col, per_null
 
 
+def _scan(spark: SparkSession, path: str, names: list, m: dict) -> DataFrame:
+    """The data files ``names`` under ``path``, read with the schema
+    manifest ``m`` recorded, under its logical column names (the schema
+    rule in the module docstring).
+
+    Typing the scan from the manifest saves the footer-inference job
+    Spark launches per ``spark.read.parquet``, and the scan's types no
+    longer follow whichever file comes first. A column a file lacks (it
+    predates the append or default that added it) reads as NULL; a
+    column a file carries beyond the schema (an erase rewrite unions
+    schemas across history) is not read. ``mergeSchema`` stays only on
+    the reads that span versions whose schemas differ (erase_rows and
+    q_lake_schema_evolution): no single manifest types them."""
+    logical = StructType.fromJson(m["schema"])
+    to_phys = {l: p for p, l in m.get("renames", {}).items()}
+    physical = StructType(
+        [
+            StructField(to_phys.get(f.name, f.name), f.dataType, True, f.metadata)
+            for f in logical.fields
+        ]
+    )
+    out = spark.read.schema(physical).parquet(*[os.path.join(path, n) for n in names])
+    # column mapping: ONE select from the full mapping — sequential
+    # withColumnRenamed breaks on swap mappings ({a: b, b: a})
+    return out.toDF(*logical.fieldNames()) if to_phys else out
+
+
 def _assign_identity_staged(
-    spark: SparkSession, staging: str, ident: dict
+    spark: SparkSession, staging: str, schema: dict, ident: dict
 ) -> tuple[str, dict]:
     """Assign IDENTITY values over the already-staged (immutable) batch
-    files; returns (new_staging_dir, {col: new_high}).
+    files, whose schema (the staged frame's own, as JSON) is ``schema``;
+    returns (new_staging_dir, {col: new_high}).
 
     Protocol: per-file row counts come from the parquet FOOTERS (a
     driver-side metadata read, same channel _footer_stats already
@@ -588,7 +624,7 @@ def _assign_identity_staged(
         offs[fn] = acc
         acc += pq.ParquetFile(os.path.join(staging, fn)).metadata.num_rows
     n = acc
-    out = spark.read.parquet(staging)
+    out = _scan(spark, staging, files, {"schema": schema})
     if n and files:
         omap = F.create_map(
             *[x for fn, o in offs.items() for x in (F.lit(fn), F.lit(o))]
@@ -869,7 +905,7 @@ def snapshot_write(
     if ident0 and not preserve_identity:
         _staging_raw = staging
         staging, _new_high = _assign_identity_staged(
-            df.sparkSession, staging, ident0
+            df.sparkSession, staging, df.schema.jsonValue(), ident0
         )
     new_files, stats, col_stats, null_stats = [], {}, {}, {}
     for name in sorted(os.listdir(staging)):
@@ -941,6 +977,14 @@ def _fresh_orders(spark: SparkSession, sf_dir: str, kind: str, *cols) -> tuple[s
     path = scratch(kind, sf_dir)
     shutil.rmtree(path, ignore_errors=True)
     return path, t(spark, sf_dir, "orders").select(*cols, cents("o_totalprice").alias("cents"))
+
+
+def _appended(spark: SparkSession, path: str, v_old: int, v_new: int) -> DataFrame:
+    """The change feed of appends: the data files version ``v_new``
+    lists and ``v_old`` does not, read with ``v_new``'s schema."""
+    old = set(_manifest(path, v_old)["files"])
+    m = _manifest(path, v_new)
+    return _scan(spark, path, [n for n in m["files"] if n not in old], m)
 
 
 def _per_version(spark: SparkSession, path: str, versions: tuple, *aggs) -> DataFrame:
@@ -1017,91 +1061,42 @@ def snapshot_read(
 
         files = [name for name in files if survives(name)]
     if not files:
-        # reconstruct the table's real schema from the manifest (recorded
-        # at write time) — an empty result must still carry the right
-        # columns for downstream code (a hardcoded guess here was the
-        # round-5 ADVICE bug: wrong schema for any non-orders table)
-        from pyspark.sql.types import StructType
-
-        if "schema" not in m:
-            raise ValueError(
-                f"manifest v{v} at {path} predates schema recording; "
-                f"cannot type an empty read"
-            )
-        return spark.createDataFrame([], StructType.fromJson(m["schema"]))
+        # an empty result still carries the version's recorded columns
+        return local_df(spark, [], StructType.fromJson(m["schema"]))
+    # Initial-default column evolution (Iceberg initial-default / Delta
+    # ALTER ADD COLUMN DEFAULT): rows in files that predate the ADD read
+    # back the recorded default; rows written after keep whatever they
+    # stored — including explicit NULLs, which is why the default is
+    # SCOPED to the pre-add file list and cannot be a blanket coalesce.
+    # Files are grouped by which defaults apply (same grouping trick as
+    # snapshot_read_mor), each group scanned, then unioned; without
+    # defaults there is one group.
     defaults = m.get("defaults", {})
-    if defaults:
-        # Initial-default column evolution (Iceberg initial-default /
-        # Delta ALTER ADD COLUMN DEFAULT): rows in files that predate
-        # the ADD read back the recorded default; rows written after
-        # keep whatever they stored — including explicit NULLs, which
-        # is why the default is SCOPED to the pre-add file list and
-        # cannot be a blanket coalesce. Files are grouped by which
-        # defaults apply (same grouping trick as snapshot_read_mor),
-        # each group aligned to the manifest schema, then unioned.
-        from pyspark.sql.types import StructType
-
-        target = StructType.fromJson(m["schema"])
-        groups: dict[tuple, list] = {}
-        for name in files:
-            key = tuple(
-                sorted(c for c, d in defaults.items() if name in d["scope"])
-            )
-            groups.setdefault(key, []).append(name)
-        parts = []
-        # sorted, not insertion order: that follows the random data-file
-        # names, and the union's branch order would change run to run
-        for key, names in sorted(groups.items()):
-            g = spark.read.option("mergeSchema", "true").parquet(
-                *[os.path.join(path, n) for n in names]
-            )
-            for fld in target.fields:
-                if fld.name not in g.columns:
-                    fill = (
-                        F.lit(defaults[fld.name]["value"])
-                        if fld.name in key
-                        else F.lit(None)
+    groups: dict[tuple, list] = {}
+    for name in files:
+        key = tuple(sorted(c for c, d in defaults.items() if name in d["scope"]))
+        groups.setdefault(key, []).append(name)
+    parts = []
+    # sorted, not insertion order: that follows the random data-file
+    # names, and the union's branch order would change run to run
+    for key, names in sorted(groups.items()):
+        g = _scan(spark, path, names, m)
+        # a scoped file reads the column as NULL: it predates the ADD,
+        # or physically holds it as an all-NULL artifact of an
+        # erase/compaction rewrite (the rewrite unions schemas). Either
+        # way it never stored explicit values, so coalescing is exact
+        # (review finding)
+        parts.append(
+            g.withColumns(
+                {
+                    c: F.coalesce(
+                        F.col(c), F.lit(defaults[c]["value"]).cast(g.schema[c].dataType)
                     )
-                    g = g.withColumn(fld.name, fill.cast(fld.dataType))
-                elif fld.name in key:
-                    # a scoped file can physically CONTAIN the column as
-                    # an all-NULL artifact of an erase/compaction rewrite
-                    # (the rewrite unions schemas); pre-add rows still
-                    # owe the default, and a scoped file by definition
-                    # never stored explicit values, so coalescing is
-                    # exact (review finding)
-                    g = g.withColumn(
-                        fld.name,
-                        F.coalesce(
-                            F.col(fld.name),
-                            F.lit(defaults[fld.name]["value"]).cast(
-                                fld.dataType
-                            ),
-                        ),
-                    )
-            parts.append(g.select([fld.name for fld in target.fields]))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-    out = spark.read.parquet(*[os.path.join(path, name) for name in files])
-    # column-mapping: surface every physical column under its logical
-    # name (rename_column is metadata-only; no data file was rewritten).
-    # ONE select from the full mapping — sequential withColumnRenamed
-    # breaks on swap mappings ({a: b, b: a}), same as the write path
-    if renames:
-        out = out.select(
-            *[F.col(c).alias(renames.get(c, c)) for c in out.columns]
+                    for c in key
+                }
+            )
         )
-    # project to the version's recorded schema: an erase-rewritten
-    # replacement file can physically carry LATER versions' columns
-    # (the rewrite unions schemas across history) — without the
-    # projection those would leak into time-travel reads
-    if "schema" in m:
-        want = [fl["name"] for fl in m["schema"]["fields"]]
-        if set(want) <= set(out.columns):
-            out = out.select(want)
-    return out
+    return functools.reduce(DataFrame.unionByName, parts)
 
 
 def vacuum(
@@ -1672,12 +1667,7 @@ def q_lake_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     view = pin(agg_of(snapshot_read(spark, path, 1)), "q_lake_incremental_agg.view")
     # v2: append the delta; refresh = old view ⊕ agg(delta files only)
     snapshot_write(orders.filter(F.col("o_orderkey") % 2 == 1), path, "append")
-    v1_files = set(_manifest(path, 1)["files"])
-    v2_files = _manifest(path, 2)["files"]
-    delta_files = [name for name in v2_files if name not in v1_files]
-    delta = spark.read.parquet(
-        *[os.path.join(path, name) for name in delta_files]
-    )
+    delta = _appended(spark, path, 1, 2)
     refreshed = (
         view.unionByName(agg_of(delta))
         .groupBy("priority")
@@ -1760,12 +1750,12 @@ def snapshot_read_mor(
         groups.setdefault(idxs, []).append(name)
     out = None
     for idxs, names in sorted(groups.items()):  # see snapshot_read's defaults
-        df = spark.read.parquet(*[os.path.join(path, n) for n in names])
+        df = _scan(spark, path, names, m)
         for i in idxs:
             del_file, key, _scope = deletes[i]
-            dk = spark.read.parquet(os.path.join(path, del_file)).select(
-                F.col(key).alias("__delk")
-            )
+            # a delete file holds the key column only; the manifest
+            # schema types it, and the columns it lacks are pruned
+            dk = _scan(spark, path, [del_file], m).select(F.col(key).alias("__delk"))
             df = df.join(
                 F.broadcast(dk), df[key] == F.col("__delk"), "left_anti"
             )
@@ -2664,7 +2654,7 @@ def add_bloom_index(path: str, col: str, spark: SparkSession | None = None) -> i
     spark = spark or SparkSession.getActiveSession()
     v = current_version(path)
     m = _manifest(path, v)
-    src = spark.read.parquet(*[os.path.join(path, n) for n in m["files"]])
+    src = _scan(spark, path, m["files"], m)
     val = F.coalesce(F.col(col).cast("string"), F.lit("None"))
     pos = src.select(
         F.element_at(F.split(F.input_file_name(), "/"), -1).alias("file"),
@@ -2725,9 +2715,8 @@ def snapshot_read_point(
         if _bloom_might_contain(m["blooms"][name], value)
     ]
     if not files:
-        return spark.createDataFrame([], f"{col} bigint")
-    df = spark.read.parquet(*[os.path.join(path, name) for name in files])
-    return df.filter(F.col(col) == value)
+        return local_df(spark, [], StructType.fromJson(m["schema"]))
+    return _scan(spark, path, files, m).filter(F.col(col) == value)
 
 
 @register("q_lake_ivm_distinct", oracle=None, tags=("lakehouse", "D5", "IVM", "rows-only"))
@@ -2763,11 +2752,7 @@ def q_lake_ivm_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshot_write(orders.filter(half == 0), path, "append")
     view = pin(sketch_of(snapshot_read(spark, path, 1)), "q_lake_ivm_distinct.view")
     snapshot_write(orders.filter(half == 1), path, "append")
-    v1_files = set(_manifest(path, 1)["files"])
-    v2_files = _manifest(path, 2)["files"]
-    delta = spark.read.parquet(
-        *[os.path.join(path, n) for n in v2_files if n not in v1_files]
-    )
+    delta = _appended(spark, path, 1, 2)
     return (
         view.unionByName(sketch_of(delta))
         .groupBy("priority")
@@ -3599,13 +3584,6 @@ def q_lake_incremental_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n"), F.sum("cents").cast("bigint").alias("cents")
         )
 
-    def delta_of(path: str, v_old: int, v_new: int) -> DataFrame:
-        old_files = set(_manifest(path, v_old)["files"])
-        new_files = _manifest(path, v_new)["files"]
-        return spark.read.parquet(
-            *[os.path.join(path, n) for n in new_files if n not in old_files]
-        )
-
     # v1 of both tables: half of orders, 2/3 of customers
     snapshot_write(orders.filter(F.col("o_orderkey") % 2 == 0), opath, "append")
     snapshot_write(cust.filter(F.col("c_custkey") % 3 != 0), cpath, "append")
@@ -3618,8 +3596,8 @@ def q_lake_incremental_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # v2 of both: the remaining halves append
     snapshot_write(orders.filter(F.col("o_orderkey") % 2 == 1), opath, "append")
     snapshot_write(cust.filter(F.col("c_custkey") % 3 == 0), cpath, "append")
-    d_o = delta_of(opath, 1, 2)
-    d_c = delta_of(cpath, 1, 2)
+    d_o = _appended(spark, opath, 1, 2)
+    d_c = _appended(spark, cpath, 1, 2)
     # the three delta-join terms: old sides read AS OF v1 (time travel)
     terms = (
         d_o.join(c1, d_o.o_custkey == c1.c_custkey)

@@ -24,7 +24,6 @@ formulation; only the physical plan differs).
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -32,7 +31,7 @@ from pyspark.sql import functions as F
 from ..functions.hashing import md5_int
 from ..localframe import local_df
 from ..registry import register
-from ..sources.formats import scratch_tag
+from ..sources.formats import SCRATCH_ROOT, scratch_tag
 from ..sources.tables import cents, t
 
 
@@ -218,7 +217,7 @@ def write_bucketed(df: DataFrame, table: str, key: str, buckets: int = BUCKETS) 
         .write.mode("overwrite")
         .bucketBy(buckets, key)
         .sortBy(key)
-        .option("path", os.path.join(tempfile.gettempdir(), "epic_spark_scratch", table))
+        .option("path", os.path.join(SCRATCH_ROOT, table))
         .saveAsTable(table)
     )
 

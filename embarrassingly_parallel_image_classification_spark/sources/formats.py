@@ -25,7 +25,7 @@ from ..localframe import local_df
 from ..registry import register
 from .tables import cents, t
 
-_SCRATCH = os.path.join(tempfile.gettempdir(), "epic_spark_scratch")
+SCRATCH_ROOT = os.path.join(tempfile.gettempdir(), "epic_spark_scratch")
 
 
 def scratch_tag(sf_dir: str) -> str:
@@ -50,7 +50,7 @@ def scratch(kind: str, sf_dir: str) -> str:
     queries rewrite their scratch idempotently. Any oracle that reads a
     scratch path back builds its SQL through this helper when the
     oracle is resolved, so query and oracle stay in the same pid."""
-    return os.path.join(_SCRATCH, f"{kind}_{scratch_tag(sf_dir)}")
+    return os.path.join(SCRATCH_ROOT, f"{kind}_{scratch_tag(sf_dir)}")
 
 
 ORDERS_CSV_SCHEMA = (

@@ -260,11 +260,11 @@ def q_stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     dir, then the lake is read back and aggregated — the
     stream-to-table ingestion pattern; the oracle recomputes from the
     source, so a dropped/duplicated batch fails the hash."""
-    import os
     import shutil
-    import tempfile
 
-    out = os.path.join(tempfile.gettempdir(), "epic_spark_scratch", "stream_lake")
+    from ..sources.formats import scratch
+
+    out = scratch("stream_lake", sf_dir)
     shutil.rmtree(out, ignore_errors=True)
     ev = events_stream(spark, sf_dir)
 
@@ -273,7 +273,7 @@ def q_stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     q = ev.writeStream.foreachBatch(sink).trigger(availableNow=True).start()
     q.awaitTermination()
-    lake = spark.read.parquet(out)
+    lake = spark.read.schema(ev.schema).parquet(out)
     return lake.groupBy("event_type").agg(
         F.count("*").alias("n"), F.round(F.sum("value"), 6).alias("total_value")
     )

@@ -19,6 +19,20 @@ def spark():
     yield s
 
 
+def jobs_in_fresh_group(spark, fn, group):
+    """Run fn() under a fresh job group; return the jobs it launched."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # job-start events reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.fixture(scope="session")
 def duck():
     """Shared DuckDB connection; views are (re)registered per sf_dir by

@@ -66,14 +66,28 @@ def test_local_df_types_match(spark):
 
 
 def test_local_df_is_jvm_literal(spark):
-    """The fast path must stay a LocalTableScan/Project over range —
-    no Python-RDD scan (the whole point of the module)."""
+    """The fast path is a VALUES inline table: the analyzer resolves it
+    to a LocalRelation (exact statistics, nothing left to fold), no
+    Python-RDD scan, building it launches no job, and it is one
+    partition."""
     from embarrassingly_parallel_image_classification_spark.localframe import (
         local_df,
     )
+    from tests.conftest import jobs_in_fresh_group
 
-    plan = local_df(spark, ROWS, SCHEMA)._jdf.queryExecution().executedPlan().toString()
-    assert "Scan ExistingRDD" not in plan
+    built = []
+    jobs = jobs_in_fresh_group(
+        spark, lambda: built.append(local_df(spark, ROWS, SCHEMA)), "local-df-build"
+    )
+    assert jobs == [], f"building a literal frame launched jobs {jobs}"
+    qe = built[0]._jdf.queryExecution()
+    leaves = qe.analyzed().collectLeaves()
+    kinds = [leaves.apply(i).nodeName() for i in range(leaves.size())]
+    assert kinds == ["LocalRelation"], kinds
+    assert "Scan ExistingRDD" not in qe.executedPlan().toString()
+    # one partition, so an aggregate over the frame needs no shuffle
+    agg = built[0].groupBy("j").count()._jdf.queryExecution().executedPlan()
+    assert "Exchange" not in agg.toString()
 
 
 def test_local_df_numpy_scalars(spark):
@@ -188,3 +202,23 @@ def test_pin_restores_description_when_the_job_fails(spark):
     with pytest.raises(Exception, match="boom"):
         pin(boom, "fails")
     assert sc.getLocalProperty(_DESC) is None
+
+
+def test_create_dataframe_only_in_localframe():
+    """Source lint: ``spark.createDataFrame`` on a Python list builds a
+    pickled, ``defaultParallelism``-slice RDD (the slow path measured in
+    the localframe docstring); driver-built frames go through
+    ``local_df``, which keeps the one single-slice fallback."""
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parents[1] / (
+        "embarrassingly_parallel_image_classification_spark"
+    )
+    offenders = [
+        f"{py.relative_to(pkg)}:{n}"
+        for py in sorted(pkg.rglob("*.py"))
+        if py.name != "localframe.py"
+        for n, line in enumerate(py.read_text().splitlines(), 1)
+        if "createDataFrame(" in line
+    ]
+    assert not offenders, f"build driver frames through local_df: {offenders}"

@@ -475,6 +475,82 @@ def test_lakehouse_empty_pruned_read_keeps_table_schema(spark, tmp_path):
     assert pruned.schema == df.schema, pruned.schema
 
 
+def test_lakehouse_reads_take_the_manifest_schema_without_a_job(spark, tmp_path):
+    """Building snapshot_read / snapshot_read_mor on a plain, a renamed,
+    a defaulted and a MoR table launches no job (the manifest's schema
+    types the scan; nothing infers it from the files), and the rows and
+    schema equal a footer-inferred read's."""
+    import json as _json
+
+    from embarrassingly_parallel_image_classification_spark.plans import lakehouse
+    from tests.conftest import jobs_in_fresh_group
+
+    def rows_of(lo, hi):
+        return spark.range(lo, hi).select(
+            F.col("id").alias("k"),
+            F.concat(F.lit("s"), F.col("id").cast("string")).alias("s"),
+            (F.col("id") / 4).alias("x"),
+        )
+
+    def table(name):
+        path = str(tmp_path / name)
+        lakehouse.snapshot_write(rows_of(0, 10), path, "append")
+        lakehouse.snapshot_write(rows_of(10, 15), path, "append")
+        return path
+
+    def inferred(path, deleted=()):
+        """The read the manifest schema replaces: types from the footers."""
+        v = lakehouse.current_version(path)
+        with open(os.path.join(path, f"_manifest_v{v}.json")) as f:
+            m = _json.load(f)
+        df = spark.read.option("mergeSchema", "true").parquet(
+            *[os.path.join(path, n) for n in m["files"]]
+        )
+        df = df.toDF(*[m.get("renames", {}).get(c, c) for c in df.columns])
+        df = df.select([fl["name"] for fl in m["schema"]["fields"]])
+        return df.filter(~F.col("k").isin(list(deleted))) if deleted else df
+
+    plain = table("plain")
+    renamed = table("renamed")
+    lakehouse.rename_column(renamed, "s", "label")
+    defaulted = str(tmp_path / "defaulted")
+    lakehouse.snapshot_write(spark.range(5).select(F.col("id").alias("k")), defaulted, "append")
+    lakehouse.add_column_default(defaulted, "d", "bigint", 7)
+    lakehouse.snapshot_write(
+        spark.range(5, 8).select(
+            F.col("id").alias("k"),
+            F.when(F.col("id") == 6, F.lit(None)).otherwise(F.col("id")).alias("d"),
+        ),
+        defaulted,
+        "append",
+    )
+    mor = table("mor")
+    lakehouse.delete_where(
+        spark, mor, "k", spark.range(0, 15, 3).select(F.col("id").alias("k"))
+    )
+    cases = [
+        ("plain", lambda: lakehouse.snapshot_read(spark, plain), inferred(plain)),
+        ("renamed", lambda: lakehouse.snapshot_read(spark, renamed), inferred(renamed)),
+        ("mor", lambda: lakehouse.snapshot_read_mor(spark, mor), inferred(mor, range(0, 15, 3))),
+    ]
+    for name, read, want in cases:
+        built = []
+        jobs = jobs_in_fresh_group(spark, lambda: built.append(read()), f"lake-read-{name}")
+        assert jobs == [], f"{name}: building the read launched jobs {jobs}"
+        assert built[0].schema == want.schema, (name, built[0].schema, want.schema)
+        assert sorted(built[0].collect()) == sorted(want.collect()), name
+    built = []
+    jobs = jobs_in_fresh_group(
+        spark, lambda: built.append(lakehouse.snapshot_read(spark, defaulted)), "lake-read-dft"
+    )
+    assert jobs == [], f"defaulted: building the read launched jobs {jobs}"
+    assert built[0].schema == inferred(defaulted).schema
+    # pre-add rows read the default; a post-add explicit NULL stays NULL
+    assert sorted(built[0].collect(), key=lambda r: r["k"]) == [
+        (0, 7), (1, 7), (2, 7), (3, 7), (4, 7), (5, 5), (6, None), (7, 7)
+    ]
+
+
 def test_lakehouse_batch_id_commits_atomically_with_data(spark, tmp_path):
     """The ingest-idempotence id must live in the SAME atomically-linked
     manifest as the data files it gates (one commit — no window where

@@ -1,10 +1,12 @@
 """The fixture schema cache (sources/tables.py) and the centroid memo
 (ml/inference.py): neither may serve stale data, and a warm fixture
-load launches no Spark job. Plus the source lint that keeps every
-fixture read behind the cache."""
+load launches no Spark job. Plus the source lints that keep every
+fixture read behind the cache and every lakehouse read behind the
+manifest schema."""
 
 from __future__ import annotations
 
+import ast
 import os
 import re
 from pathlib import Path
@@ -19,22 +21,9 @@ from embarrassingly_parallel_image_classification_spark.sources.tables import (
     load_table,
     parquet_schema,
 )
+from tests.conftest import jobs_in_fresh_group
 
 PKG = Path(__file__).resolve().parent.parent / "embarrassingly_parallel_image_classification_spark"
-
-
-def _jobs_in_fresh_group(spark, fn, group):
-    """Run fn() under a fresh job group; return the jobs it launched."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    # job-start events reach the status store through the listener bus
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return list(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_rewritten_fixture_file_is_reinferred(spark, tmp_path):
@@ -63,7 +52,7 @@ def test_schema_conf_flip_misses_the_cache(spark, tmp_path, conf, flipped):
     prev = spark.conf.get(conf)
     spark.conf.set(conf, flipped)
     try:
-        jobs = _jobs_in_fresh_group(spark, lambda: parquet_schema(spark, path), f"flip-{conf}")
+        jobs = jobs_in_fresh_group(spark, lambda: parquet_schema(spark, path), f"flip-{conf}")
         after = parquet_schema(spark, path)
     finally:
         spark.conf.set(conf, prev)
@@ -78,8 +67,8 @@ def test_schema_conf_flip_misses_the_cache(spark, tmp_path, conf, flipped):
 def test_warm_load_launches_no_job(spark, tmp_path):
     pq.write_table(pa.table({"n_nationkey": pa.array([0, 1], pa.int32())}), tmp_path / "nation.parquet")
     sf_dir = str(tmp_path)
-    cold = _jobs_in_fresh_group(spark, lambda: load_table(spark, sf_dir, "nation"), "schema-cold")
-    warm = _jobs_in_fresh_group(spark, lambda: load_table(spark, sf_dir, "nation"), "schema-warm")
+    cold = jobs_in_fresh_group(spark, lambda: load_table(spark, sf_dir, "nation"), "schema-cold")
+    warm = jobs_in_fresh_group(spark, lambda: load_table(spark, sf_dir, "nation"), "schema-warm")
     assert cold, "the first load infers the schema with a job"
     assert warm == [], f"a warm load launched jobs {warm}"
 
@@ -126,3 +115,35 @@ def test_fixture_files_are_read_only_through_tables_py():
                     line = text.count("\n", 0, m.start()) + 1
                     offenders.append(f"{path.relative_to(PKG)}:{line}")
     assert not offenders, f"read fixture files through sources.tables: {offenders}"
+
+
+def _reads_parquet(call: ast.Call) -> bool:
+    """``<x>.read[.option(..)/.schema(..)...].parquet(...)``."""
+    f = call.func
+    if not (isinstance(f, ast.Attribute) and f.attr == "parquet"):
+        return False
+    node = f.value
+    while isinstance(node, (ast.Call, ast.Attribute)):
+        if isinstance(node, ast.Attribute) and node.attr == "read":
+            return True
+        node = node.func if isinstance(node, ast.Call) else node.value
+    return False
+
+
+def test_lakehouse_data_files_are_read_only_through_scan():
+    """Every lakehouse read takes its schema from the manifest through
+    ``_scan``; a bare ``spark.read.parquet`` launches an inference job.
+    Only the reads that span versions with different schemas infer
+    (``mergeSchema``): erase_rows and q_lake_schema_evolution."""
+    tree = ast.parse((PKG / "plans" / "lakehouse.py").read_text())
+    readers = {
+        f"{fn.name}:{call.lineno}"
+        for fn in tree.body
+        if isinstance(fn, ast.FunctionDef)
+        for call in ast.walk(fn)
+        if isinstance(call, ast.Call) and _reads_parquet(call)
+    }
+    allowed = {"_scan", "erase_rows", "q_lake_schema_evolution"}
+    offenders = sorted(r for r in readers if r.split(":")[0] not in allowed)
+    assert not offenders, f"read lakehouse data files through _scan: {offenders}"
+    assert {r.split(":")[0] for r in readers} == allowed

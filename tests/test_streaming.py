@@ -601,3 +601,56 @@ def test_stateful_lines_drain_the_final_state_over_three_micro_batches(
         assert_matches_oracle(spark, duck, name, fn, specs[name].oracle, SF_T2)
         # some key emitted more than once, so the drain had to pick
         assert sink_rows[-1] > answer_rows[-1], (name, sink_rows[-1], answer_rows[-1])
+
+
+def test_run_to_memory_leaves_no_view_and_its_frame_still_collects(spark):
+    """The sink's temp view is dropped once the frame has resolved it:
+    the catalog is unchanged across the call, and the frame still reads
+    every row of the sink."""
+    from embarrassingly_parallel_image_classification_spark.streaming.core import (
+        events_stream,
+        run_to_memory,
+    )
+
+    before = sorted(tb.name for tb in spark.catalog.listTables())
+    sink = run_to_memory(events_stream(spark, SF_T2).groupBy("event_type").count(), "complete")
+    assert sorted(tb.name for tb in spark.catalog.listTables()) == before
+    want = t(spark, SF_T2, "events").groupBy("event_type").count().collect()
+    assert sorted(sink.collect()) == sorted(want)
+
+
+def test_run_to_memory_runs_one_wave_of_state_tasks(spark, monkeypatch):
+    """A stateful line's state tasks (one per shuffle partition) fit one
+    wave of the session's slots, at most 8, and the session's own
+    shuffle-partition conf is restored afterwards."""
+    from pyspark.sql.streaming import DataStreamWriter
+
+    started = []
+    start = DataStreamWriter.start
+
+    def keep(self, *args, **kwargs):
+        started.append(start(self, *args, **kwargs))
+        return started[-1]
+
+    monkeypatch.setattr(DataStreamWriter, "start", keep)
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    assert sq.q_stream_tumbling(spark, SF_T2).count() > 0
+    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+    ops = [op for p in started[0].recentProgress for op in p.stateOperators]
+    slots = spark.sparkContext.defaultParallelism
+    assert ops and {op.numShufflePartitions for op in ops} == {min(8, slots)}
+
+
+def test_foreach_batch_lake_is_pid_scoped(spark):
+    """q_stream_foreach_batch writes its lake under a scratch dir ending
+    in this process's scratch tag, so two processes never share it."""
+    import os
+
+    from embarrassingly_parallel_image_classification_spark.sources.formats import (
+        scratch_tag,
+    )
+
+    files = sq.q_stream_foreach_batch(spark, SF_T2).inputFiles()
+    assert files
+    dirs = {os.path.basename(os.path.dirname(f)) for f in files}
+    assert dirs == {f"stream_lake_{scratch_tag(SF_T2)}"}, dirs
